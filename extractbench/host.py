@@ -161,14 +161,31 @@ def stray_jvms() -> list[str]:
     return found
 
 
-def speed_probe_s(n: int = 3_000_000) -> float:
-    """CPU seconds this thread spends on a fixed pure-Python loop: how
-    fast the shared host runs code at this moment."""
-    t0 = time.thread_time()
-    acc = 0
-    for i in range(n):
-        acc += i
-    return time.thread_time() - t0
+def speed_probe_s(procs: int, n: int = 3_000_000) -> float:
+    """Mean CPU seconds that ``procs`` forked processes, one per core,
+    each spend on a fixed pure-Python loop: how fast the shared host runs
+    code on all the benchmark's cores at this moment."""
+    readers = []
+    for _ in range(procs):
+        r, w = os.pipe()
+        pid = os.fork()
+        if pid == 0:
+            try:
+                os.close(r)
+                t0, acc = time.thread_time(), 0
+                for i in range(n):
+                    acc += i
+                os.write(w, repr(time.thread_time() - t0).encode())
+            finally:
+                os._exit(0)
+        os.close(w)
+        readers.append((pid, r))
+    total = 0.0
+    for pid, r in readers:
+        with os.fdopen(r, "rb") as fh:
+            total += float(fh.read())
+        os.waitpid(pid, 0)
+    return total / procs
 
 
 def usable_cores() -> int:

@@ -28,15 +28,16 @@ sys.path.insert(0, ROOT)
 #: ``local[k]`` parallelism: never more than the cores this process may use
 MAX_CORES = 4
 SETUP_PASSES = 3
-#: untimed operations before the timed loop: the first operation in a
-#: fresh JVM runs JIT-cold, two to three times slower than the next
-WARMUP_OPS = 1
+#: timed operations per run.  The first runs JIT-cold, two to three times
+#: slower than the next, so the median is a warm one.
 MIN_REPS = 3
-#: ``host.speed_probe_s`` on a typical minute of the 4-core host this was
-#: tuned on.  A repetition's CPU time is scaled by this over the probe's
-#: time around it: CPU time for the same work swings by about 20% with the
-#: load the host's other tenants put on it, and the probe swings with it.
-REF_PROBE_S = 0.2
+#: ``host.speed_probe_s`` midway between a quiet (0.11 s) and a busy
+#: (0.19 s) minute of the 4-core host this was tuned on.  CPU and set-up
+#: time are scaled by this over the median of the probes taken before
+#: every set-up pass and every repetition: the host's speed swings by up
+#: to 1.6x between quarter-hours with the load of its other tenants, and
+#: the probe swings with it.
+REF_PROBE_S = 0.15
 #: maximum driver heap.  The heap starts small and grows on demand, so
 #: ``peak_rss_mb`` follows what the operations allocate.  (``get_spark``
 #: defaults to 8g; 2g is ample for this corpus on a shared host.)
@@ -78,6 +79,7 @@ class Bench:
         self.work = work
         self.wl = WORKLOADS[workload](work, cores, seed)
         self.spark = None
+        self.probes: list[float] = []   # host.speed_probe_s, untimed
 
     # -- session ---------------------------------------------------------
 
@@ -91,7 +93,15 @@ class Bench:
                 f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
                 # fixed compiler threads, so none exits with its CPU time
                 # uncounted by ``host.tree_cpu_s``
-                "-XX:-UseDynamicNumberOfCompilerThreads",
+                "-XX:-UseDynamicNumberOfCompilerThreads "
+                # C1 only: the JVM reaches its steady state within one
+                # operation instead of compiling with C2 for minutes
+                "-XX:TieredStopAtLevel=1 "
+                # room for every generated class, so the code cache
+                # sweeper never flushes and recompiles mid-run
+                "-XX:ReservedCodeCacheSize=256m "
+                # heap growth follows allocation, not GC timing
+                "-XX:+UseSerialGC",
             "spark.driver.host": "127.0.0.1",
             "spark.driver.bindAddress": "127.0.0.1",
             "spark.ui.showConsoleProgress": "false",
@@ -145,8 +155,9 @@ class Bench:
     def setup_pass(self) -> float:
         """Session start, Python-worker warm-up, input generation and
         state preparation: the same work on every pass."""
-        from extractbench import corpus
+        from extractbench import corpus, host
 
+        self.probes.append(host.speed_probe_s(self.cores))
         t0 = time.perf_counter()
         spark = self.start_session(self.cores)
         shutil.rmtree(self.wl.input, ignore_errors=True)
@@ -157,7 +168,7 @@ class Bench:
     # -- timed loop --------------------------------------------------------
 
     def warm_up(self) -> float:
-        """One untimed operation; returns its wall time."""
+        """One untimed operation (the traced run's); returns its wall time."""
         self.wl.before_rep()
         t0 = time.perf_counter()
         self.wl.run(self.spark)
@@ -172,8 +183,8 @@ class Bench:
         end = time.perf_counter() + seconds
         while len(reps) < min_reps or time.perf_counter() < end:
             self.wl.before_rep()
+            self.probes.append(host.speed_probe_s(self.cores))
             host.reset_peak_rss()
-            probe = host.speed_probe_s()
             (cpu0, jit0), t0 = host.tree_cpu_s(), time.perf_counter()
             try:
                 stats, error = self.wl.run(self.spark), None
@@ -183,7 +194,6 @@ class Bench:
             cpu, jit = host.tree_cpu_s()
             rep = {"wall_s": wall, "cpu_s": cpu - cpu0 - (jit - jit0),
                    "jit_cpu_s": jit - jit0,
-                   "probe_s": (probe + host.speed_probe_s()) / 2,
                    "peak_rss_mb": host.peak_rss_mb(),
                    "error": error, "stats": stats}
             if error is None:
@@ -194,16 +204,19 @@ class Bench:
         return reps
 
 
-def end_to_end(reps: list[dict], n_docs: int, setup: list[float]) -> dict:
+def end_to_end(reps: list[dict], n_docs: int, setup: list[float],
+               probes: list[float]) -> dict:
     ok = [r for r in reps if r["error"] is None]
+    scale = REF_PROBE_S / statistics.median(probes)
     values = {
         "docs_per_s": ([n_docs / r["wall_s"] for r in ok], True),
-        "cpu_s_per_kdoc": ([r["cpu_s"] * REF_PROBE_S / r["probe_s"]
-                            * 1000 / n_docs for r in ok], False),
-        "cpu_s_per_kdoc_unscaled": (
-            [r["cpu_s"] * 1000 / n_docs for r in ok], False),
+        "cpu_s_per_kdoc": ([r["cpu_s"] * scale * 1000 / n_docs for r in ok],
+                           False),
+        "cpu_s_per_kdoc_unscaled": ([r["cpu_s"] * 1000 / n_docs for r in ok],
+                                    False),
         "peak_rss_mb": ([r["peak_rss_mb"] for r in ok], False),
-        "setup_s": (setup, False),
+        "setup_s": ([s * scale for s in setup], False),
+        "setup_s_unscaled": (setup, False),
     }
     return {k: summarize(v, hib) for k, (v, hib) in values.items() if v}
 
@@ -261,10 +274,8 @@ def main(argv=None) -> int:
             metrics, reps, extra = trace.traced_run(bench, args.seconds, started)
             detail.update(extra)
         else:
-            detail["warmup_ops_s"] = [
-                bench.warm_up() for _ in range(WARMUP_OPS)]
             reps = bench.timed_loop(args.seconds)
-            summary = end_to_end(reps, n_docs, setup)
+            summary = end_to_end(reps, n_docs, setup, bench.probes)
             detail["end_to_end"] = summary
             metrics = {k: {"value": summary[k]["median"],
                            "unit": METRIC_UNITS[k]} for k in METRIC_UNITS}
@@ -277,7 +288,7 @@ def main(argv=None) -> int:
     checks = [r.get("check") for r in reps]
     detail["reps"] = [{
         "wall_s": r["wall_s"], "cpu_s": r["cpu_s"],
-        "jit_cpu_s": r.get("jit_cpu_s"), "probe_s": r.get("probe_s"),
+        "jit_cpu_s": r.get("jit_cpu_s"),
         "peak_rss_mb": r["peak_rss_mb"], "error": r["error"],
         **({"mismatched_docs": c.mismatched_docs,
             "failed_spans": c.failed_spans, "spans_in": c.spans_in,
@@ -285,6 +296,7 @@ def main(argv=None) -> int:
             "ref_spans_in": c.ref_spans_in} if c else {})}
         for r, c in zip(reps, checks)]
     detail["setup_passes_s"] = setup
+    detail["speed_probes_s"] = bench.probes
     attempted = sum(c.docs if c else n_docs for c in checks)
     failed = sum(c.mismatched_docs if c else n_docs for c in checks)
     correct = all(c is not None and c.ok for c in checks)
