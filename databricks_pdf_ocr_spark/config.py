@@ -55,12 +55,6 @@ class ExtractConfig:
     #: implementing them; functions/extract_span.py does)
     max_retries: int = 2
     retry_backoff_s: float = 0.0
-    #: persist the results DataFrame across the write→mark pair so lineage
-    #: metrics aggregate from cache instead of re-scanning the just-written
-    #: table.  Saves a fixed read-back per run when the run's results fit
-    #: executor storage (bench/moderate scale); leave OFF at corpus scale
-    #: where the pruned column-projected re-scan is the bounded-memory path.
-    cache_results: bool = False
     ocr_model: str = "ocr-fallback-deterministic-v1"
     #: repartition spans on (doc_id, offset) before extraction.  OFF by
     #: default: shuffling raw payload bytes is the wrong plan at 100 TB —

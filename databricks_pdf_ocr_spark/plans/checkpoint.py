@@ -87,11 +87,7 @@ class CheckpointManager:
         ordinal + 1 is the authoritative next sequence (control-plane
         aggregate over the tiny lineage table).
         """
-        cp = self._read_checkpoint()
-        if cp is None:
-            return 1
-        mx = cp.agg(F.max("run_seq")).first()[0]
-        return int(mx or 0) + 1
+        return self.next_run_seq_and_marked()[0]
 
     def all_marked_buckets(self) -> set[int]:
         """Distinct buckets with any lineage mark, across fingerprints —
@@ -100,10 +96,18 @@ class CheckpointManager:
         A bucket whose results committed but whose mark didn't (crash in
         the write→mark window) is still *pending* for its input, so the
         resume run re-extracts it and carries it in pend_list instead."""
+        return self.next_run_seq_and_marked()[1]
+
+    def next_run_seq_and_marked(self) -> tuple[int, set[int]]:
+        """``(next_run_seq(), all_marked_buckets())`` from ONE aggregate
+        over the lineage table — a job's start-of-run control-plane read.
+        An empty table costs no Spark job."""
         cp = self._read_checkpoint()
         if cp is None:
-            return set()
-        return {r["bucket"] for r in cp.select("bucket").distinct().collect()}
+            return 1, set()
+        mx, buckets = cp.agg(F.max("run_seq"),
+                             F.collect_set("bucket")).first()
+        return int(mx or 0) + 1, set(buckets)
 
     def run_history(self, k: int = 10) -> DataFrame:
         """Latest runs with aggregate metrics (reference:
@@ -160,10 +164,15 @@ class CheckpointManager:
     # -- write side --------------------------------------------------------
 
     def mark_from_results(self, results: DataFrame, run_id: str,
-                          input_fingerprint: str, duration_ms: int,
-                          run_seq: int | None = None) -> None:
-        """Aggregate per-bucket metrics from a results DataFrame and append
-        one 'done' lineage row per bucket.
+                          input_fingerprint: str,
+                          duration_ms: int | None = None,
+                          run_seq: int | None = None) -> list[dict]:
+        """Aggregate per-bucket metrics from a results DataFrame, append
+        one 'done' lineage row per bucket, and return the appended rows.
+
+        ``duration_ms`` per bucket is the kernel time of its rows (the
+        sum of the results' per-span ``duration_ms``); the argument is
+        recorded instead only for results that carry no such column.
 
         The aggregate runs distributed (map-side partial agg → tiny
         shuffle); the ≤ n_buckets result rows are CONTROL-PLANE data, so
@@ -175,6 +184,8 @@ class CheckpointManager:
         if "bucket" not in results.columns:
             results = results.withColumn("bucket",
                                          bucket_col(self.cfg.n_buckets))
+        kernel_ms = (F.sum("duration_ms") if "duration_ms" in results.columns
+                     else F.lit(duration_ms or 0))
         metrics = (
             results
             .groupBy("bucket")
@@ -192,6 +203,7 @@ class CheckpointManager:
                 F.sum(F.col("ocr_fallback").cast("long")).alias("ocr_fallbacks"),
                 F.sum((F.col("status") == "success").cast("long")).alias("span_count"),
                 F.sum((F.col("status") == "failed").cast("long")).alias("failed_spans"),
+                kernel_ms.cast("long").alias("duration_ms"),
             )
         )
         from datetime import datetime, timezone
@@ -208,11 +220,12 @@ class CheckpointManager:
             "ocr_fallbacks": int(r["ocr_fallbacks"] or 0),
             "span_count": int(r["span_count"] or 0),
             "failed_spans": int(r["failed_spans"] or 0),
-            "duration_ms": int(duration_ms),
+            "duration_ms": int(r["duration_ms"] or 0),
             "config_json": self.cfg.to_json(),
             "updated_at": now,
         } for r in metrics.collect()]   # ≤ n_buckets control-plane rows
         self.io.append_rows(rows, CHECKPOINT_TABLE, CHECKPOINT_SCHEMA)
+        return rows
 
     def mark_buckets(self, bucket_metrics: list[dict], run_id: str,
                      input_fingerprint: str, duration_ms: int,

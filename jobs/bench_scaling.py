@@ -82,15 +82,9 @@ def run_at(cores: int, input_path: str, zpath: str, tag: str,
          "--n-buckets", "64", "--partitions", str(cores),
          "--mode", "reprocess_all", "--skip-assemble",
          *(["--salt"] if salt else [])],
-        # (--cache-results measured WORSE here: persisting ~GBs of results
-        # at 32c inflated the mark phase 3.7s -> 6.5s via GC pressure; the
-        # pruned column-projected read-back is the better mark path)
         capture_output=True, text=True, timeout=3600)
     wall = time.time() - t0
     subprocess.run(["rm", "-rf", local_dir], check=False)
-    for ln in proc.stderr.splitlines():
-        if ln.startswith('{"phase'):
-            print(f"local[{cores}] {ln}", file=sys.stderr)
     if proc.returncode != 0:
         print(proc.stderr[-3000:], file=sys.stderr)
         raise SystemExit(f"run at local[{cores}] failed")
@@ -98,6 +92,9 @@ def run_at(cores: int, input_path: str, zpath: str, tag: str,
     stats = json.loads(lines[-1])
     for ln in lines[:-1]:
         print(f"local[{cores}] {ln}", file=sys.stderr)
+    print(f"local[{cores}] " + json.dumps(
+        {k: v for k, v in stats.items() if k.startswith("phase_")}),
+        file=sys.stderr)
     stats["cores"] = cores
     stats["wall_sec"] = round(wall, 2)
     return stats

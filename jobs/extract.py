@@ -135,7 +135,8 @@ def gc_media_orphans(io) -> dict:
 
 def run_media_stage(io, cp, documents, fingerprint: str, cfg,
                     mode: str, doc_ids=(), run_seq: int | None = None,
-                    fail_after_buckets: int | None = None) -> dict:
+                    fail_after_buckets: int | None = None
+                    ) -> tuple[dict, list[int]]:
     """Materialize the bucket-partitioned ``media_payloads`` table: every
     embedded raster image of every pending pdf span, keyed by the
     content-addressed ``media_ref`` the extraction kernel stamps on its
@@ -145,7 +146,8 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
     Resumable via the same checkpoint lineage under its OWN fingerprint
     (``<input>#media``): write payloads → mark buckets; a crash between
     the two re-extracts the bucket and the byte-identical rows (refs are
-    payload hashes) dedup on read (``multimodal.dedup_payloads``)."""
+    payload hashes) dedup on read (``multimodal.dedup_payloads``).
+    Returns the stage's stats and the buckets it marked."""
     from databricks_pdf_ocr_spark.operators.multimodal import pdf_span_images
 
     fp = fingerprint + "#media"
@@ -170,7 +172,7 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
         .alias("pdf_spans")).collect())     # ≤ n_buckets control-plane rows
     pend_list = sorted(r["bucket"] for r in doc_rows)
     if not pend_list:
-        return {"media_buckets": 0, "media_images": 0, "media_errors": 0}
+        return {"media_buckets": 0, "media_images": 0, "media_errors": 0}, []
 
     run_id = new_run_id()
     if run_seq is None:
@@ -182,11 +184,13 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
                      F.col("s.text").alias("text")))
     payloads = (pdf_span_images(spans, max_pages=cfg.max_pages_per_doc,
                                 max_payload_bytes=cfg.max_payload_bytes)
-                .withColumn("bucket", bucket_col(cfg.n_buckets))
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("run_seq", F.lit(run_seq).cast("long"))
-                .withColumn("processed_at", F.current_timestamp())
-                .repartition(cfg.n_buckets, "bucket"))
+                .withColumns({
+                    "bucket": bucket_col(cfg.n_buckets),
+                    "run_id": F.lit(run_id),
+                    "run_seq": F.lit(run_seq).cast("long"),
+                    "processed_at": F.current_timestamp()})
+                .repartition(min(cfg.n_buckets, cfg.shuffle_partitions),
+                             "bucket"))
     # WRITE payloads (one file per touched bucket per run) ...
     io.append(payloads, MEDIA_TABLE, partition_by=["bucket"])
     # ... THEN MARK.  Pruned re-scan: partition isin + run_id filter,
@@ -213,7 +217,8 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
                     run_seq=run_seq)
     return {"media_buckets": len(pend_list),
             "media_images": int(sum(m["span_count"] for m in metrics)),
-            "media_errors": int(sum(m["failed_spans"] for m in metrics))}
+            "media_errors": int(sum(m["failed_spans"] for m in metrics))}, \
+        pend_list
 
 
 def load_input(spark, spec: str, cfg: ExtractConfig):
@@ -285,10 +290,6 @@ def build_parser() -> argparse.ArgumentParser:
                          "content-addressed media_ref the extraction "
                          "results reference), resumable under its own "
                          "checkpoint lineage fingerprint")
-    ap.add_argument("--cache-results", action="store_true",
-                    help="persist results across write→mark (skips the "
-                         "lineage read-back; for runs that fit executor "
-                         "storage)")
     return ap
 
 
@@ -304,7 +305,6 @@ def run_job(spark, args) -> tuple[dict, int]:
         "processing_mode": args.mode,
         "specific_doc_ids": tuple(x for x in args.doc_ids.split(",") if x),
         "salt_spans": args.salt or None,
-        "cache_results": args.cache_results or None,
     })
     io = make_table_io(spark, args.tables)
     cp = CheckpointManager(io, cfg)
@@ -335,35 +335,31 @@ def run_job(spark, args) -> tuple[dict, int]:
     run_id = new_run_id()
     # monotonic run ordinal from the checkpoint log: the latest-wins
     # ordering primary (wall-clock + random hex alone misorders on a
-    # timestamp tie or a backwards NTP step between runs)
-    run_seq = cp.next_run_seq()
+    # timestamp tie or a backwards NTP step between runs).  The same read
+    # yields the buckets marked before this run — the assembly scope,
+    # completed below with the buckets this run marks, so the lineage
+    # table is never re-read after the mark.
+    run_seq, marked = cp.next_run_seq_and_marked()
     spans = explode_spans(pending.select("doc_id", "spans"))
-    results = extract_spans(spans, cfg)
-    results = (results
-               .withColumn("bucket", bucket_col(cfg.n_buckets))
-               .withColumn("run_id", F.lit(run_id))
-               .withColumn("run_seq", F.lit(run_seq).cast("long"))
-               .withColumn("input_fingerprint", F.lit(fingerprint))
-               .withColumn("processed_at", F.current_timestamp()))
+    results = extract_spans(spans, cfg).withColumns({
+        "bucket": bucket_col(cfg.n_buckets),
+        "run_id": F.lit(run_id),
+        "run_seq": F.lit(run_seq).cast("long"),
+        "input_fingerprint": F.lit(fingerprint),
+        "processed_at": F.current_timestamp()})
 
-    # WRITE results, partitioned by bucket.  repartition(n_buckets, "bucket")
-    # first so each touched bucket lands as ONE file per run (exactly one
-    # task per bucket) — no tasks×buckets small-file explosion, and the
-    # lineage re-scan + incremental reassembly below prune to exactly the
-    # touched bucket directories instead of reading the whole corpus.
-    # Pinning numPartitions to n_buckets (not spark.sql.shuffle.partitions)
-    # keeps the write at full parallelism: the default would pack ~2 buckets
-    # per task and AQE would coalesce further, idling cores during the
-    # parquet-encode-heavy write stage.
+    # WRITE results, partitioned by bucket.  Hash-repartitioning on bucket
+    # first puts every bucket in exactly one task, so each touched bucket
+    # lands as ONE file per run — no tasks×buckets small-file explosion,
+    # and the lineage re-scan + incremental reassembly below prune to
+    # exactly the touched bucket directories.  The task count is the
+    # cluster's parallelism (the salted kernel stage's), not n_buckets:
+    # tasks beyond it only add waves, and every parquet-write task pays
+    # ~30-50 ms to deserialize before it writes a row.
     # Global metrics observed during the same action — no extra pass.
     from databricks_pdf_ocr_spark.plans.metrics import observed_results
-    results, observation = observed_results(
-        results.repartition(cfg.n_buckets, "bucket"))
-    if cfg.cache_results:
-        # the write populates the cache; the mark aggregate below then
-        # reads cached partitions instead of re-scanning the table
-        from pyspark.storagelevel import StorageLevel
-        results = results.persist(StorageLevel.MEMORY_AND_DISK)
+    results, observation = observed_results(results.repartition(
+        min(cfg.n_buckets, cfg.shuffle_partitions), "bucket"))
     t_select = time.time()
     io.append(results, RESULTS_TABLE, partition_by=["bucket"])
     t_extract = time.time()
@@ -387,41 +383,44 @@ def run_job(spark, args) -> tuple[dict, int]:
         # static isin over the partition column guarantees pruning.
         pend_list = sorted(
             r["bucket"] for r in pending.select("bucket").distinct().collect())
-    elapsed_ms = int((time.time() - t0) * 1000)
     # exactly the columns the lineage aggregate consumes — doc counting
-    # is sum(is_first_span), so neither doc_id nor result_id is read
+    # is sum(is_first_span), so neither doc_id nor result_id is read.
+    # The partial explicit schema column-prunes the scan at the READER
+    # level and skips the footer-sampling schema-inference job.
     MARK_COLS = ("is_first_span", "sub_idx", "status", "pages_parsed",
-                 "ocr_fallback", "bucket")
-    if cfg.cache_results:
-        # everything this run wrote is exactly the cached DataFrame
-        this_run = results.select(*MARK_COLS)
-    else:
-        # partial explicit schema: column-prunes the scan at the READER
-        # level and skips the footer-sampling schema-inference job
-        mark_schema = ("run_id string, is_first_span boolean, "
-                       "sub_idx int, status string, pages_parsed int, "
-                       "ocr_fallback boolean, bucket int")
-        this_run = (io.read(RESULTS_TABLE, schema=mark_schema)
-                    .filter(F.col("bucket").isin(pend_list)
-                            if pend_list else F.lit(False))
-                    .filter(F.col("run_id") == run_id)
-                    .select(*MARK_COLS))
-    cp.mark_from_results(this_run, run_id, fingerprint, elapsed_ms,
-                         run_seq=run_seq)
-    if cfg.cache_results:
-        results.unpersist()
+                 "ocr_fallback", "duration_ms", "bucket")
+    mark_schema = ("run_id string, is_first_span boolean, "
+                   "sub_idx int, status string, pages_parsed int, "
+                   "ocr_fallback boolean, duration_ms long, bucket int")
+    this_run = (io.read(RESULTS_TABLE, schema=mark_schema)
+                .filter(F.col("bucket").isin(pend_list)
+                        if pend_list else F.lit(False))
+                .filter(F.col("run_id") == run_id)
+                .select(*MARK_COLS))
+    marks = cp.mark_from_results(this_run, run_id, fingerprint,
+                                 run_seq=run_seq)
     t_mark = time.time()
-    print(json.dumps({"phase_select_sec": round(t_select - t0, 2),
-                      "phase_extract_write_sec": round(t_extract - t_select, 2),
-                      "phase_mark_sec": round(t_mark - t_extract, 2)}),
-          file=sys.stderr)
 
-    stats = {"run_id": run_id, "fingerprint": fingerprint}
+    stats = {"run_id": run_id, "fingerprint": fingerprint,
+             "phase_select_sec": round(t_select - t0, 2),
+             "phase_extract_write_sec": round(t_extract - t_select, 2),
+             "phase_mark_sec": round(t_mark - t_extract, 2)}
+    if marks:
+        # THIS run's lineage metrics, summed from the rows just appended
+        stats.update({k: sum(m[k] for m in marks) for k in
+                      ("docs_done", "pages_parsed", "ocr_fallbacks",
+                       "span_count", "failed_spans")})
+    # the mark reads only pend_list buckets, so this covers its rows
+    marked |= set(pend_list)
     if args.media_payloads:
-        stats.update(run_media_stage(
+        # the media stage's run is the next one in the lineage log
+        media_stats, media_marked = run_media_stage(
             io, cp, documents, fingerprint, cfg, args.mode,
             doc_ids=cfg.specific_doc_ids,
-            fail_after_buckets=args.fail_after_buckets))
+            run_seq=run_seq + 1 if marks else run_seq,
+            fail_after_buckets=args.fail_after_buckets)
+        stats.update(media_stats)
+        marked |= set(media_marked)
     if args.fail_after_buckets is not None:
         stats["simulated_crash"] = True
         return stats, 3
@@ -444,20 +443,20 @@ def run_job(spark, args) -> tuple[dict, int]:
         from databricks_pdf_ocr_spark.schemas import RESULTS_RUN_SCHEMA
         results_all = io.read(RESULTS_TABLE, schema=RESULTS_RUN_SCHEMA)
         # assembly scope from the CHECKPOINT table (≤ runs×n_buckets tiny
-        # rows), never a listing/distinct over the results corpus — at
-        # 10^12 docs even a partition-column-only distinct pays the file
+        # rows, read at the start of the run, plus this run's marks),
+        # never a listing/distinct over the results corpus — at 10^12
+        # docs even a partition-column-only distinct pays the file
         # listing; with Iceberg this is the `partitions` metadata table,
         # here it's the lineage log carrying the same information.  A
         # results-committed-but-unmarked bucket (crash in the write→mark
         # window) stays pending for its input and re-enters via pend_list.
-        res_list = cp.all_marked_buckets() | set(pend_list)
         ext = io.read(EXTRACTED_TABLE)
         if ext is None:
-            to_assemble = sorted(res_list)
+            to_assemble = sorted(marked)
         else:
             have = {r["bucket"] for r in
                     ext.select("bucket").distinct().collect()}
-            to_assemble = sorted(set(pend_list) | (res_list - have))
+            to_assemble = sorted(set(pend_list) | (marked - have))
         # static isin on the partition column → guaranteed directory
         # pruning: only the touched bucket dirs are read for reassembly
         touched = results_all.filter(
@@ -476,15 +475,6 @@ def run_job(spark, args) -> tuple[dict, int]:
         io.overwrite_partitions(assembled, EXTRACTED_TABLE, ["bucket"])
         stats["docs_assembled"] = obs_asm.get["docs"]
 
-    # THIS run's lineage metrics (run_history(1) alone would return the
-    # media stage's run when --media-payloads marked later)
-    hist = [h for h in (r.asDict() for r in cp.run_history(5).collect())
-            if h["run_id"] == run_id]
-    if hist:
-        h = hist[0]
-        stats.update({k: h[k] for k in
-                      ("docs_done", "pages_parsed", "ocr_fallbacks",
-                       "span_count", "failed_spans")})
     try:
         stats["observed"] = observation.get
     except Exception:

@@ -155,31 +155,137 @@ def test_results_table_partition_pruning(spark, tmp_path, rows):
 
 
 def test_observed_mark_equals_readback_mark(spark, tmp_path, rows):
-    """The two lineage-mark data sources (pruned read-back of the written
-    table vs the cached in-memory results) must record byte-identical
-    metrics, and the driver-side control-plane append (pyarrow file, no
-    Spark write job) must produce Spark-readable rows/types."""
-    import pyspark.sql.functions as F
-
+    """The lineage mark must equal a per-bucket aggregate recomputed from
+    the written results table, and the driver-side control-plane append
+    (pyarrow file, no Spark write job) must produce Spark-readable
+    rows/types."""
     inp = _write_input(spark, tmp_path, rows, "obs_in")
-    fast_t = str(tmp_path / "fast_tables")
-    slow_t = str(tmp_path / "slow_tables")
-    _run(spark, inp, fast_t)                       # n_buckets 8 → fast path
-    _run(spark, inp, slow_t, "--cache-results")    # forces the agg path
+    t = str(tmp_path / "obs_tables")
+    stats, rc = _run(spark, inp, t)
+    assert rc == 0
+
+    res = spark.read.parquet(f"{t}/{RESULTS_TABLE}")
+    want = {tuple(r) for r in res.groupBy("bucket").agg(
+        F.countDistinct("doc_id"),
+        F.countDistinct("doc_id", "offset"),
+        F.sum("pages_parsed"),
+        F.count(F.when(F.col("ocr_fallback"), 1)),
+        F.count(F.when(F.col("status") == "success", 1)),
+        F.count(F.when(F.col("status") == "failed", 1)),
+        F.sum("duration_ms"),
+        F.lit("done"),
+        F.lit(stats["run_id"])).collect()}
 
     cols = ["bucket", "docs_done", "spans_in", "pages_parsed",
-            "ocr_fallbacks", "span_count", "failed_spans", "status"]
-
-    def marks(t):
-        df = spark.read.parquet(f"{t}/extraction_checkpoint")
-        return {tuple(r) for r in df.select(*cols).collect()}
-
-    fast, slow = marks(fast_t), marks(slow_t)
-    assert fast == slow and len(fast) > 0
+            "ocr_fallbacks", "span_count", "failed_spans", "duration_ms",
+            "status", "run_id"]
+    df = spark.read.parquet(f"{t}/extraction_checkpoint")
+    got = {tuple(r) for r in df.select(*cols).collect()}
+    assert got == want and len(got) > 0
     # run_seq survives the driver-side parquet write with the right type
-    df = spark.read.parquet(f"{fast_t}/extraction_checkpoint")
     assert df.schema["run_seq"].dataType.simpleString() == "bigint"
     assert df.filter(F.col("updated_at").isNull()).count() == 0
+
+
+def test_lineage_duration_is_kernel_time(spark, tmp_path, rows):
+    """A run's checkpoint rows record the kernel time of its results
+    rows, not the run's wall clock on every bucket."""
+    inp = _write_input(spark, tmp_path, rows, "dur_in")
+    t = str(tmp_path / "dur_tables")
+    run_ids = [_run(spark, inp, t, "--mode", "reprocess_all")[0]["run_id"]
+               for _ in range(2)]
+
+    def total(table):
+        df = spark.read.parquet(f"{t}/{table}")
+        return {r[0]: r[1] for r in
+                df.groupBy("run_id").agg(F.sum("duration_ms")).collect()}
+
+    assert set(run_ids) == set(total("extraction_checkpoint"))
+    assert total("extraction_checkpoint") == total(RESULTS_TABLE)
+
+
+def _in_job_group(spark, group, fn):
+    """Run ``fn()`` with every Spark job it starts tagged ``group``;
+    returns its result and the job ids."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows):
+    """A fresh reprocess_all run needs at most 7 Spark jobs (the results
+    write's two, three with --salt; the mark's two; the reassembly's
+    two), and its stats equal the run's lineage as ``run_history`` reads
+    it back."""
+    from databricks_pdf_ocr_spark.plans.checkpoint import CheckpointManager
+
+    inp = _write_input(spark, tmp_path, rows, "jobs_in")
+    lineage = ("docs_done", "pages_parsed", "ocr_fallbacks", "span_count",
+               "failed_spans")
+    for extra in ((), ("--media-payloads",)):
+        t = str(tmp_path / ("jobs_t" + "".join(extra)))
+        (stats, rc), jobs = _in_job_group(
+            spark, "fresh-run" + "".join(extra),
+            lambda: _run(spark, inp, t, "--mode", "reprocess_all", *extra))
+        assert rc == 0
+        if not extra:
+            assert 0 < len(jobs) <= 7, jobs
+        cp = CheckpointManager(_table_io(spark, t), _job_cfg())
+        hist = [r.asDict() for r in cp.run_history().collect()
+                if r["run_id"] == stats["run_id"]]
+        assert len(hist) == 1
+        assert {k: stats[k] for k in lineage} == \
+            {k: hist[0][k] for k in lineage}
+        assert stats["docs_done"] == N_DOCS
+        assert all(stats[k] >= 0 for k in ("phase_select_sec",
+                                           "phase_extract_write_sec",
+                                           "phase_mark_sec"))
+
+
+def test_results_write_layout(spark, tmp_path, rows, monkeypatch):
+    """Each run writes one file per bucket, from a write stage with no
+    more tasks than the cluster's partitions (not one per bucket)."""
+    import os
+
+    from databricks_pdf_ocr_spark.sources.tables import TableIO
+
+    inp = _write_input(spark, tmp_path, rows, "layout_in")
+    t = str(tmp_path / "layout_t")
+    n_buckets, parts = 16, 4
+    write_jobs = []
+    append = TableIO.append
+
+    def tagged_append(self, df, name, partition_by=None):
+        if name != RESULTS_TABLE:
+            return append(self, df, name, partition_by)
+        _, jobs = _in_job_group(spark, f"results-write-{len(write_jobs)}",
+                                lambda: append(self, df, name, partition_by))
+        write_jobs.append(jobs)
+
+    monkeypatch.setattr(TableIO, "append", tagged_append)
+    args = build_parser().parse_args(
+        ["--input", inp, "--tables", t, "--mode", "reprocess_all",
+         "--n-buckets", str(n_buckets), "--partitions", str(parts)])
+    root = f"{t}/{RESULTS_TABLE}"
+    for n_files in (1, 2):
+        assert run_job(spark, args)[1] == 0
+        dirs = [d for d in os.listdir(root) if d.startswith("bucket=")]
+        assert dirs
+        for d in dirs:
+            files = [f for f in os.listdir(os.path.join(root, d))
+                     if f.endswith(".parquet")]
+            assert len(files) == n_files, (d, files)
+
+    tracker = spark.sparkContext.statusTracker()
+    assert len(write_jobs) == 2
+    for jobs in write_jobs:
+        # the write is the result stage of the group's last job
+        stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
+        assert tracker.getStageInfo(stage).numTasks <= min(n_buckets, parts)
 
 
 def _media_dict(spark, tables):
