@@ -8,11 +8,10 @@ GIF87a/GIF89a, global + local color tables, variable-code-size LZW
 full-table state), Adam-style 4-pass interlacing, Graphic Control
 Extension transparency + frame delays + all four disposal methods, and
 NETSCAPE2.0 loop counts.  ``gif_frames`` yields fully composited RGBA
-canvas frames so animation feeds ``frame_sample`` with real pixels.
+canvas frames; ``decode_gif`` hands the first one to ``media_phash``.
 
 The encoder is the deterministic fixture generator (palette-exact input
-only — this is a test tool, not a quantizer) and doubles as the GIF leg
-of ``resize_media`` transcoding.
+only — this is a test tool, not a quantizer).
 
 Validation (``tests/test_gif_codec.py``): CPython's real 16x16
 ``python.gif`` (PSF) decodes pixel-consistent with the independent
@@ -327,22 +326,8 @@ def decode_gif(data: bytes) -> tuple[int, int, int, bytes]:
     return g["width"], g["height"], 4, rgba
 
 
-def gif_meta(data: bytes) -> dict:
-    """Cheap metadata: ``{width, height, frame_count, duration_ms,
-    animated, loop_count, version}`` (full parse — GIF has no
-    skip-ahead index, LZW must be walked to find frame boundaries)."""
-    g = parse_gif(data)
-    return {
-        "width": g["width"], "height": g["height"],
-        "frame_count": len(g["frames"]),
-        "duration_ms": sum(f["delay_ms"] for f in g["frames"]),
-        "animated": len(g["frames"]) > 1,
-        "loop_count": g["loop_count"], "version": g["version"],
-    }
-
-
 # ---------------------------------------------------------------------------
-# Encoder (fixture generator + resize_media transcode leg)
+# Encoder (fixture generator)
 # ---------------------------------------------------------------------------
 
 def _build_palette(frames_rgba: list[bytes]) -> tuple[list[bytes], bool]:

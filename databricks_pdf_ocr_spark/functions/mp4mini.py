@@ -1,18 +1,16 @@
-"""Pure-stdlib ISO-BMFF (MP4/MOV) container METADATA parser — the video
-slot of the multimodal column.
+"""Pure-stdlib ISO-BMFF (MP4/MOV) container walk — the video slot of
+the multimodal column.
 
-Frame DECODE needs video codecs this container doesn't have (H.264/VP9/
-AV1) and stays behind the loudly-documented deterministic fake
-(``operators/multimodal.frame_sample``); the CONTAINER walk — what a
-curation pipeline needs for duration/track filtering before any decode —
-is real: box traversal (32-bit and 64-bit largesize), ``mvhd`` movie
-duration (versions 0 and 1), per-track ``tkhd``/``mdhd``/``hdlr``
-(dimensions, language, handler type).
+Motion-JPEG is the one video codec this container can decode for real,
+so the walk serves it: box traversal (32-bit and 64-bit largesize), the
+first video track's sample table, and ``mjpeg_frames`` — the
+``(ts_ms, jpeg_bytes)`` frames ``operators/multimodal.video_phash``
+hashes.  ``write_mjpeg`` is the spec-conformant fixture writer.
 
 Validation: ``tests/test_mp4_meta.py`` builds spec-conformant box
 structures byte-by-byte from ISO/IEC 14496-12 field layouts (the same
 hand-built-vector strategy as the 24-bit WAV and PDF xref tests) and
-asserts the parse; malformed/truncated boxes raise ``Mp4Error``.
+asserts the walk; malformed/truncated boxes raise ``Mp4Error``.
 """
 
 from __future__ import annotations
@@ -46,84 +44,6 @@ def _boxes(data: bytes, start: int, end: int):
 
 def looks_like_mp4(data: bytes) -> bool:
     return len(data) >= 12 and data[4:8] == b"ftyp"
-
-
-def parse_mp4(data: bytes) -> dict:
-    """MP4 bytes → ``{brand, duration_ms, timescale, tracks: [...]}``.
-
-    Each track: ``{handler, width, height, duration_ms, language}``
-    (width/height from ``tkhd`` 16.16 fixed point; language from
-    ``mdhd`` packed 5-bit letters).
-    """
-    if not looks_like_mp4(data):
-        raise Mp4Error("not an ISO-BMFF file (missing ftyp)")
-    brand = None
-    movie = None
-    tracks: list[dict] = []
-    for btype, b0, b1 in _boxes(data, 0, len(data)):
-        if btype == b"ftyp":
-            brand = data[b0:b0 + 4].decode("latin-1").strip()
-        elif btype == b"moov":
-            for mtype, m0, m1 in _boxes(data, b0, b1):
-                if mtype == b"mvhd":
-                    movie = _parse_mvhd(data, m0, m1)
-                elif mtype == b"trak":
-                    tracks.append(_parse_trak(data, m0, m1))
-    if movie is None:
-        raise Mp4Error("missing moov/mvhd (no movie header)")
-    timescale, duration = movie
-    return {
-        "brand": brand,
-        "timescale": timescale,
-        "duration_ms": (duration * 1000) // timescale if timescale else 0,
-        "tracks": tracks,
-    }
-
-
-def _parse_mvhd(data: bytes, b0: int, b1: int) -> tuple[int, int]:
-    version = data[b0]
-    if version == 1:       # 64-bit times (ISO 14496-12 §8.2.2)
-        timescale, duration = struct.unpack(">IQ", data[b0 + 20:b0 + 32])
-    elif version == 0:
-        timescale, duration = struct.unpack(">II", data[b0 + 12:b0 + 20])
-    else:
-        raise Mp4Error(f"unknown mvhd version {version}")
-    if timescale == 0:
-        raise Mp4Error("mvhd timescale 0")
-    return timescale, duration
-
-
-def _parse_trak(data: bytes, t0: int, t1: int) -> dict:
-    out = {"handler": None, "width": 0, "height": 0,
-           "duration_ms": 0, "language": None}
-    for btype, b0, b1 in _boxes(data, t0, t1):
-        if btype == b"tkhd":
-            version = data[b0]
-            # width/height: last 8 bytes of the box, 16.16 fixed point
-            w, h = struct.unpack(">II", data[b1 - 8:b1])
-            out["width"] = w >> 16
-            out["height"] = h >> 16
-        elif btype == b"mdia":
-            for mtype, m0, m1 in _boxes(data, b0, b1):
-                if mtype == b"mdhd":
-                    version = data[m0]
-                    if version == 1:
-                        ts, dur = struct.unpack(">IQ", data[m0 + 20:m0 + 32])
-                        lang_off = m0 + 32
-                    else:
-                        ts, dur = struct.unpack(">II", data[m0 + 12:m0 + 20])
-                        lang_off = m0 + 20
-                    if ts:
-                        out["duration_ms"] = (dur * 1000) // ts
-                    (packed,) = struct.unpack(
-                        ">H", data[lang_off:lang_off + 2])
-                    out["language"] = "".join(
-                        chr(((packed >> s) & 0x1F) + 0x60)
-                        for s in (10, 5, 0))
-                elif mtype == b"hdlr":
-                    out["handler"] = data[m0 + 8:m0 + 12] \
-                        .decode("latin-1").strip()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -261,9 +181,8 @@ def video_samples(data: bytes) -> tuple[str | None,
 
 def mjpeg_frames(data: bytes) -> list[tuple[int, bytes]]:
     """MJPEG track → ``[(ts_ms, jpeg_bytes)]`` — the real-frame source
-    for ``operators/multimodal.frame_sample``.  Raises Mp4Error when
-    the video codec is not Motion-JPEG (callers keep the loud fake
-    boundary for codecs this container cannot decode)."""
+    for ``operators/multimodal.video_phash``.  Raises Mp4Error when
+    the video codec is not Motion-JPEG."""
     codec, samples = video_samples(data)
     if codec not in MJPEG_CODECS:
         raise Mp4Error(f"video codec {codec!r} is not Motion-JPEG")

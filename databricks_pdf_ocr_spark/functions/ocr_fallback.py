@@ -22,8 +22,6 @@ import hashlib
 
 LABELS = ("figure", "chart", "table", "photo", "diagram", "map", "equation", "logo")
 
-CONFIDENCE = 0.95  # reference hardcodes 0.95: clients/claude.py:101
-
 
 def classify_bytes(payload: bytes) -> tuple[str, str]:
     """Return (label, digest8) for an image payload — pure + deterministic."""

@@ -70,8 +70,6 @@ class Page:
 # Lexer / object parser
 # ===========================================================================
 
-_WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 # compiled-regex fast paths: the tokenizer is the extraction hot loop
 # (hundreds of thousands of calls per batch) — regex .match jumps replace
 # per-character Python loops with identical semantics

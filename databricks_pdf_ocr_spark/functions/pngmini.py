@@ -1,21 +1,19 @@
-"""Minimal pure-stdlib PNG codec + numpy resize — the hermetic half of the
-multimodal codec slot.
+"""Minimal pure-stdlib PNG codec — the hermetic half of the multimodal
+codec slot.
 
 The reference's image path is PIL: LANCZOS downscale to max edge 1568 and
 PNG re-encode before the OCR call (``clients/claude.py:22-38``,
 ``processors/ocr.py:27-57``).  This container has no imaging libraries,
-but PNG itself needs only ``zlib`` (stdlib) — so the engine can really
-decode/resize/encode PNG payloads end-to-end, leaving only the exotic
-codecs (JPEG/WebP/video) behind the loud ``NotImplementedError`` slot.
+but PNG itself needs only ``zlib`` (stdlib) — so the engine really
+decodes PNG payloads (``media_phash``) and re-wraps raw PDF image
+samples as PNG (``pdfmini``).
 
 Supported: 8-bit depth, color types 0 (gray), 2 (RGB), 4 (gray+alpha),
 6 (RGBA), non-interlaced; plus color type 3 (indexed/palette) at bit
 depths 1/2/4/8 with optional tRNS alpha — palette PNGs are the single
 most common web-icon encoding, and expansion yields RGB (no tRNS) or
 RGBA rows.  Encoder emits any per-row filter type (0 default; 1-4 exist
-so tests exercise every unfilter branch).  Resize is deterministic box
-(area-average) downsampling — not bit-identical to LANCZOS, but a real
-pixel resample with antialiasing semantics.
+so tests exercise every unfilter branch).
 """
 
 from __future__ import annotations
@@ -176,34 +174,3 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
             if alpha is not None:
                 px.append(alpha[idx])
     return width, height, out_ch, bytes(px)
-
-
-def resize_box(pixels: bytes, width: int, height: int, channels: int,
-               target_w: int, target_h: int) -> bytes:
-    """Deterministic box (area-average) resample — numpy-vectorized.
-
-    Each source pixel contributes to the target bucket its center maps to;
-    bucket means are the output.  Equivalent to area averaging for integer
-    downscale factors and a reasonable antialiased approximation otherwise
-    (the stand-in for the reference's PIL LANCZOS, clients/claude.py:30).
-    """
-    import numpy as np
-
-    if target_w <= 0 or target_h <= 0:
-        raise PngError("bad target size")
-    if target_w > width or target_h > height:
-        # upscale would leave empty target buckets (division by a zero
-        # count → NaN → undefined uint8 cast); refuse loudly instead of
-        # returning garbage pixels
-        raise PngError(
-            f"upscale not supported: {width}x{height} -> {target_w}x{target_h}")
-    a = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, channels)
-    ys = (np.arange(height) * target_h) // height
-    xs = (np.arange(width) * target_w) // width
-    flat = ys[:, None] * target_w + xs[None, :]          # target bucket ids
-    sums = np.zeros((target_h * target_w, channels), dtype=np.float64)
-    np.add.at(sums, flat.ravel(), a.reshape(-1, channels))
-    counts = np.zeros(target_h * target_w, dtype=np.int64)
-    np.add.at(counts, flat.ravel(), 1)
-    out = (sums / counts[:, None] + 0.5).astype(np.uint8)
-    return out.tobytes()

@@ -15,7 +15,7 @@ with ``TiffError`` (tiles, planar=2, 16-bit, CCITT fax, JPEG-in-TIFF)
 — never a silent wrong decode.
 
 Encoder: single-IFD chunky 8-bit gray/RGB/RGBA with compression
-none or PackBits (the fixture/transcode leg, like ``bmpmini``'s).
+none or PackBits (the test-fixture leg).
 
 Returns/accepts the family convention: ``(width, height, channels,
 pixels)`` with pixels row-major top-down RGB/RGBA/gray-as-RGB bytes.

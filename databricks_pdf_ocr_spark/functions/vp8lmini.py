@@ -1,13 +1,12 @@
 """VP8L (WebP lossless) bitstream decoder — pure stdlib, plus a minimal
 encoder used by the test fixtures.
 
-Closes the round-4/5 WebP gap for REAL pixels: ``webpmini`` already
-parses container metadata for all three WebP layouts; this module decodes
-the ``VP8L`` (lossless) image chunk and the ``ALPH`` alpha plane of lossy
-images (WebP alpha is itself compressed with the VP8L entropy coder), so
-`decode_media` can return true pixels for lossless WebP and true alpha
-planes for extended lossy files.  Lossy VP8 RGB stays behind the loud
-codec boundary (a full VP8 intra decoder is out of proportion here).
+Real WebP pixels, lossless half: ``webpmini`` walks the RIFF container;
+this module decodes the ``VP8L`` (lossless) image chunk and the ``ALPH``
+alpha plane of lossy images (WebP alpha is itself compressed with the
+VP8L entropy coder), so ``media_phash`` sees true pixels for lossless
+WebP and true alpha planes for extended lossy files.  Lossy VP8 RGB is
+``vp8mini``'s job.
 
 Implements the WebP Lossless Bitstream Specification (RFC 9649 §3-5):
 

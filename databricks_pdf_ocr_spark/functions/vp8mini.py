@@ -2,8 +2,8 @@
 
 Closes the LAST loud image boundary: ``webpmini`` decodes lossless
 (VP8L) files and the ALPH plane of lossy files for real; this module
-decodes the lossy ``VP8 `` key-frame stream itself, so ``decode_media``
-returns true pixels for every WebP variant a crawl actually serves.
+decodes the lossy ``VP8 `` key-frame stream itself, so ``media_phash``
+hashes true pixels for every WebP variant a crawl actually serves.
 
 Implements the full key-frame decode path of RFC 6386:
 

@@ -136,26 +136,3 @@ def encode_wav(samples: list, channels: int, sample_rate: int,
               + b"data" + struct.pack("<I", len(body)) + body
               + (b"\x00" if len(body) & 1 else b""))
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def audio_features(decoded: dict) -> dict:
-    """Deterministic per-clip features over decoded samples: peak and RMS
-    in full-scale units (the length/quality heuristics of the audio
-    curation path, the analogue of text_analysis.quality_features)."""
-    samples = decoded["samples"]
-    if not samples:
-        return {"rms_e6": 0, "peak_e6": 0}
-    if decoded["fmt"] == "float32":
-        scale = 1.0
-    else:
-        scale = float(1 << (decoded["bits"] - 1))
-    acc = 0.0
-    peak = 0.0
-    for s in samples:
-        v = s / scale
-        acc += v * v
-        if abs(v) > peak:
-            peak = abs(v)
-    rms = (acc / len(samples)) ** 0.5
-    # micro-unit ints: IEEE-stable across engines (CLAUDE.md parity note)
-    return {"rms_e6": int(rms * 1e6 + 0.5), "peak_e6": int(peak * 1e6 + 0.5)}

@@ -1,8 +1,8 @@
-"""WebP container parser + decode router (pure stdlib): RIFF metadata
-(``webp_meta``), full pixel decode for BOTH variants (``webp_decode`` —
-lossless VP8L via ``vp8lmini``, lossy key-frame VP8 via ``vp8mini``,
-with ALPH alpha-plane merge), the alpha-only path (``webp_alpha``), and
-a lossless fixture encoder (``encode_webp_lossless``).
+"""WebP container parser + decode router (pure stdlib): full pixel decode
+for BOTH variants (``webp_decode`` — lossless VP8L via ``vp8lmini``,
+lossy key-frame VP8 via ``vp8mini``, with ALPH alpha-plane merge), the
+alpha-only path (``webp_alpha``), and a lossless fixture encoder
+(``encode_webp_lossless``).
 
 Covers the three container layouts of the WebP spec (RFC 9649):
 - ``VP8 `` (lossy): key-frame start code ``9D 01 2A``, then 14-bit
@@ -11,10 +11,9 @@ Covers the three container layouts of the WebP spec (RFC 9649):
   height-1 packed little-endian;
 - ``VP8X`` (extended): 24-bit canvas width-1 / height-1.
 
-Validation: ``tests/test_multimodal.py`` hand-builds all three layouts
-byte-by-byte from the spec field packing (the WAV/MP4 test strategy)
-and asserts parse + the decode_media metadata row; malformed/truncated
-headers raise ``WebpError``.
+Validation: ``tests/test_vp8l_codec.py`` and ``tests/test_vp8_codec.py``
+decode CPython's real ``python.webp`` files and fixture-encoded lossless
+files; malformed/truncated containers raise ``WebpError``.
 """
 
 from __future__ import annotations
@@ -28,42 +27,6 @@ class WebpError(ValueError):
 
 def looks_like_webp(data: bytes) -> bool:
     return len(data) >= 16 and data[:4] == b"RIFF" and data[8:12] == b"WEBP"
-
-
-def webp_meta(data: bytes) -> dict:
-    """WebP bytes → ``{variant: 'lossy'|'lossless'|'extended',
-    width, height}`` from the first image-data chunk header."""
-    if not looks_like_webp(data):
-        raise WebpError("not a WebP file (missing RIFF/WEBP)")
-    pos = 12
-    n = len(data)
-    while pos + 8 <= n:
-        fourcc = data[pos:pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4:pos + 8])
-        body = data[pos + 8:pos + 8 + size]
-        if fourcc == b"VP8 ":
-            if len(body) < 10 or body[3:6] != b"\x9d\x01\x2a":
-                raise WebpError("bad VP8 key-frame header")
-            (w,) = struct.unpack("<H", body[6:8])
-            (h,) = struct.unpack("<H", body[8:10])
-            return {"variant": "lossy",
-                    "width": w & 0x3FFF, "height": h & 0x3FFF}
-        if fourcc == b"VP8L":
-            if len(body) < 5 or body[0] != 0x2F:
-                raise WebpError("bad VP8L signature")
-            b = body[1:5]
-            w = 1 + (((b[1] & 0x3F) << 8) | b[0])
-            h = 1 + (((b[3] & 0x0F) << 10) | (b[2] << 2)
-                     | ((b[1] & 0xC0) >> 6))
-            return {"variant": "lossless", "width": w, "height": h}
-        if fourcc == b"VP8X":
-            if len(body) < 10:
-                raise WebpError("truncated VP8X chunk")
-            w = 1 + int.from_bytes(body[4:7], "little")
-            h = 1 + int.from_bytes(body[7:10], "little")
-            return {"variant": "extended", "width": w, "height": h}
-        pos += 8 + size + (size & 1)            # RIFF chunks pad to even
-    raise WebpError("no VP8/VP8L/VP8X image chunk")
 
 
 def _chunks(data: bytes):
@@ -141,40 +104,4 @@ def encode_webp_lossless(rgba: bytes, width: int, height: int,
     body = vp8lmini.vp8l_encode(rgba, width, height, **vp8l_kwargs)
     pad = b"\x00" if len(body) % 2 else b""     # RIFF pads, size excludes it
     payload = b"WEBP" + b"VP8L" + struct.pack("<I", len(body)) + body + pad
-    return b"RIFF" + struct.pack("<I", len(payload)) + payload
-
-
-# ---------------------------------------------------------------------------
-# Writer (test fixture generator — header-only, body is opaque filler)
-# ---------------------------------------------------------------------------
-
-def write_webp_header(variant: str, width: int, height: int,
-                      filler: bytes = b"\x00" * 16) -> bytes:
-    """Spec-packed WebP container with a valid image-chunk HEADER and
-    opaque body filler — enough to exercise the metadata parse (a real
-    encoder would need the VP8 bitstream this module deliberately does
-    not implement)."""
-    if variant == "lossy":
-        body = (b"\x00\x00\x00" + b"\x9d\x01\x2a"
-                + struct.pack("<HH", width & 0x3FFF, height & 0x3FFF)
-                + filler)
-        chunk = b"VP8 "
-    elif variant == "lossless":
-        w, h = width - 1, height - 1
-        b0 = w & 0xFF
-        b1 = ((w >> 8) & 0x3F) | ((h & 0x03) << 6)
-        b2 = (h >> 2) & 0xFF
-        b3 = (h >> 10) & 0x0F
-        body = bytes([0x2F, b0, b1, b2, b3]) + filler
-        chunk = b"VP8L"
-    elif variant == "extended":
-        body = (b"\x00" * 4
-                + (width - 1).to_bytes(3, "little")
-                + (height - 1).to_bytes(3, "little") + filler)
-        chunk = b"VP8X"
-    else:
-        raise ValueError(f"unknown variant {variant!r}")
-    if len(body) % 2:
-        body += b"\x00"
-    payload = b"WEBP" + chunk + struct.pack("<I", len(body)) + body
     return b"RIFF" + struct.pack("<I", len(payload)) + payload

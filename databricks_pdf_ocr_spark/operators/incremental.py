@@ -2,14 +2,17 @@
 
 Reference: ``get_unprocessed_files`` (``processors/ocr.py:59-85``) collects
 all processed ids to the driver and filters with ``isin`` — the collapse
-point at 10^12 docs (SURVEY.md §3.3).  Here the work set stays a DataFrame:
+point at 10^12 docs (SURVEY.md §3.3).  Here the work set stays a DataFrame
+(:func:`select_work`, the one work-selection path of the extraction job):
 
-- incremental  → ``left_anti`` join against processed doc ids
+- incremental  → broadcast ``left_anti`` join against the checkpoint
+  buckets already done for the input
 - reprocess_all → full scan
-- reprocess_specific → ``isin`` for short user lists, ``left_semi`` join
-  against a DataFrame for large ones
+- reprocess_specific → ``isin`` over ``specific_doc_ids``
 
-plus the per-run cap (``max_docs_per_run``, reference ``settings.toml:21``).
+plus the per-run cap (``max_docs_per_run``, reference ``settings.toml:21``),
+applied at bucket granularity (:func:`cap_to_buckets`).  The Bloom-gated
+anti join below is the 10^12-row shape of a doc-level anti join.
 """
 
 from __future__ import annotations
@@ -17,9 +20,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import ExtractConfig
+from .extract import bucket_col
 
-#: above this many ids, a literal IN-list stops being sane SQL
-_ISIN_LIMIT = 1000
+
+def select_work(documents: DataFrame, cp, fingerprint: str,
+                cfg: ExtractConfig,
+                fail_after_buckets: int | None = None) -> DataFrame:
+    """The work set of one run: ``documents`` stamped with ``bucket``.
+
+    The mode comes from ``cfg.processing_mode``; ``incremental`` keeps
+    only the buckets ``cp`` (a ``CheckpointManager``) has not marked done
+    for ``fingerprint``.  ``fail_after_buckets`` (the crash simulator)
+    then keeps the first k pending buckets, and ``cfg.max_docs_per_run``
+    caps the set at whole buckets.
+    """
+    mode = cfg.processing_mode
+    if mode == "reprocess_all":
+        pending = documents.withColumn("bucket", bucket_col(cfg.n_buckets))
+    elif mode == "reprocess_specific":
+        pending = (documents
+                   .filter(F.col("doc_id").isin(list(cfg.specific_doc_ids)))
+                   .withColumn("bucket", bucket_col(cfg.n_buckets)))
+    else:
+        pending = cp.filter_pending(documents, fingerprint)
+    if fail_after_buckets is not None:
+        keep = (pending.select("bucket").distinct()
+                .orderBy("bucket").limit(fail_after_buckets))
+        pending = pending.join(F.broadcast(keep), "bucket", "left_semi")
+    if cfg.max_docs_per_run:
+        pending = cap_to_buckets(pending, cfg.max_docs_per_run)
+    return pending
 
 
 def cap_to_buckets(pending: DataFrame, max_docs: int) -> DataFrame:
@@ -46,7 +76,7 @@ def cap_to_buckets(pending: DataFrame, max_docs: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom-gated anti join — the 10^12-row shape of `unprocessed`.
+# Bloom-gated anti join — the 10^12-row shape of a doc-level anti join.
 #
 # At extreme scale the plain left_anti shuffles the ENTIRE source on the
 # key just to discover that most rows were never processed.  A Bloom
@@ -160,35 +190,3 @@ def unprocessed_bloom(source: DataFrame, done: DataFrame, key: str,
              .join(done_keys, candidates[key] == done_keys["__dk"],
                    "left_anti"))
     return definite.unionByName(exact)
-
-
-def unprocessed(documents: DataFrame, results: DataFrame | None,
-                cfg: ExtractConfig) -> DataFrame:
-    """Select the work set for a run according to ``cfg.processing_mode``."""
-    mode = cfg.processing_mode
-    if mode == "reprocess_all":
-        out = documents
-    elif mode == "reprocess_specific":
-        ids = list(cfg.specific_doc_ids)
-        if len(ids) <= _ISIN_LIMIT:
-            out = documents.filter(F.col("doc_id").isin(ids))
-        else:
-            ids_df = documents.sparkSession.createDataFrame(
-                [(i,) for i in ids], "doc_id string")
-            out = documents.join(F.broadcast(ids_df), "doc_id", "left_semi")
-    else:  # incremental
-        if results is None:
-            out = documents
-        else:
-            done = results.select("doc_id").distinct()
-            # Catalyst picks broadcast vs shuffled anti join by size; at
-            # 10^12 docs both sides shuffle on doc_id — correct and bounded,
-            # unlike the reference's driver-side collect
-            out = documents.join(done, "doc_id", "left_anti")
-    if cfg.max_docs_per_run:
-        # row-level cap is safe HERE: this operator selects work without
-        # marking lineage.  The checkpointed job path must use
-        # cap_to_buckets instead (a row cut inside a marked bucket is
-        # silent data loss on resume).
-        out = out.limit(cfg.max_docs_per_run)
-    return out

@@ -1,22 +1,29 @@
 """Multimodal column operators: opaque binary media + typed metadata.
 
 Task-brief component: at 100 TB, images/audio/video ride through the
-pipeline as opaque ``binary`` columns (or ``media_ref`` pointers) with
-typed metadata; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages.
+pipeline as opaque ``binary`` columns (or ``media_ref`` pointers); image
+extraction and perceptual hashing run as Arrow-batched ``mapInPandas``
+stages, so payload bytes never shuffle.
+
+Two families live here:
+- PDF image extraction (``pdf_images``, ``pdf_span_images``) — the
+  embedded raster images of PDF pages, and the bucket-partitioned
+  ``media_payloads`` table the extraction job's ``--media-payloads``
+  stage writes (``dedup_payloads`` is its dedup-on-read);
+- media near-dup: 64-bit perceptual hashes for images
+  (``media_phash``), audio (``media_ahash``) and MJPEG video frames
+  (``video_phash``), paired by Hamming banding (``phash_pairs``,
+  ``video_phash_pairs``).
 
 This container has no imaging/audio libraries, so the engine carries its
-own pure-stdlib+numpy codecs for the formats that matter on the document
-hot path: PNG (``functions/pngmini.py``), baseline + progressive JPEG
-(``functions/jpegmini.py``, validated against the JVM ImageIO ground
-truth of ``spark.read.format("image")``), GIF (``functions/gifmini.py``)
-and BOTH WebP variants (lossless VP8L in ``functions/vp8lmini.py``,
-lossy VP8 in ``functions/vp8mini.py`` — validated byte-exact against
-the system libwebp reference decoder).  The remaining codecs (real
-video beyond MJPEG) stay behind a loudly-stubbed boundary with a
-clearly-marked deterministic fake — keyed on the payload bytes, so
-tests and goldens are stable.  Everything Spark-side is real and tested:
-schemas, Arrow batch shapes, partition behavior, metadata structs.
+own pure-stdlib+numpy decoders: PNG (``functions/pngmini.py``), baseline
++ progressive JPEG (``functions/jpegmini.py``, validated against the JVM
+ImageIO ground truth of ``spark.read.format("image")``), GIF
+(``functions/gifmini.py``), BOTH WebP variants (lossless VP8L in
+``functions/vp8lmini.py``, lossy VP8 in ``functions/vp8mini.py`` —
+validated byte-exact against the system libwebp reference decoder), WAV
+(``functions/wavmini.py``) and MJPEG-in-MP4 (``functions/mp4mini.py``).
+Undecodable payloads become error rows, never exceptions.
 
 Reference analogue: the image path in ``clients/claude.py:22-49``
 (PIL resize → base64 → request payload) — here generalized into reusable
@@ -26,402 +33,10 @@ column operators instead of an inline API-call helper.
 from __future__ import annotations
 
 import hashlib
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-#: media metadata emitted by decode_media (one row per input row)
-MEDIA_META_DDL = (
-    "media_id string, kind string, byte_size long, format string, "
-    "width int, height int, duration_ms long, decode_ok boolean, "
-    "error_message string"
-)
-
-#: per-frame rows emitted by frame_sample (video/animation fan-out).
-#: ``source``: 'mjpeg'/'gif' = real decoded frames (sha over pixel
-#: bytes, real dims); 'fake' = the documented deterministic stand-in
-#: for codecs this container cannot decode; 'error' = a sample/frame
-#: that failed decode
-FRAME_DDL = (
-    "media_id string, frame_idx int, ts_ms long, frame_sha string, "
-    "width int, height int, source string"
-)
-
-EMBED_DIM = 16
-
-
-def _decode_image_real(payload: bytes) -> tuple[str, int, int]:
-    """The real codec slot.  PNG is fully implemented in pure stdlib
-    (``functions/pngmini.py`` — zlib inflate + per-row unfilter, incl.
-    indexed-palette), baseline + progressive JPEG in stdlib+numpy
-    (``functions/jpegmini.py`` — huffman + batched IDCT + multi-scan
-    coefficient accumulation, ImageIO-validated), and BOTH WebP variants
-    in pure stdlib: lossless VP8L (``functions/vp8lmini.py`` — prefix
-    codes, LZ77 + color cache, all four transforms) and lossy VP8
-    (``functions/vp8mini.py`` — boolean arithmetic coder, intra
-    prediction, loop filter; byte-exact vs the system libwebp reference
-    decoder), so every still-image web format decodes for real; video
-    codecs beyond MJPEG stay deliberately loud so nobody mistakes the
-    fake for them."""
-    from ..functions import (bmpmini, gifmini, jpegmini, pngmini, tiffmini,
-                             webpmini)
-    if payload[:8] == pngmini.PNG_SIG:
-        w, h, _channels, _pix = pngmini.decode_png(payload)
-        return "png", w, h
-    if payload[:2] == jpegmini.JPEG_SIG:
-        w, h, _channels, _pix = jpegmini.decode_jpeg(payload)
-        return "jpeg", w, h
-    if webpmini.looks_like_webp(payload):
-        w, h, _channels, _pix = webpmini.webp_decode(payload)
-        return "webp", w, h
-    if gifmini.looks_like_gif(payload):
-        w, h, _channels, _pix = gifmini.decode_gif(payload)
-        return "gif", w, h
-    if bmpmini.looks_like_bmp(payload):
-        w, h, _channels, _pix = bmpmini.decode_bmp(payload)
-        return "bmp", w, h
-    if tiffmini.looks_like_tiff(payload):
-        w, h, _channels, _pix = tiffmini.decode_tiff(payload)
-        return "tiff", w, h
-    raise NotImplementedError(
-        "non-PNG/JPEG/GIF/WebP/BMP/TIFF codecs (video) need imaging "
-        "libraries not installed in this container; the deterministic "
-        "fake decoder is the hermetic test path for those")
-
-
-def _sniff_bmp(payload: bytes) -> bool:
-    if payload[:2] != b"BM":
-        return False
-    from ..functions import bmpmini
-    return bmpmini.looks_like_bmp(payload)
-
-
-def _decode_fake(payload: bytes) -> tuple[str, int, int, int]:
-    """Deterministic pseudo-decode: (format, width, height, duration_ms)
-    derived purely from the payload hash — stable across runs/engines."""
-    h = hashlib.sha256(payload).digest()
-    fmt = ("png", "jpeg", "webp", "mp4", "wav")[h[0] % 5]
-    width = 64 + struct.unpack(">H", h[1:3])[0] % 4032
-    height = 64 + struct.unpack(">H", h[3:5])[0] % 3024
-    duration = (struct.unpack(">I", h[5:9])[0] % 600_000
-                if fmt in ("mp4", "wav") else 0)
-    return fmt, width, height, duration
-
-
-def decode_media(df: DataFrame, content_col: str = "content",
-                 kind_col: str | None = None) -> DataFrame:
-    """binary column → typed metadata rows (one per input row).
-
-    Plan shape: narrow ``mapInPandas`` over the scan — no shuffle; media
-    bytes never leave their input partition.  Decode errors become
-    ``decode_ok=false`` rows (the pipeline-continues error contract).
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "kind", "byte_size", "format",
-                                   "width", "height", "duration_ms",
-                                   "decode_ok", "error_message")}
-            # column-zip, not iterrows(): iterrows materializes a Series per
-            # row (~10-100x slower) — same pattern as extract.py's kernel
-            kinds = pdf[kind_col] if kind_col else ("image",) * len(pdf)
-            for payload, kind in zip(pdf[content_col], kinds):
-                payload = bytes(payload) if payload is not None else b""
-                mid = hashlib.sha256(payload).hexdigest()
-                out["media_id"].append(mid)
-                out["kind"].append(kind)
-                out["byte_size"].append(len(payload))
-                if not payload:
-                    out["format"].append(None)
-                    out["width"].append(0)
-                    out["height"].append(0)
-                    out["duration_ms"].append(0)
-                    out["decode_ok"].append(False)
-                    out["error_message"].append("empty payload")
-                    continue
-                if payload[:8] == b"\x89PNG\r\n\x1a\n" or \
-                        payload[:2] == b"\xff\xd8":
-                    # real decode path (pure-stdlib PNG / JPEG codecs)
-                    try:
-                        fmt, w, h = _decode_image_real(payload)
-                        dur = 0
-                    except Exception as e:  # corrupt/unsupported → error row
-                        out["format"].append(
-                            "png" if payload[:1] == b"\x89" else "jpeg")
-                        out["width"].append(0)
-                        out["height"].append(0)
-                        out["duration_ms"].append(0)
-                        out["decode_ok"].append(False)
-                        out["error_message"].append(str(e))
-                        continue
-                elif len(payload) >= 12 and payload[4:8] == b"ftyp":
-                    # real CONTAINER metadata (functions/mp4mini.py);
-                    # frame decode stays behind the documented fake
-                    try:
-                        from ..functions import mp4mini
-                        m = mp4mini.parse_mp4(payload)
-                        vid = next((t for t in m["tracks"]
-                                    if t["handler"] == "vide"), None)
-                        fmt = "mp4"
-                        w = vid["width"] if vid else 0
-                        h = vid["height"] if vid else 0
-                        dur = m["duration_ms"]
-                    except Exception as e:
-                        out["format"].append("mp4")
-                        out["width"].append(0)
-                        out["height"].append(0)
-                        out["duration_ms"].append(0)
-                        out["decode_ok"].append(False)
-                        out["error_message"].append(str(e))
-                        continue
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                    # real decode path (pure-stdlib gifmini); animations
-                    # report their real total duration
-                    try:
-                        from ..functions import gifmini
-                        m = gifmini.gif_meta(payload)
-                        fmt, w, h = "gif", m["width"], m["height"]
-                        dur = m["duration_ms"]
-                    except Exception as e:
-                        out["format"].append("gif")
-                        out["width"].append(0)
-                        out["height"].append(0)
-                        out["duration_ms"].append(0)
-                        out["decode_ok"].append(False)
-                        out["error_message"].append(str(e))
-                        continue
-                elif payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-                    # lossless (VP8L) → REAL pixel decode (vp8lmini);
-                    # lossy VP8 → real header metadata, RGB reconstruction
-                    # stays behind the loud boundary
-                    try:
-                        from ..functions import webpmini
-                        m = webpmini.webp_meta(payload)
-                        try:
-                            _fmt, w, h = _decode_image_real(payload)
-                        except NotImplementedError:   # lossy: header dims
-                            w, h = m["width"], m["height"]
-                        fmt, dur = "webp", 0
-                    except Exception as e:
-                        out["format"].append("webp")
-                        out["width"].append(0)
-                        out["height"].append(0)
-                        out["duration_ms"].append(0)
-                        out["decode_ok"].append(False)
-                        out["error_message"].append(str(e))
-                        continue
-                elif _sniff_bmp(payload) or payload[:4] in (
-                        b"II*\x00", b"MM\x00*"):
-                    # real decode path (pure stdlib+numpy bmpmini /
-                    # tiffmini): all DIB variants, palette/bitfields/RLE
-                    # legs ('BM' alone is a weak magic — looks_like_bmp's
-                    # DIB-size sniff gates it, so non-BMP 'BM…' payloads
-                    # still route to the fake); TIFF strips with
-                    # none/LZW/Deflate/PackBits + predictor
-                    try:
-                        fmt, w, h = _decode_image_real(payload)
-                        dur = 0
-                    except Exception as e:
-                        out["format"].append(
-                            "tiff" if payload[:2] in (b"II", b"MM")
-                            else "bmp")
-                        out["width"].append(0)
-                        out["height"].append(0)
-                        out["duration_ms"].append(0)
-                        out["decode_ok"].append(False)
-                        out["error_message"].append(str(e))
-                        continue
-                elif payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-                    # real audio path (pure-stdlib RIFF/PCM parser)
-                    try:
-                        from ..functions import wavmini
-                        d = wavmini.decode_wav(payload)
-                        fmt, w, h, dur = "wav", 0, 0, d["duration_ms"]
-                    except Exception as e:
-                        out["format"].append("wav")
-                        out["width"].append(0)
-                        out["height"].append(0)
-                        out["duration_ms"].append(0)
-                        out["decode_ok"].append(False)
-                        out["error_message"].append(str(e))
-                        continue
-                else:
-                    fmt, w, h, dur = _decode_fake(payload)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["duration_ms"].append(dur)
-                out["decode_ok"].append(True)
-                out["error_message"].append(None)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=MEDIA_META_DDL)
-
-
-def resize_plan(meta: DataFrame, max_edge: int = 1568) -> DataFrame:
-    """Resize planning (reference: LANCZOS downscale to max edge 1568,
-    ``clients/claude.py:27-38``).  The geometry math is exact and
-    JVM-side; only the pixel resample itself sits behind the codec stub.
-    """
-    from pyspark.sql import functions as F
-    scale = F.when(
-        F.greatest("width", "height") > max_edge,
-        max_edge / F.greatest("width", "height")).otherwise(F.lit(1.0))
-    return meta.select(
-        "media_id", "width", "height",
-        F.round(scale, 6).alias("scale"),
-        F.ceil(F.col("width") * scale).cast("int").alias("target_width"),
-        F.ceil(F.col("height") * scale).cast("int").alias("target_height"),
-        (scale < 1.0).alias("needs_resize"),
-    )
-
-
-#: rows emitted by resize_media (real pixel path)
-RESIZED_DDL = (
-    "media_id string, format string, width int, height int, "
-    "target_width int, target_height int, resized binary, "
-    "resize_ok boolean, error_message string"
-)
-
-
-def resize_media(df: DataFrame, content_col: str = "content",
-                 max_edge: int = 1568) -> DataFrame:
-    """REAL pixel resample for PNG and baseline-JPEG payloads: decode
-    (pure-stdlib codecs) → box-downsample to ``max_edge`` (reference: PIL
-    LANCZOS to 1568, ``clients/claude.py:27-38``) → re-encode PNG (JPEG
-    inputs transcode, mirroring the reference's render→resize→PNG-encode
-    flow for the OCR request payload).
-
-    Narrow ``mapInPandas``; media bytes never shuffle.  Other payloads
-    (codecs unavailable in this container) come back ``resize_ok=false``
-    with the reason — the pipeline-continues error contract.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import (bmpmini, gifmini, jpegmini, pngmini,
-                                 tiffmini, webpmini)
-
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "format", "width", "height",
-                                   "target_width", "target_height",
-                                   "resized", "resize_ok", "error_message")}
-
-            def emit(mid, fmt, w, h, tw, th, data, ok, err):
-                out["media_id"].append(mid)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["target_width"].append(tw)
-                out["target_height"].append(th)
-                out["resized"].append(data)
-                out["resize_ok"].append(ok)
-                out["error_message"].append(err)
-
-            for payload in pdf[content_col]:  # column-zip, not iterrows()
-                payload = bytes(payload) if payload is not None else b""
-                mid = hashlib.sha256(payload).hexdigest()
-                if payload[:8] == pngmini.PNG_SIG:
-                    fmt = "png"
-                elif payload[:2] == jpegmini.JPEG_SIG:
-                    fmt = "jpeg"
-                elif webpmini.looks_like_webp(payload):
-                    fmt = "webp"
-                elif gifmini.looks_like_gif(payload):
-                    fmt = "gif"
-                elif bmpmini.looks_like_bmp(payload):
-                    fmt = "bmp"
-                elif tiffmini.looks_like_tiff(payload):
-                    fmt = "tiff"
-                else:
-                    emit(mid, None, 0, 0, 0, 0, None, False,
-                         "unsupported codec (PNG, JPEG, GIF, WebP, BMP and "
-                         "TIFF decode hermetically)")
-                    continue
-                try:
-                    if fmt == "png":
-                        w, h, ch, pix = pngmini.decode_png(payload)
-                    elif fmt == "webp":       # lossless VP8L or lossy VP8
-                        w, h, ch, pix = webpmini.webp_decode(payload)
-                    elif fmt == "gif":        # first composited frame
-                        w, h, ch, pix = gifmini.decode_gif(payload)
-                    elif fmt == "bmp":
-                        w, h, ch, pix = bmpmini.decode_bmp(payload)
-                    elif fmt == "tiff":
-                        w, h, ch, pix = tiffmini.decode_tiff(payload)
-                    else:
-                        w, h, ch, pix = jpegmini.decode_jpeg(payload)
-                    if max(w, h) > max_edge:
-                        # same geometry as resize_plan (ceil(edge*scale))
-                        import math
-                        scale = max_edge / max(w, h)
-                        tw = max(1, math.ceil(w * scale))
-                        th = max(1, math.ceil(h * scale))
-                        pix = pngmini.resize_box(pix, w, h, ch, tw, th)
-                    else:
-                        tw, th = w, h
-                    emit(mid, fmt, w, h, tw, th,
-                         pngmini.encode_png(pix, tw, th, ch), True, None)
-                except Exception as e:
-                    emit(mid, fmt, 0, 0, 0, 0, None, False, str(e))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=RESIZED_DDL)
-
-
-#: audio metadata + features emitted by decode_audio
-AUDIO_META_DDL = (
-    "media_id string, format string, channels int, sample_rate int, "
-    "bits int, n_frames long, duration_ms long, rms_e6 long, peak_e6 long, "
-    "decode_ok boolean, error_message string"
-)
-
-
-def decode_audio(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """binary audio column → typed metadata + curation features (REAL
-    RIFF/WAVE parse, ``functions/wavmini.py``): channels / rate / depth /
-    frames / duration plus per-clip RMS and peak — the audio analogue of
-    ``text_analysis.quality_features`` for filtering silent or clipped
-    clips from a training corpus.
-
-    Narrow ``mapInPandas``; audio bytes never shuffle; undecodable
-    payloads (compressed codecs, corrupt files) become
-    ``decode_ok=false`` rows — the pipeline-continues error contract.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import wavmini
-
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "format", "channels",
-                                   "sample_rate", "bits", "n_frames",
-                                   "duration_ms", "rms_e6", "peak_e6",
-                                   "decode_ok", "error_message")}
-            for payload in pdf[content_col]:  # column-zip, not iterrows()
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(hashlib.sha256(payload).hexdigest())
-                try:
-                    d = wavmini.decode_wav(payload)
-                    feats = wavmini.audio_features(d)
-                    out["format"].append(d["fmt"])
-                    out["channels"].append(d["channels"])
-                    out["sample_rate"].append(d["sample_rate"])
-                    out["bits"].append(d["bits"])
-                    out["n_frames"].append(d["n_frames"])
-                    out["duration_ms"].append(d["duration_ms"])
-                    out["rms_e6"].append(feats["rms_e6"])
-                    out["peak_e6"].append(feats["peak_e6"])
-                    out["decode_ok"].append(True)
-                    out["error_message"].append(None)
-                except Exception as e:
-                    out["format"].append(None)
-                    for k in ("channels", "sample_rate", "bits", "n_frames",
-                              "duration_ms", "rms_e6", "peak_e6"):
-                        out[k].append(0)
-                    out["decode_ok"].append(False)
-                    out["error_message"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=AUDIO_META_DDL)
-
 
 #: rows emitted by pdf_images (one per embedded raster image)
 PDF_IMAGE_DDL = (
@@ -440,7 +55,7 @@ def pdf_images(df: DataFrame, id_col: str = "doc_id",
 
     ``/DCTDecode`` images come out as ready-to-decode JPEG files and
     Flate/raw 8-bit gray/RGB samples as lossless PNG re-wraps — both feed
-    straight into :func:`decode_media` / :func:`resize_media`.  Exotic
+    straight into :func:`media_phash`.  Exotic
     codecs (CCITT/JBIG2) come back ``extract_ok=false`` with the reason.
 
     Plan shape: narrow ``mapInPandas`` with in-batch page/image fan-out —
@@ -575,129 +190,6 @@ def dedup_payloads(payloads: DataFrame) -> DataFrame:
     return payloads.dropDuplicates(["media_ref"])
 
 
-def frame_sample(df: DataFrame, content_col: str = "content",
-                 every_ms: int = 1000, max_frames: int = 16) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame.
-
-    Fan-out happens *inside* the Arrow batch (like the PDF page fan-out),
-    so a long video never becomes a driver loop.  The frame SCHEDULE uses
-    the real container duration when the payload is ISO-BMFF
-    (``functions/mp4mini.py``).  Motion-JPEG tracks (the one video codec
-    this container CAN decode — every sample is a standalone JPEG) get
-    REAL frames: the sample nearest each schedule point is decoded with
-    ``functions/jpegmini`` and hashed over its pixel bytes.  Animated
-    GIFs likewise get REAL frames: the composited canvas at each
-    schedule point via ``functions/gifmini.gif_frames``
-    (``source='gif'``).  Other codecs keep the documented deterministic
-    fake (``source='fake'``); a sample that fails decode becomes a loud
-    ``source='error'`` row rather than a silent fake.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import gifmini, jpegmini, mp4mini
-
-        def emit(out, mid, i, ts, sha, w, h, src):
-            out["media_id"].append(mid)
-            out["frame_idx"].append(i)
-            out["ts_ms"].append(ts)
-            out["frame_sha"].append(sha)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["source"].append(src)
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in ("media_id", "frame_idx", "ts_ms",
-                                "frame_sha", "width", "height", "source")}
-            for payload in pdf[content_col]:  # column-zip, not iterrows()
-                payload = bytes(payload) if payload is not None else b""
-                if not payload:
-                    continue
-                mid = hashlib.sha256(payload).hexdigest()
-                if gifmini.looks_like_gif(payload):
-                    # animated GIF → REAL composited frames; the lockstep
-                    # walk keeps ONE canvas (+1 lookahead) in memory, not
-                    # the whole animation
-                    try:
-                        meta = gifmini.gif_meta(payload)
-                        n = int(min(max_frames,
-                                    max(1, meta["duration_ms"] // every_ms)))
-                        frames_it = gifmini.gif_frames(payload)
-                        cur = next(frames_it)
-                        nxt = next(frames_it, None)
-                        for i in range(n):
-                            ts = i * every_ms
-                            while nxt is not None and nxt[0] <= ts:
-                                cur, nxt = nxt, next(frames_it, None)
-                            emit(out, mid, i, ts,
-                                 hashlib.sha256(cur[2]).hexdigest()[:16],
-                                 meta["width"], meta["height"], "gif")
-                    except Exception:
-                        emit(out, mid, 0, 0,
-                             hashlib.sha256(payload).hexdigest()[:16],
-                             0, 0, "error")
-                    continue
-                dur = None
-                samples = None
-                if mp4mini.looks_like_mp4(payload):
-                    try:
-                        dur = mp4mini.parse_mp4(payload)["duration_ms"]
-                        # schedule only — (offset, size, ts); frame bytes
-                        # are sliced per SAMPLED frame below, so a long
-                        # video never doubles its payload in memory
-                        codec, samples = mp4mini.video_samples(payload)
-                        if codec not in mp4mini.MJPEG_CODECS:
-                            samples = None
-                    except mp4mini.Mp4Error:
-                        samples = None      # non-MJPEG codec → fake path
-                if dur is None:
-                    _fmt, _w, _h, dur = _decode_fake(payload)
-                n = int(min(max_frames, max(1, dur // every_ms)))
-                for i in range(n):
-                    ts = i * every_ms
-                    if samples:
-                        # last sample at-or-before the schedule point
-                        cand = [s for s in samples if s[2] <= ts]
-                        off, sz, _sts = (cand[-1] if cand else samples[0])
-                        jpg = payload[off:off + sz]
-                        try:
-                            w, h, _c, pix = jpegmini.decode_jpeg(jpg)
-                            emit(out, mid, i, ts,
-                                 hashlib.sha256(pix).hexdigest()[:16],
-                                 w, h, "mjpeg")
-                        except Exception:
-                            emit(out, mid, i, ts,
-                                 hashlib.sha256(jpg).hexdigest()[:16],
-                                 0, 0, "error")
-                        continue
-                    emit(out, mid, i, ts,
-                         hashlib.sha256(
-                             payload + i.to_bytes(4, "big")).hexdigest()[:16],
-                         0, 0, "fake")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=FRAME_DDL)
-
-
-def embed_media(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """binary → array<float> pseudo-embedding (deterministic from bytes).
-
-    Stands in for a real vision encoder; feeds the similarity-search
-    operators (``operators/similarity.py``) so the media-dedup path
-    (decode → embed → cosine near-dup) is exercised end-to-end.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for payload in pdf[content_col]:  # column-zip, not iterrows()
-                payload = bytes(payload) if payload is not None else b""
-                h = hashlib.sha256(payload).digest()
-                ids.append(hashlib.sha256(payload).hexdigest())
-                vecs.append([((h[i] / 255.0) * 2 - 1) for i in range(EMBED_DIM)])
-            yield pd.DataFrame({"media_id": ids, "embedding": vecs})
-
-    return df.mapInPandas(run, schema="media_id string, embedding array<float>")
-
-
 # ---------------------------------------------------------------------------
 # perceptual media near-dup (dHash + Hamming banding)
 # ---------------------------------------------------------------------------
@@ -804,8 +296,8 @@ def video_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
     The video leg of media near-dup: every MJPEG sample is a standalone
     JPEG, so each frame rides the same real decode + ``imghash.dhash64``
     kernel as still images.  Fan-out happens inside the Arrow batch
-    (the ``frame_sample`` shape) — a long video never becomes a driver
-    loop, and video bytes never shuffle.  Non-MJPEG or undecodable
+    (the ``pdf_images`` page fan-out shape) — a long video never becomes
+    a driver loop, and video bytes never shuffle.  Non-MJPEG or undecodable
     payloads become a single error row."""
     from ..functions import imghash, jpegmini, mp4mini
 

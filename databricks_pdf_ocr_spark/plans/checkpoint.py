@@ -31,6 +31,10 @@ from ..sources.tables import TableIO
 
 CHECKPOINT_TABLE = "extraction_checkpoint"
 
+#: the per-bucket metric fields of a lineage row (CHECKPOINT_SCHEMA)
+_MARK_METRICS = ("docs_done", "spans_in", "pages_parsed", "ocr_fallbacks",
+                 "span_count", "failed_spans", "duration_ms")
+
 
 def new_run_id() -> str:
     return "run-" + secrets.token_hex(8)
@@ -165,27 +169,17 @@ class CheckpointManager:
 
     def mark_from_results(self, results: DataFrame, run_id: str,
                           input_fingerprint: str,
-                          duration_ms: int | None = None,
                           run_seq: int | None = None) -> list[dict]:
-        """Aggregate per-bucket metrics from a results DataFrame, append
-        one 'done' lineage row per bucket, and return the appended rows.
-
-        ``duration_ms`` per bucket is the kernel time of its rows (the
-        sum of the results' per-span ``duration_ms``); the argument is
-        recorded instead only for results that carry no such column.
+        """Aggregate per-bucket metrics from a results DataFrame (which
+        carries the ``bucket`` and per-span ``duration_ms`` columns),
+        append one 'done' lineage row per bucket, and return the appended
+        rows.  A bucket's ``duration_ms`` is the kernel time of its rows.
 
         The aggregate runs distributed (map-side partial agg → tiny
         shuffle); the ≤ n_buckets result rows are CONTROL-PLANE data, so
         they're collected and appended driver-side (``io.append_rows``) —
         a Spark parquet write job costs ~1-2 s of fixed committer overhead
         even for 64 rows, pure tax on the job's critical path."""
-        if run_seq is None:
-            run_seq = self.next_run_seq()
-        if "bucket" not in results.columns:
-            results = results.withColumn("bucket",
-                                         bucket_col(self.cfg.n_buckets))
-        kernel_ms = (F.sum("duration_ms") if "duration_ms" in results.columns
-                     else F.lit(duration_ms or 0))
         metrics = (
             results
             .groupBy("bucket")
@@ -203,29 +197,12 @@ class CheckpointManager:
                 F.sum(F.col("ocr_fallback").cast("long")).alias("ocr_fallbacks"),
                 F.sum((F.col("status") == "success").cast("long")).alias("span_count"),
                 F.sum((F.col("status") == "failed").cast("long")).alias("failed_spans"),
-                kernel_ms.cast("long").alias("duration_ms"),
+                F.sum("duration_ms").cast("long").alias("duration_ms"),
             )
         )
-        from datetime import datetime, timezone
-        now = datetime.now(timezone.utc)
-        rows = [{
-            "run_id": run_id,
-            "run_seq": int(run_seq),
-            "input_fingerprint": input_fingerprint,
-            "bucket": int(r["bucket"]),
-            "status": "done",
-            "docs_done": int(r["docs_done"] or 0),
-            "spans_in": int(r["spans_in"] or 0),
-            "pages_parsed": int(r["pages_parsed"] or 0),
-            "ocr_fallbacks": int(r["ocr_fallbacks"] or 0),
-            "span_count": int(r["span_count"] or 0),
-            "failed_spans": int(r["failed_spans"] or 0),
-            "duration_ms": int(r["duration_ms"] or 0),
-            "config_json": self.cfg.to_json(),
-            "updated_at": now,
-        } for r in metrics.collect()]   # ≤ n_buckets control-plane rows
-        self.io.append_rows(rows, CHECKPOINT_TABLE, CHECKPOINT_SCHEMA)
-        return rows
+        return self._append_marks(
+            [r.asDict() for r in metrics.collect()],  # ≤ n_buckets rows
+            run_id, input_fingerprint, run_seq)
 
     def mark_buckets(self, bucket_metrics: list[dict], run_id: str,
                      input_fingerprint: str, duration_ms: int,
@@ -233,25 +210,33 @@ class CheckpointManager:
         """Append 'done' lineage rows from driver-computed per-bucket
         metric dicts (``{"bucket": int, ...CHECKPOINT metric fields}``,
         missing metrics default 0) — for stages whose metrics don't come
-        results-shaped, e.g. the media-payloads stage.  Same write-then-
-        mark contract: callers commit the stage's data FIRST."""
-        if not bucket_metrics:
-            return
+        results-shaped, e.g. the media-payloads stage.  Every row records
+        the stage's ``duration_ms``.  Same write-then-mark contract:
+        callers commit the stage's data FIRST."""
+        if bucket_metrics:
+            self._append_marks(
+                [{**m, "duration_ms": duration_ms} for m in bucket_metrics],
+                run_id, input_fingerprint, run_seq)
+
+    def _append_marks(self, bucket_metrics: list[dict], run_id: str,
+                      input_fingerprint: str,
+                      run_seq: int | None) -> list[dict]:
+        """The one place lineage rows are built: one 'done' row per
+        per-bucket metric dict, appended driver-side and returned."""
+        from datetime import datetime, timezone
+
         if run_seq is None:
             run_seq = self.next_run_seq()
-        from datetime import datetime, timezone
         now = datetime.now(timezone.utc)
-        zero = ("docs_done", "spans_in", "pages_parsed", "ocr_fallbacks",
-                "span_count", "failed_spans")
         rows = [{
             "run_id": run_id,
             "run_seq": int(run_seq),
             "input_fingerprint": input_fingerprint,
             "bucket": int(m["bucket"]),
             "status": "done",
-            **{k: int(m.get(k, 0) or 0) for k in zero},
-            "duration_ms": int(duration_ms),
+            **{k: int(m.get(k) or 0) for k in _MARK_METRICS},
             "config_json": self.cfg.to_json(),
             "updated_at": now,
         } for m in bucket_metrics]
         self.io.append_rows(rows, CHECKPOINT_TABLE, CHECKPOINT_SCHEMA)
+        return rows

@@ -67,13 +67,3 @@ def results_as_of(results: DataFrame, run_seq: int) -> DataFrame:
     the same latest-wins window as the current-state read — no second
     code path to trust."""
     return latest_results(results.filter(F.col("run_seq") <= run_seq))
-
-
-def latest_run_config(checkpoint: DataFrame) -> DataFrame:
-    """Newest config blob per input fingerprint (reference: the
-    'configuration' JSON column, ``managers/state.py:36``)."""
-    return latest_per_key(
-        checkpoint.select("input_fingerprint", "run_id", "config_json",
-                          "updated_at"),
-        ["input_fingerprint"],
-        [F.desc("updated_at"), F.desc("run_id")])

@@ -35,24 +35,7 @@ DOCUMENTS_SCHEMA = T.StructType([
 ])
 
 # ---------------------------------------------------------------------------
-# 2. Output: assembled extracted documents (golden contract — FIXTURES.md §2)
-#    span-sequence equality on (kind, text, media_ref, order)
-# ---------------------------------------------------------------------------
-
-OUT_SPAN_STRUCT = T.StructType([
-    T.StructField("kind", T.StringType(), False),       # 'text'|'media'
-    T.StructField("text", T.StringType(), True),
-    T.StructField("media_ref", T.StringType(), True),
-    T.StructField("offset", T.IntegerType(), False),    # dense output order
-])
-
-EXTRACTED_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT, containsNull=False), False),
-])
-
-# ---------------------------------------------------------------------------
-# 3. Flat per-span results (reference: pdf_ocr_results, schemas.py:30-46)
+# 2. Flat per-span results (reference: pdf_ocr_results, schemas.py:30-46)
 # ---------------------------------------------------------------------------
 
 RESULTS_SCHEMA = T.StructType([
@@ -102,7 +85,7 @@ RESULTS_DDL = (
 )
 
 # ---------------------------------------------------------------------------
-# 4. Checkpoint / lineage (reference: pdf_processing_state, schemas.py:49-63,
+# 3. Checkpoint / lineage (reference: pdf_processing_state, schemas.py:49-63,
 #    upgraded to per-partition granularity per the north rule)
 # ---------------------------------------------------------------------------
 
@@ -121,22 +104,4 @@ CHECKPOINT_SCHEMA = T.StructType([
     T.StructField("duration_ms", T.LongType(), False),
     T.StructField("config_json", T.StringType(), False),        # ref: state.py:36
     T.StructField("updated_at", T.TimestampType(), False),
-])
-
-# ---------------------------------------------------------------------------
-# 5. Ingestion source table (reference: pdf_source, schemas.py:15-27) —
-#    produced by the streaming binary-file ingest (streaming/ingest.py).
-#    Note: the reference's DDL/stream had content_hash while its StructType
-#    did not (schema drift, SURVEY.md §1.1.2) — we declare it once, here.
-# ---------------------------------------------------------------------------
-
-SOURCE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.StringType(), False),        # sha2(path, 256)
-    T.StructField("file_path", T.StringType(), False),
-    T.StructField("file_name", T.StringType(), False),
-    T.StructField("file_size", T.LongType(), False),
-    T.StructField("file_content", T.BinaryType(), True),
-    T.StructField("content_hash", T.StringType(), True),    # sha2(bytes, 256)
-    T.StructField("modification_time", T.TimestampType(), True),
-    T.StructField("ingestion_timestamp", T.TimestampType(), False),
 ])

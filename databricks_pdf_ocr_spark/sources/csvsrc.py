@@ -29,9 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-#: carried on error rows so a run can be audited line-for-line
-ERROR_KINDS = ("unparseable", "malformed")
-
 _CORRUPT = "__corrupt"
 
 #: sink/source dialect — quote everything, double embedded quotes, so

@@ -1,28 +1,15 @@
-"""Image-file ingestion sources.
+"""Image-file ingestion via the JVM image source.
 
-Two Spark-native paths for getting image corpora into the pipeline
-(reference analogue: the volume PDF/image listing in
-``processors/ocr.py:27-40``, generalized to images):
+:func:`read_image_files` wraps ``spark.read.format("image")``: the JVM
+decodes (ImageIO: JPEG/PNG/BMP/GIF/WBMP) into a typed struct
+``image(origin, height, width, nChannels, mode, data)`` with pixels in
+channel-interleaved **BGR(A)** row-major order.  It is the ground-truth
+oracle for the hermetic pure-Python codecs: ``tests/test_jpeg_codec.py``
+compares ``functions/jpegmini.py`` against it pixel-for-pixel.
+(Reference analogue: the volume PDF/image listing in
+``processors/ocr.py:27-40``, generalized to images.)
 
-- :func:`read_image_files` — ``spark.read.format("image")``: the JVM
-  decodes (ImageIO: JPEG/PNG/BMP/GIF/WBMP) into a typed struct
-  ``image(origin, height, width, nChannels, mode, data)`` with pixels in
-  channel-interleaved **BGR(A)** row-major order.  Use when downstream
-  wants pixels immediately and the JVM codec set suffices.  This is also
-  the ground-truth oracle for the hermetic pure-Python codecs
-  (``tests/test_jpeg_codec.py`` compares ``functions/jpegmini.py``
-  against it pixel-for-pixel).
-
-- :func:`read_binary_images` — ``spark.read.format("binaryFile")``:
-  opaque bytes + metadata, decode deferred to the engine's own
-  Arrow-batched codec operators (``operators/multimodal.py``).  This is
-  the 100 TB default: the scan stays pure I/O, decode parallelizes as a
-  narrow mapInPandas, and undecodable payloads become error rows instead
-  of failed tasks (``dropInvalid`` on the image source silently DROPS
-  corrupt files — an auditability no-go for a data-curation pipeline).
-
-Both are plain file sources: partition-parallel listing and reads,
-predicate/column pruning on the metadata columns, and
+A plain file source: partition-parallel listing and reads, and
 ``pathGlobFilter``/``recursiveFileLookup`` pushdown for directory trees.
 """
 
@@ -50,20 +37,3 @@ def read_image_files(spark: SparkSession, path: str,
         r = r.option("pathGlobFilter", glob)
     df = r.load(path)
     return df.select(*[df["image"][f].alias(f) for f in IMAGE_STRUCT_FIELDS])
-
-
-def read_binary_images(spark: SparkSession, path: str,
-                       recursive: bool = True,
-                       glob: str = "*.{jpg,jpeg,png,gif,bmp,webp}",
-                       max_bytes: int | None = None) -> DataFrame:
-    """Opaque bytes for the engine-side codecs: (path, modificationTime,
-    length, content).  ``max_bytes`` pre-filters oversized payloads at
-    the scan (pushed predicate on the ``length`` metadata column — the
-    file is never read), keeping Arrow batches bounded."""
-    df = (spark.read.format("binaryFile")
-          .option("pathGlobFilter", glob)
-          .option("recursiveFileLookup", str(recursive).lower())
-          .load(path))
-    if max_bytes is not None:
-        df = df.filter(df["length"] <= max_bytes)
-    return df

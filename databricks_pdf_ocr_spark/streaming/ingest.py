@@ -142,14 +142,6 @@ def ingest_warc_available(spark: SparkSession, landing_dir: str,
     q.awaitTermination()
 
 
-def documents_stream(spark: SparkSession, input_dir: str,
-                     schema) -> DataFrame:
-    """Streaming scan of an interleaved-documents parquet directory — lets
-    the extraction stages run under Structured Streaming (micro-batch per
-    file group) when the input arrives incrementally."""
-    return spark.readStream.schema(schema).parquet(input_dir)
-
-
 def start_lines_ingestion_stream(spark: SparkSession, landing_dir: str,
                                  target_dir: str, checkpoint_dir: str,
                                  glob: str,

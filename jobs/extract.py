@@ -40,7 +40,7 @@ from databricks_pdf_ocr_spark.config import ExtractConfig, load_config
 from databricks_pdf_ocr_spark.operators.extract import (
     bucket_col, explode_spans, extract_spans, reassemble,
 )
-from databricks_pdf_ocr_spark.operators.incremental import cap_to_buckets
+from databricks_pdf_ocr_spark.operators.incremental import select_work
 from databricks_pdf_ocr_spark.plans.checkpoint import (
     CheckpointManager, new_run_id,
 )
@@ -134,7 +134,7 @@ def gc_media_orphans(io) -> dict:
 
 
 def run_media_stage(io, cp, documents, fingerprint: str, cfg,
-                    mode: str, doc_ids=(), run_seq: int | None = None,
+                    run_seq: int | None = None,
                     fail_after_buckets: int | None = None
                     ) -> tuple[dict, list[int]]:
     """Materialize the bucket-partitioned ``media_payloads`` table: every
@@ -144,7 +144,10 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
     through ``pdf_to_images``, processors/ocr.py:100).
 
     Resumable via the same checkpoint lineage under its OWN fingerprint
-    (``<input>#media``): write payloads → mark buckets; a crash between
+    (``<input>#media``), with the extraction's work selection
+    (``select_work``: mode, crash simulator, ``--max-docs`` bucket cap,
+    so a fresh capped run covers the same buckets as the extraction):
+    write payloads → mark buckets; a crash between
     the two re-extracts the bucket and the byte-identical rows (refs are
     payload hashes) dedup on read (``multimodal.dedup_payloads``).
     Returns the stage's stats and the buckets it marked."""
@@ -152,17 +155,7 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
 
     fp = fingerprint + "#media"
     t0 = time.time()
-    if mode == "reprocess_all":
-        pending = documents.withColumn("bucket", bucket_col(cfg.n_buckets))
-    elif mode == "reprocess_specific":
-        pending = (documents.filter(F.col("doc_id").isin(list(doc_ids)))
-                   .withColumn("bucket", bucket_col(cfg.n_buckets)))
-    else:
-        pending = cp.filter_pending(documents, fp)
-    if fail_after_buckets is not None:
-        keep = (pending.select("bucket").distinct()
-                .orderBy("bucket").limit(fail_after_buckets))
-        pending = pending.join(F.broadcast(keep), "bucket", "left_semi")
+    pending = select_work(documents, cp, fp, cfg, fail_after_buckets)
 
     # per-bucket doc/span counts BEFORE the fan-out (1 row per doc)
     doc_rows = (pending.groupBy("bucket").agg(
@@ -313,24 +306,11 @@ def run_job(spark, args) -> tuple[dict, int]:
     documents, fingerprint = load_input(spark, args.input, cfg)
 
     # --- work selection (reference modes: processors/ocr.py:59-85) --------
-    if args.mode == "reprocess_all":
-        pending = documents.withColumn("bucket", bucket_col(cfg.n_buckets))
-    elif args.mode == "reprocess_specific":
-        pending = (documents
-                   .filter(F.col("doc_id").isin(list(cfg.specific_doc_ids)))
-                   .withColumn("bucket", bucket_col(cfg.n_buckets)))
-    else:
-        pending = cp.filter_pending(documents, fingerprint)
-
-    if args.fail_after_buckets is not None:
-        keep = (pending.select("bucket").distinct()
-                .orderBy("bucket").limit(args.fail_after_buckets))
-        pending = pending.join(F.broadcast(keep), "bucket", "left_semi")
-    if args.max_docs:
-        # cap at BUCKET granularity — the lineage/resume unit.  A plain
-        # .limit() truncates inside buckets that then get marked done,
-        # permanently dropping the cut docs from every future run.
-        pending = cap_to_buckets(pending, args.max_docs)
+    # --max-docs caps at BUCKET granularity — the lineage/resume unit.  A
+    # plain .limit() truncates inside buckets that then get marked done,
+    # permanently dropping the cut docs from every future run.
+    pending = select_work(documents, cp, fingerprint, cfg,
+                          args.fail_after_buckets)
 
     run_id = new_run_id()
     # monotonic run ordinal from the checkpoint log: the latest-wins
@@ -371,8 +351,8 @@ def run_job(spark, args) -> tuple[dict, int]:
     # exact — other work sets sharing a bucket no longer inflate
     # docs_done/pages_parsed (and replayed duplicates can't occur within
     # one run, so no dedup pass is needed).
-    if args.mode == "reprocess_all" and args.fail_after_buckets is None \
-            and not args.max_docs:
+    if cfg.processing_mode == "reprocess_all" \
+            and args.fail_after_buckets is None and not cfg.max_docs_per_run:
         # every bucket is pending by construction — skip the input re-scan
         pend_list = list(range(cfg.n_buckets))
     else:
@@ -415,8 +395,7 @@ def run_job(spark, args) -> tuple[dict, int]:
     if args.media_payloads:
         # the media stage's run is the next one in the lineage log
         media_stats, media_marked = run_media_stage(
-            io, cp, documents, fingerprint, cfg, args.mode,
-            doc_ids=cfg.specific_doc_ids,
+            io, cp, documents, fingerprint, cfg,
             run_seq=run_seq + 1 if marks else run_seq,
             fail_after_buckets=args.fail_after_buckets)
         stats.update(media_stats)

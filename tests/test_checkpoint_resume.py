@@ -37,7 +37,7 @@ def _process(io, cp, pending, tag):
     pend_buckets = pending.select("bucket").distinct()
     written = (io.read("extraction_results")
                .join(F.broadcast(pend_buckets), "bucket", "left_semi"))
-    cp.mark_from_results(dedup_results(written), new_run_id(), FP, 1)
+    cp.mark_from_results(dedup_results(written), new_run_id(), FP)
 
 
 def test_kill_and_resume_equals_single_run(env):
@@ -114,7 +114,7 @@ def test_next_run_seq_is_monotonic(env):
     assert cp.next_run_seq() == 2
     # a second mark (different fingerprint) advances it again
     results = io.read("extraction_results")
-    cp.mark_from_results(dedup_results(results), new_run_id(), FP + "-b", 1)
+    cp.mark_from_results(dedup_results(results), new_run_id(), FP + "-b")
     assert cp.next_run_seq() == 3
 
 
@@ -154,8 +154,8 @@ def test_compaction_preserves_resume_and_bounds_rows(env, tmp_tables):
     # two full runs + a second fingerprint → runs x buckets rows
     _process(io, cp, cp.filter_pending(df, FP), "r1")
     results = io.read("extraction_results")
-    cp.mark_from_results(dedup_results(results), new_run_id(), FP, 1)
-    cp.mark_from_results(dedup_results(results), new_run_id(), FP + "-b", 1)
+    cp.mark_from_results(dedup_results(results), new_run_id(), FP)
+    cp.mark_from_results(dedup_results(results), new_run_id(), FP + "-b")
 
     before_seq = cp.next_run_seq()
     before_done = {r["bucket"] for r in cp.done_buckets(FP).collect()}

@@ -1,5 +1,5 @@
 """GIF codec: real-file ground truth, LZW + container round-trips,
-disposal compositing, operator wiring.
+disposal compositing.
 
 Ground truth: ``tests/data/python.gif`` / ``python.ppm`` / ``python.png``
 are the CPython test-suite's 16x16 logo (Lib/test/imghdrdata, PSF
@@ -9,7 +9,6 @@ the GIF writer's 256-color palette quantization; the transparency
 pattern must match the PNG's alpha channel exactly (binary in GIF).
 """
 
-import hashlib
 import random
 import re
 import struct
@@ -71,10 +70,10 @@ def test_real_gif_matches_ppm_and_png_alpha():
 
 
 def test_real_gif_meta():
-    m = gifmini.gif_meta((DATA / "python.gif").read_bytes())
-    assert m == {"width": 16, "height": 16, "frame_count": 1,
-                 "duration_ms": 0, "animated": False, "loop_count": None,
-                 "version": "89a"}
+    g = gifmini.parse_gif((DATA / "python.gif").read_bytes())
+    assert (g["width"], g["height"], g["version"], g["loop_count"]) == \
+        (16, 16, "89a", None)
+    assert [f["delay_ms"] for f in g["frames"]] == [0]
 
 
 # ---------------------------------------------------------------------------
@@ -119,8 +118,7 @@ def test_roundtrip_still(kw):
     img = _rand_rgba(21, 13, ncolors=9)
     gif = gifmini.encode_gif([(img, 0)], 21, 13, **kw)
     assert gifmini.decode_gif(gif) == (21, 13, 4, img)
-    m = gifmini.gif_meta(gif)
-    assert (m["frame_count"], m["animated"]) == (1, False)
+    assert len(gifmini.parse_gif(gif)["frames"]) == 1
 
 
 @pytest.mark.parametrize("ncolors", [2, 3, 16, 200])
@@ -141,10 +139,9 @@ def test_roundtrip_animation_frames_and_meta():
     frames = [(_rand_rgba(9, 7, ncolors=4, seed=s), 40 * (s + 1))
               for s in range(5)]
     gif = gifmini.encode_gif(frames, 9, 7, loop=0)
-    m = gifmini.gif_meta(gif)
-    assert (m["frame_count"], m["animated"]) == (5, True)
-    assert m["duration_ms"] == sum(d for _, d in frames)
-    assert m["loop_count"] == 0
+    g = gifmini.parse_gif(gif)
+    assert [f["delay_ms"] for f in g["frames"]] == [d for _, d in frames]
+    assert g["loop_count"] == 0
     got = list(gifmini.gif_frames(gif))
     assert [g[2] for g in got] == [f[0] for f in frames]
     assert [g[0] for g in got] == [0, 40, 120, 240, 400]   # cumulative ts
@@ -234,12 +231,14 @@ def test_error_contract():
         gifmini.decode_gif(bytes(bad))
 
 
-# ---------------------------------------------------------------------------
-# operator wiring
-# ---------------------------------------------------------------------------
-
 def test_decode_media_gif(spark):
-    from databricks_pdf_ocr_spark.operators.multimodal import decode_media
+    """The live GIF decode route (``media_phash``): a real and an
+    animated GIF are hashed from their first composited frame; a
+    truncated GIF becomes an error row."""
+    import hashlib
+
+    from databricks_pdf_ocr_spark.functions import imghash
+    from databricks_pdf_ocr_spark.operators import multimodal
 
     real = (DATA / "python.gif").read_bytes()
     anim = gifmini.encode_gif(
@@ -247,43 +246,11 @@ def test_decode_media_gif(spark):
     corrupt = real[:40]
     df = spark.createDataFrame([(real,), (anim,), (corrupt,)],
                                "content binary")
-    rows = {r["byte_size"]: r for r in decode_media(df).collect()}
-    r = rows[len(real)]
-    assert r["decode_ok"] and r["format"] == "gif"
-    assert (r["width"], r["height"], r["duration_ms"]) == (16, 16, 0)
-    a = rows[len(anim)]
-    assert a["decode_ok"] and a["duration_ms"] == 2000
-    c = rows[len(corrupt)]
-    assert not c["decode_ok"] and c["format"] == "gif"
-
-
-def test_resize_media_transcodes_gif(spark):
-    from databricks_pdf_ocr_spark.operators.multimodal import resize_media
-
-    w, h = 44, 20
-    img = _rand_rgba(w, h, ncolors=7)
-    gif = gifmini.encode_gif([(img, 0)], w, h)
-    df = spark.createDataFrame([(gif,)], "content binary")
-    r = resize_media(df, max_edge=22).collect()[0]
-    assert r["resize_ok"] and r["format"] == "gif"
-    assert (r["target_width"], r["target_height"]) == (22, 10)
-    tw, th, ch, px = pngmini.decode_png(bytes(r["resized"]))
-    assert (tw, th, ch) == (22, 10, 4)
-    assert px == pngmini.resize_box(img, w, h, 4, 22, 10)
-
-
-def test_frame_sample_real_gif_frames(spark):
-    from databricks_pdf_ocr_spark.operators.multimodal import frame_sample
-
-    frames = [(_rand_rgba(5, 4, 3, seed=s), 1000) for s in range(4)]
-    anim = gifmini.encode_gif(frames, 5, 4)
-    df = spark.createDataFrame([(anim,)], "content binary")
-    rows = sorted(frame_sample(df, every_ms=1000, max_frames=8).collect(),
-                  key=lambda r: r["frame_idx"])
-    assert len(rows) == 4                       # 4000ms / 1000ms
-    assert all(r["source"] == "gif" for r in rows)
-    assert [(r["width"], r["height"]) for r in rows] == [(5, 4)] * 4
-    # frame at schedule ts == the composited canvas of that animation step
-    expected = [hashlib.sha256(rgba).hexdigest()[:16]
-                for ts, _d, rgba in gifmini.gif_frames(anim)]
-    assert [r["frame_sha"] for r in rows] == expected
+    rows = {r["media_id"]: r for r in multimodal.media_phash(df).collect()}
+    for payload in (real, anim):
+        r = rows[hashlib.sha256(payload).hexdigest()]
+        w, h, ch, pix = gifmini.decode_gif(payload)
+        assert (r["format"], r["hash_ok"]) == ("gif", True)
+        assert r["phash"] == imghash.dhash64(pix, w, h, ch)
+    c = rows[hashlib.sha256(corrupt).hexdigest()]
+    assert c["hash_ok"] is False and c["error_message"]

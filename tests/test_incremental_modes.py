@@ -1,18 +1,29 @@
 """Work-selection modes (reference get_unprocessed_files,
-processors/ocr.py:59-85) + latest-wins views."""
+processors/ocr.py:59-85) through ``select_work``, the job's one
+work-selection path, + latest-wins views."""
 
+from collections import Counter
 from dataclasses import replace
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_pdf_ocr_spark import fixtures
 from databricks_pdf_ocr_spark.config import TEST_CONFIG
-from databricks_pdf_ocr_spark.operators.extract import run_extraction
-from databricks_pdf_ocr_spark.operators.incremental import unprocessed
+from databricks_pdf_ocr_spark.operators.extract import (
+    bucket_col, run_extraction,
+)
+from databricks_pdf_ocr_spark.operators.incremental import select_work
+from databricks_pdf_ocr_spark.plans.checkpoint import (
+    CheckpointManager, new_run_id,
+)
 from databricks_pdf_ocr_spark.plans.state_views import (
     latest_per_key, latest_results,
 )
 from databricks_pdf_ocr_spark.schemas import DOCUMENTS_SCHEMA
+from databricks_pdf_ocr_spark.sources.tables import TableIO
+
+FP = "test-fingerprint"
 
 
 def _docs(spark, n=20, seed=5):
@@ -20,33 +31,63 @@ def _docs(spark, n=20, seed=5):
     return rows, spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
 
 
-def test_incremental_anti_join(spark):
+def _buckets(df):
+    return {r["doc_id"]: r["bucket"] for r in
+            df.select("doc_id", bucket_col(TEST_CONFIG.n_buckets)
+                      .alias("bucket")).collect()}
+
+
+@pytest.fixture()
+def cp(spark, tmp_tables):
+    return CheckpointManager(TableIO(spark, tmp_tables), TEST_CONFIG)
+
+
+def test_incremental_anti_join(spark, cp):
+    """Incremental mode skips every doc in a bucket already marked done
+    for the same fingerprint — and only for that fingerprint."""
     rows, df = _docs(spark)
-    done_ids = [r[0] for r in rows[:8]]
-    results = spark.createDataFrame([(d,) for d in done_ids], "doc_id string")
+    bucket_of = _buckets(df)
+    done = sorted(set(bucket_of.values()))[:3]
+    cp.mark_buckets([{"bucket": b} for b in done], new_run_id(), FP, 0)
     cfg = replace(TEST_CONFIG, processing_mode="incremental")
-    pending = unprocessed(df, results, cfg)
+    pending = select_work(df, cp, FP, cfg)
     got = {r["doc_id"] for r in pending.select("doc_id").collect()}
-    assert got == {r[0] for r in rows[8:]}
+    assert got == {d for d, b in bucket_of.items() if b not in done}
+    assert select_work(df, cp, FP + "#other", cfg).count() == len(rows)
 
 
-def test_reprocess_all_and_specific(spark):
+def test_reprocess_all_and_specific(spark, cp):
     rows, df = _docs(spark)
+    cp.mark_buckets([{"bucket": b} for b in range(TEST_CONFIG.n_buckets)],
+                    new_run_id(), FP, 0)   # marks never hide reprocess work
     cfg_all = replace(TEST_CONFIG, processing_mode="reprocess_all")
-    assert unprocessed(df, None, cfg_all).count() == len(rows)
+    assert select_work(df, cp, FP, cfg_all).count() == len(rows)
 
     want = tuple(r[0] for r in rows[3:6])
     cfg_spec = replace(TEST_CONFIG, processing_mode="reprocess_specific",
                        specific_doc_ids=want)
-    got = {r["doc_id"] for r in unprocessed(df, None, cfg_spec).collect()}
-    assert got == set(want)
+    got = select_work(df, cp, FP, cfg_spec).collect()
+    assert {r["doc_id"] for r in got} == set(want)
+    bucket_of = _buckets(df)
+    assert all(r["bucket"] == bucket_of[r["doc_id"]] for r in got)
 
 
-def test_max_docs_per_run_cap(spark):
+def test_max_docs_per_run_cap(spark, cp):
+    """The cap rounds UP to whole buckets, taken in bucket order."""
     rows, df = _docs(spark)
+    per_bucket = Counter(_buckets(df).values())
     cfg = replace(TEST_CONFIG, processing_mode="reprocess_all",
                   max_docs_per_run=5)
-    assert unprocessed(df, None, cfg).count() == 5
+    kept = Counter(r["bucket"] for r in
+                   select_work(df, cp, FP, cfg).select("bucket").collect())
+    want, total = {}, 0
+    for b in sorted(per_bucket):
+        if total >= 5:
+            break
+        want[b] = per_bucket[b]
+        total += per_bucket[b]
+    assert dict(kept) == want
+    assert 5 <= sum(kept.values()) < len(rows)
 
 
 def test_latest_wins_view(spark):

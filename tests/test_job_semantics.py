@@ -332,6 +332,36 @@ def test_media_payloads_crash_resume_and_joinback(spark, tmp_path, rows):
     assert refs and refs <= set(single)
 
 
+def test_media_stage_honours_max_docs(spark, tmp_path, rows):
+    """--max-docs bounds the media stage too: a capped run marks the same
+    whole buckets under ``<fp>`` and ``<fp>#media``, and an uncapped
+    rerun completes both lineages."""
+    from databricks_pdf_ocr_spark.plans.checkpoint import CHECKPOINT_TABLE
+
+    inp = _write_input(spark, tmp_path, rows, "in_media_cap")
+    tables = str(tmp_path / "t_media_cap")
+    fp = f"path:{inp}"
+
+    def marked():
+        cp = spark.read.parquet(f"{tables}/{CHECKPOINT_TABLE}")
+        return {f: {r["bucket"] for r in
+                    cp.filter(F.col("input_fingerprint") == f)
+                      .select("bucket").distinct().collect()}
+                for f in (fp, fp + "#media")}
+
+    stats, rc = _run(spark, inp, tables, "--max-docs", "10",
+                     "--media-payloads")
+    assert rc == 0
+    first = marked()
+    assert 0 < len(first[fp]) < 8                # genuinely capped
+    assert first[fp + "#media"] == first[fp]
+    assert stats["media_buckets"] == len(first[fp])
+
+    stats2, rc2 = _run(spark, inp, tables, "--media-payloads")
+    assert rc2 == 0
+    assert marked() == {fp: set(range(8)), fp + "#media": set(range(8))}
+
+
 def test_media_gc_drops_orphans_keeps_live_and_error_rows(spark, tmp_path, rows):
     """Re-ingesting changed content mints new content-addressed refs; GC
     must drop the superseded payloads, keep every latest-referenced one,

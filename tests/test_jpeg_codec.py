@@ -1,6 +1,6 @@
 """Baseline-JPEG codec: validated pixel-for-pixel against the JVM
-ImageIO ground truth (``spark.read.format("image")``), plus the
-multimodal operator wiring and the image file sources.
+ImageIO ground truth (``spark.read.format("image")``), plus the image
+file source.
 
 Ground-truth corpus: the Apache Spark distribution's own mllib test
 images (baseline SOF0 4:2:0 color JPEGs + progressive samples).  Tests
@@ -16,7 +16,6 @@ import pytest
 from databricks_pdf_ocr_spark.functions.jpegmini import (
     JPEG_SIG, JpegError, decode_jpeg,
 )
-from databricks_pdf_ocr_spark.operators import multimodal
 from databricks_pdf_ocr_spark.sources import images as image_sources
 
 SPARK_IMAGES = os.environ.get(
@@ -205,55 +204,39 @@ def test_malformed_rejected():
         decode_jpeg(JPEG_SIG + b"\xff\xd9")  # no frame/scan
 
 
+
 @needs_images
 def test_decode_media_and_resize_wiring(spark):
-    """Operator wiring: JPEG payloads ride the REAL decode path in
-    decode_media, and resize_media downsamples + transcodes to PNG."""
-    from databricks_pdf_ocr_spark.functions import pngmini
+    """Operator wiring: baseline JPEG payloads ride the real decode path
+    in ``media_phash`` (hash of the decoded pixels); a corrupt JPEG
+    becomes an error row, not a crash."""
+    import hashlib
+
+    from databricks_pdf_ocr_spark.functions import imghash
+    from databricks_pdf_ocr_spark.operators import multimodal
 
     samples = _baseline_jpegs()[:2]
-    rows = [(os.path.basename(p), open(p, "rb").read())
-            for p, _ in samples]
-    # corrupt payload: valid SOI, garbage after → error row, not a crash
-    rows.append(("corrupt.jpg", JPEG_SIG + b"\x00" * 32))
-    df = spark.createDataFrame(rows, "name string, content binary")
-
-    meta = {r["byte_size"]: r for r in multimodal.decode_media(df).collect()}
-    for (path, (w, h, _c, _pix)), (_, payload) in zip(samples, rows):
-        r = meta[len(payload)]
-        assert r["decode_ok"] and r["format"] == "jpeg"
-        assert (r["width"], r["height"]) == (w, h)
-    bad = meta[34]
-    assert bad["decode_ok"] is False and bad["format"] == "jpeg"
-
-    resized = multimodal.resize_media(df, max_edge=100).collect()
-    ok = [r for r in resized if r["resize_ok"]]
-    assert len(ok) == len(samples)
-    for r in ok:
-        assert r["format"] == "jpeg"
-        assert max(r["target_width"], r["target_height"]) <= 100
-        pw, ph, pc, _ = pngmini.decode_png(bytes(r["resized"]))
-        assert (pw, ph) == (r["target_width"], r["target_height"])
-    assert sum(not r["resize_ok"] for r in resized) == 1
-
+    payloads = [open(p, "rb").read() for p, _ in samples]
+    # corrupt payload: valid SOI, garbage after
+    corrupt = JPEG_SIG + b"\x00" * 32
+    df = spark.createDataFrame([(b,) for b in payloads + [corrupt]],
+                               "content binary")
+    rows = {r["media_id"]: r for r in multimodal.media_phash(df).collect()}
+    for (_path, (w, h, c, pix)), payload in zip(samples, payloads):
+        r = rows[hashlib.sha256(payload).hexdigest()]
+        assert (r["format"], r["hash_ok"]) == ("jpeg", True)
+        assert r["phash"] == imghash.dhash64(pix, w, h, c)
+    bad = rows[hashlib.sha256(corrupt).hexdigest()]
+    assert bad["hash_ok"] is False and bad["error_message"]
 
 @needs_images
 def test_image_file_sources(spark):
-    """File sources: JVM-decoded rows keep undecodables (height=-1);
-    binaryFile glob prefilters to image extensions."""
+    """The JVM image source keeps undecodables (height=-1) and flattens
+    the image struct."""
     px = image_sources.read_image_files(spark, SPARK_IMAGES)
     rows = px.collect()
     assert sum(r["height"] > 0 for r in rows) >= 4
     assert px.columns == list(image_sources.IMAGE_STRUCT_FIELDS)
-
-    raw = image_sources.read_binary_images(spark, SPARK_IMAGES).collect()
-    assert all(r["path"].rsplit(".", 1)[-1].lower()
-               in ("jpg", "jpeg", "png", "gif", "bmp", "webp") for r in raw)
-    assert all(bytes(r["content"])[:2] == JPEG_SIG for r in raw
-               if r["path"].endswith("jpg"))
-    capped = image_sources.read_binary_images(
-        spark, SPARK_IMAGES, max_bytes=30000).collect()
-    assert 0 < len(capped) < len(raw)
 
 
 @needs_images

@@ -1,126 +1,11 @@
-"""Multimodal column operators: Spark plumbing is real (schemas, batch
-shapes, fan-out, partitioning); the codec itself is a marked stub."""
+"""Perceptual media near-dup: dHash rows over the real image codecs and
+the Hamming-banded pair join."""
 
-import pytest
-from pyspark.sql import functions as F
+from pathlib import Path
 
 from databricks_pdf_ocr_spark.operators import multimodal
 
-
-@pytest.fixture(scope="module")
-def media_df(spark):
-    rows = [(f"m{i}", bytes([i]) * (100 + i * 37)) for i in range(20)]
-    return spark.createDataFrame(rows, "name string, content binary").repartition(4)
-
-
-def test_decode_media_schema_and_determinism(spark, media_df):
-    meta = multimodal.decode_media(media_df)
-    assert meta.columns == ["media_id", "kind", "byte_size", "format", "width",
-                            "height", "duration_ms", "decode_ok", "error_message"]
-    rows = meta.collect()
-    assert len(rows) == 20 and all(r["decode_ok"] for r in rows)
-    # deterministic across runs
-    again = {r["media_id"]: (r["format"], r["width"], r["height"])
-             for r in multimodal.decode_media(media_df).collect()}
-    assert {r["media_id"]: (r["format"], r["width"], r["height"])
-            for r in rows} == again
-    # empty payload → decode_ok False, pipeline continues
-    bad = spark.createDataFrame([("x", None)], "name string, content binary")
-    brow = multimodal.decode_media(bad).first()
-    assert brow["decode_ok"] is False and brow["error_message"]
-
-
-def test_real_decoder_is_a_loud_stub():
-    with pytest.raises(NotImplementedError):
-        multimodal._decode_image_real(b"xx")
-
-
-def test_resize_plan_geometry(spark, media_df):
-    meta = multimodal.decode_media(media_df)
-    plan = multimodal.resize_plan(meta, max_edge=1568)
-    for r in plan.collect():
-        assert max(r["target_width"], r["target_height"]) <= 1568 + 1
-        if r["needs_resize"]:
-            assert r["scale"] < 1.0
-        else:
-            assert (r["target_width"], r["target_height"]) == (r["width"], r["height"])
-
-
-def test_frame_sample_fanout(spark, media_df):
-    frames = multimodal.frame_sample(media_df, every_ms=1000, max_frames=8)
-    rows = frames.collect()
-    assert rows, "some media decode as video/audio with duration"
-    per = {}
-    for r in rows:
-        per.setdefault(r["media_id"], []).append(r)
-    for mid, fr in per.items():
-        idxs = sorted(f["frame_idx"] for f in fr)
-        assert idxs == list(range(len(fr))), "dense frame indices"
-        assert len(fr) <= 8
-        assert all(f["ts_ms"] == f["frame_idx"] * 1000 for f in fr)
-
-
-def test_embed_media_feeds_similarity(spark, media_df):
-    emb = multimodal.embed_media(media_df)
-    first = emb.first()
-    assert len(first["embedding"]) == multimodal.EMBED_DIM
-    # compose with the similarity operator (media near-dup path)
-    from databricks_pdf_ocr_spark.operators.similarity import brute_force_topk
-    e = emb.withColumnRenamed("media_id", "vec_id")
-    q = e.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
-    topk = brute_force_topk(e, q, k=3, id_col="vec_id")
-    got = topk.groupBy("query_id").count().collect()
-    assert all(r["count"] == 3 for r in got)
-
-
-# ---------------------------------------------------------------------------
-# WebP header metadata (round-4 verdict #6)
-# ---------------------------------------------------------------------------
-
-def test_webp_meta_all_variants():
-    import pytest as _pytest
-
-    from databricks_pdf_ocr_spark.functions import webpmini
-
-    for variant, w, h in (("lossy", 800, 600), ("lossless", 1023, 511),
-                          ("extended", 4000, 3000)):
-        data = webpmini.write_webp_header(variant, w, h)
-        assert webpmini.looks_like_webp(data)
-        m = webpmini.webp_meta(data)
-        assert (m["variant"], m["width"], m["height"]) == (variant, w, h)
-    with _pytest.raises(webpmini.WebpError, match="RIFF"):
-        webpmini.webp_meta(b"nope")
-    bad = webpmini.write_webp_header("lossy", 10, 10)
-    with _pytest.raises(webpmini.WebpError, match="key-frame"):
-        webpmini.webp_meta(bad.replace(b"\x9d\x01\x2a", b"\x00\x00\x00"))
-
-
-def test_decode_media_webp_metadata_row(spark):
-    """WebP payloads get a real metadata row (header dims) without the
-    cost of pixel decode; corrupt containers become error rows."""
-    from databricks_pdf_ocr_spark.functions import webpmini
-
-    data = webpmini.write_webp_header("lossy", 640, 480)
-    df = spark.createDataFrame([("x.webp", data)],
-                               "name string, content binary")
-    r = multimodal.decode_media(df).collect()[0]
-    assert r["format"] == "webp" and r["decode_ok"]
-    assert (r["width"], r["height"]) == (640, 480)
-    # truncated header → error row, pipeline continues
-    df2 = spark.createDataFrame([("y.webp", data[:14])],
-                                "name string, content binary")
-    r2 = multimodal.decode_media(df2).collect()[0]
-    # 14 bytes fails the 16-byte RIFF/WEBP probe → falls to the fake
-    # decoder; a VALID container with a corrupt image chunk errors:
-    corrupt = data[:20] + b"\x00" * (len(data) - 20)
-    df3 = spark.createDataFrame([("z.webp", corrupt)],
-                                "name string, content binary")
-    r3 = multimodal.decode_media(df3).collect()[0]
-    assert r3["format"] == "webp" and not r3["decode_ok"]
-    # lossy VP8 pixel decode is REAL now (vp8mini); a header-only
-    # fixture with a zero-filled body parses as an all-default frame
-    # (VP8 streams carry no checksum) and yields its header dimensions
-    assert multimodal._decode_image_real(data) == ("webp", 640, 480)
+DATA = Path(__file__).parent / "data"
 
 
 # ---------------------------------------------------------------------------
@@ -128,18 +13,51 @@ def test_decode_media_webp_metadata_row(spark):
 # ---------------------------------------------------------------------------
 
 def test_media_phash_rows_and_error_contract(spark):
+    import hashlib
+
     from databricks_pdf_ocr_spark import fixtures
+    from databricks_pdf_ocr_spark.functions import jpegenc
 
     rows = list(fixtures.image_corpus_rows(7, n_base=2, variants=3))
-    rows.append(("broken", b"not an image at all"))
+    # the baseline-JPEG and lossy-WebP (VP8) decode routes
+    grad = bytes((x * 9 + y * 5 + c * 40) % 256
+                 for y in range(24) for x in range(32) for c in range(3))
+    jpeg = jpegenc.encode_jpeg(grad, 32, 24)
+    lossy = (DATA / "python.webp").read_bytes()
+    rows += [("grad.jpg", jpeg), ("python.webp", lossy),
+             ("broken", b"not an image at all")]
     df = spark.createDataFrame(rows, "name string, content binary")
     got = {r["media_id"]: r for r in multimodal.media_phash(df).collect()}
-    assert sum(1 for r in got.values() if r["hash_ok"]) == 6
+    assert sum(1 for r in got.values() if r["hash_ok"]) == 8
     bad = [r for r in got.values() if not r["hash_ok"]]
     assert len(bad) == 1 and bad[0]["error_message"]
     assert {r["format"] for r in got.values() if r["hash_ok"]} == \
-        {"png", "gif", "webp"}
+        {"png", "gif", "webp", "jpeg"}
+    for payload, fmt in ((jpeg, "jpeg"), (lossy, "webp")):
+        r = got[hashlib.sha256(payload).hexdigest()]
+        assert (r["format"], r["hash_ok"]) == (fmt, True)
 
+
+
+def test_decode_media_schema_and_determinism(spark):
+    """``media_phash`` keeps its row schema, gives the same rows on a
+    rerun over a repartitioned input, and turns a null payload into an
+    error row."""
+    from databricks_pdf_ocr_spark import fixtures
+
+    df = spark.createDataFrame(
+        list(fixtures.image_corpus_rows(3, n_base=4, variants=3)),
+        "name string, content binary").repartition(4)
+    hashes = multimodal.media_phash(df)
+    assert hashes.columns == ["media_id", "phash", "format", "hash_ok",
+                              "error_message"]
+    rows = hashes.collect()
+    assert len(rows) == 12 and all(r["hash_ok"] for r in rows)
+    again = multimodal.media_phash(df).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+    bad = spark.createDataFrame([("x", None)], "name string, content binary")
+    brow = multimodal.media_phash(bad).first()
+    assert brow["hash_ok"] is False and brow["error_message"]
 
 def test_phash_pairs_banding_equals_brute_force(spark):
     """The pigeonhole equi-join must find exactly the pairs a full

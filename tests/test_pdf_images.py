@@ -15,7 +15,7 @@ import pytest
 from databricks_pdf_ocr_spark.functions import pdfmini, pngmini
 from databricks_pdf_ocr_spark.functions.jpegmini import decode_jpeg
 from databricks_pdf_ocr_spark.operators.multimodal import (
-    pdf_images, resize_media,
+    media_phash, pdf_images,
 )
 
 KITTEN = ("/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
@@ -72,7 +72,7 @@ def test_page_images_stub_stays_loud():
 
 @pytest.mark.skipif(not os.path.exists(KITTEN),
                     reason="Spark-distribution test JPEG not present")
-def test_pdf_images_operator_composes_with_resize(spark):
+def test_pdf_images_operator_composes_with_phash(spark):
     jpeg = open(KITTEN, "rb").read()
     w, h = 16, 10
     samples = _gray_samples(w, h)
@@ -95,14 +95,7 @@ def test_pdf_images_operator_composes_with_resize(spark):
     assert rows[("d3", -1, -1)]["extract_ok"] is False
     assert len(rows) == 3  # d1 page 0 has no images
 
-    # extracted payloads feed the real resize/transcode path
-    resized = {r["width"]: r for r in resize_media(
-        pdf_images(df).filter("extract_ok"), max_edge=64).collect()}
-    jr = resized[199]
-    assert jr["resize_ok"] and jr["format"] == "jpeg"
-    assert max(jr["target_width"], jr["target_height"]) == 64
-    pw, ph, pc, _ = pngmini.decode_png(bytes(jr["resized"]))
-    assert (pw, ph, pc) == (jr["target_width"], jr["target_height"], 3)
-    pr = resized[w]
-    assert pr["resize_ok"] and pr["format"] == "png"
-    assert (pr["target_width"], pr["target_height"]) == (w, h)  # under cap
+    # extracted payloads feed the real decode + perceptual-hash path
+    hashed = media_phash(pdf_images(df).filter("extract_ok")).collect()
+    assert sorted(r["format"] for r in hashed) == ["jpeg", "png"]
+    assert all(r["hash_ok"] for r in hashed)

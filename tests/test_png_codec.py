@@ -1,13 +1,9 @@
-"""Pure-stdlib PNG codec (functions/pngmini.py) + the real-decode /
-real-resize multimodal path it unlocks."""
+"""Pure-stdlib PNG codec (functions/pngmini.py)."""
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
-
 from databricks_pdf_ocr_spark.functions import pngmini
-from databricks_pdf_ocr_spark.operators import multimodal
 
 
 def _pixels(rng, w, h, ch):
@@ -34,61 +30,27 @@ def test_png_decode_rejects_garbage():
         pngmini.decode_png(b"JFIF....")
 
 
-def test_resize_box_integer_downscale_is_area_mean():
-    # 4x4 gray image of 2x2 blocks with constant values → 2x2 block means
-    blocks = [[10, 200], [60, 130]]
-    pix = bytearray()
-    for y in range(4):
-        for x in range(4):
-            pix.append(blocks[y // 2][x // 2])
-    out = pngmini.resize_box(bytes(pix), 4, 4, 1, 2, 2)
-    assert list(out) == [10, 200, 60, 130]
-
-
 def test_decode_media_real_png_path(spark):
+    """The live PNG decode route (``media_phash``): a real PNG is hashed
+    from its decoded pixels; a corrupt PNG and a non-image blob become
+    error rows, not exceptions."""
+    import hashlib
+
+    from databricks_pdf_ocr_spark.functions import imghash
+    from databricks_pdf_ocr_spark.operators import multimodal
+
     rng = random.Random(3)
-    real_png = pngmini.encode_png(_pixels(rng, 20, 9, 3), 20, 9, 3)
-    # corrupt: zero out part of the IDAT and drop a byte (distinct length —
-    # rows below are keyed on byte_size)
+    pix = _pixels(rng, 20, 9, 3)
+    real_png = pngmini.encode_png(pix, 20, 9, 3)
+    # corrupt: zero out part of the IDAT and drop a byte
     corrupt = real_png[:40] + b"\x00" * 10 + real_png[51:]
     fake_blob = bytes(rng.getrandbits(8) for _ in range(64))
     df = spark.createDataFrame(
         [(real_png,), (corrupt,), (fake_blob,)], "content binary")
-    rows = {r["byte_size"]: r for r in multimodal.decode_media(df).collect()}
-    real = rows[len(real_png)]
-    assert (real["format"], real["width"], real["height"],
-            real["decode_ok"]) == ("png", 20, 9, True)
-    bad = rows[len(corrupt)]
-    assert bad["decode_ok"] is False and bad["error_message"]
-    # non-PNG payloads still take the deterministic fake path
-    assert rows[64]["decode_ok"] is True
-
-
-def test_resize_media_real_pixels(spark):
-    rng = random.Random(4)
-    big = pngmini.encode_png(_pixels(rng, 64, 32, 3), 64, 32, 3)
-    small = pngmini.encode_png(_pixels(rng, 8, 6, 1), 8, 6, 1)
-    blob = b"not-an-image"
-    df = spark.createDataFrame([(big,), (small,), (blob,)], "content binary")
-    out = {(r["width"], r["height"]): r
-           for r in multimodal.resize_media(df, max_edge=16).collect()}
-
-    r = out[(64, 32)]
-    assert r["resize_ok"] and (r["target_width"], r["target_height"]) == (16, 8)
-    w, h, ch, pix = pngmini.decode_png(bytes(r["resized"]))
-    assert (w, h, ch) == (16, 8, 3) and len(pix) == 16 * 8 * 3
-
-    r = out[(8, 6)]          # under max edge: passthrough geometry
-    assert r["resize_ok"] and (r["target_width"], r["target_height"]) == (8, 6)
-
-    r = out[(0, 0)]
-    assert not r["resize_ok"] and "codec" in r["error_message"]
-
-
-def test_resize_box_rejects_upscale():
-    # upscale would leave empty target buckets (NaN pixels) — must raise
-    pix = _pixels(random.Random(7), 4, 4, 3)
-    with pytest.raises(pngmini.PngError):
-        pngmini.resize_box(pix, 4, 4, 3, 8, 4)
-    with pytest.raises(pngmini.PngError):
-        pngmini.resize_box(pix, 4, 4, 3, 4, 8)
+    rows = {r["media_id"]: r for r in multimodal.media_phash(df).collect()}
+    real = rows[hashlib.sha256(real_png).hexdigest()]
+    assert (real["format"], real["hash_ok"]) == ("png", True)
+    assert real["phash"] == imghash.dhash64(pix, 20, 9, 3)
+    for payload in (corrupt, fake_blob):
+        bad = rows[hashlib.sha256(payload).hexdigest()]
+        assert bad["hash_ok"] is False and bad["error_message"]

@@ -99,7 +99,7 @@ def test_codec_parsers_never_hang_on_garbage(data):
     vp8_sig = b"\x20\x00\x00\x9d\x01\x2a\x10\x00\x10\x00"
     for fn, sig in ((jpegmini.decode_jpeg, b"\xff\xd8"),
                     (wavmini.decode_wav, b"RIFF"),
-                    (mp4mini.parse_mp4, b"\x00\x00\x00\x14ftyp"),
+                    (mp4mini.mjpeg_frames, b"\x00\x00\x00\x14ftyp"),
                     (vp8lmini.vp8l_decode, bytes([0x2F, 0x07, 0x10, 0x38,
                                                   0x00])),
                     (vp8mini.vp8_decode_yuv, vp8_sig),

@@ -1,7 +1,7 @@
 """TIFF codec: strip/LZW/PackBits/Deflate/predictor legs, hand-built
 spec vectors, byte-exact parity with JVM ImageIO both directions
-(TIFF is lossless — equality, not a rounding band), totality on
-garbage, and decode_media/resize_media routing."""
+(TIFF is lossless — equality, not a rounding band) and totality on
+garbage."""
 
 import random
 import struct
@@ -265,31 +265,3 @@ def test_we_write_imageio_decodes_rgba_raster(spark):
                 got.append(r.getSample(x, y, b))
     assert bytes(got) == pix
 
-
-# ---------------------------------------------------------------------------
-# Routing (decode_media / resize_media)
-# ---------------------------------------------------------------------------
-
-def test_decode_media_and_resize_route_tiff(spark):
-    from databricks_pdf_ocr_spark.operators.multimodal import (
-        decode_media, resize_media)
-    pix = _rand_pix(10, 6, 3, seed=6)
-    good = encode_tiff(pix, 10, 6, 3, "packbits")
-    corrupt = good[:40]                             # valid magic, dies inside
-    df = spark.createDataFrame([(good,), (corrupt,)], "content binary")
-    rows = {r["byte_size"]: r for r in decode_media(df).collect()}
-    ok = rows[len(good)]
-    assert (ok["format"], ok["width"], ok["height"], ok["decode_ok"]) == \
-        ("tiff", 10, 6, True)
-    bad = rows[len(corrupt)]
-    assert bad["format"] == "tiff" and not bad["decode_ok"]
-    assert bad["error_message"]
-
-    rz = {r["resize_ok"]: r for r in resize_media(df, max_edge=4).collect()}
-    good_r = rz[True]
-    assert good_r["format"] == "tiff"
-    assert (good_r["target_width"], good_r["target_height"]) == (4, 3)
-    from databricks_pdf_ocr_spark.functions.pngmini import decode_png
-    w2, h2, _ch, _p = decode_png(bytes(good_r["resized"]))
-    assert (w2, h2) == (4, 3)
-    assert rz[False]["error_message"]

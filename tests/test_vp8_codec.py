@@ -169,16 +169,16 @@ def test_truncated_stream_is_total():
 
 def test_decode_media_routes_lossy_webp(spark):
     """Operator wiring: a real lossy WebP payload flows through the
-    mapInPandas decode stage and comes back with true dimensions."""
+    ``media_phash`` mapInPandas stage and is hashed from the same
+    pixels a direct container decode gives."""
+    from databricks_pdf_ocr_spark.functions import imghash
     from databricks_pdf_ocr_spark.operators import multimodal
 
     data = (DATA / "python.webp").read_bytes()
     df = spark.createDataFrame([("python.webp", data)],
                                "name string, content binary")
-    row = multimodal.decode_media(df).collect()[0]
-    assert row["format"] == "webp" and row["decode_ok"]
-    assert (row["width"], row["height"]) == (16, 16)
-    # resize path transcodes through the real decoder
-    rrow = multimodal.resize_media(df, max_edge=8).collect()[0]
-    assert rrow["resize_ok"] and (rrow["width"], rrow["height"]) == (16, 16)
-    assert max(rrow["target_width"], rrow["target_height"]) <= 8
+    row = multimodal.media_phash(df).collect()[0]
+    assert row["format"] == "webp" and row["hash_ok"]
+    w, h, ch, pix = webpmini.webp_decode(data)
+    assert (w, h) == (16, 16)
+    assert row["phash"] == imghash.dhash64(pix, w, h, ch)

@@ -52,8 +52,6 @@ def test_real_lossy_webp_decodes_for_real_now():
     webp = (DATA / "python.webp").read_bytes()
     w, h, ch, rgba = webpmini.webp_decode(webp)
     assert (w, h, ch) == (16, 16, 4) and len(rgba) == 1024
-    m = webpmini.webp_meta(webp)
-    assert (m["width"], m["height"]) == (16, 16)
 
 
 def test_palette_png_decode_known_pixels():
@@ -153,42 +151,26 @@ def test_container_roundtrip_and_meta_agree():
     img = _rand_rgba(23, 6, ncolors=5)
     webp = webpmini.encode_webp_lossless(img, 23, 6, lz77=True, cache_bits=3)
     assert webpmini.looks_like_webp(webp)
-    m = webpmini.webp_meta(webp)
-    assert (m["variant"], m["width"], m["height"]) == ("lossless", 23, 6)
     assert webpmini.webp_decode(webp) == (23, 6, 4, img)
 
 
-# ---------------------------------------------------------------------------
-# operator wiring
-# ---------------------------------------------------------------------------
-
 def test_decode_media_lossless_webp_real_pixels(spark):
-    from databricks_pdf_ocr_spark.operators.multimodal import decode_media
+    """The live lossless-WebP decode route (``media_phash``): a VP8L
+    payload is hashed from its real pixels; a truncated one becomes an
+    error row."""
+    import hashlib
 
-    good = webpmini.encode_webp_lossless(_rand_rgba(9, 4), 9, 4)
-    corrupt = webpmini.write_webp_header("lossless", 9, 4)   # filler body
-    lossy = (DATA / "python.webp").read_bytes()
-    df = spark.createDataFrame([(good,), (corrupt,), (lossy,)],
-                               "content binary")
-    rows = {r["byte_size"]: r for r in decode_media(df).collect()}
-    g = rows[len(good)]
-    assert g["decode_ok"] and (g["width"], g["height"]) == (9, 4)
-    c = rows[len(corrupt)]
-    assert not c["decode_ok"] and c["format"] == "webp"
-    lo = rows[len(lossy)]                  # lossy: header dims, still a row
-    assert lo["decode_ok"] and (lo["width"], lo["height"]) == (16, 16)
+    from databricks_pdf_ocr_spark.functions import imghash
+    from databricks_pdf_ocr_spark.operators import multimodal
 
-
-def test_resize_media_transcodes_lossless_webp(spark):
-    from databricks_pdf_ocr_spark.operators.multimodal import resize_media
-
-    w, h = 60, 24
-    img = _rand_rgba(w, h, ncolors=6)
-    webp = webpmini.encode_webp_lossless(img, w, h, lz77=True)
-    df = spark.createDataFrame([(webp,)], "content binary")
-    r = resize_media(df, max_edge=30).collect()[0]
-    assert r["resize_ok"] and r["format"] == "webp"
-    assert (r["target_width"], r["target_height"]) == (30, 12)
-    tw, th, ch, px = pngmini.decode_png(bytes(r["resized"]))
-    assert (tw, th, ch) == (30, 12, 4)
-    assert px == pngmini.resize_box(img, w, h, 4, 30, 12)
+    pix = _rand_rgba(9, 4)
+    good = webpmini.encode_webp_lossless(pix, 9, 4)
+    corrupt = good[:len(good) // 2]
+    assert webpmini.looks_like_webp(corrupt)
+    df = spark.createDataFrame([(good,), (corrupt,)], "content binary")
+    rows = {r["media_id"]: r for r in multimodal.media_phash(df).collect()}
+    g = rows[hashlib.sha256(good).hexdigest()]
+    assert (g["format"], g["hash_ok"]) == ("webp", True)
+    assert g["phash"] == imghash.dhash64(pix, 9, 4, 4)
+    c = rows[hashlib.sha256(corrupt).hexdigest()]
+    assert c["hash_ok"] is False and c["error_message"]

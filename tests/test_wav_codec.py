@@ -1,5 +1,5 @@
 """RIFF/WAVE parser: round-trips vs the stdlib ``wave`` writer, format
-cross-check vs JVM javax.sound.sampled, error contract, operator wiring."""
+cross-check vs JVM javax.sound.sampled, error contract."""
 
 import io
 import math
@@ -8,10 +8,7 @@ import wave
 
 import pytest
 
-from databricks_pdf_ocr_spark.functions.wavmini import (
-    WavError, audio_features, decode_wav,
-)
-from databricks_pdf_ocr_spark.operators import multimodal
+from databricks_pdf_ocr_spark.functions.wavmini import WavError, decode_wav
 
 
 def _tone(n, rate=8000, freq=440.0, amp=0.5):
@@ -70,10 +67,11 @@ def test_float32_and_features():
     d = decode_wav(_float32_wav(tone))
     assert d["fmt"] == "float32" and d["n_frames"] == 1600
     assert d["samples"][1] == pytest.approx(tone[1], abs=1e-6)
-    feats = audio_features(d)
     # sine at amplitude A: RMS = A/sqrt(2), peak = A
-    assert feats["rms_e6"] == pytest.approx(0.5 / math.sqrt(2) * 1e6, rel=2e-3)
-    assert feats["peak_e6"] == pytest.approx(500_000, rel=2e-3)
+    samples = d["samples"]
+    rms = math.sqrt(sum(v * v for v in samples) / len(samples))
+    assert rms == pytest.approx(0.5 / math.sqrt(2), rel=2e-3)
+    assert max(map(abs, samples)) == pytest.approx(0.5, rel=2e-3)
 
 
 def test_pcm24_sign_extension():
@@ -126,24 +124,18 @@ def test_jvm_audiosystem_cross_check(spark):
 
 
 def test_decode_media_and_audio_operator(spark):
-    """Operator wiring: WAV payloads ride the REAL parse path in
-    decode_media (true duration, not the fake), and decode_audio emits
-    metadata+features matching the direct call."""
+    """Operator wiring: WAV payloads ride the real parse path in
+    ``media_ahash`` (true duration, fingerprint equal to the direct
+    call); a broken WAVE becomes an error row."""
+    from databricks_pdf_ocr_spark.functions.audiohash import ahash64
+    from databricks_pdf_ocr_spark.operators import multimodal
+
     tone = _tone(4000, rate=8000)
     good = _stdlib_wav(tone, rate=8000, width=2)
     rows = [("good.wav", good), ("bad.wav", b"RIFFxxxxWAVEjunk")]
     df = spark.createDataFrame(rows, "name string, content binary")
 
-    meta = {r["media_id"]: r for r in
-            multimodal.decode_media(df).collect()}
-    ok = [r for r in meta.values() if r["decode_ok"]]
-    assert len(ok) == 1 and ok[0]["format"] == "wav"
-    assert ok[0]["duration_ms"] == 500          # 4000 frames @ 8 kHz
-
-    audio = {r["decode_ok"]: r for r in
-             multimodal.decode_audio(df).collect()}
-    direct = audio_features(decode_wav(good))
-    assert audio[True]["rms_e6"] == direct["rms_e6"]
-    assert audio[True]["peak_e6"] == direct["peak_e6"]
-    assert audio[True]["n_frames"] == 4000
-    assert audio[False]["error_message"]
+    got = {r["hash_ok"]: r for r in multimodal.media_ahash(df).collect()}
+    assert got[True]["duration_ms"] == 500          # 4000 frames @ 8 kHz
+    assert got[True]["phash"] == ahash64(decode_wav(good))
+    assert got[False]["error_message"]
