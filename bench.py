@@ -122,8 +122,7 @@ def main() -> int:
     # extraction throughput (north metric): fixture input → full pipeline
     n_docs = bench_docs_for(sf)
     input_path = ensure_fixture_input(spark, n_docs)
-    cfg = ExtractConfig(n_buckets=64, shuffle_partitions=cpus,
-                        arrow_batch_rows=256)
+    cfg = ExtractConfig(n_buckets=64, shuffle_partitions=cpus)
     t0 = time.time()
     docs = spark.read.parquet(input_path)
     assembled = reassemble(run_extraction(docs, cfg))

@@ -37,9 +37,6 @@ class ExtractConfig:
       already marked done.
     - ``shuffle_partitions``: target partition count for the extraction
       repartition; at cluster scale set to ~2-3x total cores.
-    - ``arrow_batch_rows``: cap on rows per Arrow batch entering the
-      pandas-UDF stage — documents carry multi-MB payloads, so batches must
-      be bounded by bytes-in-flight, not the 10k default (SURVEY.md §4.2.4).
     """
 
     max_payload_bytes: int = 50 * 1024 * 1024
@@ -49,7 +46,6 @@ class ExtractConfig:
     specific_doc_ids: tuple[str, ...] = ()
     n_buckets: int = 64
     shuffle_partitions: int = 32
-    arrow_batch_rows: int = 256
     #: bounded retry for transient-class kernel errors (the reference
     #: declares max_retries/retry_delay, settings.toml:26-27, without
     #: implementing them; functions/extract_span.py does)

@@ -114,9 +114,6 @@ class BoolDecoder:
         v = self.literal(n)
         return -v if self.get(128) else v
 
-    def get_signed(self, v: int) -> int:
-        return -v if self.get(128) else v
-
 
 # ---------------------------------------------------------------------------
 # constant structure (trees, scan order, extra-bit codes)

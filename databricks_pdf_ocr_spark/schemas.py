@@ -76,13 +76,19 @@ RESULTS_RUN_SCHEMA = T.StructType(
         T.StructField("bucket", T.IntegerType(), False),
     ])
 
-# Schema string for mapInPandas (must match RESULTS_SCHEMA field order).
-RESULTS_DDL = (
-    "result_id string, doc_id string, offset int, sub_idx int, total_spans int, "
-    "is_first_span boolean, "
-    "kind string, text string, media_ref string, status string, error_message string, "
-    "ocr_fallback boolean, pages_parsed int, duration_ms long, ocr_model string"
-)
+
+
+def ddl(schema: T.StructType, names: tuple[str, ...] | None = None) -> str:
+    """``"name type, ..."`` for ``schema``'s fields, or for ``names`` in
+    that order.  A DDL string declares every column nullable, which is
+    what the results files carry: mapInPandas output and the explicit
+    reader schemas are both nullable."""
+    picked = schema.fields if names is None else [schema[n] for n in names]
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in picked)
+
+
+# Schema string for mapInPandas.
+RESULTS_DDL = ddl(RESULTS_SCHEMA)
 
 # ---------------------------------------------------------------------------
 # 3. Checkpoint / lineage (reference: pdf_processing_state, schemas.py:49-63,

@@ -7,16 +7,14 @@ source: the pipeline continues, nothing throws), valid lines project
 onto the documents contract, and duplicate URLs within a batch resolve
 latest-line-wins (the WARC latest-capture rule).
 
-Scale shape: ``spark.read.text`` splits uncompressed files by range and
-gives one task per .gz file (gzip unsplittable — same as WARC
-segments); parsing is ``from_json`` column expressions (JVM, zero
+Scale shape: parsing is ``from_json`` column expressions (JVM, zero
 Python); the only shuffle is the per-URL latest-wins window, keyed on
 the hashed URL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 #: explicit line schema — never inferred (a schema-inference pass over
 #: 100 TB of JSONL is a full extra scan).
@@ -62,21 +60,3 @@ def error_lines(lines: DataFrame, value_col: str = "value",
             .select(F.col(line_col).alias("line_no"),
                     F.col(value_col).alias("raw"),
                     reason.alias("reason")))
-
-
-def read_jsonl_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Read a directory of .jsonl / .jsonl.gz dumps into the documents
-    contract.  Line numbers here are per-file byte-order ids scoped by
-    filename (deterministic within a file; latest-wins across files
-    resolves by (file, position) order)."""
-    raw = (spark.read.text(path)
-           .select(F.col("value"),
-                   F.concat(F.input_file_name(), F.lit("#"),
-                            F.lpad(F.monotonically_increasing_id()
-                                   .cast("string"), 20, "0"))
-                   .alias("pos")))
-    # zero-padded so lexicographic = numeric; for .gz dumps one file is
-    # one partition, so this is exact per-file byte order (crawl dumps
-    # are gz in practice — uncompressed splittable text would interleave
-    # split ids and latest-wins across splits is then arbitrary)
-    return lines_to_documents(raw, line_col="pos")

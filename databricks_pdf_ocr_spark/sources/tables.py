@@ -218,51 +218,6 @@ class TableIO:
         shutil.rmtree(bak, ignore_errors=True)
 
 
-def merge_rows(io: TableIO, table: str, changes: DataFrame, key: str,
-               bucket_col: str = "bucket",
-               delete_col: str = "_deleted") -> dict:
-    """MERGE INTO for a bucket-partitioned table: apply a changes set
-    (upserts, plus deletes flagged by a true ``delete_col``) by
-    rewriting ONLY the bucket partitions the changed keys live in —
-    the Iceberg copy-on-write MERGE shape on the parquet backend.
-
-    Plan: the changes' bucket list collects to the driver (≤ n_buckets
-    control-plane ints) → static-isin partition pruning reads JUST the
-    touched buckets → anti-join out the changed keys → union the
-    non-delete changes → dynamic ``overwrite_partitions`` writes only
-    those buckets back.  Untouched partitions are never read, never
-    rewritten (file-mtime-proof in tests).  Changes must carry the
-    table's bucket column (same hash the table was written with)."""
-    touched = [r[bucket_col] for r in
-               changes.select(bucket_col).distinct().collect()]
-    current = io.read(table)
-    cur_touched = current.filter(F.col(bucket_col).isin(touched))
-    upserts = changes.filter(~F.col(delete_col)).drop(delete_col)
-    kept = cur_touched.join(changes.select(key), key, "left_anti")
-    io.overwrite_partitions(kept.unionByName(upserts), table,
-                            [bucket_col])
-    return {"touched_buckets": sorted(touched),
-            "upserts": upserts.count(),
-            "deletes": changes.filter(F.col(delete_col)).count()}
-
-
-def write_with_bloom(df: DataFrame, path: str, bloom_cols: dict[str, int],
-                     mode: str = "overwrite") -> None:
-    """Write parquet with split-block bloom filters on the given
-    columns (``{col: expected_ndv}``) — the point-lookup accelerator
-    for selective scans: a reader probing ``col = x`` skips row groups
-    whose bloom filter excludes x without touching data pages
-    (parquet-mr evaluates blooms during Spark's filter pushdown).
-    At 100 TB this is the difference between a manifest-scale seek and
-    a column scan for needle-in-haystack id lookups on tables that are
-    not sorted/bucketed by that id."""
-    w = df.write.mode(mode)
-    for col, ndv in bloom_cols.items():
-        w = (w.option(f"parquet.bloom.filter.enabled#{col}", "true")
-             .option(f"parquet.bloom.filter.expected.ndv#{col}", str(ndv)))
-    w.parquet(path)
-
-
 def write_bucketed(df: DataFrame, table_name: str, path: str,
                    bucket_cols: list[str], n_buckets: int,
                    sort_cols: list[str] | None = None,

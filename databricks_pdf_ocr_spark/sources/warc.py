@@ -24,7 +24,7 @@ member).  This connector reads them Spark-first:
   interleaved-documents input contract (html/text spans) — one winning
   capture per target_uri (latest WARC-Date) — so a crawl segment feeds
   straight into the extraction pipeline (``jobs/extract.py --input
-  warc:<dir>``; streaming twin in ``streaming/ingest.py``).  Bodies
+  warc:<dir>``).  Bodies
   are decoded by WHATWG-order charset sniffing (BOM > Content-Type
   ``charset=`` > ``<meta>`` prescan > utf-8) with ``errors='replace'``
   inside an Arrow-batched pandas UDF — never ``F.decode``, which under

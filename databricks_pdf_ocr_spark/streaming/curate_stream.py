@@ -115,10 +115,3 @@ def start_dedup_stream(spark: SparkSession, input_dir: str,
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def dedup_available(spark: SparkSession, input_dir: str, tables_dir: str,
-                    checkpoint_dir: str, **kw) -> None:
-    q = start_dedup_stream(spark, input_dir, tables_dir, checkpoint_dir,
-                           **kw)
-    q.awaitTermination()

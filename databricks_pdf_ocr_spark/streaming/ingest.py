@@ -91,111 +91,3 @@ def ingest_available(spark: SparkSession, landing_dir: str, target_dir: str,
     q = start_ingestion_stream(spark, landing_dir, target_dir, checkpoint_dir,
                                glob, max_files_per_trigger)
     q.awaitTermination()
-
-
-def start_warc_ingestion_stream(spark: SparkSession, landing_dir: str,
-                                target_dir: str, checkpoint_dir: str,
-                                glob: str = "*.warc.gz",
-                                max_files_per_trigger: int | None = 8,
-                                max_record_bytes: int | None = None):
-    """Streaming crawl mouth: new .warc.gz segments landing in a
-    directory are drained exactly-once into the WARC record table
-    (``sources/warc.WARC_RECORD_DDL``), the streaming twin of
-    ``warc.read_warc_segments``.
-
-    Shape: binaryFile stream (one task per segment — gzip unsplittable)
-    → the SAME streaming-decompress ``warc_records`` mapInPandas kernel
-    (stateless, so it runs unchanged under Structured Streaming) →
-    checkpointed append sink.  ``maxFilesPerTrigger`` caps segments per
-    micro-batch: segments are ~1 GB gz, so the cap IS the ingest memory
-    budget.  The latest-capture-per-URI dedup (``warc_to_documents``)
-    stays a BATCH step downstream — it needs a global window over
-    (target_uri, warc_date), which append-mode streaming cannot
-    express; landing raw records exactly-once and curating in batch is
-    the standard crawl-lake split.
-
-    Returns the StreamingQuery; callers ``awaitTermination()``.
-    """
-    from ..sources import warc as warc_src
-
-    src = binary_file_stream(spark, landing_dir, glob, max_files_per_trigger)
-    recs = warc_src.warc_records(
-        src.select("path", "content"),
-        max_record_bytes=max_record_bytes or warc_src.DEFAULT_MAX_RECORD)
-    return (recs.writeStream
-            .format("parquet")
-            .outputMode("append")
-            .option("path", target_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def ingest_warc_available(spark: SparkSession, landing_dir: str,
-                          target_dir: str, checkpoint_dir: str,
-                          glob: str = "*.warc.gz",
-                          max_files_per_trigger: int | None = 8) -> None:
-    """Run one drain of the WARC landing directory."""
-    q = start_warc_ingestion_stream(spark, landing_dir, target_dir,
-                                    checkpoint_dir, glob,
-                                    max_files_per_trigger)
-    q.awaitTermination()
-
-
-def start_lines_ingestion_stream(spark: SparkSession, landing_dir: str,
-                                 target_dir: str, checkpoint_dir: str,
-                                 glob: str,
-                                 max_files_per_trigger: int | None = 8):
-    """Exactly-once raw-LINE landing for any line-delimited crawl dump:
-    new files matching ``glob`` drain into a raw-line table
-    (value, file).  Parsing + error routing + latest-key-wins stay
-    BATCH steps downstream (``jsonl.lines_to_documents`` /
-    ``csvsrc.read_csv_lines`` over the landed table) — the dedup needs
-    a per-key window append-mode streaming cannot express, and line
-    POSITIONS are also assigned in that batch step
-    (``monotonically_increasing_id`` is rejected under streaming; the
-    landed parquet preserves per-file write order, so batch assignment
-    is equivalent).  Landing raw exactly-once and curating in batch is
-    the same crawl-lake split as the WARC mouth.
-
-    Returns the StreamingQuery; callers ``awaitTermination()``.
-    """
-    from pyspark.sql import functions as F
-
-    reader = (spark.readStream.format("text")
-              .option("pathGlobFilter", glob))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = (reader.load(landing_dir)
-             .select(F.col("value"),
-                     F.input_file_name().alias("file")))
-    return (lines.writeStream
-            .format("parquet")
-            .outputMode("append")
-            .option("path", target_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def start_jsonl_ingestion_stream(spark: SparkSession, landing_dir: str,
-                                 target_dir: str, checkpoint_dir: str,
-                                 glob: str = "*.jsonl*",
-                                 max_files_per_trigger: int | None = 8):
-    """Streaming twin of ``jsonl.read_jsonl_dir`` (see
-    ``start_lines_ingestion_stream``)."""
-    return start_lines_ingestion_stream(spark, landing_dir, target_dir,
-                                        checkpoint_dir, glob,
-                                        max_files_per_trigger)
-
-
-def start_csv_ingestion_stream(spark: SparkSession, landing_dir: str,
-                               target_dir: str, checkpoint_dir: str,
-                               glob: str = "*.csv*",
-                               max_files_per_trigger: int | None = 8):
-    """Streaming twin of ``csvsrc.read_csv_lines``: land raw CSV lines
-    exactly-once; parse with explicit schema + typed error rows in batch
-    over the landed table (see ``start_lines_ingestion_stream``)."""
-    return start_lines_ingestion_stream(spark, landing_dir, target_dir,
-                                        checkpoint_dir, glob,
-                                        max_files_per_trigger)

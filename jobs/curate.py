@@ -36,7 +36,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_pdf_ocr_spark.operators import dedup, text_analysis
 from databricks_pdf_ocr_spark.session import get_spark
@@ -150,11 +150,10 @@ def run_curate(spark, args) -> dict:
     # corpus-size exchanges).  Kept set identical: rows whose doc_id is
     # the min within their sha2(text) group (= dedup.exact_duplicates'
     # canonical_id).
-    from pyspark.sql import Window as _W
     __h = F.sha2(F.col("text"), 256)
     exact_kept = (gated
                   .withColumn("__min_id", F.min("doc_id").over(
-                      _W.partitionBy(__h)))
+                      Window.partitionBy(__h)))
                   .filter(F.col("doc_id") == F.col("__min_id"))
                   .drop("__min_id")
                   .persist(StorageLevel.MEMORY_AND_DISK))
@@ -170,12 +169,11 @@ def run_curate(spark, args) -> dict:
                                     verify_threshold=args.neardup_jaccard)
     cc_stats: dict = {}
     labels = dedup.neardup_components(pairs, stats=cc_stats)
-    if getattr(args, "canonical", "min") == "best":
+    if args.canonical == "best":
         # keep the BEST member of each cluster (highest quality score,
         # ties by id) instead of the min-id label — the most complete
         # copy survives.  One equi-join against the already-computed
         # features + one row_number window per component partition.
-        from pyspark.sql import Window
         members = (labels.select(F.col("node").alias("doc_id"), "comp")
                    .join(exact_kept.select("doc_id", "quality_score_e6"),
                          "doc_id"))
@@ -203,7 +201,7 @@ def run_curate(spark, args) -> dict:
     # -- optional PII scrub: swap text for its redacted form IN PLACE
     # (one narrow select, no join-back shuffle) with per-class audit
     # counts riding along into the output table
-    if getattr(args, "redact_pii", False):
+    if args.redact_pii:
         sampled = text_analysis.pii_redact(sampled, replace_text=True)
         extra_stats["redact_pii"] = True
 
@@ -241,7 +239,7 @@ def run_curate(spark, args) -> dict:
     # shard — the layout a packed-dataset writer consumes one shard per
     # task.  Read back from the just-written table so the plan reflects
     # exactly what shipped.
-    if getattr(args, "pack_seq_len", 0):
+    if args.pack_seq_len:
         curated = spark.read.parquet(args.out)
         plan = text_analysis.pack_plan(
             curated, seq_len=args.pack_seq_len,

@@ -45,6 +45,7 @@ from databricks_pdf_ocr_spark.plans.checkpoint import (
     CheckpointManager, new_run_id,
 )
 from databricks_pdf_ocr_spark.plans.state_views import latest_results
+from databricks_pdf_ocr_spark.schemas import RESULTS_RUN_SCHEMA, ddl
 from databricks_pdf_ocr_spark.session import get_spark
 from databricks_pdf_ocr_spark.sources.tables import make_table_io
 
@@ -92,13 +93,11 @@ def gc_media_orphans(io) -> dict:
     dynamic partition overwrite of ONLY the buckets holding orphans
     (≤ n_buckets ints collected; untouched buckets are not rewritten).
     """
-    from databricks_pdf_ocr_spark.plans.state_views import latest_results
-
     restored = _restore_gc_staging(io)   # BEFORE any read of MEDIA_TABLE
     pay = io.read(MEDIA_TABLE)
-    res = io.read(RESULTS_TABLE,
-                  schema="doc_id string, media_ref string, run_id string, "
-                         "run_seq long, processed_at timestamp, bucket int")
+    res = io.read(RESULTS_TABLE, schema=ddl(
+        RESULTS_RUN_SCHEMA, ("doc_id", "media_ref", "run_id", "run_seq",
+                             "processed_at", "bucket")))
     if pay is None or res is None:
         return {"gc_orphans": 0, "gc_buckets": 0, "gc_restored": restored}
     live = (latest_results(res)
@@ -369,9 +368,7 @@ def run_job(spark, args) -> tuple[dict, int]:
     # level and skips the footer-sampling schema-inference job.
     MARK_COLS = ("is_first_span", "sub_idx", "status", "pages_parsed",
                  "ocr_fallback", "duration_ms", "bucket")
-    mark_schema = ("run_id string, is_first_span boolean, "
-                   "sub_idx int, status string, pages_parsed int, "
-                   "ocr_fallback boolean, duration_ms long, bucket int")
+    mark_schema = ddl(RESULTS_RUN_SCHEMA, ("run_id",) + MARK_COLS)
     this_run = (io.read(RESULTS_TABLE, schema=mark_schema)
                 .filter(F.col("bucket").isin(pend_list)
                         if pend_list else F.lit(False))
@@ -419,7 +416,6 @@ def run_job(spark, args) -> tuple[dict, int]:
         # explicit full schema (ADVICE r3): a mixed old/new table would be
         # footer-SAMPLED for schema — run_seq could be invisible here and
         # latest_results would silently fall back to wall-clock ordering
-        from databricks_pdf_ocr_spark.schemas import RESULTS_RUN_SCHEMA
         results_all = io.read(RESULTS_TABLE, schema=RESULTS_RUN_SCHEMA)
         # assembly scope from the CHECKPOINT table (≤ runs×n_buckets tiny
         # rows, read at the start of the run, plus this run's marks),

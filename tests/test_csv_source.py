@@ -2,9 +2,6 @@
 rows, RFC-4180 sink round-trip (sources/csvsrc.py)."""
 
 import gzip
-import os
-
-from pyspark.sql import functions as F
 
 from databricks_pdf_ocr_spark.sources import csvsrc
 
@@ -98,30 +95,3 @@ def test_roundtrip_random_printable(spark):
     got = sorted((r.id, r.txt, r.lang)
                  for r in csvsrc.good_rows(parsed).collect())
     assert got == sorted(rows)
-
-
-def test_streaming_csv_ingest_exactly_once(spark, tmp_path):
-    from databricks_pdf_ocr_spark.streaming.ingest import (
-        start_csv_ingestion_stream)
-    landing = str(tmp_path / "landing")
-    target = str(tmp_path / "raw")
-    ck = str(tmp_path / "ck")
-    os.makedirs(landing)
-    _write(os.path.join(landing, "d0.csv"),
-           "\n".join(f"{i},t{i},en" for i in range(8)) + "\nbad,row\n")
-    start_csv_ingestion_stream(spark, landing, target, ck).awaitTermination()
-    assert spark.read.parquet(target).count() == 9
-    # re-drain: nothing new appended (exactly-once)
-    start_csv_ingestion_stream(spark, landing, target, ck).awaitTermination()
-    assert spark.read.parquet(target).count() == 9
-    # new landing file drains only itself; batch parse over landed lines
-    _write(os.path.join(landing, "d1.csv"), "100,fresh,fr\n")
-    start_csv_ingestion_stream(spark, landing, target, ck).awaitTermination()
-    raw = spark.read.parquet(target)
-    assert raw.count() == 10
-    parsed = raw.select(
-        "value", F.col("file").alias("_file"),
-        F.from_csv("value", f"{SCHEMA}, __corrupt STRING",
-                   csvsrc.CSV_OPTIONS).alias("rec"))
-    good = parsed.filter(F.col("rec.__corrupt").isNull())
-    assert good.count() == 9

@@ -1,14 +1,12 @@
 """JSONL crawl-dump source (sources/jsonl).
 
 End-to-end vs the no-Spark golden is the `jsonl_e2e` oracle row; here:
-error-row accounting, latest-wins semantics, and the .gz file path.
+error-row accounting and latest-wins semantics.
 """
 
 from __future__ import annotations
 
-import gzip
 import json
-import os
 
 from databricks_pdf_ocr_spark import fixtures
 from databricks_pdf_ocr_spark.sources import jsonl as J
@@ -40,52 +38,3 @@ def test_latest_line_wins_per_url(spark):
     got = J.lines_to_documents(_lines_df(spark, lines)).collect()
     assert len(got) == 1
     assert got[0]["text"] == "new" and got[0]["line_no"] == 1
-
-
-def test_read_jsonl_gz_dir(spark, tmp_path):
-    d = str(tmp_path / "dump")
-    os.makedirs(d)
-    lines = [json.dumps({"url": f"http://h/{i}", "text": f"t{i}"})
-             for i in range(10)] + ["{broken"]
-    with gzip.open(os.path.join(d, "part-000.jsonl.gz"), "wt") as f:
-        f.write("\n".join(lines))
-    docs = J.read_jsonl_dir(spark, d)
-    assert docs.count() == 10
-    assert {r["text"] for r in docs.collect()} == {f"t{i}" for i in range(10)}
-
-
-def test_streaming_jsonl_ingest_exactly_once(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from databricks_pdf_ocr_spark.streaming.ingest import (
-        start_jsonl_ingestion_stream)
-    landing = str(tmp_path / "landing")
-    target = str(tmp_path / "raw")
-    ck = str(tmp_path / "ck")
-    os.makedirs(landing)
-    lines = [json.dumps({"url": f"http://h/{i}", "text": f"t{i}"})
-             for i in range(8)]
-    with gzip.open(os.path.join(landing, "d0.jsonl.gz"), "wt") as f:
-        f.write("\n".join(lines))
-    q = start_jsonl_ingestion_stream(spark, landing, target, ck)
-    q.awaitTermination()
-    assert spark.read.parquet(target).count() == 8
-    # re-drain with no new files appends NOTHING (exactly-once)
-    q2 = start_jsonl_ingestion_stream(spark, landing, target, ck)
-    q2.awaitTermination()
-    assert spark.read.parquet(target).count() == 8
-    # a new landing file drains only its own lines
-    with gzip.open(os.path.join(landing, "d1.jsonl.gz"), "wt") as f:
-        f.write(json.dumps({"url": "http://h/new", "text": "fresh"}))
-    q3 = start_jsonl_ingestion_stream(spark, landing, target, ck)
-    q3.awaitTermination()
-    raw = spark.read.parquet(target)
-    assert raw.count() == 9
-    # batch curation over the landed raw lines yields the documents
-    # (positions assigned batch-side: landed parquet keeps write order)
-    from databricks_pdf_ocr_spark.sources import jsonl as J
-    pos = F.concat("file", F.lit("#"),
-                   F.lpad(F.monotonically_increasing_id().cast("string"),
-                          20, "0"))
-    docs = J.lines_to_documents(
-        raw.select("value", pos.alias("line_no")), line_col="line_no")
-    assert docs.count() == 9

@@ -25,7 +25,7 @@ def _expected_labels(spark, rows):
 
 
 def _drain(spark, input_dir, tables, ck):
-    cs.dedup_available(spark, input_dir, tables, ck)
+    cs.start_dedup_stream(spark, input_dir, tables, ck).awaitTermination()
 
 
 def test_rolling_dedup_stream_matches_from_scratch(spark, tmp_path):

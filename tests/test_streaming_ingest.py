@@ -72,47 +72,3 @@ def test_ingested_pdfs_feed_extraction(spark, tmp_path):
     out = reassemble(run_extraction(docs, TEST_CONFIG)).collect()
     assert len(out) == 1
     assert out[0]["spans"][0]["text"] == "hello stream"
-
-
-def test_warc_streaming_ingest_exactly_once(spark, tmp_path):
-    """New segments drain exactly-once into the record table; re-drain
-    appends nothing; a late-landing segment adds ONLY its records; the
-    landed records compose into the batch documents contract."""
-    from databricks_pdf_ocr_spark.sources import warc
-    from databricks_pdf_ocr_spark.streaming.ingest import (
-        ingest_warc_available,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    target = str(tmp_path / "warc_records")
-    ckpt = str(tmp_path / "ckpt")
-
-    (landing / "seg-0.warc.gz").write_bytes(warc.write_warc([
-        {"type": "response", "uri": "http://s0.example/a",
-         "body": b"<html><p>first segment</p></html>",
-         "http_content_type": "text/html"},
-        {"type": "warcinfo", "uri": None, "body": b"software: t\r\n"}]))
-
-    ingest_warc_available(spark, str(landing), target, ckpt)
-    first = spark.read.parquet(target)
-    assert first.count() == 2
-    assert first.filter("warc_type = 'response'").count() == 1
-
-    # re-drain with nothing new → appends nothing
-    ingest_warc_available(spark, str(landing), target, ckpt)
-    assert spark.read.parquet(target).count() == 2
-
-    # late segment → only its records land
-    (landing / "seg-1.warc.gz").write_bytes(warc.write_warc([
-        {"type": "response", "uri": "http://s1.example/b",
-         "body": b"late text body", "http_content_type": "text/plain"}]))
-    ingest_warc_available(spark, str(landing), target, ckpt)
-    recs = spark.read.parquet(target)
-    assert recs.count() == 3
-
-    # batch curation over the landed records
-    docs = warc.warc_to_documents(recs)
-    uris_texts = {r["spans"][0]["text"] for r in docs.collect()}
-    assert any("first segment" in t for t in uris_texts)
-    assert any("late text body" in t for t in uris_texts)

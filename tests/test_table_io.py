@@ -100,63 +100,3 @@ def test_compact_preserves_rows_and_merges_files(spark, tmp_tables):
     assert {(r["id"], r["v"]) for r in io.read("t").collect()} == before
     assert io.compact("missing") == {"files_before": 0, "files_after": 0,
                                      "rows": 0}
-
-
-def test_write_with_bloom_adds_filter_bytes_and_roundtrips(spark, tmp_path):
-    """Bloom-filtered write: same rows back, and the file grows by the
-    split-block bloom bytes (the only observable here — this pyarrow
-    build does not expose bloom_filter_offset)."""
-    import glob
-    import os
-
-    from databricks_pdf_ocr_spark.sources.tables import write_with_bloom
-
-    df = spark.range(0, 20000).selectExpr(
-        "id", "concat('u', id) AS k").coalesce(1)
-    plain = str(tmp_path / "plain")
-    bloomed = str(tmp_path / "bloomed")
-    df.write.parquet(plain)
-    write_with_bloom(df, bloomed, {"k": 20000})
-    a = os.path.getsize(glob.glob(plain + "/*.parquet")[0])
-    b = os.path.getsize(glob.glob(bloomed + "/*.parquet")[0])
-    assert b > a + 4096          # a real filter landed, not metadata noise
-    back = spark.read.parquet(bloomed)
-    assert back.count() == 20000
-    assert back.filter("k = 'u19999'").count() == 1
-
-
-def test_merge_rows_rewrites_only_touched_buckets(spark, tmp_path):
-    """MERGE semantics (update + insert + delete in one changes set)
-    AND the physical contract: untouched bucket partitions keep their
-    exact files (mtimes unchanged)."""
-    import glob
-    import os
-
-    from databricks_pdf_ocr_spark.sources.tables import TableIO, merge_rows
-
-    io = TableIO(spark, str(tmp_path))
-    base = spark.createDataFrame(
-        [(i, f"v{i}", i % 4) for i in range(20)],
-        "id long, v string, bucket int")
-    io.overwrite(base.repartition("bucket"), "t", partition_by=["bucket"])
-    mtimes = {f: os.path.getmtime(f)
-              for f in glob.glob(io.path("t") + "/bucket=*/*.parquet")}
-
-    # touch buckets 1 and 2 only: update id=1, delete id=2, insert id=101
-    changes = spark.createDataFrame(
-        [(1, "UPDATED", 1, False), (2, None, 2, True),
-         (101, "NEW", 1, False)],
-        "id long, v string, bucket int, _deleted boolean")
-    rep = merge_rows(io, "t", changes, key="id")
-    assert rep == {"touched_buckets": [1, 2], "upserts": 2, "deletes": 1}
-
-    got = {r["id"]: r["v"] for r in io.read("t").collect()}
-    expect = {i: f"v{i}" for i in range(20) if i != 2}
-    expect[1] = "UPDATED"
-    expect[101] = "NEW"
-    assert got == expect
-
-    for f, t0 in mtimes.items():
-        part = f.split("bucket=")[1].split("/")[0]
-        if part in ("0", "3"):
-            assert os.path.exists(f) and os.path.getmtime(f) == t0, f
