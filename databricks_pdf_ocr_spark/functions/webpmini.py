@@ -1,8 +1,7 @@
 """WebP container parser + decode router (pure stdlib): full pixel decode
 for BOTH variants (``webp_decode`` — lossless VP8L via ``vp8lmini``,
-lossy key-frame VP8 via ``vp8mini``, with ALPH alpha-plane merge), the
-alpha-only path (``webp_alpha``), and a lossless fixture encoder
-(``encode_webp_lossless``).
+lossy key-frame VP8 via ``vp8mini``, with ALPH alpha-plane merge) and a
+lossless fixture encoder (``encode_webp_lossless``).
 
 Covers the three container layouts of the WebP spec (RFC 9649):
 - ``VP8 `` (lossy): key-frame start code ``9D 01 2A``, then 14-bit
@@ -70,30 +69,6 @@ def webp_decode(data: bytes) -> tuple[int, int, int, bytes]:
     rgba[2::4] = rgb[2::3]
     rgba[3::4] = alpha
     return w, h, 4, bytes(rgba)
-
-
-def webp_alpha(data: bytes) -> bytes | None:
-    """Extended lossy WebP → the decoded ALPH alpha plane (VP8L-coded,
-    RFC 9649 §2.3.2), or None when the file carries no ALPH chunk."""
-    if not looks_like_webp(data):
-        raise WebpError("not a WebP file (missing RIFF/WEBP)")
-    from . import vp8lmini
-    alph = None
-    dims = None
-    for fourcc, body in _chunks(data):
-        if fourcc == b"ALPH":
-            alph = body
-        elif fourcc == b"VP8 ":         # frame dims govern the alpha plane
-            if len(body) < 10 or body[3:6] != b"\x9d\x01\x2a":
-                raise WebpError("bad VP8 key-frame header")
-            (w,) = struct.unpack("<H", body[6:8])
-            (h,) = struct.unpack("<H", body[8:10])
-            dims = (w & 0x3FFF, h & 0x3FFF)
-    if alph is None:
-        return None
-    if dims is None:
-        raise WebpError("ALPH chunk without a VP8 frame")
-    return vp8lmini.alph_decode(alph, dims[0], dims[1])
 
 
 def encode_webp_lossless(rgba: bytes, width: int, height: int,

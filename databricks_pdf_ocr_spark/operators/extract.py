@@ -169,19 +169,6 @@ def extract_spans(spans_df: DataFrame, cfg: ExtractConfig,
     return spans_df.mapInPandas(_make_extract_batch(cfg), schema=RESULTS_DDL)
 
 
-def dedup_results(results: DataFrame) -> DataFrame:
-    """Dedup-on-read for rerun idempotency.
-
-    ``result_id = sha2(doc_id:offset:sub_idx)`` is deterministic, so a
-    bucket that was extracted twice (written, then the run died before the
-    checkpoint mark) yields byte-identical duplicate rows — keep either.
-    Spark: ``dropDuplicates`` = hash-agg on the id, partial map-side combine
-    for free (vs the reference's driver-side DISTINCT-collect,
-    ``processors/ocr.py:67-68``).
-    """
-    return results.dropDuplicates(["result_id"])
-
-
 def reassemble(results: DataFrame) -> DataFrame:
     """Flat per-span results → (doc_id, spans) with dense output offsets.
 

@@ -185,8 +185,9 @@ def dedup_payloads(payloads: DataFrame) -> DataFrame:
     """Dedup-on-read for the media_payloads table: refs are
     content-addressed (sha256 of the payload), so duplicate rows — crash
     reruns of an unmarked bucket, or the same image embedded in many
-    documents — are byte-identical per ref; keep either.  Same hash-agg
-    shape as ``operators.extract.dedup_results``."""
+    documents — are byte-identical per ref; keep either.  (Extraction
+    results need no such pass: ``reassemble``'s ``array_distinct``
+    drops their duplicate rows on read.)"""
     return payloads.dropDuplicates(["media_ref"])
 
 

@@ -378,8 +378,7 @@ def contamination_pairs(df: DataFrame, eval_mod: int = 20, n: int = 3,
 
 
 def pack_plan(df: DataFrame, seq_len: int = 2048, n_shards: int = 32,
-              id_col: str = "doc_id", text_col: str = "text",
-              shard_expr: Column | None = None) -> DataFrame:
+              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Sequence-packing plan (concat-and-chop, the standard pretraining
     layout): documents are concatenated in deterministic (shard, id)
     order and chopped into fixed ``seq_len``-token sequences; a doc may
@@ -394,12 +393,10 @@ def pack_plan(df: DataFrame, seq_len: int = 2048, n_shards: int = 32,
     ws = F.size(F.split(F.col(text_col), " ")).cast("long")
     w = (Window.partitionBy("shard").orderBy(id_col)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    if shard_expr is None:       # numeric ids; string ids pass e.g.
-        shard_expr = F.pmod(     # pmod(xxhash64(id), n) as shard_expr
-            F.col(id_col).cast("long"), F.lit(n_shards)).cast("int")
+    shard = F.pmod(F.col(id_col).cast("long"), F.lit(n_shards)).cast("int")
     staged = (df.select(F.col(id_col), ws.alias("n_tokens"))
               .filter(F.col("n_tokens") > 0)
-              .withColumn("shard", shard_expr))
+              .withColumn("shard", shard))
     cum_end = F.sum("n_tokens").over(w)
     return (staged
             .withColumn("cum_end", cum_end)
@@ -640,8 +637,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 
 
 def pii_redact(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text",
-               replace_text: bool = False) -> DataFrame:
+               text_col: str = "text") -> DataFrame:
     """Scrub PII before training: replace emails, dotted-quad IPs and
     phone numbers with typed placeholder tokens, and count what was
     removed per class (the audit columns a compliance review needs).
@@ -651,12 +647,6 @@ def pii_redact(df: DataFrame, id_col: str = "doc_id",
     then phones.  Counts are taken on the ORIGINAL text.  Pure JVM
     column expressions — ``regexp_extract_all`` + chained
     ``regexp_replace`` — zero Python in the hot path, no shuffle at all.
-
-    ``replace_text=True`` keeps EVERY input column and swaps the text
-    column for its redacted form in place (plus the audit counts) — the
-    in-pipeline form (``jobs/curate.py --redact-pii``) that avoids a
-    join-back shuffle; the default narrow (id, counts, redacted)
-    projection is the standalone/audit form the oracle checks.
     """
     out = F.col(text_col)
     counts = []
@@ -665,9 +655,6 @@ def pii_redact(df: DataFrame, id_col: str = "doc_id",
             F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0)))
             .cast("long").alias(f"n_{name}"))
         out = F.regexp_replace(out, pat, repl)
-    if replace_text:
-        others = [c for c in df.columns if c != text_col]
-        return df.select(*others, *counts, out.alias(text_col))
     return df.select(F.col(id_col), *counts, out.alias("redacted"))
 
 
@@ -712,9 +699,7 @@ _GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
 def _gopher_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """All Gopher rule counts appended as ``__``-prefixed columns with
-    the original columns preserved (the curation job filters in place —
-    a derive-and-join-back would shuffle the corpus text at 100 TB).
+    """All Gopher rule counts appended as ``__``-prefixed columns.
     The token/line arrays are materialized in their own projections and
     the HOF lambdas reference the attributes (an inlined split()
     re-evaluates PER ELEMENT)."""
@@ -790,15 +775,6 @@ def gopher_rules(df: DataFrame, id_col: str = "doc_id",
         F.expr(_GOPHER_PASS_SQL).alias("passes"))
 
 
-def with_gopher_flag(df: DataFrame, text_col: str = "text",
-                     flag_col: str = "gopher_passes") -> DataFrame:
-    """All original columns + the combined Gopher flag — the in-place
-    curation-stage form (filter → drop, no join-back shuffle)."""
-    counts = _gopher_counts(df, text_col)
-    return (counts.withColumn(flag_col, F.expr(_GOPHER_PASS_SQL))
-            .drop(*[c for c in counts.columns if c.startswith("__")]))
-
-
 #: blocklist drawn from the fixture vocabulary so the gate discriminates
 _BADWORDS = ("slow", "dup", "error")
 
@@ -826,20 +802,3 @@ def badwords_gate(df: DataFrame, id_col: str = "doc_id",
         F.expr("(n_bad * 1000000) div n_tokens").alias("bad_rate_e6"),
         F.expr(f"CAST((n_bad * 1000000) div n_tokens <= {max_rate_e6} "
                "AS INT)").alias("kept"))
-
-
-def with_badwords_flag(df: DataFrame, text_col: str = "text",
-                       badwords: tuple[str, ...] = _BADWORDS,
-                       max_rate_e6: int = 40000,
-                       flag_col: str = "badwords_kept") -> DataFrame:
-    """All original columns + the blocklist keep flag — the in-place
-    curation-stage form (filter → drop, no join-back shuffle)."""
-    d = (df.withColumn("__toks", F.split(F.lower(F.col(text_col)), " "))
-         .withColumn("__n_tokens", F.size("__toks").cast("long"))
-         .withColumn("__n_bad",
-                     F.size(F.filter("__toks", _in_set(badwords)))
-                     .cast("long")))
-    return (d.withColumn(flag_col, F.expr(
-                f"CAST((__n_bad * 1000000) div __n_tokens <= {max_rate_e6} "
-                "AS INT)"))
-            .drop("__toks", "__n_tokens", "__n_bad"))

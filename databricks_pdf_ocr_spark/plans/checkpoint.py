@@ -12,10 +12,10 @@ anti-joins pending work against done buckets.
 Write-then-mark ordering gives crash safety: results for a bucket are
 committed *before* the bucket is marked done, so a crash between the two
 re-extracts that bucket; deterministic ``result_id``s make the rerun
-byte-identical and ``dedup_results`` collapses duplicates on read
-(SURVEY.md §4.2.3).  No overwrite-in-place anywhere — the reference's
-full-table-rewrite update (``managers/state.py:64-73``) is replaced by an
-append-only log + latest-wins reads.
+byte-identical and ``reassemble``'s ``array_distinct`` collapses the
+duplicates on read (SURVEY.md §4.2.3).  No overwrite-in-place anywhere —
+the reference's full-table-rewrite update (``managers/state.py:64-73``)
+is replaced by an append-only log + latest-wins reads.
 """
 
 from __future__ import annotations

@@ -17,7 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
 
-from .operators import classifier, dedup, layout, similarity, text_analysis
+from .operators import (classifier, curate, dedup, layout, similarity,
+                        text_analysis)
 from .operators import tokenize as _tok
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -699,10 +700,8 @@ def snapshot_diff(spark, sf_dir):
     only the delta rows (inserted / deleted / modified), the
     anti-entropy sweep replication systems run.  The planted delta
     (every 97th key modified, every 101st deleted) exercises all
-    branches deterministically.  Shape: one key equi-join; at 100 TB
-    both snapshots bucket on the key (SMB — see write_bucketed) so the
-    diff is exchange-free; output is delta-bounded, never
-    corpus-bounded."""
+    branches deterministically.  Shape: one key equi-join; output is
+    delta-bounded, never corpus-bounded."""
     o = _t(spark, sf_dir, "orders")
     v = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     v_new = F.floor((F.col("o_totalprice") + 1.0) * 100
@@ -3325,29 +3324,17 @@ WHERE CAST(('0x' || substr(sha256(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
                                   ELSE {_CURATE_DEFAULT} END
 """)
 def curate_e2e(spark, sf_dir):
-    """The composed curation pipeline (jobs/curate.py) as one oracled query:
-    fused feature pass → quality gate → exact dedup (canonical copy) →
-    MinHash-LSH near-dup candidates + exact-Jaccard verification →
-    connected-components canonical per transitive cluster (r4; the pair
-    survivor rule kept extra members of a~b, b~c chains) → deterministic
-    hash-stratified sample.  Every stage is the operator the job runs;
-    the whole ladder is hash-verified end-to-end against DuckDB (incl.
-    the recursive-CTE component labeling)."""
+    """The curation ladder ``jobs/curate.py`` runs (``operators/curate``)
+    as one oracled query, in the sha2 hash family: fused feature pass →
+    quality gate → exact dedup (canonical copy) → MinHash-LSH near-dup
+    candidates + exact-Jaccard verification → connected-components
+    canonical per transitive cluster → deterministic hash-stratified
+    sample.  The whole ladder is hash-verified end-to-end against DuckDB
+    (incl. the recursive-CTE component labeling)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    feats = text_analysis.with_features(docs)
-    gated = feats.filter(F.col("quality_score_e6") >= _CURATE_QTHR)
-    canon = (dedup.exact_duplicates(gated)
-             .select(F.col("canonical_id").alias("doc_id")))
-    exact_kept = gated.join(canon, "doc_id", "left_semi")
-    pairs = dedup.minhash_lsh_pairs(exact_kept, n=3, k=8, bands=4,
-                                    verify_threshold=0.3)
-    losers = (dedup.neardup_components(pairs)
-              .filter(F.col("comp") != F.col("node"))
-              .select(F.col("node").alias("doc_id")))
-    kept = exact_kept.join(losers, "doc_id", "left_anti")
-    sampled = text_analysis.hash_sample(
-        kept, _CURATE_SAMPLE, strata_col="predicted_lang",
-        default_pct=_CURATE_DEFAULT)
+    sampled = curate.neardup_sample(
+        curate.exact_kept(docs, _CURATE_QTHR), _CURATE_SAMPLE,
+        _CURATE_DEFAULT, hash_mode="sha2")
     return sampled.select("doc_id", "predicted_lang", "quality_score_e6",
                           "ws_tokens", "bpe_tokens")
 

@@ -218,29 +218,6 @@ class TableIO:
         shutil.rmtree(bak, ignore_errors=True)
 
 
-def write_bucketed(df: DataFrame, table_name: str, path: str,
-                   bucket_cols: list[str], n_buckets: int,
-                   sort_cols: list[str] | None = None,
-                   mode: str = "overwrite") -> None:
-    """Persist a hash-bucketed (and optionally per-bucket-sorted) table
-    into the session catalog at an explicit ``path``.
-
-    This is the sort-merge-bucket (SMB) layout: two tables bucketed the
-    same way on the join key co-locate matching keys file-for-file, so
-    joins between them run with NO shuffle exchange (and with
-    ``sort_cols`` on the key, little or no sort) — THE persisted answer
-    to the biggest shuffle in a 100 TB pipeline, paying one write-time
-    shuffle to make every subsequent join exchange-free.  Catalog
-    metadata (bucket count + columns) is what lets the planner elide the
-    exchange; ``spark.table(name)`` reads it back bucket-aware.
-    """
-    w = (df.write.mode(mode).option("path", path)
-         .bucketBy(n_buckets, *bucket_cols))
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
-
-
 class IcebergTableIO(TableIO):
     """Iceberg-backed variant (same API) for clusters with the runtime jar.
 

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from databricks_pdf_ocr_spark import fixtures
 from databricks_pdf_ocr_spark.config import TEST_CONFIG
 from databricks_pdf_ocr_spark.operators.extract import (
-    bucket_col, dedup_results, reassemble, run_extraction,
+    bucket_col, reassemble, run_extraction,
 )
 from databricks_pdf_ocr_spark.plans.checkpoint import (
     CHECKPOINT_TABLE, CheckpointManager, new_run_id,
@@ -37,7 +37,8 @@ def _process(io, cp, pending, tag):
     pend_buckets = pending.select("bucket").distinct()
     written = (io.read("extraction_results")
                .join(F.broadcast(pend_buckets), "bucket", "left_semi"))
-    cp.mark_from_results(dedup_results(written), new_run_id(), FP)
+    cp.mark_from_results(written.dropDuplicates(["result_id"]),
+                         new_run_id(), FP)
 
 
 def test_kill_and_resume_equals_single_run(env):
@@ -85,7 +86,8 @@ def test_double_process_one_bucket_is_idempotent(env):
     _process(io, cp, cp.filter_pending(df, FP), "full")
 
     all_results = io.read("extraction_results")
-    assert all_results.count() > dedup_results(all_results).count()
+    assert (all_results.count()
+            > all_results.dropDuplicates(["result_id"]).count())
     assembled = reassemble(all_results)
     got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"])
                          for s in r["spans"]]
@@ -114,7 +116,8 @@ def test_next_run_seq_is_monotonic(env):
     assert cp.next_run_seq() == 2
     # a second mark (different fingerprint) advances it again
     results = io.read("extraction_results")
-    cp.mark_from_results(dedup_results(results), new_run_id(), FP + "-b")
+    cp.mark_from_results(results.dropDuplicates(["result_id"]),
+                         new_run_id(), FP + "-b")
     assert cp.next_run_seq() == 3
 
 
@@ -154,8 +157,10 @@ def test_compaction_preserves_resume_and_bounds_rows(env, tmp_tables):
     # two full runs + a second fingerprint → runs x buckets rows
     _process(io, cp, cp.filter_pending(df, FP), "r1")
     results = io.read("extraction_results")
-    cp.mark_from_results(dedup_results(results), new_run_id(), FP)
-    cp.mark_from_results(dedup_results(results), new_run_id(), FP + "-b")
+    cp.mark_from_results(results.dropDuplicates(["result_id"]),
+                         new_run_id(), FP)
+    cp.mark_from_results(results.dropDuplicates(["result_id"]),
+                         new_run_id(), FP + "-b")
 
     before_seq = cp.next_run_seq()
     before_done = {r["bucket"] for r in cp.done_buckets(FP).collect()}

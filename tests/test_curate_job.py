@@ -100,148 +100,3 @@ def test_with_features_matches_individual_operators(spark):
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Join" not in plan
 
-
-def test_curate_pack_plan(spark, curated_env):
-    """--pack-seq-len emits the per-shard packing plan over exactly the
-    shipped corpus: every curated doc appears once, offsets tile each
-    shard gaplessly, and the sequence count matches the token mass."""
-    rows, tables, out = curated_env
-    out2 = out + "_packed"
-    args = curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out2, "--pack-seq-len", "512"])
-    stats = curate.run_curate(spark, args)
-    assert stats["packed_sequences"] > 0
-    plan = spark.read.parquet(out2 + "_packplan")
-    curated = spark.read.parquet(out2)
-    assert plan.count() == curated.filter("ws_tokens > 0").count()
-    # per-shard: running spans are contiguous from 0
-    for shard_rows in [list(g) for _, g in __import__("itertools").groupby(
-            sorted(plan.collect(), key=lambda r: (r["shard"], r["doc_id"])),
-            key=lambda r: r["shard"])]:
-        pos = 0
-        for r in shard_rows:
-            assert r["first_seq"] == pos // 512
-            assert r["start_in_seq"] == pos % 512
-            pos += r["n_tokens"]
-            assert r["last_seq"] == (pos - 1) // 512
-
-
-def test_curate_learned_gate_and_dsir_stages(spark, curated_env):
-    rows, tables, out = curated_env
-    base = curate.run_curate(spark, curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out + "_b2"]))
-
-    # learned gate: classifier distills the heuristic weak label; docs
-    # the model scores below 0.5 are dropped
-    lg = curate.run_curate(spark, curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out + "_lg",
-         "--learned-gate-min", "5000",
-         "--learned-gate-label-quality", "500000"]))
-    assert 0 < lg["docs"] <= base["docs"]
-    assert lg["learned_gate_min"] == 5000
-
-    # DSIR: keep the 60% most target-alike docs
-    ds = curate.run_curate(spark, curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out + "_ds",
-         "--dsir-keep-pct", "60"]))
-    assert 0 < ds["docs"] <= base["docs"]
-    assert "dsir_cutoff" in ds
-    # deterministic rerun: identical survivors
-    ds2 = curate.run_curate(spark, curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out + "_ds2",
-         "--dsir-keep-pct", "60"]))
-    a = sorted(r["doc_id"] for r in
-               spark.read.parquet(out + "_ds").select("doc_id").collect())
-    b = sorted(r["doc_id"] for r in
-               spark.read.parquet(out + "_ds2").select("doc_id").collect())
-    assert a == b and ds2["docs"] == ds["docs"]
-
-
-def test_curate_canonical_best_keeps_highest_quality(spark, tmp_path):
-    """--canonical best keeps the highest-quality cluster member even
-    when it has the LARGER id (the min-label rule would drop it)."""
-    from databricks_pdf_ocr_spark.sources.tables import TableIO
-
-    base = ("the cat and the dog went to the market and it was a fine "
-            "day for all of them to walk in the sun ") * 4
-    span = "array(named_struct('kind', 'text', 'text', {t}, " \
-           "'media_ref', cast(null as string), 'offset', 0L))"
-    df = spark.createDataFrame(
-        [("aaaa01", base + " ; : ! ? . , ; : ! ? . , ; : ! ? . ,"),
-         ("bbbb02", base)],                     # clean copy, larger id
-        "doc_id string, text string")
-    extracted = df.selectExpr("doc_id", span.format(t="text") + " AS spans")
-    tables = str(tmp_path / "tables")
-    TableIO(spark, tables).overwrite(extracted, "extracted_documents")
-
-    def kept(extra):
-        out = str(tmp_path / ("out_" + extra[-1].replace("=", ""))) \
-            if extra else str(tmp_path / "out_min")
-        args = curate.build_parser().parse_args(
-            ["--tables", tables, "--out", out] + extra)
-        curate.run_curate(spark, args)
-        return {r.doc_id for r in
-                spark.read.parquet(out).select("doc_id").collect()}
-
-    assert kept([]) == {"aaaa01"}                        # min-id rule
-    assert kept(["--canonical", "best"]) == {"bbbb02"}   # quality rule
-
-
-def test_curate_redact_pii_swaps_text_in_place(spark, tmp_path):
-    """--redact-pii scrubs the curated text (no join-back: text column
-    replaced in the final select) and lands the audit counts."""
-    from databricks_pdf_ocr_spark.sources.tables import TableIO
-
-    body = ("write to ops@example.com or 10.0.0.1 about the batch " +
-            "the cat and the dog went to the market on a fine day " * 3)
-    span = "array(named_struct('kind', 'text', 'text', '{t}', " \
-           "'media_ref', cast(null as string), 'offset', 0L))"
-    df = spark.createDataFrame([("r1",)], "doc_id string")
-    extracted = df.selectExpr("doc_id", span.format(t=body) + " AS spans")
-    tables = str(tmp_path / "tables")
-    TableIO(spark, tables).overwrite(extracted, "extracted_documents")
-
-    out = str(tmp_path / "out")
-    args = curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out, "--redact-pii"])
-    stats = curate.run_curate(spark, args)
-    assert stats["redact_pii"] is True and stats["docs"] == 1
-    row = spark.read.parquet(out).collect()[0]
-    assert "<EMAIL>" in row.text and "<IP>" in row.text
-    assert "ops@example.com" not in row.text
-    assert row.n_email == 1 and row.n_ip == 1 and row.n_phone == 0
-
-
-def test_curate_rule_gates(spark, curated_env):
-    """--gopher and --badwords-max-e6 drop in place (flag column form —
-    no join-back) and compose with the rest of the ladder."""
-    from databricks_pdf_ocr_spark.operators import text_analysis as T
-
-    rows, tables, out = curated_env
-    base = curate.run_curate(spark, curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out + "_rg_base"]))
-    gp = curate.run_curate(spark, curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out + "_rg_gopher", "--gopher"]))
-    assert 0 <= gp["docs"] <= base["docs"] and gp["gopher"] is True
-    bw = curate.run_curate(spark, curate.build_parser().parse_args(
-        ["--tables", tables, "--out", out + "_rg_bw",
-         "--badwords-max-e6", "1000000"]))       # 100% rate: keeps all
-    assert bw["docs"] == base["docs"]
-
-    # the flag forms agree with the oracled signal queries, keep every
-    # original column, and add no exchange to the plan
-    df = spark.createDataFrame(
-        [(1, "the data and that of sets have gone with " * 9, "en"),
-         (2, "tiny doc", "de")],
-        "doc_id long, text string, lang string")
-    flags = T.with_gopher_flag(df)
-    assert set(flags.columns) == {"doc_id", "text", "lang", "gopher_passes"}
-    sig = {r["doc_id"]: r["passes"] for r in T.gopher_rules(df).collect()}
-    assert {r["doc_id"]: r["gopher_passes"]
-            for r in flags.collect()} == sig
-    bflags = T.with_badwords_flag(df)
-    bsig = {r["doc_id"]: r["kept"] for r in T.badwords_gate(df).collect()}
-    assert {r["doc_id"]: r["badwords_kept"]
-            for r in bflags.collect()} == bsig
-    plan = flags._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan

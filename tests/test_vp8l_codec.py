@@ -40,7 +40,7 @@ def test_real_alph_stream_matches_png_alpha_byte_exact():
     png = (DATA / "python.png").read_bytes()
     w, h, ch, px = pngmini.decode_png(png)
     assert (w, h, ch) == (16, 16, 4)
-    plane = webpmini.webp_alpha(webp)
+    plane = webpmini.webp_decode(webp)[3][3::4]
     assert plane == bytes(px[3::4])
     # a real alpha plane, not a constant fill
     assert len(set(plane)) > 20
