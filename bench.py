@@ -53,8 +53,7 @@ def _docs(spark, sf_dir):
 # agreement between modes is pytest-asserted (tests/test_dedup_modes.py).
 def _minhash_lsh_fast(spark, sf_dir):
     from databricks_pdf_ocr_spark.operators import dedup
-    return dedup.minhash_lsh_pairs(_docs(spark, sf_dir), n=3, k=8, bands=4,
-                                   hash_mode="xxhash64")
+    return dedup.minhash_lsh_pairs(_docs(spark, sf_dir), hash_mode="xxhash64")
 
 
 def _simhash_fast(spark, sf_dir):

@@ -222,8 +222,13 @@ def prefix_filter_pairs(df: DataFrame, id_col: str = "doc_id",
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _minhash_signatures_fast(df: DataFrame, id_col: str, text_col: str,
-                             n: int, k: int) -> DataFrame:
+#: the MinHash shape, fixed for every caller and the DuckDB oracle: word
+#: ``NGRAM``-gram shingles, ``K`` signatures in ``BANDS`` bands, over
+#: ``(doc_id, text)`` rows
+NGRAM, K, BANDS = 3, 8, 4
+
+
+def _minhash_signatures_fast(df: DataFrame) -> DataFrame:
     """Production-mode signatures: one vectorized Arrow kernel, NO shuffle.
 
     The JVM oracle path (explode shingle strings → k hashes/row → group-min)
@@ -245,7 +250,8 @@ def _minhash_signatures_fast(df: DataFrame, id_col: str, text_col: str,
     """
     import pandas as pd
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    n, k = NGRAM, K
+    id_type = df.schema["doc_id"].dataType.simpleString()
     schema = f"id {id_type}, " + ", ".join(f"mh{i} long" for i in range(k))
 
     def kern(batches):
@@ -317,20 +323,18 @@ def _minhash_signatures_fast(df: DataFrame, id_col: str, text_col: str,
                 out[f"mh{i}"] = mins[i]
             yield pd.DataFrame(out)
 
-    return (df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+    return (df.select(F.col("doc_id").alias("id"), F.col("text").alias("t"))
             .mapInPandas(kern, schema=schema))
 
 
-def minhash_signatures_df(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text", n: int = 3,
-                          k: int = 8, hash_mode: str = "sha2") -> DataFrame:
-    """(id, mh0..mh{k-1}) via explode + grouped min.
+def minhash_signatures_df(df: DataFrame,
+                          hash_mode: str = "sha2") -> DataFrame:
+    """(id, mh0..mh{K-1}) via explode + grouped min.
 
-    Equivalent to :func:`minhash_signature` column expressions but shaped
-    for scale: one explode pass computes all k hashes per shingle row
-    (vs k duplicated whole-array transforms, which re-evaluate the
-    tokenize+shingle pipeline k times), then a single hash-agg takes the
-    k mins — map-side partial aggregation keeps the shuffle tiny.
+    Shaped for scale: one explode pass computes all K hashes per shingle
+    row (vs K duplicated whole-array transforms, which re-evaluate the
+    tokenize+shingle pipeline K times), then a single hash-agg takes the
+    K mins — map-side partial aggregation keeps the shuffle tiny.
 
     ``hash_mode``:
       - ``"sha2"`` (oracle mode): lexicographic min over hex digests —
@@ -341,22 +345,21 @@ def minhash_signatures_df(df: DataFrame, id_col: str = "doc_id",
         configuration to run at corpus scale.
     """
     if hash_mode == "xxhash64":
-        return _minhash_signatures_fast(df, id_col, text_col, n, k)
+        return _minhash_signatures_fast(df)
 
-    sh = (shingled(df, id_col, text_col, n)
+    sh = (shingled(df, n=NGRAM)
           .select("id", F.explode("shingles").alias("s")))
     hashed = sh.select("id", *[
         F.sha2(F.concat(F.lit(f"{s}:"), F.col("s")), 256).alias(f"h{s}")
-        for s in range(k)
+        for s in range(K)
     ])
     return hashed.groupBy("id").agg(*[
-        F.min(f"h{s}").alias(f"mh{s}") for s in range(k)
+        F.min(f"h{s}").alias(f"mh{s}") for s in range(K)
     ])
 
 
-def verify_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", n: int = 3,
-                 threshold: float = 0.3) -> DataFrame:
+def verify_pairs(df: DataFrame, pairs: DataFrame,
+                 threshold: float) -> DataFrame:
     """Exact n-gram-Jaccard verification of candidate pairs.
 
     LSH candidates are probabilistic: a band hash that draws a small value
@@ -387,8 +390,8 @@ def verify_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     ids = (pairs.select(F.col("doc_a").alias("__vid"))
            .union(pairs.select(F.col("doc_b")))
            .distinct())
-    cand_docs = df.join(ids, F.col(id_col) == F.col("__vid"), "left_semi")
-    sh = (shingled(cand_docs, id_col, text_col, n)
+    cand_docs = df.join(ids, F.col("doc_id") == F.col("__vid"), "left_semi")
+    sh = (shingled(cand_docs, n=NGRAM)
           .select(F.col("id").alias("__vid"),
                   F.array_distinct("shingles").alias("__sh")))
     j = (pairs
@@ -403,64 +406,80 @@ def verify_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
             .select(*pairs.columns, "jaccard"))
 
 
-def minhash_banded(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", n: int = 3, k: int = 8,
-                   bands: int = 4, hash_mode: str = "sha2") -> DataFrame:
+def minhash_banded(df: DataFrame, hash_mode: str) -> DataFrame:
     """Banded MinHash rows ``(id, band_idx, band_hash)`` — one row per
     (doc, band).  A pure per-document function of the frozen hash
     family, which is what makes the near-dup index incrementally
-    maintainable (``build_minhash_index``/``minhash_index_upsert``)."""
-    r = k // bands
-    assert bands * r == k, "k must divide into equal bands"
-    sig = minhash_signatures_df(df, id_col, text_col, n, k, hash_mode)
+    maintainable (:func:`minhash_index_upsert`)."""
+    r = K // BANDS
+    sig = minhash_signatures_df(df, hash_mode)
     if hash_mode == "xxhash64":
         band_cols = [
             F.xxhash64(*[F.col(f"mh{b * r + i}") for i in range(r)])
             .alias(f"band{b}")
-            for b in range(bands)
+            for b in range(BANDS)
         ]
     else:
         band_cols = [
             F.sha2(F.concat_ws(
                 "|", *[F.col(f"mh{b * r + i}") for i in range(r)]), 256)
             .alias(f"band{b}")
-            for b in range(bands)
+            for b in range(BANDS)
         ]
     return sig.select("id", F.posexplode(F.array(*band_cols))
                       .alias("band_idx", "band_hash"))
 
 
-def build_minhash_index(df: DataFrame, io, table: str = "minhash_index",
-                        id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 3, k: int = 8, bands: int = 4,
-                        hash_mode: str = "sha2") -> str:
-    """Persist the banded MinHash table — the text-dedup twin of
-    ``similarity.build_lsh_index``: at 100 TB the shingle→minhash
-    matmul over the historical corpus runs ONCE; each ingest batch
-    upserts its own signatures and generates candidates against the
-    stored banding instead of re-signing everything."""
-    io.overwrite(minhash_banded(df, id_col, text_col, n, k, bands,
-                                hash_mode), table)
-    return table
+def _band_pairs(banded: DataFrame, docs: DataFrame | None,
+                verify_threshold: float | None) -> DataFrame:
+    """THE band join: candidate pairs ``(doc_a < doc_b)`` touching at
+    least one ``new`` row of ``banded`` ``(id, band_idx, band_hash,
+    new)``.  Each pair is formed once: a new row pairs with every
+    higher-id row and with every old row; old↔old pairs are never formed
+    (earlier batches resolved them).  With ``new`` a literal true — the
+    batch case — the condition constant-folds to ``a.id < b.id``.
+
+    ``verify_threshold`` + ``docs``: second-rung exact-Jaccard
+    verification (:func:`verify_pairs`) over the pair texts."""
+    a, b = banded.filter(F.col("new")).alias("a"), banded.alias("b")
+    cand = (
+        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
+               & (F.col("a.band_hash") == F.col("b.band_hash"))
+               & ((F.col("a.id") < F.col("b.id")) | ~F.col("b.new")))
+        .select(F.least("a.id", "b.id").alias("doc_a"),
+                F.greatest("a.id", "b.id").alias("doc_b"))
+        .distinct()
+    )
+    if verify_threshold is None:
+        return cand
+    assert docs is not None, "verification needs the documents table"
+    # the verifier references the candidate set three times (id prune +
+    # both shingle joins) — materialize it so the band join + distinct
+    # run once, not three times; a corpus with no band collisions (the
+    # common clean case) then skips the verify subtree outright
+    cand = cand.localCheckpoint()
+    if cand.isEmpty():
+        return cand
+    return verify_pairs(docs, cand, verify_threshold).drop("jaccard")
 
 
 def minhash_index_upsert(io, new_docs: DataFrame,
                          table: str = "minhash_index",
-                         id_col: str = "doc_id", text_col: str = "text",
-                         n: int = 3, k: int = 8, bands: int = 4,
                          hash_mode: str = "sha2") -> int:
-    """Absorb an ingest delta: signatures are per-document, so the
-    upsert is the signature pipeline over ONLY the delta plus an
-    append; ids already indexed are skipped (anti-join on the pruned id
-    column — idempotent re-ingest).  Returns rows appended
-    (= |delta| × bands)."""
-    existing = io.read(table).select("id")
-    pending = new_docs.join(existing, F.col(id_col) == F.col("id"),
-                            "left_anti")
-    banded = minhash_banded(pending, id_col, text_col, n, k, bands,
-                            hash_mode).localCheckpoint()
+    """Absorb an ingest delta into the persisted banded MinHash table —
+    the text-dedup twin of ``similarity.build_lsh_index``.  Signatures
+    are per-document, so the upsert is the signature pipeline over ONLY
+    the delta plus an append; ids already indexed are skipped (anti-join
+    on the pruned id column — idempotent re-ingest), and a missing index
+    is an empty one, so the first upsert builds it — even from a delta
+    too short to sign, so the pair step always has a table to read.
+    Returns rows appended (= |delta| × BANDS)."""
+    existing = io.read(table)
+    pending = new_docs if existing is None else new_docs.join(
+        existing.select("id"), F.col("doc_id") == F.col("id"), "left_anti")
+    banded = minhash_banded(pending, hash_mode).localCheckpoint()
     cnt = banded.count()
-    if cnt:
+    if cnt or existing is None:
         io.append(banded, table)
     return int(cnt)
 
@@ -468,37 +487,21 @@ def minhash_index_upsert(io, new_docs: DataFrame,
 def minhash_lsh_pairs_incremental(io, new_ids: DataFrame,
                                   table: str = "minhash_index",
                                   docs: DataFrame | None = None,
-                                  id_col: str = "doc_id",
-                                  text_col: str = "text", n: int = 3,
                                   verify_threshold: float | None = None
                                   ) -> DataFrame:
-    """Candidate near-dup pairs TOUCHING the delta: the new side's
-    banded rows equi-join the FULL stored banding, so each ingest batch
-    pays |delta| × corpus-bucket work instead of corpus².  Old↔old
-    pairs were already resolved by earlier batches — exactly the
-    incremental dedup recursion a rolling crawl ingest runs.
+    """Candidate near-dup pairs TOUCHING the delta: the stored banding,
+    its delta rows flagged ``new``, through the one band join — each
+    ingest batch pays |delta| × corpus-bucket work instead of corpus².
+    Old↔old pairs were already resolved by earlier batches — exactly
+    the incremental dedup recursion a rolling crawl ingest runs.
 
     ``new_ids``: one-column (id) DataFrame of the delta's doc ids.
     ``verify_threshold`` + ``docs``: second-rung exact-Jaccard
     verification over the pair texts (the drop-safe configuration)."""
-    banded_all = io.read(table)
-    banded_new = banded_all.join(F.broadcast(new_ids.select("id")), "id",
-                                 "left_semi")
-    a, b = banded_new.alias("a"), banded_all.alias("b")
-    cand = (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_hash") == F.col("b.band_hash"))
-                   & (F.col("a.id") != F.col("b.id")))
-            .select(F.least("a.id", "b.id").alias("doc_a"),
-                    F.greatest("a.id", "b.id").alias("doc_b"))
-            .distinct())
-    if verify_threshold is None:
-        return cand
-    assert docs is not None, "verification needs the documents table"
-    cand = cand.localCheckpoint()
-    if cand.isEmpty():
-        return cand
-    return verify_pairs(docs, cand, id_col, text_col, n,
-                        threshold=verify_threshold).drop("jaccard")
+    flag = F.broadcast(new_ids.select("id", F.lit(True).alias("new")))
+    banded = (io.read(table).join(flag, "id", "left")
+              .withColumn("new", F.coalesce("new", F.lit(False))))
+    return _band_pairs(banded, docs, verify_threshold)
 
 
 def merge_components(old_labels: DataFrame, new_pairs: DataFrame,
@@ -525,18 +528,17 @@ def merge_components(old_labels: DataFrame, new_pairs: DataFrame,
                               max_iter=max_iter, stats=stats)
 
 
-def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", n: int = 3, k: int = 8,
-                      bands: int = 4, hash_mode: str = "sha2",
+def minhash_lsh_pairs(df: DataFrame, hash_mode: str = "sha2",
                       verify_threshold: float | None = None) -> DataFrame:
-    """Near-duplicate candidate pairs via banded MinHash LSH.
+    """Near-duplicate candidate pairs via banded MinHash LSH: the
+    incremental recursion with every document new.
 
-    k signatures split into ``bands`` bands of r = k/bands rows; docs
+    K signatures split into BANDS bands of r = K/BANDS rows; docs
     agreeing on any full band collide.  Plan: signatures (narrow, per-row)
-    → posexplode(band digests) → groupBy-join on (band_idx, band_hash) —
+    → posexplode(band digests) → self-join on (band_idx, band_hash) —
     the classic linear-scale near-dup pipeline (vs the quadratic
-    shingle join).  Empty-shingle docs (< n tokens) are excluded: their
-    null signatures would otherwise all-collide.
+    shingle join).  Empty-shingle docs (< NGRAM tokens) are excluded:
+    their null signatures would otherwise all-collide.
 
     ``hash_mode="xxhash64"`` is the production configuration (see
     :func:`minhash_signatures_df`); band digests are then xxhash64 longs
@@ -556,27 +558,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # TWICE (verified: two MapInPandas nodes in the r06 before-plan).
     # localCheckpoint computes it once; both sides read the materialized
     # partitions.  Same rows, half the signature work.
-    banded = minhash_banded(df, id_col, text_col, n, k, bands,
-                            hash_mode).localCheckpoint()
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.band_hash") == F.col("b.band_hash"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
-    if verify_threshold is None:
-        return cand
-    # the verifier references the candidate set three times (id prune +
-    # both shingle joins) — materialize it so the band join + distinct
-    # run once, not three times; a corpus with no band collisions (the
-    # common clean case) then skips the verify subtree outright
-    cand = cand.localCheckpoint()
-    if cand.isEmpty():
-        return cand
-    return verify_pairs(df, cand, id_col, text_col, n,
-                        threshold=verify_threshold).drop("jaccard")
+    banded = minhash_banded(df, hash_mode).localCheckpoint()
+    return _band_pairs(banded.withColumn("new", F.lit(True)), df,
+                       verify_threshold)
 
 
 def neardup_components(pairs: DataFrame, a_col: str = "doc_a",

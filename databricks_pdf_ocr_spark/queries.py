@@ -1778,7 +1778,7 @@ def dedup_minhash_verified(spark, sf_dir):
     exact n-gram Jaccard before any doc would be dropped (spurious
     near-zero-similarity band collisions exist in every hash family)."""
     return dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
-                                   n=3, k=8, bands=4, verify_threshold=0.3)
+                                   verify_threshold=0.3)
 
 
 @register("split_leakage", f"""
@@ -1813,8 +1813,7 @@ def split_leakage(spark, sf_dir):
         "doc_id",
         F.when(bucket < 90, "train").when(bucket < 95, "val")
         .otherwise("test").alias("split"))
-    pairs = dedup.minhash_lsh_pairs(docs, n=3, k=8, bands=4,
-                                    verify_threshold=0.3)
+    pairs = dedup.minhash_lsh_pairs(docs, verify_threshold=0.3)
     sa = splits.select(F.col("doc_id").alias("doc_a"),
                        F.col("split").alias("split_a"))
     sb = splits.select(F.col("doc_id").alias("doc_b"),
@@ -1847,7 +1846,7 @@ def dedup_minhash_incremental(spark, sf_dir):
     old = docs.filter(F.col("doc_id") < 350)
     new = docs.filter(F.col("doc_id") >= 350)
     io = TableIO(spark, tempfile.mkdtemp(prefix="mh_idx_"))
-    dedup.build_minhash_index(old, io)
+    dedup.minhash_index_upsert(io, old)
     n1 = dedup.minhash_index_upsert(io, new)
     n2 = dedup.minhash_index_upsert(io, new)      # idempotent re-run
     assert n1 > 0 and n2 == 0, (n1, n2)
@@ -1857,8 +1856,7 @@ def dedup_minhash_incremental(spark, sf_dir):
 
 @register("dedup_minhash_lsh", _minhash_sql())
 def dedup_minhash_lsh(spark, sf_dir):
-    return dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
-                                   n=3, k=8, bands=4)
+    return dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register("dedup_components", f"""
@@ -1881,7 +1879,7 @@ def dedup_components(spark, sf_dir):
     recursive-CTE reachability computing the identical min-reachable-id
     labeling from the identical verified pair set."""
     pairs = dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
-                                    n=3, k=8, bands=4, verify_threshold=0.3)
+                                    verify_threshold=0.3)
     return dedup.neardup_components(pairs).select(
         F.col("node").alias("doc_id"),
         F.col("comp").alias("component_id"))
@@ -1924,8 +1922,7 @@ def dedup_canonical_best(spark, sf_dir):
     ladder plugs quality_score_e6 / token counts through the same
     argmax."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, n=3, k=8, bands=4,
-                                    verify_threshold=0.3)
+    pairs = dedup.minhash_lsh_pairs(docs, verify_threshold=0.3)
     labels = dedup.neardup_components(pairs)
     w = W.partitionBy("component_id").orderBy(
         F.col("n_chars").desc(), F.col("kept_doc_id"))
@@ -1974,11 +1971,10 @@ def dedup_components_incremental(spark, sf_dir):
     old = docs.filter(F.col("doc_id") < 350)
     new = docs.filter(F.col("doc_id") >= 350)
     # historical state: labels from the old corpus's own pairs
-    old_labels = dedup.neardup_components(
-        dedup.minhash_lsh_pairs(old, n=3, k=8, bands=4))
+    old_labels = dedup.neardup_components(dedup.minhash_lsh_pairs(old))
     # delta candidates via the persisted index (delta-vs-all banding)
     io = TableIO(spark, tempfile.mkdtemp(prefix="mh_cc_"))
-    dedup.build_minhash_index(old, io)
+    dedup.minhash_index_upsert(io, old)
     dedup.minhash_index_upsert(io, new)
     delta_pairs = dedup.minhash_lsh_pairs_incremental(
         io, new.select(F.col("doc_id").alias("id")))
@@ -3358,11 +3354,10 @@ FROM ({_verified_pairs_sql()}) t
 """)
 def dedup_modes_agree(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    sha = dedup.minhash_lsh_pairs(docs, n=3, k=8, bands=4,
-                                  verify_threshold=0.3) \
+    sha = dedup.minhash_lsh_pairs(docs, verify_threshold=0.3) \
         .select("doc_a", "doc_b")
-    xx = dedup.minhash_lsh_pairs(docs, n=3, k=8, bands=4,
-                                 hash_mode="xxhash64", verify_threshold=0.3) \
+    xx = dedup.minhash_lsh_pairs(docs, hash_mode="xxhash64",
+                                 verify_threshold=0.3) \
         .select("doc_a", "doc_b")
     inter = sha.intersect(xx)
     union = sha.union(xx).distinct()

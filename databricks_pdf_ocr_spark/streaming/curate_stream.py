@@ -3,18 +3,21 @@
 The rolling-ingest dedup recursion (``dedup.minhash_index_upsert`` →
 ``minhash_lsh_pairs_incremental`` → ``merge_components``) driven by
 Structured Streaming ``foreachBatch``: each micro-batch of crawl
-documents lands in the corpus table, upserts ONLY its own MinHash
-signatures into the persisted banded index, generates candidate pairs
-delta-vs-all (never corpus²), exact-Jaccard-verifies them, and folds
-them into the persisted component labeling via the star-collapse merge.
+documents upserts ONLY its own MinHash signatures into the persisted
+banded index, generates candidate pairs delta-vs-all (never corpus²),
+exact-Jaccard-verifies them, folds them into the persisted component
+labeling via the star-collapse merge, and lands in the corpus table.
 State between batches is the three tables, not a Spark state store —
 restartable, inspectable, and exactly the layout the batch jobs use.
 
-Idempotence under foreachBatch's at-least-once replay: the corpus land
-and the index upsert both anti-join the delta against what is already
-stored (a replayed batch appends nothing), and the label merge is a
-pure function of (index, corpus) state so re-running it rewrites the
-same labeling; the label swap itself is the crash-safe
+Idempotence under foreachBatch's at-least-once replay: the corpus
+append is the batch's LAST write — its commit point.  The delta is the
+batch minus the corpus, so a batch whose corpus append landed replays
+as a no-op; a batch that crashed anywhere before it replays in full.
+The index upsert anti-joins what is already indexed (a replay appends
+nothing), the pairs are verified against ``corpus ∪ delta``, the label
+merge is a pure function of (labels, pairs) so re-running it rewrites
+the same labeling, and the label swap itself is the crash-safe
 ``TableIO.replace_table`` two-rename hop.
 
 Reference analogue: none — the reference's ingestion stream lands files
@@ -27,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import dedup
+from ..operators import curate, dedup
 from ..sources.tables import make_table_io
 
 CORPUS_TABLE = "dedup_corpus"
@@ -36,10 +39,10 @@ LABELS_TABLE = "dedup_labels"
 
 
 def dedup_batch(spark: SparkSession, io, batch_df: DataFrame,
-                verify_threshold: float = 0.3,
-                hash_mode: str = "sha2") -> dict:
+                hash_mode: str) -> dict:
     """One rolling-dedup step: absorb a (doc_id, text) delta into the
-    corpus/index/labels tables.  Returns control-plane stats."""
+    index/labels/corpus tables, corpus last.  Returns control-plane
+    stats."""
     batch_df = batch_df.select("doc_id", "text").localCheckpoint()
 
     existing = io.read(CORPUS_TABLE)
@@ -53,22 +56,11 @@ def dedup_batch(spark: SparkSession, io, batch_df: DataFrame,
     if n_new == 0:
         return {"new_docs": 0, "new_pairs": 0}
 
-    if existing is None:
-        io.overwrite(delta, CORPUS_TABLE)
-    else:
-        io.append(delta, CORPUS_TABLE)
-
-    if io.read(INDEX_TABLE) is None:
-        dedup.build_minhash_index(delta, io, INDEX_TABLE,
-                                  hash_mode=hash_mode)
-    else:
-        dedup.minhash_index_upsert(io, delta, INDEX_TABLE,
-                                   hash_mode=hash_mode)
-
-    corpus = io.read(CORPUS_TABLE)
+    dedup.minhash_index_upsert(io, delta, INDEX_TABLE, hash_mode=hash_mode)
+    docs = delta if existing is None else existing.unionByName(delta)
     pairs = dedup.minhash_lsh_pairs_incremental(
         io, delta.select(F.col("doc_id").alias("id")), INDEX_TABLE,
-        docs=corpus, verify_threshold=verify_threshold).localCheckpoint()
+        docs=docs, verify_threshold=curate.NEARDUP_JACCARD).localCheckpoint()
     n_pairs = pairs.count()                    # pair-bounded scalar
 
     old_labels = io.read(LABELS_TABLE)
@@ -78,6 +70,7 @@ def dedup_batch(spark: SparkSession, io, batch_df: DataFrame,
         labels = dedup.merge_components(old_labels, pairs)
     io.overwrite(labels, LABELS_TABLE + "__staged")
     io.replace_table(LABELS_TABLE + "__staged", LABELS_TABLE)
+    io.append(delta, CORPUS_TABLE)             # the batch's commit point
     return {"new_docs": int(n_new), "new_pairs": int(n_pairs)}
 
 
@@ -96,9 +89,7 @@ def canonical_docs(io) -> DataFrame:
 
 def start_dedup_stream(spark: SparkSession, input_dir: str,
                        tables_dir: str, checkpoint_dir: str,
-                       verify_threshold: float = 0.3,
-                       hash_mode: str = "sha2",
-                       available_now: bool = True):
+                       hash_mode: str, available_now: bool = True):
     """(doc_id, text) parquet stream → continuously deduplicated
     corpus/index/labels tables."""
     io = make_table_io(spark, tables_dir)
@@ -107,7 +98,7 @@ def start_dedup_stream(spark: SparkSession, input_dir: str,
               .parquet(input_dir))
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        dedup_batch(spark, io, batch_df, verify_threshold, hash_mode)
+        dedup_batch(spark, io, batch_df, hash_mode)
 
     writer = (stream.writeStream
               .foreachBatch(process_batch)

@@ -2,7 +2,7 @@
 
     spark-submit --py-files dist/databricks_pdf_ocr_spark.zip \\
         jobs/dedup_stream.py --input /landing/docs --tables /tmp/t \\
-        [--continuous] [--hash-mode xxhash64] [--verify-jaccard 0.3]
+        [--continuous] [--hash-mode xxhash64]
 
 Drains a (doc_id, text) parquet landing dir through the rolling dedup
 recursion (`streaming/curate_stream.py`): per micro-batch signature
@@ -33,8 +33,7 @@ def run_job(spark, args) -> dict:
     q = cs.start_dedup_stream(
         spark, args.input, args.tables, args.checkpoint
         or args.tables + "/_dedup_stream_ck",
-        verify_threshold=args.verify_jaccard, hash_mode=args.hash_mode,
-        available_now=not args.continuous)
+        hash_mode=args.hash_mode, available_now=not args.continuous)
     q.awaitTermination()
     io = make_table_io(spark, args.tables)
     if args.compact:
@@ -61,7 +60,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="stream checkpoint dir (default: under --tables)")
     ap.add_argument("--hash-mode", default="xxhash64",
                     choices=["xxhash64", "sha2"])
-    ap.add_argument("--verify-jaccard", type=float, default=0.3)
     ap.add_argument("--compact", action="store_true",
                     help="after the drain, rewrite the append-grown "
                          "corpus/index tables into single files "

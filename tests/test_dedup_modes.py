@@ -8,6 +8,7 @@ band parameters) must be found by both.
 """
 
 import random
+import re
 
 import pytest
 
@@ -39,8 +40,7 @@ def corpus(spark):
 @pytest.mark.parametrize("mode", ["sha2", "xxhash64"])
 def test_minhash_lsh_finds_planted_dups(corpus, mode):
     pairs = {(r["doc_a"], r["doc_b"]) for r in
-             dedup.minhash_lsh_pairs(corpus, n=3, k=8, bands=4,
-                                     hash_mode=mode).collect()}
+             dedup.minhash_lsh_pairs(corpus, hash_mode=mode).collect()}
     assert ("dup_a", "dup_b") in pairs
     assert ("near_a", "near_b") in pairs
 
@@ -147,9 +147,12 @@ def test_neardup_components_random_graphs_vs_union_find(spark, seed):
 
 
 def test_minhash_incremental_equals_from_scratch(spark, tmp_path):
-    """Production mode (xxhash64): build on old + upsert delta +
-    delta-vs-all candidates must equal the from-scratch full-corpus
-    pairs restricted to pairs touching the delta — in BOTH hash modes."""
+    """Index upserts + delta-vs-all candidates must equal the
+    from-scratch full-corpus pairs restricted to pairs touching the
+    delta: in BOTH hash modes; with delta = everything upserted into an
+    empty index (exactly the batch pairs — batch IS the incremental path
+    with every document new); and verified (the stream's configuration)
+    against the batch-verified pairs."""
     from pyspark.sql import functions as F
 
     from databricks_pdf_ocr_spark.sources.tables import TableIO
@@ -158,18 +161,42 @@ def test_minhash_incremental_equals_from_scratch(spark, tmp_path):
             .select("doc_id", "text"))
     old = docs.filter(F.col("doc_id") < 350)
     new = docs.filter(F.col("doc_id") >= 350)
-    for mode in ("xxhash64", "sha2"):
-        io = TableIO(spark, str(tmp_path / f"idx_{mode}"))
-        dedup.build_minhash_index(old, io, hash_mode=mode)
-        assert dedup.minhash_index_upsert(io, new, hash_mode=mode) > 0
-        assert dedup.minhash_index_upsert(io, new, hash_mode=mode) == 0
+    # (case, indexed before the delta, delta, hash mode, verify threshold)
+    cases = [("xxhash64", old, new, "xxhash64", None),
+             ("sha2", old, new, "sha2", None),
+             ("everything", None, docs, "sha2", None),
+             ("verified", old, new, "xxhash64", 0.3)]
+    for case, base, delta, mode, thr in cases:
+        io = TableIO(spark, str(tmp_path / f"idx_{case}"))
+        if base is not None:
+            assert dedup.minhash_index_upsert(io, base, hash_mode=mode) > 0
+        assert dedup.minhash_index_upsert(io, delta, hash_mode=mode) > 0
+        assert dedup.minhash_index_upsert(io, delta, hash_mode=mode) == 0
+        delta_ids = {r["doc_id"] for r in delta.select("doc_id").collect()}
         inc = {(r["doc_a"], r["doc_b"]) for r in
                dedup.minhash_lsh_pairs_incremental(
-                   io, new.select(F.col("doc_id").alias("id"))).collect()}
+                   io, delta.select(F.col("doc_id").alias("id")),
+                   docs=docs, verify_threshold=thr).collect()}
         full = {(r["doc_a"], r["doc_b"]) for r in
-                dedup.minhash_lsh_pairs(docs, hash_mode=mode).collect()
-                if r["doc_a"] >= 350 or r["doc_b"] >= 350}
-        assert inc == full, mode
+                dedup.minhash_lsh_pairs(docs, hash_mode=mode,
+                                        verify_threshold=thr).collect()
+                if r["doc_a"] in delta_ids or r["doc_b"] in delta_ids}
+        assert full, case                      # non-vacuous comparison
+        assert inc == full, case
+
+
+def test_batch_lsh_forms_each_pair_once(corpus):
+    """Batch pairs run the incremental band join with every row new: the
+    ``new`` flag must constant-fold away, leaving ONE band join on
+    ``a.id < b.id`` and no OR — each candidate is formed once, never
+    from both sides of the join."""
+    plan = (dedup.minhash_lsh_pairs(corpus)
+            ._jdf.queryExecution().executedPlan().toString())
+    joins = [ln for ln in plan.splitlines()
+             if re.search(r"(HashJoin|SortMergeJoin|NestedLoopJoin) ", ln)]
+    assert len(joins) == 1, plan
+    assert re.search(r"\(id#\d+L? < id#\d+L?\)", joins[0]), plan
+    assert " OR " not in plan, plan
 
 
 def test_merge_components_equals_from_scratch(spark):

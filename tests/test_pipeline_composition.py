@@ -34,7 +34,7 @@ def test_curation_over_extracted_output(spark):
         assert any(g["n_dups"] == 2 for g in dup_groups)
 
         # near-dup candidates include the exact pairs too
-        pairs = dedup.minhash_lsh_pairs(corpus, n=3, k=8, bands=4).collect()
+        pairs = dedup.minhash_lsh_pairs(corpus).collect()
         pair_set = {(p["doc_a"], p["doc_b"]) for p in pairs}
         a, b = sorted([rows[0][0], "dup-of-0"])
         assert (a, b) in pair_set
