@@ -6,19 +6,16 @@ shaped the reference's behavior (max payload size guard, page cap, batch
 caps) plus the scale knobs the north rule mandates (salt buckets,
 partition counts).
 
-``load_config`` reproduces the reference's dev/test/prod layering
-(Dynaconf ``environments=true`` + ``envvar_prefix``,
-``config.py:22-30``) with stdlib only:
-
-    dataclass defaults < TOML [default] < TOML [<env>]
-                       < ENGINE_<FIELD> env vars < explicit overrides
+A run's configuration has one source: the job's flags applied over the
+``ExtractConfig`` defaults (``load_config``).  There is no settings file
+and no environment-variable layer — a file found next to the package
+does not exist once the package ships as a ``--py-files`` zip.
 """
 
 from __future__ import annotations
 
 import json
-import os
-from dataclasses import asdict, dataclass, fields
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -51,7 +48,6 @@ class ExtractConfig:
     #: implementing them; functions/extract_span.py does)
     max_retries: int = 2
     retry_backoff_s: float = 0.0
-    ocr_model: str = "ocr-fallback-deterministic-v1"
     #: repartition spans on (doc_id, offset) before extraction.  OFF by
     #: default: shuffling raw payload bytes is the wrong plan at 100 TB —
     #: extraction is a narrow map over the scan, and the only shuffle
@@ -66,64 +62,11 @@ class ExtractConfig:
         return json.dumps(d, sort_keys=True)
 
 
-def _coerce(field_type: str, raw):
-    if field_type.startswith("int"):
-        return int(raw)
-    if field_type.startswith("float"):
-        return float(raw)
-    if field_type == "bool":
-        if isinstance(raw, bool):
-            return raw
-        return str(raw).strip().lower() in ("1", "true", "yes", "on")
-    if field_type.startswith("tuple"):
-        if isinstance(raw, (list, tuple)):
-            return tuple(raw)
-        return tuple(x for x in str(raw).split(",") if x)
-    return raw
-
-
-def load_config(env: str | None = None,
-                config_file: str | None = None,
-                overrides: dict | None = None) -> ExtractConfig:
-    """Layered configuration, lowest to highest precedence:
-
-    1. ``ExtractConfig`` dataclass defaults
-    2. ``[default]`` section of the TOML file (``config_file`` arg, or
-       ``$ENGINE_SETTINGS_FILE``, or ``settings.toml`` next to the repo
-       root if present)
-    3. ``[<env>]`` section — env from the arg or ``$ENGINE_ENV``
-       (reference: ``ENV_FOR_DYNACONF``), default ``dev``
-    4. ``ENGINE_<FIELD>`` environment variables (reference:
-       ``PDF_OCR_<name>`` via ``envvar_prefix``)
-    5. explicit ``overrides`` (CLI flags win over everything)
-    """
-    layered: dict = {}
-    known = {f.name: str(f.type) for f in fields(ExtractConfig)}
-
-    path = config_file or os.environ.get("ENGINE_SETTINGS_FILE")
-    if path is None:
-        candidate = os.path.join(os.path.dirname(__file__), os.pardir,
-                                 "settings.toml")
-        path = candidate if os.path.exists(candidate) else None
-    if path:
-        import tomllib
-        with open(path, "rb") as fh:
-            doc = tomllib.load(fh)
-        env_name = env or os.environ.get("ENGINE_ENV", "dev")
-        for section in ("default", env_name):
-            for key, val in doc.get(section, {}).items():
-                if key in known:
-                    layered[key] = _coerce(known[key], val)
-
-    for name, ftype in known.items():
-        raw = os.environ.get(f"ENGINE_{name.upper()}")
-        if raw is not None:
-            layered[name] = _coerce(ftype, raw)
-
-    for key, val in (overrides or {}).items():
-        if val is not None:
-            layered[key] = val
-    return ExtractConfig(**layered)
+def load_config(overrides: dict | None = None) -> ExtractConfig:
+    """``ExtractConfig`` defaults with the non-``None`` ``overrides``
+    (the job's flags; ``None`` means the flag was not given)."""
+    return ExtractConfig(**{k: v for k, v in (overrides or {}).items()
+                            if v is not None})
 
 
 #: Small-payload config used by unit tests — a 64 KiB size guard lets

@@ -20,6 +20,9 @@ from __future__ import annotations
 
 import hashlib
 
+#: the model name every extraction results row carries (``ocr_model``)
+OCR_MODEL = "ocr-fallback-deterministic-v1"
+
 LABELS = ("figure", "chart", "table", "photo", "diagram", "map", "equation", "logo")
 
 

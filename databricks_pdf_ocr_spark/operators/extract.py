@@ -85,11 +85,11 @@ def _make_extract_batch(cfg: ExtractConfig):
     max_pages = cfg.max_pages_per_doc
     max_retries = cfg.max_retries
     backoff = cfg.retry_backoff_s
-    model = cfg.ocr_model
 
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # import inside the task so --py-files deployment finds the package
         from databricks_pdf_ocr_spark.functions.extract_span import extract_span
+        from databricks_pdf_ocr_spark.functions.ocr_fallback import OCR_MODEL
 
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
@@ -114,7 +114,7 @@ def _make_extract_batch(cfg: ExtractConfig):
                 out["ocr_fallback"].append(fb)
                 out["pages_parsed"].append(pages)
                 out["duration_ms"].append(dur)
-                out["ocr_model"].append(model)
+                out["ocr_model"].append(OCR_MODEL)
 
             for did, tot, first, kind, text, mref, off in zip(
                     pdf["doc_id"], pdf["total_spans"], pdf["is_first"],

@@ -2,9 +2,13 @@
 
 Sandbox stand-in for the north rule's two-cluster-size requirement
 (N vs 4N executors): runs the *identical* extraction job via
-``spark-submit --py-files`` at ``local[8]`` and ``local[32]`` on the same
+``spark-submit --py-files`` at ``local[N]`` and ``local[4N]`` on the same
 materialized fixture input and reports docs/sec at both plus
 efficiency = (throughput_4N / throughput_N) / 4 (target ≥ 0.8).
+4N defaults to the CPUs this process may use, N to a quarter of that.
+
+Each recorded run appends a dated section to ``BENCH/BASELINE.md``;
+``BENCH/best.json`` is replaced only by a better efficiency.
 
 Usage: python jobs/bench_scaling.py [--docs 3000] [--n 8] [--xn 32]
 """
@@ -162,11 +166,51 @@ def mem_calibration(n: int, xn: int) -> float:
     return _mp_scaling(_burn_mem, n, xn)
 
 
+def record(report: dict, bench_dir: Path = REPO / "BENCH") -> bool:
+    """Append a dated section for ``report`` to ``bench_dir/BASELINE.md``
+    (earlier sections, curated disclosures included, stay as written) and
+    replace ``bench_dir/best.json`` only when ``report``'s efficiency beats
+    it.  Returns whether ``best.json`` was replaced."""
+    bench_dir.mkdir(exist_ok=True)
+    md = bench_dir / "BASELINE.md"
+    n, xn = report["n_cores"], report["xn_cores"]
+    stamp = time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime())
+    with md.open("a") as fh:
+        fh.write(f"""
+## {stamp}: N={n} → {xn}, {report['docs']} docs, efficiency \
+{report['scaling_efficiency']}
+
+| cores | wall (job-internal) | docs/sec |
+| ---: | ---: | ---: |
+| local[{n}] (N) | {report['elapsed_n_sec']} s | {report['docs_per_sec_n']} |
+| local[{xn}] (4N) | {report['elapsed_xn_sec']} s | {report['docs_per_sec_xn']} |
+
+Scaling efficiency = (thr_4N / thr_N) / {xn / n:g} =
+{report['scaling_efficiency']} (target ≥ 0.8 → \
+{"PASS" if report['pass'] else "FAIL"}); normalized by the best cpu ceiling:
+{report['normalized_efficiency']}.  Host N→4N ceilings measured before
+each trial: cpu {report['hw_ceiling_trials']}, memory
+{report['mem_ceiling_trials']}.
+
+Raw: `{json.dumps(report)}`
+""")
+    best = bench_dir / "best.json"
+    if best.exists():
+        prev = json.loads(best.read_text())
+        if prev.get("scaling_efficiency", 0) >= report["scaling_efficiency"]:
+            return False
+    best.write_text(json.dumps(report))
+    return True
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=120000)
-    ap.add_argument("--n", type=int, default=8)
-    ap.add_argument("--xn", type=int, default=32)
+    ap.add_argument("--n", type=int, default=None,
+                    help="N side cores (default: a quarter of --xn)")
+    ap.add_argument("--xn", type=int, default=len(os.sched_getaffinity(0)),
+                    help="4N side cores (default: the CPUs this process "
+                         "may use)")
     ap.add_argument("--trials", type=int, default=2,
                     help="repeat each size, keep the fastest (the sandbox VM "
                          "shares a host; best-of filters neighbor noise)")
@@ -188,6 +232,8 @@ def main() -> int:
                     help="print the report but do not update "
                          "BENCH/best.json or BASELINE.md (comparison runs)")
     args = ap.parse_args()
+    if args.n is None:
+        args.n = max(1, args.xn // 4)
 
     zpath = build_zip()
     input_path = materialize_input(args.docs)
@@ -263,112 +309,10 @@ def main() -> int:
         return 0 if report["pass"] else 1
 
     # keep the best evidence across invocations: the shared host's capacity
-    # drifts, so the round's record is the best measured window
-    best_path = REPO / "BENCH" / "best.json"
-    best_path.parent.mkdir(exist_ok=True)
-    if best_path.exists():
-        prev = json.loads(best_path.read_text())
-        if prev.get("scaling_efficiency", 0) >= report["scaling_efficiency"]:
-            print(f"kept previous best {prev['scaling_efficiency']} >= "
-                  f"{report['scaling_efficiency']}", file=sys.stderr)
-            return 0 if prev.get("pass") else 1
-    best_path.write_text(json.dumps(report))
-
-    md = REPO / "BENCH" / "BASELINE.md"
-    md.parent.mkdir(exist_ok=True)
-    md.write_text(f"""# BENCH/BASELINE — two-parallelism scaling evidence
-
-North-rule protocol (BASELINE.md): identical extraction job, identical
-deterministic fixture input ({args.docs} docs, seed 42, BENCH_HEAVY profile —
-interleaved text/html/pdf/image spans incl. heavy skewed docs), run via
-`taskset -c 0-(cores-1) spark-submit --py-files
-dist/databricks_pdf_ocr_spark.zip jobs/extract.py` at two pinned
-parallelism levels as the sandbox stand-in for N vs 4N executors.
-Each run = scan → explode → Arrow-batched extraction (narrow map, no
-payload shuffle) → results write → per-bucket lineage mark.
-
-| cores | wall (job-internal) | docs/sec |
-| ---: | ---: | ---: |
-| local[{args.n}] (N) | {lo['elapsed_sec']} s | {report['docs_per_sec_n']} |
-| local[{args.xn}] (4N) | {hi['elapsed_sec']} s | {report['docs_per_sec_xn']} |
-
-**Scaling efficiency = (thr_4N / thr_N) / {factor:.0f} =
-{report['scaling_efficiency']}** (target ≥ 0.8 → {"PASS" if report['pass'] else "FAIL"}).
-
-## Fixed per-run cost (round-3 reduction + amortization)
-
-The bucket-partitioned layout + exact run-stamped lineage (round-2
-correctness properties) carry a size-independent per-run cost.  Round 3
-halved it structurally — doc counts are `sum(is_first_span)` instead of a
-count-distinct Expand, reads supply explicit schemas (no footer-sampling
-inference jobs), and the ≤ n_buckets lineage rows are written driver-side
-(`TableIO.append_rows`) instead of paying a ~1.7 s Spark committer write —
-measured select+mark 5.8 s → ~3.4 s at 40 k docs / 32 cores.  The
-remainder is first-execution codegen + driver plan analysis; the
-protocol runs at {args.docs} docs so it amortizes (it is noise at the
-north rule's real 10^12-doc scale).  Compare `phase_extract_write_sec`
-(printed per run) for stage-level scaling.
-
-## Host-capacity calibration + disclosure
-
-This sandbox VM shares a physical host whose deliverable CPU drifts >2x
-over tens of minutes: the attainable N→4N speedup for embarrassingly-
-parallel pure-Python multiprocessing (no Spark, no I/O) was measured
-immediately before each trial at {report['hw_ceiling_trials']}
-(1.0 = perfect).  Engine efficiency normalized by the best
-simultaneously-measured ceiling: **{report['normalized_efficiency']}**.
-
-A second per-trial probe measures the N→4N scaling of pure
-memory-STREAMING work (256 MB/proc numpy passes, far past LLC):
-{report['mem_ceiling_trials']}.  The VM's shared memory buses often
-scale far worse than its cores (readings of 0.3–0.5 are common while
-the cpu ceiling shows 0.6–0.9), and extraction — Arrow batches, parquet
-encode, shuffle, GC — is partially bandwidth-bound, so its attainable
-efficiency sits between the two probes.  This constraint is an artifact
-of emulating 4N executors on ONE shared memory system: a real 4N-node
-cluster brings 4x the memory buses, so per-node bandwidth per core is
-constant and this term disappears.
-
-Raw per-run efficiencies across sessions ranged ~0.2–1.0 purely with
-host noise (git history of this file records them).  A reported
-efficiency slightly > 1.0 at small N is expected structure, not noise:
-the driver JVM's fixed service threads (scheduler, Netty, GC workers)
-compete for only N pinned cores on the N side — a tax that vanishes as
-N grows and does not exist for real multi-node executors.  Efficiency
-far above the ceiling means the N-side half of that pairing was
-noise-degraded — read this file's table together with the ceiling
-numbers.  Rerun `python jobs/bench_scaling.py` to reproduce under
-current conditions.
-
-Conf: shuffle.partitions = cores; AQE on; Arrow maxRecordsPerBatch=256;
-12g driver heap (larger heaps caused 30s full-GC pauses after the
-allocation-heavy extraction stage; G1 young-gen floored at 40% — G1
-otherwise shrinks young chasing the pause goal under the 4x allocation
-rate at 32 cores, costing 194 s vs 134 s GC task-seconds);
-`--split-mb 8` fine input splits (compute-bound scan: 128 MB default
-splits degenerate to ~1 unbalanced task wave per core, measured via
-event-log stage analysis); results repartitioned by bucket and
-written `partitionBy(bucket)` (one file per touched bucket per run —
-directory-pruned lineage re-scan and incremental reassembly); lineage
-aggregates a column-pruned, run_id-filtered projection.  Skew: heavy
-multi-hundred-span docs are balanced by fine input splits; the optional
-salted span repartition (`salt_spans`) covers pathological
-single-doc skew.  Salt A/B at 4N (interleaved ×2, 40 k BENCH_HEAVY,
-min-of-2): salt OFF 31.3 s vs salt ON 31.8 s extract+write — identical
-within noise, i.e. the fine-split scan already load-balances this
-profile's skew; keep salt OFF as the default and reserve `--salt` for
-inputs where single docs rival a whole split.
-
-Raw: `{json.dumps(report)}`
-
-Reference comparison (BASELINE.md): the reference processes ~0.7–1.1
-docs/min sequentially (1 model-serving call per page in a driver loop);
-this engine's hermetic executor-side extraction sustains
-{report['docs_per_sec_xn']} docs/sec on one 32-core box — ~5 orders of
-magnitude — and the narrow-map design scales it linearly with executors
-on a real cluster.
-""")
-    print(f"wrote {md}", file=sys.stderr)
+    # drifts, so the record is the best measured window
+    if not record(report):
+        print("kept the previous best in BENCH/best.json", file=sys.stderr)
+    print("appended to BENCH/BASELINE.md", file=sys.stderr)
     return 0 if report["pass"] else 1
 
 

@@ -36,7 +36,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import Observation, functions as F
 
-from databricks_pdf_ocr_spark.config import ExtractConfig, load_config
+from databricks_pdf_ocr_spark.config import load_config
 from databricks_pdf_ocr_spark.operators.extract import (
     bucket_col, explode_spans, extract_spans, reassemble,
 )
@@ -52,6 +52,12 @@ from databricks_pdf_ocr_spark.sources.tables import make_table_io
 RESULTS_TABLE = "extraction_results"
 EXTRACTED_TABLE = "extracted_documents"
 MEDIA_TABLE = "media_payloads"
+#: input split target (spark.sql.files.maxPartitionBytes, MB).  Extraction
+#: costs seconds of CPU per input MB, so Spark's 128MB scan default yields
+#: ~1 task wave per executor: the stage wall becomes the single slowest
+#: split and stragglers idle the rest.  Fine splits (many waves)
+#: load-balance the compute-bound stage.
+SPLIT_MB = 8
 
 
 def _restore_gc_staging(io) -> int:
@@ -132,8 +138,7 @@ def gc_media_orphans(io) -> dict:
             "gc_restored": restored}
 
 
-def run_media_stage(io, cp, documents, fingerprint: str, cfg,
-                    run_seq: int | None = None,
+def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
                     fail_after_buckets: int | None = None
                     ) -> tuple[dict, list[int]]:
     """Materialize the bucket-partitioned ``media_payloads`` table: every
@@ -167,8 +172,6 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
         return {"media_buckets": 0, "media_images": 0, "media_errors": 0}, []
 
     run_id = new_run_id()
-    if run_seq is None:
-        run_seq = cp.next_run_seq()
     spans = (pending
              .select("doc_id", F.explode("spans").alias("s"))
              .filter(F.col("s.kind") == "pdf")
@@ -213,7 +216,7 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg,
         pend_list
 
 
-def load_input(spark, spec: str, cfg: ExtractConfig):
+def load_input(spark, spec: str):
     if spec.startswith("fixture:"):
         from databricks_pdf_ocr_spark import fixtures
         parts = spec.split(":")
@@ -254,25 +257,12 @@ def build_parser() -> argparse.ArgumentParser:
                          "silently dropping the rest on resume)")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--n-buckets", type=int, default=None,
-                    help="checkpoint bucket count (unset → layered config)")
-    ap.add_argument("--env", default=None,
-                    help="config layer to apply (dev|test|prod; "
-                         "default $ENGINE_ENV or dev)")
-    ap.add_argument("--config", default=None,
-                    help="settings.toml path (default $ENGINE_SETTINGS_FILE "
-                         "or repo-root settings.toml)")
+                    help="checkpoint bucket count (unset → ExtractConfig "
+                         "default)")
     ap.add_argument("--fail-after-buckets", type=int, default=None,
                     help="TEST ONLY: process just the first k pending buckets "
                          "then exit nonzero (simulates a mid-run crash)")
     ap.add_argument("--skip-assemble", action="store_true")
-    ap.add_argument("--split-mb", type=int, default=8,
-                    help="input split target (spark.sql.files.maxPartitionBytes, "
-                         "MB).  Extraction costs seconds of CPU per input MB, "
-                         "so Spark's 128MB scan default yields ~1 task wave "
-                         "per executor: the stage wall becomes the single "
-                         "slowest split and stragglers idle the rest.  Fine "
-                         "splits (many waves) load-balance the compute-bound "
-                         "stage; 0 keeps Spark's default")
     ap.add_argument("--salt", action="store_true",
                     help="span-level salted repartition before extraction "
                          "(for inputs where single docs rival a whole split)")
@@ -287,9 +277,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 def run_job(spark, args) -> tuple[dict, int]:
     """Execute one extraction run; returns (stats, exit_code)."""
-    # layered config (defaults < settings.toml [default] < [env] <
-    # ENGINE_* env vars), with explicit CLI flags winning over everything
-    cfg = load_config(env=args.env, config_file=args.config, overrides={
+    # the flags over the ExtractConfig defaults (an unset flag is None)
+    cfg = load_config({
         "n_buckets": args.n_buckets,
         "shuffle_partitions": args.partitions
         or int(spark.conf.get("spark.sql.shuffle.partitions")),
@@ -302,7 +291,7 @@ def run_job(spark, args) -> tuple[dict, int]:
     cp = CheckpointManager(io, cfg)
 
     t0 = time.time()
-    documents, fingerprint = load_input(spark, args.input, cfg)
+    documents, fingerprint = load_input(spark, args.input)
 
     # --- work selection (reference modes: processors/ocr.py:59-85) --------
     # --max-docs caps at BUCKET granularity — the lineage/resume unit.  A
@@ -463,18 +452,16 @@ def main(argv=None) -> int:
     spark = get_spark(app_name="extract-job",
                       shuffle_partitions=args.partitions)
 
-    if args.split_mb:
-        # compute-bound-scan granularity (see --split-mb help).  Session-level
-        # runtime confs: set here in main() so in-process test sessions are
-        # not mutated.  openCost drops with the split size — the default 4MB
-        # per-file cost would dominate the bins for small input files and
-        # re-coarsen the split count.
-        spark.conf.set("spark.sql.files.maxPartitionBytes",
-                       f"{args.split_mb}m")
-        spark.conf.set("spark.sql.files.openCostInBytes", "1m")
-        # keep AQE from coalescing the bucket-write shuffle below core
-        # count — the partitioned write is parquet-encode CPU, not I/O
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+    # compute-bound-scan granularity (see SPLIT_MB).  Session-level
+    # runtime confs: set here in main() so in-process test sessions are
+    # not mutated.  openCost drops with the split size — the default 4MB
+    # per-file cost would dominate the bins for small input files and
+    # re-coarsen the split count.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", f"{SPLIT_MB}m")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1m")
+    # keep AQE from coalescing the bucket-write shuffle below core
+    # count — the partitioned write is parquet-encode CPU, not I/O
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
 
     # steady-state warmup: spawn + import-load the Python workers and JIT the
     # JVM before the clock starts (identical at every cluster size, so the

@@ -5,12 +5,15 @@ and real partition pruning on the bucket-partitioned results table."""
 
 import contextlib
 import io as _io
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from databricks_pdf_ocr_spark import fixtures
-from databricks_pdf_ocr_spark.config import TEST_CONFIG
+from databricks_pdf_ocr_spark.config import (
+    TEST_CONFIG, ExtractConfig, load_config,
+)
 from databricks_pdf_ocr_spark.schemas import DOCUMENTS_SCHEMA
 from jobs.extract import EXTRACTED_TABLE, RESULTS_TABLE, build_parser, run_job
 from tools.goldens import golden_extract
@@ -82,7 +85,6 @@ def test_max_docs_caps_whole_buckets_without_loss(spark, tmp_path, rows):
 def _job_cfg():
     # run_job builds its config from CLI args; mirror the knobs that affect
     # extraction output so goldens match (defaults except bucket count)
-    from databricks_pdf_ocr_spark.config import ExtractConfig
     return ExtractConfig(n_buckets=8, shuffle_partitions=8)
 
 
@@ -221,7 +223,9 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows):
     write's two, three with --salt; the mark's two; the reassembly's
     two), and its stats equal the run's lineage as ``run_history`` reads
     it back."""
-    from databricks_pdf_ocr_spark.plans.checkpoint import CheckpointManager
+    from databricks_pdf_ocr_spark.plans.checkpoint import (
+        CHECKPOINT_TABLE, CheckpointManager,
+    )
 
     inp = _write_input(spark, tmp_path, rows, "jobs_in")
     lineage = ("docs_done", "pages_parsed", "ocr_fallbacks", "span_count",
@@ -244,6 +248,23 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows):
         assert all(stats[k] >= 0 for k in ("phase_select_sec",
                                            "phase_extract_write_sec",
                                            "phase_mark_sec"))
+        # the lineage records the flags over the ExtractConfig defaults:
+        # given flags win, unset ones (None, e.g. --salt, --max-docs)
+        # leave the default
+        recorded = (spark.read.parquet(f"{t}/{CHECKPOINT_TABLE}")
+                    .filter(F.col("run_id") == stats["run_id"])
+                    .select("config_json").distinct().collect())
+        assert [json.loads(r[0]) for r in recorded] == [json.loads(
+            ExtractConfig(n_buckets=8, shuffle_partitions=8,
+                          processing_mode="reprocess_all").to_json())]
+
+
+def test_config_is_flags_over_defaults(monkeypatch):
+    """No environment layer: ENGINE_* variables change nothing, so a run
+    from the --py-files zip and one from a checkout get the same config."""
+    monkeypatch.setenv("ENGINE_ENV", "prod")
+    monkeypatch.setenv("ENGINE_N_BUCKETS", "77")
+    assert load_config() == ExtractConfig()
 
 
 def test_results_write_layout(spark, tmp_path, rows, monkeypatch):
