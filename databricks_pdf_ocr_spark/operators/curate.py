@@ -13,7 +13,7 @@ attributes to time each layer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from . import dedup, text_analysis
 
@@ -22,7 +22,8 @@ from . import dedup, text_analysis
 NEARDUP_JACCARD = 0.3
 
 
-def exact_kept(docs: DataFrame, min_quality: int) -> DataFrame:
+def exact_kept(docs: DataFrame, min_quality: int,
+               funnel: Observation | None = None) -> DataFrame:
     """(doc_id, text) → fused features, gated at ``quality_score_e6 >=
     min_quality``, one canonical (min doc_id) copy per content hash.
 
@@ -30,10 +31,15 @@ def exact_kept(docs: DataFrame, min_quality: int) -> DataFrame:
     dedup is ONE shuffle: the per-hash min(doc_id) as a whole-partition
     window (no orderBy, so no sort) — the kept set equals
     ``dedup.exact_duplicates``' canonical ids without its aggregate +
-    join-back.
+    join-back.  ``funnel`` observes ``docs_in`` and ``docs_gated`` on
+    the featured rows, during whatever action first computes them.
     """
-    gated = text_analysis.with_features(docs).filter(
-        F.col("quality_score_e6") >= min_quality)
+    feats = text_analysis.with_features(docs)
+    passes = F.col("quality_score_e6") >= min_quality
+    if funnel is not None:
+        feats = feats.observe(funnel, F.count(F.lit(1)).alias("docs_in"),
+                              F.count_if(passes).alias("docs_gated"))
+    gated = feats.filter(passes)
     by_hash = Window.partitionBy(F.sha2(F.col("text"), 256))
     return (gated
             .withColumn("__min_id", F.min("doc_id").over(by_hash))
@@ -43,7 +49,8 @@ def exact_kept(docs: DataFrame, min_quality: int) -> DataFrame:
 
 def neardup_sample(exact_kept: DataFrame, strata: dict[str, int],
                    default_pct: int, hash_mode: str,
-                   stats: dict | None = None) -> DataFrame:
+                   stats: dict | None = None,
+                   funnel: Observation | None = None) -> DataFrame:
     """Drop near-duplicates, then keep a deterministic per-language sample.
 
     LSH candidates are VERIFIED by exact n-gram Jaccard before any doc
@@ -53,7 +60,8 @@ def neardup_sample(exact_kept: DataFrame, strata: dict[str, int],
     members of a~b, b~c chains).  ``strata``/``default_pct`` are keep
     percentages by ``predicted_lang`` (``text_analysis.hash_sample``);
     both empty keeps every survivor.  ``stats`` receives the component
-    rounds.
+    rounds; ``funnel`` observes ``docs_neardup_kept``, the survivors
+    before the sample.
     """
     pairs = dedup.minhash_lsh_pairs(exact_kept, hash_mode=hash_mode,
                                     verify_threshold=NEARDUP_JACCARD)
@@ -61,6 +69,9 @@ def neardup_sample(exact_kept: DataFrame, strata: dict[str, int],
     losers = (labels.filter(F.col("comp") != F.col("node"))
               .select(F.col("node").alias("doc_id")))
     kept = exact_kept.join(losers, "doc_id", "left_anti")
+    if funnel is not None:
+        kept = kept.observe(funnel,
+                            F.count(F.lit(1)).alias("docs_neardup_kept"))
     if not (strata or default_pct):
         return kept
     return text_analysis.hash_sample(kept, strata, strata_col="predicted_lang",

@@ -22,11 +22,12 @@ from __future__ import annotations
 
 import secrets
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..config import ExtractConfig
 from ..operators.extract import bucket_col
 from ..schemas import CHECKPOINT_SCHEMA
+from ..session import local_frame
 from ..sources.tables import TableIO
 
 CHECKPOINT_TABLE = "extraction_checkpoint"
@@ -61,7 +62,8 @@ class CheckpointManager:
         """Distinct buckets already marked done for this work set."""
         cp = self._read_checkpoint()
         if cp is None:
-            return self.spark.createDataFrame([], "bucket int")
+            return local_frame(self.spark, [], T.StructType(
+                [T.StructField("bucket", T.IntegerType())]))
         return (cp.filter((F.col("input_fingerprint") == input_fingerprint)
                           & (F.col("status") == "done"))
                   .select("bucket").distinct())
@@ -118,7 +120,7 @@ class CheckpointManager:
         ``managers/state.py:106-132`` orderBy+limit top-k)."""
         cp = self._read_checkpoint()
         if cp is None:
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+            return local_frame(self.spark, [], CHECKPOINT_SCHEMA)
         return (cp.groupBy("run_id")
                   .agg(F.max("updated_at").alias("run_timestamp"),
                        F.count("*").alias("buckets_done"),

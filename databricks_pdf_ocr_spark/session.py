@@ -11,13 +11,16 @@ Scale-relevant defaults:
   not row count (SURVEY.md §4.2.4);
 - shuffle partitions sized to the machine, not the 200 default;
 - session timezone pinned UTC so DuckDB-oracle comparisons are stable.
+
+``arrow_table`` turns small driver-held rows into a ``pyarrow.Table``;
+``local_frame`` into a DataFrame built from one, which no Spark job reads.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 
 def get_spark(
@@ -61,3 +64,30 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_table(rows: list[tuple], schema: T.StructType):
+    """Driver-held ``rows`` (tuples in ``schema`` order) as a
+    ``pyarrow.Table`` with ``schema``'s Arrow types and nullability,
+    also for an empty ``rows`` — the one Spark → Arrow type mapping."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: T.StructType) -> DataFrame:
+    """Driver-held ``rows`` (tuples in ``schema`` order) as a DataFrame.
+
+    Built from ``arrow_table(rows, schema)``, so it plans as a
+    ``LocalTableScan``: building and reading it runs no Spark job.
+    ``createDataFrame(list)`` instead plans as ``Scan ExistingRDD`` over a
+    PythonRDD, and every read of that frame runs one job of
+    ``defaultParallelism`` Python tasks.
+    """
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -24,6 +24,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import arrow_table, local_frame
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg SparkCatalog is on the classpath + configured."""
@@ -120,23 +122,11 @@ class TableIO:
             return
         self._check_layout(name, None)
         import uuid
-        from datetime import datetime, timezone  # noqa: F401 (doc aid)
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql import types as T
 
-        def pa_type(dt):
-            return {T.StringType: pa.string(), T.IntegerType: pa.int32(),
-                    T.LongType: pa.int64(), T.BooleanType: pa.bool_(),
-                    T.DoubleType: pa.float64(),
-                    T.TimestampType: pa.timestamp("us", tz="UTC"),
-                    }[type(dt)]
-
-        pa_schema = pa.schema([(f.name, pa_type(f.dataType))
-                               for f in schema.fields])
-        cols = {f.name: [r[f.name] for r in rows] for f in schema.fields}
-        table = pa.Table.from_pydict(cols, schema=pa_schema)
+        table = arrow_table([tuple(r[f.name] for f in schema.fields)
+                             for r in rows], schema)
         p = self.path(name)
         os.makedirs(p, exist_ok=True)
         fname = f"part-drv-{uuid.uuid4().hex}.snappy.parquet"
@@ -257,9 +247,9 @@ class IcebergTableIO(TableIO):
         # Iceberg commits go through the catalog — no direct-file shortcut
         if not rows:
             return
-        df = self.spark.createDataFrame(
-            [tuple(r[f.name] for f in schema.fields) for r in rows], schema)
-        self.append(df, name)
+        self.append(local_frame(
+            self.spark, [tuple(r[f.name] for f in schema.fields)
+                         for r in rows], schema), name)
 
     def overwrite(self, df: DataFrame, name: str,
                   partition_by: list[str] | None = None) -> None:

@@ -17,8 +17,14 @@ of — it ends at OCR'd text):
 
 Plan shape at scale: doc_text and the features are narrow (zero
 shuffles); exact dedup is one window shuffle; near-dup is the banded LSH
-join (linear, no cross product) plus a few small component rounds; the
-sample is a filter.
+join (linear, no cross product) plus the component labelling — a
+union-find on the driver while the verified pairs number at most
+``dedup.SMALL_GRAPH_EDGES`` (one probe job collects them), a few small
+frontier rounds above that; the sample is a filter.
+
+The printed report carries the funnel — ``docs_in`` → ``docs_gated`` →
+``docs_exact_kept`` → ``docs_neardup_kept`` → ``docs_sampled`` — from
+Observations on the run's own actions.
 
 Usage:
     spark-submit --py-files dist/pkg.zip jobs/curate.py \\
@@ -81,38 +87,47 @@ def run_curate(spark, args) -> dict:
         raise SystemExit(f"no {EXTRACTED_TABLE} table under {args.tables}")
 
     t0 = time.time()
+    # the funnel's row counts are Observations on frames the run already
+    # computes: they ride on its actions and add no Spark job
+    gate_obs, exact_obs = Observation("gate"), Observation("exact")
+    kept_obs, obs = Observation("neardup_kept"), Observation("curate")
     # the near-dup stage reads exact_kept twice (signatures and the
     # left_anti against its losers): materialize it once
-    exact = exact_kept(doc_text(extracted), args.min_quality) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    strata, default = parse_sample_spec(args.sample)
-    cc_stats: dict = {}
-    sampled = neardup_sample(exact, strata, default, "xxhash64",
-                             stats=cc_stats)
+    exact = (exact_kept(doc_text(extracted), args.min_quality, gate_obs)
+             .observe(exact_obs, F.count(F.lit(1)).alias("docs_exact_kept"))
+             .persist(StorageLevel.MEMORY_AND_DISK))
+    try:
+        strata, default = parse_sample_spec(args.sample)
+        cc_stats: dict = {}
+        sampled = neardup_sample(exact, strata, default, "xxhash64",
+                                 stats=cc_stats, funnel=kept_obs)
 
-    # cluster the output before the partitioned write (guide §6): without
-    # this every upstream task writes a sliver into every language dir
-    # (~tasks × strata tiny files + their commit overhead).  The
-    # deterministic sub-split key (xxhash64, retry-safe) caps files per
-    # stratum while keeping write parallelism — scale the constant with
-    # the per-stratum output size in production.
-    files_per_stratum = 4
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sampled = sampled.repartition(
-        n_shuffle, F.col("predicted_lang"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(files_per_stratum)))
+        # cluster the output before the partitioned write (guide §6):
+        # without this every upstream task writes a sliver into every
+        # language dir (~tasks × strata tiny files + their commit
+        # overhead).  The deterministic sub-split key (xxhash64,
+        # retry-safe) caps files per stratum while keeping write
+        # parallelism — scale the constant with the per-stratum output
+        # size in production.
+        files_per_stratum = 4
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        sampled = sampled.repartition(
+            n_shuffle, F.col("predicted_lang"),
+            F.pmod(F.xxhash64("doc_id"), F.lit(files_per_stratum)))
 
-    obs = Observation("curate")
-    sampled = sampled.observe(
-        obs, F.count(F.lit(1)).alias("docs"),
-        F.sum("ws_tokens").alias("ws_tokens"),
-        F.sum("bpe_tokens").alias("bpe_tokens"))
-    (sampled.write.mode("overwrite").partitionBy("predicted_lang")
-     .parquet(args.out))
-    exact.unpersist()
+        sampled = sampled.observe(
+            obs, F.count(F.lit(1)).alias("docs"),
+            F.sum("ws_tokens").alias("ws_tokens"),
+            F.sum("bpe_tokens").alias("bpe_tokens"))
+        (sampled.write.mode("overwrite").partitionBy("predicted_lang")
+         .parquet(args.out))
+    finally:
+        exact.unpersist()
 
-    return {"out": args.out, **{k: obs.get[k]
-                                for k in ("docs", "ws_tokens", "bpe_tokens")},
+    written = {k: obs.get[k] for k in ("docs", "ws_tokens", "bpe_tokens")}
+    funnel = {**gate_obs.get, **exact_obs.get, **kept_obs.get,
+              "docs_sampled": written["docs"]}
+    return {"out": args.out, **written, **funnel,
             "components_rounds": cc_stats.get("rounds"),
             "elapsed_sec": round(time.time() - t0, 2)}
 

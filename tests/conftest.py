@@ -18,6 +18,22 @@ def spark():
 
 
 @pytest.fixture
+def in_job_group(spark):
+    """``in_job_group(group, fn)`` runs ``fn()`` with every Spark job it
+    starts tagged ``group``; returns its result and the job ids."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
+@pytest.fixture
 def tmp_tables(tmp_path):
     return str(tmp_path / "tables")
 

@@ -77,53 +77,72 @@ def test_modes_agree_true_on_dup_free_corpus(spark, tmp_path):
     assert out[0]["modes_agree"] is True
 
 
-def test_neardup_components_empty_pairs(spark):
+#: ``dedup.SMALL_GRAPH_EDGES`` values pinning each components path: 0
+#: sends every non-empty pair set to the frontier loop, the default sends
+#: these small graphs to the driver-side union-find
+BOUNDS = (0, dedup.SMALL_GRAPH_EDGES)
+
+
+def test_neardup_components_empty_pairs(spark, monkeypatch):
     """An empty pair set (the common clean-corpus case) must return an
-    empty (node, comp) frame with the pair id type, report rounds=0, and
-    take the fast path regardless of whether the input is lazy or
-    already materialized (the r06 pairs-first localCheckpoint)."""
+    empty (node, comp) frame with the pair id type and report rounds=0,
+    whether the input is lazy or already materialized, under either
+    components bound."""
     empty = spark.createDataFrame([], "doc_a string, doc_b string")
-    for pairs in (empty, empty.localCheckpoint()):
-        st = {}
-        out = dedup.neardup_components(pairs, stats=st)
-        assert out.columns == ["node", "comp"]
-        assert out.schema["node"].dataType.simpleString() == "string"
-        assert out.count() == 0
-        assert st["rounds"] == 0
+    for bound in BOUNDS:
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", bound)
+        for pairs in (empty, empty.localCheckpoint()):
+            st = {}
+            out = dedup.neardup_components(pairs, stats=st)
+            assert out.columns == ["node", "comp"]
+            assert out.schema["node"].dataType.simpleString() == "string"
+            assert out.count() == 0
+            assert st["rounds"] == 0
 
 
-def test_neardup_components_transitive_chain(spark):
+def test_neardup_components_transitive_chain(spark, monkeypatch):
     """a~b and b~c (no a~c pair) must land in ONE component labeled by
-    the smallest id; disjoint pairs stay separate; converges and raises
-    on a too-small max_iter instead of returning partial labels."""
+    the smallest id; disjoint pairs stay separate.  Frontier path (bound
+    pinned at 0): rounds == graph diameter, and a too-small max_iter
+    raises instead of returning partial labels.  Driver path (default
+    bound): no propagation round, so no round budget to run out of."""
     pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")],
+        [("a", "b"), ("b", "c"), ("y", "x")],
         "doc_a string, doc_b string")
-    st = {}
-    comp = {r["node"]: r["comp"]
-            for r in dedup.neardup_components(pairs, stats=st).collect()}
-    assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    # frontier propagation: rounds == graph diameter (2 for a-b-c), no
-    # extra full-graph no-change sweep
-    assert st["rounds"] == 2
-
-    # long chain: diameter 6 needs several rounds; max_iter=1 must be loud
+    # long chain: diameter 6 needs several frontier rounds
     chain = spark.createDataFrame(
         [(f"n{i}", f"n{i+1}") for i in range(6)],
         "doc_a string, doc_b string")
-    comp2 = {r["node"]: r["comp"]
-             for r in dedup.neardup_components(chain).collect()}
-    assert set(comp2.values()) == {"n0"}
-    with pytest.raises(ValueError, match="did not converge"):
-        dedup.neardup_components(chain, max_iter=1)
+    # bound → (rounds for a-b-c, whether max_iter=1 on the chain raises)
+    for bound, rounds, raises in ((0, 2, True),
+                                  (dedup.SMALL_GRAPH_EDGES, 0, False)):
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", bound)
+        st = {}
+        comp = {r["node"]: r["comp"]
+                for r in dedup.neardup_components(pairs, stats=st).collect()}
+        assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+        # frontier propagation: no extra full-graph no-change sweep
+        assert st["rounds"] == rounds, bound
+        comp2 = {r["node"]: r["comp"]
+                 for r in dedup.neardup_components(chain).collect()}
+        assert set(comp2.values()) == {"n0"}
+        if raises:
+            with pytest.raises(ValueError, match="did not converge"):
+                dedup.neardup_components(chain, max_iter=1)
+        else:
+            assert {r["comp"] for r in dedup.neardup_components(
+                chain, max_iter=1).collect()} == {"n0"}
 
 
 @pytest.mark.parametrize("seed", [1, 7, 23])
-def test_neardup_components_random_graphs_vs_union_find(spark, seed):
-    """Seeded random pair graphs: the distributed min-label propagation
-    must agree with a local union-find reference on every node."""
+def test_neardup_components_random_graphs_vs_union_find(spark, monkeypatch,
+                                                         seed):
+    """Seeded random pair graphs: both components paths (frontier loop
+    and driver union-find) must agree with a local union-find reference
+    on every node, for int64 ids (the sf tables' doc_id) and string ids
+    (the benchmark's), and keep the id type."""
     rng = random.Random(seed)
-    nodes = [f"v{i:02d}" for i in range(30)]
+    nodes = list(range(30))
     pairs = sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(25)})
 
     parent = {n: n for n in nodes}
@@ -140,10 +159,18 @@ def test_neardup_components_random_graphs_vs_union_find(spark, seed):
     expected = {n: min(m for m in in_graph if find(m) == find(n))
                 for n in in_graph}
 
-    df = spark.createDataFrame(pairs, "doc_a string, doc_b string")
-    got = {r["node"]: r["comp"]
-           for r in dedup.neardup_components(df).collect()}
-    assert got == expected
+    for id_type, name in (("bigint", lambda n: n),
+                          ("string", lambda n: f"v{n:02d}")):
+        df = spark.createDataFrame([(name(a), name(b)) for a, b in pairs],
+                                   f"doc_a {id_type}, doc_b {id_type}")
+        for bound in BOUNDS:
+            monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", bound)
+            out = dedup.neardup_components(df)
+            assert out.schema.simpleString() == \
+                f"struct<node:{id_type},comp:{id_type}>", (id_type, bound)
+            got = {r["node"]: r["comp"] for r in out.collect()}
+            assert got == {name(n): name(c) for n, c in expected.items()}, \
+                (id_type, bound)
 
 
 def test_minhash_incremental_equals_from_scratch(spark, tmp_path):
@@ -199,21 +226,23 @@ def test_batch_lsh_forms_each_pair_once(corpus):
     assert " OR " not in plan, plan
 
 
-def test_merge_components_equals_from_scratch(spark):
+def test_merge_components_equals_from_scratch(spark, monkeypatch):
     """Star-collapse merge: old labels + delta pairs must converge to
     exactly the from-scratch components over the full pair set —
-    including a delta pair that BRIDGES two old components."""
+    including a delta pair that BRIDGES two old components — on both
+    components paths."""
     old_pairs = spark.createDataFrame(
         [("a", "b"), ("c", "d"), ("x", "y")], "doc_a string, doc_b string")
-    old_labels = dedup.neardup_components(old_pairs)
     # delta: bridges {a,b} and {c,d}; attaches a brand-new node to x
     delta = spark.createDataFrame(
         [("b", "c"), ("x", "z")], "doc_a string, doc_b string")
-    st = {}
-    merged = {r["node"]: r["comp"] for r in
-              dedup.merge_components(old_labels, delta, stats=st).collect()}
-    full = {r["node"]: r["comp"] for r in
-            dedup.neardup_components(
-                old_pairs.unionByName(delta)).collect()}
-    assert merged == full
-    assert merged["d"] == "a" and merged["z"] == "x"
+    for bound in BOUNDS:
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", bound)
+        old_labels = dedup.neardup_components(old_pairs)
+        merged = {r["node"]: r["comp"] for r in
+                  dedup.merge_components(old_labels, delta).collect()}
+        full = {r["node"]: r["comp"] for r in
+                dedup.neardup_components(
+                    old_pairs.unionByName(delta)).collect()}
+        assert merged == full, bound
+        assert merged["d"] == "a" and merged["z"] == "x"

@@ -206,19 +206,7 @@ def test_lineage_duration_is_kernel_time(spark, tmp_path, rows):
     assert total("extraction_checkpoint") == total(RESULTS_TABLE)
 
 
-def _in_job_group(spark, group, fn):
-    """Run ``fn()`` with every Spark job it starts tagged ``group``;
-    returns its result and the job ids."""
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows):
+def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     """A fresh reprocess_all run needs at most 7 Spark jobs (the results
     write's two, three with --salt; the mark's two; the reassembly's
     two), and its stats equal the run's lineage as ``run_history`` reads
@@ -232,8 +220,8 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows):
                "failed_spans")
     for extra in ((), ("--media-payloads",)):
         t = str(tmp_path / ("jobs_t" + "".join(extra)))
-        (stats, rc), jobs = _in_job_group(
-            spark, "fresh-run" + "".join(extra),
+        (stats, rc), jobs = in_job_group(
+            "fresh-run" + "".join(extra),
             lambda: _run(spark, inp, t, "--mode", "reprocess_all", *extra))
         assert rc == 0
         if not extra:
@@ -267,7 +255,8 @@ def test_config_is_flags_over_defaults(monkeypatch):
     assert load_config() == ExtractConfig()
 
 
-def test_results_write_layout(spark, tmp_path, rows, monkeypatch):
+def test_results_write_layout(spark, tmp_path, rows, monkeypatch,
+                              in_job_group):
     """Each run writes one file per bucket, from a write stage with no
     more tasks than the cluster's partitions (not one per bucket)."""
     import os
@@ -283,8 +272,8 @@ def test_results_write_layout(spark, tmp_path, rows, monkeypatch):
     def tagged_append(self, df, name, partition_by=None):
         if name != RESULTS_TABLE:
             return append(self, df, name, partition_by)
-        _, jobs = _in_job_group(spark, f"results-write-{len(write_jobs)}",
-                                lambda: append(self, df, name, partition_by))
+        _, jobs = in_job_group(f"results-write-{len(write_jobs)}",
+                               lambda: append(self, df, name, partition_by))
         write_jobs.append(jobs)
 
     monkeypatch.setattr(TableIO, "append", tagged_append)

@@ -100,3 +100,70 @@ def test_compact_preserves_rows_and_merges_files(spark, tmp_tables):
     assert {(r["id"], r["v"]) for r in io.read("t").collect()} == before
     assert io.compact("missing") == {"files_before": 0, "files_after": 0,
                                      "rows": 0}
+
+
+def _is_local_scan(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_driver_built_frames_are_local_table_scans(spark, tmp_tables,
+                                                   in_job_group):
+    """The near-dup component labels (driver path, empty or not), the
+    empty ``done_buckets`` / ``run_history`` fallbacks and the Iceberg
+    ``append_rows`` frame are Arrow-built: each plans as a
+    ``LocalTableScan``, building (but for the labels) and collecting it
+    runs no Spark job, and
+    it equals the list-built frame of the same rows, column types and
+    nullability included.  (The Iceberg write itself needs the runtime
+    jar; only the frame handed to ``append`` is checked here.)"""
+    from datetime import datetime, timezone
+
+    from databricks_pdf_ocr_spark.config import ExtractConfig
+    from databricks_pdf_ocr_spark.operators import dedup
+    from databricks_pdf_ocr_spark.plans.checkpoint import CheckpointManager
+    from databricks_pdf_ocr_spark.schemas import CHECKPOINT_SCHEMA
+
+    cp = CheckpointManager(TableIO(spark, tmp_tables), ExtractConfig())
+    lineage = [dict(zip(CHECKPOINT_SCHEMA.names, (
+        "run-1", 1, "fp", b, "done", 3, 4, 5, 0, 6, 0, 7, "{}",
+        datetime(2026, 1, 2, 3, 4, 5, tzinfo=timezone.utc))))
+        for b in (0, 5)]
+    iceberg = IcebergTableIO.__new__(IcebergTableIO)   # no catalog needed
+    iceberg.spark = spark
+    appended = []
+    iceberg.append = lambda df, name: appended.append(df)
+
+    def append_rows():
+        iceberg.append_rows(lineage, "extraction_checkpoint",
+                            CHECKPOINT_SCHEMA)
+        return appended.pop()
+
+    # labelling runs the pair probe's jobs; reading the labels runs none
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)],
+                                  "doc_a bigint, doc_b bigint")
+    labels = dedup.neardup_components(pairs)
+    no_labels = dedup.neardup_components(pairs.limit(0))
+    cases = {
+        "labels": (lambda: labels, [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)],
+                   "node bigint, comp bigint"),
+        "empty_labels": (lambda: no_labels, [], "node bigint, comp bigint"),
+        "done_buckets": (lambda: cp.done_buckets("fp"), [], "bucket int"),
+        "run_history": (cp.run_history, [], CHECKPOINT_SCHEMA),
+        "append_rows": (append_rows,
+                        [tuple(r.values()) for r in lineage],
+                        CHECKPOINT_SCHEMA),
+    }
+
+    def build_and_collect(build):
+        df = build()
+        return df, df.collect()
+
+    for name, (build, rows, schema) in cases.items():
+        (df, got), jobs = in_job_group(f"local-frame-{name}",
+                                       lambda: build_and_collect(build))
+        assert jobs == [], name
+        assert _is_local_scan(df), name
+        want = spark.createDataFrame(rows, schema)
+        assert df.schema == want.schema, name
+        assert sorted(got) == sorted(want.collect()), name
