@@ -246,10 +246,12 @@ def fixture_df(spark, seed: int, n_docs: int, profile: FixtureProfile = SMOKE,
 # ===========================================================================
 
 def pdf_corpus_rows(seed: int, n_docs: int):
-    """Deterministic ``(doc_id, pdf_bytes)`` corpus for ``pdf_images``.
+    """Deterministic ``(doc_id, pdf_bytes)`` corpus for
+    ``pdf_span_images``.
 
     Every byte is a pure function of ``(seed, idx)`` — both the Spark
-    query (`queries.pdf_images_e2e`) and the no-Spark golden generator
+    queries (`queries.pdf_images_e2e`, `queries.media_payloads_e2e`, which
+    feed it as base64 pdf spans) and the no-Spark golden generator
     (`tools/make_golden_parquet.py`) build the identical corpus, so a
     committed parquet of the expected rows can hash-gate the distributed
     operator.  Page mix per doc cycles through: text page, real gray

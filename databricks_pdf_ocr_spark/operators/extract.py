@@ -210,7 +210,6 @@ def reassemble(results: DataFrame) -> DataFrame:
     return assembled
 
 
-def run_extraction(documents: DataFrame, cfg: ExtractConfig,
-                   salt: bool | None = None) -> DataFrame:
+def run_extraction(documents: DataFrame, cfg: ExtractConfig) -> DataFrame:
     """documents → flat results (no IO; callers persist + reassemble)."""
-    return extract_spans(explode_spans(documents), cfg, salt=salt)
+    return extract_spans(explode_spans(documents), cfg)

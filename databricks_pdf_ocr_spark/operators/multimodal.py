@@ -6,10 +6,10 @@ extraction and perceptual hashing run as Arrow-batched ``mapInPandas``
 stages, so payload bytes never shuffle.
 
 Two families live here:
-- PDF image extraction (``pdf_images``, ``pdf_span_images``) — the
-  embedded raster images of PDF pages, and the bucket-partitioned
-  ``media_payloads`` table the extraction job's ``--media-payloads``
-  stage writes (``dedup_payloads`` is its dedup-on-read);
+- PDF image extraction (``pdf_span_images``) — the embedded raster
+  images of PDF pages, rows of the bucket-partitioned ``media_payloads``
+  table the extraction job's ``--media-payloads`` stage writes
+  (``dedup_payloads`` is its dedup-on-read);
 - media near-dup: 64-bit perceptual hashes for images
   (``media_phash``), audio (``media_ahash``) and MJPEG video frames
   (``video_phash``), paired by Hamming banding (``phash_pairs``,
@@ -38,65 +38,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-#: rows emitted by pdf_images (one per embedded raster image)
-PDF_IMAGE_DDL = (
-    "doc_id string, page_idx int, image_idx int, format string, "
-    "width int, height int, content binary, extract_ok boolean, "
-    "error_message string"
-)
-
-
-def pdf_images(df: DataFrame, id_col: str = "doc_id",
-               content_col: str = "content") -> DataFrame:
-    """PDF bytes → one row per embedded raster image (the reference's
-    ``pdf_to_images`` stage, ``processors/ocr.py:27-57`` — it renders
-    pages via PyMuPDF; without a rasterizer this extracts the embedded
-    image XObjects, which is what scanned-page PDFs are made of).
-
-    ``/DCTDecode`` images come out as ready-to-decode JPEG files and
-    Flate/raw 8-bit gray/RGB samples as lossless PNG re-wraps — both feed
-    straight into :func:`media_phash`.  Exotic
-    codecs (CCITT/JBIG2) come back ``extract_ok=false`` with the reason.
-
-    Plan shape: narrow ``mapInPandas`` with in-batch page/image fan-out —
-    a thousand-image PDF never becomes a driver loop, and payload bytes
-    never shuffle.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import pdfmini
-
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "page_idx", "image_idx",
-                                   "format", "width", "height", "content",
-                                   "extract_ok", "error_message")}
-
-            def emit(did, pi, ii, fmt, w, h, payload, ok, err):
-                out["doc_id"].append(did)
-                out["page_idx"].append(pi)
-                out["image_idx"].append(ii)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["content"].append(payload)
-                out["extract_ok"].append(ok)
-                out["error_message"].append(err)
-
-            for did, payload in zip(pdf[id_col], pdf[content_col]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    doc = pdfmini.PdfDocument(payload)
-                    for pi, page in enumerate(doc.pages()):
-                        for ii, rec in enumerate(doc.page_images(page)):
-                            emit(did, pi, ii, rec["format"], rec["width"],
-                                 rec["height"], rec["payload"],
-                                 rec["error"] is None, rec["error"])
-                except Exception as e:  # not a PDF / corrupt → error row
-                    emit(did, -1, -1, None, 0, 0, None, False, str(e))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=PDF_IMAGE_DDL)
-
-
 #: rows of the media_payloads table (one per embedded image per pdf span)
 MEDIA_PAYLOAD_DDL = (
     "media_ref string, doc_id string, offset int, page_idx int, "
@@ -116,6 +57,13 @@ def pdf_span_images(df: DataFrame, id_col: str = "doc_id",
     SAME ``PdfDocument.page_images`` records, so the join-back holds by
     construction; identical images across documents share one ref and
     dedup globally on read.
+
+    Reference analogue: ``pdf_to_images`` (``processors/ocr.py:27-57``)
+    renders pages via PyMuPDF; without a rasterizer this extracts the
+    embedded image XObjects scanned pages are made of: ``/DCTDecode``
+    images as JPEG files, Flate/raw 8-bit gray/RGB samples as lossless
+    PNG re-wraps, exotic codecs (CCITT/JBIG2) as ``extract_ok=false``
+    rows with the reason — all of which feed :func:`media_phash`.
 
     Guards mirror the extraction kernel (b64 tolerance, size cap, page
     truncation) so the payload table covers exactly the images the
@@ -297,7 +245,7 @@ def video_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
     The video leg of media near-dup: every MJPEG sample is a standalone
     JPEG, so each frame rides the same real decode + ``imghash.dhash64``
     kernel as still images.  Fan-out happens inside the Arrow batch
-    (the ``pdf_images`` page fan-out shape) — a long video never becomes
+    (the ``pdf_span_images`` page fan-out shape) — a long video never becomes
     a driver loop, and video bytes never shuffle.  Non-MJPEG or undecodable
     payloads become a single error row."""
     from ..functions import imghash, jpegmini, mp4mini

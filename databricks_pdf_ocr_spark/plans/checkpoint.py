@@ -171,11 +171,13 @@ class CheckpointManager:
 
     def mark_from_results(self, results: DataFrame, run_id: str,
                           input_fingerprint: str,
-                          run_seq: int | None = None) -> list[dict]:
+                          run_seq: int) -> list[dict]:
         """Aggregate per-bucket metrics from a results DataFrame (which
         carries the ``bucket`` and per-span ``duration_ms`` columns),
         append one 'done' lineage row per bucket, and return the appended
         rows.  A bucket's ``duration_ms`` is the kernel time of its rows.
+        ``run_seq`` is the run's ordinal, read once at the start of the
+        run (``next_run_seq_and_marked``).
 
         The aggregate runs distributed (map-side partial agg → tiny
         shuffle); the ≤ n_buckets result rows are CONTROL-PLANE data, so
@@ -208,7 +210,7 @@ class CheckpointManager:
 
     def mark_buckets(self, bucket_metrics: list[dict], run_id: str,
                      input_fingerprint: str, duration_ms: int,
-                     run_seq: int | None = None) -> None:
+                     run_seq: int) -> None:
         """Append 'done' lineage rows from driver-computed per-bucket
         metric dicts (``{"bucket": int, ...CHECKPOINT metric fields}``,
         missing metrics default 0) — for stages whose metrics don't come
@@ -222,13 +224,11 @@ class CheckpointManager:
 
     def _append_marks(self, bucket_metrics: list[dict], run_id: str,
                       input_fingerprint: str,
-                      run_seq: int | None) -> list[dict]:
+                      run_seq: int) -> list[dict]:
         """The one place lineage rows are built: one 'done' row per
         per-bucket metric dict, appended driver-side and returned."""
         from datetime import datetime, timezone
 
-        if run_seq is None:
-            run_seq = self.next_run_seq()
         now = datetime.now(timezone.utc)
         rows = [{
             "run_id": run_id,

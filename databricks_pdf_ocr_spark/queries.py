@@ -3166,52 +3166,9 @@ def warc_host_rank(spark, sf_dir):
         .alias("rank_e6"))
 
 
-@register("pdf_images_e2e", """
-SELECT doc_id, page_idx, image_idx, format, width, height,
-       content_len, content_sha, extract_ok, error_message
-FROM read_parquet('/root/repo/tests/data/golden_pdf_images.parquet')
-""")
-def pdf_images_e2e(spark, sf_dir):
-    """Embedded-image extraction end-to-end: deterministic PDF corpus
-    (text + real gray/RGB image pages + a legacy undecodable stub every
-    5th doc) → distributed ``pdf_images`` → payload hashes.
-
-    Oracle: the same corpus run through ``PdfDocument.page_images``
-    single-process with NO Spark (tools/make_golden_parquet.py),
-    committed as parquet — DuckDB hash-compares payload sha256/length,
-    dimensions, formats, and the error contract (reference analogue:
-    ``pdf_to_images``, processors/ocr.py:27-57)."""
-    from .fixtures import pdf_corpus_rows
-    from .operators.multimodal import pdf_images
-
-    docs = spark.createDataFrame(
-        list(pdf_corpus_rows(seed=42, n_docs=40)),
-        "doc_id string, content binary").repartition(8)
-    imgs = pdf_images(docs)
-    return imgs.select(
-        "doc_id", "page_idx", "image_idx", "format", "width", "height",
-        F.length("content").cast("bigint").alias("content_len"),
-        F.sha2("content", 256).alias("content_sha"),
-        "extract_ok", "error_message")
-
-
-@register("media_payloads_e2e", """
-SELECT 'pdfimg:' || content_sha AS media_ref, doc_id, page_idx, image_idx,
-       format, width, height, content_len, content_sha, extract_ok,
-       error_message
-FROM read_parquet('/root/repo/tests/data/golden_pdf_images.parquet')
-""")
-def media_payloads_e2e(spark, sf_dir):
-    """The media_payloads table-building kernel end-to-end: the same
-    deterministic PDF corpus as ``pdf_images_e2e``, wrapped as base64 pdf
-    SPANS (the shape the extraction job feeds it), through
-    ``pdf_span_images`` → payload rows keyed by content-addressed
-    ``media_ref``.
-
-    Oracle: the committed no-Spark golden, with the ref DERIVED
-    independently as ``'pdfimg:' || sha256(payload)`` — hash-comparing
-    proves the kernel's ref convention matches the one the extraction
-    kernel stamps on media spans (the join-back key)."""
+def _pdf_corpus_payloads(spark):
+    """``fixtures.pdf_corpus_rows(42, 40)`` as base64 pdf spans through
+    ``pdf_span_images``, payloads reduced to sha256/length."""
     import base64 as _b64
 
     from .fixtures import pdf_corpus_rows
@@ -3228,6 +3185,44 @@ def media_payloads_e2e(spark, sf_dir):
         F.length("content").cast("bigint").alias("content_len"),
         F.sha2("content", 256).alias("content_sha"),
         "extract_ok", "error_message")
+
+
+@register("pdf_images_e2e", """
+SELECT doc_id, page_idx, image_idx, format, width, height,
+       content_len, content_sha, extract_ok, error_message
+FROM read_parquet('/root/repo/tests/data/golden_pdf_images.parquet')
+""")
+def pdf_images_e2e(spark, sf_dir):
+    """Embedded-image extraction end-to-end: deterministic PDF corpus
+    (text + real gray/RGB image pages + a legacy undecodable stub every
+    5th doc), wrapped as base64 pdf spans → distributed
+    ``pdf_span_images`` → payload hashes.
+
+    Oracle: the same corpus run through ``PdfDocument.page_images``
+    single-process with NO Spark (tools/make_golden_parquet.py),
+    committed as parquet — DuckDB hash-compares payload sha256/length,
+    dimensions, formats, and the error contract (reference analogue:
+    ``pdf_to_images``, processors/ocr.py:27-57)."""
+    return _pdf_corpus_payloads(spark).drop("media_ref")
+
+
+@register("media_payloads_e2e", """
+SELECT 'pdfimg:' || content_sha AS media_ref, doc_id, page_idx, image_idx,
+       format, width, height, content_len, content_sha, extract_ok,
+       error_message
+FROM read_parquet('/root/repo/tests/data/golden_pdf_images.parquet')
+""")
+def media_payloads_e2e(spark, sf_dir):
+    """The media_payloads table-building kernel end-to-end: the same
+    corpus and kernel as ``pdf_images_e2e`` (the shape the extraction
+    job's media stage feeds it), with each payload row keyed by its
+    content-addressed ``media_ref``.
+
+    Oracle: the committed no-Spark golden, with the ref DERIVED
+    independently as ``'pdfimg:' || sha256(payload)`` — hash-comparing
+    proves the kernel's ref convention matches the one the extraction
+    kernel stamps on media spans (the join-back key)."""
+    return _pdf_corpus_payloads(spark)
 
 
 @register("media_refs_resolve", """

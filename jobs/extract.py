@@ -15,8 +15,10 @@ Flow (reference entrypoint analogue: ``main.py:56-101`` run_ocr_processing):
   2. anti-join buckets already done for this input fingerprint (resume)
   3. explode → salted repartition → Arrow-batched extraction
   4. append results PARTITIONED BY bucket (repartition first: one file per
-     touched bucket per run → real partition pruning downstream) — WRITE ...
-  5. append per-bucket lineage metrics (this run's rows only)  — ... THEN MARK
+     touched bucket per run → real partition pruning downstream); an
+     Observation on that write collects the touched buckets    — WRITE ...
+  5. append per-bucket lineage metrics for the touched buckets (this run's
+     rows only, read back partition-pruned)                     — ... THEN MARK
   6. reassemble offset-sorted span sequences (latest-run-wins per doc)
      → dynamic-overwrite only the touched bucket partitions
 
@@ -324,33 +326,32 @@ def run_job(spark, args) -> tuple[dict, int]:
     # cluster's parallelism (the salted kernel stage's), not n_buckets:
     # tasks beyond it only add waves, and every parquet-write task pays
     # ~30-50 ms to deserialize before it writes a row.
-    # Global metrics observed during the same action — no extra pass.
-    from databricks_pdf_ocr_spark.plans.metrics import observed_results
-    results, observation = observed_results(results.repartition(
-        min(cfg.n_buckets, cfg.shuffle_partitions), "bucket"))
+    # The write also observes the buckets it touches, so listing them
+    # costs no second pass over the work-selection plan.  A bucket whose
+    # pending docs have no spans writes no rows: it is not touched, gets
+    # no lineage row (the mark aggregates result rows) and keeps its
+    # assembled partition as it is.
+    touched_obs = Observation("touched")
+    results = results.repartition(
+        min(cfg.n_buckets, cfg.shuffle_partitions), "bucket").observe(
+        touched_obs, F.collect_set("bucket").alias("buckets"))
     t_select = time.time()
     io.append(results, RESULTS_TABLE, partition_by=["bucket"])
     t_extract = time.time()
 
     # ... THEN MARK lineage.  Re-scan of the just-written data is cheap:
-    # partition pruning (pend_buckets semi-join) + the run_id pushed filter
-    # skip every file other runs wrote, and column pruning drops the
-    # payload text.  Filtering on run_id makes the per-bucket metrics
+    # partition pruning (the touched-bucket isin) + the run_id pushed
+    # filter skip every file other runs wrote, and column pruning drops
+    # the payload text.  Filtering on run_id makes the per-bucket metrics
     # exact — other work sets sharing a bucket no longer inflate
     # docs_done/pages_parsed (and replayed duplicates can't occur within
     # one run, so no dedup pass is needed).
-    if cfg.processing_mode == "reprocess_all" \
-            and args.fail_after_buckets is None and not cfg.max_docs_per_run:
-        # every bucket is pending by construction — skip the input re-scan
-        pend_list = list(range(cfg.n_buckets))
-    else:
-        # control-plane collect: ≤ n_buckets ints (bucket METADATA, not
-        # data).  A broadcast semi-join is not enough here — dynamic
-        # partition pruning declines to fire without a selective predicate
-        # on the build side, so the scan would read every bucket dir; a
-        # static isin over the partition column guarantees pruning.
-        pend_list = sorted(
-            r["bucket"] for r in pending.select("bucket").distinct().collect())
+    # ≤ n_buckets ints (bucket METADATA, not data), read only after the
+    # write.  A broadcast semi-join is not enough here — dynamic
+    # partition pruning declines to fire without a selective predicate
+    # on the build side, so the scan would read every bucket dir; a
+    # static isin over the partition column guarantees pruning.
+    pend_list = sorted(touched_obs.get["buckets"])
     # exactly the columns the lineage aggregate consumes — doc counting
     # is sum(is_first_span), so neither doc_id nor result_id is read.
     # The partial explicit schema column-prunes the scan at the READER
@@ -439,10 +440,6 @@ def run_job(spark, args) -> tuple[dict, int]:
         io.overwrite_partitions(assembled, EXTRACTED_TABLE, ["bucket"])
         stats["docs_assembled"] = obs_asm.get["docs"]
 
-    try:
-        stats["observed"] = observation.get
-    except Exception:
-        pass  # observation unavailable if the write produced no rows
     stats["elapsed_sec"] = round(time.time() - t0, 2)
     return stats, 0
 

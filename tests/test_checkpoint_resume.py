@@ -38,7 +38,7 @@ def _process(io, cp, pending, tag):
     written = (io.read("extraction_results")
                .join(F.broadcast(pend_buckets), "bucket", "left_semi"))
     cp.mark_from_results(written.dropDuplicates(["result_id"]),
-                         new_run_id(), FP)
+                         new_run_id(), FP, run_seq=cp.next_run_seq())
 
 
 def test_kill_and_resume_equals_single_run(env):
@@ -117,7 +117,7 @@ def test_next_run_seq_is_monotonic(env):
     # a second mark (different fingerprint) advances it again
     results = io.read("extraction_results")
     cp.mark_from_results(results.dropDuplicates(["result_id"]),
-                         new_run_id(), FP + "-b")
+                         new_run_id(), FP + "-b", run_seq=cp.next_run_seq())
     assert cp.next_run_seq() == 3
 
 
@@ -158,9 +158,9 @@ def test_compaction_preserves_resume_and_bounds_rows(env, tmp_tables):
     _process(io, cp, cp.filter_pending(df, FP), "r1")
     results = io.read("extraction_results")
     cp.mark_from_results(results.dropDuplicates(["result_id"]),
-                         new_run_id(), FP)
+                         new_run_id(), FP, run_seq=cp.next_run_seq())
     cp.mark_from_results(results.dropDuplicates(["result_id"]),
-                         new_run_id(), FP + "-b")
+                         new_run_id(), FP + "-b", run_seq=cp.next_run_seq())
 
     before_seq = cp.next_run_seq()
     before_done = {r["bucket"] for r in cp.done_buckets(FP).collect()}

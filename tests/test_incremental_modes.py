@@ -48,7 +48,8 @@ def test_incremental_anti_join(spark, cp):
     rows, df = _docs(spark)
     bucket_of = _buckets(df)
     done = sorted(set(bucket_of.values()))[:3]
-    cp.mark_buckets([{"bucket": b} for b in done], new_run_id(), FP, 0)
+    cp.mark_buckets([{"bucket": b} for b in done], new_run_id(), FP, 0,
+                    run_seq=cp.next_run_seq())
     cfg = replace(TEST_CONFIG, processing_mode="incremental")
     pending = select_work(df, cp, FP, cfg)
     got = {r["doc_id"] for r in pending.select("doc_id").collect()}
@@ -59,7 +60,8 @@ def test_incremental_anti_join(spark, cp):
 def test_reprocess_all_and_specific(spark, cp):
     rows, df = _docs(spark)
     cp.mark_buckets([{"bucket": b} for b in range(TEST_CONFIG.n_buckets)],
-                    new_run_id(), FP, 0)   # marks never hide reprocess work
+                    new_run_id(), FP, 0,   # marks never hide reprocess work
+                    run_seq=cp.next_run_seq())
     cfg_all = replace(TEST_CONFIG, processing_mode="reprocess_all")
     assert select_work(df, cp, FP, cfg_all).count() == len(rows)
 

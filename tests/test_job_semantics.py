@@ -5,6 +5,7 @@ and real partition pruning on the bucket-partitioned results table."""
 
 import contextlib
 import io as _io
+import itertools
 import json
 
 import pytest
@@ -209,8 +210,11 @@ def test_lineage_duration_is_kernel_time(spark, tmp_path, rows):
 def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     """A fresh reprocess_all run needs at most 7 Spark jobs (the results
     write's two, three with --salt; the mark's two; the reassembly's
-    two), and its stats equal the run's lineage as ``run_history`` reads
-    it back."""
+    two).  The touched buckets come from the results write itself, so a
+    fresh incremental run needs no more jobs than that, and a --max-docs
+    run only the cap's own three, once.  Every run's stats equal its
+    lineage as ``run_history`` reads it back; a no-op incremental rerun
+    marks nothing and reports nothing."""
     from databricks_pdf_ocr_spark.plans.checkpoint import (
         CHECKPOINT_TABLE, CheckpointManager,
     )
@@ -218,20 +222,30 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     inp = _write_input(spark, tmp_path, rows, "jobs_in")
     lineage = ("docs_done", "pages_parsed", "ocr_fallbacks", "span_count",
                "failed_spans")
-    for extra in ((), ("--media-payloads",)):
-        t = str(tmp_path / ("jobs_t" + "".join(extra)))
+    groups = itertools.count()
+
+    def run(name, *flags):
+        t = str(tmp_path / ("jobs_t_" + name))
         (stats, rc), jobs = in_job_group(
-            "fresh-run" + "".join(extra),
-            lambda: _run(spark, inp, t, "--mode", "reprocess_all", *extra))
+            f"{name}-{next(groups)}", lambda: _run(spark, inp, t, *flags))
         assert rc == 0
-        if not extra:
-            assert 0 < len(jobs) <= 7, jobs
         cp = CheckpointManager(_table_io(spark, t), _job_cfg())
         hist = [r.asDict() for r in cp.run_history().collect()
                 if r["run_id"] == stats["run_id"]]
-        assert len(hist) == 1
-        assert {k: stats[k] for k in lineage} == \
-            {k: hist[0][k] for k in lineage}
+        if hist:
+            assert len(hist) == 1
+            assert {k: stats[k] for k in lineage} == \
+                {k: hist[0][k] for k in lineage}
+        else:
+            assert not set(lineage) & set(stats), stats
+        return stats, len(jobs), t
+
+    for extra in ((), ("--media-payloads",)):
+        stats, n_jobs, t = run("all" + "".join(extra),
+                               "--mode", "reprocess_all", *extra)
+        if not extra:
+            assert 0 < n_jobs <= 7
+            all_jobs = n_jobs
         assert stats["docs_done"] == N_DOCS
         assert all(stats[k] >= 0 for k in ("phase_select_sec",
                                            "phase_extract_write_sec",
@@ -245,6 +259,17 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
         assert [json.loads(r[0]) for r in recorded] == [json.loads(
             ExtractConfig(n_buckets=8, shuffle_partitions=8,
                           processing_mode="reprocess_all").to_json())]
+
+    stats, n_jobs, _ = run("incremental")
+    assert stats["docs_done"] == N_DOCS
+    assert n_jobs <= all_jobs
+    stats, _, _ = run("incremental")                 # no-op rerun
+    assert stats["docs_assembled"] == 0
+    stats, n_jobs, _ = run("capped", "--max-docs", "10")
+    assert 10 <= stats["docs_done"] < N_DOCS
+    # the cap's per-bucket count, running sum and broadcast are evaluated
+    # inside the results write only, never again to list the buckets
+    assert n_jobs <= all_jobs + 3
 
 
 def test_config_is_flags_over_defaults(monkeypatch):

@@ -1,5 +1,5 @@
 """Embedded-image extraction from PDFs: pdfmini.page_images + the
-pdf_images operator, composed with the real JPEG/PNG codecs.
+pdf_span_images operator, composed with the real JPEG/PNG codecs.
 
 Reference analogue: ``pdf_to_images`` (``processors/ocr.py:27-57``) —
 the reference rasterizes pages via PyMuPDF; this engine extracts the
@@ -7,6 +7,7 @@ embedded raster XObjects (what scanned-document pages are made of) and
 hands them to the hermetic codecs.
 """
 
+import base64
 import os
 
 import numpy as np
@@ -15,7 +16,7 @@ import pytest
 from databricks_pdf_ocr_spark.functions import pdfmini, pngmini
 from databricks_pdf_ocr_spark.functions.jpegmini import decode_jpeg
 from databricks_pdf_ocr_spark.operators.multimodal import (
-    media_phash, pdf_images,
+    media_phash, pdf_span_images,
 )
 
 KITTEN = ("/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
@@ -85,9 +86,11 @@ def test_pdf_images_operator_composes_with_phash(spark):
                                    "width": w, "height": h}])),
         ("d3", b"not a pdf at all"),
     ]
-    df = spark.createDataFrame(docs, "doc_id string, content binary")
+    df = spark.createDataFrame(
+        [(did, 0, base64.b64encode(pdf).decode()) for did, pdf in docs],
+        "doc_id string, offset int, text string")
     rows = {(r["doc_id"], r["page_idx"], r["image_idx"]): r
-            for r in pdf_images(df).collect()}
+            for r in pdf_span_images(df).collect()}
     assert rows[("d1", 1, 0)]["format"] == "jpeg"
     assert rows[("d1", 1, 0)]["extract_ok"]
     assert bytes(rows[("d1", 1, 0)]["content"]) == jpeg
@@ -96,6 +99,6 @@ def test_pdf_images_operator_composes_with_phash(spark):
     assert len(rows) == 3  # d1 page 0 has no images
 
     # extracted payloads feed the real decode + perceptual-hash path
-    hashed = media_phash(pdf_images(df).filter("extract_ok")).collect()
+    hashed = media_phash(pdf_span_images(df).filter("extract_ok")).collect()
     assert sorted(r["format"] for r in hashed) == ["jpeg", "png"]
     assert all(r["hash_ok"] for r in hashed)
