@@ -3,36 +3,47 @@
 Reference: ``get_unprocessed_files`` (``processors/ocr.py:59-85``) collects
 all processed ids to the driver and filters with ``isin`` — the collapse
 point at 10^12 docs (SURVEY.md §3.3).  Here the work set stays a DataFrame
-(:func:`select_work`, the one work-selection path of the extraction job):
+(:func:`select_work`, the one work-selection path of the extraction job)
+and every decision in it is a static list of at most ``n_buckets``
+bucket ints, made once on the driver:
 
-- incremental  → broadcast ``left_anti`` join against the checkpoint
-  buckets already done for the input
+- incremental  → ``~isin`` over the checkpoint buckets already done for
+  the input (read once per run, ``CheckpointManager.run_state``)
 - reprocess_all → full scan
 - reprocess_specific → ``isin`` over ``specific_doc_ids``
 
-plus the per-run cap (``max_docs_per_run``, reference ``settings.toml:21``),
-applied at bucket granularity (:func:`cap_to_buckets`).  The Bloom-gated
-anti join below is the 10^12-row shape of a doc-level anti join.
+plus the crash simulator's first-k-buckets cut and the per-run cap
+(``max_docs_per_run``, reference ``settings.toml:21``), both applied at
+bucket granularity from one per-bucket count.  The Bloom-gated anti join
+below is the 10^12-row shape of a doc-level anti join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import ExtractConfig
 from .extract import bucket_col
 
 
-def select_work(documents: DataFrame, cp, fingerprint: str,
+def select_work(documents: DataFrame, cp, done: set[int],
                 cfg: ExtractConfig,
                 fail_after_buckets: int | None = None) -> DataFrame:
     """The work set of one run: ``documents`` stamped with ``bucket``.
 
     The mode comes from ``cfg.processing_mode``; ``incremental`` keeps
-    only the buckets ``cp`` (a ``CheckpointManager``) has not marked done
-    for ``fingerprint``.  ``fail_after_buckets`` (the crash simulator)
-    then keeps the first k pending buckets, and ``cfg.max_docs_per_run``
-    caps the set at whole buckets.
+    only the buckets not in ``done``, the buckets ``cp`` (a
+    ``CheckpointManager``) has marked done for the run's input.
+    ``fail_after_buckets`` (the crash simulator) then keeps the first k
+    pending buckets, and ``cfg.max_docs_per_run`` caps the set at whole
+    buckets: buckets are kept in order while the docs before them number
+    under the cap, so the cap rounds UP to a bucket boundary.  Buckets
+    are the lineage/resume unit — a run marks every touched bucket done,
+    so a row-level cut inside one would lose the rest on resume.
+
+    Either cut costs one per-bucket count, collected (≤ n_buckets rows);
+    the kept buckets are applied as a static ``isin``, so the plan holds
+    no join and no decision that a later action could make again.
     """
     mode = cfg.processing_mode
     if mode == "reprocess_all":
@@ -42,37 +53,20 @@ def select_work(documents: DataFrame, cp, fingerprint: str,
                    .filter(F.col("doc_id").isin(list(cfg.specific_doc_ids)))
                    .withColumn("bucket", bucket_col(cfg.n_buckets)))
     else:
-        pending = cp.filter_pending(documents, fingerprint)
+        pending = cp.filter_pending(documents, done)
+    if fail_after_buckets is None and not cfg.max_docs_per_run:
+        return pending
+    counts = sorted(tuple(r) for r in
+                    pending.groupBy("bucket").count().collect())
     if fail_after_buckets is not None:
-        keep = (pending.select("bucket").distinct()
-                .orderBy("bucket").limit(fail_after_buckets))
-        pending = pending.join(F.broadcast(keep), "bucket", "left_semi")
-    if cfg.max_docs_per_run:
-        pending = cap_to_buckets(pending, cfg.max_docs_per_run)
-    return pending
-
-
-def cap_to_buckets(pending: DataFrame, max_docs: int) -> DataFrame:
-    """Cap a pending work set at checkpoint-BUCKET granularity.
-
-    Keeps whole buckets, in bucket order, until the cumulative doc count
-    reaches ``max_docs`` (so the cap rounds UP to a bucket boundary —
-    never truncates inside a bucket).  Buckets are the lineage/resume
-    unit: a run marks every touched bucket 'done', so any row-level cut
-    inside a bucket is permanent silent data loss on resume.
-
-    Cost: one per-bucket count aggregate (≤ n_buckets rows) + a running
-    sum over that tiny frame, then a broadcast semi-join back — the big
-    side is never shuffled.
-    """
-    counts = pending.groupBy("bucket").agg(F.count(F.lit(1)).alias("__n"))
-    w = (Window.partitionBy(F.lit(1)).orderBy("bucket")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    keep = (counts
-            .withColumn("__before", F.coalesce(F.sum("__n").over(w), F.lit(0)))
-            .filter(F.col("__before") < max_docs)
-            .select("bucket"))
-    return pending.join(F.broadcast(keep), "bucket", "left_semi")
+        counts = counts[:fail_after_buckets]
+    keep, before = [], 0
+    for bucket, n in counts:
+        if cfg.max_docs_per_run and before >= cfg.max_docs_per_run:
+            break
+        keep.append(bucket)
+        before += n
+    return pending.filter(F.col("bucket").isin(keep))
 
 
 # ---------------------------------------------------------------------------

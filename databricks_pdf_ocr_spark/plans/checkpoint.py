@@ -7,7 +7,7 @@ checkpoint (``handlers/autoloader.py:104``); this module generalizes both
 to **bucket granularity**: work is hashed into
 ``pmod(xxhash64(doc_id), n_buckets)`` buckets, each bucket gets a lineage
 row with extraction metrics when its results land, and a restarted run
-anti-joins pending work against done buckets.
+drops the buckets already done from its pending work.
 
 Write-then-mark ordering gives crash safety: results for a bucket are
 committed *before* the bucket is marked done, so a crash between the two
@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import secrets
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import ExtractConfig
 from ..operators.extract import bucket_col
@@ -58,29 +58,18 @@ class CheckpointManager:
         schema, old files yield run_seq=null and max() ignores them."""
         return self.io.read(CHECKPOINT_TABLE, schema=CHECKPOINT_SCHEMA)
 
-    def done_buckets(self, input_fingerprint: str) -> DataFrame:
-        """Distinct buckets already marked done for this work set."""
-        cp = self._read_checkpoint()
-        if cp is None:
-            return local_frame(self.spark, [], T.StructType(
-                [T.StructField("bucket", T.IntegerType())]))
-        return (cp.filter((F.col("input_fingerprint") == input_fingerprint)
-                          & (F.col("status") == "done"))
-                  .select("bucket").distinct())
-
     def filter_pending(self, documents: DataFrame,
-                       input_fingerprint: str) -> DataFrame:
-        """documents (+bucket col) minus docs in done buckets.
+                       done: set[int]) -> DataFrame:
+        """documents (+bucket col) minus docs in the ``done`` buckets.
 
-        The done-bucket set is ≤ n_buckets rows → **broadcast left_anti**
-        join: no shuffle of the (huge) documents side, the scale-correct
-        replacement for the reference's collect-then-isin anti-pattern
-        (``processors/ocr.py:67-70``, SURVEY.md §2.2 P3).
+        ``done`` is the ≤ n_buckets ints ``run_state`` read, so the cut
+        is a static filter: no join, no lineage re-read per action — the
+        scale-correct twin of the reference's collect-every-processed-id
+        ``isin`` (``processors/ocr.py:67-70``, SURVEY.md §2.2 P3).
         """
-        with_bucket = documents.withColumn(
-            "bucket", bucket_col(self.cfg.n_buckets))
-        done = self.done_buckets(input_fingerprint)
-        return with_bucket.join(F.broadcast(done), "bucket", "left_anti")
+        return (documents
+                .withColumn("bucket", bucket_col(self.cfg.n_buckets))
+                .filter(~F.col("bucket").isin(sorted(done))))
 
     def next_run_seq(self) -> int:
         """Monotonic run ordinal: 1 + the max sequence ever recorded.
@@ -93,7 +82,7 @@ class CheckpointManager:
         ordinal + 1 is the authoritative next sequence (control-plane
         aggregate over the tiny lineage table).
         """
-        return self.next_run_seq_and_marked()[0]
+        return self.run_state()[0]
 
     def all_marked_buckets(self) -> set[int]:
         """Distinct buckets with any lineage mark, across fingerprints —
@@ -102,18 +91,25 @@ class CheckpointManager:
         A bucket whose results committed but whose mark didn't (crash in
         the write→mark window) is still *pending* for its input, so the
         resume run re-extracts it and carries it in pend_list instead."""
-        return self.next_run_seq_and_marked()[1]
+        return self.run_state()[1]
 
-    def next_run_seq_and_marked(self) -> tuple[int, set[int]]:
-        """``(next_run_seq(), all_marked_buckets())`` from ONE aggregate
-        over the lineage table — a job's start-of-run control-plane read.
-        An empty table costs no Spark job."""
+    def run_state(self, fingerprints: tuple[str, ...] = ()
+                  ) -> tuple[int, set[int], dict[str, set[int]]]:
+        """``(next_run_seq(), all_marked_buckets(), {fp: done buckets})``
+        from ONE aggregate over the lineage table — a job's start-of-run
+        control-plane read.  The done buckets of a fingerprint are those
+        marked 'done' for it.  An empty table costs no Spark job."""
         cp = self._read_checkpoint()
         if cp is None:
-            return 1, set()
-        mx, buckets = cp.agg(F.max("run_seq"),
-                             F.collect_set("bucket")).first()
-        return int(mx or 0) + 1, set(buckets)
+            return 1, set(), {fp: set() for fp in fingerprints}
+        done = F.col("status") == "done"
+        mx, marked, *per_fp = cp.agg(
+            F.max("run_seq"), F.collect_set("bucket"),
+            *[F.collect_set(F.when(done & (F.col("input_fingerprint") == fp),
+                                   F.col("bucket")))
+              for fp in fingerprints]).first()
+        return (int(mx or 0) + 1, set(marked),
+                {fp: set(b) for fp, b in zip(fingerprints, per_fp)})
 
     def run_history(self, k: int = 10) -> DataFrame:
         """Latest runs with aggregate metrics (reference:
@@ -137,8 +133,8 @@ class CheckpointManager:
         one row per ``(input_fingerprint, bucket)`` — the highest
         ``run_seq`` mark (VERDICT r3 #6).
 
-        The log grows runs × n_buckets rows forever; ``next_run_seq`` and
-        ``all_marked_buckets`` scan it every run, so a years-running
+        The log grows runs × n_buckets rows forever; ``run_state``
+        scans it once at the start of every run, so a years-running
         deployment compacts periodically (``jobs/status.py
         --compact-checkpoint``).  Every reader's contract survives: done
         buckets per fingerprint, the distinct-marked-bucket set, the
@@ -177,7 +173,7 @@ class CheckpointManager:
         append one 'done' lineage row per bucket, and return the appended
         rows.  A bucket's ``duration_ms`` is the kernel time of its rows.
         ``run_seq`` is the run's ordinal, read once at the start of the
-        run (``next_run_seq_and_marked``).
+        run (``run_state``).
 
         The aggregate runs distributed (map-side partial agg → tiny
         shuffle); the ≤ n_buckets result rows are CONTROL-PLANE data, so

@@ -12,7 +12,8 @@ distributed on executors (no external data — FIXTURES.md).
 
 Flow (reference entrypoint analogue: ``main.py:56-101`` run_ocr_processing):
   1. load input → stamp checkpoint bucket
-  2. anti-join buckets already done for this input fingerprint (resume)
+  2. read the run's lineage state once (run ordinal, marked buckets,
+     buckets done for this input) and keep the pending buckets (resume)
   3. explode → salted repartition → Arrow-batched extraction
   4. append results PARTITIONED BY bucket (repartition first: one file per
      touched bucket per run → real partition pruning downstream); an
@@ -97,9 +98,9 @@ def gc_media_orphans(io) -> dict:
     not yet committed would look orphaned.
 
     Scale shape: one column-pruned scan of results (media_ref + the
-    latest-wins run columns), an anti-join to find orphans, then a
-    dynamic partition overwrite of ONLY the buckets holding orphans
-    (≤ n_buckets ints collected; untouched buckets are not rewritten).
+    latest-wins run columns), an anti-join to find orphans counted per
+    bucket in one collect (≤ n_buckets rows), then a rewrite of ONLY the
+    buckets holding orphans (untouched buckets are not rewritten).
     """
     restored = _restore_gc_staging(io)   # BEFORE any read of MEDIA_TABLE
     pay = io.read(MEDIA_TABLE)
@@ -113,11 +114,11 @@ def gc_media_orphans(io) -> dict:
             .select("media_ref").distinct())
     orphans = (pay.filter(F.col("media_ref").isNotNull())
                .join(live, "media_ref", "left_anti"))
-    touched = sorted(r["bucket"] for r in
-                     orphans.select("bucket").distinct().collect())
-    if not touched:
+    per_bucket = dict(tuple(r) for r in
+                      orphans.groupBy("bucket").count().collect())
+    if not per_bucket:
         return {"gc_orphans": 0, "gc_buckets": 0, "gc_restored": restored}
-    n_orphans = orphans.count()
+    touched = sorted(per_bucket)
     in_touched = pay.filter(F.col("bucket").isin(touched))
     kept = (in_touched.filter(F.col("media_ref").isNotNull())
             .join(live, "media_ref", "left_semi")
@@ -136,12 +137,12 @@ def gc_media_orphans(io) -> dict:
     if survivors is not None:
         io.append(survivors, MEDIA_TABLE, partition_by=["bucket"])
     io.drop(staging)
-    return {"gc_orphans": int(n_orphans), "gc_buckets": len(touched),
+    return {"gc_orphans": sum(per_bucket.values()), "gc_buckets": len(touched),
             "gc_restored": restored}
 
 
 def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
-                    fail_after_buckets: int | None = None
+                    done: set[int], fail_after_buckets: int | None = None
                     ) -> tuple[dict, list[int]]:
     """Materialize the bucket-partitioned ``media_payloads`` table: every
     embedded raster image of every pending pdf span, keyed by the
@@ -150,18 +151,18 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
     through ``pdf_to_images``, processors/ocr.py:100).
 
     Resumable via the same checkpoint lineage under its OWN fingerprint
-    (``<input>#media``), with the extraction's work selection
-    (``select_work``: mode, crash simulator, ``--max-docs`` bucket cap,
-    so a fresh capped run covers the same buckets as the extraction):
-    write payloads → mark buckets; a crash between
-    the two re-extracts the bucket and the byte-identical rows (refs are
-    payload hashes) dedup on read (``multimodal.dedup_payloads``).
+    (``<input>#media``, whose done buckets are ``done``), with the
+    extraction's work selection (``select_work``: mode, crash simulator,
+    ``--max-docs`` bucket cap, so a fresh capped run covers the same
+    buckets as the extraction): write payloads → mark buckets; a crash
+    between the two re-extracts the bucket and the byte-identical rows
+    (refs are payload hashes) dedup on read (``multimodal.dedup_payloads``).
     Returns the stage's stats and the buckets it marked."""
     from databricks_pdf_ocr_spark.operators.multimodal import pdf_span_images
 
     fp = fingerprint + "#media"
     t0 = time.time()
-    pending = select_work(documents, cp, fp, cfg, fail_after_buckets)
+    pending = select_work(documents, cp, done, cfg, fail_after_buckets)
 
     # per-bucket doc/span counts BEFORE the fan-out (1 row per doc)
     doc_rows = (pending.groupBy("bucket").agg(
@@ -295,21 +296,22 @@ def run_job(spark, args) -> tuple[dict, int]:
     t0 = time.time()
     documents, fingerprint = load_input(spark, args.input)
 
+    # The run's ONE lineage read: the monotonic run ordinal (the
+    # latest-wins primary; wall-clock + random hex misorders on a tie or
+    # an NTP step back), the buckets marked before this run (the assembly
+    # scope, completed below with this run's marks) and the done buckets
+    # of the input and of its media stage, which marks nothing before it.
+    media_fp = fingerprint + "#media"
+    run_seq, marked, done = cp.run_state((fingerprint, media_fp))
+
     # --- work selection (reference modes: processors/ocr.py:59-85) --------
     # --max-docs caps at BUCKET granularity — the lineage/resume unit.  A
     # plain .limit() truncates inside buckets that then get marked done,
     # permanently dropping the cut docs from every future run.
-    pending = select_work(documents, cp, fingerprint, cfg,
+    pending = select_work(documents, cp, done[fingerprint], cfg,
                           args.fail_after_buckets)
 
     run_id = new_run_id()
-    # monotonic run ordinal from the checkpoint log: the latest-wins
-    # ordering primary (wall-clock + random hex alone misorders on a
-    # timestamp tie or a backwards NTP step between runs).  The same read
-    # yields the buckets marked before this run — the assembly scope,
-    # completed below with the buckets this run marks, so the lineage
-    # table is never re-read after the mark.
-    run_seq, marked = cp.next_run_seq_and_marked()
     spans = explode_spans(pending.select("doc_id", "spans"))
     results = extract_spans(spans, cfg).withColumns({
         "bucket": bucket_col(cfg.n_buckets),
@@ -384,7 +386,7 @@ def run_job(spark, args) -> tuple[dict, int]:
         media_stats, media_marked = run_media_stage(
             io, cp, documents, fingerprint, cfg,
             run_seq=run_seq + 1 if marks else run_seq,
-            fail_after_buckets=args.fail_after_buckets)
+            done=done[media_fp], fail_after_buckets=args.fail_after_buckets)
         stats.update(media_stats)
         marked |= set(media_marked)
     if args.fail_after_buckets is not None:

@@ -30,6 +30,15 @@ def env(spark, tmp_tables):
     return io, cp, rows, df
 
 
+def _done(cp):
+    """The buckets marked done for FP, as a run reads them at its start."""
+    return cp.run_state((FP,))[2][FP]
+
+
+def _pending(cp, df):
+    return cp.filter_pending(df, _done(cp))
+
+
 def _process(io, cp, pending, tag):
     results = run_extraction(pending.select("doc_id", "spans"), TEST_CONFIG)
     results = results.withColumn("bucket", bucket_col(TEST_CONFIG.n_buckets))
@@ -45,22 +54,22 @@ def test_kill_and_resume_equals_single_run(env):
     io, cp, rows, df = env
 
     # run 1 "crashes" after processing only 3 of the buckets
-    pending1 = cp.filter_pending(df, FP)
+    pending1 = _pending(cp, df)
     subset = (pending1.select("bucket").distinct().orderBy("bucket").limit(3))
     part1 = pending1.join(F.broadcast(subset), "bucket", "left_semi")
     _process(io, cp, part1, "run1")
 
-    done_after_1 = {r[0] for r in cp.done_buckets(FP).collect()}
+    done_after_1 = _done(cp)
     assert len(done_after_1) == 3
 
     # resume: only the remaining buckets are pending
-    pending2 = cp.filter_pending(df, FP)
+    pending2 = _pending(cp, df)
     pend_buckets = {r[0] for r in pending2.select("bucket").distinct().collect()}
     assert pend_buckets.isdisjoint(done_after_1)
     _process(io, cp, pending2, "run2")
 
     # nothing pending afterwards
-    assert cp.filter_pending(df, FP).count() == 0
+    assert _pending(cp, df).count() == 0
 
     # final output == golden (crash did not lose or duplicate anything)
     assembled = reassemble(io.read("extraction_results"))
@@ -75,7 +84,7 @@ def test_double_process_one_bucket_is_idempotent(env):
     """Crash *between* write and mark: bucket extracted twice → dedup-on-read
     collapses to exactly one copy."""
     io, cp, rows, df = env
-    pending = cp.filter_pending(df, FP)
+    pending = _pending(cp, df)
     one = pending.select("bucket").distinct().orderBy("bucket").limit(1)
     part = pending.join(F.broadcast(one), "bucket", "left_semi")
 
@@ -83,7 +92,7 @@ def test_double_process_one_bucket_is_idempotent(env):
     results = run_extraction(part.select("doc_id", "spans"), TEST_CONFIG) \
         .withColumn("bucket", bucket_col(TEST_CONFIG.n_buckets))
     io.append(results, "extraction_results", partition_by=["bucket"])
-    _process(io, cp, cp.filter_pending(df, FP), "full")
+    _process(io, cp, _pending(cp, df), "full")
 
     all_results = io.read("extraction_results")
     assert (all_results.count()
@@ -98,7 +107,7 @@ def test_double_process_one_bucket_is_idempotent(env):
 
 def test_run_history_topk(env):
     io, cp, rows, df = env
-    _process(io, cp, cp.filter_pending(df, FP), "r")
+    _process(io, cp, _pending(cp, df), "r")
     hist = cp.run_history(10).collect()
     assert len(hist) == 1
     assert hist[0]["docs_done"] == N_DOCS
@@ -111,7 +120,7 @@ def test_run_history_topk(env):
 def test_next_run_seq_is_monotonic(env):
     io, cp, rows, df = env
     assert cp.next_run_seq() == 1          # empty table
-    pending = cp.filter_pending(df, FP)
+    pending = _pending(cp, df)
     _process(io, cp, pending, "seq1")
     assert cp.next_run_seq() == 2
     # a second mark (different fingerprint) advances it again
@@ -132,7 +141,7 @@ def test_next_run_seq_survives_mixed_schema_table(env, tmp_tables):
     import pyarrow.parquet as pq
 
     io, cp, rows, df = env
-    _process(io, cp, cp.filter_pending(df, FP), "r")      # run_seq=1 marks
+    _process(io, cp, _pending(cp, df), "r")      # run_seq=1 marks
     assert cp.next_run_seq() == 2
     # drop a legacy part file WITHOUT the run_seq column into the table
     old = pa.Table.from_pydict({
@@ -155,7 +164,7 @@ def test_compaction_preserves_resume_and_bounds_rows(env, tmp_tables):
     the table at one row per (fingerprint, bucket)."""
     io, cp, rows, df = env
     # two full runs + a second fingerprint → runs x buckets rows
-    _process(io, cp, cp.filter_pending(df, FP), "r1")
+    _process(io, cp, _pending(cp, df), "r1")
     results = io.read("extraction_results")
     cp.mark_from_results(results.dropDuplicates(["result_id"]),
                          new_run_id(), FP, run_seq=cp.next_run_seq())
@@ -163,7 +172,7 @@ def test_compaction_preserves_resume_and_bounds_rows(env, tmp_tables):
                          new_run_id(), FP + "-b", run_seq=cp.next_run_seq())
 
     before_seq = cp.next_run_seq()
-    before_done = {r["bucket"] for r in cp.done_buckets(FP).collect()}
+    before_done = _done(cp)
     before_marked = cp.all_marked_buckets()
     n_keys = (io.read(CHECKPOINT_TABLE)
               .select("input_fingerprint", "bucket").distinct().count())
@@ -172,10 +181,10 @@ def test_compaction_preserves_resume_and_bounds_rows(env, tmp_tables):
     assert out["rows_before"] > out["rows_after"] == n_keys  # bounded
 
     assert cp.next_run_seq() == before_seq
-    assert {r["bucket"] for r in cp.done_buckets(FP).collect()} == before_done
+    assert _done(cp) == before_done
     assert cp.all_marked_buckets() == before_marked
     # a resume run still sees nothing pending for the compacted lineage
-    assert cp.filter_pending(df, FP).count() == 0
+    assert _pending(cp, df).count() == 0
     # and the physical file count collapsed too (not just row count)
     import glob
     import os

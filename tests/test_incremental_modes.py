@@ -37,6 +37,12 @@ def _buckets(df):
                       .alias("bucket")).collect()}
 
 
+def _done(cp, fp=FP):
+    """The buckets marked done for ``fp``, as a run reads them at its
+    start."""
+    return cp.run_state((fp,))[2][fp]
+
+
 @pytest.fixture()
 def cp(spark, tmp_tables):
     return CheckpointManager(TableIO(spark, tmp_tables), TEST_CONFIG)
@@ -51,10 +57,11 @@ def test_incremental_anti_join(spark, cp):
     cp.mark_buckets([{"bucket": b} for b in done], new_run_id(), FP, 0,
                     run_seq=cp.next_run_seq())
     cfg = replace(TEST_CONFIG, processing_mode="incremental")
-    pending = select_work(df, cp, FP, cfg)
+    pending = select_work(df, cp, _done(cp), cfg)
     got = {r["doc_id"] for r in pending.select("doc_id").collect()}
     assert got == {d for d, b in bucket_of.items() if b not in done}
-    assert select_work(df, cp, FP + "#other", cfg).count() == len(rows)
+    assert select_work(df, cp, _done(cp, FP + "#other"),
+                       cfg).count() == len(rows)
 
 
 def test_reprocess_all_and_specific(spark, cp):
@@ -63,33 +70,57 @@ def test_reprocess_all_and_specific(spark, cp):
                     new_run_id(), FP, 0,   # marks never hide reprocess work
                     run_seq=cp.next_run_seq())
     cfg_all = replace(TEST_CONFIG, processing_mode="reprocess_all")
-    assert select_work(df, cp, FP, cfg_all).count() == len(rows)
+    assert select_work(df, cp, _done(cp), cfg_all).count() == len(rows)
 
     want = tuple(r[0] for r in rows[3:6])
     cfg_spec = replace(TEST_CONFIG, processing_mode="reprocess_specific",
                        specific_doc_ids=want)
-    got = select_work(df, cp, FP, cfg_spec).collect()
+    got = select_work(df, cp, _done(cp), cfg_spec).collect()
     assert {r["doc_id"] for r in got} == set(want)
     bucket_of = _buckets(df)
     assert all(r["bucket"] == bucket_of[r["doc_id"]] for r in got)
 
 
 def test_max_docs_per_run_cap(spark, cp):
-    """The cap rounds UP to whole buckets, taken in bucket order."""
+    """The crash cut keeps the first k pending buckets, then the cap keeps
+    whole buckets in bucket order while the docs before them number
+    under it (so it rounds UP to a bucket boundary) — also over an
+    incremental set with done buckets.  Both are decided once on the
+    driver and applied as a static ``isin``: the executed plan has no
+    window, join or broadcast."""
     rows, df = _docs(spark)
-    per_bucket = Counter(_buckets(df).values())
-    cfg = replace(TEST_CONFIG, processing_mode="reprocess_all",
-                  max_docs_per_run=5)
-    kept = Counter(r["bucket"] for r in
-                   select_work(df, cp, FP, cfg).select("bucket").collect())
-    want, total = {}, 0
-    for b in sorted(per_bucket):
-        if total >= 5:
-            break
-        want[b] = per_bucket[b]
-        total += per_bucket[b]
-    assert dict(kept) == want
-    assert 5 <= sum(kept.values()) < len(rows)
+    bucket_of = _buckets(df)
+    done = set(sorted(set(bucket_of.values()))[1::3])
+    cp.mark_buckets([{"bucket": b} for b in done], new_run_id(), FP, 0,
+                    run_seq=cp.next_run_seq())
+
+    def want(mode, max_docs, k):
+        per_bucket = Counter(b for b in bucket_of.values()
+                             if mode == "reprocess_all" or b not in done)
+        keep, total = {}, 0
+        for b in sorted(per_bucket)[:k]:
+            if max_docs and total >= max_docs:
+                break
+            keep[b] = per_bucket[b]
+            total += per_bucket[b]
+        return keep
+
+    for mode, max_docs, k in (("reprocess_all", 5, None),
+                              ("incremental", 5, None),
+                              ("incremental", None, 3),
+                              ("incremental", 5, 1),
+                              ("incremental", 100, 0)):
+        cfg = replace(TEST_CONFIG, processing_mode=mode,
+                      max_docs_per_run=max_docs)
+        pending = select_work(df, cp, _done(cp), cfg, k)
+        kept = Counter(r["bucket"] for r in pending.collect())
+        case = (mode, max_docs, k)
+        assert dict(kept) == want(mode, max_docs, k), case
+        plan = pending._jdf.queryExecution().executedPlan().toString()
+        for node in ("Window", "Join", "BroadcastExchange"):
+            assert node not in plan, (case, plan)
+    capped = want("reprocess_all", 5, None)
+    assert 5 <= sum(capped.values()) < len(rows)
 
 
 def test_latest_wins_view(spark):

@@ -212,7 +212,8 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     write's two, three with --salt; the mark's two; the reassembly's
     two).  The touched buckets come from the results write itself, so a
     fresh incremental run needs no more jobs than that, and a --max-docs
-    run only the cap's own three, once.  Every run's stats equal its
+    run only the cap's per-bucket count, once; a no-op incremental rerun
+    adds only the lineage read.  Every run's stats equal its
     lineage as ``run_history`` reads it back; a no-op incremental rerun
     marks nothing and reports nothing."""
     from databricks_pdf_ocr_spark.plans.checkpoint import (
@@ -263,13 +264,16 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     stats, n_jobs, _ = run("incremental")
     assert stats["docs_done"] == N_DOCS
     assert n_jobs <= all_jobs
-    stats, _, _ = run("incremental")                 # no-op rerun
+    stats, n_jobs, _ = run("incremental")                 # no-op rerun
     assert stats["docs_assembled"] == 0
+    # the lineage read (done sets included) is one aggregate; the done
+    # buckets are a static filter, never a broadcast anti-join
+    assert n_jobs <= all_jobs + 2
     stats, n_jobs, _ = run("capped", "--max-docs", "10")
     assert 10 <= stats["docs_done"] < N_DOCS
-    # the cap's per-bucket count, running sum and broadcast are evaluated
-    # inside the results write only, never again to list the buckets
-    assert n_jobs <= all_jobs + 3
+    # the cap is one per-bucket count collected on the driver and a
+    # static isin, never re-evaluated inside the results write
+    assert n_jobs <= all_jobs + 2
 
 
 def test_config_is_flags_over_defaults(monkeypatch):

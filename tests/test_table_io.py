@@ -110,7 +110,7 @@ def _is_local_scan(df) -> bool:
 def test_driver_built_frames_are_local_table_scans(spark, tmp_tables,
                                                    in_job_group):
     """The near-dup component labels (driver path, empty or not), the
-    empty ``done_buckets`` / ``run_history`` fallbacks and the Iceberg
+    empty ``run_history`` fallback and the Iceberg
     ``append_rows`` frame are Arrow-built: each plans as a
     ``LocalTableScan``, building (but for the labels) and collecting it
     runs no Spark job, and
@@ -148,7 +148,6 @@ def test_driver_built_frames_are_local_table_scans(spark, tmp_tables,
         "labels": (lambda: labels, [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)],
                    "node bigint, comp bigint"),
         "empty_labels": (lambda: no_labels, [], "node bigint, comp bigint"),
-        "done_buckets": (lambda: cp.done_buckets("fp"), [], "bucket int"),
         "run_history": (cp.run_history, [], CHECKPOINT_SCHEMA),
         "append_rows": (append_rows,
                         [tuple(r.values()) for r in lineage],
@@ -167,3 +166,8 @@ def test_driver_built_frames_are_local_table_scans(spark, tmp_tables,
         want = spark.createDataFrame(rows, schema)
         assert df.schema == want.schema, name
         assert sorted(got) == sorted(want.collect()), name
+    # the start-of-run lineage read of a missing table runs no job either
+    state, jobs = in_job_group("local-frame-run-state",
+                               lambda: cp.run_state(("fp",)))
+    assert state == (1, set(), {"fp": set()})
+    assert jobs == []
