@@ -13,9 +13,11 @@ Write-then-mark ordering gives crash safety: results for a bucket are
 committed *before* the bucket is marked done, so a crash between the two
 re-extracts that bucket; deterministic ``result_id``s make the rerun
 byte-identical and ``reassemble``'s ``array_distinct`` collapses the
-duplicates on read (SURVEY.md §4.2.3).  No overwrite-in-place anywhere —
-the reference's full-table-rewrite update (``managers/state.py:64-73``)
-is replaced by an append-only log + latest-wins reads.
+duplicates on read (SURVEY.md §4.2.3).  The extraction job also
+assembles a bucket before it marks it, so every marked bucket is
+assembled and a crash before the mark re-assembles on the next run.
+The lineage log is append-only: the reference's full-table-rewrite
+update (``managers/state.py:64-73``) is replaced by latest-wins reads.
 """
 
 from __future__ import annotations
@@ -85,30 +87,29 @@ class CheckpointManager:
         return self.run_state()[0]
 
     def all_marked_buckets(self) -> set[int]:
-        """Distinct buckets with any lineage mark, across fingerprints —
-        the assembly-scope source (≤ n_buckets ints from the tiny
-        checkpoint table; never a listing/scan over the results corpus).
-        A bucket whose results committed but whose mark didn't (crash in
-        the write→mark window) is still *pending* for its input, so the
-        resume run re-extracts it and carries it in pend_list instead."""
-        return self.run_state()[1]
-
-    def run_state(self, fingerprints: tuple[str, ...] = ()
-                  ) -> tuple[int, set[int], dict[str, set[int]]]:
-        """``(next_run_seq(), all_marked_buckets(), {fp: done buckets})``
-        from ONE aggregate over the lineage table — a job's start-of-run
-        control-plane read.  The done buckets of a fingerprint are those
-        marked 'done' for it.  An empty table costs no Spark job."""
+        """Distinct buckets with any lineage mark, across fingerprints
+        (≤ n_buckets ints from the tiny checkpoint table)."""
         cp = self._read_checkpoint()
         if cp is None:
-            return 1, set(), {fp: set() for fp in fingerprints}
+            return set()
+        return set(cp.agg(F.collect_set("bucket")).first()[0])
+
+    def run_state(self, fingerprints: tuple[str, ...] = ()
+                  ) -> tuple[int, dict[str, set[int]]]:
+        """``(next_run_seq(), {fp: done buckets})`` from ONE aggregate
+        over the lineage table — a job's start-of-run control-plane read.
+        The done buckets of a fingerprint are those marked 'done' for it.
+        An empty table costs no Spark job."""
+        cp = self._read_checkpoint()
+        if cp is None:
+            return 1, {fp: set() for fp in fingerprints}
         done = F.col("status") == "done"
-        mx, marked, *per_fp = cp.agg(
-            F.max("run_seq"), F.collect_set("bucket"),
+        mx, *per_fp = cp.agg(
+            F.max("run_seq"),
             *[F.collect_set(F.when(done & (F.col("input_fingerprint") == fp),
                                    F.col("bucket")))
               for fp in fingerprints]).first()
-        return (int(mx or 0) + 1, set(marked),
+        return (int(mx or 0) + 1,
                 {fp: set(b) for fp, b in zip(fingerprints, per_fp)})
 
     def run_history(self, k: int = 10) -> DataFrame:

@@ -6,6 +6,9 @@ Sandbox stand-in for the north rule's two-cluster-size requirement
 materialized fixture input and reports docs/sec at both plus
 efficiency = (throughput_4N / throughput_N) / 4 (target ≥ 0.8).
 4N defaults to the CPUs this process may use, N to a quarter of that.
+The timed run is the whole job, reassembly included.  Records from
+before the job dropped its ``--skip-assemble`` flag timed the job
+without reassembly and are not comparable with later ones.
 
 Each recorded run appends a dated section to ``BENCH/BASELINE.md``;
 ``BENCH/best.json`` is replaced only by a better efficiency.
@@ -84,7 +87,7 @@ def run_at(cores: int, input_path: str, zpath: str, tag: str,
          str(REPO / "jobs" / "extract.py"),
          "--input", input_path, "--tables", tables,
          "--n-buckets", "64", "--partitions", str(cores),
-         "--mode", "reprocess_all", "--skip-assemble",
+         "--mode", "reprocess_all",
          *(["--salt"] if salt else [])],
         capture_output=True, text=True, timeout=3600)
     wall = time.time() - t0
@@ -278,8 +281,8 @@ def main() -> int:
 
     lo, hi = best(runs_lo), best(runs_hi)
 
-    # throughput from the job's own elapsed time (includes scan + extract +
-    # write; excludes JVM startup via elapsed_sec measured inside the job)
+    # throughput from the job's own elapsed time (includes scan, extract,
+    # write and reassembly; excludes JVM startup: measured inside the job)
     thr_lo = args.docs / lo["elapsed_sec"]
     thr_hi = args.docs / hi["elapsed_sec"]
     factor = args.xn / args.n

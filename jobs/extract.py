@@ -12,16 +12,24 @@ distributed on executors (no external data — FIXTURES.md).
 
 Flow (reference entrypoint analogue: ``main.py:56-101`` run_ocr_processing):
   1. load input → stamp checkpoint bucket
-  2. read the run's lineage state once (run ordinal, marked buckets,
-     buckets done for this input) and keep the pending buckets (resume)
+  2. read the run's lineage state once (run ordinal, buckets done for
+     this input) and keep the pending buckets (resume); an incremental
+     run with no bucket pending ends here
   3. explode → salted repartition → Arrow-batched extraction
   4. append results PARTITIONED BY bucket (repartition first: one file per
      touched bucket per run → real partition pruning downstream); an
      Observation on that write collects the touched buckets    — WRITE ...
-  5. append per-bucket lineage metrics for the touched buckets (this run's
+  5. reassemble offset-sorted span sequences of the touched buckets
+     (latest-run-wins per doc) → dynamic-overwrite only those bucket
+     partitions                                               — ... ASSEMBLE ...
+  6. append per-bucket lineage metrics for the touched buckets (this run's
      rows only, read back partition-pruned)                     — ... THEN MARK
-  6. reassemble offset-sorted span sequences (latest-run-wins per doc)
-     → dynamic-overwrite only the touched bucket partitions
+
+A crash anywhere before step 6 leaves the bucket pending: the next run
+re-extracts and re-assembles it, and both steps are idempotent (result
+ids are deterministic, reads are latest-run-wins).  So every marked
+bucket is assembled, and no run needs to look at the assembled table to
+find the buckets a crash left behind.
 
 The core is ``run_job(spark, args)`` so tests drive it in-process against
 the shared session; ``main()`` only owns session lifecycle + JSON printing.
@@ -157,7 +165,7 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
     buckets as the extraction): write payloads → mark buckets; a crash
     between the two re-extracts the bucket and the byte-identical rows
     (refs are payload hashes) dedup on read (``multimodal.dedup_payloads``).
-    Returns the stage's stats and the buckets it marked."""
+    Returns the stage's stats."""
     from databricks_pdf_ocr_spark.operators.multimodal import pdf_span_images
 
     fp = fingerprint + "#media"
@@ -172,7 +180,7 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
         .alias("pdf_spans")).collect())     # ≤ n_buckets control-plane rows
     pend_list = sorted(r["bucket"] for r in doc_rows)
     if not pend_list:
-        return {"media_buckets": 0, "media_images": 0, "media_errors": 0}, []
+        return {"media_buckets": 0, "media_images": 0, "media_errors": 0}
 
     run_id = new_run_id()
     spans = (pending
@@ -215,8 +223,7 @@ def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
                     run_seq=run_seq)
     return {"media_buckets": len(pend_list),
             "media_images": int(sum(m["span_count"] for m in metrics)),
-            "media_errors": int(sum(m["failed_spans"] for m in metrics))}, \
-        pend_list
+            "media_errors": int(sum(m["failed_spans"] for m in metrics))}
 
 
 def load_input(spark, spec: str):
@@ -264,8 +271,8 @@ def build_parser() -> argparse.ArgumentParser:
                          "default)")
     ap.add_argument("--fail-after-buckets", type=int, default=None,
                     help="TEST ONLY: process just the first k pending buckets "
-                         "then exit nonzero (simulates a mid-run crash)")
-    ap.add_argument("--skip-assemble", action="store_true")
+                         "(written, assembled and marked) then exit nonzero "
+                         "(simulates a mid-run crash)")
     ap.add_argument("--salt", action="store_true",
                     help="span-level salted repartition before extraction "
                          "(for inputs where single docs rival a whole split)")
@@ -298,11 +305,22 @@ def run_job(spark, args) -> tuple[dict, int]:
 
     # The run's ONE lineage read: the monotonic run ordinal (the
     # latest-wins primary; wall-clock + random hex misorders on a tie or
-    # an NTP step back), the buckets marked before this run (the assembly
-    # scope, completed below with this run's marks) and the done buckets
-    # of the input and of its media stage, which marks nothing before it.
+    # an NTP step back) and the done buckets of the input and of its
+    # media stage, which marks nothing before it.
     media_fp = fingerprint + "#media"
-    run_seq, marked, done = cp.run_state((fingerprint, media_fp))
+    run_seq, done = cp.run_state((fingerprint, media_fp))
+    run_id = new_run_id()
+    stats = {"run_id": run_id, "fingerprint": fingerprint}
+    # an incremental run whose stages have every bucket done has nothing
+    # pending: it ends on the lineage read, before any scan of the input
+    stage_fps = (fingerprint, media_fp) if args.media_payloads else (
+        fingerprint,)
+    if cfg.processing_mode == "incremental" and all(
+            done[fp] >= set(range(cfg.n_buckets)) for fp in stage_fps):
+        stats["docs_assembled"] = 0
+        if args.media_payloads:
+            stats.update(media_buckets=0, media_images=0, media_errors=0)
+        return stats, 0
 
     # --- work selection (reference modes: processors/ocr.py:59-85) --------
     # --max-docs caps at BUCKET granularity — the lineage/resume unit.  A
@@ -311,7 +329,6 @@ def run_job(spark, args) -> tuple[dict, int]:
     pending = select_work(documents, cp, done[fingerprint], cfg,
                           args.fail_after_buckets)
 
-    run_id = new_run_id()
     spans = explode_spans(pending.select("doc_id", "spans"))
     results = extract_spans(spans, cfg).withColumns({
         "bucket": bucket_col(cfg.n_buckets),
@@ -323,8 +340,8 @@ def run_job(spark, args) -> tuple[dict, int]:
     # WRITE results, partitioned by bucket.  Hash-repartitioning on bucket
     # first puts every bucket in exactly one task, so each touched bucket
     # lands as ONE file per run — no tasks×buckets small-file explosion,
-    # and the lineage re-scan + incremental reassembly below prune to
-    # exactly the touched bucket directories.  The task count is the
+    # and the reassembly + lineage re-scan below prune to exactly the
+    # touched bucket directories.  The task count is the
     # cluster's parallelism (the salted kernel stage's), not n_buckets:
     # tasks beyond it only add waves, and every parquet-write task pays
     # ~30-50 ms to deserialize before it writes a row.
@@ -340,94 +357,28 @@ def run_job(spark, args) -> tuple[dict, int]:
     t_select = time.time()
     io.append(results, RESULTS_TABLE, partition_by=["bucket"])
     t_extract = time.time()
-
-    # ... THEN MARK lineage.  Re-scan of the just-written data is cheap:
-    # partition pruning (the touched-bucket isin) + the run_id pushed
-    # filter skip every file other runs wrote, and column pruning drops
-    # the payload text.  Filtering on run_id makes the per-bucket metrics
-    # exact — other work sets sharing a bucket no longer inflate
-    # docs_done/pages_parsed (and replayed duplicates can't occur within
-    # one run, so no dedup pass is needed).
     # ≤ n_buckets ints (bucket METADATA, not data), read only after the
-    # write.  A broadcast semi-join is not enough here — dynamic
-    # partition pruning declines to fire without a selective predicate
-    # on the build side, so the scan would read every bucket dir; a
-    # static isin over the partition column guarantees pruning.
+    # write.  A broadcast semi-join is not enough for the two re-scans
+    # below — dynamic partition pruning declines to fire without a
+    # selective predicate on the build side, so the scan would read every
+    # bucket dir; a static isin over the partition column guarantees
+    # pruning.
     pend_list = sorted(touched_obs.get["buckets"])
-    # exactly the columns the lineage aggregate consumes — doc counting
-    # is sum(is_first_span), so neither doc_id nor result_id is read.
-    # The partial explicit schema column-prunes the scan at the READER
-    # level and skips the footer-sampling schema-inference job.
-    MARK_COLS = ("is_first_span", "sub_idx", "status", "pages_parsed",
-                 "ocr_fallback", "duration_ms", "bucket")
-    mark_schema = ddl(RESULTS_RUN_SCHEMA, ("run_id",) + MARK_COLS)
-    this_run = (io.read(RESULTS_TABLE, schema=mark_schema)
-                .filter(F.col("bucket").isin(pend_list)
-                        if pend_list else F.lit(False))
-                .filter(F.col("run_id") == run_id)
-                .select(*MARK_COLS))
-    marks = cp.mark_from_results(this_run, run_id, fingerprint,
-                                 run_seq=run_seq)
-    t_mark = time.time()
-
-    stats = {"run_id": run_id, "fingerprint": fingerprint,
-             "phase_select_sec": round(t_select - t0, 2),
-             "phase_extract_write_sec": round(t_extract - t_select, 2),
-             "phase_mark_sec": round(t_mark - t_extract, 2)}
-    if marks:
-        # THIS run's lineage metrics, summed from the rows just appended
-        stats.update({k: sum(m[k] for m in marks) for k in
-                      ("docs_done", "pages_parsed", "ocr_fallbacks",
-                       "span_count", "failed_spans")})
-    # the mark reads only pend_list buckets, so this covers its rows
-    marked |= set(pend_list)
-    if args.media_payloads:
-        # the media stage's run is the next one in the lineage log
-        media_stats, media_marked = run_media_stage(
-            io, cp, documents, fingerprint, cfg,
-            run_seq=run_seq + 1 if marks else run_seq,
-            done=done[media_fp], fail_after_buckets=args.fail_after_buckets)
-        stats.update(media_stats)
-        marked |= set(media_marked)
-    if args.fail_after_buckets is not None:
-        stats["simulated_crash"] = True
-        return stats, 3
-
-    # --- incremental reassembly: only THIS run's buckets are rebuilt ------
-    # (a full-corpus reassembly per run is infeasible at 10^12 docs;
-    # dynamic partition overwrite replaces exactly the touched bucket
-    # partitions, leaving the rest of the extracted table untouched —
-    # the parquet analogue of Iceberg overwrite-by-partition-filter)
-    if not args.skip_assemble:
-        # self-healing scope: this run's buckets, plus any bucket that has
-        # results but no assembled partition (a prior run died after its
-        # checkpoint mark but before assembly).  Rebuilding a bucket always
-        # reads the FULL results table for it (partition-pruned to just
-        # those bucket dirs), so partitions accumulate docs across
-        # runs/fingerprints correctly.
-        # explicit full schema (ADVICE r3): a mixed old/new table would be
-        # footer-SAMPLED for schema — run_seq could be invisible here and
-        # latest_results would silently fall back to wall-clock ordering
-        results_all = io.read(RESULTS_TABLE, schema=RESULTS_RUN_SCHEMA)
-        # assembly scope from the CHECKPOINT table (≤ runs×n_buckets tiny
-        # rows, read at the start of the run, plus this run's marks),
-        # never a listing/distinct over the results corpus — at 10^12
-        # docs even a partition-column-only distinct pays the file
-        # listing; with Iceberg this is the `partitions` metadata table,
-        # here it's the lineage log carrying the same information.  A
-        # results-committed-but-unmarked bucket (crash in the write→mark
-        # window) stays pending for its input and re-enters via pend_list.
-        ext = io.read(EXTRACTED_TABLE)
-        if ext is None:
-            to_assemble = sorted(marked)
-        else:
-            have = {r["bucket"] for r in
-                    ext.select("bucket").distinct().collect()}
-            to_assemble = sorted(set(pend_list) | (marked - have))
-        # static isin on the partition column → guaranteed directory
-        # pruning: only the touched bucket dirs are read for reassembly
-        touched = results_all.filter(
-            F.col("bucket").isin(to_assemble) if to_assemble else F.lit(False))
+    stats["docs_assembled"] = 0
+    t_assemble = t_mark = t_extract
+    if pend_list:
+        # ... THEN ASSEMBLE: only THIS run's buckets are rebuilt (a
+        # full-corpus reassembly per run is infeasible at 10^12 docs;
+        # dynamic partition overwrite replaces exactly the touched bucket
+        # partitions — the parquet analogue of Iceberg
+        # overwrite-by-partition-filter).  A bucket is rebuilt from ALL
+        # its results rows, across runs and fingerprints, so partitions
+        # accumulate docs correctly.  Explicit full schema (ADVICE r3): a
+        # mixed old/new table would be footer-SAMPLED for schema — run_seq
+        # could be invisible here and latest_results would silently fall
+        # back to wall-clock ordering.
+        touched = (io.read(RESULTS_TABLE, schema=RESULTS_RUN_SCHEMA)
+                   .filter(F.col("bucket").isin(pend_list)))
         # latest-run-wins per doc: a doc re-ingested with CHANGED content
         # under the same doc_id leaves old+new rows in the log; without
         # this view both versions would merge into a corrupted sequence.
@@ -438,9 +389,49 @@ def run_job(spark, args) -> tuple[dict, int]:
         # docs count observed during the overwrite itself — never a
         # full-table count over the (10^12-doc) extracted corpus
         obs_asm = Observation("assembled")
-        assembled = assembled.observe(obs_asm, F.count(F.lit(1)).alias("docs"))
-        io.overwrite_partitions(assembled, EXTRACTED_TABLE, ["bucket"])
+        io.overwrite_partitions(
+            assembled.observe(obs_asm, F.count(F.lit(1)).alias("docs")),
+            EXTRACTED_TABLE, ["bucket"])
         stats["docs_assembled"] = obs_asm.get["docs"]
+        t_assemble = time.time()
+
+        # ... THEN MARK lineage.  Re-scan of the just-written data is
+        # cheap: partition pruning + the run_id pushed filter skip every
+        # file other runs wrote, and column pruning drops the payload
+        # text.  Filtering on run_id makes the per-bucket metrics exact —
+        # other work sets sharing a bucket no longer inflate
+        # docs_done/pages_parsed (and replayed duplicates can't occur
+        # within one run, so no dedup pass is needed).  Exactly the
+        # columns the lineage aggregate consumes — doc counting is
+        # sum(is_first_span), so neither doc_id nor result_id is read;
+        # the partial explicit schema column-prunes the scan at the
+        # READER level and skips the footer-sampling inference job.
+        MARK_COLS = ("is_first_span", "sub_idx", "status", "pages_parsed",
+                     "ocr_fallback", "duration_ms", "bucket")
+        mark_schema = ddl(RESULTS_RUN_SCHEMA, ("run_id",) + MARK_COLS)
+        this_run = (io.read(RESULTS_TABLE, schema=mark_schema)
+                    .filter(F.col("bucket").isin(pend_list))
+                    .filter(F.col("run_id") == run_id)
+                    .select(*MARK_COLS))
+        marks = cp.mark_from_results(this_run, run_id, fingerprint,
+                                     run_seq=run_seq)
+        t_mark = time.time()
+        # THIS run's lineage metrics, summed from the rows just appended
+        stats.update({k: sum(m[k] for m in marks) for k in
+                      ("docs_done", "pages_parsed", "ocr_fallbacks",
+                       "span_count", "failed_spans")})
+    stats.update({"phase_select_sec": round(t_select - t0, 2),
+                  "phase_extract_write_sec": round(t_extract - t_select, 2),
+                  "phase_mark_sec": round(t_mark - t_assemble, 2)})
+    if args.media_payloads:
+        # the media stage's run is the next one in the lineage log
+        stats.update(run_media_stage(
+            io, cp, documents, fingerprint, cfg,
+            run_seq=run_seq + 1 if pend_list else run_seq,
+            done=done[media_fp], fail_after_buckets=args.fail_after_buckets))
+    if args.fail_after_buckets is not None:
+        stats["simulated_crash"] = True
+        return stats, 3
 
     stats["elapsed_sec"] = round(time.time() - t0, 2)
     return stats, 0

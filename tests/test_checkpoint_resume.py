@@ -32,7 +32,7 @@ def env(spark, tmp_tables):
 
 def _done(cp):
     """The buckets marked done for FP, as a run reads them at its start."""
-    return cp.run_state((FP,))[2][FP]
+    return cp.run_state((FP,))[1][FP]
 
 
 def _pending(cp, df):

@@ -40,7 +40,7 @@ def _buckets(df):
 def _done(cp, fp=FP):
     """The buckets marked done for ``fp``, as a run reads them at its
     start."""
-    return cp.run_state((fp,))[2][fp]
+    return cp.run_state((fp,))[1][fp]
 
 
 @pytest.fixture()

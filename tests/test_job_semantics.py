@@ -115,16 +115,58 @@ def test_latest_run_wins_on_changed_reingest(spark, tmp_path, rows):
 
 
 def test_crash_resume_equals_single_run(spark, tmp_path, rows):
+    """A crash plus resume equals a clean run, on an empty table and on
+    one that already holds another input's assembled buckets: the
+    crashed run's buckets must be assembled even though every bucket
+    already had a partition."""
     inp = _write_input(spark, tmp_path, rows, "docs_crash")
+    other = _write_input(spark, tmp_path,
+                         list(fixtures.gen_rows(SEED + 1, N_DOCS,
+                                                fixtures.TINY)),
+                         "docs_crash_other")
     t_crash = str(tmp_path / "t_crash")
     t_clean = str(tmp_path / "t_clean")
 
-    stats, rc = _run(spark, inp, t_crash, "--fail-after-buckets", "2")
-    assert rc == 3 and stats["simulated_crash"]
-    _, rc2 = _run(spark, inp, t_crash)           # resume
+    for step in (inp, other):
+        stats, rc = _run(spark, step, t_crash, "--fail-after-buckets", "2")
+        assert rc == 3 and stats["simulated_crash"]
+        _, rc2 = _run(spark, step, t_crash)      # resume
+        assert rc2 == 0
+        _, rc3 = _run(spark, step, t_clean)      # fresh single run
+        assert rc3 == 0
+        assert _extracted_dict(spark, t_crash) == \
+            _extracted_dict(spark, t_clean)
+
+
+def test_crash_between_assembly_and_mark_heals(spark, tmp_path, rows,
+                                               monkeypatch):
+    """A run that dies after assembling its buckets but before marking
+    them leaves them pending: the next run re-extracts and re-assembles
+    them, and the assembled table equals a clean run's, no doc twice."""
+    from databricks_pdf_ocr_spark.plans.checkpoint import CheckpointManager
+
+    inp = _write_input(spark, tmp_path, rows, "docs_mark_crash")
+    t_crash = str(tmp_path / "t_mark_crash")
+    t_clean = str(tmp_path / "t_mark_clean")
+    mark = CheckpointManager.mark_from_results
+    calls = []
+
+    def crash_once(self, *a, **kw):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("simulated crash before the mark")
+        return mark(self, *a, **kw)
+
+    monkeypatch.setattr(CheckpointManager, "mark_from_results", crash_once)
+    with pytest.raises(RuntimeError, match="before the mark"):
+        _run(spark, inp, t_crash)
+    assert spark.read.parquet(f"{t_crash}/{EXTRACTED_TABLE}").count() > 0
+    stats, rc = _run(spark, inp, t_crash)        # every bucket re-extracted
+    assert rc == 0 and stats["docs_done"] == N_DOCS
+    _, rc2 = _run(spark, inp, t_clean)
     assert rc2 == 0
-    _, rc3 = _run(spark, inp, t_clean)           # fresh single run
-    assert rc3 == 0
+    ext = spark.read.parquet(f"{t_crash}/{EXTRACTED_TABLE}")
+    assert ext.count() == ext.select("doc_id").distinct().count()
     assert _extracted_dict(spark, t_crash) == _extracted_dict(spark, t_clean)
 
 
@@ -212,10 +254,10 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     write's two, three with --salt; the mark's two; the reassembly's
     two).  The touched buckets come from the results write itself, so a
     fresh incremental run needs no more jobs than that, and a --max-docs
-    run only the cap's per-bucket count, once; a no-op incremental rerun
-    adds only the lineage read.  Every run's stats equal its
-    lineage as ``run_history`` reads it back; a no-op incremental rerun
-    marks nothing and reports nothing."""
+    run only the cap's per-bucket count, once.  A no-op incremental
+    rerun, with or without --media-payloads, runs only the lineage read.
+    Every run's stats equal its lineage as ``run_history`` reads it back;
+    a no-op incremental rerun marks nothing and reports nothing."""
     from databricks_pdf_ocr_spark.plans.checkpoint import (
         CHECKPOINT_TABLE, CheckpointManager,
     )
@@ -264,11 +306,20 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     stats, n_jobs, _ = run("incremental")
     assert stats["docs_done"] == N_DOCS
     assert n_jobs <= all_jobs
-    stats, n_jobs, _ = run("incremental")                 # no-op rerun
-    assert stats["docs_assembled"] == 0
-    # the lineage read (done sets included) is one aggregate; the done
-    # buckets are a static filter, never a broadcast anti-join
-    assert n_jobs <= all_jobs + 2
+    # no-op reruns: the lineage read (done sets included) is one
+    # aggregate, and with every bucket done nothing else runs
+    fp = f"path:{inp}"
+    for name, extra in (("incremental", ()),
+                        ("all--media-payloads", ("--media-payloads",))):
+        t = str(tmp_path / ("jobs_t_" + name))
+        cp = CheckpointManager(_table_io(spark, t), _job_cfg())
+        _, read_jobs = in_job_group(f"lineage-read-{next(groups)}",
+                                    lambda: cp.run_state((fp, fp + "#media")))
+        stats, n_jobs, _ = run(name, *extra)
+        assert 0 < n_jobs <= len(read_jobs)
+        assert stats["run_id"] and stats["docs_assembled"] == 0
+        if extra:
+            assert stats["media_buckets"] == 0
     stats, n_jobs, _ = run("capped", "--max-docs", "10")
     assert 10 <= stats["docs_done"] < N_DOCS
     # the cap is one per-bucket count collected on the driver and a

@@ -169,5 +169,5 @@ def test_driver_built_frames_are_local_table_scans(spark, tmp_tables,
     # the start-of-run lineage read of a missing table runs no job either
     state, jobs = in_job_group("local-frame-run-state",
                                lambda: cp.run_state(("fp",)))
-    assert state == (1, set(), {"fp": set()})
+    assert state == (1, {"fp": set()})
     assert jobs == []
