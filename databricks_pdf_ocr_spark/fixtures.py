@@ -22,6 +22,7 @@ import random
 from dataclasses import dataclass
 
 from .functions import pdfmini
+from .worker import drop_zip_importers
 
 _WORDS = (
     "analysis baseline catalyst dataframe executor filter graph hash "
@@ -226,6 +227,7 @@ def fixture_df(spark, seed: int, n_docs: int, profile: FixtureProfile = SMOKE,
     from .schemas import DOCUMENTS_SCHEMA
 
     def gen(batches):
+        drop_zip_importers()
         for pdf in batches:
             rows = []
             for idx in pdf["id"]:

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from ..session import local_frame
+from ..worker import drop_zip_importers
 
 
 # ---------------------------------------------------------------------------
@@ -260,6 +261,7 @@ def _minhash_signatures_fast(df: DataFrame) -> DataFrame:
         import hashlib
 
         import numpy as np
+        drop_zip_importers()
 
         rng = np.random.RandomState(0x5EED)
         a = (rng.randint(0, 2 ** 62, size=k, dtype=np.uint64)

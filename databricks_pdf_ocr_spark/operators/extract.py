@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import ExtractConfig
 from ..schemas import RESULTS_DDL
+from ..worker import drop_zip_importers
 
 
 def bucket_col(n_buckets: int, col: str = "doc_id") -> Column:
@@ -90,6 +91,7 @@ def _make_extract_batch(cfg: ExtractConfig):
         # import inside the task so --py-files deployment finds the package
         from databricks_pdf_ocr_spark.functions.extract_span import extract_span
         from databricks_pdf_ocr_spark.functions.ocr_fallback import OCR_MODEL
+        drop_zip_importers()
 
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (

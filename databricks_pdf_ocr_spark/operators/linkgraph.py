@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..worker import drop_zip_importers
+
 #: absolute-href host pattern — must match tools/make_golden_parquet.py
 OUTLINK_RE = r"(?i)href\s*=\s*[\"']https?://([^/\"'>]+)"
 HOST_RE = r"(?i)^https?://([^/]+)"
@@ -253,6 +255,7 @@ def robots_rules(robots: DataFrame, agent: str, host_col: str = "host",
     from ..functions import robotsmini
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             out = {k: [] for k in ("host", "allow", "pattern", "regex",
                                    "spec_len")}

@@ -38,6 +38,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..worker import drop_zip_importers
+
 #: rows of the media_payloads table (one per embedded image per pdf span)
 MEDIA_PAYLOAD_DDL = (
     "media_ref string, doc_id string, offset int, page_idx int, "
@@ -78,6 +80,7 @@ def pdf_span_images(df: DataFrame, id_col: str = "doc_id",
         import re as _re
 
         from ..functions import pdfmini
+        drop_zip_importers()
 
         for pdf in batches:
             out = {k: [] for k in ("media_ref", "doc_id", "offset",
@@ -171,6 +174,7 @@ def media_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
     from ..functions import imghash
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             out = {k: [] for k in ("media_id", "phash", "format",
                                    "hash_ok", "error_message")}
@@ -211,6 +215,7 @@ def media_ahash(df: DataFrame, content_col: str = "content") -> DataFrame:
     from ..functions import audiohash, wavmini
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             out = {k: [] for k in ("media_id", "phash", "duration_ms",
                                    "hash_ok", "error_message")}
@@ -251,6 +256,7 @@ def video_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
     from ..functions import imghash, jpegmini, mp4mini
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             out = {k: [] for k in ("media_id", "frame_idx", "ts_ms",
                                    "phash", "width", "height",

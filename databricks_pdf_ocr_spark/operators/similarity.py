@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..worker import drop_zip_importers
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -214,6 +216,7 @@ def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16,
 
     @F.pandas_udf("long")
     def sig(v):  # pd.Series of list[float] -> pd.Series of long
+        drop_zip_importers()
         mat = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         if len(mat) == 0:
             return v.iloc[0:0].astype("int64")
@@ -691,6 +694,7 @@ def _adc_scorer(codebooks):
     @F.pandas_udf("double")
     def adc(qv, codes):
         import pandas as pd
+        drop_zip_importers()
         out = []
         luts: dict = {}
         idx = np.arange(m)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..worker import drop_zip_importers
 from .dedup import shingles_of, tokens_col
 
 # n-gram-heuristic language ID: marker-token hit counts per language.
@@ -683,6 +684,7 @@ def compression_signal(df: DataFrame, id_col: str = "doc_id",
     @pandas_udf("long")
     def comp_len(texts: pd.Series) -> pd.Series:
         import zlib
+        drop_zip_importers()
         return texts.map(
             lambda t: len(zlib.compress(t.encode("utf-8"), level)))
 

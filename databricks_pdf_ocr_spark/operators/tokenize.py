@@ -44,6 +44,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..worker import drop_zip_importers
+
 #: ASCII pre-tokenization pattern, identical under Java regex and
 #: Python re (no lookaround, no unicode classes)
 PRETOKEN_PATTERN = r" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+"
@@ -189,6 +191,7 @@ def bpe_encode(df: DataFrame, merges, vocab, id_col: str = "doc_id",
     model = spark.sparkContext.broadcast((list(merges), dict(vocab)))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         merges_l, vocab_l = model.value
         ranks = {tuple(p): i for i, p in enumerate(merges_l)}
         cache: dict = {}

@@ -66,6 +66,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import Window
 
+from ..worker import drop_zip_importers
+
 #: columns of the record table (one row per WARC record)
 WARC_RECORD_DDL = (
     "segment string, record_id string, warc_type string, target_uri string, "
@@ -344,6 +346,7 @@ def decoded_text(payload_col: str = "payload",
     MALFORMED_CHARACTER_CODING under ANSI mode on any invalid byte)."""
     @F.pandas_udf("string")
     def _decode(payload: pd.Series, ctype: pd.Series) -> pd.Series:
+        drop_zip_importers()
         return pd.Series(
             [decode_payload(p, c) for p, c in zip(payload, ctype)],
             dtype="object")
@@ -434,6 +437,7 @@ def warc_records(files: DataFrame, path_col: str = "path",
     """(path, content-bytes) rows → record table.  The compressed
     segment is in memory (binaryFile's unit); inflation is streamed."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in _OUT_COLS}
             for seg, data in zip(pdf[path_col], pdf[content_col]):
@@ -451,6 +455,7 @@ def warc_records_from_paths(paths: DataFrame, path_col: str = "path",
     straight from the posix filesystem: neither the compressed nor the
     inflated segment is ever whole in memory."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in _OUT_COLS}
             for seg in pdf[path_col]:

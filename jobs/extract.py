@@ -13,8 +13,9 @@ distributed on executors (no external data — FIXTURES.md).
 Flow (reference entrypoint analogue: ``main.py:56-101`` run_ocr_processing):
   1. load input → stamp checkpoint bucket
   2. read the run's lineage state once (run ordinal, buckets done for
-     this input) and keep the pending buckets (resume); an incremental
-     run with no bucket pending ends here
+     this input and for its media stage) and keep the pending buckets
+     (resume); an incremental stage with no bucket pending is skipped,
+     and a run with no stage pending ends here
   3. explode → salted repartition → Arrow-batched extraction
   4. append results PARTITIONED BY bucket (repartition first: one file per
      touched bucket per run → real partition pruning downstream); an
@@ -59,6 +60,7 @@ from databricks_pdf_ocr_spark.plans.state_views import latest_results
 from databricks_pdf_ocr_spark.schemas import RESULTS_RUN_SCHEMA, ddl
 from databricks_pdf_ocr_spark.session import get_spark
 from databricks_pdf_ocr_spark.sources.tables import make_table_io
+from databricks_pdf_ocr_spark.worker import drop_zip_importers
 
 RESULTS_TABLE = "extraction_results"
 EXTRACTED_TABLE = "extracted_documents"
@@ -151,7 +153,7 @@ def gc_media_orphans(io) -> dict:
 
 def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
                     done: set[int], fail_after_buckets: int | None = None
-                    ) -> tuple[dict, list[int]]:
+                    ) -> dict:
     """Materialize the bucket-partitioned ``media_payloads`` table: every
     embedded raster image of every pending pdf span, keyed by the
     content-addressed ``media_ref`` the extraction kernel stamps on its
@@ -285,49 +287,19 @@ def build_parser() -> argparse.ArgumentParser:
     return ap
 
 
-def run_job(spark, args) -> tuple[dict, int]:
-    """Execute one extraction run; returns (stats, exit_code)."""
-    # the flags over the ExtractConfig defaults (an unset flag is None)
-    cfg = load_config({
-        "n_buckets": args.n_buckets,
-        "shuffle_partitions": args.partitions
-        or int(spark.conf.get("spark.sql.shuffle.partitions")),
-        "max_docs_per_run": args.max_docs,
-        "processing_mode": args.mode,
-        "specific_doc_ids": tuple(x for x in args.doc_ids.split(",") if x),
-        "salt_spans": args.salt or None,
-    })
-    io = make_table_io(spark, args.tables)
-    cp = CheckpointManager(io, cfg)
-
-    t0 = time.time()
-    documents, fingerprint = load_input(spark, args.input)
-
-    # The run's ONE lineage read: the monotonic run ordinal (the
-    # latest-wins primary; wall-clock + random hex misorders on a tie or
-    # an NTP step back) and the done buckets of the input and of its
-    # media stage, which marks nothing before it.
-    media_fp = fingerprint + "#media"
-    run_seq, done = cp.run_state((fingerprint, media_fp))
-    run_id = new_run_id()
-    stats = {"run_id": run_id, "fingerprint": fingerprint}
-    # an incremental run whose stages have every bucket done has nothing
-    # pending: it ends on the lineage read, before any scan of the input
-    stage_fps = (fingerprint, media_fp) if args.media_payloads else (
-        fingerprint,)
-    if cfg.processing_mode == "incremental" and all(
-            done[fp] >= set(range(cfg.n_buckets)) for fp in stage_fps):
-        stats["docs_assembled"] = 0
-        if args.media_payloads:
-            stats.update(media_buckets=0, media_images=0, media_errors=0)
-        return stats, 0
-
+def run_extract_stage(io, cp, documents, fingerprint: str, cfg, run_id: str,
+                      run_seq: int, done: set[int], t0: float,
+                      fail_after_buckets: int | None = None
+                      ) -> tuple[dict, list[int]]:
+    """Extract the pending buckets of ``documents``: write results →
+    assemble → mark (steps 3-6 of the module docstring).  ``done`` holds
+    the input's done buckets, ``t0`` the run's start.  Returns the stage's
+    stats and the buckets its results write touched."""
     # --- work selection (reference modes: processors/ocr.py:59-85) --------
     # --max-docs caps at BUCKET granularity — the lineage/resume unit.  A
     # plain .limit() truncates inside buckets that then get marked done,
     # permanently dropping the cut docs from every future run.
-    pending = select_work(documents, cp, done[fingerprint], cfg,
-                          args.fail_after_buckets)
+    pending = select_work(documents, cp, done, cfg, fail_after_buckets)
 
     spans = explode_spans(pending.select("doc_id", "spans"))
     results = extract_spans(spans, cfg).withColumns({
@@ -364,7 +336,7 @@ def run_job(spark, args) -> tuple[dict, int]:
     # bucket dir; a static isin over the partition column guarantees
     # pruning.
     pend_list = sorted(touched_obs.get["buckets"])
-    stats["docs_assembled"] = 0
+    stats = {"docs_assembled": 0}
     t_assemble = t_mark = t_extract
     if pend_list:
         # ... THEN ASSEMBLE: only THIS run's buckets are rebuilt (a
@@ -423,6 +395,54 @@ def run_job(spark, args) -> tuple[dict, int]:
     stats.update({"phase_select_sec": round(t_select - t0, 2),
                   "phase_extract_write_sec": round(t_extract - t_select, 2),
                   "phase_mark_sec": round(t_mark - t_assemble, 2)})
+    return stats, pend_list
+
+
+def run_job(spark, args) -> tuple[dict, int]:
+    """Execute one extraction run; returns (stats, exit_code)."""
+    # the flags over the ExtractConfig defaults (an unset flag is None)
+    cfg = load_config({
+        "n_buckets": args.n_buckets,
+        "shuffle_partitions": args.partitions
+        or int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "max_docs_per_run": args.max_docs,
+        "processing_mode": args.mode,
+        "specific_doc_ids": tuple(x for x in args.doc_ids.split(",") if x),
+        "salt_spans": args.salt or None,
+    })
+    io = make_table_io(spark, args.tables)
+    cp = CheckpointManager(io, cfg)
+
+    t0 = time.time()
+    documents, fingerprint = load_input(spark, args.input)
+
+    # The run's ONE lineage read: the monotonic run ordinal (the
+    # latest-wins primary; wall-clock + random hex misorders on a tie or
+    # an NTP step back) and the done buckets of the input and of its
+    # media stage, which marks nothing before it.
+    media_fp = fingerprint + "#media"
+    run_seq, done = cp.run_state((fingerprint, media_fp))
+    run_id = new_run_id()
+    stats = {"run_id": run_id, "fingerprint": fingerprint,
+             "docs_assembled": 0}
+    # an incremental stage with every bucket done has nothing pending: a
+    # run ends on the lineage read when all its stages are done, and goes
+    # straight to the media stage when only the extraction is
+    def stage_done(fp):
+        return (cfg.processing_mode == "incremental"
+                and done[fp] >= set(range(cfg.n_buckets)))
+    extract_done = stage_done(fingerprint)
+    if extract_done and (not args.media_payloads or stage_done(media_fp)):
+        if args.media_payloads:
+            stats.update(media_buckets=0, media_images=0, media_errors=0)
+        return stats, 0
+
+    pend_list: list[int] = []
+    if not extract_done:
+        extract_stats, pend_list = run_extract_stage(
+            io, cp, documents, fingerprint, cfg, run_id, run_seq,
+            done[fingerprint], t0, args.fail_after_buckets)
+        stats.update(extract_stats)
     if args.media_payloads:
         # the media stage's run is the next one in the lineage log
         stats.update(run_media_stage(
@@ -457,8 +477,12 @@ def main(argv=None) -> int:
     # JVM before the clock starts (identical at every cluster size, so the
     # throughput comparison measures the pipeline, not process spawn)
     cores = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def warm(batches):
+        drop_zip_importers()
+        yield from batches
     spark.range(cores * 4, numPartitions=cores).mapInPandas(
-        lambda it: (pdf for pdf in it), schema="id long").count()
+        warm, schema="id long").count()
 
     stats, rc = run_job(spark, args)
     print(json.dumps(stats, default=str))

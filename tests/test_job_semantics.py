@@ -255,9 +255,11 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     two).  The touched buckets come from the results write itself, so a
     fresh incremental run needs no more jobs than that, and a --max-docs
     run only the cap's per-bucket count, once.  A no-op incremental
-    rerun, with or without --media-payloads, runs only the lineage read.
-    Every run's stats equal its lineage as ``run_history`` reads it back;
-    a no-op incremental rerun marks nothing and reports nothing."""
+    rerun, with or without --media-payloads, runs only the lineage read,
+    and a --media-payloads rerun over a done extraction only the lineage
+    read and the media stage.  Every run's stats equal its lineage as
+    ``run_history`` reads it back; a no-op incremental rerun marks
+    nothing and reports nothing."""
     from databricks_pdf_ocr_spark.plans.checkpoint import (
         CHECKPOINT_TABLE, CheckpointManager,
     )
@@ -283,12 +285,13 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
             assert not set(lineage) & set(stats), stats
         return stats, len(jobs), t
 
+    all_jobs = {}
     for extra in ((), ("--media-payloads",)):
         stats, n_jobs, t = run("all" + "".join(extra),
                                "--mode", "reprocess_all", *extra)
+        all_jobs[extra] = n_jobs
         if not extra:
             assert 0 < n_jobs <= 7
-            all_jobs = n_jobs
         assert stats["docs_done"] == N_DOCS
         assert all(stats[k] >= 0 for k in ("phase_select_sec",
                                            "phase_extract_write_sec",
@@ -305,7 +308,7 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
 
     stats, n_jobs, _ = run("incremental")
     assert stats["docs_done"] == N_DOCS
-    assert n_jobs <= all_jobs
+    assert n_jobs <= all_jobs[()]
     # no-op reruns: the lineage read (done sets included) is one
     # aggregate, and with every bucket done nothing else runs
     fp = f"path:{inp}"
@@ -320,11 +323,19 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
         assert stats["run_id"] and stats["docs_assembled"] == 0
         if extra:
             assert stats["media_buckets"] == 0
+    # media only: the extraction of "incremental" is done, its media
+    # stage is not.  No extraction job runs: the media stage costs what
+    # it costs on a fresh run, on top of the lineage read.
+    media_jobs = all_jobs[("--media-payloads",)] - all_jobs[()]
+    stats, n_jobs, _ = run("incremental", "--media-payloads")
+    assert stats["media_buckets"] > 0 and stats["docs_assembled"] == 0
+    assert "phase_extract_write_sec" not in stats
+    assert n_jobs <= len(read_jobs) + media_jobs, (n_jobs, media_jobs)
     stats, n_jobs, _ = run("capped", "--max-docs", "10")
     assert 10 <= stats["docs_done"] < N_DOCS
     # the cap is one per-bucket count collected on the driver and a
     # static isin, never re-evaluated inside the results write
-    assert n_jobs <= all_jobs + 2
+    assert n_jobs <= all_jobs[()] + 2
 
 
 def test_config_is_flags_over_defaults(monkeypatch):
