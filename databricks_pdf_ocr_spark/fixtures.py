@@ -342,8 +342,7 @@ def image_corpus_rows(seed: int, n_base: int = 10, variants: int = 3):
             yield f"img-{b}-{v}", payload
 
 
-def video_corpus_rows(seed: int, n_base: int = 6, variants: int = 3,
-                      n_frames: int = 4):
+def video_corpus_rows(seed: int, n_base: int = 6, variants: int = 3):
     """Deterministic ``(name, payload)`` Motion-JPEG corpus for the
     perceptual VIDEO near-dup path: ``n_base`` distinct block-pattern
     animations, each re-encoded ``variants`` ways (JPEG quality 90 /
@@ -356,7 +355,7 @@ def video_corpus_rows(seed: int, n_base: int = 6, variants: int = 3,
     qualities = (90, 82, 96)
     for b in range(n_base):
         frames_rgb = []
-        for fi in range(n_frames):
+        for fi in range(4):
             rgb = bytearray(w * h * 3)
             for y in range(h):
                 for x in range(w):
@@ -542,8 +541,7 @@ def warc_corpus_segments(seed: int, n_segments: int = 6,
                                             recs_per_segment)]
 
 
-def wet_corpus_records(seed: int, n_segments: int = 4,
-                       recs_per_segment: int = 10):
+def wet_corpus_records(seed: int, n_segments: int = 4):
     """Deterministic WET (extracted-text) segment corpus for the
     ``wet_e2e`` oracle: ``conversion`` records whose bodies are plain
     text — plus the shapes the mouth must filter or survive: a warcinfo
@@ -556,7 +554,7 @@ def wet_corpus_records(seed: int, n_segments: int = 4,
         rng = random.Random(f"{seed}:wet:{s}")
         recs = [{"type": "warcinfo", "uri": None,
                  "body": f"software: wet-fixture/{s}\r\n".encode()}]
-        for i in range(recs_per_segment):
+        for i in range(10):
             uri = f"http://wet-site{s}.example/page{i}"
             date = f"2026-0{1 + s % 3}-{10 + i:02d}T00:00:00Z"
             r = rng.random()

@@ -18,9 +18,10 @@ from __future__ import annotations
 GRID_W, GRID_H = 9, 8
 
 
-def luma_grid(pixels: bytes, w: int, h: int, channels: int,
-              gw: int = GRID_W, gh: int = GRID_H) -> list[list[int]]:
-    """Decoded pixels → a gw x gh integer-luma grid (box average).
+def luma_grid(pixels: bytes, w: int, h: int,
+              channels: int) -> list[list[int]]:
+    """Decoded pixels → a GRID_W x GRID_H integer-luma grid (box
+    average).
 
     Luma: BT.601 integer ``(77 R + 150 G + 29 B) >> 8``; grayscale
     payloads pass through; alpha is ignored (hash covers color data).
@@ -28,13 +29,13 @@ def luma_grid(pixels: bytes, w: int, h: int, channels: int,
     if w <= 0 or h <= 0 or len(pixels) < w * h * channels:
         raise ValueError("bad pixel buffer")
     grid = []
-    for gy in range(gh):
-        y0 = gy * h // gh
-        y1 = max(y0 + 1, (gy + 1) * h // gh)
+    for gy in range(GRID_H):
+        y0 = gy * h // GRID_H
+        y1 = max(y0 + 1, (gy + 1) * h // GRID_H)
         row = []
-        for gx in range(gw):
-            x0 = gx * w // gw
-            x1 = max(x0 + 1, (gx + 1) * w // gw)
+        for gx in range(GRID_W):
+            x0 = gx * w // GRID_W
+            x1 = max(x0 + 1, (gx + 1) * w // GRID_W)
             acc = 0
             for y in range(y0, y1):
                 base = (y * w) * channels

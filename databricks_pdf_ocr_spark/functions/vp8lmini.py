@@ -877,8 +877,7 @@ def vp8l_encode(rgba: bytes, w: int, h: int, *, transforms: tuple = (),
     return bw.bytes()
 
 
-def alph_encode(plane: bytes, w: int, h: int, filt: int = 0,
-                cache_bits: int = 0, lz77: bool = False) -> bytes:
+def alph_encode(plane: bytes, w: int, h: int, filt: int = 0) -> bytes:
     """Alpha plane → ALPH chunk body (method 1, lossless) for fixtures."""
     if len(plane) != w * h:
         raise Vp8lError("alpha plane size mismatch")
@@ -905,8 +904,7 @@ def alph_encode(plane: bytes, w: int, h: int, filt: int = 0,
     px = [v << 8 for v in vals]          # alpha rides the green channel
     bw = BitWriter()
     bw.write(0, 1)                       # no transforms
-    _encode_stream(bw, px, w, h, cache_bits=cache_bits, lz77=lz77,
-                   level0=True)
+    _encode_stream(bw, px, w, h, level0=True)
     return bytes([1 | (filt << 2)]) + bw.bytes()
 
 

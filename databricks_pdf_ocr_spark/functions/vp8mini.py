@@ -160,8 +160,8 @@ _CAT_EXTRA = (  # cat3..cat6 extra-bit probabilities (RFC 6386 13.2)
 )
 
 
-def _tree_get(bd: BoolDecoder, tree, probs, start: int = 0) -> int:
-    i = start
+def _tree_get(bd: BoolDecoder, tree, probs) -> int:
+    i = 0
     while True:
         i = tree[i + bd.get(probs[i >> 1])]
         if i <= 0:

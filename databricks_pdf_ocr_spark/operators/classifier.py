@@ -19,11 +19,11 @@ DataFrames):
 - the FEATURES never leave the cluster: one explode + one distinct
   (map-side combinable) builds the binary presence bag once, persisted
   across epochs; the intercept rides along as a constant feature
-  ``fidx = dim`` so weights and bias share one code path;
-- the MODEL — ``dim + 1`` doubles — rides the driver and is re-broadcast
+  ``fidx = DIM`` so weights and bias share one code path;
+- the MODEL — ``DIM + 1`` doubles — rides the driver and is re-broadcast
   each epoch as a weight table (BroadcastHashJoin, never a shuffle);
 - each epoch sends back exactly ONE aggregate: the ``fidx``-keyed
-  gradient, ``dim + 1`` rows — control-plane by construction,
+  gradient, ``DIM + 1`` rows — control-plane by construction,
   independent of corpus size.
 
 At 100 TB nothing in the loop scales with data except two hash-aggs per
@@ -64,10 +64,9 @@ def _quantize(v: float) -> float:
     return math.floor(v * W_SCALE) / W_SCALE
 
 
-def hashed_features(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", dim: int = DIM) -> DataFrame:
+def hashed_features(df: DataFrame) -> DataFrame:
     """``(id, fidx, x)``: binary presence bag over hashed tokens, plus the
-    constant intercept feature ``fidx = dim`` for every doc.
+    constant intercept feature ``fidx = DIM`` for every doc.
 
     One explode + one distinct (map-side combinable hash-agg).  Binary
     presence makes every feature value an exact double — bit-identical
@@ -75,14 +74,14 @@ def hashed_features(df: DataFrame, id_col: str = "doc_id",
     what lets a plain constant learning rate converge.
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("w"))
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.col("text"), " ")).alias("w"))
     fidx = (F.conv(F.substring(F.sha2(F.col("w"), 256), 1, 8), 16, 10)
-            .cast("long") % dim).cast("int")
+            .cast("long") % DIM).cast("int")
     present = (toks.select("id", fidx.alias("fidx")).distinct()
                .withColumn("x", F.lit(1.0)))
-    intercept = df.select(F.col(id_col).alias("id"),
-                          F.lit(dim).cast("int").alias("fidx"),
+    intercept = df.select(F.col("doc_id").alias("id"),
+                          F.lit(DIM).cast("int").alias("fidx"),
                           F.lit(1.0).alias("x"))
     return present.unionByName(intercept)
 
@@ -104,18 +103,17 @@ def _sigmoid(z):
 
 
 def train_logreg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
-                 dim: int = DIM, epochs: int = EPOCHS,
-                 lr: float = LR) -> dict[int, float]:
+                 epochs: int = EPOCHS) -> dict[int, float]:
     """Full-batch logistic-regression GD; returns the weight vector
-    (index ``dim`` is the intercept).
+    (index ``DIM`` is the intercept).
 
     Per epoch: weights broadcast down, margins aggregated per doc, the
     residual ``g = sigmoid(z) - y`` joined back onto the features
     (doc-keyed, same shuffle key as the margin agg), and the gradient
-    aggregated per feature — ONE collect of ``dim + 1`` rows.
+    aggregated per feature — ONE collect of ``DIM + 1`` rows.
     """
     n = labels.count()
-    w = {f: 0.0 for f in range(dim + 1)}
+    w = {f: 0.0 for f in range(DIM + 1)}
     for _ in range(epochs):
         wdf = _weights_df(spark, w)
         gdf = (_margins(feats, wdf).join(labels, "id")
@@ -125,27 +123,25 @@ def train_logreg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
                  .agg(F.sum(F.col("g") * F.col("x")).alias("gr"))
                  .collect())
         for r in grads:
-            w[r["fidx"]] = _quantize(w[r["fidx"]] - lr * (r["gr"] / n))
+            w[r["fidx"]] = _quantize(w[r["fidx"]] - LR * (r["gr"] / n))
     return w
 
 
 def score_logreg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
-                 w: dict[int, float], id_col: str = "doc_id") -> DataFrame:
+                 w: dict[int, float]) -> DataFrame:
     """(doc_id, label, score_e4, pred): floor-quantized sigmoid scores."""
     score = (F.floor(_sigmoid(F.col("z")) * F.lit(SCORE_SCALE))
              .cast("long"))
     return (_margins(feats, _weights_df(spark, w))
             .join(labels, "id")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.col("y").cast("long").alias("label"),
                     score.alias("score_e4"),
                     (score >= F.lit(5000)).cast("long").alias("pred")))
 
 
 def quality_classifier(spark: SparkSession, docs: DataFrame,
-                       label_expr=None, id_col: str = "doc_id",
-                       text_col: str = "text", dim: int = DIM,
-                       epochs: int = EPOCHS, lr: float = LR) -> DataFrame:
+                       label_expr=None, epochs: int = EPOCHS) -> DataFrame:
     """Train on a weak label and score every document.
 
     Default weak label: the document contains the token
@@ -155,23 +151,21 @@ def quality_classifier(spark: SparkSession, docs: DataFrame,
     """
     if label_expr is None:
         label_expr = F.array_contains(
-            F.split(F.col(text_col), " "), LABEL_TOKEN)
-    labels = docs.select(F.col(id_col).alias("id"),
+            F.split(F.col("text"), " "), LABEL_TOKEN)
+    labels = docs.select(F.col("doc_id").alias("id"),
                          label_expr.cast("double").alias("y"))
-    feats = hashed_features(docs, id_col, text_col, dim).persist()
-    w = train_logreg(spark, feats, labels, dim, epochs, lr)
-    return score_logreg(spark, feats, labels, w, id_col)
+    feats = hashed_features(docs).persist()
+    w = train_logreg(spark, feats, labels, epochs=epochs)
+    return score_logreg(spark, feats, labels, w)
 
 
-def logreg_oracle_sql(dim: int = DIM, epochs: int = EPOCHS,
-                      lr: float = LR,
-                      label_token: str = LABEL_TOKEN) -> str:
+def logreg_oracle_sql() -> str:
     """DuckDB replay of the exact quantized training trajectory as
     generated chained CTEs — one (z, g, w) triple per epoch."""
     parts = [f"""
 WITH labels AS MATERIALIZED (
   SELECT doc_id AS id,
-         CASE WHEN list_contains(string_split(text, ' '), '{label_token}')
+         CASE WHEN list_contains(string_split(text, ' '), '{LABEL_TOKEN}')
               THEN 1.0 ELSE 0.0 END AS y
   FROM documents
 ), nn AS MATERIALIZED (
@@ -180,16 +174,16 @@ WITH labels AS MATERIALIZED (
   SELECT doc_id AS id, unnest(string_split(text, ' ')) AS w FROM documents
 ), feats AS MATERIALIZED (
   SELECT DISTINCT id,
-         CAST(CAST(('0x' || substr(sha256(w), 1, 8)) AS BIGINT) % {dim}
+         CAST(CAST(('0x' || substr(sha256(w), 1, 8)) AS BIGINT) % {DIM}
               AS INT) AS fidx,
          1.0 AS x
   FROM toks
   UNION ALL
-  SELECT id, CAST({dim} AS INT) AS fidx, 1.0 AS x FROM labels
+  SELECT id, CAST({DIM} AS INT) AS fidx, 1.0 AS x FROM labels
 ), w0 AS MATERIALIZED (
   SELECT DISTINCT fidx, 0.0 AS w FROM feats
 )"""]
-    for k in range(epochs):
+    for k in range(EPOCHS):
         parts.append(f""", z{k} AS MATERIALIZED (
   SELECT id, sum(x * w) AS z FROM feats JOIN w{k} USING (fidx) GROUP BY id
 ), g{k} AS MATERIALIZED (
@@ -197,12 +191,12 @@ WITH labels AS MATERIALIZED (
   FROM z{k} JOIN labels USING (id)
 ), w{k + 1} AS MATERIALIZED (
   SELECT fidx,
-         floor((w - {lr} * (sum(g * x) / n)) * 1000000.0) / 1000000.0 AS w
+         floor((w - {LR} * (sum(g * x) / n)) * 1000000.0) / 1000000.0 AS w
   FROM feats JOIN g{k} USING (id) JOIN w{k} USING (fidx) CROSS JOIN nn
   GROUP BY fidx, w, n
 )""")
     parts.append(f""", zf AS MATERIALIZED (
-  SELECT id, sum(x * w) AS z FROM feats JOIN w{epochs} USING (fidx)
+  SELECT id, sum(x * w) AS z FROM feats JOIN w{EPOCHS} USING (fidx)
   GROUP BY id
 )
 SELECT id AS doc_id,

@@ -67,31 +67,31 @@ def shingles_of(tokens: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingled(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             n: int = 3, out: str = "shingles") -> DataFrame:
-    """(id, ``out``: array<string>) with the token array materialized in
+def shingled(df: DataFrame, n: int = 3) -> DataFrame:
+    """(id, shingles: array<string>) with the token array materialized in
     its own projection so the shingle lambda slices an attribute — the
     linear-cost shape every shingle consumer must use."""
-    return (df.select(F.col(id_col).alias("id"),
-                      tokens_col(text_col).alias("__toks"))
-            .select("id", shingles_of(F.col("__toks"), n).alias(out)))
+    return (df.select(F.col("doc_id").alias("id"),
+                      tokens_col().alias("__toks"))
+            .select("id",
+                    shingles_of(F.col("__toks"), n).alias("shingles")))
 
 
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of byte-identical documents: (content_hash, canonical_id, n_dups).
 
     canonical_id = min(id) is the keep-one representative.  Scale: single
     hash-aggregate shuffle on a 64-hex key; skew-free (hash keys uniform).
     """
     return (
-        df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("content_hash"))
+        df.select(F.col("doc_id"),
+                  F.sha2(F.col("text"), 256).alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("canonical_id"),
+        .agg(F.min("doc_id").alias("canonical_id"),
              F.count("*").cast("long").alias("n_dups"))
     )
 
@@ -100,8 +100,7 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
 # n-gram Jaccard
 # ---------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 3,
+def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
                         threshold: float = 0.8) -> DataFrame:
     """Exact Jaccard over distinct word n-grams for all candidate pairs.
 
@@ -110,7 +109,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     join per-doc shingle counts (broadcast — it's |docs| rows of 2 ints) →
     |A∩B| / (|A|+|B|-|A∩B|).  Emits (doc_a < doc_b, jaccard).
     """
-    sh = (shingled(df, id_col, text_col, n)
+    sh = (shingled(df, n=n)
           .select("id", F.explode("shingles").alias("shingle"))
           .distinct())
     sizes = sh.groupBy("id").agg(F.count("*").cast("long").alias("n_sh"))
@@ -136,9 +135,8 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def prefix_filter_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        t_num: int = 19, t_den: int = 20) -> DataFrame:
+def prefix_filter_pairs(df: DataFrame, t_num: int = 19,
+                        t_den: int = 20) -> DataFrame:
     """EXACT token-set Jaccard self-join via AllPairs/PPJoin prefix
     filtering (Bayardo et al. WWW'07; Xiao et al. WWW'08) — the
     exact-recall complement to the probabilistic MinHash-LSH rung: no
@@ -179,9 +177,9 @@ def prefix_filter_pairs(df: DataFrame, id_col: str = "doc_id",
     hash-mismatches.
     """
     toks = (df.select(
-                F.col(id_col).alias("id"),
+                F.col("doc_id").alias("id"),
                 F.array_distinct(
-                    F.filter(tokens_col(text_col),
+                    F.filter(tokens_col(),
                              lambda x: x != F.lit(""))).alias("toks"))
             .withColumn("n_tok", F.size("toks"))
             .filter(F.col("n_tok") > 0))
@@ -508,10 +506,8 @@ def minhash_lsh_pairs_incremental(io, new_ids: DataFrame,
     return _band_pairs(banded, docs, verify_threshold)
 
 
-def merge_components(old_labels: DataFrame, new_pairs: DataFrame,
-                     a_col: str = "doc_a", b_col: str = "doc_b",
-                     max_iter: int = 20,
-                     stats: dict | None = None) -> DataFrame:
+def merge_components(old_labels: DataFrame,
+                     new_pairs: DataFrame) -> DataFrame:
     """Incrementally merge an ingest delta's near-dup pairs into an
     EXISTING component labeling: each old component collapses to its
     star edges ``(node → comp)`` — connectivity-equivalent to the whole
@@ -526,10 +522,9 @@ def merge_components(old_labels: DataFrame, new_pairs: DataFrame,
     itself a node of the star, so min-label propagation over the union
     reaches exactly the same minima as over the original graph.
     """
-    star = old_labels.select(F.col("node").alias(a_col),
-                             F.col("comp").alias(b_col))
-    return neardup_components(star.unionByName(new_pairs), a_col, b_col,
-                              max_iter=max_iter, stats=stats)
+    star = old_labels.select(F.col("node").alias("doc_a"),
+                             F.col("comp").alias("doc_b"))
+    return neardup_components(star.unionByName(new_pairs))
 
 
 def minhash_lsh_pairs(df: DataFrame, hash_mode: str = "sha2",
@@ -597,9 +592,7 @@ def _min_id_labels(edges) -> dict:
     return {n: find(n) for n in parent}
 
 
-def neardup_components(pairs: DataFrame, a_col: str = "doc_a",
-                       b_col: str = "doc_b",
-                       max_iter: int = 20,
+def neardup_components(pairs: DataFrame, max_iter: int = 20,
                        stats: dict | None = None) -> DataFrame:
     """Connected components over verified near-dup pairs:
     ``(node, component)`` where component = the smallest node id
@@ -656,18 +649,19 @@ def neardup_components(pairs: DataFrame, a_col: str = "doc_a",
     # array_intersect) would otherwise execute more than once
     pairs = pairs.localCheckpoint()
     # the size probe: one job, edges as Arrow columns (no Row objects)
-    head = (pairs.select(a_col, b_col).limit(SMALL_GRAPH_EDGES + 1)
+    head = (pairs.select("doc_a", "doc_b").limit(SMALL_GRAPH_EDGES + 1)
             .toArrow())
     if head.num_rows <= SMALL_GRAPH_EDGES:
         if stats is not None:
             stats["rounds"] = 0
-        t = pairs.schema[a_col].dataType
+        t = pairs.schema["doc_a"].dataType
         labels = _min_id_labels(zip(head.column(0).to_pylist(),
                                     head.column(1).to_pylist()))
         return local_frame(pairs.sparkSession, list(labels.items()),
                            T.StructType([T.StructField("node", t),
                                          T.StructField("comp", t)]))
-    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    edges = pairs.select(F.col("doc_a").alias("src"),
+                         F.col("doc_b").alias("dst"))
     edges = (edges.union(edges.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst")))
              .distinct().persist())
@@ -714,8 +708,7 @@ def neardup_components(pairs: DataFrame, a_col: str = "doc_a",
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 32, hash_mode: str = "sha2") -> DataFrame:
+def simhash(df: DataFrame, hash_mode: str = "sha2") -> DataFrame:
     """32-bit SimHash per document: (id, simhash bigint).
 
     token hash = first 8 hex chars of sha256 → int32-range; bit i of the
@@ -728,8 +721,8 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     JVM-native production configuration (sha2 hex + conv stays the
     DuckDB-parity oracle mode).
     """
-    tok = df.select(F.col(id_col).alias("id"),
-                    F.explode(tokens_col(text_col)).alias("t"))
+    tok = df.select(F.col("doc_id").alias("id"),
+                    F.explode(tokens_col()).alias("t"))
     if hash_mode == "xxhash64":
         h = F.xxhash64("t").bitwiseAND(F.lit(0xFFFFFFFF))
     else:
@@ -738,17 +731,16 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     sums = tok.groupBy("id").agg(*[
         F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) * 2 - 1)
         .alias(f"s{i}")
-        for i in range(bits)
+        for i in range(32)
     ])
     fingerprint = None
-    for i in range(bits):
+    for i in range(32):
         bit = F.when(F.col(f"s{i}") > 0, F.lit(2 ** i)).otherwise(F.lit(0))
         fingerprint = bit if fingerprint is None else fingerprint + bit
     return sums.select("id", fingerprint.cast("long").alias("simhash"))
 
 
-def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", max_hamming: int = 3,
+def simhash_pairs(df: DataFrame, max_hamming: int = 3,
                   hash_mode: str = "sha2") -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance.
 
@@ -760,7 +752,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     chunks = max_hamming + 1
     width = 32 // chunks
-    sh = simhash(df, id_col, text_col, hash_mode=hash_mode)
+    sh = simhash(df, hash_mode=hash_mode)
     chunk_cols = [
         F.shiftright(F.col("simhash"), i * width)
         .bitwiseAND(F.lit((1 << width) - 1)).alias(f"c{i}")
@@ -785,8 +777,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 # paragraph-level exact dedup (RefinedWeb-style)
 # ---------------------------------------------------------------------------
 
-def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", k: int = 10) -> DataFrame:
+def paragraph_dedup(df: DataFrame, k: int = 10) -> DataFrame:
     """Sub-document exact dedup: remove repeated passages corpus-wide,
     keeping only the FIRST occurrence (RefinedWeb / MassiveText recipe —
     boilerplate paragraphs repeated across pages survive document-level
@@ -806,8 +797,8 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
     row_number, never a cross join); reassembly is one hash-agg back on
     the doc id.  No driver-side state, no all-pairs anything.
     """
-    base = df.select(F.col(id_col).alias("id"),
-                     F.split(F.col(text_col), " ").alias("__toks"))
+    base = df.select(F.col("doc_id").alias("id"),
+                     F.split(F.col("text"), " ").alias("__toks"))
     n_chunks = F.ceil(F.size("__toks") / F.lit(k)).cast("int")
     chunks = F.when(
         F.size("__toks") >= 1,
@@ -828,7 +819,7 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
                  F.array_join(
                      F.transform(kept_structs, lambda s: s["chunk"]),
                      " ").alias("kept_text"))
-            .withColumnRenamed("id", id_col))
+            .withColumnRenamed("id", "doc_id"))
 
 
 # ---------------------------------------------------------------------------

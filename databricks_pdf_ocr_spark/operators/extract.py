@@ -42,10 +42,10 @@ from ..schemas import RESULTS_DDL
 from ..worker import drop_zip_importers
 
 
-def bucket_col(n_buckets: int, col: str = "doc_id") -> Column:
+def bucket_col(n_buckets: int) -> Column:
     """Checkpoint bucket: pmod(xxhash64(doc_id), n) — cheap, JVM-side,
     deterministic; the unit of lineage + resume granularity."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:

@@ -171,14 +171,14 @@ def split_by_bloom(source: DataFrame, done: DataFrame, key: str,
 
 
 def unprocessed_bloom(source: DataFrame, done: DataFrame, key: str,
-                      done_key: str | None = None, m_bits: int = 1 << 20,
-                      k: int = 5) -> DataFrame:
+                      done_key: str | None = None,
+                      m_bits: int = 1 << 20) -> DataFrame:
     """EXACT ``source ∖ done`` on ``key`` with the anti-join shuffle paid
     only by the Bloom-positive sliver.  Equals the plain left_anti row
     for row (oracled as NOT EXISTS in ``queries.py::bloom_gate``)."""
     done_key = done_key or key
     definite, candidates = split_by_bloom(source, done, key, done_key,
-                                          m_bits, k)
+                                          m_bits)
     done_keys = done.select(F.col(done_key).alias("__dk")).distinct()
     exact = (candidates
              .join(done_keys, candidates[key] == done_keys["__dk"],

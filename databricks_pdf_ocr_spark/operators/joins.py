@@ -34,17 +34,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 SALT_COL = "__salt"
 
 
-def salt_column(df: DataFrame, n_salts: int,
-                salt_by: list[str] | None = None) -> Column:
+def salt_column(df: DataFrame, n_salts: int) -> Column:
     """Deterministic per-row salt in ``[0, n_salts)``.
 
-    Hashes ``salt_by`` (default: every column) with xxhash64 so reruns
+    Hashes every column with xxhash64 so reruns
     assign identical salts — random salts would also be CORRECT (any
     single value per row joins against the matching replica) but would
     make A/B plan comparisons and resume debugging needlessly noisy.
     """
-    cols = salt_by if salt_by else list(df.columns)
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]),
+    return F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
                   F.lit(n_salts)).cast("int")
 
 
@@ -56,9 +54,8 @@ def replicate_with_salts(dim: DataFrame, n_salts: int) -> DataFrame:
 
 
 def salted_join(fact: DataFrame, dim: DataFrame, fact_key: str,
-                dim_key: str, n_salts: int = 8, how: str = "inner",
-                salt_by: list[str] | None = None,
-                force_shuffle: bool = True) -> DataFrame:
+                dim_key: str, n_salts: int = 8,
+                how: str = "inner") -> DataFrame:
     """Equi-join ``fact[fact_key] == dim[dim_key]`` with the fact side's
     hot keys spread across ``n_salts`` shuffle partitions.
 
@@ -67,7 +64,7 @@ def salted_join(fact: DataFrame, dim: DataFrame, fact_key: str,
     fact-side multiplicity is preserved exactly.  Right/full joins would
     see every unmatched dim row ``n_salts`` times and are rejected.
 
-    ``force_shuffle`` pins a SHUFFLE_HASH strategy on the dimension:
+    The dimension is pinned to a SHUFFLE_HASH strategy:
     salting exists precisely because the dimension is too large to
     broadcast, and letting Catalyst broadcast the exploded replica set
     at test scale would silently bench a different plan than production
@@ -78,10 +75,8 @@ def salted_join(fact: DataFrame, dim: DataFrame, fact_key: str,
         raise ValueError(
             f"salted_join preserves fact-side multiplicity only; "
             f"'{how}' would duplicate unmatched dim rows n_salts times")
-    f = fact.withColumn(SALT_COL, salt_column(fact, n_salts, salt_by))
-    d = replicate_with_salts(dim, n_salts)
-    if force_shuffle:
-        d = d.hint("shuffle_hash")
+    f = fact.withColumn(SALT_COL, salt_column(fact, n_salts))
+    d = replicate_with_salts(dim, n_salts).hint("shuffle_hash")
     cond = ((f[fact_key] == d[dim_key]) & (f[SALT_COL] == d[SALT_COL]))
     joined = f.join(d, cond, how)
     if how in ("left_semi", "leftsemi", "left_anti", "leftanti"):

@@ -103,7 +103,7 @@ def zorder_layout_summary(df: DataFrame, id_col: str, x_col: str,
                  F.max(y_col).cast("long").alias("max_y")))
 
 
-def zorder_oracle_sql(rows_per_file: int = 500) -> str:
+def zorder_oracle_sql() -> str:
     """DuckDB replay of zorder_layout_summary over the orders table
     (x = o_custkey, y = days since 1992-01-01)."""
     zkey = zorder_key_sql(norm16_sql("x", "mn_x", "mx_x"),
@@ -125,7 +125,7 @@ WITH dims AS (
          row_number() OVER (ORDER BY zkey, id) AS rn
   FROM keyed
 )
-SELECT CAST(floor((rn - 1) / {float(rows_per_file)}) AS BIGINT) AS file_id,
+SELECT CAST(floor((rn - 1) / 500.0) AS BIGINT) AS file_id,
        CAST(count(*) AS BIGINT) AS n_rows,
        CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
        CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
@@ -133,12 +133,12 @@ FROM ranked GROUP BY 1
 """
 
 
-def assign_dense_ids(df: DataFrame, order_col: str, n_parts: int = 8,
-                     out_col: str = "row_id") -> DataFrame:
-    """Dense 0..n-1 ids in ``order_col`` order WITHOUT a global sort
-    funnel — the distributed answer to ``row_number() OVER (ORDER BY
-    …)`` (embedding-matrix row ids, token-offset bases, file-split
-    manifests all want this).
+def assign_dense_ids(df: DataFrame, order_col: str,
+                     n_parts: int = 8) -> DataFrame:
+    """Dense 0..n-1 ``row_id`` values in ``order_col`` order WITHOUT a
+    global sort funnel — the distributed answer to ``row_number() OVER
+    (ORDER BY …)`` (embedding-matrix row ids, token-offset bases,
+    file-split manifests all want this).
 
     Two-phase with EXACTLY ONE full-data exchange: the sampled range
     exchange + in-partition sort give ordered, non-overlapping
@@ -173,6 +173,6 @@ def assign_dense_ids(df: DataFrame, order_col: str, n_parts: int = 8,
     off = F.create_map(*[F.lit(v) for kv in sorted(offsets.items())
                          for v in kv])
     return (ranged
-            .withColumn(out_col,
+            .withColumn("row_id",
                         (F.element_at(off, pid) + local).cast("long"))
             .drop("_mid"))

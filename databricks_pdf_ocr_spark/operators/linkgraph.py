@@ -30,14 +30,13 @@ OUTLINK_RE = r"(?i)href\s*=\s*[\"']https?://([^/\"'>]+)"
 HOST_RE = r"(?i)^https?://([^/]+)"
 
 
-def outlink_edges(docs: DataFrame, uri_col: str = "target_uri",
-                  spans_col: str = "spans") -> DataFrame:
+def outlink_edges(docs: DataFrame) -> DataFrame:
     """Documents (with their capture URI) → distinct (src_host,
     dst_host) edges from absolute hrefs in html spans."""
     return (docs
-            .select(F.lower(F.regexp_extract(uri_col, HOST_RE, 1))
+            .select(F.lower(F.regexp_extract("target_uri", HOST_RE, 1))
                     .alias("src_host"),
-                    F.explode(spans_col).alias("s"))
+                    F.explode("spans").alias("s"))
             .filter(F.col("s.kind") == "html")
             .select("src_host",
                     F.explode(F.regexp_extract_all(
@@ -122,7 +121,7 @@ ANCHOR_RE = (r"(?is)<a\s[^>]*?href\s*=\s*[\"']https?://([^/\"'>]+)"
              r"[^>]*>(.*?)</a>")
 
 
-def anchor_texts(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+def anchor_texts(docs: DataFrame) -> DataFrame:
     """Anchor-text aggregation: the text the WEB uses to link to a host
     (a classic relevance/description signal for crawl curation — anchor
     words describe the *target*, not the page they sit on).  Returns
@@ -138,7 +137,7 @@ def anchor_texts(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
         F.col("a.txt"), F.lit(r"<[^>]*>"), F.lit(" ")),
         F.lit(r"\s+"), F.lit(" "))))
     return (docs
-            .select(F.explode(spans_col).alias("s"))
+            .select(F.explode("spans").alias("s"))
             .filter(F.col("s.kind") == "html")
             .select(F.explode(F.arrays_zip(host.alias("host"),
                                            txt.alias("txt"))).alias("a"))
@@ -153,19 +152,18 @@ def anchor_texts(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
 # URL canonicalization + host blocklists (crawl-frontier hygiene)
 # ---------------------------------------------------------------------------
 
-def url_normalize(df: DataFrame, url_col: str = "url",
-                  out_col: str = "url_norm") -> DataFrame:
+def url_normalize(df: DataFrame) -> DataFrame:
     """Canonicalize crawl URLs: strip the fragment, lowercase the
     ``scheme://authority`` prefix (path/query case is significant and
     kept), drop the default port (:80 for http, :443 for https), drop
     an empty trailing ``?``, and give authority-only URLs the ``/``
-    path.  Adds ``out_col`` plus the extracted lowercase ``host``.
+    path.  Adds ``url_norm`` plus the extracted lowercase ``host``.
 
     Pure column expressions (chained regexps) — zero shuffle, fully
     pushdown-friendly; the DuckDB oracle mirrors each step (RE2
     ``\\1`` rewrites vs Java ``$1``)."""
     d = (df
-         .withColumn("_defrag", F.regexp_replace(url_col, "#.*$", ""))
+         .withColumn("_defrag", F.regexp_replace("url", "#.*$", ""))
          .withColumn("_pref", F.lower(F.regexp_extract(
              "_defrag", "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*", 0)))
          .withColumn("_rest",
@@ -177,9 +175,9 @@ def url_normalize(df: DataFrame, url_col: str = "url",
          .withColumn("_rest", F.regexp_replace("_rest", "\\?$", ""))
          .withColumn("_rest", F.when(F.col("_rest") == "", F.lit("/"))
                      .otherwise(F.col("_rest"))))
-    return (d.withColumn(out_col, F.concat("_pref", "_rest"))
+    return (d.withColumn("url_norm", F.concat("_pref", "_rest"))
             .withColumn("host", F.regexp_extract(
-                out_col, "^[a-z][a-z0-9+.-]*://([^/?#:]+)", 1))
+                "url_norm", "^[a-z][a-z0-9+.-]*://([^/?#:]+)", 1))
             .drop("_defrag", "_pref", "_rest"))
 
 
@@ -193,8 +191,7 @@ def host_suffixes(host_col):
         lambda i: F.array_join(F.slice(parts, i + 1, n), "."))
 
 
-def blocklist_filter(df: DataFrame, blocked_suffixes,
-                     host_col: str = "host") -> DataFrame:
+def blocklist_filter(df: DataFrame, blocked_suffixes) -> DataFrame:
     """Drop rows whose host equals or is a subdomain of any blocklist
     entry.  Scale shape: the suffix matching runs on the DISTINCT-host
     table (orders of magnitude smaller than the corpus) — each host's
@@ -206,17 +203,16 @@ def blocklist_filter(df: DataFrame, blocked_suffixes,
     spark = df.sparkSession
     blocked = spark.createDataFrame([(b,) for b in blocked_suffixes],
                                     "suffix string")
-    blocked_hosts = (df.select(host_col).distinct()
+    blocked_hosts = (df.select("host").distinct()
                      .withColumn("_sfx",
-                                 F.explode(host_suffixes(F.col(host_col))))
+                                 F.explode(host_suffixes(F.col("host"))))
                      .join(F.broadcast(blocked),
                            F.col("_sfx") == F.col("suffix"), "left_semi")
-                     .select(host_col).distinct())
-    return df.join(blocked_hosts, host_col, "left_anti")
+                     .select("host").distinct())
+    return df.join(blocked_hosts, "host", "left_anti")
 
 
-def frontier_schedule(df: DataFrame, host_col: str = "host",
-                      order_col: str = "priority",
+def frontier_schedule(df: DataFrame, order_col: str = "priority",
                       per_wave: int = 1) -> DataFrame:
     """Politeness scheduling for a fetch frontier: URLs are assigned to
     fetch ``wave``s so no host sees more than ``per_wave`` concurrent
@@ -231,7 +227,7 @@ def frontier_schedule(df: DataFrame, host_col: str = "host",
 
     order_cols = [F.col(order_col).desc()] + \
         [F.col(c) for c in df.columns if c != order_col]
-    w = Window.partitionBy(host_col).orderBy(*order_cols)
+    w = Window.partitionBy("host").orderBy(*order_cols)
     rank = F.row_number().over(w) - 1
     return df.withColumn("wave", F.floor(rank / per_wave).cast("int"))
 
@@ -240,8 +236,7 @@ def frontier_schedule(df: DataFrame, host_col: str = "host",
 # robots.txt politeness gate (RFC 9309)
 # ---------------------------------------------------------------------------
 
-def robots_rules(robots: DataFrame, agent: str, host_col: str = "host",
-                 text_col: str = "robots_txt") -> DataFrame:
+def robots_rules(robots: DataFrame, agent: str) -> DataFrame:
     """Per-host robots.txt bodies → the structured rule table for one
     crawler agent: ``(host, allow, pattern, regex, spec_len)``.
 
@@ -259,7 +254,7 @@ def robots_rules(robots: DataFrame, agent: str, host_col: str = "host",
         for pdf in batches:
             out = {k: [] for k in ("host", "allow", "pattern", "regex",
                                    "spec_len")}
-            for host, text in zip(pdf[host_col], pdf[text_col]):
+            for host, text in zip(pdf["host"], pdf["robots_txt"]):
                 rules = robotsmini.rules_for_agent(
                     robotsmini.parse_robots(text or ""), agent)
                 for allow, pattern in rules:
@@ -275,9 +270,7 @@ def robots_rules(robots: DataFrame, agent: str, host_col: str = "host",
                      "regex string, spec_len int"))
 
 
-def robots_gate(urls: DataFrame, rules: DataFrame,
-                key_col: str = "doc_id", host_col: str = "host",
-                path_col: str = "path") -> DataFrame:
+def robots_gate(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """Longest-match robots verdict per URL:
     ``urls + (allowed, matched_pattern)``.
 
@@ -289,18 +282,18 @@ def robots_gate(urls: DataFrame, rules: DataFrame,
     default)."""
     from pyspark.sql import Window
 
-    matched = (urls.select(key_col, host_col, path_col)
-               .join(rules, host_col)
-               .filter(F.regexp_like(F.col(path_col), F.col("regex")))
+    matched = (urls.select("doc_id", "host", "path")
+               .join(rules, "host")
+               .filter(F.regexp_like(F.col("path"), F.col("regex")))
                .withColumn("__rn", F.row_number().over(
-                   Window.partitionBy(key_col)
+                   Window.partitionBy("doc_id")
                    .orderBy(F.col("spec_len").desc(),
                             F.col("allow").desc(),
                             F.col("pattern").desc())))
                .filter(F.col("__rn") == 1)
-               .select(key_col, F.col("allow").alias("__allow"),
+               .select("doc_id", F.col("allow").alias("__allow"),
                        F.col("pattern").alias("matched_pattern")))
-    return (urls.join(matched, key_col, "left")
+    return (urls.join(matched, "doc_id", "left")
             .withColumn("allowed", F.coalesce(F.col("__allow"),
                                               F.lit(True)))
             .drop("__allow"))

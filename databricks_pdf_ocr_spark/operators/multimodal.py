@@ -48,9 +48,7 @@ MEDIA_PAYLOAD_DDL = (
 )
 
 
-def pdf_span_images(df: DataFrame, id_col: str = "doc_id",
-                    offset_col: str = "offset", b64_col: str = "text",
-                    max_pages: int | None = None,
+def pdf_span_images(df: DataFrame, max_pages: int | None = None,
                     max_payload_bytes: int | None = None) -> DataFrame:
     """base64 pdf SPANS → one payload row per embedded raster image,
     keyed by the content-addressed ``media_ref`` the extraction kernel
@@ -101,8 +99,8 @@ def pdf_span_images(df: DataFrame, id_col: str = "doc_id",
                 out["extract_ok"].append(ok)
                 out["error_message"].append(err)
 
-            for did, off, b64 in zip(pdf[id_col], pdf[offset_col],
-                                     pdf[b64_col]):
+            for did, off, b64 in zip(pdf["doc_id"], pdf["offset"],
+                                     pdf["text"]):
                 off = int(off)
                 try:
                     raw = base64.b64decode(_re.sub(r"\s+", "", b64 or ""),
@@ -164,7 +162,7 @@ def _decode_pixels(payload: bytes):
     raise NotImplementedError("no real codec for payload")
 
 
-def media_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
+def media_phash(df: DataFrame) -> DataFrame:
     """Media payloads → 64-bit perceptual dHash rows
     (media_id, phash, format, hash_ok, error_message).
 
@@ -178,7 +176,7 @@ def media_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
         for pdf in batches:
             out = {k: [] for k in ("media_id", "phash", "format",
                                    "hash_ok", "error_message")}
-            for payload in pdf[content_col]:
+            for payload in pdf["content"]:
                 payload = bytes(payload) if payload is not None else b""
                 mid = hashlib.sha256(payload).hexdigest()
                 out["media_id"].append(mid)
@@ -201,7 +199,7 @@ def media_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
                      "hash_ok boolean, error_message string"))
 
 
-def media_ahash(df: DataFrame, content_col: str = "content") -> DataFrame:
+def media_ahash(df: DataFrame) -> DataFrame:
     """Audio payloads → 64-bit perceptual fingerprint rows
     (media_id, phash, duration_ms, hash_ok, error_message).
 
@@ -219,7 +217,7 @@ def media_ahash(df: DataFrame, content_col: str = "content") -> DataFrame:
         for pdf in batches:
             out = {k: [] for k in ("media_id", "phash", "duration_ms",
                                    "hash_ok", "error_message")}
-            for payload in pdf[content_col]:
+            for payload in pdf["content"]:
                 payload = bytes(payload) if payload is not None else b""
                 out["media_id"].append(
                     hashlib.sha256(payload).hexdigest())
@@ -242,7 +240,7 @@ def media_ahash(df: DataFrame, content_col: str = "content") -> DataFrame:
                      "hash_ok boolean, error_message string"))
 
 
-def video_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
+def video_phash(df: DataFrame) -> DataFrame:
     """Motion-JPEG videos → one 64-bit dHash row PER DECODED FRAME
     (media_id, frame_idx, ts_ms, phash, width, height, hash_ok,
     error_message).
@@ -272,7 +270,7 @@ def video_phash(df: DataFrame, content_col: str = "content") -> DataFrame:
                 out["hash_ok"].append(ok)
                 out["error_message"].append(err)
 
-            for payload in pdf[content_col]:
+            for payload in pdf["content"]:
                 payload = bytes(payload) if payload is not None else b""
                 mid = hashlib.sha256(payload).hexdigest()
                 try:

@@ -58,7 +58,6 @@ def cosine_sim_double(a: Column, b: Column) -> Column:
 
 
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
                      qid_col: str = "query_id") -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
@@ -73,10 +72,10 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     # hoisted columns are the identical expressions over the identical
     # arrays, so dot/(qn·nn) is bit-equal to the inline form.
     q = F.broadcast(queries.select(F.col(qid_col).alias("query_id"),
-                                   F.col(vec_col).alias("qvec"))
+                                   F.col("embedding").alias("qvec"))
                     .withColumn("__qn", _norm(F.col("qvec"))))
-    pairs = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                              F.col(vec_col).alias("nvec")) \
+    pairs = embeddings.select(F.col("vec_id").alias("neighbor_id"),
+                              F.col("embedding").alias("nvec")) \
         .withColumn("__nn", _norm(F.col("nvec"))) \
         .crossJoin(q) \
         .filter(F.col("neighbor_id") != F.col("query_id")) \
@@ -138,15 +137,15 @@ def quantized_topk(quantized: DataFrame, queries: DataFrame, k: int = 5
                     F.col("rank").cast("int").alias("rank"), "cosine"))
 
 
-def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.95
+                         ) -> DataFrame:
     """All pairs with cosine ≥ threshold (embedding near-dup detection).
 
     Exact quadratic form for verification-scale inputs; the LSH variant
     below is the candidate generator at corpus scale.
     """
-    e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    e = embeddings.select(F.col("vec_id").alias("id"),
+                          F.col("embedding").alias("v"))
     a, b = e.alias("a"), e.alias("b")
     return (
         a.crossJoin(b)
@@ -158,8 +157,7 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.95,
 
 
 def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.9,
-                         n_clusters: int = 16, id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         n_clusters: int = 16) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding-space near-duplicate pairs
     found WITHIN k-means clusters — the scalable form of semantic dedup.
 
@@ -176,8 +174,7 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     downstream keeps ``min(id)`` per group exactly like the text
     near-dup ladder.
     """
-    assigned, _ = ivf_assign(embeddings, n_clusters,
-                             id_col=id_col, vec_col=vec_col)
+    assigned, _ = ivf_assign(embeddings, n_clusters)
     a = assigned.select("cluster", F.col("id").alias("id_a"),
                         F.col("v").alias("__va"))
     b = assigned.select("cluster", F.col("id").alias("id_b"),
@@ -200,8 +197,8 @@ def plane_vector(p: int, dim: int, seed: int = 1) -> list[float]:
             for i in range(dim)]
 
 
-def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16,
-                         seed: int = 1) -> Column:
+def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16
+                         ) -> Column:
     """Random-hyperplane LSH signature (int bitmask) as a vectorized
     pandas UDF: one BLAS matmul per Arrow batch (V @ P.T), sign bits packed
     into a long.  A pure column-expression variant (n_planes nested
@@ -211,7 +208,7 @@ def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16,
     """
     import numpy as np
 
-    planes = np.array([plane_vector(p, dim, seed) for p in range(n_planes)])
+    planes = np.array([plane_vector(p, dim) for p in range(n_planes)])
     weights = np.power(2.0, np.arange(n_planes))
 
     @F.pandas_udf("long")
@@ -245,16 +242,15 @@ def assign_to_centroids(e: DataFrame, cdf: DataFrame) -> DataFrame:
             .select("id", "v", "cluster"))
 
 
-def ivf_assign(embeddings: DataFrame, n_clusters: int = 16,
-               iterations: int = 2, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> tuple[DataFrame, list]:
+def ivf_assign(embeddings: DataFrame, n_clusters: int = 16
+               ) -> tuple[DataFrame, list]:
     """IVF coarse quantizer: deterministic k-means over DataFrame ops.
 
     Centroid init: the ``n_clusters`` vectors with the smallest
     ``sha2(id)`` (a deterministic pseudo-random sample, no RNG state;
     sha2 rather than xxhash64 so the ordering is ENGINE-PORTABLE — the
     DuckDB correctness oracle recomputes the same k-means end-to-end);
-    then ``iterations`` Lloyd rounds — assign via broadcast
+    then two Lloyd rounds — assign via broadcast
     nearest-centroid, update via per-cluster mean (one hash-agg shuffle
     per round).  Returns (assignments df [id, vec, cluster], centroids).
 
@@ -263,7 +259,8 @@ def ivf_assign(embeddings: DataFrame, n_clusters: int = 16,
     as a table partitioned by cluster.
     """
     spark = embeddings.sparkSession
-    e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    e = embeddings.select(F.col("vec_id").alias("id"),
+                          F.col("embedding").alias("v"))
     seed_rows = (e.withColumn("h", F.sha2(F.col("id").cast("string"), 256))
                  .orderBy("h").limit(n_clusters).select("v").collect())
     centroids = [list(r["v"]) for r in seed_rows]
@@ -274,7 +271,7 @@ def ivf_assign(embeddings: DataFrame, n_clusters: int = 16,
             "cluster int, cvec array<double>")
         return assign_to_centroids(df, cdf)
 
-    for _ in range(iterations):
+    for _ in range(2):
         assigned = assign(e, centroids)
         means = (assigned.groupBy("cluster")
                  .agg(*[F.avg(F.col("v")[i]).alias(f"m{i}")
@@ -288,17 +285,14 @@ def ivf_assign(embeddings: DataFrame, n_clusters: int = 16,
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-             n_clusters: int = 16, nprobe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             qid_col: str = "query_id") -> DataFrame:
+             n_clusters: int = 16, nprobe: int = 4) -> DataFrame:
     """IVF approximate top-k: probe the ``nprobe`` nearest clusters per
     query, exact cosine within candidates.
 
     The assignment side is the persisted index at scale (partition/bucket
     by cluster → query touches nprobe/n_clusters of the corpus).
     """
-    assigned, centroids = ivf_assign(embeddings, n_clusters,
-                                     id_col=id_col, vec_col=vec_col)
+    assigned, centroids = ivf_assign(embeddings, n_clusters)
     # nearest clusters per query, fully distributed: broadcast the tiny
     # centroid table onto the queries side and rank with a per-query
     # window — no .collect() of user data (queries can be arbitrarily
@@ -307,7 +301,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     cdf = spark.createDataFrame(
         [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
         "cluster int, cvec array<double>")
-    probes = _probe_clusters(queries, cdf, nprobe, qid_col, vec_col)
+    probes = _probe_clusters(queries, cdf, nprobe)
     cands = assigned.join(F.broadcast(probes), "cluster") \
         .filter(F.col("id") != F.col("query_id"))
     scored = cands.select(
@@ -321,28 +315,25 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def ivf_topk_quantized(embeddings: DataFrame, queries: DataFrame,
-                       k: int = 5, n_clusters: int = 16, nprobe: int = 4,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       qid_col: str = "query_id") -> DataFrame:
+                       k: int = 5, n_clusters: int = 16, nprobe: int = 4
+                       ) -> DataFrame:
     """IVF probe + int8-quantized candidate scoring — the full
     memory-compressed ANN path: the coarse quantizer (float k-means
     centroids, tiny) routes queries, while candidate re-ranking runs on
     the 4×-compressed int8 vectors (``quantized_cosine`` — exact int
     dot products; scales cancel).  What a 100 TB vector corpus actually
     serves: float centroids in memory, quantized vectors on disk."""
-    assigned, centroids = ivf_assign(embeddings, n_clusters,
-                                     id_col=id_col, vec_col=vec_col)
+    assigned, centroids = ivf_assign(embeddings, n_clusters)
     spark = embeddings.sparkSession
     cdf = spark.createDataFrame(
         [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
         "cluster int, cvec array<double>")
-    qz = quantize_embeddings(embeddings, id_col=id_col, vec_col=vec_col) \
-        .select(F.col("id"), F.col("qvec"))
-    probes = _probe_clusters(queries, cdf, nprobe, qid_col, vec_col)
+    qz = quantize_embeddings(embeddings).select(F.col("id"), F.col("qvec"))
+    probes = _probe_clusters(queries, cdf, nprobe)
     # quantization is per-vector, so the (small) query side quantizes
     # independently — only query-sized tables are broadcast, never the
     # quantized corpus
-    qz_q = quantize_embeddings(queries, id_col=qid_col, vec_col=vec_col) \
+    qz_q = quantize_embeddings(queries, id_col="query_id") \
         .select(F.col("id").alias("query_id"), F.col("qvec").alias("qq"))
     cands = (assigned.select("cluster", "id")
              .join(F.broadcast(probes.select("query_id", "cluster")),
@@ -362,8 +353,7 @@ def ivf_topk_quantized(embeddings: DataFrame, queries: DataFrame,
                     F.col("rank").cast("int").alias("rank"), "cosine"))
 
 
-def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+def quantize_embeddings(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     """Symmetric int8 scalar quantization: per-vector
     ``scale = max|x| / 127``, ``q_i = round(x_i / scale)`` — 4× smaller
     embedding storage (the difference between 100 TB and 25 TB of
@@ -380,11 +370,11 @@ def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
     ``q_i * scale``.
     """
     amax = F.aggregate(
-        F.transform(F.col(vec_col), lambda x: F.abs(x)),
+        F.transform(F.col("embedding"), lambda x: F.abs(x)),
         F.lit(0.0).cast("double"),
         lambda acc, x: F.greatest(acc, x))
     staged = df.select(F.col(id_col).alias("id"),
-                       F.col(vec_col).alias("__v"),
+                       F.col("embedding").alias("__v"),
                        (amax / F.lit(127.0)).alias("scale"))
     q = F.transform(
         F.col("__v"),
@@ -394,8 +384,8 @@ def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
     return staged.select("id", "scale", q.alias("qvec"))
 
 
-def _probe_clusters(queries: DataFrame, cdf: DataFrame, nprobe: int,
-                    qid_col: str, vec_col: str) -> DataFrame:
+def _probe_clusters(queries: DataFrame, cdf: DataFrame, nprobe: int
+                    ) -> DataFrame:
     """(query_id, cluster, qv): each query's ``nprobe`` nearest centroids
     — broadcast the tiny centroid table, rank with a per-query window
     (no driver collect of query data)."""
@@ -405,8 +395,7 @@ def _probe_clusters(queries: DataFrame, cdf: DataFrame, nprobe: int,
         F.lit(0.0).cast("double"), lambda a, x: a + x)
     wq = Window.partitionBy("query_id").orderBy("dist", "cluster")
     return (queries
-            .select(F.col(qid_col).alias("query_id"),
-                    F.col(vec_col).alias("qv"))
+            .select(F.col("query_id"), F.col("embedding").alias("qv"))
             .crossJoin(F.broadcast(cdf))
             .withColumn("dist", qdist)
             .withColumn("__r", F.row_number().over(wq))
@@ -414,32 +403,26 @@ def _probe_clusters(queries: DataFrame, cdf: DataFrame, nprobe: int,
             .select("query_id", "cluster", "qv"))
 
 
-def build_ivf_index(embeddings: DataFrame, io, table: str = "ivf_index",
-                    n_clusters: int = 16, iterations: int = 2,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> str:
-    """Persist the IVF index: assignments PARTITIONED BY cluster plus the
-    tiny centroid model table (``<table>_centroids``).
+def build_ivf_index(embeddings: DataFrame, io, n_clusters: int = 16) -> None:
+    """Persist the IVF index: assignments PARTITIONED BY cluster
+    (``ivf_index``) plus the tiny centroid model table
+    (``ivf_index_centroids``).
 
     This is the at-100-TB shape ``ivf_topk`` only describes: build once,
     probe many times — each query batch reads ``nprobe/n_clusters`` of
     the corpus via partition-directory pruning instead of re-running
     k-means per query call.
     """
-    assigned, centroids = ivf_assign(embeddings, n_clusters, iterations,
-                                     id_col=id_col, vec_col=vec_col)
-    io.overwrite(assigned, table, partition_by=["cluster"])
+    assigned, centroids = ivf_assign(embeddings, n_clusters)
+    io.overwrite(assigned, "ivf_index", partition_by=["cluster"])
     spark = embeddings.sparkSession
     cdf = spark.createDataFrame(
         [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
         "cluster int, cvec array<double>")
-    io.overwrite(cdf, table + "_centroids")
-    return table
+    io.overwrite(cdf, "ivf_index_centroids")
 
 
-def ivf_index_upsert(io, new_embeddings: DataFrame,
-                     table: str = "ivf_index", id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> int:
+def ivf_index_upsert(io, new_embeddings: DataFrame) -> int:
     """Incremental index maintenance: assign NEW vectors to the
     EXISTING centroid model and append them cluster-partitioned —
     absorbing a corpus delta without re-running k-means over the full
@@ -456,20 +439,19 @@ def ivf_index_upsert(io, new_embeddings: DataFrame,
     pruned id column, and a partitioned append that touches only the
     clusters the delta lands in.
     """
-    cdf = io.read(table + "_centroids")
-    e = new_embeddings.select(F.col(id_col).alias("id"),
-                              F.col(vec_col).alias("v"))
-    pending = e.join(io.read(table).select("id"), "id", "left_anti")
+    cdf = io.read("ivf_index_centroids")
+    e = new_embeddings.select(F.col("vec_id").alias("id"),
+                              F.col("embedding").alias("v"))
+    pending = e.join(io.read("ivf_index").select("id"), "id", "left_anti")
     assigned = assign_to_centroids(pending, cdf).localCheckpoint()
     n = assigned.count()
     if n:
-        io.append(assigned, table, partition_by=["cluster"])
+        io.append(assigned, "ivf_index", partition_by=["cluster"])
     return int(n)
 
 
-def ivf_topk_indexed(io, queries: DataFrame, k: int = 5, nprobe: int = 4,
-                     table: str = "ivf_index", qid_col: str = "query_id",
-                     vec_col: str = "embedding") -> DataFrame:
+def ivf_topk_indexed(io, queries: DataFrame, k: int = 5, nprobe: int = 4
+                     ) -> DataFrame:
     """Approximate top-k against a PERSISTED IVF index (build_ivf_index).
 
     The distinct probed clusters are collected driver-side — bounded by
@@ -480,11 +462,11 @@ def ivf_topk_indexed(io, queries: DataFrame, k: int = 5, nprobe: int = 4,
     build-side predicate — PLANS.md), so a probe touches only
     ``nprobe/n_clusters`` of the corpus on disk.
     """
-    cdf = io.read(table + "_centroids")
-    probes = _probe_clusters(queries, cdf, nprobe, qid_col, vec_col)
+    cdf = io.read("ivf_index_centroids")
+    probes = _probe_clusters(queries, cdf, nprobe)
     probed = sorted({r["cluster"] for r in
                      probes.select("cluster").distinct().collect()})
-    assigned = (io.read(table)
+    assigned = (io.read("ivf_index")
                 .filter(F.col("cluster").isin(probed) if probed
                         else F.lit(False)))
     cands = assigned.join(F.broadcast(probes), "cluster") \
@@ -499,19 +481,19 @@ def ivf_topk_indexed(io, queries: DataFrame, k: int = 5, nprobe: int = 4,
             .select("query_id", "neighbor_id", "rank", "cosine"))
 
 
-def _banded(df: DataFrame, idc: str, vc: str, out_id: str, dim: int,
+def _banded(df: DataFrame, idc: str, out_id: str, dim: int,
             n_planes: int, bands: int) -> DataFrame:
     """(id, vec, band_idx, band_val) — the signature rows both the
     in-memory path and the persisted index share."""
     r = n_planes // bands
     mask = (1 << r) - 1
-    sig = hyperplane_signature(F.col(vc), dim, n_planes)
+    sig = hyperplane_signature(F.col("embedding"), dim, n_planes)
     bandv = F.array(*[
         F.shiftright(sig, b * r).bitwiseAND(F.lit(mask)).alias(f"b{b}")
         for b in range(bands)
     ])
     return df.select(F.col(idc).alias(out_id),
-                     F.col(vc).alias(out_id + "_v"),
+                     F.col("embedding").alias(out_id + "_v"),
                      F.posexplode(bandv).alias("band_idx", "band_val"))
 
 
@@ -546,63 +528,51 @@ def _score_banded_candidates(joined: DataFrame, k: int) -> DataFrame:
                     (-F.col("t.nc")).alias("cosine")))
 
 
-def build_lsh_index(embeddings: DataFrame, io, table: str = "lsh_index",
-                    dim: int = 16, n_planes: int = 12, bands: int = 3,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> str:
-    """Persist the LSH signature table — the index an at-scale ANN
-    deployment builds ONCE: the corpus-side pandas-UDF signature matmul
-    (the expensive stage) never re-runs per query batch; probes are an
-    equi-join against these rows.  (Unlike the IVF index there is no
-    partition-pruning win — every query touches all band_idx values —
-    the win is amortizing signature compute + scan-ready banding.)"""
-    io.overwrite(_banded(embeddings, id_col, vec_col, "neighbor_id",
-                         dim, n_planes, bands), table)
-    return table
+def build_lsh_index(embeddings: DataFrame, io, dim: int = 16) -> None:
+    """Persist the LSH signature table ``lsh_index`` — the index an
+    at-scale ANN deployment builds ONCE: the corpus-side pandas-UDF
+    signature matmul (the expensive stage) never re-runs per query batch;
+    probes are an equi-join against these rows.  (Unlike the IVF index
+    there is no partition-pruning win — every query touches all band_idx
+    values — the win is amortizing signature compute + scan-ready
+    banding.)"""
+    io.overwrite(_banded(embeddings, "vec_id", "neighbor_id", dim, 12, 3),
+                 "lsh_index")
 
 
-def lsh_index_upsert(io, new_embeddings: DataFrame,
-                     table: str = "lsh_index", dim: int = 16,
-                     n_planes: int = 12, bands: int = 3,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> int:
+def lsh_index_upsert(io, new_embeddings: DataFrame, dim: int = 16) -> int:
     """Incremental signature-index maintenance: band signatures are a
     pure per-vector function of the FROZEN hyperplanes, so absorbing a
     corpus delta is exactly the signature matmul over the delta plus an
     append — no global state to revisit (the LSH twin of
     ``ivf_index_upsert``).  Idempotent via an anti-join on the pruned
-    id column; returns rows appended (rows = |delta| × bands)."""
-    existing = io.read(table).select(F.col("neighbor_id").alias("id"))
+    id column; returns rows appended (rows = |delta| × 3 bands)."""
+    existing = io.read("lsh_index").select(F.col("neighbor_id").alias("id"))
     pending = (new_embeddings     # left_anti needs no distinct right side
-               .join(existing, F.col(id_col) == F.col("id"), "left_anti"))
-    banded = _banded(pending, id_col, vec_col, "neighbor_id",
-                     dim, n_planes, bands).localCheckpoint()
+               .join(existing, F.col("vec_id") == F.col("id"), "left_anti"))
+    banded = _banded(pending, "vec_id", "neighbor_id",
+                     dim, 12, 3).localCheckpoint()
     n = banded.count()
     if n:
-        io.append(banded, table)
+        io.append(banded, "lsh_index")
     return int(n)
 
 
 def lsh_ann_topk_indexed(io, queries: DataFrame, k: int = 5,
-                         table: str = "lsh_index", dim: int = 16,
-                         n_planes: int = 12, bands: int = 3,
-                         qid_col: str = "query_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         dim: int = 16) -> DataFrame:
     """Approximate top-k against a persisted signature index
     (build_lsh_index): only the (small) query side computes signatures;
     candidates come from the band equi-join against the stored rows."""
-    c = io.read(table)
-    q = F.broadcast(_banded(queries, qid_col, vec_col, "query_id",
-                            dim, n_planes, bands))
+    c = io.read("lsh_index")
+    q = F.broadcast(_banded(queries, "query_id", "query_id", dim, 12, 3))
     return _score_banded_candidates(
         c.join(q, ["band_idx", "band_val"])
         .filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
 def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 qid_col: str = "query_id", dim: int = 16,
-                 n_planes: int = 12, bands: int = 3) -> DataFrame:
+                 dim: int = 16, n_planes: int = 12, bands: int = 3
+                 ) -> DataFrame:
     """Approximate top-k: hyperplane-signature bands → bucket equi-join →
     exact cosine re-rank within candidates.
 
@@ -612,9 +582,8 @@ def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     ideal for writing back as an index table); the join is an equi-join on
     (band_idx, band_value) — shuffle keyed on small ints, no cross product.
     """
-    c = _banded(embeddings, id_col, vec_col, "neighbor_id",
-                dim, n_planes, bands)
-    q = F.broadcast(_banded(queries, qid_col, vec_col, "query_id",
+    c = _banded(embeddings, "vec_id", "neighbor_id", dim, n_planes, bands)
+    q = F.broadcast(_banded(queries, "query_id", "query_id",
                             dim, n_planes, bands))
     return _score_banded_candidates(
         c.join(q, ["band_idx", "band_val"])
@@ -625,8 +594,7 @@ def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 # product quantization (IVF-PQ): the memory-compressed ANN serving shape
 # ---------------------------------------------------------------------------
 
-def pq_train(embeddings: DataFrame, dim: int, m: int = 4, ksub: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding"):
+def pq_train(embeddings: DataFrame, dim: int, m: int = 4, ksub: int = 8):
     """Product-quantization codebooks (Jégou et al. 2011): the vector
     space splits into ``m`` subspaces of dim/m and each gets its own
     ``ksub``-centroid k-means codebook — so a vector stores as m small
@@ -642,17 +610,15 @@ def pq_train(embeddings: DataFrame, dim: int, m: int = 4, ksub: int = 8,
     codebooks = []
     for s in range(m):
         sub = embeddings.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), s * dsub + 1, dsub).alias(vec_col))
-        _assigned, cents = ivf_assign(sub, n_clusters=ksub,
-                                      id_col=id_col, vec_col=vec_col)
+            F.col("vec_id"),
+            F.slice(F.col("embedding"), s * dsub + 1, dsub)
+            .alias("embedding"))
+        _assigned, cents = ivf_assign(sub, n_clusters=ksub)
         codebooks.append([[float(x) for x in c] for c in cents])
     return codebooks
 
 
-def pq_encode(embeddings: DataFrame, codebooks,
-              id_col: str = "vec_id", vec_col: str = "embedding"
-              ) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
     """(id, vector) → (id, codes array<int>): nearest codebook entry
     per subspace.  ONE broadcast crossJoin against the m·ksub codebook
     rows + two hash-aggs (per-(id,sub) argmin via ``min_by``, then
@@ -664,8 +630,8 @@ def pq_encode(embeddings: DataFrame, codebooks,
     rows = [(s, ci, c) for s, cb in enumerate(codebooks)
             for ci, c in enumerate(cb)]
     cdf = spark.createDataFrame(rows, "sub int, code int, cvec array<double>")
-    e = embeddings.select(F.col(id_col).alias("id"),
-                          F.col(vec_col).alias("v"))
+    e = embeddings.select(F.col("vec_id").alias("id"),
+                          F.col("embedding").alias("v"))
     sub_slice = F.slice(F.col("v"), F.col("sub") * dsub + 1, dsub)
     dist = F.aggregate(
         F.zip_with(sub_slice, F.col("cvec"),
@@ -714,8 +680,6 @@ def _adc_scorer(codebooks):
 def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                 n_clusters: int = 16, nprobe: int = 4, m: int = 4,
                 ksub: int = 8, dim: int = 64,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                qid_col: str = "query_id",
                 rerank: int | None = None) -> DataFrame:
     """IVF-PQ approximate top-k: float coarse centroids route queries
     (nprobe of n_clusters lists), candidates score by asymmetric
@@ -724,17 +688,14 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     only the two tiny models (coarse centroids + codebooks) and the
     query batch are broadcast.  Returns (query_id, neighbor_id, rank,
     dist) ranked by ascending ADC distance."""
-    assigned, centroids = ivf_assign(embeddings, n_clusters,
-                                     id_col=id_col, vec_col=vec_col)
-    codebooks = pq_train(embeddings, dim=dim, m=m, ksub=ksub,
-                         id_col=id_col, vec_col=vec_col)
-    codes = pq_encode(embeddings, codebooks, id_col=id_col,
-                      vec_col=vec_col)
+    assigned, centroids = ivf_assign(embeddings, n_clusters)
+    codebooks = pq_train(embeddings, dim=dim, m=m, ksub=ksub)
+    codes = pq_encode(embeddings, codebooks)
     spark = embeddings.sparkSession
     cdf = spark.createDataFrame(
         [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
         "cluster int, cvec array<double>")
-    probes = _probe_clusters(queries, cdf, nprobe, qid_col, vec_col)
+    probes = _probe_clusters(queries, cdf, nprobe)
     cands = (assigned.select("cluster", "id")
              .join(F.broadcast(probes.select("query_id", "cluster", "qv")),
                    "cluster")
@@ -758,8 +719,8 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     short = (scored.withColumn("rn", F.row_number().over(w))
              .filter(F.col("rn") <= rerank)
              .drop("rn", "dist"))
-    vecs = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                             F.col(vec_col).alias("nv"))
+    vecs = embeddings.select(F.col("vec_id").alias("neighbor_id"),
+                             F.col("embedding").alias("nv"))
     rr = short.join(vecs, "neighbor_id").select(
         "query_id", "neighbor_id",
         F.round(cosine_sim(F.col("qv"), F.col("nv")), 6).alias("cosine"))
@@ -772,9 +733,8 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def hard_negative_topk(embeddings: DataFrame, queries: DataFrame,
-                       k: int = 5, pos_threshold: float = 0.95,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       qid_col: str = "query_id") -> DataFrame:
+                       k: int = 5, pos_threshold: float = 0.95
+                       ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the k
     MOST similar vectors strictly below the positive band
     (``cosine < pos_threshold``) — similar enough to be informative,
@@ -786,10 +746,10 @@ def hard_negative_topk(embeddings: DataFrame, queries: DataFrame,
     Production swaps the scan for IVF/LSH probes (the indexed ANN
     operators) with the same band filter.
     """
-    q = F.broadcast(queries.select(F.col(qid_col).alias("query_id"),
-                                   F.col(vec_col).alias("qvec")))
-    pairs = (embeddings.select(F.col(id_col).alias("neg_id"),
-                               F.col(vec_col).alias("nvec"))
+    q = F.broadcast(queries.select(F.col("query_id"),
+                                   F.col("embedding").alias("qvec")))
+    pairs = (embeddings.select(F.col("vec_id").alias("neg_id"),
+                               F.col("embedding").alias("nvec"))
              .crossJoin(q)
              .filter(F.col("neg_id") != F.col("query_id"))
              .select("query_id", "neg_id",

@@ -33,13 +33,11 @@ def _in_set(values: tuple[str, ...]):
     return lambda t: t.isin(*values)
 
 
-def lang_scores(text_col: str = "text",
-                toks: Column | None = None) -> list[Column]:
-    # pass ``toks`` as a MATERIALIZED attribute where possible: an inline
-    # split(lower(text)) here is re-evaluated once per marker filter
-    # (codegen subexpression elimination does not cover the HOF-fallback
-    # filter expressions — measured 28% of the fused feature pass)
-    toks = tokens_col(text_col) if toks is None else toks
+def lang_scores(toks: Column) -> list[Column]:
+    # ``toks`` is a MATERIALIZED attribute: an inline split(lower(text))
+    # here is re-evaluated once per marker filter (codegen subexpression
+    # elimination does not cover the HOF-fallback filter expressions —
+    # measured 28% of the fused feature pass)
     return [
         F.size(F.filter(toks, _in_set(markers)))
         .cast("long").alias(f"score_{lang}")
@@ -47,12 +45,11 @@ def lang_scores(text_col: str = "text",
     ]
 
 
-def language_id(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """(id, predicted_lang, best_score): argmax marker hits, ties → lex-min lang."""
-    staged = df.select(F.col(id_col), tokens_col(text_col).alias("__tk"))
-    scored = staged.select(F.col(id_col),
-                           *lang_scores(text_col, toks=F.col("__tk")))
+    staged = df.select(F.col("doc_id"), tokens_col().alias("__tk"))
+    scored = staged.select(F.col("doc_id"),
+                           *lang_scores(F.col("__tk")))
     langs = sorted(LANG_MARKERS)
     best = F.greatest(*[F.col(f"score_{la}") for la in langs])
     pred = None
@@ -60,14 +57,13 @@ def language_id(df: DataFrame, id_col: str = "doc_id",
         cond = F.when(F.col(f"score_{la}") == best, F.lit(la))
         pred = cond.otherwise(pred) if pred is not None else cond
     return scored.select(
-        F.col(id_col),
+        F.col("doc_id"),
         pred.alias("predicted_lang"),
         best.cast("long").alias("best_score"),
     )
 
 
-def quality_features(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-doc quality features + a composite score in [0, 1].
 
     Features follow the classic curation heuristics: length, mean word
@@ -77,13 +73,13 @@ def quality_features(df: DataFrame, id_col: str = "doc_id",
     # token array materialized as an attribute: the stopword filter and
     # token count each referenced an inline split(lower(text)) that
     # codegen CSE does not deduplicate through the HOF fallback
-    staged = df.select(F.col(id_col), F.col(text_col),
-                       tokens_col(text_col).alias("__tk"))
+    staged = df.select(F.col("doc_id"), F.col("text"),
+                       tokens_col().alias("__tk"))
     toks = F.col("__tk")
     n_tokens = F.size(toks).cast("long")
-    n_chars = F.length(F.col(text_col)).cast("long")
+    n_chars = F.length(F.col("text")).cast("long")
     avg_word_len = F.round((n_chars - (n_tokens - 1)) / n_tokens, 6)
-    punct = F.size(F.split(F.col(text_col), r"[.,;:!?]")) - 1
+    punct = F.size(F.split(F.col("text"), r"[.,;:!?]")) - 1
     punct_ratio = F.round(punct / n_chars, 6)
     stop_ratio = F.round(
         F.size(F.filter(toks, _in_set(_STOPWORDS))) / n_tokens, 6)
@@ -97,7 +93,7 @@ def quality_features(df: DataFrame, id_col: str = "doc_id",
         + (F.lit(1.0) - F.least((punct / n_chars) * 20, F.lit(1.0))) * 0.3)
     score_e6 = F.floor(raw_score * 1e6 + F.lit(0.5)).cast("long")
     return staged.select(
-        F.col(id_col), n_tokens.alias("n_tokens"), n_chars.alias("n_chars"),
+        F.col("doc_id"), n_tokens.alias("n_tokens"), n_chars.alias("n_chars"),
         avg_word_len.alias("avg_word_len"), punct_ratio.alias("punct_ratio"),
         stop_ratio.alias("stopword_ratio"), score_e6.alias("quality_score_e6"))
 
@@ -106,17 +102,17 @@ def quality_features(df: DataFrame, id_col: str = "doc_id",
 BPE_RE = "[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]"
 
 
-def token_counts(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish regex token count per doc."""
-    ws = F.size(F.split(F.col(text_col), " ")).cast("long")
-    bpe = F.size(F.expr(f"regexp_extract_all({text_col}, '{BPE_RE}', 0)")) \
+    ws = F.size(F.split(F.col("text"), " ")).cast("long")
+    bpe = F.size(F.expr(f"regexp_extract_all(text, '{BPE_RE}', 0)")) \
         .cast("long")
-    return df.select(F.col(id_col), ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
+    return df.select(F.col("doc_id"), ws.alias("ws_tokens"),
+                     bpe.alias("bpe_tokens"))
 
 
 def hash_sample(df: DataFrame, fraction_pct: dict[str, int],
-                strata_col: str = "lang", id_col: str = "doc_id",
+                strata_col: str = "lang",
                 default_pct: int = 0) -> DataFrame:
     """Deterministic stratified sampling: keep a row when
     ``sha2(id) mod 100 < pct[stratum]``.
@@ -129,7 +125,7 @@ def hash_sample(df: DataFrame, fraction_pct: dict[str, int],
     enumerate the stratum values (no distinct-collect over the corpus).
     """
     bucket = F.expr(
-        f"cast(conv(substr(sha2(cast({id_col} as string), 256), 1, 8), 16, 10) "
+        f"cast(conv(substr(sha2(cast(doc_id as string), 256), 1, 8), 16, 10) "
         f"as bigint) % 100")
     pct = None
     for stratum, p in sorted(fraction_pct.items()):
@@ -141,7 +137,7 @@ def hash_sample(df: DataFrame, fraction_pct: dict[str, int],
 
 
 def sample_weighted(df: DataFrame, weight_col: str, k: int,
-                    id_col: str = "doc_id", seed: int = 42) -> DataFrame:
+                    seed: int = 42) -> DataFrame:
     """Exact weighted sampling WITHOUT replacement, top-k shape
     (Efraimidis–Spirakis): each row draws a deterministic uniform
     u ∈ (0, 1] from ``sha2(id:seed)`` and is ranked by ``ln(u)/w``;
@@ -160,27 +156,25 @@ def sample_weighted(df: DataFrame, weight_col: str, k: int,
     into a fixed-size training subset drawn ∝ importance.
     """
     return (df.filter(F.col(weight_col) > 0)
-            .withColumn("__es", _es_score(weight_col, id_col, seed))
-            .orderBy(F.col("__es").desc(), F.col(id_col))
+            .withColumn("__es", _es_score(weight_col, seed))
+            .orderBy(F.col("__es").desc(), F.col("doc_id"))
             .limit(k)
             .drop("__es"))
 
 
-def _es_score(weight_col: str, id_col: str, seed: int):
+def _es_score(weight_col: str, seed: int):
     """The Efraimidis–Spirakis key ``ln(u)/w`` with a deterministic
     hash-derived uniform u ∈ (0, 1] — shared by the global and
     per-group samplers so both select identically for the same rows."""
     u = (F.expr(
-        f"cast(conv(substr(sha2(concat(cast({id_col} as string), "
+        f"cast(conv(substr(sha2(concat(cast(doc_id as string), "
         f"':{seed}'), 256), 1, 8), 16, 10) as bigint)")
         .cast("double") + F.lit(1.0)) / F.lit(4294967296.0)
     return F.log(u) / F.col(weight_col)
 
 
 def sample_weighted_per_group(df: DataFrame, group_col: str,
-                              weight_col: str, k: int,
-                              id_col: str = "doc_id",
-                              seed: int = 42) -> DataFrame:
+                              weight_col: str, k: int) -> DataFrame:
     """``sample_weighted`` stratified: an exact weighted sample of k
     rows WITHIN each group (per-language / per-source quota draws —
     the mixture-rebalance shape where each stratum's subset must
@@ -191,16 +185,15 @@ def sample_weighted_per_group(df: DataFrame, group_col: str,
     groups rank in parallel, so this is the variant that scales when
     k × n_groups is too big for the global sampler's TakeOrdered."""
     w = Window.partitionBy(group_col).orderBy(
-        F.col("__es").desc(), F.col(id_col))
+        F.col("__es").desc(), F.col("doc_id"))
     return (df.filter(F.col(weight_col) > 0)
-            .withColumn("__es", _es_score(weight_col, id_col, seed))
+            .withColumn("__es", _es_score(weight_col, 42))
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .drop("__es", "__rn"))
 
 
-def with_features(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def with_features(df: DataFrame) -> DataFrame:
     """All text-analysis features in ONE narrow pass — language ID, quality
     features, token counts appended to the input columns.
 
@@ -226,20 +219,20 @@ def with_features(df: DataFrame, id_col: str = "doc_id",
     # 20k bench docs).
     all_markers = tuple(sorted(
         {m for ms in LANG_MARKERS.values() for m in ms} | set(_STOPWORDS)))
-    base = df.select("*", tokens_col(text_col).alias("__tk"))
+    base = df.select("*", tokens_col().alias("__tk"))
     base = base.select("*", F.filter(F.col("__tk"),
                                      _in_set(all_markers)).alias("__mk"))
     toks = F.col("__tk")
     marked = F.col("__mk")
     n_tokens = F.size(toks).cast("long")
-    n_chars = F.length(F.col(text_col)).cast("long")
-    punct = F.size(F.split(F.col(text_col), r"[.,;:!?]")) - 1
+    n_chars = F.length(F.col("text")).cast("long")
+    punct = F.size(F.split(F.col("text"), r"[.,;:!?]")) - 1
     n_stop = F.size(F.filter(marked, _in_set(_STOPWORDS))).cast("long")
-    ws = F.size(F.split(F.col(text_col), " ")).cast("long")
-    bpe = F.size(F.expr(f"regexp_extract_all({text_col}, '{BPE_RE}', 0)")) \
+    ws = F.size(F.split(F.col("text"), " ")).cast("long")
+    bpe = F.size(F.expr(f"regexp_extract_all(text, '{BPE_RE}', 0)")) \
         .cast("long")
     staged = base.select(
-        *df.columns, *lang_scores(text_col, toks=marked),
+        *df.columns, *lang_scores(marked),
         n_tokens.alias("n_tokens"), n_chars.alias("n_chars"),
         punct.alias("__punct"), n_stop.alias("__n_stop"),
         ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
@@ -267,8 +260,7 @@ def with_features(df: DataFrame, id_col: str = "doc_id",
         .alias("quality_score_e6")))
 
 
-def fingerprints(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", n: int = 5, keep: int = 4) -> DataFrame:
+def fingerprints(df: DataFrame, n: int = 5, keep: int = 4) -> DataFrame:
     """Winnowing-style document fingerprint: the ``keep`` lexicographically
     smallest sha2 digests over word n-gram shingles, concatenated.
 
@@ -278,16 +270,15 @@ def fingerprints(df: DataFrame, id_col: str = "doc_id",
     # tokens materialized in their own projection: the shingle lambda must
     # slice an attribute, not re-evaluate split(lower(text)) per element
     # (O(tokens²·len) otherwise — see dedup.shingles_of)
-    staged = df.select(F.col(id_col),
-                       tokens_col(text_col).alias("__toks"))
+    staged = df.select(F.col("doc_id"),
+                       tokens_col().alias("__toks"))
     hashes = F.transform(shingles_of(F.col("__toks"), n),
                          lambda s: F.sha2(s, 256))
     fp = F.concat_ws("", F.slice(F.array_sort(hashes), 1, keep))
-    return staged.select(F.col(id_col), fp.alias("fingerprint"))
+    return staged.select(F.col("doc_id"), fp.alias("fingerprint"))
 
 
-def repetition_features(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 2) -> DataFrame:
+def repetition_features(df: DataFrame, n: int = 2) -> DataFrame:
     """Gopher-style repetition quality signals per document: word n-gram
     counts, distinct counts, the most-frequent n-gram's occurrence count,
     and the duplicated-n-gram fraction (1 - distinct/total).
@@ -305,9 +296,9 @@ def repetition_features(df: DataFrame, id_col: str = "doc_id",
     the e6 fraction is floor-scaled — decimal round() differs across
     engines in the last ulp).
     """
-    staged = df.select(F.col(id_col), tokens_col(text_col).alias("__toks"))
+    staged = df.select(F.col("doc_id"), tokens_col().alias("__toks"))
     staged = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_sort(shingles_of(F.col("__toks"), n)).alias("__sh"))
     n_ngrams = F.size("__sh").cast("long")
     n_distinct = F.size(F.array_distinct("__sh")).cast("long")
@@ -324,7 +315,7 @@ def repetition_features(df: DataFrame, id_col: str = "doc_id",
     dup_frac_e6 = F.floor(
         (n_ngrams - n_distinct) * F.lit(1000000.0) / n_ngrams).cast("long")
     return (staged
-            .select(F.col(id_col), n_ngrams.alias("n_ngrams"),
+            .select(F.col("doc_id"), n_ngrams.alias("n_ngrams"),
                     n_distinct.alias("n_distinct"),
                     top_count.alias("top_ngram_count"),
                     dup_frac_e6.alias("dup_ngram_frac_e6"))
@@ -332,8 +323,7 @@ def repetition_features(df: DataFrame, id_col: str = "doc_id",
 
 
 def contamination_pairs(df: DataFrame, eval_mod: int = 20, n: int = 3,
-                        min_common: int = 2, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+                        min_common: int = 2) -> DataFrame:
     """Train/test decontamination: n-gram overlap between the training
     corpus and a benchmark/eval subset (here the deterministic
     ``sha2(id) mod eval_mod == 0`` slice — in production the eval side is
@@ -353,33 +343,33 @@ def contamination_pairs(df: DataFrame, eval_mod: int = 20, n: int = 3,
     on (corpus doc, eval doc) which the broadcast join leaves
     co-partitioned with the corpus scan.
     """
-    staged = df.select(F.col(id_col), tokens_col(text_col).alias("__toks"))
+    staged = df.select(F.col("doc_id"), tokens_col().alias("__toks"))
     bucket = (
-        F.conv(F.substring(F.sha2(F.col(id_col).cast("string"), 256), 1, 8),
+        F.conv(F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 8),
                16, 10).cast("long") % eval_mod)
     shingles = staged.select(
-        F.col(id_col), bucket.alias("__b"),
+        F.col("doc_id"), bucket.alias("__b"),
         F.explode(F.array_distinct(shingles_of(F.col("__toks"), n)))
         .alias("shingle"))
     evals = (shingles.filter(F.col("__b") == 0)
-             .select(F.col(id_col).alias("eval_id"), "shingle"))
+             .select(F.col("doc_id").alias("eval_id"), "shingle"))
     eval_sizes = evals.groupBy("eval_id").agg(
         F.count("*").cast("long").alias("n_eval_sh"))
     corpus = (shingles.filter(F.col("__b") != 0)
-              .select(F.col(id_col), "shingle"))
+              .select(F.col("doc_id"), "shingle"))
     overlap = (corpus.join(F.broadcast(evals), "shingle")
-               .groupBy(id_col, "eval_id")
+               .groupBy("doc_id", "eval_id")
                .agg(F.count("*").cast("long").alias("n_common"))
                .filter(F.col("n_common") >= min_common))
     return (overlap.join(F.broadcast(eval_sizes), "eval_id")
-            .select(F.col(id_col), F.col("eval_id"), F.col("n_common"),
+            .select(F.col("doc_id"), F.col("eval_id"), F.col("n_common"),
                     F.floor(F.col("n_common") * F.lit(1000000.0)
                             / F.col("n_eval_sh")).cast("long")
                     .alias("contam_e6")))
 
 
-def pack_plan(df: DataFrame, seq_len: int = 2048, n_shards: int = 32,
-              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def pack_plan(df: DataFrame, seq_len: int = 2048,
+              n_shards: int = 32) -> DataFrame:
     """Sequence-packing plan (concat-and-chop, the standard pretraining
     layout): documents are concatenated in deterministic (shard, id)
     order and chopped into fixed ``seq_len``-token sequences; a doc may
@@ -391,18 +381,18 @@ def pack_plan(df: DataFrame, seq_len: int = 2048, n_shards: int = 32,
     shuffle — never a global sort; each shard's plan is a running-sum
     window, all integer math (exactly oracle-able).  Real pipelines
     write one packed file per shard from exactly this plan."""
-    ws = F.size(F.split(F.col(text_col), " ")).cast("long")
-    w = (Window.partitionBy("shard").orderBy(id_col)
+    ws = F.size(F.split(F.col("text"), " ")).cast("long")
+    w = (Window.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    shard = F.pmod(F.col(id_col).cast("long"), F.lit(n_shards)).cast("int")
-    staged = (df.select(F.col(id_col), ws.alias("n_tokens"))
+    shard = F.pmod(F.col("doc_id").cast("long"), F.lit(n_shards)).cast("int")
+    staged = (df.select(F.col("doc_id"), ws.alias("n_tokens"))
               .filter(F.col("n_tokens") > 0)
               .withColumn("shard", shard))
     cum_end = F.sum("n_tokens").over(w)
     return (staged
             .withColumn("cum_end", cum_end)
             .select(
-                id_col, "shard", "n_tokens",
+                "doc_id", "shard", "n_tokens",
                 F.floor((F.col("cum_end") - F.col("n_tokens"))
                         / seq_len).cast("long").alias("first_seq"),
                 F.floor((F.col("cum_end") - 1) / seq_len).cast("long")
@@ -415,8 +405,7 @@ def pack_plan(df: DataFrame, seq_len: int = 2048, n_shards: int = 32,
 # unigram-LM quality scoring (the KenLM-perplexity stand-in)
 # ---------------------------------------------------------------------------
 
-def unigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def unigram_lm_scores(df: DataFrame) -> DataFrame:
     """Per-document mean unigram log-probability under a corpus-fit LM —
     the classic perplexity-style quality gate (CCNet / Gopher filter
     documents whose LM score is an outlier; a unigram LM over the corpus
@@ -430,8 +419,8 @@ def unigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
     collected to the driver.  Emits (id, n_tokens, avg_logp) with the
     mean rounded to absorb double summation-order differences.
     """
-    toks = df.select(F.col(id_col).alias("id"),
-                     F.explode(F.split(F.col(text_col), " ")).alias("w"))
+    toks = df.select(F.col("doc_id").alias("id"),
+                     F.explode(F.split(F.col("text"), " ")).alias("w"))
     lm = toks.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
     tot = lm.agg(F.sum("cnt").cast("long").alias("tot"))
     scored = (toks.join(F.broadcast(lm), "w")
@@ -440,15 +429,14 @@ def unigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
     return (scored.groupBy("id")
             .agg(F.count("*").cast("long").alias("n_tokens"),
                  F.round(F.avg("logp"), 3).alias("avg_logp"))
-            .withColumnRenamed("id", id_col))
+            .withColumnRenamed("id", "doc_id"))
 
 
 # ---------------------------------------------------------------------------
 # domain-mixture rebalancing
 # ---------------------------------------------------------------------------
 
-def mixture_rebalance(df: DataFrame, strata_col: str = "lang",
-                      id_col: str = "doc_id") -> DataFrame:
+def mixture_rebalance(df: DataFrame, strata_col: str = "lang") -> DataFrame:
     """Resample toward a UNIFORM domain mixture: each stratum's
     acceptance rate is ``min(1, target/count)`` where target =
     corpus_size / n_strata, applied through the deterministic sha2 hash
@@ -475,11 +463,11 @@ def mixture_rebalance(df: DataFrame, strata_col: str = "lang",
                                  / F.col("cnt")).cast("long"))
                      .alias("rate_e6")))
     bucket = F.expr(
-        f"cast(conv(substr(sha2(cast({id_col} as string), 256), 1, 8), 16, 10) "
+        f"cast(conv(substr(sha2(cast(doc_id as string), 256), 1, 8), 16, 10) "
         f"as bigint) % 1000000")
     return (df.join(F.broadcast(rates), strata_col)
             .filter(bucket < F.col("rate_e6"))
-            .select(F.col(id_col), F.col(strata_col), F.col("rate_e6")))
+            .select(F.col("doc_id"), F.col(strata_col), F.col("rate_e6")))
 
 
 # ---------------------------------------------------------------------------
@@ -491,8 +479,7 @@ def mixture_rebalance(df: DataFrame, strata_col: str = "lang",
 #: (\uXXXX is Java-only).
 NORMALIZE_STRIP = "[^a-z0-9\\x{00c0}-\\x{024f} ]"
 
-def normalize_text(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """Canonical text form ahead of dedup/tokenization: lowercase,
     punctuation stripped to spaces, whitespace runs collapsed, ends
     trimmed — so near-dup and fingerprint stages see one spelling of
@@ -507,22 +494,21 @@ def normalize_text(df: DataFrame, id_col: str = "doc_id",
     Emits (id, text_norm, n_chars_norm, changed).
     """
     norm = F.regexp_replace(
-        F.regexp_replace(F.lower(F.col(text_col)), NORMALIZE_STRIP, " "),
+        F.regexp_replace(F.lower(F.col("text")), NORMALIZE_STRIP, " "),
         " +", " ")
     norm = F.regexp_replace(norm, "^ | $", "")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         norm.alias("text_norm"),
         F.length(norm).cast("long").alias("n_chars_norm"),
-        (norm != F.col(text_col)).cast("long").alias("changed"))
+        (norm != F.col("text")).cast("long").alias("changed"))
 
 
 # ---------------------------------------------------------------------------
 # bigram-LM quality scoring (the interpolated-KenLM stand-in)
 # ---------------------------------------------------------------------------
 
-def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def bigram_lm_scores(df: DataFrame) -> DataFrame:
     """Per-document mean bigram log-probability under a corpus-fit
     Jelinek-Mercer LM: ``p(w2|w1) = 0.9·c(w1,w2)/c(w1·) + 0.1·c(w2)/N``
     — one order up from :func:`unigram_lm_scores`, the direction real
@@ -538,8 +524,8 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
     absent from the output, matching the oracle.  round(3)+0.0 absorbs
     summation order / the −0.0 sign split.
     """
-    toked = df.select(F.col(id_col).alias("id"),
-                      F.split(F.col(text_col), " ").alias("toks"))
+    toked = df.select(F.col("doc_id").alias("id"),
+                      F.split(F.col("text"), " ").alias("toks"))
     n = F.size("toks")
     sliced = toked.select(
         "id",
@@ -558,7 +544,7 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
     # mean — measured SLOWER: it trades cheap explode passes for an
     # extra full-size (id,w1,w2) exchange with no map-side collapse.)
     ctx = bg_lm.groupBy("w1").agg(F.sum("c12").cast("long").alias("c1"))
-    uni = (df.select(F.explode(F.split(F.col(text_col), " ")).alias("w2"))
+    uni = (df.select(F.explode(F.split(F.col("text"), " ")).alias("w2"))
            .groupBy("w2").agg(F.count("*").cast("long").alias("c2")))
     tot = uni.agg(F.sum("c2").cast("long").alias("tot"))
     p = (F.lit(0.9) * (F.col("c12") * F.lit(1.0) / F.col("c1"))
@@ -571,15 +557,14 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
             .agg(F.count("*").cast("long").alias("n_bigrams"),
                  (F.round(F.avg(F.log(p)), 3) + F.lit(0.0))
                  .alias("avg_logp"))
-            .withColumnRenamed("id", id_col))
+            .withColumnRenamed("id", "doc_id"))
 
 
 # ---------------------------------------------------------------------------
 # DSIR importance weights (data selection via importance resampling)
 # ---------------------------------------------------------------------------
 
-def dsir_logweights(df: DataFrame, target_expr, id_col: str = "doc_id",
-                    text_col: str = "text", dim: int = 256) -> DataFrame:
+def dsir_logweights(df: DataFrame, target_expr) -> DataFrame:
     """Per-document DSIR log importance weight: how much more likely the
     document is under the TARGET corpus' hashed-unigram distribution
     than under the raw corpus' (Xie et al. 2023, "Data Selection for
@@ -590,7 +575,7 @@ def dsir_logweights(df: DataFrame, target_expr, id_col: str = "doc_id",
     deterministic rule here).
 
     Scale shape: both feature distributions come from ONE hash-agg over
-    the token stream (map-side combinable down to ``dim`` rows — one row
+    the token stream (map-side combinable down to 256 rows — one row
     carries target and raw counts together), broadcast back onto the
     stream with the two totals riding a broadcast 1-row cross join (the
     `unigram_lm_scores` idiom); the per-doc sum is the only corpus-sized
@@ -598,22 +583,22 @@ def dsir_logweights(df: DataFrame, target_expr, id_col: str = "doc_id",
     absorbs double summation order.
     """
     hashed = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         target_expr.cast("int").alias("tgt"),
-        F.explode(F.split(F.col(text_col), " ")).alias("w"),
+        F.explode(F.split(F.col("text"), " ")).alias("w"),
     ).select(
         "id", "tgt",
         (F.conv(F.substring(F.sha2(F.col("w"), 256), 1, 8), 16, 10)
-         .cast("long") % dim).cast("int").alias("fidx"))
+         .cast("long") % 256).cast("int").alias("fidx"))
     dist = hashed.groupBy("fidx").agg(
         F.count("*").cast("long").alias("cnt_all"),
         F.sum("tgt").cast("long").alias("cnt_tgt"))
     tot = dist.agg(F.sum("cnt_all").cast("long").alias("tot_all"),
                    F.sum("cnt_tgt").cast("long").alias("tot_tgt"))
     logr = (F.log((F.col("cnt_tgt") + F.lit(1.0))
-                  / (F.col("tot_tgt") + F.lit(float(dim))))
+                  / (F.col("tot_tgt") + F.lit(256.0)))
             - F.log((F.col("cnt_all") + F.lit(1.0))
-                    / (F.col("tot_all") + F.lit(float(dim)))))
+                    / (F.col("tot_all") + F.lit(256.0))))
     return (hashed.join(F.broadcast(dist), "fidx")
             .crossJoin(F.broadcast(tot))
             .groupBy("id")
@@ -621,7 +606,7 @@ def dsir_logweights(df: DataFrame, target_expr, id_col: str = "doc_id",
                  # + 0.0 folds IEEE -0.0 to +0.0 (engines disagree on the
                  # sign of a rounded -1e-4 sum; bytewise hash parity needs one)
                  (F.round(F.sum(logr), 3) + F.lit(0.0)).alias("logw"))
-            .withColumnRenamed("id", id_col))
+            .withColumnRenamed("id", "doc_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -637,8 +622,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_redact(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Scrub PII before training: replace emails, dotted-quad IPs and
     phone numbers with typed placeholder tokens, and count what was
     removed per class (the audit columns a compliance review needs).
@@ -649,18 +633,17 @@ def pii_redact(df: DataFrame, id_col: str = "doc_id",
     column expressions — ``regexp_extract_all`` + chained
     ``regexp_replace`` — zero Python in the hot path, no shuffle at all.
     """
-    out = F.col(text_col)
+    out = F.col("text")
     counts = []
     for name, pat, repl in PII_PATTERNS:
         counts.append(
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0)))
+            F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)))
             .cast("long").alias(f"n_{name}"))
         out = F.regexp_replace(out, pat, repl)
-    return df.select(F.col(id_col), *counts, out.alias("redacted"))
+    return df.select(F.col("doc_id"), *counts, out.alias("redacted"))
 
 
-def compression_signal(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
+def compression_signal(df: DataFrame,
                        level: int = 6) -> DataFrame:
     """zlib compressibility as a quality signal (the Gopher/CCNet-family
     heuristic): highly compressible text is repetitive boilerplate,
@@ -688,10 +671,10 @@ def compression_signal(df: DataFrame, id_col: str = "doc_id",
         return texts.map(
             lambda t: len(zlib.compress(t.encode("utf-8"), level)))
 
-    return (df.filter(F.octet_length(text_col) > 0)
-            .select(F.col(id_col),
-                    F.octet_length(text_col).cast("long").alias("n_bytes"),
-                    comp_len(F.col(text_col)).alias("comp_bytes"))
+    return (df.filter(F.octet_length("text") > 0)
+            .select(F.col("doc_id"),
+                    F.octet_length("text").cast("long").alias("n_bytes"),
+                    comp_len(F.col("text")).alias("comp_bytes"))
             .withColumn("ratio_e6", F.expr(
                 "(comp_bytes * 1000000) div n_bytes")))
 
@@ -700,25 +683,25 @@ def compression_signal(df: DataFrame, id_col: str = "doc_id",
 _GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def _gopher_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def _gopher_counts(df: DataFrame) -> DataFrame:
     """All Gopher rule counts appended as ``__``-prefixed columns.
     The token/line arrays are materialized in their own projections and
     the HOF lambdas reference the attributes (an inlined split()
     re-evaluates PER ELEMENT)."""
-    d = (df.withColumn("__toks", F.split(F.lower(F.col(text_col)), " "))
-         .withColumn("__lines", F.split(F.col(text_col), "\n")))
+    d = (df.withColumn("__toks", F.split(F.lower(F.col("text")), " "))
+         .withColumn("__lines", F.split(F.col("text"), "\n")))
     return (d
             .withColumn("__n_words", F.size("__toks").cast("long"))
             .withColumn("__sum_chars", F.aggregate(
                 F.transform("__toks", lambda x: F.length(x).cast("long")),
                 F.lit(0).cast("long"), lambda acc, x: acc + x))
             .withColumn("__n_hash",
-                        (F.length(text_col)
-                         - F.length(F.expr(f"replace({text_col}, '#', '')")))
+                        (F.length("text")
+                         - F.length(F.expr(f"replace(text, '#', '')")))
                         .cast("long"))
             .withColumn("__n_ell", F.expr(
-                f"CAST((length({text_col}) - "
-                f"length(replace({text_col}, '...', ''))) div 3 AS BIGINT)"))
+                f"CAST((length(text) - "
+                f"length(replace(text, '...', ''))) div 3 AS BIGINT)"))
             .withColumn("__n_alpha",
                         F.size(F.filter("__toks",
                                         lambda x: x.rlike("[a-zA-Z]")))
@@ -747,8 +730,7 @@ _GOPHER_PASS_SQL = (
     " AND (__n_ellline * 1000000) div __n_lines < 300000 AS INT)")
 
 
-def gopher_rules(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def gopher_rules(df: DataFrame) -> DataFrame:
     """Gopher-style quality rule battery (Rae et al. 2021, App. A1.1):
     word count 50..100k, mean word length 3..10, symbol-to-word ratio
     (``#`` + ``...``) <= 0.1, >= 80% of words contain a letter, >= 2
@@ -760,9 +742,9 @@ def gopher_rules(df: DataFrame, id_col: str = "doc_id",
     compares scaled integers, never doubles.  Scale shape: one narrow
     projection chain, zero shuffle, pure JVM codegen.
     """
-    counts = _gopher_counts(df.select(id_col, text_col), text_col)
+    counts = _gopher_counts(df.select("doc_id", "text"))
     return counts.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__n_words").alias("n_words"),
         F.expr("(__sum_chars * 1000000) div __n_words")
         .alias("mean_word_len_e6"),
@@ -781,26 +763,23 @@ def gopher_rules(df: DataFrame, id_col: str = "doc_id",
 _BADWORDS = ("slow", "dup", "error")
 
 
-def badwords_gate(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  badwords: tuple[str, ...] = _BADWORDS,
-                  max_rate_e6: int = 40000) -> DataFrame:
+def badwords_gate(df: DataFrame) -> DataFrame:
     """C4-style blocklist gate: per-doc blocklisted-token count and rate
-    (exact integer micro-units), plus ``kept = rate <= max_rate_e6``.
+    (exact integer micro-units), plus ``kept = rate <= 40000``.
     Token-set membership (not substring match) — 'class' never trips a
     'ass' entry.  The blocklist is a compile-time literal set folded into
     the codegen'd filter, so at 100 TB this is a narrow zero-shuffle scan
     with no join against a wordlist table.
     """
-    base = df.select(F.col(id_col),
-                     F.split(F.lower(F.col(text_col)), " ").alias("__toks"))
+    base = df.select(F.col("doc_id"),
+                     F.split(F.lower(F.col("text")), " ").alias("__toks"))
     counts = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__toks").cast("long").alias("n_tokens"),
-        F.size(F.filter("__toks", _in_set(badwords)))
+        F.size(F.filter("__toks", _in_set(_BADWORDS)))
         .cast("long").alias("n_bad"))
     return counts.select(
-        F.col(id_col), "n_tokens", "n_bad",
+        F.col("doc_id"), "n_tokens", "n_bad",
         F.expr("(n_bad * 1000000) div n_tokens").alias("bad_rate_e6"),
-        F.expr(f"CAST((n_bad * 1000000) div n_tokens <= {max_rate_e6} "
+        F.expr(f"CAST((n_bad * 1000000) div n_tokens <= 40000 "
                "AS INT)").alias("kept"))

@@ -24,11 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 20,
-              k1: float = 1.2, b: float = 0.75,
-              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: list[str],
+              k: int = 20) -> DataFrame:
     """Okapi BM25 top-k: ``idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))``
-    summed over matched query terms; ``idf = ln(1 + (N-df+0.5)/(df+0.5))``.
+    summed over matched query terms, with k1 = 1.2 and b = 0.75;
+    ``idf = ln(1 + (N-df+0.5)/(df+0.5))``.
 
     Returns ``(doc_id, n_terms, score_e4)`` — the score floor-scaled to
     1e-4 ints (the engine-portable composite recipe), ranked by
@@ -39,12 +39,12 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 20,
     terms = [t.lower() for t in query_terms]
 
     toks = docs.select(
-        F.col(id_col),
-        F.size(F.split(F.lower(F.col(text_col)), " ")).alias("dl"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
+        F.col("doc_id"),
+        F.size(F.split(F.lower(F.col("text")), " ")).alias("dl"),
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
     ).filter(F.col("term").isin(terms))          # prune BEFORE the shuffle
 
-    tf = toks.groupBy(id_col, "term").agg(
+    tf = toks.groupBy("doc_id", "term").agg(
         F.count("*").cast("double").alias("tf"),
         F.first("dl").cast("double").alias("dl"))
 
@@ -53,29 +53,28 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 20,
 
     stats = docs.agg(
         F.count("*").cast("double").alias("n_docs"),
-        F.avg(F.size(F.split(F.lower(F.col(text_col)), " "))).alias("avgdl"))
+        F.avg(F.size(F.split(F.lower(F.col("text")), " "))).alias("avgdl"))
 
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))
+    k1, b = 1.2, 0.75
     tf_norm = (F.col("tf") * (k1 + 1)
                / (F.col("tf") + k1 * (1 - b + b * F.col("dl")
                                       / F.col("avgdl"))))
     scored = (tf
               .join(F.broadcast(dfs), "term")
               .crossJoin(F.broadcast(stats))
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg(F.count("*").cast("long").alias("n_terms"),
                    F.sum(idf * tf_norm).alias("score")))
     return (scored
-            .select(id_col, "n_terms",
+            .select("doc_id", "n_terms",
                     F.floor(F.col("score") * 1e4 + F.lit(0.5))
                     .cast("long").alias("score_e4"))
-            .orderBy(F.col("score_e4").desc(), F.col(id_col))
+            .orderBy(F.col("score_e4").desc(), F.col("doc_id"))
             .limit(k))
 
-def tfidf_topterms(docs: DataFrame, k: int = 3,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def tfidf_topterms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k TF-IDF terms — the keyword/feature-extraction
     twin of ``bm25_topk`` (that one ranks docs for a query; this one
     summarises every doc): ``tf * ln((N+1)/(df+1))``, the smoothed IDF
@@ -93,9 +92,9 @@ def tfidf_topterms(docs: DataFrame, k: int = 3,
     engine-portable composite recipe), ties broken by word.
     """
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), " ")).alias("word"))
-    tf = toks.groupBy(id_col, "word").agg(
+        F.col("doc_id"),
+        F.explode(F.split(F.col("text"), " ")).alias("word"))
+    tf = toks.groupBy("doc_id", "word").agg(
         F.count("*").cast("double").alias("tf"))
     # tf feeds BOTH the df aggregation and the scoring join; without a
     # materialization Catalyst re-derives it from a second corpus
@@ -118,9 +117,9 @@ def tfidf_topterms(docs: DataFrame, k: int = 3,
         F.struct((-score).alias("ns"), F.col("word")))), 1, k)
     return (tf.join(dfreq, "word")
             .crossJoin(F.broadcast(n))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(top.alias("__top"))
-            .select(id_col, F.explode("__top").alias("t"))
-            .select(id_col, F.col("t.word").alias("word"),
+            .select("doc_id", F.explode("__top").alias("t"))
+            .select("doc_id", F.col("t.word").alias("word"),
                     F.floor(-F.col("t.ns") * 1e6).cast("long")
                     .alias("tfidf_e6")))

@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 _HOUR_BUCKET = "timestampdiff(HOUR, timestamp'1970-01-01 00:00:00', ts)"
 
 
-def downsample_gapfill(events: DataFrame,
-                       dim_col: str = "event_type") -> DataFrame:
+def downsample_gapfill(events: DataFrame) -> DataFrame:
     """Per (dim, hour-bucket) event count + value sum over a DENSE
     hour grid spanning [min(ts), max(ts)]: buckets with no events for
     a dim appear with n_events=0 / sum_value=0.0.
@@ -48,24 +47,23 @@ def downsample_gapfill(events: DataFrame,
     """
     hr = F.expr(_HOUR_BUCKET).alias("hr")
     agg = (events
-           .groupBy(F.col(dim_col), hr)
+           .groupBy(F.col("event_type"), hr)
            .agg(F.count("*").alias("n_events"),
                 F.sum("value").alias("sum_value")))
     span = events.agg(F.expr(f"min({_HOUR_BUCKET})").alias("lo"),
                       F.expr(f"max({_HOUR_BUCKET})").alias("hi"))
-    grid = (events.select(dim_col).distinct()
+    grid = (events.select("event_type").distinct()
             .crossJoin(F.broadcast(span))
-            .select(dim_col,
+            .select("event_type",
                     F.explode(F.sequence("lo", "hi")).alias("hr")))
-    return (grid.join(F.broadcast(agg), [dim_col, "hr"], "left")
-            .select(dim_col, "hr",
+    return (grid.join(F.broadcast(agg), ["event_type", "hr"], "left")
+            .select("event_type", "hr",
                     F.coalesce("n_events", F.lit(0)).alias("n_events"),
                     F.round(F.coalesce("sum_value", F.lit(0.0)), 2)
                      .alias("sum_value")))
 
 
-def moving_window(events: DataFrame, window: int = 4,
-                  dim_col: str = "event_type") -> DataFrame:
+def moving_window(events: DataFrame, window: int = 4) -> DataFrame:
     """Trailing ``window``-hour rolling value sum per dim — the
     continuous-aggregate consumer the gap fill exists FOR: only on a
     dense grid does a ROWS frame mean "last N hours"; on a sparse one
@@ -81,9 +79,9 @@ def moving_window(events: DataFrame, window: int = 4,
     (sliding frames accumulate in different orders per engine; avg/4
     lands exactly on .5 at 3 dp)."""
     from pyspark.sql import Window
-    w = (Window.partitionBy(dim_col).orderBy("hr")
+    w = (Window.partitionBy("event_type").orderBy("hr")
          .rowsBetween(-(window - 1), 0))
-    return (downsample_gapfill(events, dim_col)
+    return (downsample_gapfill(events)
             .withColumn(
                 "win_sum_e2",
                 F.floor(F.sum("sum_value").over(w) * 100 + F.lit(0.5))

@@ -60,15 +60,14 @@ UNK_ID = 0
 # distributed training statistics
 # ---------------------------------------------------------------------------
 
-def word_counts(df: DataFrame, text_col: str = "text",
-                top_k: int = 32768) -> DataFrame:
+def word_counts(df: DataFrame, top_k: int = 32768) -> DataFrame:
     """Corpus → the top-K (word, count) table that BPE training
     consumes.  One hash-agg shuffle; the top-K is a TakeOrdered (never
     a full sort) with a (count desc, word asc) deterministic order.
     K bounds the driver-side model fit regardless of corpus size."""
     return (df
             .select(F.explode(
-                F.regexp_extract_all(text_col, F.lit(PRETOKEN_PATTERN), 0)
+                F.regexp_extract_all("text", F.lit(PRETOKEN_PATTERN), 0)
             ).alias("word"))
             .groupBy("word").agg(F.count("*").alias("n"))
             .orderBy(F.col("n").desc(), F.col("word"))
@@ -181,8 +180,7 @@ def bpe_encode_text(text: str, ranks: dict, vocab: dict,
 # distributed encode
 # ---------------------------------------------------------------------------
 
-def bpe_encode(df: DataFrame, merges, vocab, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def bpe_encode(df: DataFrame, merges, vocab) -> DataFrame:
     """Corpus → (id, token_ids, n_tokens) with the merge-rank model
     broadcast into an Arrow-batched pandas UDF.  Narrow (zero shuffle);
     a per-batch word cache amortizes the merge loop over the heavy
@@ -198,13 +196,13 @@ def bpe_encode(df: DataFrame, merges, vocab, id_col: str = "doc_id",
         for pdf in batches:
             ids_out = []
             n_out = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 ids = bpe_encode_text(text or "", ranks, vocab_l, cache)
                 ids_out.append(ids)
                 n_out.append(len(ids))
-            yield pd.DataFrame({id_col: pdf[id_col],
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
                                 "token_ids": ids_out,
                                 "n_tokens": n_out})
 
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} string, token_ids array<int>, n_tokens int")
+    return df.select("doc_id", "text").mapInPandas(
+        run, schema="doc_id string, token_ids array<int>, n_tokens int")

@@ -1720,15 +1720,15 @@ def dedup_prefix_exact(spark, sf_dir):
                                      t_num=19, t_den=20)
 
 
-def _minhash_sql(k: int = 8, bands: int = 4, src: str = "documents") -> str:
-    r = k // bands
+def _minhash_sql(src: str = "documents") -> str:
+    r = dedup.K // dedup.BANDS
     mh = ", ".join(
         f"list_min(list_transform(sh, x -> sha256('{s}:' || x))) AS mh{s}"
-        for s in range(k))
+        for s in range(dedup.K))
     band_exprs = ", ".join(
         "sha256(" + " || '|' || ".join(f"mh{b * r + i}" for i in range(r))
-        + f") AS band{b}" for b in range(bands))
-    band_list = ", ".join(f"band{b}" for b in range(bands))
+        + f") AS band{b}" for b in range(dedup.BANDS))
+    band_list = ", ".join(f"band{b}" for b in range(dedup.BANDS))
     return f"""
 WITH toks AS (
   SELECT doc_id, string_split(lower(text), ' ') AS t FROM {src}
@@ -1740,7 +1740,7 @@ WITH toks AS (
 bandsx AS (SELECT doc_id, {band_exprs} FROM sig),
 bexp AS (
   SELECT doc_id, u.band_idx, u.band_hash FROM bandsx,
-  LATERAL (SELECT * FROM (VALUES {", ".join(f"({b}, band{b})" for b in range(bands))})
+  LATERAL (SELECT * FROM (VALUES {", ".join(f"({b}, band{b})" for b in range(dedup.BANDS))})
            AS v(band_idx, band_hash)) u
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1750,7 +1750,7 @@ FROM bexp a JOIN bexp b
 """
 
 
-def _verified_pairs_sql(src: str = "documents", thr: float = 0.3) -> str:
+def _verified_pairs_sql(src: str = "documents") -> str:
     """MinHash-LSH candidates second-rung-verified by exact 3-gram Jaccard
     (the twin of ``dedup.minhash_lsh_pairs(verify_threshold=...)``)."""
     return f"""
@@ -1768,7 +1768,7 @@ vov AS (SELECT c.doc_a, c.doc_b, count(*) AS nc
 SELECT v.doc_a, v.doc_b FROM vov v
 JOIN vsizes sa ON sa.doc_id = v.doc_a
 JOIN vsizes sb ON sb.doc_id = v.doc_b
-WHERE v.nc / (sa.n + sb.n - v.nc) >= {thr}
+WHERE v.nc / (sa.n + sb.n - v.nc) >= 0.3
 """
 
 
@@ -1983,13 +1983,13 @@ def dedup_components_incremental(spark, sf_dir):
                          F.col("comp").alias("component_id"))
 
 
-def _simhash_sql(bits: int = 32) -> str:
+def _simhash_sql() -> str:
     sums = ", ".join(
         f"CAST(sum(((h >> {i}) & 1) * 2 - 1) AS BIGINT) AS s{i}"
-        for i in range(bits))
+        for i in range(32))
     combine = " + ".join(
         f"(CASE WHEN s{i} > 0 THEN CAST({2**i} AS BIGINT) ELSE 0 END)"
-        for i in range(bits))
+        for i in range(32))
     return f"""
 WITH tok AS (
   SELECT doc_id AS id, unnest(string_split(lower(text), ' ')) AS t
@@ -2110,25 +2110,25 @@ def _sql_cos(a_emb: str, b_emb: str, dim: int) -> str:
             f"{b_emb}, x -> CAST(x AS DOUBLE) * x))))")
 
 
-def _ann_lsh_sql(dim=_ANN_DIM, n_planes=_ANN_PLANES, bands=_ANN_BANDS,
-                 k=_ANN_K, n_queries=_ANN_NQ) -> str:
+def _ann_lsh_sql() -> str:
     """DuckDB recomputation of lsh_ann_topk: the same sha256-seeded ±1
     hyperplanes (similarity.plane_vector) inlined as list literals, sign
     bits packed into the identical little-endian band values, OR-of-bands
     candidate join, exact cosine re-rank."""
-    r = n_planes // bands
-    planes = [similarity.plane_vector(p, dim, seed=1)
-              for p in range(n_planes)]
+    r = _ANN_PLANES // _ANN_BANDS
+    planes = [similarity.plane_vector(p, _ANN_DIM, seed=1)
+              for p in range(_ANN_PLANES)]
     dot_cols = ",\n         ".join(
-        f"list_sum(list_transform(range(1, {dim + 1}), i -> "
+        f"list_sum(list_transform(range(1, {_ANN_DIM + 1}), i -> "
         f"CAST(embedding[i] AS DOUBLE) * "
         f"([{', '.join(f'{c:.1f}' for c in planes[p])}])[i])) AS d{p}"
-        for p in range(n_planes))
+        for p in range(_ANN_PLANES))
     band_cols = ",\n         ".join(
         " + ".join(f"{1 << t} * (CASE WHEN d{b * r + t} >= 0 "
                    f"THEN 1 ELSE 0 END)" for t in range(r))
-        + f" AS band{b}" for b in range(bands))
-    band_join = " OR ".join(f"q.band{b} = c.band{b}" for b in range(bands))
+        + f" AS band{b}" for b in range(_ANN_BANDS))
+    band_join = " OR ".join(f"q.band{b} = c.band{b}"
+                            for b in range(_ANN_BANDS))
     return f"""
 WITH dots AS (
   SELECT vec_id, embedding,
@@ -2142,10 +2142,10 @@ cand AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          q.embedding AS qe, c.embedding AS ce
   FROM sigs q JOIN sigs c
-    ON q.vec_id < {n_queries} AND c.vec_id != q.vec_id
+    ON q.vec_id < {_ANN_NQ} AND c.vec_id != q.vec_id
    AND ({band_join})),
 scored AS (
-  SELECT query_id, neighbor_id, round({_sql_cos('qe', 'ce', dim)}, 6) AS cosine
+  SELECT query_id, neighbor_id, round({_sql_cos('qe', 'ce', _ANN_DIM)}, 6) AS cosine
   FROM cand),
 ranked AS (
   SELECT query_id, neighbor_id, cosine,
@@ -2153,7 +2153,7 @@ ranked AS (
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {_ANN_K}
 """
 
 
@@ -2211,22 +2211,21 @@ WITH init AS (
 {assign('af', 'c2')}"""
 
 
-def _ann_ivf_sql(dim=_ANN_DIM, n_clusters=_ANN_CLUSTERS, nprobe=_ANN_NPROBE,
-                 k=_ANN_K, n_queries=_ANN_NQ, train_where: str = "",
+def _ann_ivf_sql(train_where: str = "",
                  quantized: bool = False) -> str:
     """DuckDB recomputation of ivf_topk: the shared k-means prefix
     (``_ivf_kmeans_cte``), then nprobe nearest clusters per query and an
     exact cosine re-rank — mirroring similarity.ivf_topk."""
     def dist(emb: str, cvec: str) -> str:
-        return _ivf_dist(emb, cvec, dim)
+        return _ivf_dist(emb, cvec, _ANN_DIM)
 
-    return _ivf_kmeans_cte(dim, n_clusters, train_where) + f""",
+    return _ivf_kmeans_cte(_ANN_DIM, _ANN_CLUSTERS, train_where) + f""",
 probes AS (
   SELECT q.vec_id AS query_id, t.cluster, q.embedding AS qv
   FROM embeddings q CROSS JOIN c2 t
-  WHERE q.vec_id < {n_queries}
+  WHERE q.vec_id < {_ANN_NQ}
   QUALIFY row_number() OVER (PARTITION BY q.vec_id
-      ORDER BY {dist('q.embedding', 't.cvec')}, t.cluster) <= {nprobe}),
+      ORDER BY {dist('q.embedding', 't.cvec')}, t.cluster) <= {_ANN_NPROBE}),
 cands AS (
   SELECT p.query_id, a.id AS neighbor_id, p.qv, a.v
   FROM af a JOIN probes p USING (cluster)
@@ -2244,7 +2243,7 @@ qz AS (
   FROM qstaged),
 scored AS (
   SELECT c.query_id, c.neighbor_id,
-         round(CAST(list_sum(list_transform(range(1, ''' + str(dim + 1)
+         round(CAST(list_sum(list_transform(range(1, ''' + str(_ANN_DIM + 1)
  + '''), i -> qa.qvv[i] * qb.qvv[i])) AS DOUBLE)
                / sqrt(CAST(list_sum(list_transform(qa.qvv, x -> x * x))
                            AS DOUBLE)
@@ -2253,7 +2252,7 @@ scored AS (
   FROM cands c JOIN qz qa ON qa.vec_id = c.query_id
                JOIN qz qb ON qb.vec_id = c.neighbor_id),'''
  if quantized else f'''scored AS (
-  SELECT query_id, neighbor_id, round({_sql_cos('qv', 'v', dim)}, 6) AS cosine
+  SELECT query_id, neighbor_id, round({_sql_cos('qv', 'v', _ANN_DIM)}, 6) AS cosine
   FROM cands),'''}
 ranked AS (
   SELECT query_id, neighbor_id, cosine,
@@ -2261,7 +2260,7 @@ ranked AS (
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {_ANN_K}
 """
 
 
@@ -2375,14 +2374,13 @@ def decontaminate(spark, sf_dir):
         _t(spark, sf_dir, "documents"), eval_mod=20, n=3, min_common=2)
 
 
-def _semdedup_sql(dim=_ANN_DIM, n_clusters=_ANN_CLUSTERS,
-                  threshold: float = 0.9) -> str:
+def _semdedup_sql(threshold: float = 0.9) -> str:
     """SemDeDup oracle: the shared k-means recursion, then exact cosine
     over same-cluster pairs."""
-    return _ivf_kmeans_cte(dim, n_clusters) + f""",
+    return _ivf_kmeans_cte(_ANN_DIM, _ANN_CLUSTERS) + f""",
 pairs AS (
   SELECT a.cluster, a.id AS id_a, b.id AS id_b,
-         round({_sql_cos('a.v', 'b.v', dim)}, 6) AS cosine
+         round({_sql_cos('a.v', 'b.v', _ANN_DIM)}, 6) AS cosine
   FROM af a JOIN af b USING (cluster)
   WHERE a.id < b.id)
 SELECT cluster, id_a, id_b, cosine FROM pairs
@@ -2611,15 +2609,13 @@ def _pq_kmeans_cte(s: int, dsub: int, ksub: int) -> str:
 {assign(f'afs{s}', f'c2_s{s}')}"""
 
 
-def _ann_ivf_pq_sql(dim=_ANN_DIM, n_clusters=_ANN_CLUSTERS,
-                    nprobe=_ANN_NPROBE, k=_ANN_K, n_queries=_ANN_NQ,
-                    m=_PQ_M, ksub=_PQ_KSUB, rerank=None) -> str:
+def _ann_ivf_pq_sql(rerank=None) -> str:
     """DuckDB recomputation of ivf_pq_topk: the coarse k-means prefix,
     m per-subspace codebook recursions, code assignment, and candidate
     scoring against the RECONSTRUCTED vectors — mathematically the same
     sum of subspace squared distances the Spark side evaluates via ADC
     lookup tables (round(,6) absorbs the summation-grouping ulp)."""
-    dsub = dim // m
+    dsub = _ANN_DIM // _PQ_M
     if rerank:
         tail = f"""short AS (
   SELECT query_id, neighbor_id, qv FROM (
@@ -2628,7 +2624,7 @@ def _ann_ivf_pq_sql(dim=_ANN_DIM, n_clusters=_ANN_CLUSTERS,
   WHERE rn <= {rerank}),
 rr AS (
   SELECT s.query_id, s.neighbor_id,
-         round({_sql_cos('s.qv', 'e.embedding', dim)}, 6) AS cosine
+         round({_sql_cos('s.qv', 'e.embedding', _ANN_DIM)}, 6) AS cosine
   FROM short s JOIN embeddings e ON e.vec_id = s.neighbor_id),
 ranked AS (
   SELECT query_id, neighbor_id, cosine,
@@ -2636,7 +2632,7 @@ ranked AS (
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM rr)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {_ANN_K}
 """
     else:
         tail = f"""ranked AS (
@@ -2645,23 +2641,25 @@ FROM ranked WHERE rank <= {k}
                             ORDER BY dist, neighbor_id) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dist
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {_ANN_K}
 """
-    subs = ",\n".join(_pq_kmeans_cte(s, dsub, ksub) for s in range(m))
-    code_joins = " ".join(f"JOIN afs{s} x{s} USING (id)" for s in range(1, m))
-    recon = " || ".join(f"cb{s}.cvec" for s in range(m))
+    subs = ",\n".join(_pq_kmeans_cte(s, dsub, _PQ_KSUB)
+                      for s in range(_PQ_M))
+    code_joins = " ".join(f"JOIN afs{s} x{s} USING (id)"
+                          for s in range(1, _PQ_M))
+    recon = " || ".join(f"cb{s}.cvec" for s in range(_PQ_M))
     cb_joins = " ".join(
         f"JOIN c2_s{s} cb{s} ON cb{s}.code = "
-        + (f"x{s}.code" if s else "x0.code") for s in range(m))
-    return _ivf_kmeans_cte(dim, n_clusters) + f""",
+        + (f"x{s}.code" if s else "x0.code") for s in range(_PQ_M))
+    return _ivf_kmeans_cte(_ANN_DIM, _ANN_CLUSTERS) + f""",
 {subs},
 probes AS (
   SELECT q.vec_id AS query_id, t.cluster, q.embedding AS qv
   FROM embeddings q CROSS JOIN c2 t
-  WHERE q.vec_id < {n_queries}
+  WHERE q.vec_id < {_ANN_NQ}
   QUALIFY row_number() OVER (PARTITION BY q.vec_id
-      ORDER BY {_ivf_dist('q.embedding', 't.cvec', dim)}, t.cluster)
-      <= {nprobe}),
+      ORDER BY {_ivf_dist('q.embedding', 't.cvec', _ANN_DIM)}, t.cluster)
+      <= {_ANN_NPROBE}),
 cands AS (
   SELECT p.query_id, a.id AS neighbor_id, p.qv
   FROM af a JOIN probes p USING (cluster)
@@ -2671,7 +2669,7 @@ recon AS (
   FROM afs0 x0 {code_joins} {cb_joins}),
 scored AS (
   SELECT c.query_id, c.neighbor_id, c.qv,
-         round({_ivf_dist('c.qv', 'r.rv', dim)}, 6) AS dist
+         round({_ivf_dist('c.qv', 'r.rv', _ANN_DIM)}, 6) AS dist
   FROM cands c JOIN recon r ON r.id = c.neighbor_id),
 {tail}"""
 
@@ -3105,22 +3103,22 @@ def warc_anchor_text(spark, sf_dir):
     return anchor_texts(docs)
 
 
-def _pagerank_sql(iters: int = 3, d: float = 0.85) -> str:
+def _pagerank_sql() -> str:
     """DuckDB recomputes the SAME fixed-iteration power method from the
     committed edge-list golden (chained CTEs, one per iteration)."""
     prev, ctes = "r0", []
     step = """
 {name} AS (
   SELECT n.host,
-         (SELECT (1.0 - {d}) / n FROM params)
-         + {d} * COALESCE(s.acc, 0.0) AS rank
+         (SELECT (1.0 - 0.85) / n FROM params)
+         + 0.85 * COALESCE(s.acc, 0.0) AS rank
   FROM nodes n LEFT JOIN (
     SELECT e.dst_host AS host, sum(r.rank / o.deg) AS acc
     FROM e JOIN {prev} r ON r.host = e.src_host
            JOIN outdeg o ON o.src_host = e.src_host
     GROUP BY e.dst_host) s ON s.host = n.host)"""
-    for i in range(1, iters + 1):
-        ctes.append(step.format(name=f"r{i}", prev=prev, d=d))
+    for i in range(1, 4):
+        ctes.append(step.format(name=f"r{i}", prev=prev))
         prev = f"r{i}"
     return f"""
 WITH e AS (SELECT src_host, dst_host

@@ -21,14 +21,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 LINE_SCHEMA = "url string, text string, lang string"
 
 
-def lines_to_documents(lines: DataFrame, value_col: str = "value",
-                       line_col: str = "line_no") -> DataFrame:
+def lines_to_documents(lines: DataFrame) -> DataFrame:
     """(line_no, value) → documents-contract rows
     (doc_id, url, lang, text, line_no); invalid lines are absent here
     (see :func:`error_lines`).  doc_id is the sha256 of the URL — the
     WARC source's identity rule, so both mouths dedup consistently.
     """
-    parsed = lines.withColumn("j", F.from_json(F.col(value_col),
+    parsed = lines.withColumn("j", F.from_json(F.col("value"),
                                                LINE_SCHEMA))
     valid = (parsed
              .filter(F.col("j").isNotNull()
@@ -38,17 +37,16 @@ def lines_to_documents(lines: DataFrame, value_col: str = "value",
                      F.col("j.url").alias("url"),
                      F.col("j.lang").alias("lang"),
                      F.col("j.text").alias("text"),
-                     F.col(line_col).alias("line_no")))
+                     F.col("line_no")))
     w = Window.partitionBy("doc_id").orderBy(F.desc("line_no"))
     return (valid.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1).drop("__rn"))
 
 
-def error_lines(lines: DataFrame, value_col: str = "value",
-                line_col: str = "line_no") -> DataFrame:
+def error_lines(lines: DataFrame) -> DataFrame:
     """(line_no, raw, reason) for every line that did not become a
     document: unparseable JSON, or missing url/text."""
-    parsed = lines.withColumn("j", F.from_json(F.col(value_col),
+    parsed = lines.withColumn("j", F.from_json(F.col("value"),
                                                LINE_SCHEMA))
     reason = (F.when(F.col("j").isNull(), "unparseable")
               .when(F.col("j.url").isNull(), "missing url")
@@ -57,6 +55,6 @@ def error_lines(lines: DataFrame, value_col: str = "value",
             .filter(F.col("j").isNull()
                     | F.col("j.url").isNull()
                     | F.col("j.text").isNull())
-            .select(F.col(line_col).alias("line_no"),
-                    F.col(value_col).alias("raw"),
+            .select(F.col("line_no"),
+                    F.col("value").alias("raw"),
                     reason.alias("reason")))

@@ -46,7 +46,13 @@ class TableIO:
         os.makedirs(base_path, exist_ok=True)
 
     def path(self, name: str) -> str:
-        return os.path.join(self.base_path, name)
+        """The table's directory.  A ``replace_table`` that crashed between
+        its two renames leaves only ``<name>.bak``: it is renamed back
+        here, before anything reads, writes or swaps the table."""
+        p = os.path.join(self.base_path, name)
+        if not os.path.isdir(p) and os.path.isdir(p + ".bak"):
+            os.rename(p + ".bak", p)
+        return p
 
     def exists(self, name: str) -> bool:
         """True only when the table holds actual data files.  A directory
@@ -156,24 +162,24 @@ class TableIO:
          .partitionBy(*partition_by)
          .parquet(self.path(name)))
 
-    def compact(self, name: str, target_files: int = 1) -> dict:
-        """Rewrite an append-grown table into ``target_files`` files —
-        the small-files maintenance every streaming append sink needs
+    def compact(self, name: str) -> dict:
+        """Rewrite an append-grown table into one file — the small-files
+        maintenance every streaming append sink needs
         (each micro-batch leaves a file; a year of batches leaves a
         scan with a year of footer fetches).  Content-preserving by
         construction: the staging copy is COMPLETELY written, row-count
         re-checked, then swapped in via the crash-safe
         ``replace_table`` two-rename hop (a crash leaves the original
-        or a recoverable ``.bak``, never a mix)."""
+        or its ``.bak``, which ``path`` restores, never a mix)."""
         df = self.read(name)
         if df is None:
             return {"files_before": 0, "files_after": 0, "rows": 0}
         before = sum(len(fs) for _, _, fs in os.walk(self.path(name)))
         n_rows = df.count()
         staging = name + "__compacting"
-        self.overwrite(df.coalesce(target_files), staging)
-        assert self.read(staging).count() == n_rows, \
-            f"compaction row-count mismatch on {name}"
+        self.overwrite(df.coalesce(1), staging)
+        if self.read(staging).count() != n_rows:
+            raise RuntimeError(f"compaction row-count mismatch on {name}")
         self.replace_table(staging, name)
         after = sum(len(fs) for _, _, fs in os.walk(self.path(name)))
         return {"files_before": before, "files_after": after,
@@ -196,9 +202,10 @@ class TableIO:
     def replace_table(self, src: str, dst: str) -> None:
         """Swap a fully-written table over an existing one (compaction
         commit step).  Parquet backend: two directory renames with a
-        ``.bak`` hop — a crash between them leaves either the original or
-        a recoverable ``<dst>.bak``, never a half-written mix (the src
-        snapshot is written COMPLETELY before this is called)."""
+        ``.bak`` hop — a crash between them leaves the original as
+        ``<dst>.bak``, which the next ``path(dst)`` renames back, never a
+        half-written mix (the src snapshot is written COMPLETELY before
+        this is called)."""
         p_src, p_dst = self.path(src), self.path(dst)
         bak = p_dst + ".bak"
         shutil.rmtree(bak, ignore_errors=True)

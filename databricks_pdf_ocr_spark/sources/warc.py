@@ -173,12 +173,11 @@ def iter_warc_stream(f: io.IOBase,
         yield {"headers": headers, "body": body, "error": None}
 
 
-def parse_warc(data: bytes,
-               max_record_bytes: int = DEFAULT_MAX_RECORD) -> Iterator[dict]:
+def parse_warc(data: bytes) -> Iterator[dict]:
     """Yield ``{headers: dict, body: bytes}`` per record from in-memory
     bytes (plain or gzip, single- or multi-member) — thin wrapper over
     the streaming reader for callers that already hold the segment."""
-    yield from iter_warc_stream(io.BytesIO(data), max_record_bytes)
+    yield from iter_warc_stream(io.BytesIO(data))
 
 
 def _dechunk(body: bytes) -> bytes:
@@ -339,8 +338,7 @@ def decode_payload(payload: bytes | None, content_type: str | None) -> str:
                           errors="replace")
 
 
-def decoded_text(payload_col: str = "payload",
-                 ctype_col: str = "http_content_type") -> Column:
+def decoded_text(ctype_col: str = "http_content_type") -> Column:
     """Column expr: charset-aware lossy text of an HTTP entity payload.
     Arrow-batched pandas UDF (the JVM-side ``F.decode`` raises
     MALFORMED_CHARACTER_CODING under ANSI mode on any invalid byte)."""
@@ -351,7 +349,7 @@ def decoded_text(payload_col: str = "payload",
             [decode_payload(p, c) for p, c in zip(payload, ctype)],
             dtype="object")
 
-    return _decode(F.col(payload_col), F.col(ctype_col))
+    return _decode(F.col("payload"), F.col(ctype_col))
 
 
 def _local_dir(path: str) -> str | None:
@@ -369,9 +367,7 @@ def _local_dir(path: str) -> str | None:
 
 
 def read_warc_segments(spark: SparkSession, path: str,
-                       glob: str = "*.warc.gz",
-                       max_record_bytes: int = DEFAULT_MAX_RECORD
-                       ) -> DataFrame:
+                       glob: str = "*.warc.gz") -> DataFrame:
     """Segment files → one row per WARC record (WARC_RECORD_DDL).
 
     Plan: binaryFile scan (one task per segment — gzip is unsplittable,
@@ -386,12 +382,11 @@ def read_warc_segments(spark: SparkSession, path: str,
         paths = (spark.read.format("binaryFile")
                  .option("pathGlobFilter", glob).load(path)
                  .select("path"))
-        return warc_records_from_paths(
-            paths, max_record_bytes=max_record_bytes)
+        return warc_records_from_paths(paths)
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", glob).load(path)
              .select("path", "content"))
-    return warc_records(files, max_record_bytes=max_record_bytes)
+    return warc_records(files)
 
 
 _OUT_COLS = ("segment", "record_id", "warc_type", "target_uri", "warc_date",
@@ -399,8 +394,8 @@ _OUT_COLS = ("segment", "record_id", "warc_type", "target_uri", "warc_date",
              "parse_ok", "error_message")
 
 
-def _segment_rows(seg: str, stream: io.IOBase, out: dict[str, list],
-                  max_record_bytes: int) -> None:
+def _segment_rows(seg: str, stream: io.IOBase,
+                  out: dict[str, list]) -> None:
     """Drain one segment stream into the record-table column lists.
     Streaming: one record in memory at a time; oversize records and a
     corrupt tail become error rows (records before the corruption are
@@ -411,7 +406,7 @@ def _segment_rows(seg: str, stream: io.IOBase, out: dict[str, list],
             out[k].append(v)
 
     try:
-        for rec in iter_warc_stream(stream, max_record_bytes):
+        for rec in iter_warc_stream(stream):
             h = rec["headers"]
             if rec["error"] is not None:            # oversize body, skipped
                 emit(h.get("warc-record-id"), h.get("warc-type"),
@@ -431,26 +426,22 @@ def _segment_rows(seg: str, stream: io.IOBase, out: dict[str, list],
              False, f"{type(e).__name__}: {e}")
 
 
-def warc_records(files: DataFrame, path_col: str = "path",
-                 content_col: str = "content",
-                 max_record_bytes: int = DEFAULT_MAX_RECORD) -> DataFrame:
+def warc_records(files: DataFrame) -> DataFrame:
     """(path, content-bytes) rows → record table.  The compressed
     segment is in memory (binaryFile's unit); inflation is streamed."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_importers()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in _OUT_COLS}
-            for seg, data in zip(pdf[path_col], pdf[content_col]):
+            for seg, data in zip(pdf["path"], pdf["content"]):
                 data = bytes(data) if data is not None else b""
-                _segment_rows(seg, io.BytesIO(data), out, max_record_bytes)
+                _segment_rows(seg, io.BytesIO(data), out)
             yield pd.DataFrame(out)
 
     return files.mapInPandas(run, schema=WARC_RECORD_DDL)
 
 
-def warc_records_from_paths(paths: DataFrame, path_col: str = "path",
-                            max_record_bytes: int = DEFAULT_MAX_RECORD
-                            ) -> DataFrame:
+def warc_records_from_paths(paths: DataFrame) -> DataFrame:
     """(path) rows → record table, each task streaming its segment
     straight from the posix filesystem: neither the compressed nor the
     inflated segment is ever whole in memory."""
@@ -458,11 +449,11 @@ def warc_records_from_paths(paths: DataFrame, path_col: str = "path",
         drop_zip_importers()
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in _OUT_COLS}
-            for seg in pdf[path_col]:
+            for seg in pdf["path"]:
                 local = _local_dir(seg)
                 try:
                     with open(local, "rb") as f:
-                        _segment_rows(seg, f, out, max_record_bytes)
+                        _segment_rows(seg, f, out)
                 except OSError as e:
                     for k, v in zip(_OUT_COLS,
                                     (seg, None, None, None, None, None,

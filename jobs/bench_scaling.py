@@ -29,6 +29,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+#: while the host ceiling is below --min-ceiling: seconds between probes,
+#: and the below-ceiling probes after which the run gives up
+PROBE_WAIT_SEC, MAX_PROBES = 90, 20
+
 
 def build_zip() -> str:
     import zipfile
@@ -42,14 +46,14 @@ def build_zip() -> str:
     return str(zpath)
 
 
-def materialize_input(n_docs: int, seed: int = 42) -> str:
-    path = f"/tmp/spark_graft_scale_heavy4_{seed}_{n_docs}"
+def materialize_input(n_docs: int) -> str:
+    path = f"/tmp/spark_graft_scale_heavy4_42_{n_docs}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from databricks_pdf_ocr_spark import fixtures
         from databricks_pdf_ocr_spark.session import get_spark
         spark = get_spark(master="local[16]", app_name="gen-input",
                           shuffle_partitions=16)
-        fixtures.fixture_df(spark, seed, n_docs, fixtures.BENCH_HEAVY,
+        fixtures.fixture_df(spark, 42, n_docs, fixtures.BENCH_HEAVY,
                             n_partitions=max(64, n_docs // 160)) \
             .write.mode("overwrite").parquet(path)
         spark.stop()
@@ -222,12 +226,6 @@ def main() -> int:
                          "ceiling is below this — a hosed window can't "
                          "produce meaningful engine numbers, so don't burn "
                          "a multi-minute spark pair proving it")
-    ap.add_argument("--wait-sec", type=int, default=90,
-                    help="sleep between ceiling probes while below "
-                         "--min-ceiling")
-    ap.add_argument("--max-probes", type=int, default=20,
-                    help="give up after this many below-ceiling probes")
-    ap.add_argument("--tag", default="r")
     ap.add_argument("--salt", action="store_true",
                     help="run the extraction job with the salted span "
                          "repartition (skew A/B — BENCH/BASELINE.md)")
@@ -252,24 +250,24 @@ def main() -> int:
             m = round(mem_calibration(args.n, args.xn), 3)
             print(f"host ceiling cpu={c} (mem={m}) < {args.min_ceiling} — "
                   f"waiting for a healthier window "
-                  f"({probes}/{args.max_probes})",
+                  f"({probes}/{MAX_PROBES})",
                   file=sys.stderr)
-            if probes >= args.max_probes:
+            if probes >= MAX_PROBES:
                 print("no healthy window found; giving up", file=sys.stderr)
                 if not runs_lo:
                     return 1
                 break
-            time.sleep(args.wait_sec)
+            time.sleep(PROBE_WAIT_SEC)
             continue
         ceilings.append(c)
         m = round(mem_calibration(args.n, args.xn), 3)
         mem_ceilings.append(m)
         print(f"hw ceiling before trial {t}: cpu={c} mem={m}",
               file=sys.stderr)
-        runs_lo.append(run_at(args.n, input_path, zpath, f"{args.tag}{t}",
+        runs_lo.append(run_at(args.n, input_path, zpath, f"r{t}",
                               salt=args.salt))
         time.sleep(5)  # settle: let the previous JVM/page-cache drain
-        runs_hi.append(run_at(args.xn, input_path, zpath, f"{args.tag}{t}",
+        runs_hi.append(run_at(args.xn, input_path, zpath, f"r{t}",
                               salt=args.salt))
         time.sleep(5)
         t += 1

@@ -2,14 +2,16 @@
 
     spark-submit --py-files dist/databricks_pdf_ocr_spark.zip \\
         jobs/dedup_stream.py --input /landing/docs --tables /tmp/t \\
-        [--continuous] [--hash-mode xxhash64]
+        [--continuous] [--compact]
 
 Drains a (doc_id, text) parquet landing dir through the rolling dedup
 recursion (`streaming/curate_stream.py`): per micro-batch signature
 upsert into the persisted banded MinHash index, delta-vs-all verified
-candidates, star-collapse label merge.  ``availableNow`` by default
-(drain-and-stop — rerunning after new files land continues from the
-stream checkpoint); ``--continuous`` keeps the query running.
+candidates, star-collapse label merge, all hashed with xxhash64 (the
+sha2 oracle mode is ``start_dedup_stream(hash_mode="sha2")``).
+``availableNow`` by default (drain-and-stop — rerunning after new files
+land continues from the stream checkpoint); ``--continuous`` keeps the
+query running.
 
 Prints one JSON line: corpus/index/label row counts and the current
 canonical (deduplicated) doc count.
@@ -33,7 +35,7 @@ def run_job(spark, args) -> dict:
     q = cs.start_dedup_stream(
         spark, args.input, args.tables, args.checkpoint
         or args.tables + "/_dedup_stream_ck",
-        hash_mode=args.hash_mode, available_now=not args.continuous)
+        hash_mode="xxhash64", available_now=not args.continuous)
     q.awaitTermination()
     io = make_table_io(spark, args.tables)
     if args.compact:
@@ -58,8 +60,6 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--tables", required=True)
     ap.add_argument("--checkpoint", default=None,
                     help="stream checkpoint dir (default: under --tables)")
-    ap.add_argument("--hash-mode", default="xxhash64",
-                    choices=["xxhash64", "sha2"])
     ap.add_argument("--compact", action="store_true",
                     help="after the drain, rewrite the append-grown "
                          "corpus/index tables into single files "

@@ -20,9 +20,17 @@ included, because the registry, SQL text and the benchmark's method
 wrappers look code up by name; docstrings do not count, since naming a
 function in prose does not call it.  The walk is transitive.
 
-A module or function only tests reach is dead weight; delete it, or
-list it in ``ALLOWED`` / ``ALLOWED_FUNCTIONS`` with the reason it must
-stay.  Both allowlists stay exact.  Needs no Spark.
+Parameter level: every defaulted parameter of a module-level function,
+or of a method of a module-level class, in the package or ``jobs/`` is
+passed at some call site of a function with that name anywhere in the
+repo, tests included: by keyword, by position, or through a ``*args`` /
+``**kwargs`` call.  A class call reaches ``__init__``.  Nested defs
+(closures, default-bound locals) are exempt.
+
+A module or function only tests reach is dead weight, and so is a
+default nothing sets; delete it, or list it in ``ALLOWED`` /
+``ALLOWED_FUNCTIONS`` / ``ALLOWED_DEFAULTS`` with the reason it must
+stay.  The allowlists stay exact.  Needs no Spark.
 """
 
 from __future__ import annotations
@@ -222,3 +230,174 @@ def test_every_package_function_is_reached():
     # the allowlist stays exact: a reached or missing entry must go
     assert sorted(ALLOWED_FUNCTIONS) == [d for d in unreached
                                          if d in ALLOWED_FUNCTIONS]
+
+
+# ---------------------------------------------------------------------------
+# Parameter level: every default is set by some caller
+# ---------------------------------------------------------------------------
+
+#: defaulted parameters no call sets, kept because they are deployment
+#: settings: where a deployment keeps its tables or lands its files
+ALLOWED_DEFAULTS = {
+    "sources/warc.py:read_warc_segments(glob)":
+        "the file pattern of a deployment's WARC landing directory",
+    "sources/images.py:read_image_files(glob)":
+        "the file pattern of a deployment's image landing directory",
+    "sources/images.py:read_image_files(recursive)":
+        "whether a deployment's image landing directory is nested",
+    "streaming/ingest.py:ingest_available(max_files_per_trigger)":
+        "the micro-batch size a deployment's landing stream admits",
+}
+
+
+def _label(path: Path) -> str:
+    pkg_dir = ROOT / PKG
+    return str(path.relative_to(pkg_dir if pkg_dir in path.parents
+                                else ROOT))
+
+
+def _checked_files() -> list[Path]:
+    return sorted(f for f in [*(ROOT / PKG).rglob("*.py"),
+                              *ROOT.glob("jobs/*.py")]
+                  if "__pycache__" not in f.parts)
+
+
+def _caller_files() -> list[Path]:
+    return sorted({*_roots(), *_checked_files(), *ROOT.glob("tests/*.py")})
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else (
+        f.attr if isinstance(f, ast.Attribute) else None)
+
+
+def _calls(trees: list[ast.Module]) -> dict[str, list[ast.Call]]:
+    """Every call under ``trees``, by the name it calls."""
+    out: dict[str, list[ast.Call]] = {}
+    for tree in trees:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call) and _callee(n) is not None:
+                out.setdefault(_callee(n), []).append(n)
+    return out
+
+
+def _sets(call: ast.Call, param: str, pos: int | None) -> bool:
+    """``call`` passes ``param``, the ``pos``-th positional argument of
+    the bound callee (None for a keyword-only parameter)."""
+    for kw in call.keywords:
+        if kw.arg is None or kw.arg == param:
+            return True
+    if pos is None:
+        return False
+    for i, a in enumerate(call.args):
+        if isinstance(a, ast.Starred) or i == pos:
+            return i <= pos
+    return False
+
+
+def _defaulted(d: ast.AST, bound: bool) -> list[tuple[str, int | None]]:
+    """``(name, bound positional index)`` of each defaulted parameter of
+    ``d``; a bound method's first parameter is not counted."""
+    a = d.args
+    pos = [*a.posonlyargs, *a.args]
+    skip = 1 if bound else 0
+    out = [(p.arg, i - skip) for i, p in enumerate(pos)
+           if i >= len(pos) - len(a.defaults)]
+    return out + [(p.arg, None) for p, v in zip(a.kwonlyargs, a.kw_defaults)
+                  if v is not None]
+
+
+def _checked_defs(tree: ast.Module):
+    """``(qualified name, names it is called by, def, bound)`` for each
+    module-level function and each method of a module-level class."""
+    for st in tree.body:
+        if isinstance(st, _FUNC):
+            yield st.name, {st.name}, st, False
+        elif isinstance(st, ast.ClassDef):
+            for m in st.body:
+                if isinstance(m, _FUNC):
+                    static = any(isinstance(x, ast.Name)
+                                 and x.id == "staticmethod"
+                                 for x in m.decorator_list)
+                    names = {m.name, st.name} if m.name == "__init__" \
+                        else {m.name}
+                    yield f"{st.name}.{m.name}", names, m, not static
+
+
+def unset_defaults(checked: dict[str, ast.Module],
+                   callers: list[ast.Module]) -> tuple[int, list[str]]:
+    """The number of defaulted parameters in ``checked`` (label -> AST),
+    and ``label:qualname(param)`` of each that no call in ``callers``
+    passes, by keyword, by position or through ``*args`` / ``**kwargs``.
+    Calls match by the callee's name; a class call reaches ``__init__``."""
+    calls = _calls(callers)
+    n, unset = 0, []
+    for label, tree in checked.items():
+        for qual, names, d, bound in _checked_defs(tree):
+            sites = [c for name in names for c in calls.get(name, ())]
+            for param, pos in _defaulted(d, bound):
+                n += 1
+                if not any(_sets(c, param, pos) for c in sites):
+                    unset.append(f"{label}:{qual}({param})")
+    return n, sorted(unset)
+
+
+def test_every_default_is_set_by_some_call():
+    checked = {_label(f): _parse(f) for f in _checked_files()}
+    n, unset = unset_defaults(
+        checked, [_parse(f) for f in _caller_files()])
+    # non-vacuity: the walk sees the package's defaulted parameters
+    assert n >= 200, n
+    assert [u for u in unset if u not in ALLOWED_DEFAULTS] == []
+    # the allowlist stays exact: a set or missing entry must go
+    assert sorted(ALLOWED_DEFAULTS) == [u for u in unset
+                                        if u in ALLOWED_DEFAULTS]
+
+
+_SRC = """
+def f(a, b=1, *, c=2):
+    pass
+
+class K:
+    def __init__(self, x=0):
+        pass
+
+    def m(self, y=1):
+        pass
+
+    @staticmethod
+    def s(a, b=1):
+        pass
+"""
+
+
+def _unset(*calls: str) -> list[str]:
+    tree = ast.parse(_SRC)
+    return unset_defaults({"m.py": tree},
+                          [tree, *(ast.parse(c) for c in calls)])[1]
+
+
+def test_default_guard_flags_an_unset_default():
+    assert unset_defaults({"m.py": ast.parse(_SRC)}, [])[0] == 5
+    assert _unset("f(0)") == ["m.py:K.__init__(x)", "m.py:K.m(y)",
+                              "m.py:K.s(b)", "m.py:f(b)", "m.py:f(c)"]
+
+
+def test_default_guard_accepts_keyword_positional_and_star_calls():
+    assert _unset("f(0, c=3)\nK(x=1)\nk.m(y=2)\nK.s(0, b=2)") == [
+        "m.py:f(b)"]
+    # by position: a bound method's first argument fills the parameter
+    # after self, a staticmethod's its first parameter
+    assert _unset("f(0, 2)\nK(1)\nk.m(2)\nK.s(0, 2)") == ["m.py:f(c)"]
+    assert _unset("f(0, 2, 3)\nK()\nk.m()\nK.s(0)") == [
+        "m.py:K.__init__(x)", "m.py:K.m(y)", "m.py:K.s(b)", "m.py:f(c)"]
+    # **kwargs may hold any parameter, *args any positional one
+    assert _unset("f(0, **kw)\nK(**kw)\nk.m(**kw)\nK.s(**kw)") == []
+    assert _unset("f(*a)\nK(*a)\nk.m(*a)\nK.s(0, *a)") == ["m.py:f(c)"]
+
+
+def test_default_guard_ignores_nested_defs():
+    tree = ast.parse("def f():\n    def g(_memo=None):\n        pass\n"
+                     "    return g\n")
+    assert unset_defaults({"m.py": tree}, [tree]) == (0, [])

@@ -102,6 +102,53 @@ def test_compact_preserves_rows_and_merges_files(spark, tmp_tables):
                                      "rows": 0}
 
 
+def test_replace_table_crash_between_renames_keeps_the_original(
+        spark, tmp_tables, monkeypatch):
+    """A swap killed between its two renames leaves the original only as
+    ``<dst>.bak``.  The next access renames it back: the table reads as
+    its original rows, and the next swap does not delete the only copy."""
+    import os
+
+    io = TableIO(spark, tmp_tables)
+    io.overwrite(spark.range(5).selectExpr("id", "id * 2 AS v"), "t")
+    original = {tuple(r) for r in io.read("t").collect()}
+    io.overwrite(spark.range(3).selectExpr("id", "-id AS v"), "t__staged")
+    staged = {tuple(r) for r in io.read("t__staged").collect()}
+    dst = os.path.join(tmp_tables, "t")
+    rename = os.rename
+
+    def crash_on_swap_in(src, to):
+        if to == dst and src != dst + ".bak":
+            raise OSError("killed between the two renames")
+        rename(src, to)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_on_swap_in)
+        with pytest.raises(OSError, match="killed"):
+            io.replace_table("t__staged", "t")
+    assert os.path.isdir(dst + ".bak") and not os.path.isdir(dst)
+
+    assert io.exists("t")
+    assert {tuple(r) for r in io.read("t").collect()} == original
+    io.replace_table("t__staged", "t")
+    assert {tuple(r) for r in io.read("t").collect()} == staged
+    assert not os.path.exists(dst + ".bak")
+
+
+def test_compact_raises_on_a_row_count_mismatch(spark, tmp_tables,
+                                                monkeypatch):
+    """The staging copy's row-count check is a raise, not an ``assert``
+    (``python -O`` strips asserts), and a failed check swaps nothing."""
+    io = TableIO(spark, tmp_tables)
+    io.append(spark.range(10).selectExpr("id"), "t")
+    read = io.read
+    monkeypatch.setattr(io, "read", lambda name: read(name).limit(3)
+                        if name == "t__compacting" else read(name))
+    with pytest.raises(RuntimeError, match="row-count mismatch"):
+        io.compact("t")
+    assert read("t").count() == 10
+
+
 def _is_local_scan(df) -> bool:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return "LocalTableScan" in plan and "ExistingRDD" not in plan
