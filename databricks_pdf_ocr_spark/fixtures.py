@@ -248,8 +248,8 @@ def fixture_df(spark, seed: int, n_docs: int, profile: FixtureProfile = SMOKE,
 # ===========================================================================
 
 def pdf_corpus_rows(seed: int, n_docs: int):
-    """Deterministic ``(doc_id, pdf_bytes)`` corpus for
-    ``pdf_span_images``.
+    """Deterministic ``(doc_id, pdf_bytes)`` corpus for the extraction
+    kernel's payload rows (``extract.payload_rows``).
 
     Every byte is a pure function of ``(seed, idx)`` — both the Spark
     queries (`queries.pdf_images_e2e`, `queries.media_payloads_e2e`, which

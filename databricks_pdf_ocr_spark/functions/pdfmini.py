@@ -60,9 +60,9 @@ class Run:
 class Page:
     runs: list[Run] = field(default_factory=list)
     image_bytes: list[bytes] = field(default_factory=list)  # XObject streams drawn via Do
-    #: embedded raster-image records (``PdfDocument.page_images`` dicts) —
-    #: the SAME records the media_payloads stage extracts, so media_refs
-    #: derived from their payload hashes join back by construction
+    #: embedded raster-image records (``PdfDocument.page_images`` dicts):
+    #: the extraction kernel derives a media span's ref from the payload
+    #: hash and hands the record back as the span's media_payloads row
     images: list[dict] = field(default_factory=list)
 
 

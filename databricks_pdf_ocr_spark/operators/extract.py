@@ -79,9 +79,20 @@ def explode_spans(documents: DataFrame) -> DataFrame:
     )
 
 
-def _make_extract_batch(cfg: ExtractConfig):
+#: the columns the kernel adds to each results row when payloads are
+#: requested: the embedded pdf image behind a media row (``Image`` of
+#: ``functions/extract_span.py``), or the error of a failed pdf span
+#: (``page_idx`` -1); null on every other row
+PAYLOAD_DDL = ("page_idx int, image_idx int, format string, width int, "
+               "height int, content binary, extract_ok boolean, "
+               "image_error string")
+_NO_IMAGE = (None,) * 7
+
+
+def _make_extract_batch(cfg: ExtractConfig, payloads: bool):
     """Build the mapInPandas kernel (closure over a tiny frozen config —
-    safe to pickle per task)."""
+    safe to pickle per task); with ``payloads``, its rows carry the
+    ``PAYLOAD_DDL`` columns too."""
     max_bytes = cfg.max_payload_bytes
     max_pages = cfg.max_pages_per_doc
     max_retries = cfg.max_retries
@@ -99,9 +110,13 @@ def _make_extract_batch(cfg: ExtractConfig):
                 "is_first_span", "kind", "text", "media_ref", "status",
                 "error_message", "ocr_fallback", "pages_parsed",
                 "duration_ms", "ocr_model")}
+            if payloads:
+                out.update({k: [] for k in (
+                    "page_idx", "image_idx", "format", "width", "height",
+                    "content", "extract_ok", "image_error")})
 
             def emit(rid, did, off, sub, tot, first, kind, text, mref,
-                     status, err, fb, pages, dur):
+                     status, err, fb, pages, dur, image):
                 out["result_id"].append(rid)
                 out["doc_id"].append(did)
                 out["offset"].append(off)
@@ -117,6 +132,17 @@ def _make_extract_batch(cfg: ExtractConfig):
                 out["pages_parsed"].append(pages)
                 out["duration_ms"].append(dur)
                 out["ocr_model"].append(OCR_MODEL)
+                if payloads:
+                    pi, ii, fmt, w, h, content, ierr = image or _NO_IMAGE
+                    out["page_idx"].append(pi)
+                    out["image_idx"].append(ii)
+                    out["format"].append(fmt)
+                    out["width"].append(w)
+                    out["height"].append(h)
+                    out["content"].append(content)
+                    out["extract_ok"].append(
+                        None if image is None else ierr is None)
+                    out["image_error"].append(ierr)
 
             for did, tot, first, kind, text, mref, off in zip(
                     pdf["doc_id"], pdf["total_spans"], pdf["is_first"],
@@ -125,25 +151,20 @@ def _make_extract_batch(cfg: ExtractConfig):
                 t0 = time.perf_counter()
                 text_in = None if text is None or (isinstance(text, float)) else text
                 mref_in = None if mref is None or (isinstance(mref, float)) else mref
-                status, err, pages, fallbacks, outputs = extract_span(
+                status, err, pages, outputs, images = extract_span(
                     kind, text_in, mref_in,
                     max_payload_bytes=max_bytes, max_pages=max_pages,
                     max_retries=max_retries, retry_backoff_s=backoff)
                 dur = int((time.perf_counter() - t0) * 1000)
                 off = int(off); tot = int(tot); first = bool(first)
                 if status == "success" and outputs:
-                    n_fb_tagged = 0
-                    for sub, (k, t, m) in enumerate(outputs):
+                    for sub, (k, t, m, fb) in enumerate(outputs):
                         rid = hashlib.sha256(
                             f"{did}:{off}:{sub}".encode()).hexdigest()
-                        is_fb = (k == "text" and t is not None
-                                 and t.startswith("[ocr] ") and n_fb_tagged < fallbacks)
-                        if is_fb:
-                            n_fb_tagged += 1
                         emit(rid, did, off, sub, tot, first and sub == 0,
-                             k, t, m, "success", None,
-                             bool(is_fb), pages if sub == 0 else 0,
-                             dur if sub == 0 else 0)
+                             k, t, m, "success", None, fb,
+                             pages if sub == 0 else 0,
+                             dur if sub == 0 else 0, images.get(sub))
                 else:
                     # failed span, or success with no extractable output:
                     # exactly one bookkeeping row (error contract —
@@ -151,24 +172,51 @@ def _make_extract_batch(cfg: ExtractConfig):
                     rid = hashlib.sha256(f"{did}:{off}:0".encode()).hexdigest()
                     emit(rid, did, off, 0, tot, first, kind, None, mref_in,
                          status if status == "failed" else "empty",
-                         err, False, pages, dur)
+                         err, False, pages, dur, images.get(0))
             yield pd.DataFrame(out)
 
     return extract_batch
 
 
-def extract_spans(spans_df: DataFrame, cfg: ExtractConfig,
-                  salt: bool | None = None) -> DataFrame:
-    """Run the extraction kernel over span rows → flat results rows."""
-    if salt is None:
-        salt = cfg.salt_spans
+def _run_kernel(spans_df: DataFrame, cfg: ExtractConfig, salt: bool,
+                payloads: bool) -> DataFrame:
     if salt:
         # hash-repartition on (doc_id, offset): spans of one heavy doc are
         # spread across all partitions → uniform task durations (the 4N-core
         # scaling run must not be straggler-bound — BASELINE.md protocol)
         spans_df = spans_df.repartition(cfg.shuffle_partitions,
                                         F.col("doc_id"), F.col("offset"))
-    return spans_df.mapInPandas(_make_extract_batch(cfg), schema=RESULTS_DDL)
+    ddl = RESULTS_DDL + (", " + PAYLOAD_DDL if payloads else "")
+    return spans_df.mapInPandas(_make_extract_batch(cfg, payloads), schema=ddl)
+
+
+def extract_spans(spans_df: DataFrame, cfg: ExtractConfig,
+                  salt: bool | None = None) -> DataFrame:
+    """Run the extraction kernel over span rows → flat results rows."""
+    return _run_kernel(spans_df, cfg,
+                       cfg.salt_spans if salt is None else salt, False)
+
+
+def extract_spans_and_payloads(spans_df: DataFrame,
+                               cfg: ExtractConfig) -> DataFrame:
+    """``extract_spans`` whose rows also carry the ``PAYLOAD_DDL``
+    columns: the one kernel pass that feeds both the results and the
+    ``media_payloads`` table (``payload_rows``)."""
+    return _run_kernel(spans_df, cfg, cfg.salt_spans, True)
+
+
+def payload_rows(extracted: DataFrame, *carry: str) -> DataFrame:
+    """The ``media_payloads`` rows of an ``extract_spans_and_payloads``
+    output, followed by its ``carry`` columns: one per embedded raster
+    image of a pdf span, keyed by the ref of its media row, and one
+    null-ref ``extract_ok=false`` row per failed pdf span.  Narrow:
+    payload bytes never shuffle."""
+    return (extracted.filter(F.col("page_idx").isNotNull())
+            .select(F.when(F.col("kind") == "media", F.col("media_ref"))
+                    .alias("media_ref"),
+                    "doc_id", "offset", "page_idx", "image_idx", "format",
+                    "width", "height", "content", "extract_ok",
+                    F.col("image_error").alias("error_message"), *carry))
 
 
 def reassemble(results: DataFrame) -> DataFrame:

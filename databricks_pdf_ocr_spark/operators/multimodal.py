@@ -6,10 +6,10 @@ extraction and perceptual hashing run as Arrow-batched ``mapInPandas``
 stages, so payload bytes never shuffle.
 
 Two families live here:
-- PDF image extraction (``pdf_span_images``) — the embedded raster
-  images of PDF pages, rows of the bucket-partitioned ``media_payloads``
-  table the extraction job's ``--media-payloads`` stage writes
-  (``dedup_payloads`` is its dedup-on-read);
+- ``dedup_payloads``, the dedup-on-read of the bucket-partitioned
+  ``media_payloads`` table: the embedded raster images of PDF pages,
+  which the extraction kernel hands back while it parses each pdf span
+  (``operators/extract.payload_rows``);
 - media near-dup: 64-bit perceptual hashes for images
   (``media_phash``), audio (``media_ahash``) and MJPEG video frames
   (``video_phash``), paired by Hamming banding (``phash_pairs``,
@@ -39,95 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..worker import drop_zip_importers
-
-#: rows of the media_payloads table (one per embedded image per pdf span)
-MEDIA_PAYLOAD_DDL = (
-    "media_ref string, doc_id string, offset int, page_idx int, "
-    "image_idx int, format string, width int, height int, content binary, "
-    "extract_ok boolean, error_message string"
-)
-
-
-def pdf_span_images(df: DataFrame, max_pages: int | None = None,
-                    max_payload_bytes: int | None = None) -> DataFrame:
-    """base64 pdf SPANS → one payload row per embedded raster image,
-    keyed by the content-addressed ``media_ref`` the extraction kernel
-    stamps on its media spans (``functions/extract_span.py`` pdf branch):
-    ``"pdfimg:" + sha256(payload)``.  Both sides derive the ref from the
-    SAME ``PdfDocument.page_images`` records, so the join-back holds by
-    construction; identical images across documents share one ref and
-    dedup globally on read.
-
-    Reference analogue: ``pdf_to_images`` (``processors/ocr.py:27-57``)
-    renders pages via PyMuPDF; without a rasterizer this extracts the
-    embedded image XObjects scanned pages are made of: ``/DCTDecode``
-    images as JPEG files, Flate/raw 8-bit gray/RGB samples as lossless
-    PNG re-wraps, exotic codecs (CCITT/JBIG2) as ``extract_ok=false``
-    rows with the reason — all of which feed :func:`media_phash`.
-
-    Guards mirror the extraction kernel (b64 tolerance, size cap, page
-    truncation) so the payload table covers exactly the images the
-    extraction results reference.  Unparseable spans become one
-    ``extract_ok=false`` row — the pipeline-continues error contract.
-
-    Plan shape: narrow ``mapInPandas`` with in-batch page/image fan-out;
-    payload bytes never shuffle.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import base64
-        import re as _re
-
-        from ..functions import pdfmini
-        drop_zip_importers()
-
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "doc_id", "offset",
-                                   "page_idx", "image_idx", "format",
-                                   "width", "height", "content",
-                                   "extract_ok", "error_message")}
-
-            def emit(ref, did, off, pi, ii, fmt, w, h, payload, ok, err):
-                out["media_ref"].append(ref)
-                out["doc_id"].append(did)
-                out["offset"].append(off)
-                out["page_idx"].append(pi)
-                out["image_idx"].append(ii)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["content"].append(payload)
-                out["extract_ok"].append(ok)
-                out["error_message"].append(err)
-
-            for did, off, b64 in zip(pdf["doc_id"], pdf["offset"],
-                                     pdf["text"]):
-                off = int(off)
-                try:
-                    raw = base64.b64decode(_re.sub(r"\s+", "", b64 or ""),
-                                           validate=True)
-                    if max_payload_bytes and len(raw) > max_payload_bytes:
-                        raise ValueError(
-                            f"payload exceeds max size ({len(raw)})")
-                    doc = pdfmini.PdfDocument(raw)
-                    pages = doc.pages()
-                    if max_pages:
-                        pages = pages[:max_pages]
-                    for pi, page in enumerate(pages):
-                        for ii, rec in enumerate(doc.page_images(page)):
-                            payload = rec["payload"]
-                            if not payload:
-                                continue
-                            ref = "pdfimg:" + hashlib.sha256(
-                                payload).hexdigest()
-                            emit(ref, did, off, pi, ii, rec["format"],
-                                 rec["width"], rec["height"], payload,
-                                 rec["error"] is None, rec["error"])
-                except Exception as e:  # bad b64 / corrupt pdf → error row
-                    emit(None, did, off, -1, -1, None, 0, 0, None, False,
-                         f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=MEDIA_PAYLOAD_DDL)
 
 
 def dedup_payloads(payloads: DataFrame) -> DataFrame:
@@ -248,8 +159,8 @@ def video_phash(df: DataFrame) -> DataFrame:
     The video leg of media near-dup: every MJPEG sample is a standalone
     JPEG, so each frame rides the same real decode + ``imghash.dhash64``
     kernel as still images.  Fan-out happens inside the Arrow batch
-    (the ``pdf_span_images`` page fan-out shape) — a long video never becomes
-    a driver loop, and video bytes never shuffle.  Non-MJPEG or undecodable
+    (the extraction kernel's page fan-out shape) — a long video never
+    becomes a driver loop, and video bytes never shuffle.  Non-MJPEG or undecodable
     payloads become a single error row."""
     from ..functions import imghash, jpegmini, mp4mini
 

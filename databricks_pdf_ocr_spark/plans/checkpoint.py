@@ -120,7 +120,7 @@ class CheckpointManager:
             return local_frame(self.spark, [], CHECKPOINT_SCHEMA)
         return (cp.groupBy("run_id")
                   .agg(F.max("updated_at").alias("run_timestamp"),
-                       F.count("*").alias("buckets_done"),
+                       F.count_distinct("bucket").alias("buckets_done"),
                        F.sum("docs_done").alias("docs_done"),
                        F.sum("pages_parsed").alias("pages_parsed"),
                        F.sum("ocr_fallbacks").alias("ocr_fallbacks"),
@@ -167,14 +167,17 @@ class CheckpointManager:
     # -- write side --------------------------------------------------------
 
     def mark_from_results(self, results: DataFrame, run_id: str,
-                          input_fingerprint: str,
+                          fingerprints: tuple[str, ...],
                           run_seq: int) -> list[dict]:
         """Aggregate per-bucket metrics from a results DataFrame (which
         carries the ``bucket`` and per-span ``duration_ms`` columns),
-        append one 'done' lineage row per bucket, and return the appended
-        rows.  A bucket's ``duration_ms`` is the kernel time of its rows.
-        ``run_seq`` is the run's ordinal, read once at the start of the
-        run (``run_state``).
+        append the run's 'done' lineage rows for each bucket and return
+        them: one with the metrics under ``fingerprints[0]``, the input,
+        and a bare one under each further fingerprint (``<input>#media``:
+        the bucket's payloads are written too).  A bucket's
+        ``duration_ms`` is the kernel time of its rows.  ``run_seq`` is
+        the run's ordinal, read once at the start of the run
+        (``run_state``).
 
         The aggregate runs distributed (map-side partial agg → tiny
         shuffle); the ≤ n_buckets result rows are CONTROL-PLANE data, so
@@ -201,41 +204,30 @@ class CheckpointManager:
                 F.sum("duration_ms").cast("long").alias("duration_ms"),
             )
         )
+        rows = [r.asDict() for r in metrics.collect()]  # ≤ n_buckets rows
+        first, *rest = fingerprints
         return self._append_marks(
-            [r.asDict() for r in metrics.collect()],  # ≤ n_buckets rows
-            run_id, input_fingerprint, run_seq)
+            [(first, m) for m in rows]
+            + [(fp, {"bucket": m["bucket"]}) for fp in rest for m in rows],
+            run_id, run_seq)
 
-    def mark_buckets(self, bucket_metrics: list[dict], run_id: str,
-                     input_fingerprint: str, duration_ms: int,
-                     run_seq: int) -> None:
-        """Append 'done' lineage rows from driver-computed per-bucket
-        metric dicts (``{"bucket": int, ...CHECKPOINT metric fields}``,
-        missing metrics default 0) — for stages whose metrics don't come
-        results-shaped, e.g. the media-payloads stage.  Every row records
-        the stage's ``duration_ms``.  Same write-then-mark contract:
-        callers commit the stage's data FIRST."""
-        if bucket_metrics:
-            self._append_marks(
-                [{**m, "duration_ms": duration_ms} for m in bucket_metrics],
-                run_id, input_fingerprint, run_seq)
-
-    def _append_marks(self, bucket_metrics: list[dict], run_id: str,
-                      input_fingerprint: str,
+    def _append_marks(self, marks: list[tuple[str, dict]], run_id: str,
                       run_seq: int) -> list[dict]:
         """The one place lineage rows are built: one 'done' row per
-        per-bucket metric dict, appended driver-side and returned."""
+        ``(fingerprint, per-bucket metric dict)`` (missing metrics are
+        0), appended driver-side and returned."""
         from datetime import datetime, timezone
 
         now = datetime.now(timezone.utc)
         rows = [{
             "run_id": run_id,
             "run_seq": int(run_seq),
-            "input_fingerprint": input_fingerprint,
+            "input_fingerprint": fp,
             "bucket": int(m["bucket"]),
             "status": "done",
             **{k: int(m.get(k) or 0) for k in _MARK_METRICS},
             "config_json": self.cfg.to_json(),
             "updated_at": now,
-        } for m in bucket_metrics]
+        } for fp, m in marks]
         self.io.append_rows(rows, CHECKPOINT_TABLE, CHECKPOINT_SCHEMA)
         return rows

@@ -3165,18 +3165,25 @@ def warc_host_rank(spark, sf_dir):
 
 
 def _pdf_corpus_payloads(spark):
-    """``fixtures.pdf_corpus_rows(42, 40)`` as base64 pdf spans through
-    ``pdf_span_images``, payloads reduced to sha256/length."""
+    """``fixtures.pdf_corpus_rows(42, 40)`` as one-span base64 pdf
+    documents through the extraction kernel's payload rows
+    (``extract.payload_rows``), payloads reduced to sha256/length."""
     import base64 as _b64
 
+    from .config import ExtractConfig
     from .fixtures import pdf_corpus_rows
-    from .operators.multimodal import pdf_span_images
+    from .operators.extract import (
+        explode_spans, extract_spans_and_payloads, payload_rows,
+    )
+    from .schemas import DOCUMENTS_SCHEMA
+    from .session import local_frame
 
-    rows = [(did, 0, _b64.b64encode(pdf).decode())
-            for did, pdf in pdf_corpus_rows(seed=42, n_docs=40)]
-    spans = spark.createDataFrame(
-        rows, "doc_id string, offset int, text string").repartition(8)
-    pay = pdf_span_images(spans)
+    docs = local_frame(spark, [
+        (did, [("pdf", _b64.b64encode(pdf).decode(), None, 0)])
+        for did, pdf in pdf_corpus_rows(seed=42, n_docs=40)],
+        DOCUMENTS_SCHEMA)
+    pay = payload_rows(extract_spans_and_payloads(
+        explode_spans(docs), ExtractConfig()))
     return pay.select(
         "media_ref", "doc_id", "page_idx", "image_idx", "format", "width",
         "height",
@@ -3193,8 +3200,8 @@ FROM read_parquet('/root/repo/tests/data/golden_pdf_images.parquet')
 def pdf_images_e2e(spark, sf_dir):
     """Embedded-image extraction end-to-end: deterministic PDF corpus
     (text + real gray/RGB image pages + a legacy undecodable stub every
-    5th doc), wrapped as base64 pdf spans → distributed
-    ``pdf_span_images`` → payload hashes.
+    5th doc), wrapped as base64 pdf spans → the distributed extraction
+    kernel's payload rows → payload hashes.
 
     Oracle: the same corpus run through ``PdfDocument.page_images``
     single-process with NO Spark (tools/make_golden_parquet.py),
@@ -3211,10 +3218,10 @@ SELECT 'pdfimg:' || content_sha AS media_ref, doc_id, page_idx, image_idx,
 FROM read_parquet('/root/repo/tests/data/golden_pdf_images.parquet')
 """)
 def media_payloads_e2e(spark, sf_dir):
-    """The media_payloads table-building kernel end-to-end: the same
-    corpus and kernel as ``pdf_images_e2e`` (the shape the extraction
-    job's media stage feeds it), with each payload row keyed by its
-    content-addressed ``media_ref``.
+    """The media_payloads rows end-to-end: the same corpus and kernel as
+    ``pdf_images_e2e`` (the rows the extraction job's ``--media-payloads``
+    run writes), with each payload row keyed by its content-addressed
+    ``media_ref``.
 
     Oracle: the committed no-Spark golden, with the ref DERIVED
     independently as ``'pdfimg:' || sha256(payload)`` — hash-comparing
@@ -3236,24 +3243,20 @@ def media_refs_resolve(spark, sf_dir):
     the span count itself hash-checked against the extraction golden."""
     from . import fixtures
     from .config import ExtractConfig
-    from .operators.extract import run_extraction
-    from .operators.multimodal import dedup_payloads, pdf_span_images
+    from .operators.extract import (
+        explode_spans, extract_spans_and_payloads, payload_rows,
+    )
+    from .operators.multimodal import dedup_payloads
 
     cfg = ExtractConfig(n_buckets=16, shuffle_partitions=8)
     docs = fixtures.fixture_df(spark, seed=42, n_docs=80,
                                profile=fixtures.TINY, n_partitions=8)
-    media = (run_extraction(docs, cfg)
-             .filter((F.col("status") == "success")
-                     & (F.col("kind") == "media")
-                     & F.col("media_ref").startswith("pdfimg:"))
+    out = extract_spans_and_payloads(explode_spans(docs), cfg)
+    media = (out.filter((F.col("status") == "success")
+                        & (F.col("kind") == "media")
+                        & F.col("media_ref").startswith("pdfimg:"))
              .select("media_ref"))
-    pdf_spans = (docs.select("doc_id", F.explode("spans").alias("s"))
-                 .filter(F.col("s.kind") == "pdf")
-                 .select("doc_id", F.col("s.offset").alias("offset"),
-                         F.col("s.text").alias("text")))
-    refs = dedup_payloads(pdf_span_images(
-        pdf_spans, max_pages=cfg.max_pages_per_doc,
-        max_payload_bytes=cfg.max_payload_bytes)).select("media_ref")
+    refs = dedup_payloads(payload_rows(out)).select("media_ref")
     unresolved = media.join(refs, "media_ref", "left_anti")
     return (media.agg(F.count(F.lit(1)).cast("long").alias("n_media_spans"))
             .crossJoin(unresolved.agg(

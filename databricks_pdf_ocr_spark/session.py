@@ -6,9 +6,13 @@ Replaces the reference's Databricks Connect session factory
 
 Scale-relevant defaults:
 - AQE on (runtime partition coalescing + skew-join splitting);
-- Arrow enabled, with ``maxRecordsPerBatch`` bounded low because document
-  payloads are multi-KB..MB — batches must be bounded by bytes in flight,
-  not row count (SURVEY.md §4.2.4);
+- Arrow enabled, with ``maxRecordsPerBatch`` at 256 rows.  That bounds
+  rows, not bytes: what bounds the bytes of a batch of multi-KB..MB
+  document payloads (SURVEY.md §4.2.4) is Spark's own
+  ``spark.sql.execution.arrow.maxBytesPerBatch`` (at most 64 rows of
+  1 MiB per batch at its default, measured on pyspark 4.1.2).  The bound
+  holds on the kernel's input; with ``--media-payloads`` the embedded
+  image bytes also cross its output boundary, as payload columns;
 - shuffle partitions sized to the machine, not the 200 default;
 - session timezone pinned UTC so DuckDB-oracle comparisons are stable.
 

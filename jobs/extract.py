@@ -13,24 +13,30 @@ distributed on executors (no external data — FIXTURES.md).
 Flow (reference entrypoint analogue: ``main.py:56-101`` run_ocr_processing):
   1. load input → stamp checkpoint bucket
   2. read the run's lineage state once (run ordinal, buckets done for
-     this input and for its media stage) and keep the pending buckets
-     (resume); an incremental stage with no bucket pending is skipped,
-     and a run with no stage pending ends here
-  3. explode → salted repartition → Arrow-batched extraction
+     this input — with ``--media-payloads``, for its ``#media`` marks
+     too) and keep the pending buckets (resume); an incremental run with
+     no bucket pending ends here
+  3. explode → salted repartition → Arrow-batched extraction; with
+     ``--media-payloads`` the kernel's rows also carry the embedded pdf
+     images it parsed, and its output is persisted once
   4. append results PARTITIONED BY bucket (repartition first: one file per
      touched bucket per run → real partition pruning downstream); an
      Observation on that write collects the touched buckets    — WRITE ...
-  5. reassemble offset-sorted span sequences of the touched buckets
+  5. with ``--media-payloads``, append the media_payloads rows of the
+     same kernel output, partitioned the same way              — ... WRITE ...
+  6. reassemble offset-sorted span sequences of the touched buckets
      (latest-run-wins per doc) → dynamic-overwrite only those bucket
      partitions                                               — ... ASSEMBLE ...
-  6. append per-bucket lineage metrics for the touched buckets (this run's
-     rows only, read back partition-pruned)                     — ... THEN MARK
+  7. append per-bucket lineage metrics for the touched buckets (this run's
+     rows only, read back partition-pruned), with a ``#media`` mark per
+     bucket beside them on a payload run                        — ... THEN MARK
 
-A crash anywhere before step 6 leaves the bucket pending: the next run
-re-extracts and re-assembles it, and both steps are idempotent (result
-ids are deterministic, reads are latest-run-wins).  So every marked
-bucket is assembled, and no run needs to look at the assembled table to
-find the buckets a crash left behind.
+A crash anywhere before step 7 leaves the bucket pending: the next run
+re-extracts, re-writes and re-assembles it, and every step is idempotent
+(result ids are deterministic, payload refs are content hashes, reads
+are latest-run-wins and payloads dedup on read).  So every marked bucket
+is assembled, and no run needs to look at the assembled table to find
+the buckets a crash left behind.
 
 The core is ``run_job(spark, args)`` so tests drive it in-process against
 the shared session; ``main()`` only owns session lifecycle + JSON printing.
@@ -50,7 +56,8 @@ from pyspark.sql import Observation, functions as F
 
 from databricks_pdf_ocr_spark.config import load_config
 from databricks_pdf_ocr_spark.operators.extract import (
-    bucket_col, explode_spans, extract_spans, reassemble,
+    bucket_col, explode_spans, extract_spans, extract_spans_and_payloads,
+    payload_rows, reassemble,
 )
 from databricks_pdf_ocr_spark.operators.incremental import select_work
 from databricks_pdf_ocr_spark.plans.checkpoint import (
@@ -151,83 +158,6 @@ def gc_media_orphans(io) -> dict:
             "gc_restored": restored}
 
 
-def run_media_stage(io, cp, documents, fingerprint: str, cfg, run_seq: int,
-                    done: set[int], fail_after_buckets: int | None = None
-                    ) -> dict:
-    """Materialize the bucket-partitioned ``media_payloads`` table: every
-    embedded raster image of every pending pdf span, keyed by the
-    content-addressed ``media_ref`` the extraction kernel stamps on its
-    media spans (VERDICT r3 #5; reference analogue: every page flows
-    through ``pdf_to_images``, processors/ocr.py:100).
-
-    Resumable via the same checkpoint lineage under its OWN fingerprint
-    (``<input>#media``, whose done buckets are ``done``), with the
-    extraction's work selection (``select_work``: mode, crash simulator,
-    ``--max-docs`` bucket cap, so a fresh capped run covers the same
-    buckets as the extraction): write payloads → mark buckets; a crash
-    between the two re-extracts the bucket and the byte-identical rows
-    (refs are payload hashes) dedup on read (``multimodal.dedup_payloads``).
-    Returns the stage's stats."""
-    from databricks_pdf_ocr_spark.operators.multimodal import pdf_span_images
-
-    fp = fingerprint + "#media"
-    t0 = time.time()
-    pending = select_work(documents, cp, done, cfg, fail_after_buckets)
-
-    # per-bucket doc/span counts BEFORE the fan-out (1 row per doc)
-    doc_rows = (pending.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum(F.size(F.filter(F.col("spans"),
-                              lambda s: s["kind"] == "pdf")))
-        .alias("pdf_spans")).collect())     # ≤ n_buckets control-plane rows
-    pend_list = sorted(r["bucket"] for r in doc_rows)
-    if not pend_list:
-        return {"media_buckets": 0, "media_images": 0, "media_errors": 0}
-
-    run_id = new_run_id()
-    spans = (pending
-             .select("doc_id", F.explode("spans").alias("s"))
-             .filter(F.col("s.kind") == "pdf")
-             .select("doc_id", F.col("s.offset").alias("offset"),
-                     F.col("s.text").alias("text")))
-    payloads = (pdf_span_images(spans, max_pages=cfg.max_pages_per_doc,
-                                max_payload_bytes=cfg.max_payload_bytes)
-                .withColumns({
-                    "bucket": bucket_col(cfg.n_buckets),
-                    "run_id": F.lit(run_id),
-                    "run_seq": F.lit(run_seq).cast("long"),
-                    "processed_at": F.current_timestamp()})
-                .repartition(min(cfg.n_buckets, cfg.shuffle_partitions),
-                             "bucket"))
-    # WRITE payloads (one file per touched bucket per run) ...
-    io.append(payloads, MEDIA_TABLE, partition_by=["bucket"])
-    # ... THEN MARK.  Pruned re-scan: partition isin + run_id filter,
-    # column-pruned to the two metric columns.
-    pay = (io.read(MEDIA_TABLE,
-                   schema="run_id string, extract_ok boolean, bucket int")
-           .filter(F.col("bucket").isin(pend_list))
-           .filter(F.col("run_id") == run_id))
-    img_rows = {r["bucket"]: r for r in pay.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("images"),
-        F.sum((~F.col("extract_ok")).cast("long")).alias("errors"))
-        .collect()}                          # ≤ n_buckets control-plane rows
-    metrics = []
-    for r in doc_rows:
-        img = img_rows.get(r["bucket"])
-        metrics.append({
-            "bucket": r["bucket"],
-            "docs_done": r["docs"],
-            "spans_in": r["pdf_spans"],
-            "span_count": img["images"] if img else 0,
-            "failed_spans": img["errors"] if img else 0,
-        })
-    cp.mark_buckets(metrics, run_id, fp, int((time.time() - t0) * 1000),
-                    run_seq=run_seq)
-    return {"media_buckets": len(pend_list),
-            "media_images": int(sum(m["span_count"] for m in metrics)),
-            "media_errors": int(sum(m["failed_spans"] for m in metrics))}
-
-
 def load_input(spark, spec: str):
     if spec.startswith("fixture:"):
         from databricks_pdf_ocr_spark import fixtures
@@ -279,65 +209,122 @@ def build_parser() -> argparse.ArgumentParser:
                     help="span-level salted repartition before extraction "
                          "(for inputs where single docs rival a whole split)")
     ap.add_argument("--media-payloads", action="store_true",
-                    help="also materialize the media_payloads table "
-                         "(embedded pdf raster images keyed by the "
-                         "content-addressed media_ref the extraction "
-                         "results reference), resumable under its own "
-                         "checkpoint lineage fingerprint")
+                    help="also write the media_payloads table (embedded "
+                         "pdf raster images keyed by the content-addressed "
+                         "media_ref the extraction results reference) from "
+                         "the same extraction pass; a bucket is done when "
+                         "both tables hold it")
     return ap
 
 
-def run_extract_stage(io, cp, documents, fingerprint: str, cfg, run_id: str,
-                      run_seq: int, done: set[int], t0: float,
-                      fail_after_buckets: int | None = None
-                      ) -> tuple[dict, list[int]]:
-    """Extract the pending buckets of ``documents``: write results →
-    assemble → mark (steps 3-6 of the module docstring).  ``done`` holds
-    the input's done buckets, ``t0`` the run's start.  Returns the stage's
-    stats and the buckets its results write touched."""
+def run_job(spark, args) -> tuple[dict, int]:
+    """Execute one extraction run (steps 2-7 of the module docstring);
+    returns (stats, exit_code)."""
+    # the flags over the ExtractConfig defaults (an unset flag is None)
+    cfg = load_config({
+        "n_buckets": args.n_buckets,
+        "shuffle_partitions": args.partitions
+        or int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "max_docs_per_run": args.max_docs,
+        "processing_mode": args.mode,
+        "specific_doc_ids": tuple(x for x in args.doc_ids.split(",") if x),
+        "salt_spans": args.salt or None,
+    })
+    io = make_table_io(spark, args.tables)
+    cp = CheckpointManager(io, cfg)
+
+    t0 = time.time()
+    documents, fingerprint = load_input(spark, args.input)
+    # a bucket is done for this run when it is marked under every
+    # fingerprint of the run; a payload run marks ``<input>#media`` too,
+    # so a bucket a plain run extracted is pending for it
+    fingerprints = ((fingerprint, fingerprint + "#media")
+                    if args.media_payloads else (fingerprint,))
+
+    # The run's ONE lineage read: the monotonic run ordinal (the
+    # latest-wins primary; wall-clock + random hex misorders on a tie or
+    # an NTP step back) and the done buckets.
+    run_seq, done_by_fp = cp.run_state(fingerprints)
+    done = set.intersection(*done_by_fp.values())
+    run_id = new_run_id()
+    stats = {"run_id": run_id, "fingerprint": fingerprint,
+             "docs_assembled": 0}
+    if args.media_payloads:
+        stats.update(media_buckets=0, media_images=0, media_errors=0)
+    # an incremental run with every bucket done has nothing pending: it
+    # ends on the lineage read
+    if (cfg.processing_mode == "incremental"
+            and done >= set(range(cfg.n_buckets))):
+        return stats, 0
+
     # --- work selection (reference modes: processors/ocr.py:59-85) --------
     # --max-docs caps at BUCKET granularity — the lineage/resume unit.  A
     # plain .limit() truncates inside buckets that then get marked done,
     # permanently dropping the cut docs from every future run.
-    pending = select_work(documents, cp, done, cfg, fail_after_buckets)
+    pending = select_work(documents, cp, done, cfg, args.fail_after_buckets)
 
     spans = explode_spans(pending.select("doc_id", "spans"))
-    results = extract_spans(spans, cfg).withColumns({
+    kernel = (extract_spans_and_payloads if args.media_payloads
+              else extract_spans)
+    # Hash-repartitioning on bucket before the writes puts every bucket
+    # in exactly one task, so each touched bucket lands as ONE file per
+    # run — no tasks×buckets small-file explosion, and the reassembly +
+    # lineage re-scan below prune to exactly the touched bucket
+    # directories.  The task count is the cluster's parallelism (the
+    # salted kernel stage's), not n_buckets: tasks beyond it only add
+    # waves, and every parquet-write task pays ~30-50 ms to deserialize
+    # before it writes a row.
+    extracted = kernel(spans, cfg).withColumns({
         "bucket": bucket_col(cfg.n_buckets),
         "run_id": F.lit(run_id),
         "run_seq": F.lit(run_seq).cast("long"),
         "input_fingerprint": F.lit(fingerprint),
-        "processed_at": F.current_timestamp()})
+        "processed_at": F.current_timestamp()}).repartition(
+        min(cfg.n_buckets, cfg.shuffle_partitions), "bucket")
+    results = extracted
+    if args.media_payloads:
+        # both tables are written from ONE kernel pass: its output is
+        # cached by the results write and read back by the payload write
+        extracted = extracted.persist()
+        results = extracted.select(*RESULTS_RUN_SCHEMA.fieldNames())
 
-    # WRITE results, partitioned by bucket.  Hash-repartitioning on bucket
-    # first puts every bucket in exactly one task, so each touched bucket
-    # lands as ONE file per run — no tasks×buckets small-file explosion,
-    # and the reassembly + lineage re-scan below prune to exactly the
-    # touched bucket directories.  The task count is the
-    # cluster's parallelism (the salted kernel stage's), not n_buckets:
-    # tasks beyond it only add waves, and every parquet-write task pays
-    # ~30-50 ms to deserialize before it writes a row.
-    # The write also observes the buckets it touches, so listing them
-    # costs no second pass over the work-selection plan.  A bucket whose
-    # pending docs have no spans writes no rows: it is not touched, gets
-    # no lineage row (the mark aggregates result rows) and keeps its
-    # assembled partition as it is.
-    touched_obs = Observation("touched")
-    results = results.repartition(
-        min(cfg.n_buckets, cfg.shuffle_partitions), "bucket").observe(
-        touched_obs, F.collect_set("bucket").alias("buckets"))
-    t_select = time.time()
-    io.append(results, RESULTS_TABLE, partition_by=["bucket"])
-    t_extract = time.time()
-    # ≤ n_buckets ints (bucket METADATA, not data), read only after the
-    # write.  A broadcast semi-join is not enough for the two re-scans
-    # below — dynamic partition pruning declines to fire without a
-    # selective predicate on the build side, so the scan would read every
-    # bucket dir; a static isin over the partition column guarantees
-    # pruning.
-    pend_list = sorted(touched_obs.get["buckets"])
-    stats = {"docs_assembled": 0}
-    t_assemble = t_mark = t_extract
+    try:
+        # WRITE results, partitioned by bucket.  The write also observes
+        # the buckets it touches, so listing them costs no second pass
+        # over the work-selection plan.  A bucket whose pending docs have
+        # no spans writes no rows: it is not touched, gets no lineage row
+        # (the mark aggregates result rows) and keeps its assembled
+        # partition as it is.
+        touched_obs = Observation("touched")
+        t_select = time.time()
+        io.append(results.observe(
+            touched_obs, F.collect_set("bucket").alias("buckets")),
+            RESULTS_TABLE, partition_by=["bucket"])
+        t_extract = time.time()
+        # ≤ n_buckets ints (bucket METADATA, not data), read only after
+        # the write.  A broadcast semi-join is not enough for the two
+        # re-scans below — dynamic partition pruning declines to fire
+        # without a selective predicate on the build side, so the scan
+        # would read every bucket dir; a static isin over the partition
+        # column guarantees pruning.
+        pend_list = sorted(touched_obs.get["buckets"])
+        if args.media_payloads and pend_list:
+            # ... WRITE payloads from the same kernel output ...
+            media_obs = Observation("media")
+            io.append(payload_rows(
+                extracted, "bucket", "run_id", "run_seq", "processed_at")
+                .observe(media_obs,
+                         F.count(F.lit(1)).alias("images"),
+                         F.sum((~F.col("extract_ok")).cast("long"))
+                         .alias("errors")),
+                MEDIA_TABLE, partition_by=["bucket"])
+            stats.update(media_buckets=len(pend_list),
+                         media_images=media_obs.get["images"],
+                         media_errors=media_obs.get["errors"] or 0)
+    finally:
+        if args.media_payloads:
+            extracted.unpersist()
+    t_assemble = t_mark = time.time()
     if pend_list:
         # ... THEN ASSEMBLE: only THIS run's buckets are rebuilt (a
         # full-corpus reassembly per run is infeasible at 10^12 docs;
@@ -385,7 +372,7 @@ def run_extract_stage(io, cp, documents, fingerprint: str, cfg, run_id: str,
                     .filter(F.col("bucket").isin(pend_list))
                     .filter(F.col("run_id") == run_id)
                     .select(*MARK_COLS))
-        marks = cp.mark_from_results(this_run, run_id, fingerprint,
+        marks = cp.mark_from_results(this_run, run_id, fingerprints,
                                      run_seq=run_seq)
         t_mark = time.time()
         # THIS run's lineage metrics, summed from the rows just appended
@@ -395,60 +382,6 @@ def run_extract_stage(io, cp, documents, fingerprint: str, cfg, run_id: str,
     stats.update({"phase_select_sec": round(t_select - t0, 2),
                   "phase_extract_write_sec": round(t_extract - t_select, 2),
                   "phase_mark_sec": round(t_mark - t_assemble, 2)})
-    return stats, pend_list
-
-
-def run_job(spark, args) -> tuple[dict, int]:
-    """Execute one extraction run; returns (stats, exit_code)."""
-    # the flags over the ExtractConfig defaults (an unset flag is None)
-    cfg = load_config({
-        "n_buckets": args.n_buckets,
-        "shuffle_partitions": args.partitions
-        or int(spark.conf.get("spark.sql.shuffle.partitions")),
-        "max_docs_per_run": args.max_docs,
-        "processing_mode": args.mode,
-        "specific_doc_ids": tuple(x for x in args.doc_ids.split(",") if x),
-        "salt_spans": args.salt or None,
-    })
-    io = make_table_io(spark, args.tables)
-    cp = CheckpointManager(io, cfg)
-
-    t0 = time.time()
-    documents, fingerprint = load_input(spark, args.input)
-
-    # The run's ONE lineage read: the monotonic run ordinal (the
-    # latest-wins primary; wall-clock + random hex misorders on a tie or
-    # an NTP step back) and the done buckets of the input and of its
-    # media stage, which marks nothing before it.
-    media_fp = fingerprint + "#media"
-    run_seq, done = cp.run_state((fingerprint, media_fp))
-    run_id = new_run_id()
-    stats = {"run_id": run_id, "fingerprint": fingerprint,
-             "docs_assembled": 0}
-    # an incremental stage with every bucket done has nothing pending: a
-    # run ends on the lineage read when all its stages are done, and goes
-    # straight to the media stage when only the extraction is
-    def stage_done(fp):
-        return (cfg.processing_mode == "incremental"
-                and done[fp] >= set(range(cfg.n_buckets)))
-    extract_done = stage_done(fingerprint)
-    if extract_done and (not args.media_payloads or stage_done(media_fp)):
-        if args.media_payloads:
-            stats.update(media_buckets=0, media_images=0, media_errors=0)
-        return stats, 0
-
-    pend_list: list[int] = []
-    if not extract_done:
-        extract_stats, pend_list = run_extract_stage(
-            io, cp, documents, fingerprint, cfg, run_id, run_seq,
-            done[fingerprint], t0, args.fail_after_buckets)
-        stats.update(extract_stats)
-    if args.media_payloads:
-        # the media stage's run is the next one in the lineage log
-        stats.update(run_media_stage(
-            io, cp, documents, fingerprint, cfg,
-            run_seq=run_seq + 1 if pend_list else run_seq,
-            done=done[media_fp], fail_after_buckets=args.fail_after_buckets))
     if args.fail_after_buckets is not None:
         stats["simulated_crash"] = True
         return stats, 3

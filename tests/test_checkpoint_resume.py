@@ -47,7 +47,7 @@ def _process(io, cp, pending, tag):
     written = (io.read("extraction_results")
                .join(F.broadcast(pend_buckets), "bucket", "left_semi"))
     cp.mark_from_results(written.dropDuplicates(["result_id"]),
-                         new_run_id(), FP, run_seq=cp.next_run_seq())
+                         new_run_id(), (FP,), run_seq=cp.next_run_seq())
 
 
 def test_kill_and_resume_equals_single_run(env):
@@ -126,7 +126,8 @@ def test_next_run_seq_is_monotonic(env):
     # a second mark (different fingerprint) advances it again
     results = io.read("extraction_results")
     cp.mark_from_results(results.dropDuplicates(["result_id"]),
-                         new_run_id(), FP + "-b", run_seq=cp.next_run_seq())
+                         new_run_id(), (FP + "-b",),
+                         run_seq=cp.next_run_seq())
     assert cp.next_run_seq() == 3
 
 
@@ -167,9 +168,10 @@ def test_compaction_preserves_resume_and_bounds_rows(env, tmp_tables):
     _process(io, cp, _pending(cp, df), "r1")
     results = io.read("extraction_results")
     cp.mark_from_results(results.dropDuplicates(["result_id"]),
-                         new_run_id(), FP, run_seq=cp.next_run_seq())
+                         new_run_id(), (FP,), run_seq=cp.next_run_seq())
     cp.mark_from_results(results.dropDuplicates(["result_id"]),
-                         new_run_id(), FP + "-b", run_seq=cp.next_run_seq())
+                         new_run_id(), (FP + "-b",),
+                         run_seq=cp.next_run_seq())
 
     before_seq = cp.next_run_seq()
     before_done = _done(cp)

@@ -37,6 +37,12 @@ def _buckets(df):
                       .alias("bucket")).collect()}
 
 
+def _mark(cp, buckets):
+    """Mark ``buckets`` done for FP: lineage rows with no metrics."""
+    cp._append_marks([(FP, {"bucket": b}) for b in buckets], new_run_id(),
+                     cp.next_run_seq())
+
+
 def _done(cp, fp=FP):
     """The buckets marked done for ``fp``, as a run reads them at its
     start."""
@@ -54,8 +60,7 @@ def test_incremental_anti_join(spark, cp):
     rows, df = _docs(spark)
     bucket_of = _buckets(df)
     done = sorted(set(bucket_of.values()))[:3]
-    cp.mark_buckets([{"bucket": b} for b in done], new_run_id(), FP, 0,
-                    run_seq=cp.next_run_seq())
+    _mark(cp, done)
     cfg = replace(TEST_CONFIG, processing_mode="incremental")
     pending = select_work(df, cp, _done(cp), cfg)
     got = {r["doc_id"] for r in pending.select("doc_id").collect()}
@@ -66,9 +71,7 @@ def test_incremental_anti_join(spark, cp):
 
 def test_reprocess_all_and_specific(spark, cp):
     rows, df = _docs(spark)
-    cp.mark_buckets([{"bucket": b} for b in range(TEST_CONFIG.n_buckets)],
-                    new_run_id(), FP, 0,   # marks never hide reprocess work
-                    run_seq=cp.next_run_seq())
+    _mark(cp, range(TEST_CONFIG.n_buckets))  # never hides reprocess work
     cfg_all = replace(TEST_CONFIG, processing_mode="reprocess_all")
     assert select_work(df, cp, _done(cp), cfg_all).count() == len(rows)
 
@@ -91,8 +94,7 @@ def test_max_docs_per_run_cap(spark, cp):
     rows, df = _docs(spark)
     bucket_of = _buckets(df)
     done = set(sorted(set(bucket_of.values()))[1::3])
-    cp.mark_buckets([{"bucket": b} for b in done], new_run_id(), FP, 0,
-                    run_seq=cp.next_run_seq())
+    _mark(cp, done)
 
     def want(mode, max_docs, k):
         per_bucket = Counter(b for b in bucket_of.values()

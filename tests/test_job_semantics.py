@@ -252,14 +252,15 @@ def test_lineage_duration_is_kernel_time(spark, tmp_path, rows):
 def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
     """A fresh reprocess_all run needs at most 7 Spark jobs (the results
     write's two, three with --salt; the mark's two; the reassembly's
-    two).  The touched buckets come from the results write itself, so a
-    fresh incremental run needs no more jobs than that, and a --max-docs
-    run only the cap's per-bucket count, once.  A no-op incremental
-    rerun, with or without --media-payloads, runs only the lineage read,
-    and a --media-payloads rerun over a done extraction only the lineage
-    read and the media stage.  Every run's stats equal its lineage as
-    ``run_history`` reads it back; a no-op incremental rerun marks
-    nothing and reports nothing."""
+    two), and with --media-payloads at most 8: the payload write reads
+    the kernel output the results write cached.  The touched buckets
+    come from the results write itself, so a fresh incremental run needs
+    no more jobs than that, and a --max-docs run only the cap's
+    per-bucket count, once.  A no-op incremental rerun, with or without
+    --media-payloads, runs only the lineage read; a --media-payloads
+    rerun over a plain run's buckets re-extracts them.  Every run's stats
+    equal its lineage as ``run_history`` reads it back; a no-op
+    incremental rerun marks nothing and reports nothing."""
     from databricks_pdf_ocr_spark.plans.checkpoint import (
         CHECKPOINT_TABLE, CheckpointManager,
     )
@@ -290,8 +291,7 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
         stats, n_jobs, t = run("all" + "".join(extra),
                                "--mode", "reprocess_all", *extra)
         all_jobs[extra] = n_jobs
-        if not extra:
-            assert 0 < n_jobs <= 7
+        assert 0 < n_jobs <= (8 if extra else 7)
         assert stats["docs_done"] == N_DOCS
         assert all(stats[k] >= 0 for k in ("phase_select_sec",
                                            "phase_extract_write_sec",
@@ -323,14 +323,14 @@ def test_run_job_spark_jobs_and_stats(spark, tmp_path, rows, in_job_group):
         assert stats["run_id"] and stats["docs_assembled"] == 0
         if extra:
             assert stats["media_buckets"] == 0
-    # media only: the extraction of "incremental" is done, its media
-    # stage is not.  No extraction job runs: the media stage costs what
-    # it costs on a fresh run, on top of the lineage read.
-    media_jobs = all_jobs[("--media-payloads",)] - all_jobs[()]
+    # "incremental" is extracted, but marked only under <fp>: a payload
+    # run's done set is the buckets marked under <fp> AND <fp>#media, so
+    # it re-extracts every bucket, at a fresh payload run's cost on top
+    # of the lineage read
     stats, n_jobs, _ = run("incremental", "--media-payloads")
-    assert stats["media_buckets"] > 0 and stats["docs_assembled"] == 0
-    assert "phase_extract_write_sec" not in stats
-    assert n_jobs <= len(read_jobs) + media_jobs, (n_jobs, media_jobs)
+    assert stats["media_buckets"] == 8
+    assert stats["docs_assembled"] == stats["docs_done"] == N_DOCS
+    assert n_jobs <= len(read_jobs) + all_jobs[("--media-payloads",)]
     stats, n_jobs, _ = run("capped", "--max-docs", "10")
     assert 10 <= stats["docs_done"] < N_DOCS
     # the cap is one per-bucket count collected on the driver and a
@@ -397,10 +397,18 @@ def _media_dict(spark, tables):
             for r in df.collect() if r["media_ref"]}
 
 
-def test_media_payloads_crash_resume_and_joinback(spark, tmp_path, rows):
-    """VERDICT r3 #5: the media_payloads stage is resumable under its own
-    lineage fingerprint, crash+resume converges to the single-run table,
-    and every pdfimg media_ref in the extraction results resolves."""
+def test_media_payloads_crash_resume_and_joinback(spark, tmp_path, rows,
+                                                  monkeypatch):
+    """A --media-payloads run writes results, then payloads, then
+    assembles and marks.  Cut after its first buckets (the crash
+    simulator), between the results and the payload write, or between
+    the payload write and the mark, it resumes to the single run's
+    media_payloads and extracted_documents; every pdfimg media_ref in
+    the extraction results resolves."""
+    from databricks_pdf_ocr_spark.plans.checkpoint import CheckpointManager
+    from databricks_pdf_ocr_spark.sources.tables import TableIO
+    from jobs.extract import MEDIA_TABLE
+
     inp = _write_input(spark, tmp_path, rows, "in_media")
 
     # single clean run (reference table)
@@ -408,6 +416,7 @@ def test_media_payloads_crash_resume_and_joinback(spark, tmp_path, rows):
     stats, rc = _run(spark, inp, t1, "--media-payloads")
     assert rc == 0 and stats["media_buckets"] == 8
     single = _media_dict(spark, t1)
+    single_ext = _extracted_dict(spark, t1)
     assert single, "corpus should contain embedded pdf images"
 
     # crashed run (2 of 8 buckets) then resume
@@ -418,6 +427,7 @@ def test_media_payloads_crash_resume_and_joinback(spark, tmp_path, rows):
     stats3, rc3 = _run(spark, inp, t2, "--media-payloads")
     assert rc3 == 0 and stats3["media_buckets"] == 6   # only the rest
     assert _media_dict(spark, t2) == single
+    assert _extracted_dict(spark, t2) == single_ext
 
     # idempotent rerun: nothing pending, no new rows
     n_before = spark.read.parquet(f"{t2}/media_payloads").count()
@@ -432,11 +442,76 @@ def test_media_payloads_crash_resume_and_joinback(spark, tmp_path, rows):
                .select("media_ref").distinct().collect()}
     assert refs and refs <= set(single)
 
+    # a crash before the payload write, and one after it but before the
+    # mark: every bucket stays pending and the rerun redoes it
+    append = TableIO.append
+
+    def crash_before_payloads(self, df, name, partition_by=None):
+        if name == MEDIA_TABLE:
+            raise RuntimeError("simulated crash before the payload write")
+        return append(self, df, name, partition_by)
+
+    def crash_before_mark(self, *a, **kw):
+        raise RuntimeError("simulated crash before the mark")
+
+    for cls, attr, crash, payloads_written in (
+            (TableIO, "append", crash_before_payloads, False),
+            (CheckpointManager, "mark_from_results", crash_before_mark,
+             True)):
+        t = str(tmp_path / f"t_crash_{attr}")
+        with monkeypatch.context() as m:
+            m.setattr(cls, attr, crash)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                _run(spark, inp, t, "--media-payloads")
+        assert spark.read.parquet(f"{t}/{RESULTS_TABLE}").count() > 0
+        assert (tmp_path / f"t_crash_{attr}" / MEDIA_TABLE).exists() \
+            == payloads_written
+        stats5, rc5 = _run(spark, inp, t, "--media-payloads")
+        assert rc5 == 0 and stats5["media_buckets"] == 8
+        assert _media_dict(spark, t) == single
+        assert _extracted_dict(spark, t) == single_ext
+
+
+def test_media_payloads_over_a_plain_run(spark, tmp_path, rows):
+    """A --media-payloads run over buckets a plain run extracted
+    re-extracts them, so its payloads are complete and every pdfimg ref
+    resolves; a table whose buckets are also marked ``<fp>#media``, as
+    a separate media run used to mark them, needs no re-extraction."""
+    from databricks_pdf_ocr_spark.plans.checkpoint import (
+        CheckpointManager, new_run_id,
+    )
+
+    inp = _write_input(spark, tmp_path, rows, "in_media_plain")
+    fp = f"path:{inp}"
+    t_fresh = str(tmp_path / "t_plain_fresh")
+    assert _run(spark, inp, t_fresh, "--media-payloads")[1] == 0
+
+    t = str(tmp_path / "t_plain_then_media")
+    assert _run(spark, inp, t)[1] == 0
+    stats, rc = _run(spark, inp, t, "--media-payloads")
+    assert rc == 0 and stats["media_buckets"] == 8
+    assert _media_dict(spark, t) == _media_dict(spark, t_fresh)
+    assert _extracted_dict(spark, t) == _extracted_dict(spark, t_fresh)
+    res = spark.read.parquet(f"{t}/{RESULTS_TABLE}")
+    refs = {r["media_ref"] for r in
+            res.filter(F.col("media_ref").startswith("pdfimg:"))
+               .select("media_ref").distinct().collect()}
+    assert refs and refs <= set(_media_dict(spark, t))
+
+    t_old = str(tmp_path / "t_old_media_marks")
+    assert _run(spark, inp, t_old)[1] == 0
+    cp = CheckpointManager(_table_io(spark, t_old), _job_cfg())
+    cp._append_marks([(fp + "#media", {"bucket": b}) for b in range(8)],
+                     new_run_id(), cp.next_run_seq())
+    stats, rc = _run(spark, inp, t_old, "--media-payloads")
+    assert rc == 0 and stats["media_buckets"] == 0
+    assert stats["docs_assembled"] == 0
+
 
 def test_media_stage_honours_max_docs(spark, tmp_path, rows):
-    """--max-docs bounds the media stage too: a capped run marks the same
-    whole buckets under ``<fp>`` and ``<fp>#media``, and an uncapped
-    rerun completes both lineages."""
+    """--max-docs bounds a --media-payloads run: a capped run marks the
+    same whole buckets under ``<fp>`` and ``<fp>#media``, and an
+    uncapped rerun completes both lineages."""
     from databricks_pdf_ocr_spark.plans.checkpoint import CHECKPOINT_TABLE
 
     inp = _write_input(spark, tmp_path, rows, "in_media_cap")

@@ -1,5 +1,5 @@
 """Embedded-image extraction from PDFs: pdfmini.page_images + the
-pdf_span_images operator, composed with the real JPEG/PNG codecs.
+extraction kernel's payload rows, composed with the real JPEG/PNG codecs.
 
 Reference analogue: ``pdf_to_images`` (``processors/ocr.py:27-57``) —
 the reference rasterizes pages via PyMuPDF; this engine extracts the
@@ -13,11 +13,15 @@ import os
 import numpy as np
 import pytest
 
+from databricks_pdf_ocr_spark.config import TEST_CONFIG, ExtractConfig
 from databricks_pdf_ocr_spark.functions import pdfmini, pngmini
 from databricks_pdf_ocr_spark.functions.jpegmini import decode_jpeg
-from databricks_pdf_ocr_spark.operators.multimodal import (
-    media_phash, pdf_span_images,
+from databricks_pdf_ocr_spark.operators.extract import (
+    explode_spans, extract_spans, extract_spans_and_payloads, payload_rows,
 )
+from databricks_pdf_ocr_spark.operators.multimodal import media_phash
+from databricks_pdf_ocr_spark.schemas import DOCUMENTS_SCHEMA
+from databricks_pdf_ocr_spark.session import local_frame
 
 KITTEN = ("/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
           "kittens/DP802813.jpg")
@@ -25,6 +29,13 @@ KITTEN = ("/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/"
 
 def _gray_samples(w, h):
     return bytes((x * 7 + y * 13) % 256 for y in range(h) for x in range(w))
+
+
+def _pdf_spans(spark, docs):
+    """``(doc_id, pdf bytes)`` pairs as one-span pdf documents, exploded."""
+    return explode_spans(local_frame(spark, [
+        (did, [("pdf", base64.b64encode(pdf).decode(), None, 0)])
+        for did, pdf in docs], DOCUMENTS_SCHEMA))
 
 
 def test_page_images_flate_gray_roundtrip():
@@ -86,11 +97,10 @@ def test_pdf_images_operator_composes_with_phash(spark):
                                    "width": w, "height": h}])),
         ("d3", b"not a pdf at all"),
     ]
-    df = spark.createDataFrame(
-        [(did, 0, base64.b64encode(pdf).decode()) for did, pdf in docs],
-        "doc_id string, offset int, text string")
+    pay = payload_rows(extract_spans_and_payloads(_pdf_spans(spark, docs),
+                                                  ExtractConfig()))
     rows = {(r["doc_id"], r["page_idx"], r["image_idx"]): r
-            for r in pdf_span_images(df).collect()}
+            for r in pay.collect()}
     assert rows[("d1", 1, 0)]["format"] == "jpeg"
     assert rows[("d1", 1, 0)]["extract_ok"]
     assert bytes(rows[("d1", 1, 0)]["content"]) == jpeg
@@ -99,6 +109,19 @@ def test_pdf_images_operator_composes_with_phash(spark):
     assert len(rows) == 3  # d1 page 0 has no images
 
     # extracted payloads feed the real decode + perceptual-hash path
-    hashed = media_phash(pdf_span_images(df).filter("extract_ok")).collect()
+    hashed = media_phash(pay.filter("extract_ok")).collect()
     assert sorted(r["format"] for r in hashed) == ["jpeg", "png"]
     assert all(r["hash_ok"] for r in hashed)
+
+
+def test_ocr_fallback_flag_marks_the_fallback_page(spark):
+    """The results row flagged ``ocr_fallback`` is the OCR text of the
+    image-only page, also when an earlier text page's own text starts
+    with the fallback's ``[ocr] `` tag."""
+    pdf = pdfmini.write_pdf([{"runs": [(72, 720, "[ocr] typed by hand")]},
+                             {"image": b"scanned page"}])
+    rows = (extract_spans(_pdf_spans(spark, [("d", pdf)]), TEST_CONFIG)
+            .orderBy("sub_idx").collect())
+    assert [(r["kind"], r["ocr_fallback"]) for r in rows] == [
+        ("text", False), ("text", True), ("media", False)]
+    assert rows[0]["text"].startswith("[ocr] ")

@@ -1,6 +1,7 @@
 """Unit tests for the pure extraction libraries (no Spark)."""
 
 import base64
+import hashlib
 
 import pytest
 
@@ -153,28 +154,39 @@ def test_ocr_fallback_deterministic():
 # ---------------------------------------------------------------- kernel
 
 def test_extract_span_text_normalizes():
-    s, e, p, f, out = extract_span("text", "  a\n b\tc ", None,
-                                   max_payload_bytes=10**6, max_pages=10)
-    assert (s, out) == ("success", [("text", "a b c", None)])
+    s, e, p, out, images = extract_span("text", "  a\n b\tc ", None,
+                                        max_payload_bytes=10**6, max_pages=10)
+    assert (s, out, images) == ("success", [("text", "a b c", None, False)], {})
 
 
 def test_extract_span_pdf_fanout():
     payload = base64.b64encode(pdfmini.write_pdf(
         [{"runs": [(72, 720, "p1")]}, {"image": b"imgbytes"},
          {"runs": [(72, 720, "p3")]}])).decode()
-    s, e, pages, fb, out = extract_span("pdf", payload, None,
-                                        max_payload_bytes=10**6, max_pages=10)
-    assert s == "success" and pages == 3 and fb == 1
+    s, e, pages, out, images = extract_span("pdf", payload, None,
+                                            max_payload_bytes=10**6,
+                                            max_pages=10)
+    assert s == "success" and pages == 3
     # the image page yields its OCR-fallback text AND an addressable
     # media span whose content-addressed ref joins back to media_payloads
     assert [o[0] for o in out] == ["text", "text", "media", "text"]
+    assert [o[3] for o in out] == [False, True, False, False]
     assert out[0][1] == "p1" and out[1][1].startswith("[ocr] ") and out[3][1] == "p3"
     assert out[2][2].startswith("pdfimg:") and len(out[2][2]) == 7 + 64
+    # the media span's image record, keyed by its output index: page 1,
+    # image 0, and the payload its ref hashes
+    (pi, ii, fmt, _w, _h, img, _err), = images.values()
+    assert list(images) == [2] and (pi, ii, fmt) == (1, 0, "raw")
+    assert out[2][2] == "pdfimg:" + hashlib.sha256(img).hexdigest()
 
 
 def test_extract_span_error_paths():
-    assert extract_span("pdf", "!!!notb64", None,
-                        max_payload_bytes=10**6, max_pages=10)[0] == "failed"
+    s, err, _, out, images = extract_span("pdf", "!!!notb64", None,
+                                          max_payload_bytes=10**6,
+                                          max_pages=10)
+    # a failed pdf span hands back its one null-ref payload error record
+    assert (s, out) == ("failed", [])
+    assert images == {0: (-1, -1, None, 0, 0, None, err)}
     assert extract_span("image", None, None,
                         max_payload_bytes=10**6, max_pages=10)[0] == "failed"
     assert extract_span("wat", "x", None,
@@ -187,7 +199,7 @@ def test_extract_span_error_paths():
 def test_extract_span_page_truncation():
     payload = base64.b64encode(pdfmini.write_pdf(
         [{"runs": [(72, 720, f"p{i}")]} for i in range(6)])).decode()
-    s, _, pages, _, out = extract_span("pdf", payload, None,
+    s, _, pages, out, _ = extract_span("pdf", payload, None,
                                        max_payload_bytes=10**6, max_pages=2)
     assert s == "success" and pages == 2 and len(out) == 2
 

@@ -31,10 +31,10 @@ def test_transient_error_retried_to_success(monkeypatch):
         return real(img)
 
     monkeypatch.setattr(ocr_fallback, "fallback_text", flaky)
-    status, err, pages, fb, outputs = es_mod.extract_span(
+    status, err, pages, outputs, _ = es_mod.extract_span(
         "pdf", payload, None, max_retries=2, **KW)
     assert (status, err) == ("success", None)
-    assert calls["n"] == 3 and fb == 1 and outputs
+    assert calls["n"] == 3 and [o[3] for o in outputs] == [True, False]
 
 
 def test_transient_error_exhausts_retries(monkeypatch):

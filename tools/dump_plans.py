@@ -117,6 +117,36 @@ def main() -> int:
         df = QUERIES[name]["fn"](spark, SF)
         parts.append(f"## {name}\n```\n{plan_of(df)}```\n")
 
+    # --media-payloads: ONE kernel pass, persisted, feeds both writes
+    from databricks_pdf_ocr_spark.operators.extract import (
+        explode_spans, extract_spans_and_payloads, payload_rows,
+    )
+    from databricks_pdf_ocr_spark.schemas import RESULTS_RUN_SCHEMA
+
+    extracted = (extract_spans_and_payloads(explode_spans(docs), cfg)
+                 .withColumns({"bucket": bucket_col(16),
+                               "run_id": F.lit("run-demo"),
+                               "run_seq": F.lit(1).cast("long"),
+                               "input_fingerprint": F.lit("fixture:demo"),
+                               "processed_at": F.current_timestamp()})
+                 .repartition(8, "bucket").persist())
+    parts.append("## --media-payloads extraction: one kernel pass → "
+                 "results write + payload write\n"
+                 "(jobs/extract.py with the flag: the kernel's rows carry "
+                 "the pdf images it parsed as payload columns; the output "
+                 "after the one bucket exchange is persisted, the results "
+                 "write reads it through an `InMemoryTableScan` that "
+                 "prunes the payload columns, and the payload write "
+                 "filters its image rows from the same cache — no second "
+                 "scan, explode, base64 decode or PDF parse)\n"
+                 "Results write:\n```\n"
+                 + plan_of(extracted.select(*RESULTS_RUN_SCHEMA.fieldNames()))
+                 + "```\nPayload write:\n```\n"
+                 + plan_of(payload_rows(extracted, "bucket", "run_id",
+                                        "run_seq", "processed_at"))
+                 + "```\n")
+    extracted.unpersist()
+
     # hand-curated audit sections (media/shingled/warc/pack/...) live
     # below the marker and survive regeneration
     out = Path("PLANS.md")

@@ -31,7 +31,7 @@ def golden_extract_doc(spans, cfg: ExtractConfig) -> list[OutSpan]:
     ordered = sorted(spans, key=lambda s: s[3])
     out: list[OutSpan] = []
     for kind, text, media_ref, _off in ordered:
-        status, _err, _pages, _fb, outputs = extract_span(
+        status, _err, _pages, outputs, _images = extract_span(
             kind, text, media_ref,
             max_payload_bytes=cfg.max_payload_bytes,
             max_pages=cfg.max_pages_per_doc,
@@ -40,7 +40,7 @@ def golden_extract_doc(spans, cfg: ExtractConfig) -> list[OutSpan]:
         )
         if status != "success":
             continue  # failed spans produce no output; pipeline continues
-        for (k, t, m) in outputs:
+        for (k, t, m, _fb) in outputs:
             out.append((k, t, m, len(out)))
     return out
 

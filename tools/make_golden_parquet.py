@@ -61,8 +61,8 @@ PDFIMG_GOLDEN_PATH = Path(__file__).resolve().parent.parent / "tests" / \
 
 
 def pdf_images_golden_table() -> pa.Table:
-    """Single-process truth for the distributed ``pdf_span_images``
-    operator (``pdf_images_e2e`` and ``media_payloads_e2e``):
+    """Single-process truth for the distributed extraction kernel's
+    payload rows (``pdf_images_e2e`` and ``media_payloads_e2e``):
     the identical deterministic corpus through ``PdfDocument.page_images``
     with no Spark, payloads reduced to sha256/length (what the queries
     project)."""
