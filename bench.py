@@ -96,7 +96,7 @@ def main() -> int:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_of(sf_dir)
     spark = get_spark(master=f"local[{cpus}]", app_name="bench",
-                      shuffle_partitions=cpus, arrow_batch_rows=256)
+                      shuffle_partitions=cpus)
 
     # warmup: JVM + codegen + parquet footer reads outside the timed region
     spark.range(1_000_000).selectExpr("sum(id)").collect()

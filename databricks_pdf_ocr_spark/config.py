@@ -34,6 +34,11 @@ class ExtractConfig:
       already marked done.
     - ``shuffle_partitions``: target partition count for the extraction
       repartition; at cluster scale set to ~2-3x total cores.
+    - ``processing_mode`` / ``specific_doc_ids``: which documents a run
+      selects (``--mode`` / ``--doc-ids``).
+    - ``max_retries`` / ``retry_backoff_s``: the kernel's bounded retry
+      of transient-class errors.
+    - ``salt_spans``: the span-level salted repartition (``--salt``).
     """
 
     max_payload_bytes: int = 50 * 1024 * 1024
@@ -68,9 +73,3 @@ def load_config(overrides: dict | None = None) -> ExtractConfig:
     return ExtractConfig(**{k: v for k, v in (overrides or {}).items()
                             if v is not None})
 
-
-#: Small-payload config used by unit tests — a 64 KiB size guard lets
-#: fixtures exercise the oversize-failure path cheaply.
-TEST_CONFIG = ExtractConfig(max_payload_bytes=64 * 1024, max_pages_per_doc=16,
-                            n_buckets=8, shuffle_partitions=8,
-                            salt_spans=True)  # tests exercise the salted path

@@ -34,9 +34,20 @@ _WORDS = (
 _SENTENCE_LENS = (4, 6, 8, 11, 15)
 
 
+#: share of pdf pages that are image-only, and of text pages laid out in
+#: two columns (the same for every profile)
+IMAGE_PAGE_PROB = 0.2
+TWO_COLUMN_PROB = 0.25
+
+
 @dataclass(frozen=True)
 class FixtureProfile:
-    """Scale + shape knobs (FIXTURES.md §1 'scale knobs')."""
+    """Scale + shape knobs (FIXTURES.md §1 'scale knobs'): spans per doc
+    (``spans_min``/``spans_max``), every ``heavy_every``-th doc heavy
+    with ``heavy_spans_min``..``heavy_spans_max`` spans, pages per pdf
+    (``pdf_pages_max``), one error span every ``error_every``-th doc (0 =
+    none) and the cumulative span-kind thresholds ``w_text`` / ``w_html``
+    / ``w_pdf`` (the rest are images)."""
     spans_min: int = 3
     spans_max: int = 10
     heavy_every: int = 50          # every k-th doc is heavy
@@ -44,8 +55,6 @@ class FixtureProfile:
     heavy_spans_max: int = 400
     pdf_pages_max: int = 4
     error_every: int = 25          # every k-th doc gets one error span (0=off)
-    two_column_prob: float = 0.25
-    image_page_prob: float = 0.2
     # cumulative span-kind thresholds (text | html | pdf | image)
     w_text: float = 0.70
     w_html: float = 0.80
@@ -141,11 +150,11 @@ def _pdf_payload(rng: random.Random, profile: FixtureProfile) -> str:
     pages = []
     for _ in range(n_pages):
         r = rng.random()
-        if r < profile.image_page_prob:
+        if r < IMAGE_PAGE_PROB:
             img = bytes(rng.getrandbits(8) for _ in range(64))
             pages.append({"image": img})
             continue
-        if r < profile.image_page_prob + 0.1:
+        if r < IMAGE_PAGE_PROB + 0.1:
             # custom-encoded page: raw codes map through a /ToUnicode CMap
             raw = bytes(rng.randrange(0x41, 0x41 + 12)
                         for _ in range(rng.randint(4, 12)))
@@ -153,7 +162,7 @@ def _pdf_payload(rng: random.Random, profile: FixtureProfile) -> str:
                           "cmap_runs": [(72.0, 720.0, raw)]})
             continue
         runs = []
-        two_col = rng.random() < profile.two_column_prob
+        two_col = rng.random() < TWO_COLUMN_PROB
         lines = _page_lines(rng)
         for li, line in enumerate(lines):
             y = 720.0 - 20.0 * li
@@ -295,26 +304,27 @@ def text_corpus_rows(seed: int, n_docs: int):
         yield doc_id_for(seed, idx), "\n\n".join(parts)
 
 
-def image_corpus_rows(seed: int, n_base: int = 10, variants: int = 3):
+def image_corpus_rows(seed: int):
     """Deterministic ``(name, payload)`` media corpus for the perceptual
-    near-dup path: ``n_base`` visually distinct block-structured images,
-    each re-encoded ``variants`` ways (PNG / GIF / lossless WebP, with a
+    near-dup path: 10 visually distinct block-structured images, each
+    re-encoded 3 ways (PNG / GIF / lossless WebP, with a
     tiny per-variant pixel perturbation) — same-base variants are true
     near-duplicates (dHash within a few bits), different bases are far
     apart.  Every byte is a pure function of ``(seed, idx)`` so the
     Spark query and the no-Spark golden builder see identical payloads.
+    Rows come base by base, so a prefix is a smaller corpus.
     """
     from .functions import gifmini, pngmini, webpmini
 
     w, h = 36, 28
-    for b in range(n_base):
+    for b in range(10):
         cell = {}
         for cy in range(4):
             for cx in range(6):
                 d = hashlib.sha256(
                     f"img:{seed}:{b}:{cx}:{cy}".encode()).digest()
                 cell[(cx, cy)] = (d[0], d[1], d[2])
-        for v in range(variants):
+        for v in range(3):
             rgb = bytearray(w * h * 3)
             for y in range(h):
                 for x in range(w):
@@ -325,8 +335,7 @@ def image_corpus_rows(seed: int, n_base: int = 10, variants: int = 3):
                         g = min(255, max(0, g + jit))
                     o = (y * w + x) * 3
                     rgb[o], rgb[o + 1], rgb[o + 2] = r, g, bl
-            kind = v % 3
-            if kind == 0:
+            if v == 0:
                 payload = pngmini.encode_png(bytes(rgb), w, h, 3)
             else:
                 rgba = bytearray(w * h * 4)
@@ -334,7 +343,7 @@ def image_corpus_rows(seed: int, n_base: int = 10, variants: int = 3):
                 rgba[1::4] = rgb[1::3]
                 rgba[2::4] = rgb[2::3]
                 rgba[3::4] = b"\xff" * (w * h)
-                if kind == 1:
+                if v == 1:
                     payload = gifmini.encode_gif([(bytes(rgba), 0)], w, h)
                 else:
                     payload = webpmini.encode_webp_lossless(
@@ -342,18 +351,17 @@ def image_corpus_rows(seed: int, n_base: int = 10, variants: int = 3):
             yield f"img-{b}-{v}", payload
 
 
-def video_corpus_rows(seed: int, n_base: int = 6, variants: int = 3):
+def video_corpus_rows(seed: int):
     """Deterministic ``(name, payload)`` Motion-JPEG corpus for the
-    perceptual VIDEO near-dup path: ``n_base`` distinct block-pattern
-    animations, each re-encoded ``variants`` ways (JPEG quality 90 /
-    82 / 96 inside an ISO-BMFF MJPEG container) — same-base variants
-    are true near-duplicates frame-for-frame under dHash, different
-    bases are far apart on every frame."""
+    perceptual VIDEO near-dup path: 6 distinct block-pattern
+    animations, each re-encoded 3 ways (JPEG quality 90 / 82 / 96 inside
+    an ISO-BMFF MJPEG container) — same-base variants are true
+    near-duplicates frame-for-frame under dHash, different bases are far
+    apart on every frame.  Rows come base by base."""
     from .functions import jpegenc, mp4mini
 
     w, h = 36, 28
-    qualities = (90, 82, 96)
-    for b in range(n_base):
+    for b in range(6):
         frames_rgb = []
         for fi in range(4):
             rgb = bytearray(w * h * 3)
@@ -365,23 +373,23 @@ def video_corpus_rows(seed: int, n_base: int = 6, variants: int = 3):
                     o = (y * w + x) * 3
                     rgb[o], rgb[o + 1], rgb[o + 2] = d[0], d[1], d[2]
             frames_rgb.append(bytes(rgb))
-        for v in range(variants):
-            q = qualities[v % len(qualities)]
+        for v, q in enumerate((90, 82, 96)):
             jpegs = [jpegenc.encode_jpeg(f, w, h, quality=q)
                      for f in frames_rgb]
             yield f"vid-{b}-{v}", mp4mini.write_mjpeg(
-                jpegs, fps=1, width=w, height=h)
+                jpegs, width=w, height=h)
 
 
-def audio_corpus_rows(seed: int, n_base: int = 8, variants: int = 3):
+def audio_corpus_rows(seed: int):
     """Deterministic ``(name, payload)`` WAV corpus for the perceptual
-    audio near-dup path: ``n_base`` spectrally distinct clips, each
-    re-encoded ``variants`` ways (pcm16@8k, pcm24@8k at half gain,
+    audio near-dup path: 8 spectrally distinct clips, each re-encoded
+    3 ways (pcm16@8k, pcm24@8k at half gain,
     float32@16k) — same-base variants are true near-duplicates under
     ``audiohash.ahash64`` (gain- and rate-invariant gradient grid),
     different bases are far apart.  Every sample is a pure function of
     ``(seed, idx)``; generation is TIME-based (``sin(2*pi*f*t)``), so
     the 8 kHz and 16 kHz variants sample the same continuous signal.
+    Rows come base by base.
     """
     import math
 
@@ -401,7 +409,7 @@ def audio_corpus_rows(seed: int, n_base: int = 8, variants: int = 3):
 
     encodings = [("pcm16", 16, 8000, 1.0), ("pcm24", 24, 8000, 0.5),
                  ("float32", 32, 16000, 0.8)]
-    for b in range(n_base):
+    for b in range(8):
         plan = []                       # per band: list of slice amps
         for band_i, _f in enumerate(audiohash.BAND_HZ):
             prev_k, amps = -1, []
@@ -412,8 +420,7 @@ def audio_corpus_rows(seed: int, n_base: int = 8, variants: int = 3):
         phases = [hashlib.sha256(f"ph:{seed}:{b}:{i}".encode())
                   .digest()[0] / 256.0
                   * 2 * math.pi for i in range(len(audiohash.BAND_HZ))]
-        for v in range(variants):
-            fmt, bits, rate, gain = encodings[v % len(encodings)]
+        for v, (fmt, bits, rate, gain) in enumerate(encodings):
             n = int(n_slices * slice_sec * rate)
             vals = []
             for i in range(n):

@@ -202,21 +202,20 @@ def _box(btype: bytes, payload: bytes) -> bytes:
     return struct.pack(">I", 8 + len(payload)) + btype + payload
 
 
-def write_mjpeg(frames: list[bytes], fps: int = 1,
-                width: int = 0, height: int = 0) -> bytes:
+def write_mjpeg(frames: list[bytes], width: int = 0,
+                height: int = 0) -> bytes:
     """JPEG frame list → minimal ISO-BMFF Motion-JPEG file (``ftyp`` +
     ``mdat`` + ``moov`` with a ``jpeg`` sample entry; one chunk per
-    frame, constant frame rate).  Fixture writer for the MJPEG decode
+    frame, one frame per second).  Fixture writer for the MJPEG decode
     tests — the same hand-built-spec-vector strategy as the WARC/WAV
     writers."""
-    if not frames or fps <= 0:
-        raise ValueError("need ≥1 frame and fps > 0")
+    if not frames:
+        raise ValueError("need ≥1 frame")
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
     mdat = _box(b"mdat", b"".join(frames))
     base = len(ftyp) + 8                        # first frame's file offset
     n = len(frames)
-    timescale = 1000
-    delta = timescale // fps
+    timescale = delta = 1000
     duration = n * delta
     offsets = []
     pos = base

@@ -102,10 +102,10 @@ def _sigmoid(z):
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def train_logreg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
-                 epochs: int = EPOCHS) -> dict[int, float]:
-    """Full-batch logistic-regression GD; returns the weight vector
-    (index ``DIM`` is the intercept).
+def train_logreg(spark: SparkSession, feats: DataFrame,
+                 labels: DataFrame) -> dict[int, float]:
+    """Full-batch logistic-regression GD over ``EPOCHS`` epochs; returns
+    the weight vector (index ``DIM`` is the intercept).
 
     Per epoch: weights broadcast down, margins aggregated per doc, the
     residual ``g = sigmoid(z) - y`` joined back onto the features
@@ -114,7 +114,7 @@ def train_logreg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
     """
     n = labels.count()
     w = {f: 0.0 for f in range(DIM + 1)}
-    for _ in range(epochs):
+    for _ in range(EPOCHS):
         wdf = _weights_df(spark, w)
         gdf = (_margins(feats, wdf).join(labels, "id")
                .select("id", (_sigmoid(F.col("z")) - F.col("y")).alias("g")))
@@ -140,22 +140,18 @@ def score_logreg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
                     (score >= F.lit(5000)).cast("long").alias("pred")))
 
 
-def quality_classifier(spark: SparkSession, docs: DataFrame,
-                       label_expr=None, epochs: int = EPOCHS) -> DataFrame:
+def quality_classifier(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Train on a weak label and score every document.
 
-    Default weak label: the document contains the token
-    ``LABEL_TOKEN`` — a deterministic keyword rule standing in for the
-    curated-vs-crawl membership bit real quality classifiers are trained
-    on.  Pass any boolean Column for a different supervision signal.
+    The weak label: the document contains the token ``LABEL_TOKEN`` — a
+    deterministic keyword rule standing in for the curated-vs-crawl
+    membership bit real quality classifiers are trained on.
     """
-    if label_expr is None:
-        label_expr = F.array_contains(
-            F.split(F.col("text"), " "), LABEL_TOKEN)
+    label = F.array_contains(F.split(F.col("text"), " "), LABEL_TOKEN)
     labels = docs.select(F.col("doc_id").alias("id"),
-                         label_expr.cast("double").alias("y"))
+                         label.cast("double").alias("y"))
     feats = hashed_features(docs).persist()
-    w = train_logreg(spark, feats, labels, epochs=epochs)
+    w = train_logreg(spark, feats, labels)
     return score_logreg(spark, feats, labels, w)
 
 

@@ -43,8 +43,8 @@ from ..worker import drop_zip_importers
 # shared shingling
 # ---------------------------------------------------------------------------
 
-def tokens_col(text_col: str = "text") -> Column:
-    return F.split(F.lower(F.col(text_col)), " ")
+def tokens_col() -> Column:
+    return F.split(F.lower(F.col("text")), " ")
 
 
 def shingles_of(tokens: Column, n: int = 3) -> Column:
@@ -100,16 +100,15 @@ def exact_duplicates(df: DataFrame) -> DataFrame:
 # n-gram Jaccard
 # ---------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
-                        threshold: float = 0.8) -> DataFrame:
-    """Exact Jaccard over distinct word n-grams for all candidate pairs.
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Exact Jaccard over distinct word 3-grams for all candidate pairs.
 
     Plan: explode distinct shingles → self-equi-join on shingle (Catalyst
     picks SMJ/shuffled-hash; AQE splits skewed shingles) → count overlap →
     join per-doc shingle counts (broadcast — it's |docs| rows of 2 ints) →
     |A∩B| / (|A|+|B|-|A∩B|).  Emits (doc_a < doc_b, jaccard).
     """
-    sh = (shingled(df, n=n)
+    sh = (shingled(df)
           .select("id", F.explode("shingles").alias("shingle"))
           .distinct())
     sizes = sh.groupBy("id").agg(F.count("*").cast("long").alias("n_sh"))
@@ -135,15 +134,18 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
     )
 
 
-def prefix_filter_pairs(df: DataFrame, t_num: int = 19,
-                        t_den: int = 20) -> DataFrame:
+#: the prefix-filter join's Jaccard threshold, ``T_NUM / T_DEN``
+T_NUM, T_DEN = 19, 20
+
+
+def prefix_filter_pairs(df: DataFrame) -> DataFrame:
     """EXACT token-set Jaccard self-join via AllPairs/PPJoin prefix
     filtering (Bayardo et al. WWW'07; Xiao et al. WWW'08) — the
     exact-recall complement to the probabilistic MinHash-LSH rung: no
     banding recall loss, candidates bounded by the prefix principle
     instead of signatures.
 
-    Threshold is the rational ``t_num/t_den`` and EVERY comparison is
+    Threshold is the rational ``T_NUM/T_DEN`` and EVERY comparison is
     integer cross-multiplication — no float ``ceil`` (0.95·20 in IEEE
     is 19.000…004, whose ceil silently shrinks the prefix and drops
     true pairs) and no float ``>=`` boundary for the oracle to disagree
@@ -188,7 +190,7 @@ def prefix_filter_pairs(df: DataFrame, t_num: int = 19,
     # prefix length p = n − ⌈t·n⌉ + 1, exact in integers:
     # ⌈a·n/b⌉ = (a·n + b − 1) div b
     plen = (F.col("n_tok")
-            - F.expr(f"(n_tok * {t_num} + {t_den} - 1) DIV {t_den}") + 1)
+            - F.expr(f"(n_tok * {T_NUM} + {T_DEN} - 1) DIV {T_DEN}") + 1)
     prefix = (tok.join(freq, "token")
               .groupBy("id", "n_tok")
               .agg(F.sort_array(
@@ -200,8 +202,8 @@ def prefix_filter_pairs(df: DataFrame, t_num: int = 19,
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (a.join(b, (F.col("a.token") == F.col("b.token"))
                    & (F.col("a.id") < F.col("b.id"))
-                   & (F.col("b.n_tok") * t_den >= F.col("a.n_tok") * t_num)
-                   & (F.col("a.n_tok") * t_den >= F.col("b.n_tok") * t_num))
+                   & (F.col("b.n_tok") * T_DEN >= F.col("a.n_tok") * T_NUM)
+                   & (F.col("a.n_tok") * T_DEN >= F.col("b.n_tok") * T_NUM))
             .select(F.col("a.id").alias("doc_a"),
                     F.col("b.id").alias("doc_b"))
             .distinct())
@@ -213,7 +215,7 @@ def prefix_filter_pairs(df: DataFrame, t_num: int = 19,
             .withColumn("inter",
                         F.size(F.array_intersect("ta", "tb")).cast("long"))
             .withColumn("uni", F.col("na") + F.col("nb") - F.col("inter"))
-            .filter(F.col("inter") * t_den >= F.col("uni") * t_num)
+            .filter(F.col("inter") * T_DEN >= F.col("uni") * T_NUM)
             .select("doc_a", "doc_b",
                     F.expr("inter * 1000000 DIV uni").alias("jaccard_e6"))
             )
@@ -740,19 +742,20 @@ def simhash(df: DataFrame, hash_mode: str = "sha2") -> DataFrame:
     return sums.select("id", fingerprint.cast("long").alias("simhash"))
 
 
-def simhash_pairs(df: DataFrame, max_hamming: int = 3,
-                  hash_mode: str = "sha2") -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance.
+def simhash_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup pairs within 3 bits of SimHash Hamming distance (the sha2
+    token hash).
 
     Candidate generation: split the 32-bit fingerprint into
-    ``max_hamming + 1`` chunks — any pair within the distance budget agrees
-    on ≥1 whole chunk (pigeonhole), so equi-join on (chunk_idx, chunk
-    value) finds all true pairs without a cross join; a final
-    ``bit_count(xor)`` filter removes false positives.
+    ``max_hamming + 1`` = 4 chunks — any pair within the distance
+    budget agrees on ≥1 whole chunk (pigeonhole), so equi-join on
+    (chunk_idx, chunk value) finds all true pairs without a cross join;
+    a final ``bit_count(xor)`` filter removes false positives.
     """
+    max_hamming = 3
     chunks = max_hamming + 1
     width = 32 // chunks
-    sh = simhash(df, hash_mode=hash_mode)
+    sh = simhash(df)
     chunk_cols = [
         F.shiftright(F.col("simhash"), i * width)
         .bitwiseAND(F.lit((1 << width) - 1)).alias(f"c{i}")
@@ -777,13 +780,13 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3,
 # paragraph-level exact dedup (RefinedWeb-style)
 # ---------------------------------------------------------------------------
 
-def paragraph_dedup(df: DataFrame, k: int = 10) -> DataFrame:
+def paragraph_dedup(df: DataFrame) -> DataFrame:
     """Sub-document exact dedup: remove repeated passages corpus-wide,
     keeping only the FIRST occurrence (RefinedWeb / MassiveText recipe —
     boilerplate paragraphs repeated across pages survive document-level
     dedup but still poison training data).
 
-    Documents are chopped into non-overlapping ``k``-token chunks (the
+    Documents are chopped into non-overlapping 10-token chunks (the
     paragraph unit for newline-free corpora); a chunk survives only in
     its globally-first occurrence, ordered by (id, chunk index).  Emits
     per doc: total chunks, surviving chunks, and the re-joined surviving
@@ -797,6 +800,7 @@ def paragraph_dedup(df: DataFrame, k: int = 10) -> DataFrame:
     row_number, never a cross join); reassembly is one hash-agg back on
     the doc id.  No driver-side state, no all-pairs anything.
     """
+    k = 10
     base = df.select(F.col("doc_id").alias("id"),
                      F.split(F.col("text"), " ").alias("__toks"))
     n_chunks = F.ceil(F.size("__toks") / F.lit(k)).cast("int")
@@ -826,11 +830,10 @@ def paragraph_dedup(df: DataFrame, k: int = 10) -> DataFrame:
 # exact-substring dedup (span level)
 # ---------------------------------------------------------------------------
 
-def shared_substring_spans(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", min_tokens: int = 12,
-                           max_gram_docs: int = 200) -> DataFrame:
+def shared_substring_spans(df: DataFrame) -> DataFrame:
     """Span-level exact-substring dedup (the Lee-et-al. training-data
-    operator): every MAXIMAL run of >= ``min_tokens`` consecutive tokens
+    operator): every MAXIMAL run of >= ``min_tokens`` = 12 consecutive
+    tokens
     that two documents share verbatim, as
     ``(id_a, id_b, a_start, b_start, n_tokens)`` with 1-based token
     positions — the output a pipeline needs to CUT duplicated spans, not
@@ -842,8 +845,8 @@ def shared_substring_spans(df: DataFrame, id_col: str = "doc_id",
        window with sha2 (engine-portable);
     2. per-gram doc frequency gates the self-join BOTH ways: ``df >= 2``
        anti-prunes the (overwhelmingly) unique grams before any pair is
-       formed, and ``df <= max_gram_docs`` caps boilerplate skew — a
-       gram shared by millions of pages would otherwise form a
+       formed, and ``df <= max_gram_docs`` = 200 caps boilerplate skew
+       — a gram shared by millions of pages would otherwise form a
        quadratic pair set (at 100 TB this cap is what keeps the op
        bounded; the dropped grams are exactly the ones a boilerplate
        filter should handle upstream);
@@ -852,8 +855,9 @@ def shared_substring_spans(df: DataFrame, id_col: str = "doc_id",
        the islands trick: ``pos - row_number()`` is constant within a
        run — one window + one hash-agg, no iterative extension.
     """
-    toks = df.select(F.col(id_col).alias("id"),
-                     tokens_col(text_col).alias("__toks"))
+    min_tokens, max_gram_docs = 12, 200
+    toks = df.select(F.col("doc_id").alias("id"),
+                     tokens_col().alias("__toks"))
     win = F.when(
         F.size("__toks") >= min_tokens,
         F.transform(

@@ -84,13 +84,18 @@ def select_work(documents: DataFrame, cp, done: set[int],
 # Spark's own BloomFilterAggregate/might_contain pair is not exposed to
 # SQL in this build (UNRESOLVED_ROUTINE — it exists only for Catalyst's
 # runtime row-level filtering), so the filter is built from public
-# column expressions: k seeded xxhash64 probes → explode → ONE bit_or
-# hash-agg over ≤ m/64 word rows → a one-row broadcast map<int,bigint>.
-# Membership is k element_at lookups — pure JVM codegen, no join, no UDF.
+# column expressions: BLOOM_K seeded xxhash64 probes → explode → ONE
+# bit_or hash-agg over ≤ m/64 word rows → a one-row broadcast
+# map<int,bigint>.  Membership is BLOOM_K element_at lookups — pure JVM
+# codegen, no join, no UDF.
 # ---------------------------------------------------------------------------
 
-def bloom_build(done: DataFrame, key: str, m_bits: int = 1 << 20,
-                k: int = 5) -> DataFrame:
+#: probes per key of the Bloom filter
+BLOOM_K = 5
+
+
+def bloom_build(done: DataFrame, key: str,
+                m_bits: int = 1 << 20) -> DataFrame:
     """ONE-row DataFrame ``(__bloom: array<bigint>)`` — a Bloom filter
     over ``done[key]`` as a DENSE bitmap of ``m_bits/64`` words.
 
@@ -102,15 +107,16 @@ def bloom_build(done: DataFrame, key: str, m_bits: int = 1 << 20,
     size m ≈ 10 bits/key for ~1 % fpp, and shard the filter by key
     range past ~10^9 keys rather than growing one giant row.
 
-    Build cost: a k× narrow fan-out of hashes, one hash-agg down to the
-    present words, a broadcast left join onto the 0..n_words index span
-    (zeros for absent words), one ordered collect-to-array global agg.
+    Build cost: a BLOOM_K× narrow fan-out of hashes, one hash-agg down
+    to the present words, a broadcast left join onto the 0..n_words
+    index span (zeros for absent words), one ordered collect-to-array
+    global agg.
     Only the fixed-size sketch ever leaves the executors.
     """
     n_words = (m_bits + 63) // 64
     probes = done.select(F.explode(F.array(*[
         F.pmod(F.xxhash64(F.lit(i), F.col(key)), F.lit(m_bits))
-        for i in range(k)])).alias("__pos"))
+        for i in range(BLOOM_K)])).alias("__pos"))
     words = (probes
              .select(F.floor(F.col("__pos") / 64).cast("int").alias("__w"),
                      F.call_function(
@@ -127,14 +133,13 @@ def bloom_build(done: DataFrame, key: str, m_bits: int = 1 << 20,
                     lambda s: s["__bits"]).alias("__bloom"))
 
 
-def might_contain_expr(bloom, key_col, m_bits: int = 1 << 20,
-                       k: int = 5):
-    """Column: True iff every one of the k probe bits for ``key_col`` is
-    set in the ``bloom`` dense-bitmap column (O(1) array indexing per
-    probe).  Out-of-range/absent words coalesce to 0 (an empty done set
-    says "definitely not contained" for everything)."""
+def might_contain_expr(bloom, key_col, m_bits: int = 1 << 20):
+    """Column: True iff every one of the BLOOM_K probe bits for
+    ``key_col`` is set in the ``bloom`` dense-bitmap column (O(1) array
+    indexing per probe).  Out-of-range/absent words coalesce to 0 (an
+    empty done set says "definitely not contained" for everything)."""
     cond = F.lit(True)
-    for i in range(k):
+    for i in range(BLOOM_K):
         pos = F.pmod(F.xxhash64(F.lit(i), key_col), F.lit(m_bits))
         w = F.floor(pos / 64).cast("int")
         mask = F.call_function("shiftleft", F.lit(1).cast("bigint"),
@@ -146,8 +151,8 @@ def might_contain_expr(bloom, key_col, m_bits: int = 1 << 20,
 
 
 def split_by_bloom(source: DataFrame, done: DataFrame, key: str,
-                   done_key: str | None = None, m_bits: int = 1 << 20,
-                   k: int = 5) -> tuple[DataFrame, DataFrame]:
+                   done_key: str | None = None,
+                   m_bits: int = 1 << 20) -> tuple[DataFrame, DataFrame]:
     """(definitely_unprocessed, maybe_done) — the map-side Bloom split.
 
     ``definitely_unprocessed`` needs NO join (no false negatives);
@@ -163,9 +168,9 @@ def split_by_bloom(source: DataFrame, done: DataFrame, key: str,
     persist the two broadcast subtrees are NOT exchange-reused."""
     done_key = done_key or key
     bloom = bloom_build(done.select(F.col(done_key).alias("__k")), "__k",
-                        m_bits, k).persist()
+                        m_bits).persist()
     tagged = source.crossJoin(F.broadcast(bloom))
-    mc = might_contain_expr(F.col("__bloom"), F.col(key), m_bits, k)
+    mc = might_contain_expr(F.col("__bloom"), F.col(key), m_bits)
     return (tagged.filter(~mc).drop("__bloom"),
             tagged.filter(mc).drop("__bloom"))
 

@@ -8,7 +8,7 @@ downstream aggregation.  The classic fix is explicit salting: the fact
 side gets a deterministic salt in ``[0, n_salts)``, the dimension side
 is replicated once per salt value, and the join key becomes
 ``(key, salt)`` — one hot key's rows now land in ``n_salts`` different
-shuffle partitions instead of one.
+shuffle partitions instead of one (``salted_join`` uses ``N_SALTS``).
 
 Correctness is exact, not approximate: every fact row carries exactly
 one salt value, and the dimension replica with that salt value exists
@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 SALT_COL = "__salt"
+N_SALTS = 8
 
 
 def salt_column(df: DataFrame, n_salts: int) -> Column:
@@ -54,15 +55,10 @@ def replicate_with_salts(dim: DataFrame, n_salts: int) -> DataFrame:
 
 
 def salted_join(fact: DataFrame, dim: DataFrame, fact_key: str,
-                dim_key: str, n_salts: int = 8,
-                how: str = "inner") -> DataFrame:
-    """Equi-join ``fact[fact_key] == dim[dim_key]`` with the fact side's
-    hot keys spread across ``n_salts`` shuffle partitions.
-
-    ``how`` supports the fact-preserving joins (``inner`` / ``left`` /
-    ``left_semi`` / ``left_anti``): each fact row carries ONE salt, so
-    fact-side multiplicity is preserved exactly.  Right/full joins would
-    see every unmatched dim row ``n_salts`` times and are rejected.
+                dim_key: str) -> DataFrame:
+    """Inner equi-join ``fact[fact_key] == dim[dim_key]`` with the fact
+    side's hot keys spread across ``N_SALTS`` shuffle partitions.  Each
+    fact row carries ONE salt, so join multiplicity is preserved exactly.
 
     The dimension is pinned to a SHUFFLE_HASH strategy:
     salting exists precisely because the dimension is too large to
@@ -70,15 +66,7 @@ def salted_join(fact: DataFrame, dim: DataFrame, fact_key: str,
     at test scale would silently bench a different plan than production
     runs.
     """
-    if how in ("right", "rightouter", "right_outer", "full", "outer",
-               "fullouter", "full_outer"):
-        raise ValueError(
-            f"salted_join preserves fact-side multiplicity only; "
-            f"'{how}' would duplicate unmatched dim rows n_salts times")
-    f = fact.withColumn(SALT_COL, salt_column(fact, n_salts))
-    d = replicate_with_salts(dim, n_salts).hint("shuffle_hash")
+    f = fact.withColumn(SALT_COL, salt_column(fact, N_SALTS))
+    d = replicate_with_salts(dim, N_SALTS).hint("shuffle_hash")
     cond = ((f[fact_key] == d[dim_key]) & (f[SALT_COL] == d[SALT_COL]))
-    joined = f.join(d, cond, how)
-    if how in ("left_semi", "leftsemi", "left_anti", "leftanti"):
-        return joined.drop(SALT_COL)
-    return joined.drop(f[SALT_COL]).drop(d[SALT_COL])
+    return f.join(d, cond).drop(f[SALT_COL]).drop(d[SALT_COL])

@@ -133,8 +133,7 @@ FROM ranked GROUP BY 1
 """
 
 
-def assign_dense_ids(df: DataFrame, order_col: str,
-                     n_parts: int = 8) -> DataFrame:
+def assign_dense_ids(df: DataFrame, order_col: str) -> DataFrame:
     """Dense 0..n-1 ``row_id`` values in ``order_col`` order WITHOUT a
     global sort funnel — the distributed answer to ``row_number() OVER
     (ORDER BY …)`` (embedding-matrix row ids, token-offset bases,
@@ -146,16 +145,17 @@ def assign_dense_ids(df: DataFrame, order_col: str,
     (partition, local ordinal) as ``pid·2³³ + ordinal`` in a pure
     projection — no window, so no second full-data shuffle (a
     ``Window.partitionBy(pid)`` here would re-exchange everything on
-    pid).  Per-partition counts reduce map-side to ≤ n_parts rows,
-    collect as control-plane ints, and their exclusive prefix sums ride
-    back in a tiny literal map: ``id = offset[pid] + ordinal``.  The id
-    values are a pure function of the ``order_col`` total order — the
-    sampled range boundaries shift split points, never ids — so results
+    pid).  Per-partition counts reduce map-side to ≤ 8 rows (one per
+    range partition), collect as control-plane ints, and their exclusive
+    prefix sums ride back in a tiny literal map:
+    ``id = offset[pid] + ordinal``.  The id values are a pure function of
+    the ``order_col`` total order — the sampled range boundaries shift
+    split points, never ids — so results
     are deterministic across runs, engines, and cluster sizes (oracle:
     ``row_number() OVER (ORDER BY …) - 1``).  Requires unique
     ``order_col`` values (ties across a range boundary would make the
     order — and any engine's row_number — ambiguous anyway)."""
-    ranged = (df.repartitionByRange(n_parts, F.col(order_col))
+    ranged = (df.repartitionByRange(8, F.col(order_col))
               .sortWithinPartitions(order_col)
               .withColumn("_mid", F.monotonically_increasing_id()))
     # pin the sampled exchange + id assignment: the counts pass and the

@@ -46,11 +46,12 @@ def outlink_edges(docs: DataFrame) -> DataFrame:
             .distinct())
 
 
-def pagerank(edges: DataFrame, d: float = 0.85, iters: int = 3
-             ) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Fixed-iteration power method over (src_host, dst_host) edges →
-    ``(host, rank)``.  rank_{t+1}(v) = (1-d)/N + d·Σ_{u→v} rank_t(u)/deg(u).
+    ``(host, rank)``: 3 rounds of rank_{t+1}(v) = (1-d)/N +
+    d·Σ_{u→v} rank_t(u)/deg(u), at damping d = 0.85.
     """
+    d = 0.85
     # materialize the edge derivation ONCE: callers hand in edges built
     # from a corpus parse (regex over every document) — without the cut,
     # each power iteration would re-run that lineage from the scan
@@ -66,7 +67,7 @@ def pagerank(edges: DataFrame, d: float = 0.85, iters: int = 3
               .agg(F.count(F.lit(1)).cast("double").alias("deg")))
     contrib_src = edges.join(outdeg, "src_host").localCheckpoint()
     ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
-    for _ in range(iters):
+    for _ in range(3):
         acc = (contrib_src
                .join(ranks.withColumnRenamed("host", "src_host"),
                      "src_host")
@@ -212,21 +213,20 @@ def blocklist_filter(df: DataFrame, blocked_suffixes) -> DataFrame:
     return df.join(blocked_hosts, "host", "left_anti")
 
 
-def frontier_schedule(df: DataFrame, order_col: str = "priority",
-                      per_wave: int = 1) -> DataFrame:
+def frontier_schedule(df: DataFrame, per_wave: int = 1) -> DataFrame:
     """Politeness scheduling for a fetch frontier: URLs are assigned to
     fetch ``wave``s so no host sees more than ``per_wave`` concurrent
     requests — the standard crawl-rate constraint.
 
     One shuffle (hash by host) + a per-host ``row_number`` window; the
-    deterministic (order desc, url/id) ordering makes the schedule a
+    deterministic (``priority`` desc, url/id) ordering makes the schedule a
     pure function of the frontier.  Giant hosts simply produce deep
     wave numbers — the semantics, not a skew bug; AQE handles the
     partition imbalance."""
     from pyspark.sql import Window
 
-    order_cols = [F.col(order_col).desc()] + \
-        [F.col(c) for c in df.columns if c != order_col]
+    order_cols = [F.col("priority").desc()] + \
+        [F.col(c) for c in df.columns if c != "priority"]
     w = Window.partitionBy("host").orderBy(*order_cols)
     rank = F.row_number().over(w) - 1
     return df.withColumn("wave", F.floor(rank / per_wave).cast("int"))

@@ -36,7 +36,7 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..worker import drop_zip_importers
 
@@ -45,10 +45,18 @@ def dedup_payloads(payloads: DataFrame) -> DataFrame:
     """Dedup-on-read for the media_payloads table: refs are
     content-addressed (sha256 of the payload), so duplicate rows — crash
     reruns of an unmarked bucket, or the same image embedded in many
-    documents — are byte-identical per ref; keep either.  (Extraction
-    results need no such pass: ``reassemble``'s ``array_distinct``
-    drops their duplicate rows on read.)"""
-    return payloads.dropDuplicates(["media_ref"])
+    documents — are byte-identical per ref; keep either.  A null-ref
+    error row stands for one failed pdf span, so those dedup on
+    ``(doc_id, offset)``: a rerun's copy collapses, the other spans'
+    rows stay.  (Extraction results need no such pass:
+    ``reassemble``'s ``array_distinct`` drops their duplicate rows on
+    read.)"""
+    error = F.col("media_ref").isNull()
+    return (payloads
+            .withColumn("__doc", F.when(error, F.col("doc_id")))
+            .withColumn("__off", F.when(error, F.col("offset")))
+            .dropDuplicates(["media_ref", "__doc", "__off"])
+            .drop("__doc", "__off"))
 
 
 # ---------------------------------------------------------------------------
@@ -208,10 +216,16 @@ def video_phash(df: DataFrame) -> DataFrame:
                      "error_message string"))
 
 
-def video_phash_pairs(frames: DataFrame, max_hamming: int = 7,
-                      min_frames: int = 2) -> DataFrame:
+#: a near-duplicate media pair's dHash budget in bits (MAX_HAMMING + 1
+#: must divide 64: the pigeonhole chunks), and the aligned frames a video
+#: pair must match on
+MAX_HAMMING = 7
+MIN_FRAMES = 2
+
+
+def video_phash_pairs(frames: DataFrame) -> DataFrame:
     """Near-duplicate video pairs: clips whose dHashes match within
-    ``max_hamming`` bits on at least ``min_frames`` ALIGNED frame
+    ``MAX_HAMMING`` bits on at least ``MIN_FRAMES`` ALIGNED frame
     indices (the re-encode/transcode semantics — a re-edit is a
     different video).
 
@@ -221,9 +235,7 @@ def video_phash_pairs(frames: DataFrame, max_hamming: int = 7,
     cross product — followed by two hash-aggs."""
     from pyspark.sql import functions as F
 
-    chunks = max_hamming + 1
-    if 64 % chunks:
-        raise ValueError(f"max_hamming+1 = {chunks} must divide 64")
+    chunks = MAX_HAMMING + 1
     width = 64 // chunks
     src = frames.filter(F.col("hash_ok")).select(
         F.col("media_id").alias("id"), "frame_idx", "phash")
@@ -245,29 +257,27 @@ def video_phash_pairs(frames: DataFrame, max_hamming: int = 7,
                 F.col("a.frame_idx").alias("frame_idx"),
                 F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
                 .cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .distinct())
     return (frame_matches
             .groupBy("media_a", "media_b")
             .agg(F.count("*").cast("long").alias("frames_matched"),
                  F.max("hamming").alias("max_hamming"))
-            .filter(F.col("frames_matched") >= min_frames))
+            .filter(F.col("frames_matched") >= MIN_FRAMES))
 
 
-def phash_pairs(hashes: DataFrame, max_hamming: int = 7) -> DataFrame:
+def phash_pairs(hashes: DataFrame) -> DataFrame:
     """Near-duplicate media pairs by dHash Hamming distance.
 
-    The 64-bit hash splits into ``max_hamming + 1`` chunks (8 x 8 bits
-    at the default budget) — any pair within the budget agrees on ≥ 1
+    The 64-bit hash splits into ``MAX_HAMMING + 1`` = 8 chunks of 8
+    bits — any pair within the budget agrees on ≥ 1
     whole chunk (pigeonhole), so candidates come from an equi-join on
     (chunk_idx, chunk_value), never a cross join; ``bit_count(xor)``
     removes false positives.  The ``simhash_pairs`` recursion on the
     media axis."""
     from pyspark.sql import functions as F
 
-    chunks = max_hamming + 1
-    if 64 % chunks:
-        raise ValueError(f"max_hamming+1 = {chunks} must divide 64")
+    chunks = MAX_HAMMING + 1
     width = 64 // chunks
     src = hashes.filter(F.col("hash_ok")).select(
         F.col("media_id").alias("id"), "phash")
@@ -288,4 +298,4 @@ def phash_pairs(hashes: DataFrame, max_hamming: int = 7) -> DataFrame:
                 F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
                 .cast("long").alias("hamming"))
         .distinct()
-        .filter(F.col("hamming") <= max_hamming))
+        .filter(F.col("hamming") <= MAX_HAMMING))

@@ -7,10 +7,7 @@ ONE pass over the table: every column's aggregates live in a single
 ``agg`` whose results are unpivoted driver-side into the per-column
 rows (the unpivot touches a 1-row result, not data).  Exact distinct
 counts make the result oracle-checkable; Spark plans the N
-``count(DISTINCT …)`` in one Expand (N× row multiplier) — at open-web
-scale pass ``approx=True`` to swap in HLL++ sketches (fixed-size
-mergeable accumulators, no Expand; same shape as the
-`approx_distinct_gate` operator, not oracle-exact).
+``count(DISTINCT …)`` in one Expand (N× row multiplier).
 
 Typed min/max: numeric columns report ``min_num``/``max_num`` (exact
 data values — no summation, so cross-engine hash parity is free) and
@@ -29,8 +26,7 @@ NUM, STR = "num", "str"
 
 
 def profile_table(spark: SparkSession, df: DataFrame,
-                  cols: list[tuple[str, str]],
-                  approx: bool = False) -> DataFrame:
+                  cols: list[tuple[str, str]]) -> DataFrame:
     """One row per profiled column:
     (col_name, n_rows, n_null, n_distinct, min_num, max_num, min_str,
     max_str)."""
@@ -39,9 +35,8 @@ def profile_table(spark: SparkSession, df: DataFrame,
         col = F.col(c)
         aggs.append(F.sum(col.isNull().cast("long")).cast("long")
                     .alias(f"{c}__n_null"))
-        nd = (F.approx_count_distinct(c) if approx
-              else F.countDistinct(col))
-        aggs.append(nd.cast("long").alias(f"{c}__n_distinct"))
+        aggs.append(F.countDistinct(col).cast("long")
+                    .alias(f"{c}__n_distinct"))
         if kind == NUM:
             aggs.append(F.min(col).cast("double").alias(f"{c}__min_num"))
             aggs.append(F.max(col).cast("double").alias(f"{c}__max_num"))

@@ -17,6 +17,12 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..worker import drop_zip_importers
 
+#: the approximate operators' fixed shape: ``TOP_K`` neighbours per
+#: query; IVF over ``N_CLUSTERS`` k-means lists, probing the ``NPROBE``
+#: nearest; LSH over ``N_PLANES`` hyperplane bits in ``BANDS`` bands
+TOP_K, N_CLUSTERS, NPROBE = 5, 16, 4
+N_PLANES, BANDS = 12, 3
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -57,8 +63,8 @@ def cosine_sim_double(a: Column, b: Column) -> Column:
     return dot / (norm(a) * norm(b))
 
 
-def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                     qid_col: str = "query_id") -> DataFrame:
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame,
+                     k: int = 5) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
     Plan: broadcast-nested-loop join (queries are small by construction) →
@@ -71,7 +77,7 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     # 2·dim·|Q|·|N| interpreted HOF work instead of dim·(|Q|+|N|).  The
     # hoisted columns are the identical expressions over the identical
     # arrays, so dot/(qn·nn) is bit-equal to the inline form.
-    q = F.broadcast(queries.select(F.col(qid_col).alias("query_id"),
+    q = F.broadcast(queries.select(F.col("query_id"),
                                    F.col("embedding").alias("qvec"))
                     .withColumn("__qn", _norm(F.col("qvec"))))
     pairs = embeddings.select(F.col("vec_id").alias("neighbor_id"),
@@ -107,10 +113,10 @@ def quantized_cosine(a: Column, b: Column) -> Column:
     return dot.cast("double") / F.sqrt(na.cast("double") * nb.cast("double"))
 
 
-def quantized_topk(quantized: DataFrame, queries: DataFrame, k: int = 5
-                   ) -> DataFrame:
-    """Exact top-k under int8-quantized cosine: ``quantized``/``queries``
-    are ``quantize_embeddings`` outputs (id, scale, qvec).  Same
+def quantized_topk(quantized: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-``TOP_K`` under int8-quantized cosine:
+    ``quantized``/``queries`` are ``quantize_embeddings`` outputs (id,
+    scale, qvec).  Same
     broadcast-nested-loop shape as ``brute_force_topk``; zero vectors
     (all-0 qvec) are excluded on both sides — division by zero."""
     def norm_pos(col):
@@ -132,7 +138,7 @@ def quantized_topk(quantized: DataFrame, queries: DataFrame, k: int = 5
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("neighbor_id"))
     return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id",
                     F.col("rank").cast("int").alias("rank"), "cosine"))
 
@@ -156,8 +162,8 @@ def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.95
     )
 
 
-def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.9,
-                         n_clusters: int = 16) -> DataFrame:
+def semantic_dedup_pairs(embeddings: DataFrame,
+                         threshold: float = 0.9) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding-space near-duplicate pairs
     found WITHIN k-means clusters — the scalable form of semantic dedup.
 
@@ -167,14 +173,15 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     k-means the IVF index uses (``ivf_assign`` — sha2-ordered init, two
     Lloyd rounds, broadcast centroids), then compute exact cosine only
     inside each cluster via a cluster-keyed equi-join.  At 100 TB the
-    join shuffles on the cluster key (n_clusters scales with corpus size
-    to keep clusters bounded) and nothing all-pairs survives.
+    join shuffles on the cluster key (``N_CLUSTERS`` of them; at scale
+    the count grows with the corpus to keep clusters bounded) and
+    nothing all-pairs survives.
 
     Output: (cluster, id_a, id_b, cosine) for pairs ≥ ``threshold``;
     downstream keeps ``min(id)`` per group exactly like the text
     near-dup ladder.
     """
-    assigned, _ = ivf_assign(embeddings, n_clusters)
+    assigned, _ = ivf_assign(embeddings, N_CLUSTERS)
     a = assigned.select("cluster", F.col("id").alias("id_a"),
                         F.col("v").alias("__va"))
     b = assigned.select("cluster", F.col("id").alias("id_b"),
@@ -187,29 +194,28 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.9,
             .filter(F.col("cosine") >= threshold))
 
 
-def plane_vector(p: int, dim: int, seed: int = 1) -> list[float]:
+def plane_vector(p: int, dim: int) -> list[float]:
     """Deterministic ±1 hyperplane components: sign from a sha256 bit of
-    (seed, p, i).  Pure driver-side model — no stored state, same plane
+    (1, p, i).  Pure driver-side model — no stored state, same plane
     set on every engine/run."""
     import hashlib
-    return [1.0 if int(hashlib.sha256(f"{seed}:{p}:{i}".encode())
+    return [1.0 if int(hashlib.sha256(f"1:{p}:{i}".encode())
                        .hexdigest()[:4], 16) % 2 == 0 else -1.0
             for i in range(dim)]
 
 
-def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16
-                         ) -> Column:
-    """Random-hyperplane LSH signature (int bitmask) as a vectorized
-    pandas UDF: one BLAS matmul per Arrow batch (V @ P.T), sign bits packed
-    into a long.  A pure column-expression variant (n_planes nested
-    ``aggregate``/``zip_with`` lambdas) measured ~10x slower — deep
-    higher-order-function trees fall out of codegen; embedding math
-    belongs in numpy.
+def hyperplane_signature(vec_col: Column, dim: int) -> Column:
+    """Random-hyperplane LSH signature (``N_PLANES``-bit mask) as a
+    vectorized pandas UDF: one BLAS matmul per Arrow batch (V @ P.T),
+    sign bits packed into a long.  A pure column-expression variant
+    (N_PLANES nested ``aggregate``/``zip_with`` lambdas) measured ~10x
+    slower — deep higher-order-function trees fall out of codegen;
+    embedding math belongs in numpy.
     """
     import numpy as np
 
-    planes = np.array([plane_vector(p, dim) for p in range(n_planes)])
-    weights = np.power(2.0, np.arange(n_planes))
+    planes = np.array([plane_vector(p, dim) for p in range(N_PLANES)])
+    weights = np.power(2.0, np.arange(N_PLANES))
 
     @F.pandas_udf("long")
     def sig(v):  # pd.Series of list[float] -> pd.Series of long
@@ -242,7 +248,7 @@ def assign_to_centroids(e: DataFrame, cdf: DataFrame) -> DataFrame:
             .select("id", "v", "cluster"))
 
 
-def ivf_assign(embeddings: DataFrame, n_clusters: int = 16
+def ivf_assign(embeddings: DataFrame, n_clusters: int
                ) -> tuple[DataFrame, list]:
     """IVF coarse quantizer: deterministic k-means over DataFrame ops.
 
@@ -284,15 +290,14 @@ def ivf_assign(embeddings: DataFrame, n_clusters: int = 16
     return assign(e, centroids), centroids
 
 
-def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-             n_clusters: int = 16, nprobe: int = 4) -> DataFrame:
-    """IVF approximate top-k: probe the ``nprobe`` nearest clusters per
-    query, exact cosine within candidates.
+def ivf_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF approximate top-``TOP_K``: probe the ``NPROBE`` nearest
+    clusters per query, exact cosine within candidates.
 
     The assignment side is the persisted index at scale (partition/bucket
-    by cluster → query touches nprobe/n_clusters of the corpus).
+    by cluster → query touches NPROBE/N_CLUSTERS of the corpus).
     """
-    assigned, centroids = ivf_assign(embeddings, n_clusters)
+    assigned, centroids = ivf_assign(embeddings, N_CLUSTERS)
     # nearest clusters per query, fully distributed: broadcast the tiny
     # centroid table onto the queries side and rank with a per-query
     # window — no .collect() of user data (queries can be arbitrarily
@@ -301,7 +306,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     cdf = spark.createDataFrame(
         [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
         "cluster int, cvec array<double>")
-    probes = _probe_clusters(queries, cdf, nprobe)
+    probes = _probe_clusters(queries, cdf, NPROBE)
     cands = assigned.join(F.broadcast(probes), "cluster") \
         .filter(F.col("id") != F.col("query_id"))
     scored = cands.select(
@@ -310,26 +315,25 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id", "rank", "cosine"))
 
 
-def ivf_topk_quantized(embeddings: DataFrame, queries: DataFrame,
-                       k: int = 5, n_clusters: int = 16, nprobe: int = 4
-                       ) -> DataFrame:
+def ivf_topk_quantized(embeddings: DataFrame,
+                       queries: DataFrame) -> DataFrame:
     """IVF probe + int8-quantized candidate scoring — the full
     memory-compressed ANN path: the coarse quantizer (float k-means
     centroids, tiny) routes queries, while candidate re-ranking runs on
     the 4×-compressed int8 vectors (``quantized_cosine`` — exact int
     dot products; scales cancel).  What a 100 TB vector corpus actually
     serves: float centroids in memory, quantized vectors on disk."""
-    assigned, centroids = ivf_assign(embeddings, n_clusters)
+    assigned, centroids = ivf_assign(embeddings, N_CLUSTERS)
     spark = embeddings.sparkSession
     cdf = spark.createDataFrame(
         [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
         "cluster int, cvec array<double>")
     qz = quantize_embeddings(embeddings).select(F.col("id"), F.col("qvec"))
-    probes = _probe_clusters(queries, cdf, nprobe)
+    probes = _probe_clusters(queries, cdf, NPROBE)
     # quantization is per-vector, so the (small) query side quantizes
     # independently — only query-sized tables are broadcast, never the
     # quantized corpus
@@ -348,7 +352,7 @@ def ivf_topk_quantized(embeddings: DataFrame, queries: DataFrame,
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id",
                     F.col("rank").cast("int").alias("rank"), "cosine"))
 
@@ -403,17 +407,17 @@ def _probe_clusters(queries: DataFrame, cdf: DataFrame, nprobe: int
             .select("query_id", "cluster", "qv"))
 
 
-def build_ivf_index(embeddings: DataFrame, io, n_clusters: int = 16) -> None:
+def build_ivf_index(embeddings: DataFrame, io) -> None:
     """Persist the IVF index: assignments PARTITIONED BY cluster
     (``ivf_index``) plus the tiny centroid model table
     (``ivf_index_centroids``).
 
     This is the at-100-TB shape ``ivf_topk`` only describes: build once,
-    probe many times — each query batch reads ``nprobe/n_clusters`` of
+    probe many times — each query batch reads ``NPROBE/N_CLUSTERS`` of
     the corpus via partition-directory pruning instead of re-running
     k-means per query call.
     """
-    assigned, centroids = ivf_assign(embeddings, n_clusters)
+    assigned, centroids = ivf_assign(embeddings, N_CLUSTERS)
     io.overwrite(assigned, "ivf_index", partition_by=["cluster"])
     spark = embeddings.sparkSession
     cdf = spark.createDataFrame(
@@ -450,20 +454,20 @@ def ivf_index_upsert(io, new_embeddings: DataFrame) -> int:
     return int(n)
 
 
-def ivf_topk_indexed(io, queries: DataFrame, k: int = 5, nprobe: int = 4
-                     ) -> DataFrame:
-    """Approximate top-k against a PERSISTED IVF index (build_ivf_index).
+def ivf_topk_indexed(io, queries: DataFrame) -> DataFrame:
+    """Approximate top-``TOP_K`` against a PERSISTED IVF index
+    (build_ivf_index).
 
     The distinct probed clusters are collected driver-side — bounded by
-    ``n_clusters`` ints regardless of query count (model-sized
+    ``N_CLUSTERS`` ints regardless of query count (model-sized
     control-plane data, never query data) — and applied as a static
     ``isin`` on the partition column: guaranteed directory pruning (DPP
     declines to fire for broadcast-semi joins without a selective
     build-side predicate — PLANS.md), so a probe touches only
-    ``nprobe/n_clusters`` of the corpus on disk.
+    ``NPROBE/N_CLUSTERS`` of the corpus on disk.
     """
     cdf = io.read("ivf_index_centroids")
-    probes = _probe_clusters(queries, cdf, nprobe)
+    probes = _probe_clusters(queries, cdf, NPROBE)
     probed = sorted({r["cluster"] for r in
                      probes.select("cluster").distinct().collect()})
     assigned = (io.read("ivf_index")
@@ -477,28 +481,27 @@ def ivf_topk_indexed(io, queries: DataFrame, k: int = 5, nprobe: int = 4
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id", "rank", "cosine"))
 
 
-def _banded(df: DataFrame, idc: str, out_id: str, dim: int,
-            n_planes: int, bands: int) -> DataFrame:
+def _banded(df: DataFrame, idc: str, out_id: str, dim: int) -> DataFrame:
     """(id, vec, band_idx, band_val) — the signature rows both the
     in-memory path and the persisted index share."""
-    r = n_planes // bands
+    r = N_PLANES // BANDS
     mask = (1 << r) - 1
-    sig = hyperplane_signature(F.col("embedding"), dim, n_planes)
+    sig = hyperplane_signature(F.col("embedding"), dim)
     bandv = F.array(*[
         F.shiftright(sig, b * r).bitwiseAND(F.lit(mask)).alias(f"b{b}")
-        for b in range(bands)
+        for b in range(BANDS)
     ])
     return df.select(F.col(idc).alias(out_id),
                      F.col("embedding").alias(out_id + "_v"),
                      F.posexplode(bandv).alias("band_idx", "band_val"))
 
 
-def _score_banded_candidates(joined: DataFrame, k: int) -> DataFrame:
-    """Band-join candidate rows → exact top-k, shuffling SCORES not
+def _score_banded_candidates(joined: DataFrame) -> DataFrame:
+    """Band-join candidate rows → exact top-``TOP_K``, shuffling SCORES not
     vectors: the old shape deduplicated band collisions with a
     ``distinct`` that carried BOTH embedding arrays through its exchange
     (~20x the bytes of the ids), then ranked with a row_number window
@@ -519,7 +522,7 @@ def _score_banded_candidates(joined: DataFrame, k: int) -> DataFrame:
         F.max("cosine").alias("cosine"))       # duplicates are identical
     top = F.slice(F.array_sort(F.collect_list(
         F.struct((-F.col("cosine")).alias("nc"), F.col("neighbor_id")))),
-        1, k)
+        1, TOP_K)
     return (uniq.groupBy("query_id").agg(top.alias("__t"))
             .select("query_id", F.posexplode("__t").alias("pos", "t"))
             .select("query_id",
@@ -536,7 +539,7 @@ def build_lsh_index(embeddings: DataFrame, io, dim: int = 16) -> None:
     there is no partition-pruning win — every query touches all band_idx
     values — the win is amortizing signature compute + scan-ready
     banding.)"""
-    io.overwrite(_banded(embeddings, "vec_id", "neighbor_id", dim, 12, 3),
+    io.overwrite(_banded(embeddings, "vec_id", "neighbor_id", dim),
                  "lsh_index")
 
 
@@ -550,44 +553,41 @@ def lsh_index_upsert(io, new_embeddings: DataFrame, dim: int = 16) -> int:
     existing = io.read("lsh_index").select(F.col("neighbor_id").alias("id"))
     pending = (new_embeddings     # left_anti needs no distinct right side
                .join(existing, F.col("vec_id") == F.col("id"), "left_anti"))
-    banded = _banded(pending, "vec_id", "neighbor_id",
-                     dim, 12, 3).localCheckpoint()
+    banded = _banded(pending, "vec_id", "neighbor_id", dim).localCheckpoint()
     n = banded.count()
     if n:
         io.append(banded, "lsh_index")
     return int(n)
 
 
-def lsh_ann_topk_indexed(io, queries: DataFrame, k: int = 5,
+def lsh_ann_topk_indexed(io, queries: DataFrame,
                          dim: int = 16) -> DataFrame:
-    """Approximate top-k against a persisted signature index
+    """Approximate top-``TOP_K`` against a persisted signature index
     (build_lsh_index): only the (small) query side computes signatures;
     candidates come from the band equi-join against the stored rows."""
     c = io.read("lsh_index")
-    q = F.broadcast(_banded(queries, "query_id", "query_id", dim, 12, 3))
+    q = F.broadcast(_banded(queries, "query_id", "query_id", dim))
     return _score_banded_candidates(
         c.join(q, ["band_idx", "band_val"])
-        .filter(F.col("neighbor_id") != F.col("query_id")), k)
+        .filter(F.col("neighbor_id") != F.col("query_id")))
 
 
-def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                 dim: int = 16, n_planes: int = 12, bands: int = 3
-                 ) -> DataFrame:
-    """Approximate top-k: hyperplane-signature bands → bucket equi-join →
-    exact cosine re-rank within candidates.
+def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame,
+                 dim: int = 16) -> DataFrame:
+    """Approximate top-``TOP_K``: hyperplane-signature bands → bucket
+    equi-join → exact cosine re-rank within candidates.
 
-    The signature splits into ``bands`` sub-signatures; a corpus vector is
+    The signature splits into ``BANDS`` sub-signatures; a corpus vector is
     a candidate if it shares ≥1 band with the query (multi-probe recall).
     Scale: corpus signatures are computed once (a narrow projected column,
     ideal for writing back as an index table); the join is an equi-join on
     (band_idx, band_value) — shuffle keyed on small ints, no cross product.
     """
-    c = _banded(embeddings, "vec_id", "neighbor_id", dim, n_planes, bands)
-    q = F.broadcast(_banded(queries, "query_id", "query_id",
-                            dim, n_planes, bands))
+    c = _banded(embeddings, "vec_id", "neighbor_id", dim)
+    q = F.broadcast(_banded(queries, "query_id", "query_id", dim))
     return _score_banded_candidates(
         c.join(q, ["band_idx", "band_val"])
-        .filter(F.col("neighbor_id") != F.col("query_id")), k)
+        .filter(F.col("neighbor_id") != F.col("query_id")))
 
 
 # ---------------------------------------------------------------------------
@@ -732,12 +732,11 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                     F.col("rank").cast("int").alias("rank"), "cosine"))
 
 
-def hard_negative_topk(embeddings: DataFrame, queries: DataFrame,
-                       k: int = 5, pos_threshold: float = 0.95
-                       ) -> DataFrame:
-    """Hard-negative mining for contrastive training: per query, the k
-    MOST similar vectors strictly below the positive band
-    (``cosine < pos_threshold``) — similar enough to be informative,
+def hard_negative_topk(embeddings: DataFrame,
+                       queries: DataFrame) -> DataFrame:
+    """Hard-negative mining for contrastive training: per query, the
+    ``TOP_K`` MOST similar vectors strictly below the positive band
+    (``cosine < 0.95``) — similar enough to be informative,
     dissimilar enough to be true negatives.
 
     Same scale shape as :func:`brute_force_topk` (broadcast query side,
@@ -755,9 +754,9 @@ def hard_negative_topk(embeddings: DataFrame, queries: DataFrame,
              .select("query_id", "neg_id",
                      F.round(cosine_sim(F.col("qvec"), F.col("nvec")), 6)
                      .alias("cosine"))
-             .filter(F.col("cosine") < F.lit(pos_threshold)))
+             .filter(F.col("cosine") < F.lit(0.95)))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                               F.asc("neg_id"))
     return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neg_id", "rank", "cosine"))

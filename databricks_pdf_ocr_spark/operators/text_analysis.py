@@ -136,11 +136,10 @@ def hash_sample(df: DataFrame, fraction_pct: dict[str, int],
     return df.filter(bucket < pct)
 
 
-def sample_weighted(df: DataFrame, weight_col: str, k: int,
-                    seed: int = 42) -> DataFrame:
+def sample_weighted(df: DataFrame, weight_col: str, k: int) -> DataFrame:
     """Exact weighted sampling WITHOUT replacement, top-k shape
     (Efraimidis–Spirakis): each row draws a deterministic uniform
-    u ∈ (0, 1] from ``sha2(id:seed)`` and is ranked by ``ln(u)/w``;
+    u ∈ (0, 1] from ``sha2(id:42)`` and is ranked by ``ln(u)/w``;
     the k best rows are a weighted sample (inclusion ∝ weight, exactly
     the sequential algorithm's distribution).
 
@@ -156,19 +155,19 @@ def sample_weighted(df: DataFrame, weight_col: str, k: int,
     into a fixed-size training subset drawn ∝ importance.
     """
     return (df.filter(F.col(weight_col) > 0)
-            .withColumn("__es", _es_score(weight_col, seed))
+            .withColumn("__es", _es_score(weight_col))
             .orderBy(F.col("__es").desc(), F.col("doc_id"))
             .limit(k)
             .drop("__es"))
 
 
-def _es_score(weight_col: str, seed: int):
+def _es_score(weight_col: str):
     """The Efraimidis–Spirakis key ``ln(u)/w`` with a deterministic
     hash-derived uniform u ∈ (0, 1] — shared by the global and
     per-group samplers so both select identically for the same rows."""
     u = (F.expr(
         f"cast(conv(substr(sha2(concat(cast(doc_id as string), "
-        f"':{seed}'), 256), 1, 8), 16, 10) as bigint)")
+        f"':42'), 256), 1, 8), 16, 10) as bigint)")
         .cast("double") + F.lit(1.0)) / F.lit(4294967296.0)
     return F.log(u) / F.col(weight_col)
 
@@ -187,7 +186,7 @@ def sample_weighted_per_group(df: DataFrame, group_col: str,
     w = Window.partitionBy(group_col).orderBy(
         F.col("__es").desc(), F.col("doc_id"))
     return (df.filter(F.col(weight_col) > 0)
-            .withColumn("__es", _es_score(weight_col, 42))
+            .withColumn("__es", _es_score(weight_col))
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .drop("__es", "__rn"))
@@ -260,9 +259,9 @@ def with_features(df: DataFrame) -> DataFrame:
         .alias("quality_score_e6")))
 
 
-def fingerprints(df: DataFrame, n: int = 5, keep: int = 4) -> DataFrame:
-    """Winnowing-style document fingerprint: the ``keep`` lexicographically
-    smallest sha2 digests over word n-gram shingles, concatenated.
+def fingerprints(df: DataFrame) -> DataFrame:
+    """Winnowing-style document fingerprint: the 4 lexicographically
+    smallest sha2 digests over word 5-gram shingles, concatenated.
 
     Robust to small edits (only windows overlapping the edit change) —
     the rolling-hash fingerprint used for fuzzy containment detection.
@@ -272,14 +271,14 @@ def fingerprints(df: DataFrame, n: int = 5, keep: int = 4) -> DataFrame:
     # (O(tokens²·len) otherwise — see dedup.shingles_of)
     staged = df.select(F.col("doc_id"),
                        tokens_col().alias("__toks"))
-    hashes = F.transform(shingles_of(F.col("__toks"), n),
+    hashes = F.transform(shingles_of(F.col("__toks"), 5),
                          lambda s: F.sha2(s, 256))
-    fp = F.concat_ws("", F.slice(F.array_sort(hashes), 1, keep))
+    fp = F.concat_ws("", F.slice(F.array_sort(hashes), 1, 4))
     return staged.select(F.col("doc_id"), fp.alias("fingerprint"))
 
 
-def repetition_features(df: DataFrame, n: int = 2) -> DataFrame:
-    """Gopher-style repetition quality signals per document: word n-gram
+def repetition_features(df: DataFrame) -> DataFrame:
+    """Gopher-style repetition quality signals per document: word bigram
     counts, distinct counts, the most-frequent n-gram's occurrence count,
     and the duplicated-n-gram fraction (1 - distinct/total).
 
@@ -299,7 +298,7 @@ def repetition_features(df: DataFrame, n: int = 2) -> DataFrame:
     staged = df.select(F.col("doc_id"), tokens_col().alias("__toks"))
     staged = staged.select(
         F.col("doc_id"),
-        F.array_sort(shingles_of(F.col("__toks"), n)).alias("__sh"))
+        F.array_sort(shingles_of(F.col("__toks"), 2)).alias("__sh"))
     n_ngrams = F.size("__sh").cast("long")
     n_distinct = F.size(F.array_distinct("__sh")).cast("long")
     init = F.struct(F.lit("").alias("prev"),
@@ -322,19 +321,18 @@ def repetition_features(df: DataFrame, n: int = 2) -> DataFrame:
             .filter(F.col("n_ngrams") > 0))
 
 
-def contamination_pairs(df: DataFrame, eval_mod: int = 20, n: int = 3,
-                        min_common: int = 2) -> DataFrame:
+def contamination_pairs(df: DataFrame) -> DataFrame:
     """Train/test decontamination: n-gram overlap between the training
     corpus and a benchmark/eval subset (here the deterministic
-    ``sha2(id) mod eval_mod == 0`` slice — in production the eval side is
+    ``sha2(id) mod 20 == 0`` slice — in production the eval side is
     the actual benchmark suite).
 
-    Emits one row per (corpus doc, eval doc) sharing ≥ ``min_common``
-    distinct word n-grams, with the contamination fraction
+    Emits one row per (corpus doc, eval doc) sharing ≥ 2 distinct word
+    3-grams, with the contamination fraction
     ``n_common / |eval doc's shingle set|`` floor-scaled to e6 — the
     gate pretraining pipelines apply before held-out evaluation is
     trustworthy (e.g. GPT-3 App. C / PaLM-style 13-gram overlap checks;
-    n is a parameter, tests use n=3 against the small synthetic docs).
+    3-grams suit the small synthetic docs).
 
     Scale shape: the benchmark side is tiny by construction → its
     distinct-shingle table and per-doc sizes are BROADCAST; the corpus
@@ -346,10 +344,10 @@ def contamination_pairs(df: DataFrame, eval_mod: int = 20, n: int = 3,
     staged = df.select(F.col("doc_id"), tokens_col().alias("__toks"))
     bucket = (
         F.conv(F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 8),
-               16, 10).cast("long") % eval_mod)
+               16, 10).cast("long") % 20)
     shingles = staged.select(
         F.col("doc_id"), bucket.alias("__b"),
-        F.explode(F.array_distinct(shingles_of(F.col("__toks"), n)))
+        F.explode(F.array_distinct(shingles_of(F.col("__toks"), 3)))
         .alias("shingle"))
     evals = (shingles.filter(F.col("__b") == 0)
              .select(F.col("doc_id").alias("eval_id"), "shingle"))
@@ -360,7 +358,7 @@ def contamination_pairs(df: DataFrame, eval_mod: int = 20, n: int = 3,
     overlap = (corpus.join(F.broadcast(evals), "shingle")
                .groupBy("doc_id", "eval_id")
                .agg(F.count("*").cast("long").alias("n_common"))
-               .filter(F.col("n_common") >= min_common))
+               .filter(F.col("n_common") >= 2))
     return (overlap.join(F.broadcast(eval_sizes), "eval_id")
             .select(F.col("doc_id"), F.col("eval_id"), F.col("n_common"),
                     F.floor(F.col("n_common") * F.lit(1000000.0)
@@ -368,23 +366,23 @@ def contamination_pairs(df: DataFrame, eval_mod: int = 20, n: int = 3,
                     .alias("contam_e6")))
 
 
-def pack_plan(df: DataFrame, seq_len: int = 2048,
-              n_shards: int = 32) -> DataFrame:
+def pack_plan(df: DataFrame) -> DataFrame:
     """Sequence-packing plan (concat-and-chop, the standard pretraining
     layout): documents are concatenated in deterministic (shard, id)
-    order and chopped into fixed ``seq_len``-token sequences; a doc may
+    order and chopped into fixed 2048-token sequences; a doc may
     span sequences.  Emits per doc: shard, token count, the first/last
     sequence it lands in, and its start offset inside the first.
 
-    Scale shape: packing is per-SHARD (``pmod(id, n_shards)``) so the
-    window sort is n_shards independent local sorts after one hash
+    Scale shape: packing is per-SHARD (``pmod(id, 32)``) so the
+    window sort is 32 independent local sorts after one hash
     shuffle — never a global sort; each shard's plan is a running-sum
     window, all integer math (exactly oracle-able).  Real pipelines
     write one packed file per shard from exactly this plan."""
+    seq_len = 2048
     ws = F.size(F.split(F.col("text"), " ")).cast("long")
     w = (Window.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    shard = F.pmod(F.col("doc_id").cast("long"), F.lit(n_shards)).cast("int")
+    shard = F.pmod(F.col("doc_id").cast("long"), F.lit(32)).cast("int")
     staged = (df.select(F.col("doc_id"), ws.alias("n_tokens"))
               .filter(F.col("n_tokens") > 0)
               .withColumn("shard", shard))
@@ -436,8 +434,8 @@ def unigram_lm_scores(df: DataFrame) -> DataFrame:
 # domain-mixture rebalancing
 # ---------------------------------------------------------------------------
 
-def mixture_rebalance(df: DataFrame, strata_col: str = "lang") -> DataFrame:
-    """Resample toward a UNIFORM domain mixture: each stratum's
+def mixture_rebalance(df: DataFrame) -> DataFrame:
+    """Resample toward a UNIFORM ``lang`` mixture: each stratum's
     acceptance rate is ``min(1, target/count)`` where target =
     corpus_size / n_strata, applied through the deterministic sha2 hash
     gate (same idempotence property as :func:`hash_sample` — reruns and
@@ -451,11 +449,11 @@ def mixture_rebalance(df: DataFrame, strata_col: str = "lang") -> DataFrame:
     evaluated identically by any engine.  Emits the surviving rows as
     (id, stratum, rate_e6).
     """
-    counts = df.groupBy(strata_col).agg(F.count("*").cast("long").alias("cnt"))
+    counts = df.groupBy("lang").agg(F.count("*").cast("long").alias("cnt"))
     tot = counts.agg(F.sum("cnt").cast("long").alias("tot"),
                      F.count("*").cast("long").alias("n_strata"))
     rates = (counts.crossJoin(F.broadcast(tot))
-             .select(strata_col,
+             .select("lang",
                      F.least(
                          F.lit(1000000).cast("long"),
                          F.floor(F.lit(1000000.0) * (F.col("tot") * 1.0
@@ -465,9 +463,9 @@ def mixture_rebalance(df: DataFrame, strata_col: str = "lang") -> DataFrame:
     bucket = F.expr(
         f"cast(conv(substr(sha2(cast(doc_id as string), 256), 1, 8), 16, 10) "
         f"as bigint) % 1000000")
-    return (df.join(F.broadcast(rates), strata_col)
+    return (df.join(F.broadcast(rates), "lang")
             .filter(bucket < F.col("rate_e6"))
-            .select(F.col("doc_id"), F.col(strata_col), F.col("rate_e6")))
+            .select(F.col("doc_id"), F.col("lang"), F.col("rate_e6")))
 
 
 # ---------------------------------------------------------------------------
@@ -643,10 +641,9 @@ def pii_redact(df: DataFrame) -> DataFrame:
     return df.select(F.col("doc_id"), *counts, out.alias("redacted"))
 
 
-def compression_signal(df: DataFrame,
-                       level: int = 6) -> DataFrame:
-    """zlib compressibility as a quality signal (the Gopher/CCNet-family
-    heuristic): highly compressible text is repetitive boilerplate,
+def compression_signal(df: DataFrame) -> DataFrame:
+    """zlib level-6 compressibility as a quality signal (the
+    Gopher/CCNet-family heuristic): highly compressible text is repetitive boilerplate,
     incompressible text is noise/binary junk — the keep band sits in
     the middle.  Emits ``(id, n_bytes, comp_bytes, ratio_e6)`` with
     ``ratio_e6 = comp_bytes * 1e6 div n_bytes`` (exact integer
@@ -669,7 +666,7 @@ def compression_signal(df: DataFrame,
         import zlib
         drop_zip_importers()
         return texts.map(
-            lambda t: len(zlib.compress(t.encode("utf-8"), level)))
+            lambda t: len(zlib.compress(t.encode("utf-8"), 6)))
 
     return (df.filter(F.octet_length("text") > 0)
             .select(F.col("doc_id"),

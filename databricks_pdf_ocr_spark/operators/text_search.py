@@ -15,7 +15,7 @@ Scale shape (the 100 TB reading):
   lengths land in ONE hash aggregation — no corpus-wide second join;
 - document frequencies / corpus stats are aggregates over that already
   tiny posting set plus a single-row global agg, both broadcast back;
-- the final top-k is `orderBy(...).limit(k)` — Spark's TakeOrdered,
+- the final top-k is `orderBy(...).limit(20)` — Spark's TakeOrdered,
   a per-partition heap + driver merge, never a full sort to one node.
 """
 
@@ -24,9 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def bm25_topk(docs: DataFrame, query_terms: list[str],
-              k: int = 20) -> DataFrame:
-    """Okapi BM25 top-k: ``idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))``
+def bm25_topk(docs: DataFrame, query_terms: list[str]) -> DataFrame:
+    """Okapi BM25 top-20: ``idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))``
     summed over matched query terms, with k1 = 1.2 and b = 0.75;
     ``idf = ln(1 + (N-df+0.5)/(df+0.5))``.
 
@@ -72,10 +71,10 @@ def bm25_topk(docs: DataFrame, query_terms: list[str],
                     F.floor(F.col("score") * 1e4 + F.lit(0.5))
                     .cast("long").alias("score_e4"))
             .orderBy(F.col("score_e4").desc(), F.col("doc_id"))
-            .limit(k))
+            .limit(20))
 
-def tfidf_topterms(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Per-document top-k TF-IDF terms — the keyword/feature-extraction
+def tfidf_topterms(docs: DataFrame) -> DataFrame:
+    """Per-document top-3 TF-IDF terms — the keyword/feature-extraction
     twin of ``bm25_topk`` (that one ranks docs for a query; this one
     summarises every doc): ``tf * ln((N+1)/(df+1))``, the smoothed IDF
     that never divides by zero and stays positive.
@@ -85,7 +84,7 @@ def tfidf_topterms(docs: DataFrame, k: int = 3) -> DataFrame:
     (never a count-DISTINCT Expand); corpus size is a single-row agg
     cross-joined broadcast.  The tf↔df join keys on term — vocab-sized,
     far smaller than the corpus, AQE picks broadcast when it fits.  The
-    per-doc top-k is a window over the doc partition: every doc ranks
+    per-doc top-3 is a window over the doc partition: every doc ranks
     in parallel, no global sort.
 
     Emits ``(doc_id, word, tfidf_e6)`` floor-scaled to 1e-6 ints (the
@@ -107,14 +106,14 @@ def tfidf_topterms(docs: DataFrame, k: int = 3) -> DataFrame:
     n = docs.agg(F.count("*").cast("double").alias("n_docs"))
     score = F.col("tf") * F.log((F.col("n_docs") + 1.0)
                                 / (F.col("df") + 1))
-    # per-doc top-k WITHOUT a window: a row_number window must exchange
+    # per-doc top-3 WITHOUT a window: a row_number window must exchange
     # AND fully sort the (doc, term) table; a hash-agg collect_list +
     # array_sort + slice gets partial aggregation map-side and sorts
     # only each doc's own (tens of) terms.  Ordering key (-score, word)
     # ascending == (score desc, word asc), the window's order; IDF ≥ 0
     # so the negation is exact and -0.0 compares equal to 0.0.
     top = F.slice(F.array_sort(F.collect_list(
-        F.struct((-score).alias("ns"), F.col("word")))), 1, k)
+        F.struct((-score).alias("ns"), F.col("word")))), 1, 3)
     return (tf.join(dfreq, "word")
             .crossJoin(F.broadcast(n))
             .groupBy("doc_id")

@@ -63,8 +63,8 @@ def downsample_gapfill(events: DataFrame) -> DataFrame:
                      .alias("sum_value")))
 
 
-def moving_window(events: DataFrame, window: int = 4) -> DataFrame:
-    """Trailing ``window``-hour rolling value sum per dim — the
+def moving_window(events: DataFrame) -> DataFrame:
+    """Trailing 4-hour rolling value sum per dim — the
     continuous-aggregate consumer the gap fill exists FOR: only on a
     dense grid does a ROWS frame mean "last N hours"; on a sparse one
     it silently means "last N hours WITH events" (and the rolling mean
@@ -80,7 +80,7 @@ def moving_window(events: DataFrame, window: int = 4) -> DataFrame:
     lands exactly on .5 at 3 dp)."""
     from pyspark.sql import Window
     w = (Window.partitionBy("event_type").orderBy("hr")
-         .rowsBetween(-(window - 1), 0))
+         .rowsBetween(-3, 0))
     return (downsample_gapfill(events)
             .withColumn(
                 "win_sum_e2",

@@ -1386,8 +1386,7 @@ FROM t""")
 def profile_orders(spark, sf_dir):
     """One-pass table profiler over orders: per-column null count, exact
     distinct cardinality, typed min/max — the admission sweep for a new
-    data drop.  Single agg (one Expand for the exact distincts; HLL
-    sketches via approx=True are the open-web-scale path)."""
+    data drop.  Single agg (one Expand for the exact distincts)."""
     from .operators.profile import profile_table
     t = _t(spark, sf_dir, "orders").withColumn(
         "o_orderdate_us",
@@ -1684,7 +1683,7 @@ WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.12
 """)
 def dedup_ngram_jaccard(spark, sf_dir):
     return dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"),
-                                     n=3, threshold=0.12)
+                                     threshold=0.12)
 
 
 @register("dedup_prefix_exact", """
@@ -1716,8 +1715,7 @@ def dedup_prefix_exact(spark, sf_dir):
     that both engines ran the same shortcut.  All threshold math is
     integer cross-multiplication on both sides (float ceil/>= at the
     0.95 boundary is where engines disagree)."""
-    return dedup.prefix_filter_pairs(_t(spark, sf_dir, "documents"),
-                                     t_num=19, t_den=20)
+    return dedup.prefix_filter_pairs(_t(spark, sf_dir, "documents"))
 
 
 def _minhash_sql(src: str = "documents") -> str:
@@ -2021,7 +2019,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 def dedup_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs via pigeonhole chunk join — cross-checked
     against the identical formulation in DuckDB (bit_count/xor parity)."""
-    return dedup.simhash_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
+    return dedup.simhash_pairs(_t(spark, sf_dir, "documents"))
 
 
 _COS = """
@@ -2049,7 +2047,7 @@ def embed_cosine_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    return similarity.brute_force_topk(emb, q, k=5, qid_col="query_id") \
+    return similarity.brute_force_topk(emb, q, k=5) \
         .withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -2076,7 +2074,7 @@ def hard_negatives(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    return (similarity.hard_negative_topk(emb, q, k=5, pos_threshold=0.95)
+    return (similarity.hard_negative_topk(emb, q)
             .withColumn("rank", F.col("rank").cast("int")))
 
 
@@ -2116,7 +2114,7 @@ def _ann_lsh_sql() -> str:
     bits packed into the identical little-endian band values, OR-of-bands
     candidate join, exact cosine re-rank."""
     r = _ANN_PLANES // _ANN_BANDS
-    planes = [similarity.plane_vector(p, _ANN_DIM, seed=1)
+    planes = [similarity.plane_vector(p, _ANN_DIM)
               for p in range(_ANN_PLANES)]
     dot_cols = ",\n         ".join(
         f"list_sum(list_transform(range(1, {_ANN_DIM + 1}), i -> "
@@ -2274,8 +2272,7 @@ def ann_ivf_quantized(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    return similarity.ivf_topk_quantized(emb, q, k=5, n_clusters=16,
-                                         nprobe=4)
+    return similarity.ivf_topk_quantized(emb, q)
 
 
 @register("pack_sequences", """
@@ -2301,8 +2298,7 @@ def pack_sequences(spark, sf_dir):
     running token sums → each doc's (first_seq, last_seq,
     start_in_seq) for fixed 2048-token sequences.  All integer math —
     the oracle recomputes the identical window recursion."""
-    return text_analysis.pack_plan(_t(spark, sf_dir, "documents"),
-                                   seq_len=2048, n_shards=32)
+    return text_analysis.pack_plan(_t(spark, sf_dir, "documents"))
 
 
 @register("text_repetition", """
@@ -2330,7 +2326,7 @@ def text_repetition(spark, sf_dir):
     linear sorted-run ``aggregate`` scan per doc; the oracle recomputes
     via unnest + two hash-aggs (plan-free equivalence).  All integers."""
     return text_analysis.repetition_features(
-        _t(spark, sf_dir, "documents"), n=2)
+        _t(spark, sf_dir, "documents"))
 
 
 @register("decontaminate", """
@@ -2371,7 +2367,7 @@ def decontaminate(spark, sf_dir):
     contamination check).  The eval side is broadcast — the corpus is
     never shuffled."""
     return text_analysis.contamination_pairs(
-        _t(spark, sf_dir, "documents"), eval_mod=20, n=3, min_common=2)
+        _t(spark, sf_dir, "documents"))
 
 
 def _semdedup_sql(threshold: float = 0.9) -> str:
@@ -2398,7 +2394,7 @@ def semdedup_pairs(spark, sf_dir):
     ≈ 0.48-0.6), so the gate threshold is 0.35 to exercise a non-empty
     result at every sf; production runs ~0.9."""
     return similarity.semantic_dedup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.35, n_clusters=16)
+        _t(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
 @register("embed_cosine_topk_quantized", """
@@ -2442,7 +2438,7 @@ def embed_cosine_topk_quantized(spark, sf_dir):
     is floating point, identical IEEE ops in both engines)."""
     qz = similarity.quantize_embeddings(_t(spark, sf_dir, "embeddings"))
     queries = qz.filter(F.col("id") < 8)
-    return similarity.quantized_topk(qz, queries, k=5)
+    return similarity.quantized_topk(qz, queries)
 
 
 @register("ann_lsh_upsert", _ann_lsh_sql())
@@ -2467,7 +2463,7 @@ def ann_lsh_upsert(spark, sf_dir):
     n1 = similarity.lsh_index_upsert(io, delta, dim=dim)
     n2 = similarity.lsh_index_upsert(io, delta, dim=dim)
     assert n1 > 0 and n2 == 0, (n1, n2)
-    return similarity.lsh_ann_topk_indexed(io, q, k=5, dim=dim)
+    return similarity.lsh_ann_topk_indexed(io, q, dim=dim)
 
 
 @register("ann_ivf_upsert", _ann_ivf_sql(train_where="vec_id < 256"))
@@ -2491,11 +2487,11 @@ def ann_ivf_upsert(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
     io = TableIO(spark, tempfile.mkdtemp(prefix="ivf_upsert_"))
-    similarity.build_ivf_index(build, io, n_clusters=16)
+    similarity.build_ivf_index(build, io)
     n1 = similarity.ivf_index_upsert(io, delta)
     n2 = similarity.ivf_index_upsert(io, delta)   # idempotent re-run
     assert n1 > 0 and n2 == 0, (n1, n2)
-    return similarity.ivf_topk_indexed(io, q, k=5, nprobe=4)
+    return similarity.ivf_topk_indexed(io, q)
 
 
 @register("embed_quantize", """
@@ -2536,7 +2532,7 @@ def ann_lsh_topk(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
     dim = len(emb.select("embedding").first()[0])
-    return similarity.lsh_ann_topk(emb, q, k=5, dim=dim)
+    return similarity.lsh_ann_topk(emb, q, dim=dim)
 
 
 @register("ann_lsh_indexed", _ann_lsh_sql())
@@ -2555,7 +2551,7 @@ def ann_lsh_indexed(spark, sf_dir):
     dim = len(emb.select("embedding").first()[0])
     io = TableIO(spark, tempfile.mkdtemp(prefix="lsh_idx_"))
     similarity.build_lsh_index(emb, io, dim=dim)
-    return similarity.lsh_ann_topk_indexed(io, q, k=5, dim=dim)
+    return similarity.lsh_ann_topk_indexed(io, q, dim=dim)
 
 
 _PQ_M, _PQ_KSUB = 4, 8
@@ -2710,7 +2706,7 @@ def ann_ivf_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    return similarity.ivf_topk(emb, q, k=5, n_clusters=16, nprobe=4)
+    return similarity.ivf_topk(emb, q)
 
 
 @register("ann_ivf_indexed", _ann_ivf_sql())
@@ -2728,8 +2724,8 @@ def ann_ivf_indexed(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
     io = TableIO(spark, tempfile.mkdtemp(prefix="ivf_idx_"))
-    similarity.build_ivf_index(emb, io, n_clusters=16)
-    return similarity.ivf_topk_indexed(io, q, k=5, nprobe=4)
+    similarity.build_ivf_index(emb, io)
+    return similarity.ivf_topk_indexed(io, q)
 
 
 def _ann_queries(spark, sf_dir):
@@ -2772,7 +2768,7 @@ FROM embeddings WHERE vec_id < 8
 def ann_lsh_recall(spark, sf_dir):
     emb, q = _ann_queries(spark, sf_dir)
     dim = len(emb.select("embedding").first()[0])
-    ann = similarity.lsh_ann_topk(emb, q, k=5, dim=dim)
+    ann = similarity.lsh_ann_topk(emb, q, dim=dim)
     exact = similarity.brute_force_topk(emb, q, k=5)
     return _recall_summary(q, ann, exact, k=5, threshold=0.25)
 
@@ -2784,7 +2780,7 @@ FROM embeddings WHERE vec_id < 8
 """)
 def ann_ivf_recall(spark, sf_dir):
     emb, q = _ann_queries(spark, sf_dir)
-    ann = similarity.ivf_topk(emb, q, k=5, n_clusters=16, nprobe=4)
+    ann = similarity.ivf_topk(emb, q)
     exact = similarity.brute_force_topk(emb, q, k=5)
     return _recall_summary(q, ann, exact, k=5, threshold=0.40)
 
@@ -2864,7 +2860,7 @@ SELECT doc_id,
 FROM sh
 """)
 def doc_fingerprint(spark, sf_dir):
-    return text_analysis.fingerprints(_t(spark, sf_dir, "documents"), n=5, keep=4)
+    return text_analysis.fingerprints(_t(spark, sf_dir, "documents"))
 
 
 # ===========================================================================
@@ -3243,24 +3239,26 @@ def media_refs_resolve(spark, sf_dir):
     the span count itself hash-checked against the extraction golden."""
     from . import fixtures
     from .config import ExtractConfig
-    from .operators.extract import (
-        explode_spans, extract_spans_and_payloads, payload_rows,
-    )
-    from .operators.multimodal import dedup_payloads
+    from .operators.extract import explode_spans, extract_spans_and_payloads
 
     cfg = ExtractConfig(n_buckets=16, shuffle_partitions=8)
     docs = fixtures.fixture_df(spark, seed=42, n_docs=80,
                                profile=fixtures.TINY, n_partitions=8)
     out = extract_spans_and_payloads(explode_spans(docs), cfg)
-    media = (out.filter((F.col("status") == "success")
-                        & (F.col("kind") == "media")
-                        & F.col("media_ref").startswith("pdfimg:"))
-             .select("media_ref"))
-    refs = dedup_payloads(payload_rows(out)).select("media_ref")
-    unresolved = media.join(refs, "media_ref", "left_anti")
-    return (media.agg(F.count(F.lit(1)).cast("long").alias("n_media_spans"))
-            .crossJoin(unresolved.agg(
-                F.count(F.lit(1)).cast("long").alias("n_unresolved"))))
+    # a payload rides on its own media span's row, so one pass over the
+    # kernel output groups both sides by ref: the successful spans per
+    # ref, and whether any row of the ref carries a payload
+    per_ref = (out.filter((F.col("kind") == "media")
+                          & F.col("media_ref").startswith("pdfimg:"))
+               .groupBy("media_ref")
+               .agg(F.sum((F.col("status") == "success").cast("long"))
+                    .alias("n"),
+                    F.max(F.col("page_idx").isNotNull()).alias("paid")))
+    return per_ref.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).cast("long")
+        .alias("n_media_spans"),
+        F.coalesce(F.sum(F.when(~F.col("paid"), F.col("n"))), F.lit(0))
+        .cast("long").alias("n_unresolved"))
 
 
 _CURATE_QTHR = 450_000          # quality gate (micro-units), ~75th pct pass
@@ -3399,7 +3397,7 @@ def dedup_paragraph(spark, sf_dir):
     """Sub-document exact dedup (RefinedWeb): corpus-wide first-occurrence
     wins per 10-token chunk; oracle recomputes the identical chunking +
     ranking with DuckDB window functions."""
-    return dedup.paragraph_dedup(_t(spark, sf_dir, "documents"), k=10)
+    return dedup.paragraph_dedup(_t(spark, sf_dir, "documents"))
 
 
 @register("lm_quality", """
@@ -3583,8 +3581,7 @@ def mixture_rebalance(spark, sf_dir):
     """Uniform domain-mixture resampling: data-derived per-stratum
     acceptance rates (tiny count agg broadcast back) through the
     deterministic sha2 hash gate."""
-    return text_analysis.mixture_rebalance(_t(spark, sf_dir, "documents"),
-                                           strata_col="lang")
+    return text_analysis.mixture_rebalance(_t(spark, sf_dir, "documents"))
 
 
 @register("quality_classifier", classifier.logreg_oracle_sql())
@@ -3664,7 +3661,7 @@ def media_phash_neardup(spark, sf_dir):
     df = spark.createDataFrame(rows, "name string, content binary") \
         .repartition(6)
     hashes = multimodal.media_phash(df)
-    return multimodal.phash_pairs(hashes, max_hamming=7)
+    return multimodal.phash_pairs(hashes)
 
 
 @register("audio_ahash_neardup", """
@@ -3687,7 +3684,7 @@ def audio_ahash_neardup(spark, sf_dir):
     df = spark.createDataFrame(rows, "name string, content binary") \
         .repartition(6)
     hashes = multimodal.media_ahash(df)
-    return multimodal.phash_pairs(hashes, max_hamming=7)
+    return multimodal.phash_pairs(hashes)
 
 
 @register("video_phash_neardup", """
@@ -3709,8 +3706,7 @@ def video_phash_neardup(spark, sf_dir):
     df = spark.createDataFrame(rows, "name string, content binary") \
         .repartition(6)
     frames = multimodal.video_phash(df)
-    return multimodal.video_phash_pairs(frames, max_hamming=7,
-                                        min_frames=2)
+    return multimodal.video_phash_pairs(frames)
 
 
 @register("bm25_topk", """
@@ -3746,7 +3742,7 @@ def bm25_topk(spark, sf_dir):
     from .operators import text_search
 
     docs = _t(spark, sf_dir, "documents")
-    return text_search.bm25_topk(docs, ["hash", "join", "window"], k=20)
+    return text_search.bm25_topk(docs, ["hash", "join", "window"])
 
 
 @register("rrf_fusion", f"""
@@ -3803,7 +3799,7 @@ def rrf_fusion(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    lex = (text_search.bm25_topk(docs, ["hash", "join", "window"], k=20)
+    lex = (text_search.bm25_topk(docs, ["hash", "join", "window"])
            .withColumn("lr", F.row_number().over(
                W.orderBy(F.desc("score_e4"), F.asc("doc_id"))))
            .select("doc_id", "lr"))
@@ -3867,8 +3863,7 @@ def dedup_substring_spans(spark, sf_dir):
         F.when(F.col("doc_id") % 83 < 2,
                F.concat_ws(" ", F.col("text"), F.lit(_SUBSTR_BP)))
         .otherwise(F.col("text")).alias("text"))
-    return dd.shared_substring_spans(docs, min_tokens=12,
-                                     max_gram_docs=200)
+    return dd.shared_substring_spans(docs)
 
 
 #: per-host robots.txt variants (host hN uses variant N % 4) — exercise
@@ -4067,8 +4062,7 @@ def frontier_schedule(spark, sf_dir):
         _synth_urls(_t(spark, sf_dir, "documents")))
     pri = norm.select("doc_id", "url_norm", "host",
                       (F.col("doc_id") % 97).alias("priority"))
-    sched = linkgraph.frontier_schedule(pri, order_col="priority",
-                                        per_wave=2)
+    sched = linkgraph.frontier_schedule(pri, per_wave=2)
     return sched.select("doc_id", "host", "priority", "wave")
 
 
@@ -4130,7 +4124,7 @@ def compression_quality(spark, sf_dir):
     rows = list(fixtures.text_corpus_rows(42, 300))
     corpus = spark.createDataFrame(rows, "doc_id string, text string") \
         .repartition(8)
-    return compression_signal(corpus, level=6)
+    return compression_signal(corpus)
 
 
 @register("sample_weighted_topk", """
@@ -4270,7 +4264,7 @@ def timeseries_moving_window(spark, sf_dir):
     frame accumulation orders where a rounded mean is not."""
     from .operators.timeseries import moving_window
 
-    return moving_window(_t(spark, sf_dir, "events"), window=4)
+    return moving_window(_t(spark, sf_dir, "events"))
 
 
 @register("tfidf_topterms", """
@@ -4300,7 +4294,7 @@ def tfidf_topterms_q(spark, sf_dir):
     a window, every doc ranks in parallel."""
     from .operators.text_search import tfidf_topterms
 
-    return tfidf_topterms(_t(spark, sf_dir, "documents"), k=3)
+    return tfidf_topterms(_t(spark, sf_dir, "documents"))
 
 
 @register("key_skew_stats", """
@@ -4398,7 +4392,7 @@ def salted_join_skew(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (salted_join(ev, cust, "user_id", "c_custkey", n_salts=8)
+    return (salted_join(ev, cust, "user_id", "c_custkey")
             .select("event_id", "user_id", "c_name"))
 
 

@@ -31,7 +31,6 @@ def get_spark(
     master: str | None = None,
     app_name: str = "databricks_pdf_ocr_spark",
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 256,
     driver_memory: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
@@ -57,7 +56,7 @@ def get_spark(
         # conversion is the right default for this engine's join mix.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )

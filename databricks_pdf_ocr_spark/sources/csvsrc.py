@@ -41,26 +41,20 @@ CSV_OPTIONS = {
 }
 
 
-def read_csv_lines(spark: SparkSession, path: str, schema: str,
-                   header: bool = False) -> DataFrame:
+def read_csv_lines(spark: SparkSession, path: str,
+                   schema: str) -> DataFrame:
     """Raw lines → parsed struct + error tagging.
 
     ``schema`` is the DDL of the DATA columns (e.g. ``"doc_id BIGINT,
     text STRING"``).  Returns one row per input line with the typed
     columns, plus ``_error`` (null for good rows) and ``_raw`` (the
     original line, kept only on error rows so the audit trail costs
-    nothing on the good path).
+    nothing on the good path).  Files carry no header line: one would
+    be an error row.
     """
     lines = (spark.read.format("text").load(path)
              .select(F.col("value"),
                      F.input_file_name().alias("_file")))
-    if header:
-        # headers repeat PER FILE under a text scan; drop any line that
-        # is byte-equal to the header projection of the schema
-        header_line = ",".join(
-            f.strip().split(" ")[0] for f in schema.split(","))
-        lines = lines.filter(
-            F.trim(F.col("value")) != F.lit(header_line))
     lines = lines.filter(F.length(F.trim("value")) > 0)
     parsed = lines.select(
         "value", "_file",

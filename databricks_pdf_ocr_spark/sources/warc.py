@@ -510,8 +510,7 @@ def warc_to_documents(records: DataFrame,
             .select(*cols))
 
 
-def wet_to_documents(records: DataFrame,
-                     with_uri: bool = False) -> DataFrame:
+def wet_to_documents(records: DataFrame) -> DataFrame:
     """WET sidecar mouth: Common Crawl ships ``*.warc.wet.gz`` segments
     whose ``conversion`` records carry ALREADY-EXTRACTED plain text (no
     HTTP framing — the record body IS the document).  Projects them onto
@@ -542,8 +541,6 @@ def wet_to_documents(records: DataFrame,
             decoded_text(ctype_col="content_type").alias("text"),
             F.lit(None).cast("string").alias("media_ref"),
             F.lit(0).alias("offset"))).alias("spans")]
-    if with_uri:
-        cols.append(F.col("target_uri"))
     return (records.filter(wet_like)
             .withColumn("__rn", F.row_number().over(win))
             .filter(F.col("__rn") == 1)

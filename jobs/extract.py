@@ -88,9 +88,11 @@ def _restore_gc_staging(io) -> int:
     silently destroyed it on the next run (round-4 ADVICE medium).  So
     on entry any non-empty staging is appended back to MEDIA_TABLE
     FIRST, then dropped.  Over-restoring (crash landed after a partial
-    or full append) only duplicates byte-identical content-addressed
-    rows, which ``multimodal.dedup_payloads`` collapses on read — loss
-    is impossible, duplication is self-healing.  Returns rows restored.
+    or full append) only duplicates rows: byte-identical per
+    content-addressed ref, and per ``(doc_id, offset)`` for the null-ref
+    error rows; ``multimodal.dedup_payloads`` collapses both on read —
+    loss is impossible, duplication is self-healing.  Returns rows
+    restored.
     """
     staging = MEDIA_TABLE + "__gc"
     leftover = io.read(staging)

@@ -6,13 +6,22 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from databricks_pdf_ocr_spark.config import ExtractConfig
 from databricks_pdf_ocr_spark.session import get_spark
+
+#: Small-payload config for unit tests — a 64 KiB size guard lets
+#: fixtures exercise the oversize-failure path cheaply; tests exercise
+#: the salted path
+TEST_CONFIG = ExtractConfig(max_payload_bytes=64 * 1024, max_pages_per_doc=16,
+                            n_buckets=8, shuffle_partitions=8,
+                            salt_spans=True)
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="tests",
-                  shuffle_partitions=8, arrow_batch_rows=64)
+    s = get_spark(master="local[8]", app_name="tests", shuffle_partitions=8,
+                  extra_conf={
+                      "spark.sql.execution.arrow.maxRecordsPerBatch": "64"})
     yield s
     s.stop()
 

@@ -2,7 +2,7 @@
 
 Cross-engine parity of the full training trajectory is covered by the
 `quality_classifier` oracle row (tools/check_oracle.py, all 3 sfs); these
-tests cover learning behavior, determinism, custom supervision, and the
+tests cover learning behavior, determinism, weight quantization, and the
 plan shape of the training loop.
 """
 
@@ -14,7 +14,7 @@ from databricks_pdf_ocr_spark.operators import classifier
 
 
 def _corpus(spark, n=120):
-    """Synthetic corpus where docs with token 'alpha' are the positive
+    """Synthetic corpus where docs with the label token are the positive
     class; filler vocabulary is shared across classes."""
     filler = ["red", "green", "blue", "cyan", "teal", "plum", "gold",
               "iron", "sand", "mist"]
@@ -22,17 +22,14 @@ def _corpus(spark, n=120):
     for i in range(n):
         words = [filler[(i * 7 + j) % len(filler)] for j in range(12)]
         if i % 3 == 0:
-            words.insert(i % 12, "alpha")
+            words.insert(i % 12, classifier.LABEL_TOKEN)
         rows.append((i, " ".join(words)))
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def test_recovers_keyword_rule(spark):
     docs = _corpus(spark)
-    scored = classifier.quality_classifier(
-        spark, docs,
-        label_expr=F.array_contains(F.split("text", " "), "alpha"),
-        epochs=16).collect()
+    scored = classifier.quality_classifier(spark, docs).collect()
     assert len(scored) == 120
     acc = sum(r["pred"] == r["label"] for r in scored) / len(scored)
     majority = max(sum(r["label"] for r in scored) / len(scored),
@@ -42,11 +39,10 @@ def test_recovers_keyword_rule(spark):
 
 def test_deterministic(spark):
     docs = _corpus(spark, n=60)
-    lab = F.array_contains(F.split("text", " "), "alpha")
     a = sorted(map(tuple, classifier.quality_classifier(
-        spark, docs, label_expr=lab, epochs=4).collect()))
+        spark, docs).collect()))
     b = sorted(map(tuple, classifier.quality_classifier(
-        spark, docs, label_expr=lab, epochs=4).collect()))
+        spark, docs).collect()))
     assert a == b
 
 
@@ -54,10 +50,10 @@ def test_weights_quantized(spark):
     docs = _corpus(spark, n=60)
     labels = docs.select(
         F.col("doc_id").alias("id"),
-        F.array_contains(F.split("text", " "), "alpha")
+        F.array_contains(F.split("text", " "), classifier.LABEL_TOKEN)
         .cast("double").alias("y"))
     feats = classifier.hashed_features(docs)
-    w = classifier.train_logreg(spark, feats, labels, epochs=2)
+    w = classifier.train_logreg(spark, feats, labels)
     assert len(w) == classifier.DIM + 1
     for v in w.values():
         assert v == classifier._quantize(v)  # exact 1e-6 grid

@@ -34,14 +34,6 @@ def test_dirty_lines_become_error_rows(spark, tmp_path):
     assert good.count() + errs.count() == 6
 
 
-def test_header_lines_skipped_per_file(spark, tmp_path):
-    for name in ("a.csv", "b.csv"):
-        _write(tmp_path / name, "id,txt,lang\n1,x,en\n2,y,fr\n")
-    parsed = csvsrc.read_csv_lines(spark, str(tmp_path), SCHEMA, header=True)
-    assert csvsrc.error_rows(parsed).count() == 0
-    assert csvsrc.good_rows(parsed).count() == 4
-
-
 def test_gz_files_parse(spark, tmp_path):
     with gzip.open(tmp_path / "a.csv.gz", "wt") as f:
         f.write("\n".join(f"{i},t{i},en" for i in range(10)))

@@ -8,11 +8,11 @@ from databricks_pdf_ocr_spark.operators import dedup
 # exact-substring spans
 # ---------------------------------------------------------------------------
 
-def _span_rows(spark, rows, **kw):
+def _span_rows(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     return sorted((r["id_a"], r["id_b"], r["a_start"], r["b_start"],
                    r["n_tokens"])
-                  for r in dedup.shared_substring_spans(df, **kw).collect())
+                  for r in dedup.shared_substring_spans(df).collect())
 
 
 def test_substring_spans_maximal_run_and_offsets(spark):
@@ -20,7 +20,7 @@ def test_substring_spans_maximal_run_and_offsets(spark):
     rows = [(1, "a1 a2 a3 " + shared + " a4"),
             (2, "b1 " + shared),
             (3, " ".join(f"c{i}" for i in range(13)))]
-    assert _span_rows(spark, rows, min_tokens=12) == [(1, 2, 4, 2, 16)]
+    assert _span_rows(spark, rows) == [(1, 2, 4, 2, 16)]
 
 
 def test_substring_spans_two_disjoint_spans_per_pair(spark):
@@ -28,31 +28,31 @@ def test_substring_spans_two_disjoint_spans_per_pair(spark):
     s2 = " ".join(f"y{i}" for i in range(13))
     rows = [(1, s1 + " gap1 gap2 " + s2),
             (2, s2 + " other filler words here " + s1)]
-    got = _span_rows(spark, rows, min_tokens=12)
+    got = _span_rows(spark, rows)
     assert got == [(1, 2, 1, 18, 12), (1, 2, 15, 1, 13)]
 
 
 def test_substring_spans_boilerplate_cap(spark):
-    """A gram shared by more docs than max_gram_docs must be dropped —
-    the quadratic-pair guard."""
+    """A gram shared by more than 200 docs must be dropped — the
+    quadratic-pair guard."""
     bp = " ".join(f"b{i}" for i in range(12))
-    rows = [(i, f"u{i} " + bp) for i in range(6)]
-    assert _span_rows(spark, rows, min_tokens=12, max_gram_docs=5) == []
-    got = _span_rows(spark, rows, min_tokens=12, max_gram_docs=6)
-    assert len(got) == 15                      # C(6,2), all pairs found
+    rows = [(i, f"u{i} " + bp) for i in range(201)]
+    assert _span_rows(spark, rows) == []
+    got = _span_rows(spark, rows[:200])
+    assert len(got) == 200 * 199 // 2          # C(200,2), all pairs found
 
 
 def test_substring_spans_short_docs_and_no_false_positives(spark):
     rows = [(1, "one two three"), (2, "one two three"),
             (3, " ".join(f"z{i}" for i in range(30)))]
-    assert _span_rows(spark, rows, min_tokens=12) == []
+    assert _span_rows(spark, rows) == []
 
 
 # ---------------------------------------------------------------------------
 # prefix-filter exact set-similarity join (AllPairs/PPJoin)
 # ---------------------------------------------------------------------------
 
-def _brute_jaccard_pairs(rows, t_num, t_den):
+def _brute_jaccard_pairs(rows):
     """Sequential all-pairs truth with the same integer threshold math."""
     sets = {i: {w for w in text.lower().split(" ") if w} for i, text in rows}
     out = set()
@@ -64,14 +64,14 @@ def _brute_jaccard_pairs(rows, t_num, t_den):
                 continue
             inter = len(sets[a] & sets[b])
             uni = len(sets[a] | sets[b])
-            if inter * t_den >= uni * t_num:
+            if inter * dedup.T_DEN >= uni * dedup.T_NUM:
                 out.add((a, b, inter * 1000000 // uni))
     return out
 
 
-def _prefix_pairs(spark, rows, t_num, t_den):
+def _prefix_pairs(spark, rows):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = dedup.prefix_filter_pairs(df, t_num=t_num, t_den=t_den).collect()
+    got = dedup.prefix_filter_pairs(df).collect()
     pairs = {(r["doc_a"], r["doc_b"]) for r in got}
     assert len(pairs) == len(got)              # no duplicate pairs
     return {(r["doc_a"], r["doc_b"], r["jaccard_e6"]) for r in got}
@@ -79,7 +79,7 @@ def _prefix_pairs(spark, rows, t_num, t_den):
 
 def test_prefix_filter_matches_bruteforce(spark):
     """Exact recall AND precision vs a sequential all-pairs oracle on a
-    corpus with graded overlap (95%, 80%, 50%, disjoint)."""
+    corpus with graded overlap (identical, 19/21, 16/24, disjoint)."""
     base = [f"w{i}" for i in range(20)]
     rows = [
         (1, " ".join(base)),
@@ -89,10 +89,9 @@ def test_prefix_filter_matches_bruteforce(spark):
         (5, " ".join(f"z{i}" for i in range(20))),  # disjoint
         (6, ""),                                    # empty → excluded
     ]
-    for t_num, t_den in ((19, 20), (9, 10), (4, 5), (1, 2)):
-        got = _prefix_pairs(spark, rows, t_num, t_den)
-        want = _brute_jaccard_pairs([(i, s) for i, s in rows], t_num, t_den)
-        assert got == want, (t_num, t_den)
+    got = _prefix_pairs(spark, rows)
+    assert got == _brute_jaccard_pairs(rows)
+    assert got == {(1, 3, 1000000)}
 
 
 def test_prefix_filter_integer_ceil_boundary(spark):
@@ -103,9 +102,9 @@ def test_prefix_filter_integer_ceil_boundary(spark):
     base = [f"w{i}" for i in range(19)]
     rows = [(1, " ".join(base + ["only_a"])),
             (2, " ".join(base + ["only_b"]))]        # J = 19/21 < 19/20
-    got = _prefix_pairs(spark, rows, 19, 20)
+    got = _prefix_pairs(spark, rows)
     assert got == set()                                # below threshold
     rows2 = [(1, " ".join(base + ["only_a"])),
              (2, " ".join(base))]                      # J = 19/20 == t
-    got2 = _prefix_pairs(spark, rows2, 19, 20)
+    got2 = _prefix_pairs(spark, rows2)
     assert got2 == {(1, 2, 19 * 1000000 // 20)}

@@ -51,11 +51,12 @@ def test_simhash_modes(corpus, mode):
           dedup.simhash(corpus, hash_mode=mode).collect()}
     assert fp["dup_a"] == fp["dup_b"]
     assert 0 <= fp["dup_a"] < 2 ** 32
-    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in
-             dedup.simhash_pairs(corpus, max_hamming=6,
-                                 hash_mode=mode).collect()}
-    assert pairs[("dup_a", "dup_b")] == 0
-    assert ("near_a", "near_b") in pairs
+    assert bin(fp["near_a"] ^ fp["near_b"]).count("1") <= 6
+    if mode == "sha2":              # simhash_pairs' token hash
+        pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in
+                 dedup.simhash_pairs(corpus).collect()}
+        assert pairs[("dup_a", "dup_b")] == 0
+        assert ("near_a", "near_b") in pairs
 
 
 def test_modes_agree_true_on_dup_free_corpus(spark, tmp_path):

@@ -5,7 +5,7 @@ north-rule invariant."""
 import pytest
 
 from databricks_pdf_ocr_spark import fixtures
-from databricks_pdf_ocr_spark.config import TEST_CONFIG
+from conftest import TEST_CONFIG
 from databricks_pdf_ocr_spark.operators.extract import (
     explode_spans, reassemble, run_extraction,
 )

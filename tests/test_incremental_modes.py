@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from databricks_pdf_ocr_spark import fixtures
-from databricks_pdf_ocr_spark.config import TEST_CONFIG
+from conftest import TEST_CONFIG
 from databricks_pdf_ocr_spark.operators.extract import (
     bucket_col, run_extraction,
 )

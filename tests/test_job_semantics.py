@@ -12,9 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from databricks_pdf_ocr_spark import fixtures
-from databricks_pdf_ocr_spark.config import (
-    TEST_CONFIG, ExtractConfig, load_config,
-)
+from conftest import TEST_CONFIG
+from databricks_pdf_ocr_spark.config import ExtractConfig, load_config
 from databricks_pdf_ocr_spark.schemas import DOCUMENTS_SCHEMA
 from jobs.extract import EXTRACTED_TABLE, RESULTS_TABLE, build_parser, run_job
 from tools.goldens import golden_extract

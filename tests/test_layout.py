@@ -48,6 +48,6 @@ def test_dense_ids_match_global_order_on_skewed_input(spark):
     df = spark.createDataFrame([(k,) for k in keys], "k string") \
         .repartition(13)
     got = {r["k"]: r["row_id"] for r in
-           layout.assign_dense_ids(df, "k", n_parts=5).collect()}
+           layout.assign_dense_ids(df, "k").collect()}
     expect = {k: i for i, k in enumerate(sorted(keys))}
     assert got == expect

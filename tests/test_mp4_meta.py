@@ -20,7 +20,7 @@ def box(btype: bytes, body: bytes, largesize: bool = False) -> bytes:
 
 def test_largesize_and_size0_boxes():
     frames = [b"\xff\xd8frame-%d\xff\xd9" % i for i in range(3)]
-    mp4 = mp4mini.write_mjpeg(frames, fps=1)
+    mp4 = mp4mini.write_mjpeg(frames)
     off = mp4.rindex(b"moov") - 4           # ftyp + mdat + moov: moov last
     # 64-bit largesize header on the moov box: mdat offsets stay put
     body = mp4[off + 8:]
@@ -77,17 +77,17 @@ def test_mjpeg_container_roundtrip():
     embedded JPEG bytes with the constant-rate timestamps."""
     frames = _jpeg_samples()
     assert len(frames) >= 2
-    mp4 = mp4mini.write_mjpeg(frames, fps=2, width=300, height=200)
+    mp4 = mp4mini.write_mjpeg(frames, width=300, height=200)
     codec, samples = mp4mini.video_samples(mp4)
     assert codec == "jpeg" and len(samples) == len(frames)
     got = mp4mini.mjpeg_frames(mp4)
     assert [b for _, b in got] == frames
-    assert [t for t, _ in got] == [i * 500 for i in range(len(frames))]
+    assert [t for t, _ in got] == [i * 1000 for i in range(len(frames))]
 
 
 def test_mjpeg_frames_rejects_non_mjpeg_codec():
     frames = [b"\xff\xd8fake\xff\xd9"]
-    mp4 = mp4mini.write_mjpeg(frames, fps=1)
+    mp4 = mp4mini.write_mjpeg(frames)
     i = mp4.index(b"stsd") + 16                 # stsd entry fourcc
     assert mp4[i:i + 4] == b"jpeg"
     patched = mp4[:i] + b"avc1" + mp4[i + 4:]

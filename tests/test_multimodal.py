@@ -1,6 +1,7 @@
 """Perceptual media near-dup: dHash rows over the real image codecs and
 the Hamming-banded pair join."""
 
+import itertools
 from pathlib import Path
 
 from databricks_pdf_ocr_spark.operators import multimodal
@@ -18,7 +19,7 @@ def test_media_phash_rows_and_error_contract(spark):
     from databricks_pdf_ocr_spark import fixtures
     from databricks_pdf_ocr_spark.functions import jpegenc
 
-    rows = list(fixtures.image_corpus_rows(7, n_base=2, variants=3))
+    rows = list(itertools.islice(fixtures.image_corpus_rows(7), 6))
     # the baseline-JPEG and lossy-WebP (VP8) decode routes
     grad = bytes((x * 9 + y * 5 + c * 40) % 256
                  for y in range(24) for x in range(32) for c in range(3))
@@ -46,7 +47,7 @@ def test_decode_media_schema_and_determinism(spark):
     from databricks_pdf_ocr_spark import fixtures
 
     df = spark.createDataFrame(
-        list(fixtures.image_corpus_rows(3, n_base=4, variants=3)),
+        list(itertools.islice(fixtures.image_corpus_rows(3), 12)),
         "name string, content binary").repartition(4)
     hashes = multimodal.media_phash(df)
     assert hashes.columns == ["media_id", "phash", "format", "hash_ok",
@@ -62,13 +63,11 @@ def test_decode_media_schema_and_determinism(spark):
 def test_phash_pairs_banding_equals_brute_force(spark):
     """The pigeonhole equi-join must find exactly the pairs a full
     pairwise comparison finds."""
-    import itertools
-
     from databricks_pdf_ocr_spark import fixtures
     from databricks_pdf_ocr_spark.functions import imghash
     from databricks_pdf_ocr_spark.operators.multimodal import _decode_pixels
 
-    rows = list(fixtures.image_corpus_rows(11, n_base=4, variants=3))
+    rows = list(itertools.islice(fixtures.image_corpus_rows(11), 12))
     hs = {}
     import hashlib as _h
     for _n, p in rows:
@@ -79,8 +78,7 @@ def test_phash_pairs_banding_equals_brute_force(spark):
         if imghash.hamming64(hs[a], hs[b]) <= 7:
             want.add((a, b))
     df = spark.createDataFrame(rows, "name string, content binary")
-    pairs = multimodal.phash_pairs(multimodal.media_phash(df),
-                                   max_hamming=7)
+    pairs = multimodal.phash_pairs(multimodal.media_phash(df))
     got = {(r["media_a"], r["media_b"]) for r in pairs.collect()}
     assert got == want and want, "banding must equal brute force"
 

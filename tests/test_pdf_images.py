@@ -13,13 +13,16 @@ import os
 import numpy as np
 import pytest
 
-from databricks_pdf_ocr_spark.config import TEST_CONFIG, ExtractConfig
+from conftest import TEST_CONFIG
+from databricks_pdf_ocr_spark.config import ExtractConfig
 from databricks_pdf_ocr_spark.functions import pdfmini, pngmini
 from databricks_pdf_ocr_spark.functions.jpegmini import decode_jpeg
 from databricks_pdf_ocr_spark.operators.extract import (
     explode_spans, extract_spans, extract_spans_and_payloads, payload_rows,
 )
-from databricks_pdf_ocr_spark.operators.multimodal import media_phash
+from databricks_pdf_ocr_spark.operators.multimodal import (
+    dedup_payloads, media_phash,
+)
 from databricks_pdf_ocr_spark.schemas import DOCUMENTS_SCHEMA
 from databricks_pdf_ocr_spark.session import local_frame
 
@@ -112,6 +115,30 @@ def test_pdf_images_operator_composes_with_phash(spark):
     hashed = media_phash(pay.filter("extract_ok")).collect()
     assert sorted(r["format"] for r in hashed) == ["jpeg", "png"]
     assert all(r["hash_ok"] for r in hashed)
+
+
+def test_dedup_payloads_keeps_every_error_row(spark):
+    """A ref's copies collapse to one row; each failed pdf span keeps
+    its own null-ref error row; a table appended twice dedups to the
+    same rows."""
+    w, h = 12, 9
+    pdf = pdfmini.write_pdf([{"image": _gray_samples(w, h),
+                              "image_format": "gray",
+                              "width": w, "height": h}])
+    docs = [("a", pdf), ("b", pdf),                  # one image, two docs
+            ("e1", b"not a pdf"), ("e2", b"nor this"), ("e3", b"%PDF-")]
+    pay = payload_rows(extract_spans_and_payloads(_pdf_spans(spark, docs),
+                                                  ExtractConfig()))
+
+    def keys(df):
+        return sorted((r["media_ref"] or "", r["doc_id"])
+                      for r in df.collect())
+
+    (ref,) = {r["media_ref"] for r in pay.collect() if r["media_ref"]}
+    once = keys(dedup_payloads(pay))
+    assert once[:3] == [("", "e1"), ("", "e2"), ("", "e3")]
+    assert [k[0] for k in once[3:]] == [ref]
+    assert keys(dedup_payloads(pay.unionByName(pay))) == once
 
 
 def test_ocr_fallback_flag_marks_the_fallback_page(spark):

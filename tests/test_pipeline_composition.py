@@ -5,7 +5,7 @@ i.e. the full training-data flow a 100 TB pipeline runs end-to-end."""
 from pyspark.sql import functions as F
 
 from databricks_pdf_ocr_spark import fixtures
-from databricks_pdf_ocr_spark.config import TEST_CONFIG
+from conftest import TEST_CONFIG
 from databricks_pdf_ocr_spark.operators import dedup, text_analysis
 from databricks_pdf_ocr_spark.operators.extract import reassemble, run_extraction
 from databricks_pdf_ocr_spark.schemas import DOCUMENTS_SCHEMA

@@ -10,7 +10,7 @@ import string
 
 from hypothesis import given, settings, strategies as st
 
-from databricks_pdf_ocr_spark.config import TEST_CONFIG
+from conftest import TEST_CONFIG
 from databricks_pdf_ocr_spark.functions import htmlmini, pdfmini
 from tools.goldens import golden_extract_doc
 

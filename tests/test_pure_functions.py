@@ -8,7 +8,7 @@ import pytest
 from databricks_pdf_ocr_spark.functions import htmlmini, ocr_fallback, pdfmini, segment
 from databricks_pdf_ocr_spark.functions.extract_span import extract_span
 from databricks_pdf_ocr_spark import fixtures
-from databricks_pdf_ocr_spark.config import TEST_CONFIG
+from conftest import TEST_CONFIG
 
 
 # ---------------------------------------------------------------- pdfmini

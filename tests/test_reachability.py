@@ -22,13 +22,17 @@ function in prose does not call it.  The walk is transitive.
 
 Parameter level: every defaulted parameter of a module-level function,
 or of a method of a module-level class, in the package or ``jobs/`` is
-passed at some call site of a function with that name anywhere in the
-repo, tests included: by keyword, by position, or through a ``*args`` /
-``**kwargs`` call.  A class call reaches ``__init__``.  Nested defs
-(closures, default-bound locals) are exempt.
+set at some call site of a function with that name outside ``tests/``:
+by keyword, by position, or through a ``*args`` / ``**kwargs`` call.  A
+class call reaches ``__init__``.  An argument that repeats the
+default's own expression sets nothing.  Nested defs (closures,
+default-bound locals) are exempt.  Every defaulted field of a
+module-level ``@dataclass`` is likewise set outside ``tests/`` by a
+class-call keyword or positional argument, a ``dataclasses.replace``
+keyword, or a key of a ``load_config`` overrides dict (the job's flags).
 
 A module or function only tests reach is dead weight, and so is a
-default nothing sets; delete it, or list it in ``ALLOWED`` /
+default no pipeline sets; delete it, or list it in ``ALLOWED`` /
 ``ALLOWED_FUNCTIONS`` / ``ALLOWED_DEFAULTS`` with the reason it must
 stay.  The allowlists stay exact.  Needs no Spark.
 """
@@ -56,6 +60,10 @@ ALLOWED_FUNCTIONS = {
     "functions/vp8lmini.py:alph_encode":
         "the fixture writer for the every-filter round-trip test of the "
         "live ALPH decoder",
+    "operators/multimodal.py:dedup_payloads":
+        "the media_payloads table's dedup-on-read, which a reader of the "
+        "table needs (crash reruns and gc restores duplicate rows); the "
+        "job tests read the table through it",
     "sources/csvsrc.py:error_rows":
         "the CSV mouth's error leg; the parse tests assert the error "
         "contract through it",
@@ -236,17 +244,54 @@ def test_every_package_function_is_reached():
 # Parameter level: every default is set by some caller
 # ---------------------------------------------------------------------------
 
-#: defaulted parameters no call sets, kept because they are deployment
-#: settings: where a deployment keeps its tables or lands its files
+#: defaulted parameters and dataclass fields no pipeline call sets, kept
+#: for one of four reasons: (a) an encoder option that builds
+#: decoder-coverage fixtures; (b) a bound on outside input, or an
+#: iteration cap, that tests shrink to reach its guard cheaply; (c) a
+#: deployment setting; (d) a name the benchmark passes or reads
 ALLOWED_DEFAULTS = {
     "sources/warc.py:read_warc_segments(glob)":
-        "the file pattern of a deployment's WARC landing directory",
+        "(c) the file pattern of a deployment's WARC landing directory",
     "sources/images.py:read_image_files(glob)":
-        "the file pattern of a deployment's image landing directory",
+        "(c) the file pattern of a deployment's image landing directory",
     "sources/images.py:read_image_files(recursive)":
-        "whether a deployment's image landing directory is nested",
+        "(c) whether a deployment's image landing directory is nested",
     "streaming/ingest.py:ingest_available(max_files_per_trigger)":
-        "the micro-batch size a deployment's landing stream admits",
+        "(c) the micro-batch size a deployment's landing stream admits",
+    "sources/tables.py:IcebergTableIO.__init__(namespace)":
+        "(c) the Iceberg catalog namespace a deployment keeps its tables in",
+    "jobs/bench_scaling.py:record(bench_dir)":
+        "(c) where a checkout keeps its scaling record; tests record into "
+        "a temporary directory",
+    "functions/gifmini.py:encode_gif(interlace)":
+        "(a) builds the interlaced fixtures of the GIF decoder tests",
+    "functions/gifmini.py:encode_gif(local_palettes)":
+        "(a) builds the local-palette fixtures of the GIF decoder tests",
+    "functions/gifmini.py:encode_gif(loop)":
+        "(a) builds the looping-animation fixtures of the GIF decoder tests",
+    "functions/pngmini.py:encode_png(filter_type)":
+        "(a) builds the per-filter fixtures of the PNG decoder tests",
+    "functions/vp8lmini.py:alph_encode(filt)":
+        "(a) builds the per-filter fixtures of the ALPH decoder tests",
+    "sources/warc.py:write_warc(gzip_per_record)":
+        "(a) builds the whole-file-gzip fixtures of the WARC reader tests",
+    "sources/warc.py:iter_warc_stream(max_record_bytes)":
+        "(b) the record-size bound on crawl input; tests shrink it to "
+        "reach the oversize error cheaply",
+    "sources/warc.py:_decompress_entity(max_bytes)":
+        "(b) the inflation bound on a compressed HTTP entity; tests "
+        "shrink it to reach the decompression-bomb guard cheaply",
+    "operators/dedup.py:neardup_components(max_iter)":
+        "(b) the frontier loop's round cap; tests shrink it to reach "
+        "the non-convergence error cheaply",
+    "config.py:ExtractConfig.max_payload_bytes":
+        "(d) read by extractbench/trace.py:functions_probe",
+    "config.py:ExtractConfig.max_pages_per_doc":
+        "(d) read by extractbench/trace.py:functions_probe",
+    "config.py:ExtractConfig.max_retries":
+        "(d) read by extractbench/trace.py:functions_probe",
+    "config.py:ExtractConfig.retry_backoff_s":
+        "(d) read by extractbench/trace.py:functions_probe",
 }
 
 
@@ -282,29 +327,44 @@ def _calls(trees: list[ast.Module]) -> dict[str, list[ast.Call]]:
     return out
 
 
-def _sets(call: ast.Call, param: str, pos: int | None) -> bool:
+def _differs(value: ast.AST, default: ast.AST | None) -> bool:
+    """``value`` is not the default's own expression (``None``: a
+    default factory, which no argument repeats)."""
+    return default is None or ast.dump(value) != ast.dump(default)
+
+
+def _sets(call: ast.Call, param: str, pos: int | None,
+          default: ast.AST | None, splat: bool = True) -> bool:
     """``call`` passes ``param``, the ``pos``-th positional argument of
-    the bound callee (None for a keyword-only parameter)."""
+    the bound callee (None for a keyword-only parameter), a value other
+    than its ``default``; a ``**`` splat counts only with ``splat``."""
     for kw in call.keywords:
-        if kw.arg is None or kw.arg == param:
+        if kw.arg is None and splat:
             return True
+        if kw.arg == param:
+            return _differs(kw.value, default)
     if pos is None:
         return False
     for i, a in enumerate(call.args):
-        if isinstance(a, ast.Starred) or i == pos:
+        if isinstance(a, ast.Starred):
             return i <= pos
+        if i == pos:
+            return _differs(a, default)
     return False
 
 
-def _defaulted(d: ast.AST, bound: bool) -> list[tuple[str, int | None]]:
-    """``(name, bound positional index)`` of each defaulted parameter of
-    ``d``; a bound method's first parameter is not counted."""
+def _defaulted(d: ast.AST, bound: bool):
+    """``(name, bound positional index, default)`` of each defaulted
+    parameter of ``d``; a bound method's first parameter is not
+    counted."""
     a = d.args
     pos = [*a.posonlyargs, *a.args]
     skip = 1 if bound else 0
-    out = [(p.arg, i - skip) for i, p in enumerate(pos)
-           if i >= len(pos) - len(a.defaults)]
-    return out + [(p.arg, None) for p, v in zip(a.kwonlyargs, a.kw_defaults)
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, i - skip, a.defaults[i - first])
+           for i, p in enumerate(pos) if i >= first]
+    return out + [(p.arg, None, v) for p, v in zip(a.kwonlyargs,
+                                                   a.kw_defaults)
                   if v is not None]
 
 
@@ -325,30 +385,91 @@ def _checked_defs(tree: ast.Module):
                     yield f"{st.name}.{m.name}", names, m, not static
 
 
+def _dataclass_fields(tree: ast.Module):
+    """``(class name, field, positional index, default)`` of each
+    defaulted field of a module-level ``@dataclass``; ``default`` is
+    None for a ``field(default_factory=...)``."""
+    for st in tree.body:
+        if not (isinstance(st, ast.ClassDef) and any(
+                (_callee(x) if isinstance(x, ast.Call) else
+                 _callee(ast.Call(x, [], []))) == "dataclass"
+                for x in st.decorator_list)):
+            continue
+        anns = [b for b in st.body if isinstance(b, ast.AnnAssign)
+                and isinstance(b.target, ast.Name)]
+        for i, b in enumerate(anns):
+            if b.value is None:
+                continue
+            default = b.value
+            if isinstance(default, ast.Call) and _callee(default) == "field":
+                kws = {k.arg: k.value for k in default.keywords}
+                default = kws.get("default")
+            yield st.name, b.target.id, i, default
+
+
+def _overrides(call: ast.Call) -> ast.AST | None:
+    """The overrides dict a ``load_config`` call passes."""
+    args = [*call.args[:1], *(k.value for k in call.keywords
+                              if k.arg == "overrides")]
+    return args[0] if args else None
+
+
+def _sets_field(calls: dict[str, list[ast.Call]], cls: str, name: str,
+                pos: int, default: ast.AST | None) -> bool:
+    """Some call sets field ``name`` of dataclass ``cls`` to a value other
+    than its default: a keyword or positional argument of a class call,
+    a ``dataclasses.replace`` keyword, or a key of a ``load_config``
+    overrides dict (the job's flags).  A ``**`` splat does not count:
+    ``load_config``'s own splat is what its keys stand for."""
+    if any(_sets(c, name, pos, default, splat=False)
+           for c in calls.get(cls, ())):
+        return True
+    if any(_sets(c, name, None, default, splat=False)
+           for c in calls.get("replace", ())):
+        return True
+    for c in calls.get("load_config", ()):
+        d = _overrides(c)
+        if isinstance(d, ast.Dict) and any(
+                isinstance(k, ast.Constant) and k.value == name
+                and _differs(v, default) for k, v in zip(d.keys, d.values)):
+            return True
+    return False
+
+
 def unset_defaults(checked: dict[str, ast.Module],
-                   callers: list[ast.Module]) -> tuple[int, list[str]]:
-    """The number of defaulted parameters in ``checked`` (label -> AST),
-    and ``label:qualname(param)`` of each that no call in ``callers``
-    passes, by keyword, by position or through ``*args`` / ``**kwargs``.
-    Calls match by the callee's name; a class call reaches ``__init__``."""
-    calls = _calls(callers)
+                   callers: dict[str, ast.Module]) -> tuple[int, list[str]]:
+    """The number of defaulted parameters and dataclass fields in
+    ``checked`` (label -> AST), and ``label:qualname(param)`` /
+    ``label:Class.field`` of each that no call in ``callers`` (label ->
+    AST) sets.  A parameter is set when a call passes it, by keyword, by
+    position or through ``*args`` / ``**kwargs``; calls match by the
+    callee's name, and a class call reaches ``__init__``.  Two kinds of
+    call set nothing: an argument that repeats the default's own
+    expression, and any call in a caller under ``tests/``."""
+    calls = _calls([t for label, t in callers.items()
+                    if not label.startswith("tests/")])
     n, unset = 0, []
     for label, tree in checked.items():
         for qual, names, d, bound in _checked_defs(tree):
             sites = [c for name in names for c in calls.get(name, ())]
-            for param, pos in _defaulted(d, bound):
+            for param, pos, default in _defaulted(d, bound):
                 n += 1
-                if not any(_sets(c, param, pos) for c in sites):
+                if not any(_sets(c, param, pos, default) for c in sites):
                     unset.append(f"{label}:{qual}({param})")
+        for cls, name, pos, default in _dataclass_fields(tree):
+            n += 1
+            if not _sets_field(calls, cls, name, pos, default):
+                unset.append(f"{label}:{cls}.{name}")
     return n, sorted(unset)
 
 
 def test_every_default_is_set_by_some_call():
     checked = {_label(f): _parse(f) for f in _checked_files()}
     n, unset = unset_defaults(
-        checked, [_parse(f) for f in _caller_files()])
-    # non-vacuity: the walk sees the package's defaulted parameters
-    assert n >= 200, n
+        checked, {_label(f): _parse(f) for f in _caller_files()})
+    # non-vacuity: the walk sees the package's defaulted parameters and
+    # dataclass fields (the count they had when this floor was set)
+    assert n >= 158, n
     assert [u for u in unset if u not in ALLOWED_DEFAULTS] == []
     # the allowlist stays exact: a set or missing entry must go
     assert sorted(ALLOWED_DEFAULTS) == [u for u in unset
@@ -372,14 +493,14 @@ class K:
 """
 
 
-def _unset(*calls: str) -> list[str]:
-    tree = ast.parse(_SRC)
-    return unset_defaults({"m.py": tree},
-                          [tree, *(ast.parse(c) for c in calls)])[1]
+def _unset(*calls: str, src: str = _SRC) -> list[str]:
+    tree = ast.parse(src)
+    return unset_defaults({"m.py": tree}, {"m.py": tree, **{
+        f"c{i}.py": ast.parse(c) for i, c in enumerate(calls)}})[1]
 
 
 def test_default_guard_flags_an_unset_default():
-    assert unset_defaults({"m.py": ast.parse(_SRC)}, [])[0] == 5
+    assert unset_defaults({"m.py": ast.parse(_SRC)}, {})[0] == 5
     assert _unset("f(0)") == ["m.py:K.__init__(x)", "m.py:K.m(y)",
                               "m.py:K.s(b)", "m.py:f(b)", "m.py:f(c)"]
 
@@ -400,4 +521,64 @@ def test_default_guard_accepts_keyword_positional_and_star_calls():
 def test_default_guard_ignores_nested_defs():
     tree = ast.parse("def f():\n    def g(_memo=None):\n        pass\n"
                      "    return g\n")
-    assert unset_defaults({"m.py": tree}, [tree]) == (0, [])
+    assert unset_defaults({"m.py": tree}, {"m.py": tree}) == (0, [])
+
+
+def test_default_guard_counts_the_default_value_as_unset():
+    # by keyword or by position, an argument that repeats the default's
+    # expression sets nothing; any other value does
+    assert _unset("f(0, 1, c=2)\nK(x=0)\nk.m(1)\nK.s(0, b=1)") == [
+        "m.py:K.__init__(x)", "m.py:K.m(y)", "m.py:K.s(b)", "m.py:f(b)",
+        "m.py:f(c)"]
+    assert _unset("f(0, 1, c=2)\nf(0, b=+1, c=N)") == [
+        "m.py:K.__init__(x)", "m.py:K.m(y)", "m.py:K.s(b)"]
+    # a named default is repeated by the same name
+    assert _unset("g(N)\ng(M)", src="def g(n=N):\n    pass\n") == []
+    assert _unset("g(n=N)", src="def g(n=N):\n    pass\n") == ["m.py:g(n)"]
+
+
+def test_default_guard_ignores_calls_from_tests():
+    calls = "f(0, 2, c=3)\nK(x=1)\nk.m(y=2)\nK.s(0, b=2)"
+    assert _unset(calls) == []
+    tree = ast.parse(_SRC)
+    assert unset_defaults({"m.py": tree}, {
+        "m.py": tree, "tests/test_m.py": ast.parse(calls)})[1] == [
+        "m.py:K.__init__(x)", "m.py:K.m(y)", "m.py:K.s(b)", "m.py:f(b)",
+        "m.py:f(c)"]
+
+
+_DC = """
+from dataclasses import dataclass, field
+
+@dataclass(frozen=True)
+class C:
+    a: int
+    b: int = 1
+    c: str = "x"
+    d: list = field(default_factory=list)
+    e: int = field(default=5)
+
+def load_config(overrides):
+    return C(**overrides)
+
+class Plain:
+    b: int = 1
+"""
+
+
+def test_default_guard_checks_dataclass_fields():
+    tree = ast.parse(_DC)
+    assert unset_defaults({"m.py": tree}, {})[0] == 4
+    assert _unset("load_config(o)", src=_DC) == [
+        "m.py:C.b", "m.py:C.c", "m.py:C.d", "m.py:C.e"]
+    # a class-call keyword or positional argument, a
+    # dataclasses.replace keyword, a load_config overrides key
+    assert _unset("C(0, 2)\nC(0, c='y')\ndataclasses.replace(x, d=[1])\n"
+                  "load_config({'e': args.e})", src=_DC) == []
+    # the default's own value, a ** splat and a test caller set nothing
+    assert _unset("C(0, 1, c='x', e=5)\nC(**kw)\nreplace(x, d=[], b=1)\n"
+                  "load_config({'e': 5, 'c': 'x'})", src=_DC) == [
+        "m.py:C.b", "m.py:C.c", "m.py:C.e"]
+    assert unset_defaults({"m.py": tree}, {
+        "m.py": tree, "tests/t.py": ast.parse("C(0, 2, 'y', [], 6)")})[1] \
+        == ["m.py:C.b", "m.py:C.c", "m.py:C.d", "m.py:C.e"]

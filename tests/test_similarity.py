@@ -32,23 +32,26 @@ def test_brute_force_topk_exact_and_deterministic(emb, queries):
     assert a == b and all(len(v) == 5 for v in a.values())
 
 
+# The embeddings are unstructured random vectors, so recall@5 is bounded
+# by the corpus share an index scans; the floors are the registered
+# ann_lsh_recall / ann_ivf_recall gates': LSH (3 bands of 4 planes scan
+# ~19%) must beat 0.25, IVF (4 of 16 lists, 25%) 0.40.
+
 def test_lsh_recall_against_brute_force(emb, queries):
     exact = _as_map(S.brute_force_topk(emb, queries, k=5))
     dim = len(emb.select("embedding").first()[0])
-    approx = _as_map(S.lsh_ann_topk(emb, queries, k=5, dim=dim,
-                                    n_planes=12, bands=6))
-    # bands=6 → r=2 bits/band → generous candidates → decent recall
+    approx = _as_map(S.lsh_ann_topk(emb, queries, dim=dim))
     hits = sum(len(set(exact[q]) & set(approx.get(q, []))) for q in exact)
     total = sum(len(v) for v in exact.values())
-    assert hits / total >= 0.5, f"LSH recall too low: {hits}/{total}"
+    assert hits / total >= 0.25, f"LSH recall too low: {hits}/{total}"
 
 
 def test_ivf_recall_against_brute_force(emb, queries):
     exact = _as_map(S.brute_force_topk(emb, queries, k=5))
-    approx = _as_map(S.ivf_topk(emb, queries, k=5, n_clusters=8, nprobe=4))
+    approx = _as_map(S.ivf_topk(emb, queries))
     hits = sum(len(set(exact[q]) & set(approx.get(q, []))) for q in exact)
     total = sum(len(v) for v in exact.values())
-    assert hits / total >= 0.6, f"IVF recall too low: {hits}/{total}"
+    assert hits / total >= 0.40, f"IVF recall too low: {hits}/{total}"
 
 
 def test_ivf_assign_partitions_corpus(emb):
@@ -77,8 +80,7 @@ def test_semdedup_finds_planted_within_cluster_pair(spark):
         (10 + i, [0.0] * (dim - 1) + [float(i + 1)]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     pairs = {(r["id_a"], r["id_b"]): r["cosine"]
-             for r in S.semantic_dedup_pairs(df, threshold=0.9,
-                                             n_clusters=3).collect()}
+             for r in S.semantic_dedup_pairs(df, threshold=0.9).collect()}
     assert pairs.get((0, 1)) == 1.0
     assert all(0.9 <= c <= 1.0 for c in pairs.values())
     assert not any({a, b} & {3} for a, b in pairs)   # ortho never pairs
@@ -88,8 +90,7 @@ def test_semdedup_subset_of_brute_force_pairs(emb):
     """Every SemDeDup pair is a true cosine-threshold pair (the cluster
     restriction only DROPS candidates, never invents them)."""
     sem = {(r["id_a"], r["id_b"]): r["cosine"]
-           for r in S.semantic_dedup_pairs(emb, threshold=0.35,
-                                           n_clusters=8).collect()}
+           for r in S.semantic_dedup_pairs(emb, threshold=0.35).collect()}
     assert sem, "planted-free corpus still has >0 pairs at 0.35"
     brute = {(r["id_a"], r["id_b"]): r["cosine"]
              for r in S.cosine_neardup_pairs(emb, threshold=0.35).collect()}
@@ -106,11 +107,10 @@ def test_ivf_indexed_equals_inmemory_and_prunes(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
     io = TableIO(spark, str(tmp_path / "idx"))
-    S.build_ivf_index(emb, io, n_clusters=16)
+    S.build_ivf_index(emb, io)
 
-    mem = {tuple(r) for r in
-           S.ivf_topk(emb, q, k=5, n_clusters=16, nprobe=4).collect()}
-    idx_df = S.ivf_topk_indexed(io, q, k=5, nprobe=4)
+    mem = {tuple(r) for r in S.ivf_topk(emb, q).collect()}
+    idx_df = S.ivf_topk_indexed(io, q)
     assert {tuple(r) for r in idx_df.collect()} == mem
 
     # pruning: the probed-cluster isin must reach the scan as a
@@ -150,33 +150,33 @@ def test_lsh_indexed_equals_inmemory(spark, tmp_path, emb):
         F.col("vec_id").alias("query_id"), "embedding")
     io = TableIO(spark, str(tmp_path / "lshidx"))
     S.build_lsh_index(emb, io, dim=dim)
-    mem = {tuple(r) for r in S.lsh_ann_topk(emb, q, k=5, dim=dim).collect()}
-    idx = {tuple(r) for r in
-           S.lsh_ann_topk_indexed(io, q, k=5, dim=dim).collect()}
+    mem = {tuple(r) for r in S.lsh_ann_topk(emb, q, dim=dim).collect()}
+    idx = {tuple(r) for r in S.lsh_ann_topk_indexed(io, q, dim=dim).collect()}
     assert idx == mem and mem
 
 
 def test_pack_plan_concat_and_chop(spark):
-    """Hand-built shard: docs of 1000/1500/600 tokens at seq_len=1024 —
-    the 1500-token doc must span sequences 0→2, offsets exact."""
+    """Hand-built shard: docs of 2000/3000/1200 tokens in 2048-token
+    sequences — the 3000-token doc must span sequences 0→2, offsets
+    exact."""
     from databricks_pdf_ocr_spark.operators.text_analysis import pack_plan
 
-    rows = [(0, " ".join(["w"] * 1000)),
-            (32, " ".join(["w"] * 1500)),       # same shard (id % 32 == 0)
-            (64, " ".join(["w"] * 600)),
+    rows = [(0, " ".join(["w"] * 2000)),
+            (32, " ".join(["w"] * 3000)),       # same shard (id % 32 == 0)
+            (64, " ".join(["w"] * 1200)),
             (1, " ".join(["w"] * 5))]           # different shard
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r for r in
-           pack_plan(df, seq_len=1024, n_shards=32).collect()}
+           pack_plan(df).collect()}
     a, b, c, d = got[0], got[32], got[64], got[1]
     assert (a["first_seq"], a["last_seq"], a["start_in_seq"]) == (0, 0, 0)
-    # doc 32 starts at token 1000 (seq 0), ends at 2499 (seq 2)
-    assert (b["first_seq"], b["last_seq"], b["start_in_seq"]) == (0, 2, 1000)
-    # doc 64 starts at 2500 (seq 2), ends at 3099 (seq 3)
-    assert (c["first_seq"], c["last_seq"], c["start_in_seq"]) == (2, 3, 452)
+    # doc 32 starts at token 2000 (seq 0), ends at 4999 (seq 2)
+    assert (b["first_seq"], b["last_seq"], b["start_in_seq"]) == (0, 2, 2000)
+    # doc 64 starts at 5000 (seq 2), ends at 6199 (seq 3)
+    assert (c["first_seq"], c["last_seq"], c["start_in_seq"]) == (2, 3, 904)
     assert (d["shard"], d["first_seq"], d["start_in_seq"]) == (1, 0, 0)
     # every shard's layout is gapless: token spans tile the shard
-    assert a["n_tokens"] + b["n_tokens"] == 2500
+    assert a["n_tokens"] + b["n_tokens"] == 5000
 
 
 def test_pq_encode_shape_and_determinism(emb):
@@ -274,7 +274,6 @@ def test_hard_negatives_band_and_rank(spark):
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding")
     got = [(r["neg_id"], r["rank"]) for r in
-           S.hard_negative_topk(emb, q, k=5, pos_threshold=0.95)
-           .orderBy("rank").collect()]
+           S.hard_negative_topk(emb, q).orderBy("rank").collect()]
     # vec 1 (cos 1.0) excluded as in-band positive; 2 then 3 by cosine
     assert got == [(2, 1), (3, 2)]

@@ -4,7 +4,7 @@ must spread across partitions instead of pinning one task."""
 
 from pyspark.sql import functions as F
 
-from databricks_pdf_ocr_spark.config import TEST_CONFIG
+from conftest import TEST_CONFIG
 from databricks_pdf_ocr_spark.operators.extract import (
     explode_spans, extract_spans, reassemble,
 )

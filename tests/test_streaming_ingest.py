@@ -66,7 +66,7 @@ def test_ingested_pdfs_feed_extraction(spark, tmp_path):
             F.base64(F.col("file_content")).alias("text"),
             F.lit(None).cast("string").alias("media_ref"),
             F.lit(0).alias("offset"))).alias("spans"))
-    from databricks_pdf_ocr_spark.config import TEST_CONFIG
+    from conftest import TEST_CONFIG
     from databricks_pdf_ocr_spark.operators.extract import (
         reassemble, run_extraction)
     out = reassemble(run_extraction(docs, TEST_CONFIG)).collect()

@@ -29,7 +29,7 @@ def test_repetition_features_planted(spark):
          (4, "solo")],                        # too short: no 2-grams
         "doc_id long, text string")
     rows = {r["doc_id"]: r for r in
-            T.repetition_features(df, n=2).collect()}
+            T.repetition_features(df).collect()}
     assert set(rows) == {1, 2, 3}             # doc 4 filtered (n_ngrams=0)
     r1 = rows[1]
     assert (r1["n_ngrams"], r1["n_distinct"], r1["top_ngram_count"]) == (3, 1, 3)
@@ -50,7 +50,7 @@ def test_contamination_pairs_planted(spark):
          (co_a, "see the quick brown fox run away"),
          (co_b, "completely unrelated words here now")],
         "doc_id long, text string")
-    rows = T.contamination_pairs(df, eval_mod=20, n=3, min_common=2).collect()
+    rows = T.contamination_pairs(df).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["doc_id"], r["eval_id"], r["n_common"]) == (co_a, ev_id, 2)
@@ -65,26 +65,32 @@ def test_contamination_eval_side_never_self_pairs(spark):
         [(ev_ids[0], "alpha beta gamma delta epsilon"),
          (ev_ids[1], "alpha beta gamma delta epsilon")],
         "doc_id long, text string")
-    assert T.contamination_pairs(df, eval_mod=20, n=3).count() == 0
+    assert T.contamination_pairs(df).count() == 0
 
 
 # ---------------------------------------------------------------------------
 # round-5 additions: paragraph dedup / unigram LM / mixture / PII
 # ---------------------------------------------------------------------------
 
+def _chunk(word):
+    """One 10-token paragraph-dedup chunk."""
+    return " ".join(f"{word}{i}" for i in range(10))
+
+
 def test_paragraph_dedup_first_occurrence_wins(spark):
     from databricks_pdf_ocr_spark.operators import dedup as D
+    a, d, x = _chunk("a"), _chunk("d"), _chunk("x")
     df = spark.createDataFrame(
-        [(1, "a b c d e f"),        # chunks: "a b c", "d e f" (both first)
-         (2, "a b c x y z"),        # "a b c" dup of doc1 idx0; "x y z" kept
-         (3, "d e f a b c"),        # both chunks seen earlier -> empty
+        [(1, f"{a} {d}"),           # chunks a, d (both first)
+         (2, f"{a} {x}"),           # a dup of doc1 idx0; x kept
+         (3, f"{d} {a}"),           # both chunks seen earlier -> empty
          (4, "a b")],               # short tail chunk, unique -> kept
         "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in D.paragraph_dedup(df, k=3).collect()}
+    rows = {r["doc_id"]: r for r in D.paragraph_dedup(df).collect()}
     assert (rows[1]["n_chunks"], rows[1]["n_kept"]) == (2, 2)
-    assert rows[1]["kept_text"] == "a b c d e f"
+    assert rows[1]["kept_text"] == f"{a} {d}"
     assert (rows[2]["n_chunks"], rows[2]["n_kept"]) == (2, 1)
-    assert rows[2]["kept_text"] == "x y z"
+    assert rows[2]["kept_text"] == x
     assert (rows[3]["n_chunks"], rows[3]["n_kept"]) == (2, 0)
     assert rows[3]["kept_text"] == ""
     assert (rows[4]["n_chunks"], rows[4]["n_kept"]) == (1, 1)
@@ -94,11 +100,11 @@ def test_paragraph_dedup_first_occurrence_wins(spark):
 def test_paragraph_dedup_order_preserved_within_doc(spark):
     from databricks_pdf_ocr_spark.operators import dedup as D
     # doc 2 keeps its 1st and 3rd chunks; kept_text must preserve idx order
+    m, p, q = _chunk("m"), _chunk("p"), _chunk("q")
     df = spark.createDataFrame(
-        [(1, "m m m"), (2, "p p p m m m q q q")],
-        "doc_id long, text string")
-    r = {x["doc_id"]: x for x in D.paragraph_dedup(df, k=3).collect()}[2]
-    assert (r["n_chunks"], r["n_kept"], r["kept_text"]) == (3, 2, "p p p q q q")
+        [(1, m), (2, f"{p} {m} {q}")], "doc_id long, text string")
+    r = {x["doc_id"]: x for x in D.paragraph_dedup(df).collect()}[2]
+    assert (r["n_chunks"], r["n_kept"], r["kept_text"]) == (3, 2, f"{p} {q}")
 
 
 def test_unigram_lm_scores_hand_computed(spark):
@@ -117,7 +123,7 @@ def test_mixture_rebalance_rates_and_gate(spark):
     df = spark.createDataFrame(
         [(i, "en" if i < 8 else "de", "t") for i in range(10)],
         "doc_id long, lang string, text string")
-    out = T.mixture_rebalance(df, strata_col="lang").collect()
+    out = T.mixture_rebalance(df).collect()
     rates = {r["lang"]: r["rate_e6"] for r in out}
     # target = 10/2 = 5 per stratum: en 8 docs -> 625000, de 2 docs -> capped
     assert rates.get("en", 625000) == 625000      # absent if no en survives
@@ -135,8 +141,8 @@ def test_mixture_rebalance_deterministic_rerun(spark):
     df = spark.createDataFrame(
         [(i, "en" if i % 3 else "fr", "t") for i in range(30)],
         "doc_id long, lang string, text string")
-    a = sorted(r["doc_id"] for r in T.mixture_rebalance(df, "lang").collect())
-    b = sorted(r["doc_id"] for r in T.mixture_rebalance(df, "lang").collect())
+    a = sorted(r["doc_id"] for r in T.mixture_rebalance(df).collect())
+    b = sorted(r["doc_id"] for r in T.mixture_rebalance(df).collect())
     assert a == b
 
 
@@ -271,17 +277,6 @@ def test_profile_table_planted(spark):
     assert s["min_num"] is None and k["min_str"] is None
 
 
-def test_profile_table_approx_path(spark):
-    from databricks_pdf_ocr_spark.operators.profile import profile_table
-    df = spark.createDataFrame([(i, str(i % 7)) for i in range(1000)],
-                               "k long, s string")
-    rows = {r["col_name"]: r for r in profile_table(
-        spark, df, [("k", "num"), ("s", "str")], approx=True).collect()}
-    # HLL++ default rsd 5%: sanity bounds, not exactness
-    assert abs(rows["k"]["n_distinct"] - 1000) <= 100
-    assert rows["s"]["n_distinct"] == 7
-
-
 # round-5 addition: cross-split leakage gate
 
 def test_split_leakage_flags_only_cross_split_pairs(spark):
@@ -410,7 +405,7 @@ def test_sample_weighted_matches_sequential_reference(spark):
     rows = [(i, (i % 7) + 1) for i in range(500)] + [(900, 0), (901, None)]
     df = spark.createDataFrame(rows, "doc_id bigint, w int")
     got = [r.doc_id for r in
-           sample_weighted(df, "w", k=40, seed=42).collect()]
+           sample_weighted(df, "w", k=40).collect()]
     assert sorted(got) == sorted(_es_reference(rows, 40))
     # zero/null weights never sampled
     assert 900 not in got and 901 not in got
@@ -510,7 +505,7 @@ def test_timeseries_moving_window_rolls_over_gaps(spark):
     df = spark.createDataFrame(
         rows, "event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double, props string")
-    got = {r.hr: r.win_sum_e2 for r in moving_window(df, window=4).collect()}
+    got = {r.hr: r.win_sum_e2 for r in moving_window(df).collect()}
     h0 = min(got)
     # trailing 4h sums x100: [200, 200, 200, 200, 300, 400]
     assert [got[h0 + i] for i in range(6)] == [200, 200, 200, 200, 300, 400]
@@ -523,25 +518,26 @@ def test_tfidf_topterms_hand_computed(spark):
         [(1, "a a b"), (2, "a c"), (3, "c c c d")],
         "doc_id long, text string")
     got = {}
-    for r in tfidf_topterms(df, k=2).collect():
+    for r in tfidf_topterms(df).collect():
         got.setdefault(r.doc_id, []).append((r.word, r.tfidf_e6))
     def e6(tf, df_):
         return math.floor(tf * math.log(4.0 / (df_ + 1)) * 1e6)
     # doc1: b=1*ln(2) beats a=2*ln(4/3)
     assert sorted(got[1]) == sorted([("b", e6(1, 1)), ("a", e6(2, 2))])
-    # doc2: both terms idf ln(4/3); tie broken by word => a, c (k=2 keeps both)
+    # doc2: both terms idf ln(4/3); tie broken by word => a, c (top-3
+    # keeps both)
     assert sorted(got[2]) == sorted([("a", e6(1, 2)), ("c", e6(1, 2))])
-    # doc3: c=3*ln(4/3) vs d=1*ln(2) -> c first; k=2 keeps both
+    # doc3: c=3*ln(4/3) vs d=1*ln(2) -> c first; top-3 keeps both
     assert sorted(got[3]) == sorted([("c", e6(3, 2)), ("d", e6(1, 1))])
 
 
 def test_tfidf_topterms_k_cut_is_deterministic(spark):
     from databricks_pdf_ocr_spark.operators.text_search import tfidf_topterms
-    # 5 words with identical tf-idf: the k=3 cut must take a, b, c (word asc)
+    # 5 words with identical tf-idf: the top-3 cut must take a, b, c (word asc)
     df = spark.createDataFrame([(1, "a b c d e"), (2, "z")],
                                "doc_id long, text string")
     words = sorted(r.word for r in
-                   tfidf_topterms(df, k=3).where("doc_id = 1").collect())
+                   tfidf_topterms(df).where("doc_id = 1").collect())
     assert words == ["a", "b", "c"]
 
 # ---------------------------------------------------------------------------

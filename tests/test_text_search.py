@@ -21,7 +21,7 @@ def _corpus(spark):
 
 def test_bm25_ranking_semantics(spark):
     got = {r["doc_id"]: r for r in text_search.bm25_topk(
-        _corpus(spark), ["join", "window", "hash"], k=10).collect()}
+        _corpus(spark), ["join", "window", "hash"]).collect()}
     assert 4 not in got                       # no matching term → no row
     assert got[5]["n_terms"] == 3 and got[1]["n_terms"] == 2
     # doc 5 matches all three terms and is short → highest score
@@ -39,16 +39,16 @@ def test_bm25_validates_and_ranks_deterministically(spark):
     with pytest.raises(ValueError):
         text_search.bm25_topk(_corpus(spark), [])
     a = [r["doc_id"] for r in
-         text_search.bm25_topk(_corpus(spark), ["join"], k=2).collect()]
+         text_search.bm25_topk(_corpus(spark), ["join"]).collect()]
     b = [r["doc_id"] for r in
-         text_search.bm25_topk(_corpus(spark), ["JOIN"], k=2).collect()]
+         text_search.bm25_topk(_corpus(spark), ["JOIN"]).collect()]
     assert a == b                              # case-folded query terms
 
 
 def test_bm25_plan_prunes_before_shuffle(spark):
     """The term filter must sit BELOW the aggregation exchange (postings
     pruned before any shuffle) and the df/stats joins must broadcast."""
-    plan = text_search.bm25_topk(_corpus(spark), ["join"], k=5) \
+    plan = text_search.bm25_topk(_corpus(spark), ["join"]) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
     assert plan.count("BroadcastExchange") >= 2, plan

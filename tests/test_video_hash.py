@@ -18,7 +18,7 @@ def _frame_hashes(payload):
 
 
 def test_video_phash_rows_match_direct_decode(spark):
-    rows = list(fixtures.video_corpus_rows(7, n_base=2, variants=1))
+    rows = list(itertools.islice(fixtures.video_corpus_rows(7), 0, 6, 3))
     rows.append(("broken", b"\x00\x00\x00\x08ftypmp42 junk"))
     df = spark.createDataFrame(rows, "name string, content binary")
     got = multimodal.video_phash(df).collect()
@@ -39,7 +39,7 @@ def test_video_phash_rows_match_direct_decode(spark):
 
 
 def test_video_banding_equals_brute_force(spark):
-    rows = list(fixtures.video_corpus_rows(11, n_base=3, variants=3))
+    rows = list(itertools.islice(fixtures.video_corpus_rows(11), 9))
     fh = {hashlib.sha256(p).hexdigest(): _frame_hashes(p)
           for _n, p in rows}
     want = {}
@@ -49,8 +49,7 @@ def test_video_banding_equals_brute_force(spark):
         if len(hit) >= 2:
             want[(a, b)] = (len(hit), max(hit))
     df = spark.createDataFrame(rows, "name string, content binary")
-    pairs = multimodal.video_phash_pairs(
-        multimodal.video_phash(df), max_hamming=7, min_frames=2)
+    pairs = multimodal.video_phash_pairs(multimodal.video_phash(df))
     got = {(r["media_a"], r["media_b"]): (r["frames_matched"],
                                           r["max_hamming"])
            for r in pairs.collect()}
@@ -59,19 +58,18 @@ def test_video_banding_equals_brute_force(spark):
 
 def test_min_frames_gate_excludes_single_frame_coincidence(spark):
     """A pair matching on only one frame index must not pair."""
-    base = list(fixtures.video_corpus_rows(5, n_base=2, variants=1))
+    base = list(itertools.islice(fixtures.video_corpus_rows(5), 0, 6, 3))
     (n0, p0), (n1, p1) = base
     # splice: clip2 = clip0's frame 0 + clip1's frames 1..3
     f0 = [j for _t, j in mp4mini.mjpeg_frames(p0)]
     f1 = [j for _t, j in mp4mini.mjpeg_frames(p1)]
-    spliced = mp4mini.write_mjpeg([f0[0]] + f1[1:], fps=1,
+    spliced = mp4mini.write_mjpeg([f0[0]] + f1[1:],
                                   width=36, height=28)
     df = spark.createDataFrame(
         [(n0, p0), ("spliced", spliced)], "name string, content binary")
-    pairs = multimodal.video_phash_pairs(
-        multimodal.video_phash(df), max_hamming=7, min_frames=2)
+    # the clips do match on their one shared frame
+    shared = [imghash.hamming64(x, y) <= multimodal.MAX_HAMMING
+              for x, y in zip(_frame_hashes(p0), _frame_hashes(spliced))]
+    assert shared[0] and sum(shared) == 1
+    pairs = multimodal.video_phash_pairs(multimodal.video_phash(df))
     assert pairs.count() == 0
-    # at min_frames=1 the single shared frame IS found
-    pairs1 = multimodal.video_phash_pairs(
-        multimodal.video_phash(df), max_hamming=7, min_frames=1)
-    assert pairs1.count() == 1 and pairs1.first()["frames_matched"] == 1

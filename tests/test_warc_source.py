@@ -2,6 +2,7 @@
 error contract, and segment → documents → extraction composition."""
 
 import gzip
+import hashlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -213,7 +214,7 @@ def test_segment_to_documents_to_extraction(spark, tmp_path):
     assert kinds == {"html", "text"}
 
     # straight into the extraction pipeline
-    from databricks_pdf_ocr_spark.config import TEST_CONFIG
+    from conftest import TEST_CONFIG
     from databricks_pdf_ocr_spark.operators.extract import (
         reassemble, run_extraction,
     )
@@ -323,7 +324,7 @@ def test_pagerank_matches_dense_reference(spark):
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
     df = spark.createDataFrame(edges, "src_host string, dst_host string")
     got = {r["host"]: r["rank"]
-           for r in linkgraph.pagerank(df, d=0.85, iters=3).collect()}
+           for r in linkgraph.pagerank(df).collect()}
 
     nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -423,10 +424,13 @@ def test_wet_to_documents_semantics(spark):
     seg = warc.write_warc(recs, gzip_per_record=True)
     files = spark.createDataFrame([("mem:wet-0.warc.wet.gz", seg)],
                                   "path string, content binary")
-    docs = warc.wet_to_documents(warc.warc_records(files), with_uri=True)
-    rows = {r["target_uri"]: r for r in docs.collect()}
-    assert set(rows) == {"http://w.example/a", "http://w.example/bom",
-                         "http://w.example/l1"}
+    docs = warc.wet_to_documents(warc.warc_records(files))
+    # doc_id = sha256(target_uri)
+    uris = ["http://w.example/a", "http://w.example/bom",
+            "http://w.example/l1"]
+    by_id = {hashlib.sha256(u.encode()).hexdigest(): u for u in uris}
+    rows = {by_id.get(r["doc_id"]): r for r in docs.collect()}
+    assert set(rows) == set(uris)
     by_uri = {u: r["spans"][0]["text"] for u, r in rows.items()}
     assert by_uri["http://w.example/a"] == "newer conversion"
     assert by_uri["http://w.example/bom"] == "bom body"
