@@ -47,6 +47,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 #: weights floor-quantized to 1e-6 after every update; scores to 1e-4.
 W_SCALE = 1_000_000.0
 SCORE_SCALE = 10_000.0
@@ -86,10 +88,6 @@ def hashed_features(df: DataFrame) -> DataFrame:
     return present.unionByName(intercept)
 
 
-def _weights_df(spark: SparkSession, w: dict[int, float]) -> DataFrame:
-    return spark.createDataFrame(sorted(w.items()), "fidx int, w double")
-
-
 def _margins(feats: DataFrame, wdf: DataFrame) -> DataFrame:
     """(id, z): per-doc dot product against the broadcast weight table
     (the intercept feature folds the bias into the same sum)."""
@@ -115,7 +113,7 @@ def train_logreg(spark: SparkSession, feats: DataFrame,
     n = labels.count()
     w = {f: 0.0 for f in range(DIM + 1)}
     for _ in range(EPOCHS):
-        wdf = _weights_df(spark, w)
+        wdf = local_frame(spark, sorted(w.items()), "fidx int, w double")
         gdf = (_margins(feats, wdf).join(labels, "id")
                .select("id", (_sigmoid(F.col("z")) - F.col("y")).alias("g")))
         grads = (feats.join(gdf, "id")
@@ -132,7 +130,8 @@ def score_logreg(spark: SparkSession, feats: DataFrame, labels: DataFrame,
     """(doc_id, label, score_e4, pred): floor-quantized sigmoid scores."""
     score = (F.floor(_sigmoid(F.col("z")) * F.lit(SCORE_SCALE))
              .cast("long"))
-    return (_margins(feats, _weights_df(spark, w))
+    wdf = local_frame(spark, sorted(w.items()), "fidx int, w double")
+    return (_margins(feats, wdf)
             .join(labels, "id")
             .select(F.col("id").alias("doc_id"),
                     F.col("y").cast("long").alias("label"),

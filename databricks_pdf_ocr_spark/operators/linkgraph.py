@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
 from ..worker import drop_zip_importers
 
 #: absolute-href host pattern — must match tools/make_golden_parquet.py
@@ -201,9 +202,8 @@ def blocklist_filter(df: DataFrame, blocked_suffixes) -> DataFrame:
     LIKE/nested-loop scan — and the corpus sees one anti-join on the
     resulting blocked-host set.  A multi-million-entry blocklist stays
     a hash join at 100 TB."""
-    spark = df.sparkSession
-    blocked = spark.createDataFrame([(b,) for b in blocked_suffixes],
-                                    "suffix string")
+    blocked = local_frame(df.sparkSession,
+                          [(b,) for b in blocked_suffixes], "suffix string")
     blocked_hosts = (df.select("host").distinct()
                      .withColumn("_sfx",
                                  F.explode(host_suffixes(F.col("host"))))

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 #: (column, kind) — kind 'num' reports min_num/max_num, 'str' the string
 #: pair.  Timestamps are profiled as microseconds since a fixed anchor.
 NUM, STR = "num", "str"
@@ -50,7 +52,7 @@ def profile_table(spark: SparkSession, df: DataFrame,
             row.asDict().get(f"{c}__min_str"),
             row.asDict().get(f"{c}__max_str"))
            for c, _ in cols]
-    return spark.createDataFrame(
-        out, "col_name string, n_rows long, n_null long, n_distinct long, "
-             "min_num double, max_num double, min_str string, "
-             "max_str string")
+    return local_frame(
+        spark, out, "col_name string, n_rows long, n_null long, "
+                    "n_distinct long, min_num double, max_num double, "
+                    "min_str string, max_str string")

@@ -15,13 +15,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..session import local_frame
 from ..worker import drop_zip_importers
 
 #: the approximate operators' fixed shape: ``TOP_K`` neighbours per
 #: query; IVF over ``N_CLUSTERS`` k-means lists, probing the ``NPROBE``
-#: nearest; LSH over ``N_PLANES`` hyperplane bits in ``BANDS`` bands
+#: nearest; LSH over ``N_PLANES`` hyperplane bits in ``BANDS`` bands;
+#: PQ codes of ``PQ_M`` subspaces, each a ``PQ_KSUB``-entry codebook
 TOP_K, N_CLUSTERS, NPROBE = 5, 16, 4
 N_PLANES, BANDS = 12, 3
+PQ_M, PQ_KSUB = 4, 8
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -248,46 +251,56 @@ def assign_to_centroids(e: DataFrame, cdf: DataFrame) -> DataFrame:
             .select("id", "v", "cluster"))
 
 
-def ivf_assign(embeddings: DataFrame, n_clusters: int
-               ) -> tuple[DataFrame, list]:
-    """IVF coarse quantizer: deterministic k-means over DataFrame ops.
+def _centroid_frame(spark, centroids: list) -> DataFrame:
+    """``(cluster, cvec)``: k-means centroids (cluster = list index) as
+    an Arrow-built frame, the tiny table every IVF step broadcasts."""
+    return local_frame(
+        spark, [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
+        "cluster int, cvec array<double>")
+
+
+def _kmeans(e: DataFrame, n_clusters: int) -> list:
+    """Deterministic k-means over ``(id, v)`` rows; returns the
+    ``n_clusters`` centroids.
 
     Centroid init: the ``n_clusters`` vectors with the smallest
     ``sha2(id)`` (a deterministic pseudo-random sample, no RNG state;
     sha2 rather than xxhash64 so the ordering is ENGINE-PORTABLE — the
     DuckDB correctness oracle recomputes the same k-means end-to-end);
-    then two Lloyd rounds — assign via broadcast
-    nearest-centroid, update via per-cluster mean (one hash-agg shuffle
-    per round).  Returns (assignments df [id, vec, cluster], centroids).
+    then two Lloyd rounds — assign via broadcast nearest-centroid,
+    update via per-cluster mean (one hash-agg shuffle per round).
+    """
+    seed_rows = (e.withColumn("h", F.sha2(F.col("id").cast("string"), 256))
+                 .orderBy("h").limit(n_clusters).select("v").collect())
+    centroids = [list(r["v"]) for r in seed_rows]
+    dim = len(centroids[0])
+    for _ in range(2):
+        assigned = assign_to_centroids(
+            e, _centroid_frame(e.sparkSession, centroids))
+        means = (assigned.groupBy("cluster")
+                 .agg(*[F.avg(F.col("v")[i]).alias(f"m{i}")
+                        for i in range(dim)])
+                 .collect())
+        new = {r["cluster"]: [r[f"m{i}"] for i in range(dim)]
+               for r in means}
+        centroids = [new.get(ci, centroids[ci]) for ci in range(len(centroids))]
+    return centroids
+
+
+def ivf_assign(embeddings: DataFrame, n_clusters: int
+               ) -> tuple[DataFrame, DataFrame]:
+    """IVF coarse quantizer: ``_kmeans`` over the corpus, then every
+    vector assigned to its nearest centroid.  Returns (assignments
+    [id, v, cluster], centroid frame [cluster, cvec]).
 
     Scale: centroids are tiny and broadcast; the corpus is scanned once
     per round; the final assignment is the IVF index one would persist
     as a table partitioned by cluster.
     """
-    spark = embeddings.sparkSession
     e = embeddings.select(F.col("vec_id").alias("id"),
                           F.col("embedding").alias("v"))
-    seed_rows = (e.withColumn("h", F.sha2(F.col("id").cast("string"), 256))
-                 .orderBy("h").limit(n_clusters).select("v").collect())
-    centroids = [list(r["v"]) for r in seed_rows]
-
-    def assign(df: DataFrame, cents: list) -> DataFrame:
-        cdf = spark.createDataFrame(
-            [(ci, [float(x) for x in c]) for ci, c in enumerate(cents)],
-            "cluster int, cvec array<double>")
-        return assign_to_centroids(df, cdf)
-
-    for _ in range(2):
-        assigned = assign(e, centroids)
-        means = (assigned.groupBy("cluster")
-                 .agg(*[F.avg(F.col("v")[i]).alias(f"m{i}")
-                        for i in range(len(centroids[0]))])
-                 .collect())
-        new = {r["cluster"]: [r[f"m{i}"] for i in range(len(centroids[0]))]
-               for r in means}
-        centroids = [new.get(ci, centroids[ci]) for ci in range(len(centroids))]
-
-    return assign(e, centroids), centroids
+    cdf = _centroid_frame(embeddings.sparkSession, _kmeans(e, n_clusters))
+    return assign_to_centroids(e, cdf), cdf
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
@@ -297,15 +310,11 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     The assignment side is the persisted index at scale (partition/bucket
     by cluster → query touches NPROBE/N_CLUSTERS of the corpus).
     """
-    assigned, centroids = ivf_assign(embeddings, N_CLUSTERS)
+    assigned, cdf = ivf_assign(embeddings, N_CLUSTERS)
     # nearest clusters per query, fully distributed: broadcast the tiny
     # centroid table onto the queries side and rank with a per-query
     # window — no .collect() of user data (queries can be arbitrarily
     # large; only the k×dim centroid model rides the driver).
-    spark = embeddings.sparkSession
-    cdf = spark.createDataFrame(
-        [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
-        "cluster int, cvec array<double>")
     probes = _probe_clusters(queries, cdf, NPROBE)
     cands = assigned.join(F.broadcast(probes), "cluster") \
         .filter(F.col("id") != F.col("query_id"))
@@ -327,11 +336,7 @@ def ivf_topk_quantized(embeddings: DataFrame,
     the 4×-compressed int8 vectors (``quantized_cosine`` — exact int
     dot products; scales cancel).  What a 100 TB vector corpus actually
     serves: float centroids in memory, quantized vectors on disk."""
-    assigned, centroids = ivf_assign(embeddings, N_CLUSTERS)
-    spark = embeddings.sparkSession
-    cdf = spark.createDataFrame(
-        [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
-        "cluster int, cvec array<double>")
+    assigned, cdf = ivf_assign(embeddings, N_CLUSTERS)
     qz = quantize_embeddings(embeddings).select(F.col("id"), F.col("qvec"))
     probes = _probe_clusters(queries, cdf, NPROBE)
     # quantization is per-vector, so the (small) query side quantizes
@@ -417,12 +422,8 @@ def build_ivf_index(embeddings: DataFrame, io) -> None:
     the corpus via partition-directory pruning instead of re-running
     k-means per query call.
     """
-    assigned, centroids = ivf_assign(embeddings, N_CLUSTERS)
+    assigned, cdf = ivf_assign(embeddings, N_CLUSTERS)
     io.overwrite(assigned, "ivf_index", partition_by=["cluster"])
-    spark = embeddings.sparkSession
-    cdf = spark.createDataFrame(
-        [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
-        "cluster int, cvec array<double>")
     io.overwrite(cdf, "ivf_index_centroids")
 
 
@@ -594,27 +595,26 @@ def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame,
 # product quantization (IVF-PQ): the memory-compressed ANN serving shape
 # ---------------------------------------------------------------------------
 
-def pq_train(embeddings: DataFrame, dim: int, m: int = 4, ksub: int = 8):
+def pq_train(embeddings: DataFrame, dim: int):
     """Product-quantization codebooks (Jégou et al. 2011): the vector
-    space splits into ``m`` subspaces of dim/m and each gets its own
-    ``ksub``-centroid k-means codebook — so a vector stores as m small
-    codes (m bytes at ksub ≤ 256) instead of dim floats.
+    space splits into ``PQ_M`` subspaces of dim/PQ_M and each gets its
+    own ``PQ_KSUB``-centroid k-means codebook — so a vector stores as
+    PQ_M small codes (PQ_M bytes at PQ_KSUB ≤ 256) instead of dim floats.
 
-    Reuses the deterministic ``ivf_assign`` k-means recursion per
-    subspace slice (sha2-seeded init, Lloyd rounds, engine-portable
-    arithmetic); the returned model is m × ksub × (dim/m) floats —
+    Reuses the deterministic ``_kmeans`` recursion per subspace slice
+    (sha2-seeded init, Lloyd rounds, engine-portable arithmetic); the
+    returned model is PQ_M × PQ_KSUB × (dim/PQ_M) floats —
     control-plane sized, like the coarse centroids."""
-    dsub = dim // m
-    if dsub * m != dim:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
+    dsub = dim // PQ_M
+    if dsub * PQ_M != dim:
+        raise ValueError(f"dim {dim} not divisible by {PQ_M}")
     codebooks = []
-    for s in range(m):
+    for s in range(PQ_M):
         sub = embeddings.select(
-            F.col("vec_id"),
-            F.slice(F.col("embedding"), s * dsub + 1, dsub)
-            .alias("embedding"))
-        _assigned, cents = ivf_assign(sub, n_clusters=ksub)
-        codebooks.append([[float(x) for x in c] for c in cents])
+            F.col("vec_id").alias("id"),
+            F.slice(F.col("embedding"), s * dsub + 1, dsub).alias("v"))
+        codebooks.append([[float(x) for x in c]
+                          for c in _kmeans(sub, PQ_KSUB)])
     return codebooks
 
 
@@ -624,12 +624,12 @@ def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
     rows + two hash-aggs (per-(id,sub) argmin via ``min_by``, then
     ordered code assembly) — the same engine-portable arithmetic the
     DuckDB oracle replays, never a chained-when argmin."""
-    spark = embeddings.sparkSession
-    m = len(codebooks)
     dsub = len(codebooks[0][0])
-    rows = [(s, ci, c) for s, cb in enumerate(codebooks)
-            for ci, c in enumerate(cb)]
-    cdf = spark.createDataFrame(rows, "sub int, code int, cvec array<double>")
+    cdf = local_frame(
+        embeddings.sparkSession,
+        [(s, ci, c) for s, cb in enumerate(codebooks)
+         for ci, c in enumerate(cb)],
+        "sub int, code int, cvec array<double>")
     e = embeddings.select(F.col("vec_id").alias("id"),
                           F.col("embedding").alias("v"))
     sub_slice = F.slice(F.col("v"), F.col("sub") * dsub + 1, dsub)
@@ -677,25 +677,20 @@ def _adc_scorer(codebooks):
     return adc
 
 
-def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                n_clusters: int = 16, nprobe: int = 4, m: int = 4,
-                ksub: int = 8, dim: int = 64,
+def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, dim: int,
                 rerank: int | None = None) -> DataFrame:
-    """IVF-PQ approximate top-k: float coarse centroids route queries
-    (nprobe of n_clusters lists), candidates score by asymmetric
-    distance against their m-byte PQ codes.  The 100 TB serving shape
-    one step beyond int8: the corpus holds dim/m-fold-compressed codes,
-    only the two tiny models (coarse centroids + codebooks) and the
-    query batch are broadcast.  Returns (query_id, neighbor_id, rank,
-    dist) ranked by ascending ADC distance."""
-    assigned, centroids = ivf_assign(embeddings, n_clusters)
-    codebooks = pq_train(embeddings, dim=dim, m=m, ksub=ksub)
+    """IVF-PQ approximate top-``TOP_K``: float coarse centroids route
+    queries (``NPROBE`` of ``N_CLUSTERS`` lists), candidates score by
+    asymmetric distance against their ``PQ_M``-byte PQ codes.  The
+    100 TB serving shape one step beyond int8: the corpus holds
+    dim/PQ_M-fold-compressed codes, only the two tiny models (coarse
+    centroids + codebooks) and the query batch are broadcast.  Returns
+    (query_id, neighbor_id, rank, dist) ranked by ascending ADC
+    distance."""
+    assigned, cdf = ivf_assign(embeddings, N_CLUSTERS)
+    codebooks = pq_train(embeddings, dim=dim)
     codes = pq_encode(embeddings, codebooks)
-    spark = embeddings.sparkSession
-    cdf = spark.createDataFrame(
-        [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
-        "cluster int, cvec array<double>")
-    probes = _probe_clusters(queries, cdf, nprobe)
+    probes = _probe_clusters(queries, cdf, NPROBE)
     cands = (assigned.select("cluster", "id")
              .join(F.broadcast(probes.select("query_id", "cluster", "qv")),
                    "cluster")
@@ -709,7 +704,7 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                                                F.asc("neighbor_id"))
     if rerank is None:
         return (scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
+                .filter(F.col("rank") <= TOP_K)
                 .select("query_id", "neighbor_id",
                         F.col("rank").cast("int").alias("rank"), "dist"))
     # two-stage serving: ADC shortlist of `rerank` candidates per query
@@ -727,7 +722,7 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                 F.asc("neighbor_id"))
     return (rr.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id",
                     F.col("rank").cast("int").alias("rank"), "cosine"))
 

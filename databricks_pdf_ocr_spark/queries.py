@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
 from .operators import (classifier, curate, dedup, layout, similarity,
                         text_analysis)
 from .operators import tokenize as _tok
+from .operators.similarity import (BANDS, N_CLUSTERS, N_PLANES, NPROBE,
+                                  PQ_KSUB, PQ_M, TOP_K)
+from .session import local_frame
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
@@ -1165,7 +1168,8 @@ def results_time_travel(spark, sf_dir):
     VALUES-oracle pattern."""
     from .plans import state_views
 
-    log = spark.createDataFrame(
+    log = local_frame(
+        spark,
         [("d1", 1, "A"), ("d1", 2, "B"), ("d2", 1, "X"), ("d3", 2, "Y")],
         "doc_id string, run_seq int, payload string") \
         .withColumn("processed_at",
@@ -2095,8 +2099,9 @@ def embed_cosine_neardup(spark, sf_dir):
 # any sf (VERDICT r3 asked for at least a pinned golden; this is the
 # full-strength, sf-independent oracle).
 
-_ANN_DIM, _ANN_PLANES, _ANN_BANDS, _ANN_K, _ANN_NQ = 64, 12, 3, 5, 8
-_ANN_CLUSTERS, _ANN_NPROBE = 16, 4
+# the test data's shape: 64-dim embeddings, the first 8 vec_ids as
+# queries; the index shape is the operators' own (``TOP_K``…)
+_ANN_DIM, _ANN_NQ = 64, 8
 
 
 def _sql_cos(a_emb: str, b_emb: str, dim: int) -> str:
@@ -2113,20 +2118,20 @@ def _ann_lsh_sql() -> str:
     hyperplanes (similarity.plane_vector) inlined as list literals, sign
     bits packed into the identical little-endian band values, OR-of-bands
     candidate join, exact cosine re-rank."""
-    r = _ANN_PLANES // _ANN_BANDS
+    r = N_PLANES // BANDS
     planes = [similarity.plane_vector(p, _ANN_DIM)
-              for p in range(_ANN_PLANES)]
+              for p in range(N_PLANES)]
     dot_cols = ",\n         ".join(
         f"list_sum(list_transform(range(1, {_ANN_DIM + 1}), i -> "
         f"CAST(embedding[i] AS DOUBLE) * "
         f"([{', '.join(f'{c:.1f}' for c in planes[p])}])[i])) AS d{p}"
-        for p in range(_ANN_PLANES))
+        for p in range(N_PLANES))
     band_cols = ",\n         ".join(
         " + ".join(f"{1 << t} * (CASE WHEN d{b * r + t} >= 0 "
                    f"THEN 1 ELSE 0 END)" for t in range(r))
-        + f" AS band{b}" for b in range(_ANN_BANDS))
+        + f" AS band{b}" for b in range(BANDS))
     band_join = " OR ".join(f"q.band{b} = c.band{b}"
-                            for b in range(_ANN_BANDS))
+                            for b in range(BANDS))
     return f"""
 WITH dots AS (
   SELECT vec_id, embedding,
@@ -2151,7 +2156,7 @@ ranked AS (
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= {_ANN_K}
+FROM ranked WHERE rank <= {TOP_K}
 """
 
 
@@ -2217,13 +2222,13 @@ def _ann_ivf_sql(train_where: str = "",
     def dist(emb: str, cvec: str) -> str:
         return _ivf_dist(emb, cvec, _ANN_DIM)
 
-    return _ivf_kmeans_cte(_ANN_DIM, _ANN_CLUSTERS, train_where) + f""",
+    return _ivf_kmeans_cte(_ANN_DIM, N_CLUSTERS, train_where) + f""",
 probes AS (
   SELECT q.vec_id AS query_id, t.cluster, q.embedding AS qv
   FROM embeddings q CROSS JOIN c2 t
   WHERE q.vec_id < {_ANN_NQ}
   QUALIFY row_number() OVER (PARTITION BY q.vec_id
-      ORDER BY {dist('q.embedding', 't.cvec')}, t.cluster) <= {_ANN_NPROBE}),
+      ORDER BY {dist('q.embedding', 't.cvec')}, t.cluster) <= {NPROBE}),
 cands AS (
   SELECT p.query_id, a.id AS neighbor_id, p.qv, a.v
   FROM af a JOIN probes p USING (cluster)
@@ -2258,7 +2263,7 @@ ranked AS (
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= {_ANN_K}
+FROM ranked WHERE rank <= {TOP_K}
 """
 
 
@@ -2373,7 +2378,7 @@ def decontaminate(spark, sf_dir):
 def _semdedup_sql(threshold: float = 0.9) -> str:
     """SemDeDup oracle: the shared k-means recursion, then exact cosine
     over same-cluster pairs."""
-    return _ivf_kmeans_cte(_ANN_DIM, _ANN_CLUSTERS) + f""",
+    return _ivf_kmeans_cte(_ANN_DIM, N_CLUSTERS) + f""",
 pairs AS (
   SELECT a.cluster, a.id AS id_a, b.id AS id_b,
          round({_sql_cos('a.v', 'b.v', _ANN_DIM)}, 6) AS cosine
@@ -2554,9 +2559,6 @@ def ann_lsh_indexed(spark, sf_dir):
     return similarity.lsh_ann_topk_indexed(io, q, dim=dim)
 
 
-_PQ_M, _PQ_KSUB = 4, 8
-
-
 def _pq_kmeans_cte(s: int, dsub: int, ksub: int) -> str:
     """Per-subspace PQ codebook fit: the `_ivf_kmeans_cte` recursion
     over the subspace slice ``embedding[s*dsub+1 : (s+1)*dsub]`` —
@@ -2611,7 +2613,7 @@ def _ann_ivf_pq_sql(rerank=None) -> str:
     scoring against the RECONSTRUCTED vectors — mathematically the same
     sum of subspace squared distances the Spark side evaluates via ADC
     lookup tables (round(,6) absorbs the summation-grouping ulp)."""
-    dsub = _ANN_DIM // _PQ_M
+    dsub = _ANN_DIM // PQ_M
     if rerank:
         tail = f"""short AS (
   SELECT query_id, neighbor_id, qv FROM (
@@ -2628,7 +2630,7 @@ ranked AS (
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM rr)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= {_ANN_K}
+FROM ranked WHERE rank <= {TOP_K}
 """
     else:
         tail = f"""ranked AS (
@@ -2637,17 +2639,17 @@ FROM ranked WHERE rank <= {_ANN_K}
                             ORDER BY dist, neighbor_id) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dist
-FROM ranked WHERE rank <= {_ANN_K}
+FROM ranked WHERE rank <= {TOP_K}
 """
-    subs = ",\n".join(_pq_kmeans_cte(s, dsub, _PQ_KSUB)
-                      for s in range(_PQ_M))
+    subs = ",\n".join(_pq_kmeans_cte(s, dsub, PQ_KSUB)
+                      for s in range(PQ_M))
     code_joins = " ".join(f"JOIN afs{s} x{s} USING (id)"
-                          for s in range(1, _PQ_M))
-    recon = " || ".join(f"cb{s}.cvec" for s in range(_PQ_M))
+                          for s in range(1, PQ_M))
+    recon = " || ".join(f"cb{s}.cvec" for s in range(PQ_M))
     cb_joins = " ".join(
         f"JOIN c2_s{s} cb{s} ON cb{s}.code = "
-        + (f"x{s}.code" if s else "x0.code") for s in range(_PQ_M))
-    return _ivf_kmeans_cte(_ANN_DIM, _ANN_CLUSTERS) + f""",
+        + (f"x{s}.code" if s else "x0.code") for s in range(PQ_M))
+    return _ivf_kmeans_cte(_ANN_DIM, N_CLUSTERS) + f""",
 {subs},
 probes AS (
   SELECT q.vec_id AS query_id, t.cluster, q.embedding AS qv
@@ -2655,7 +2657,7 @@ probes AS (
   WHERE q.vec_id < {_ANN_NQ}
   QUALIFY row_number() OVER (PARTITION BY q.vec_id
       ORDER BY {_ivf_dist('q.embedding', 't.cvec', _ANN_DIM)}, t.cluster)
-      <= {_ANN_NPROBE}),
+      <= {NPROBE}),
 cands AS (
   SELECT p.query_id, a.id AS neighbor_id, p.qv
   FROM af a JOIN probes p USING (cluster)
@@ -2681,12 +2683,10 @@ def ann_ivf_pq(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _ANN_NQ).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    return similarity.ivf_pq_topk(
-        emb, q, k=_ANN_K, n_clusters=_ANN_CLUSTERS, nprobe=_ANN_NPROBE,
-        m=_PQ_M, ksub=_PQ_KSUB, dim=_ANN_DIM)
+    return similarity.ivf_pq_topk(emb, q, dim=_ANN_DIM)
 
 
-@register("ann_ivf_pq_rerank", _ann_ivf_pq_sql(rerank=4 * _ANN_K))
+@register("ann_ivf_pq_rerank", _ann_ivf_pq_sql(rerank=4 * TOP_K))
 def ann_ivf_pq_rerank(spark, sf_dir):
     """The two-stage PQ serving pipeline: ADC shortlist (4k candidates
     per query, deterministic tie cut) → exact cosine re-rank over the
@@ -2696,9 +2696,7 @@ def ann_ivf_pq_rerank(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _ANN_NQ).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    return similarity.ivf_pq_topk(
-        emb, q, k=_ANN_K, n_clusters=_ANN_CLUSTERS, nprobe=_ANN_NPROBE,
-        m=_PQ_M, ksub=_PQ_KSUB, dim=_ANN_DIM, rerank=4 * _ANN_K)
+    return similarity.ivf_pq_topk(emb, q, dim=_ANN_DIM, rerank=4 * TOP_K)
 
 
 @register("ann_ivf_topk", _ann_ivf_sql())
@@ -2930,6 +2928,39 @@ def span_reassembly(spark, sf_dir):
                     lambda x: x["chunk_text"]), " ").alias("assembled")))
 
 
+def _assembled_spans(docs: DataFrame) -> DataFrame:
+    """``docs`` through the full distributed extraction and reassembly →
+    one ``(doc_id, out_offset, kind, text, media_ref)`` row per assembled
+    span: the flat shape of the extraction goldens."""
+    from .config import ExtractConfig
+    from .operators.extract import reassemble, run_extraction
+
+    cfg = ExtractConfig(n_buckets=16, shuffle_partitions=8)
+    return (reassemble(run_extraction(docs, cfg))
+            .select("doc_id", F.explode("spans").alias("s"))
+            .select("doc_id",
+                    F.col("s.offset").alias("out_offset"),
+                    F.col("s.kind").alias("kind"),
+                    F.col("s.text").alias("text"),
+                    F.col("s.media_ref").alias("media_ref")))
+
+
+def _warc_fixture_docs(spark: SparkSession) -> DataFrame:
+    """The six fixture .warc.gz segments (``fixtures.
+    warc_corpus_segments(42, 6)``) → streaming record parse →
+    ``warc_to_documents`` with the capture URI kept: the crawl corpus of
+    every ``warc_*`` query."""
+    from . import fixtures
+    from .sources import warc as warc_src
+
+    segs = fixtures.warc_corpus_segments(seed=42, n_segments=6)
+    files = local_frame(
+        spark, [(f"mem:seg-{i:05d}.warc.gz", b) for i, b in enumerate(segs)],
+        "path string, content binary")
+    return warc_src.warc_to_documents(warc_src.warc_records(files),
+                                      with_uri=True)
+
+
 @register("extract_e2e", """
 SELECT doc_id, out_offset, kind, text, media_ref
 FROM read_parquet('/root/repo/tests/data/golden_extract_e2e.parquet')
@@ -2945,19 +2976,9 @@ def extract_e2e(spark, sf_dir):
     pipeline's output against it, making span-sequence equality part of
     the driver's correctness gate rather than a rows-only check."""
     from . import fixtures
-    from .config import ExtractConfig
-    from .operators.extract import reassemble, run_extraction
 
-    cfg = ExtractConfig(n_buckets=16, shuffle_partitions=8)
-    docs = fixtures.fixture_df(spark, seed=42, n_docs=80,
-                               profile=fixtures.TINY, n_partitions=8)
-    assembled = reassemble(run_extraction(docs, cfg))
-    return (assembled.select("doc_id", F.explode("spans").alias("s"))
-            .select("doc_id",
-                    F.col("s.offset").alias("out_offset"),
-                    F.col("s.kind").alias("kind"),
-                    F.col("s.text").alias("text"),
-                    F.col("s.media_ref").alias("media_ref")))
+    return _assembled_spans(fixtures.fixture_df(
+        spark, seed=42, n_docs=80, profile=fixtures.TINY, n_partitions=8))
 
 
 @register("jsonl_e2e", """
@@ -2975,9 +2996,8 @@ def jsonl_e2e(spark, sf_dir):
     from .sources import jsonl as jsonl_src
 
     lines = fixtures.jsonl_corpus_lines(seed=42, n=120)
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(lines)],
-        "line_no long, value string").repartition(4)
+    df = local_frame(spark, list(enumerate(lines)),
+                     "line_no long, value string")
     return jsonl_src.lines_to_documents(df)
 
 
@@ -2996,24 +3016,7 @@ def warc_e2e(spark, sf_dir):
     with NO Spark (tools/make_golden_parquet.py → committed golden
     parquet) — the round-4 verdict #3 ask: every pipeline mouth gets a
     driver CORRECTNESS row, not just pytest."""
-    from . import fixtures
-    from .config import ExtractConfig
-    from .operators.extract import reassemble, run_extraction
-    from .sources import warc as warc_src
-
-    segs = fixtures.warc_corpus_segments(seed=42, n_segments=6)
-    files = spark.createDataFrame(
-        [(f"mem:seg-{i:05d}.warc.gz", b) for i, b in enumerate(segs)],
-        "path string, content binary").repartition(4)
-    docs = warc_src.warc_to_documents(warc_src.warc_records(files))
-    cfg = ExtractConfig(n_buckets=16, shuffle_partitions=8)
-    assembled = reassemble(run_extraction(docs, cfg))
-    return (assembled.select("doc_id", F.explode("spans").alias("s"))
-            .select("doc_id",
-                    F.col("s.offset").alias("out_offset"),
-                    F.col("s.kind").alias("kind"),
-                    F.col("s.text").alias("text"),
-                    F.col("s.media_ref").alias("media_ref")))
+    return _assembled_spans(_warc_fixture_docs(spark))
 
 
 @register("wet_e2e", """
@@ -3035,9 +3038,10 @@ def wet_e2e(spark, sf_dir):
     from .sources import warc as warc_src
 
     segs = fixtures.wet_corpus_segments(seed=42, n_segments=4)
-    files = spark.createDataFrame(
+    files = local_frame(
+        spark,
         [(f"mem:wet-{i:05d}.warc.wet.gz", b) for i, b in enumerate(segs)],
-        "path string, content binary").repartition(2)
+        "path string, content binary")
     docs = warc_src.wet_to_documents(warc_src.warc_records(files))
     return docs.select(
         "doc_id", F.element_at("spans", 1)["text"].alias("text"))
@@ -3056,16 +3060,8 @@ def warc_outlink_hosts(spark, sf_dir):
 
     Oracle: Python ``re`` over the single-process golden documents
     (independent regex engine + counting), committed as parquet."""
-    from . import fixtures
-    from .sources import warc as warc_src
-
-    segs = fixtures.warc_corpus_segments(seed=42, n_segments=6)
-    files = spark.createDataFrame(
-        [(f"mem:seg-{i:05d}.warc.gz", b) for i, b in enumerate(segs)],
-        "path string, content binary").repartition(4)
-    docs = warc_src.warc_to_documents(warc_src.warc_records(files))
     pat = r"(?i)href\s*=\s*[\"']https?://([^/\"'>]+)"
-    return (docs.select(F.explode("spans").alias("s"))
+    return (_warc_fixture_docs(spark).select(F.explode("spans").alias("s"))
             .filter(F.col("s.kind") == "html")
             .select(F.explode(
                 F.regexp_extract_all("s.text", F.lit(pat), 1)).alias("h"))
@@ -3087,16 +3083,9 @@ def warc_anchor_text(spark, sf_dir):
 
     Oracle: Python ``re`` over the single-process golden documents
     (independent regex engine + counting), committed as parquet."""
-    from . import fixtures
     from .operators.linkgraph import anchor_texts
-    from .sources import warc as warc_src
 
-    segs = fixtures.warc_corpus_segments(seed=42, n_segments=6)
-    files = spark.createDataFrame(
-        [(f"mem:seg-{i:05d}.warc.gz", b) for i, b in enumerate(segs)],
-        "path string, content binary").repartition(4)
-    docs = warc_src.warc_to_documents(warc_src.warc_records(files))
-    return anchor_texts(docs)
+    return anchor_texts(_warc_fixture_docs(spark))
 
 
 def _pagerank_sql() -> str:
@@ -3143,17 +3132,10 @@ def warc_host_rank(spark, sf_dir):
     identical recursion from the independently-built (Python re)
     committed edge golden.  Floor-scaled int output for cross-engine
     double parity."""
-    from . import fixtures
     from .operators import linkgraph
-    from .sources import warc as warc_src
 
-    segs = fixtures.warc_corpus_segments(seed=42, n_segments=6)
-    files = spark.createDataFrame(
-        [(f"mem:seg-{i:05d}.warc.gz", b) for i, b in enumerate(segs)],
-        "path string, content binary").repartition(4)
-    docs = warc_src.warc_to_documents(warc_src.warc_records(files),
-                                      with_uri=True)
-    ranks = linkgraph.pagerank(linkgraph.outlink_edges(docs))
+    ranks = linkgraph.pagerank(
+        linkgraph.outlink_edges(_warc_fixture_docs(spark)))
     return ranks.select(
         "host",
         F.floor(F.col("rank") * 1e6 + F.lit(0.5)).cast("long")
@@ -3172,7 +3154,6 @@ def _pdf_corpus_payloads(spark):
         explode_spans, extract_spans_and_payloads, payload_rows,
     )
     from .schemas import DOCUMENTS_SCHEMA
-    from .session import local_frame
 
     docs = local_frame(spark, [
         (did, [("pdf", _b64.b64encode(pdf).decode(), None, 0)])
@@ -3641,6 +3622,12 @@ def pii_redact(spark, sf_dir):
     return text_analysis.pii_redact(injected)
 
 
+def _blob_frame(spark: SparkSession, rows) -> DataFrame:
+    """Fixture ``(name, content)`` media rows as the blob frame the
+    perceptual-hash operators read."""
+    return local_frame(spark, list(rows), "name string, content binary")
+
+
 @register("media_phash_neardup", """
 SELECT media_a, media_b, hamming
 FROM read_parquet('/root/repo/tests/data/golden_phash.parquet')
@@ -3657,11 +3644,8 @@ def media_phash_neardup(spark, sf_dir):
     from . import fixtures
     from .operators import multimodal
 
-    rows = list(fixtures.image_corpus_rows(42))
-    df = spark.createDataFrame(rows, "name string, content binary") \
-        .repartition(6)
-    hashes = multimodal.media_phash(df)
-    return multimodal.phash_pairs(hashes)
+    return multimodal.phash_pairs(multimodal.media_phash(
+        _blob_frame(spark, fixtures.image_corpus_rows(42))))
 
 
 @register("audio_ahash_neardup", """
@@ -3680,11 +3664,8 @@ def audio_ahash_neardup(spark, sf_dir):
     from . import fixtures
     from .operators import multimodal
 
-    rows = list(fixtures.audio_corpus_rows(42))
-    df = spark.createDataFrame(rows, "name string, content binary") \
-        .repartition(6)
-    hashes = multimodal.media_ahash(df)
-    return multimodal.phash_pairs(hashes)
+    return multimodal.phash_pairs(multimodal.media_ahash(
+        _blob_frame(spark, fixtures.audio_corpus_rows(42))))
 
 
 @register("video_phash_neardup", """
@@ -3702,11 +3683,8 @@ def video_phash_neardup(spark, sf_dir):
     from . import fixtures
     from .operators import multimodal
 
-    rows = list(fixtures.video_corpus_rows(42))
-    df = spark.createDataFrame(rows, "name string, content binary") \
-        .repartition(6)
-    frames = multimodal.video_phash(df)
-    return multimodal.video_phash_pairs(frames)
+    return multimodal.video_phash_pairs(multimodal.video_phash(
+        _blob_frame(spark, fixtures.video_corpus_rows(42))))
 
 
 @register("bm25_topk", """
@@ -3931,8 +3909,8 @@ def robots_gate(spark, sf_dir):
     evaluation are both gated."""
     from .operators import linkgraph
 
-    robots = spark.createDataFrame(
-        [(f"h{i}", ROBOTS_TEXTS[i % 4]) for i in range(8)],
+    robots = local_frame(
+        spark, [(f"h{i}", ROBOTS_TEXTS[i % 4]) for i in range(8)],
         "host string, robots_txt string")
     urls = _t(spark, sf_dir, "documents").select(
         "doc_id",
@@ -4089,9 +4067,8 @@ def bpe_tokenize(spark, sf_dir):
     from . import fixtures
     from .operators import tokenize
 
-    rows = list(fixtures.text_corpus_rows(BPE_SEED, BPE_DOCS))
-    corpus = spark.createDataFrame(rows, "doc_id string, text string") \
-        .repartition(8)
+    corpus = local_frame(spark, list(fixtures.text_corpus_rows(
+        BPE_SEED, BPE_DOCS)), "doc_id string, text string")
     wc = [(r["word"], r["n"])
           for r in tokenize.word_counts(corpus, top_k=BPE_TOP_K).collect()]
     merges, vocab = tokenize.bpe_train(wc, num_merges=BPE_MERGES)
@@ -4121,10 +4098,9 @@ def compression_quality(spark, sf_dir):
     from . import fixtures
     from .operators.text_analysis import compression_signal
 
-    rows = list(fixtures.text_corpus_rows(42, 300))
-    corpus = spark.createDataFrame(rows, "doc_id string, text string") \
-        .repartition(8)
-    return compression_signal(corpus)
+    return compression_signal(local_frame(
+        spark, list(fixtures.text_corpus_rows(42, 300)),
+        "doc_id string, text string"))
 
 
 @register("sample_weighted_topk", """

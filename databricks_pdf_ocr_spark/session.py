@@ -84,13 +84,17 @@ def arrow_table(rows: list[tuple], schema: T.StructType):
 
 
 def local_frame(spark: SparkSession, rows: list[tuple],
-                schema: T.StructType) -> DataFrame:
-    """Driver-held ``rows`` (tuples in ``schema`` order) as a DataFrame.
+                schema: T.StructType | str) -> DataFrame:
+    """Driver-held ``rows`` (tuples in ``schema`` order; ``schema`` a
+    ``StructType`` or a DDL string) as a DataFrame.
 
     Built from ``arrow_table(rows, schema)``, so it plans as a
     ``LocalTableScan``: building and reading it runs no Spark job.
     ``createDataFrame(list)`` instead plans as ``Scan ExistingRDD`` over a
     PythonRDD, and every read of that frame runs one job of
-    ``defaultParallelism`` Python tasks.
+    ``defaultParallelism`` Python tasks.  This is the package's one
+    ``createDataFrame`` call (``tests/test_python_task_floor.py``).
     """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -26,7 +26,8 @@ Flow (reference entrypoint analogue: ``main.py:56-101`` run_ocr_processing):
      same kernel output, partitioned the same way              — ... WRITE ...
   6. reassemble offset-sorted span sequences of the touched buckets
      (latest-run-wins per doc) → dynamic-overwrite only those bucket
-     partitions                                               — ... ASSEMBLE ...
+     partitions, and drop each touched bucket it wrote no row to
+     (none of its docs assembles any more)                   — ... ASSEMBLE ...
   7. append per-bucket lineage metrics for the touched buckets (this run's
      rows only, read back partition-pruned), with a ``#media`` mark per
      bucket beside them on a payload run                        — ... THEN MARK
@@ -347,13 +348,20 @@ def run_job(spark, args) -> tuple[dict, int]:
         # reassembly groupBy reuses — no extra shuffle.
         assembled = reassemble(latest_results(touched)).withColumn(
             "bucket", bucket_col(cfg.n_buckets))
-        # docs count observed during the overwrite itself — never a
-        # full-table count over the (10^12-doc) extracted corpus
+        # docs count and written buckets observed during the overwrite
+        # itself — never a full-table count over the (10^12-doc)
+        # extracted corpus
         obs_asm = Observation("assembled")
         io.overwrite_partitions(
-            assembled.observe(obs_asm, F.count(F.lit(1)).alias("docs")),
+            assembled.observe(obs_asm, F.count(F.lit(1)).alias("docs"),
+                              F.collect_set("bucket").alias("buckets")),
             EXTRACTED_TABLE, ["bucket"])
         stats["docs_assembled"] = obs_asm.get["docs"]
+        # a dynamic overwrite cannot empty a partition: a touched bucket
+        # none of whose docs assembles any more (its latest spans all
+        # failed) would keep its stale assembly, so it is dropped
+        emptied = set(pend_list) - set(obs_asm.get["buckets"])
+        io.drop_partitions(EXTRACTED_TABLE, "bucket", sorted(emptied))
         t_assemble = time.time()
 
         # ... THEN MARK lineage.  Re-scan of the just-written data is

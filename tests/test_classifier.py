@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from databricks_pdf_ocr_spark.operators import classifier
+from databricks_pdf_ocr_spark.session import local_frame
 
 
 def _corpus(spark, n=120):
@@ -62,8 +63,8 @@ def test_weights_quantized(spark):
 def test_margin_plan_broadcasts_weights(spark):
     docs = _corpus(spark, n=30)
     feats = classifier.hashed_features(docs)
-    wdf = classifier._weights_df(
-        spark, {f: 0.0 for f in range(classifier.DIM + 1)})
+    wdf = local_frame(spark, [(f, 0.0) for f in range(classifier.DIM + 1)],
+                      "fidx int, w double")
     plan = (classifier._margins(feats, wdf)
             ._jdf.queryExecution().executedPlan().toString())
     assert "BroadcastHashJoin" in plan

@@ -169,6 +169,52 @@ def test_crash_between_assembly_and_mark_heals(spark, tmp_path, rows,
     assert _extracted_dict(spark, t_crash) == _extracted_dict(spark, t_clean)
 
 
+def test_bucket_whose_docs_no_longer_assemble_is_emptied(spark, tmp_path):
+    """A re-ingested doc whose only span now fails leaves the assembled
+    table, also when it was alone in its bucket: a dynamic partition
+    overwrite cannot empty a partition, so the run drops each touched
+    bucket it wrote no assembled row to.  Beside it, the same failure in
+    a bucket that keeps a good doc, and an untouched bucket."""
+    from databricks_pdf_ocr_spark.operators.extract import bucket_col
+
+    n_buckets = 64
+    ids = [f"doc-{i}" for i in range(200)]
+    by_bucket = {}
+    for r in (spark.createDataFrame([(d,) for d in ids], "doc_id string")
+              .select("doc_id", bucket_col(n_buckets).alias("b"))
+              .collect()):
+        by_bucket.setdefault(r["b"], []).append(r["doc_id"])
+    lonely = next(ds[0] for ds in by_bucket.values() if len(ds) == 1)
+    shared, kept = next(ds[:2] for ds in by_bucket.values() if len(ds) > 1)
+    other = next(ds[0] for ds in by_bucket.values()
+                 if not {lonely, shared} & set(ds))
+
+    def spans(text):
+        return [{"kind": "text", "text": text, "media_ref": None,
+                 "offset": 0}]
+    bad = [{"kind": "pdf", "text": "%% not base64 %%", "media_ref": None,
+            "offset": 0}]
+    tables = str(tmp_path / "t_emptied")
+
+    def run(docs, name):
+        args = build_parser().parse_args(
+            ["--input", _write_input(spark, tmp_path, docs, name),
+             "--tables", tables, "--n-buckets", str(n_buckets),
+             "--partitions", "8", "--mode", "reprocess_all"])
+        return run_job(spark, args)
+
+    _, rc = run([(d, spans(f"text of {d}"))
+                 for d in (lonely, shared, kept, other)], "emptied_v1")
+    assert rc == 0
+    assert set(_extracted_dict(spark, tables)) == {lonely, shared, kept,
+                                                   other}
+    stats, rc = run([(lonely, bad), (shared, bad)], "emptied_v2")
+    assert rc == 0 and stats["failed_spans"] == 2
+    assert stats["docs_assembled"] == 1           # `kept`, rebuilt
+    assert _extracted_dict(spark, tables) == {
+        d: [("text", f"text of {d}", None, 0)] for d in (kept, other)}
+
+
 def test_results_table_partition_pruning(spark, tmp_path, rows):
     """The results table is partitioned by bucket: a one-bucket read must
     plan a PartitionFilter (directory pruning), and incremental rerun must

@@ -1,11 +1,16 @@
 """The Python task floor: every Python body drops the worker's zip
 importers (``databricks_pdf_ocr_spark/worker.py``), so a reused worker's
-next task has no zip directory to re-read in ``invalidate_caches()``.
+next task has no zip directory to re-read in ``invalidate_caches()``;
+and no driver-held frame is built from a Python list, whose every read
+runs a job of pickled Python tasks.
 
 ``test_every_python_body_drops_zip_importers`` needs no Spark: it walks the
 AST of the package and of ``jobs/`` and fails on a function passed to
 ``mapInPandas`` or ``pandas_udf`` whose body does not call
 ``drop_zip_importers()`` right after its own imports.
+``test_no_list_built_frames`` walks the same files and fails on any
+``createDataFrame`` call outside ``session.local_frame``, the Arrow-built
+``LocalTableScan`` that no Spark job reads.
 """
 
 from __future__ import annotations
@@ -85,11 +90,14 @@ def drops_first(fn: ast.AST | None) -> bool:
             and first.value.func.id == HELPER)
 
 
-def test_every_python_body_drops_zip_importers():
-    files = [f for f in sorted([*(ROOT / "databricks_pdf_ocr_spark").rglob(
+def _sources() -> list[Path]:
+    return [f for f in sorted([*(ROOT / "databricks_pdf_ocr_spark").rglob(
         "*.py"), *(ROOT / "jobs").glob("*.py")])
         if "__pycache__" not in f.parts]
-    bodies = [b for f in files for b in python_bodies(f)]
+
+
+def test_every_python_body_drops_zip_importers():
+    bodies = [b for f in _sources() for b in python_bodies(f)]
     # the walk must see the shipped bodies: the extraction and MinHash
     # kernels, tokenize, comp_len, 3 multimodal, 2 similarity, robots,
     # 3 warc, the fixture generator and the job's warm-up
@@ -107,6 +115,64 @@ def test_drops_first_rejects_a_late_or_missing_call():
     assert not drops_first(fn("def f(b):\n    x = 1\n"
                               "    drop_zip_importers()\n"))
     assert not drops_first(ast.parse("lambda b: b").body[0].value)
+
+
+#: the one module allowed a ``createDataFrame`` call, inside ``local_frame``
+SESSION = "databricks_pdf_ocr_spark/session.py"
+
+
+def list_frame_calls(source: str, label: str) -> list[int]:
+    """Lines of ``source`` (the file ``label``) that call
+    ``createDataFrame`` anywhere but inside ``local_frame`` in
+    ``SESSION``."""
+    out: list[int] = []
+
+    def visit(node: ast.AST, exempt: bool) -> None:
+        if isinstance(node, _FUNC) and node.name == "local_frame":
+            exempt = label == SESSION
+        if (isinstance(node, ast.Call) and not exempt
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"):
+            out.append(node.lineno)
+        for child in ast.iter_child_nodes(node):
+            visit(child, exempt)
+
+    visit(ast.parse(source, label), False)
+    return out
+
+
+def test_no_list_built_frames():
+    found = {}
+    for f in _sources():
+        label = str(f.relative_to(ROOT))
+        found[label] = list_frame_calls(f.read_text(), label)
+    assert found[SESSION] == []
+    assert {k: v for k, v in found.items() if v} == {}
+
+
+def test_list_frame_calls_flags_a_list_built_frame():
+    src = ("def build(spark):\n"
+           "    return spark.createDataFrame([(1,)], 'a int')\n")
+    assert list_frame_calls(src, "databricks_pdf_ocr_spark/x.py") == [2]
+    assert list_frame_calls(src, SESSION) == [2]
+    local = ("def local_frame(spark, rows, schema):\n"
+             "    return spark.createDataFrame(rows, schema)\n")
+    assert list_frame_calls(local, SESSION) == []
+    assert list_frame_calls(local, "jobs/x.py") == [2]
+
+
+def test_local_frame_takes_ddl_and_runs_no_job(spark, in_job_group):
+    from databricks_pdf_ocr_spark.session import local_frame
+
+    df, jobs = in_job_group("local-frame", lambda: local_frame(
+        spark, [(1, b"x", [0.5])], "a int, b binary, c array<double>"))
+    assert df.schema.simpleString() == \
+        "struct<a:int,b:binary,c:array<double>>"
+    assert jobs == []
+    assert "LocalTableScan" in \
+        df._jdf.queryExecution().executedPlan().toString()
+    rows, jobs = in_job_group("local-frame-read", df.collect)
+    assert [tuple(r) for r in rows] == [(1, b"x", [0.5])] and jobs == []
 
 
 def test_reused_worker_starts_tasks_without_zip_importers(spark):

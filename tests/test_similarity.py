@@ -1,5 +1,7 @@
 """Similarity-search operators: exact vs approximate recall, determinism."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,7 +61,7 @@ def test_ivf_assign_partitions_corpus(emb):
     rows = assigned.groupBy("cluster").count().collect()
     assert sum(r["count"] for r in rows) == emb.count()
     assert len(rows) >= 4, "clusters should be populated"
-    assert len(centroids) == 8
+    assert sorted(r["cluster"] for r in centroids.collect()) == list(range(8))
 
 
 def test_cosine_neardup_threshold(emb):
@@ -100,7 +102,8 @@ def test_semdedup_subset_of_brute_force_pairs(emb):
 
 def test_ivf_indexed_equals_inmemory_and_prunes(spark, tmp_path):
     """The persisted-index probe path returns the exact in-memory ivf_topk
-    rows, and the index scan directory-prunes to the probed clusters."""
+    rows, and its index scan directory-prunes to the clusters its probe
+    chose, fewer than ``N_CLUSTERS``."""
     from databricks_pdf_ocr_spark.sources.tables import TableIO
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -110,18 +113,28 @@ def test_ivf_indexed_equals_inmemory_and_prunes(spark, tmp_path):
     S.build_ivf_index(emb, io)
 
     mem = {tuple(r) for r in S.ivf_topk(emb, q).collect()}
-    idx_df = S.ivf_topk_indexed(io, q)
-    assert {tuple(r) for r in idx_df.collect()} == mem
+    # the plan string truncates scan metadata at 100 characters unless
+    # the limit is raised before the plan is built
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        idx_df = S.ivf_topk_indexed(io, q)
+        assert {tuple(r) for r in idx_df.collect()} == mem
+        plan = idx_df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
 
-    # pruning: the probed-cluster isin must reach the scan as a
-    # PartitionFilter over < n_clusters directories
-    probed = sorted({r["cluster"] for r in
-                     io.read("ivf_index_centroids").crossJoin(
-                         q.limit(0)).collect()})  # shape check only
-    plan = (io.read("ivf_index")
-            .filter(F.col("cluster").isin([0, 1, 2]))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "PartitionFilters" in plan and "cluster" in plan
+    # pruning: the clusters the probe chose reach the index scan as its
+    # PartitionFilters
+    probed = {r["cluster"] for r in S._probe_clusters(
+        q, io.read("ivf_index_centroids"), S.NPROBE)
+        .select("cluster").distinct().collect()}
+    m = re.search(r"/ivf_index\], PartitionFilters: "
+                  r"\[cluster#\d+ IN(?:SET)? \(?([\d, ]+)", plan)
+    assert m, plan
+    assert {int(c) for c in re.findall(r"\d+", m.group(1))} == probed
+    assert 0 < len(probed) < S.N_CLUSTERS
 
 
 def test_quantize_roundtrip_error_and_zero_vector(spark):
@@ -181,25 +194,29 @@ def test_pack_plan_concat_and_chop(spark):
 
 def test_pq_encode_shape_and_determinism(emb):
     dim = len(emb.select("embedding").first()[0])
-    cbs = S.pq_train(emb, dim=dim, m=4, ksub=8)
-    assert len(cbs) == 4 and all(len(cb) == 8 for cb in cbs)
-    assert all(len(c) == dim // 4 for cb in cbs for c in cb)
+    cbs = S.pq_train(emb, dim=dim)
+    assert len(cbs) == S.PQ_M and all(len(cb) == S.PQ_KSUB for cb in cbs)
+    assert all(len(c) == dim // S.PQ_M for cb in cbs for c in cb)
     codes = {r["id"]: list(r["codes"])
              for r in S.pq_encode(emb, cbs).collect()}
     again = {r["id"]: list(r["codes"])
              for r in S.pq_encode(emb, cbs).collect()}
     assert codes == again
-    assert all(len(c) == 4 and all(0 <= x < 8 for x in c)
+    assert all(len(c) == S.PQ_M and all(0 <= x < S.PQ_KSUB for x in c)
                for c in codes.values())
 
 
-def test_ivf_pq_recall_on_clustered_data(spark):
+def test_ivf_pq_recall_on_clustered_data(spark, monkeypatch):
     """PQ resolution comes from the codebooks fitting the data's
     cluster structure (on isotropic noise ANY strong compression
     destroys neighbor order — measured ~10% here vs 0.8% random).  On
     planted clusters, the standard embedding shape, IVF-PQ must
-    recover the true neighbors."""
+    recover the true neighbors.  The coarse index matches the planted
+    shape: one list per center, probing two."""
     import hashlib
+
+    monkeypatch.setattr(S, "N_CLUSTERS", 6)
+    monkeypatch.setattr(S, "NPROBE", 2)
 
     dim, n_centers, per = 64, 6, 30
 
@@ -221,8 +238,7 @@ def test_ivf_pq_recall_on_clustered_data(spark):
     # pure ADC: same-cluster members share codes, so order WITHIN a
     # quantization cell is arbitrary — the guarantee is cell-level:
     # neighbors come from the query's planted cluster
-    approx = _as_map(S.ivf_pq_topk(emb, q, k=5, n_clusters=6, nprobe=2,
-                                   m=4, ksub=8, dim=dim))
+    approx = _as_map(S.ivf_pq_topk(emb, q, dim=dim))
     in_cluster = total = 0
     for qq, ns in approx.items():
         for n in ns:
@@ -233,8 +249,7 @@ def test_ivf_pq_recall_on_clustered_data(spark):
     # ADC shortlist + exact re-rank (the production two-stage) must
     # recover the true top-k
     exact = _as_map(S.brute_force_topk(emb, q, k=5))
-    rr = _as_map(S.ivf_pq_topk(emb, q, k=5, n_clusters=6, nprobe=2,
-                               m=4, ksub=8, dim=dim, rerank=20))
+    rr = _as_map(S.ivf_pq_topk(emb, q, dim=dim, rerank=20))
     hits = sum(len(set(exact[qq]) & set(rr.get(qq, []))) for qq in exact)
     tot = sum(len(v) for v in exact.values())
     assert hits / tot >= 0.6, f"reranked recall too low: {hits}/{tot}"
@@ -246,7 +261,7 @@ def test_adc_equals_reconstructed_distance(emb, spark):
     import numpy as np
 
     dim = len(emb.select("embedding").first()[0])
-    cbs = S.pq_train(emb, dim=dim, m=4, ksub=8)
+    cbs = S.pq_train(emb, dim=dim)
     cb = np.asarray(cbs)
     codes = {r["id"]: list(r["codes"])
              for r in S.pq_encode(emb, cbs).collect()}

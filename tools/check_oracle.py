@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every registered
 query on Spark AND its DuckDB oracle at sf0.01, compare row count, column
 names, and an order-insensitive value hash (columns sorted by name).
+Each query's build and collect run under one Spark job group; its line
+reports the group's job count (``jobs=``).
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -46,11 +48,14 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"parquet_scan('{sf_dir}/{t}.parquet')")
+    sc = spark.sparkContext
     failures = []
     for name, spec in QUERIES.items():
         if only and name not in only:
             continue
         t0 = time.time()
+        group = f"oracle-{name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
         try:
             sdf = spec["fn"](spark, sf_dir)
             scols = sdf.columns
@@ -59,9 +64,12 @@ def main():
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         if spec["sql"] is None:
             print(f"ok   {name}: rows-only ({len(srows)} rows) "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"jobs={n_jobs} [{time.time()-t0:.1f}s]")
             if len(srows) == 0 and name != "expected_empty":
                 print(f"WARN {name}: zero rows")
             continue
@@ -79,7 +87,7 @@ def main():
         print(f"{status} {name}: spark={sn} duck={dn} "
               f"hash {'==' if sh == dh else f'{sh}!={dh}'} "
               f"cols {'==' if sorted(scols)==sorted(dcols) else f'{scols} vs {dcols}'} "
-              f"[{time.time()-t0:.1f}s]")
+              f"jobs={n_jobs} [{time.time()-t0:.1f}s]")
         if status == "FAIL":
             failures.append(name)
             # show a few differing rows for debugging
